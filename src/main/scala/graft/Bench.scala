@@ -82,19 +82,7 @@ object Bench {
 
     // Same PARTIAL-run escape hatch as Verify: a subset bench is for
     // iterating on one row's plan, never for the round artifact.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .filter(_.nonEmpty)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
-          s"${unknown.toSeq.sorted.mkString(", ")} — a typo here would " +
-          "silently time nothing")
-      System.err.println(
-        s"[bench] WARNING: SPARK_GRAFT_ONLY is active — timing ONLY " +
-          s"${names.toSeq.sorted.mkString(", ")}. This is a PARTIAL bench.")
-    }
+    val only = Verify.onlyRows("bench", "timing", "This is a PARTIAL bench.")
 
     def timedPass(dir: String, subSecReps: Int = 3,
         skip: Set[String] = Set.empty): Seq[(String, Double)] = {

@@ -111,73 +111,166 @@ object SparkEntry {
     spark.read.parquet(s"$dir/$name.parquet")
   }
 
+  /** Offline fixtures (index fits, written stores, tokenizer models):
+    * built at most once per (name, sf dir) and reused by every later
+    * rep; a build that throws is not kept, so the next call retries.
+    * The build runs outside `computeIfAbsent`, in the holder's lazy
+    * val, because fixtures nest (nswDisk → nswGraph, fkStore →
+    * constraintStore) and a nested computeIfAbsent on one map throws. */
+  private[graft] final class Once[T](build: => T) { lazy val value: T = build }
+  private[graft] val fixtures =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), Once[Any]]()
+  private[graft] def memo[T](name: String, dir: String)(build: => T): T =
+    fixtures.computeIfAbsent((name, dir), _ => new Once[Any](build))
+      .value.asInstanceOf[T]
+
   /** Fixed deterministic query vector: row vec_id=0's own embedding —
-    * self-match at rank 1 is a free sanity check. Cached per dir: it is
-    * a fixed query parameter, not part of the measured work. */
-  private val qvCache = new java.util.concurrent.ConcurrentHashMap[String, Array[Float]]()
+    * self-match at rank 1 is a free sanity check. Memoized per dir: it
+    * is a fixed query parameter, not part of the measured work. */
+  private def queryVec(s: SparkSession, d: String): Array[Float] =
+    memo("query_vec", d)(table(s, d, "embeddings").where(col("vec_id") === 0)
+      .select("embedding").head().getSeq[Float](0).toArray)
+
   /** Trained quality-classifier model per dir — model FIT is an
     * offline step like the IVF index build (the three consumer rows
     * score/calibrate/noise-audit the SAME model, and refitting per
     * query triples the descent's collect-boundary jobs). */
-  private val clsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, QualityClassifier.Model]()
   private def clsModel(s: SparkSession, d: String): QualityClassifier.Model =
-    clsCache.computeIfAbsent(d, dir =>
-      QualityClassifier.fit(table(s, dir, "documents"), "doc_id", "text"))
-  /** One broadcast automaton per fixed pattern set per session. */
-  private val acTagCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private def queryVec(spark: SparkSession, dir: String): Array[Float] =
-    qvCache.computeIfAbsent(dir, d =>
-      table(spark, d, "embeddings").where(col("vec_id") === 0)
-        .select("embedding").head().getSeq[Float](0).toArray)
+    memo("quality_cls", d)(
+      QualityClassifier.fit(table(s, d, "documents"), "doc_id", "text"))
 
-  /** IVF index cache per dir — index build is an offline step (the
-    * reference's kmeans-tree index pre-exists at query time; building it
-    * per query would charge index construction to every search). */
-  private val ivfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, IvfIndex.IvfModel)]()
-  private val ivfDiskCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfIndex.IvfModel)]()
-  private val ivfEmbCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfIndex.IvfModel)]()
-  private val maxsimIvfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfIndex.IvfModel)]()
-  private val ivfStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfIndex.IvfModel)]()
-  private val dedupStreamCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val ivfAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfIndex.IvfModel)]()
-  private val ivfDeleteCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, IvfIndex.IvfModel)]()
-  /** Fitted PCA model per sf dir — like the IVF caches, the fit is the
-    * pre-existing index build, not part of each search. */
-  private val pcaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Pca.PcaModel]()
+  /** The blocklist automaton, built, broadcast and registered ONCE per
+    * JVM (its patterns are fixed, so the key is not per dir): bench
+    * reps and verify would otherwise mint a new never-destroyed
+    * broadcast per invocation. */
+  private def blocklistTag(s: SparkSession): String =
+    memo("ac_blocklist", "") {
+      val patterns = Seq("dup", "hash", "scan", "slow scan", "table value")
+      graft.functions.AcRegistry.register(s.sparkContext.broadcast(
+        graft.functions.AhoCorasick.build(patterns)))
+    }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** IVF index per dir over `embeddings ⋈ documents` — index build is
+    * an offline step (the reference's kmeans-tree index pre-exists at
+    * query time; building it per query would charge index construction
+    * to every search). ONE fit serves the in-memory rows, the
+    * partitioned on-disk store and the streamed store's centroids. */
+  private def ivfStore(s: SparkSession, d: String): (DataFrame, IvfIndex.IvfModel) =
+    memo("ivf", d) {
+      val store = table(s, d, "embeddings")
+        .join(table(s, d, "documents"), col("vec_id") === col("doc_id"))
+      val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
+      (a.cache(), m)
+    }
+
+  /** [[ivfStore]] written partitionBy(cluster_id). */
+  private def ivfDiskStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
+    memo("ivf_disk", d) {
+      val (a, m) = ivfStore(s, d)
+      val p = tempDir("graft_ivf_store")
+      IvfIndex.writePartitioned(a, p)
+      (p, m)
+    }
+
+  /** IVF store built (and written partitioned) from vec_id < 400 only;
+    * the vec_id >= 400 batch assigned to the FROZEN centroids and
+    * appended. Shared by the append and delete rows: tombstones are
+    * anti-joined at query time, never written to the store. */
+  private def ivfAppendStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
+    memo("ivf_append", d) {
+      val store = table(s, d, "embeddings")
+        .join(table(s, d, "documents"), col("vec_id") === col("doc_id"))
+      val (a, m) = IvfIndex.build(store.filter(col("vec_id") < 400),
+        "embedding", numClusters = 8)
+      val p = tempDir("graft_ivf_append")
+      IvfIndex.writePartitioned(a, p)
+      IvfIndex.appendPartitioned(
+        IvfIndex.assignBatch(store.filter(col("vec_id") >= 400), "embedding", m), p)
+      (p, m)
+    }
+
+  /** Embeddings streamed through VectorIngest against [[ivfStore]]'s
+    * frozen centroids into a partitioned parquet sink. */
+  private def ivfStreamStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
+    memo("ivf_stream", d) {
+      val m = ivfStore(s, d)._2
+      val src = tempDir("graft_ivf_stream_src")
+      table(s, d, "embeddings").repartition(3)
+        .write.mode("overwrite").parquet(src)
+      val p = tempDir("graft_ivf_stream_store")
+      graft.streaming.VectorIngest.ingestPartitioned(s, src,
+        s"$d/documents.parquet", "vec_id", "doc_id", "embedding", m, p)
+      (p, m)
+    }
+
+  /** IVF over the bare embeddings table, written partitioned — the
+    * store the SQL rewrite row registers. */
+  private def ivfEmbStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
+    memo("ivf_emb", d) {
+      val (a, m) = IvfIndex.build(table(s, d, "embeddings"), "embedding", numClusters = 8)
+      val p = tempDir("graft_ivf_emb")
+      IvfIndex.writePartitioned(a, p)
+      (p, m)
+    }
+
+  /** Multi-vector store: doc token vectors (8 per doc) IVF-assigned and
+    * written partitionBy(cluster_id). */
+  private def maxsimIvfStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
+    memo("maxsim_ivf", d) {
+      val dt = table(s, d, "embeddings")
+        .select(expr("vec_id div 8").as("doc_id"),
+          col("vec_id").as("dtok"), col("embedding"))
+      val (a, m) = IvfIndex.build(dt, "embedding", numClusters = 8)
+      val p = tempDir("graft_maxsim_ivf")
+      IvfIndex.writePartitioned(a, p)
+      (p, m)
+    }
+
+  /** Clean-store sink of the streamed dedup gate: docs ≥ 250 stream in
+    * against the static corpus of docs < 250. */
+  private def dedupStreamStore(s: SparkSession, d: String): String =
+    memo("dedup_stream", d) {
+      val docs = table(s, d, "documents")
+      val src = tempDir("graft_dedup_stream_src")
+      docs.filter(col("doc_id") >= 250).repartition(3)
+        .write.mode("overwrite").parquet(src)
+      val corpus = tempDir("graft_dedup_stream_corpus")
+      docs.filter(col("doc_id") < 250)
+        .write.mode("overwrite").parquet(corpus)
+      val p = tempDir("graft_dedup_stream_store")
+      graft.streaming.CorpusIngest.ingestNovel(s, src, corpus, "text", p)
+      p
+    }
+
+  /** Fitted PCA model per sf dir — like the IVF fit, the pre-existing
+    * index build, not part of each search. */
+  private def pcaModel(s: SparkSession, d: String): Pca.PcaModel =
+    memo("pca", d)(Pca.fit(table(s, d, "embeddings"), "embedding", d = 32))
+
   /** Fitted SQ8 grid per sf dir — 2·dim doubles, an offline fit. */
-  private val sqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SqAnn.SqModel]()
+  private def sqModel(s: SparkSession, d: String): SqAnn.SqModel =
+    memo("sq8", d)(SqAnn.fit(table(s, d, "embeddings"), "embedding"))
+
   /** NSW graph per sf dir — the adjacency build (banded-LSH k-NN graph
     * + entry-point sample) is the offline index step; the adjacency is
     * persisted so each search hop probes memory, the stand-in for the
     * id-bucketed adjacency table a deployment would keep on disk. */
-  private val nswCache =
-    new java.util.concurrent.ConcurrentHashMap[String, NswAnn.Graph]()
   private def nswGraph(s: SparkSession, d: String): NswAnn.Graph =
-    nswCache.computeIfAbsent(d, dir => {
-      val g = NswAnn.build(table(s, dir, "embeddings"), "vec_id",
+    memo("nsw", d) {
+      val g = NswAnn.build(table(s, d, "embeddings"), "vec_id",
         "embedding", degree = 16, entries = 8)
       g.adj.persist().count()
       g
-    })
+    }
   /** NSW build-then-append graph per sf dir (the lifecycle row): base
     * graph over vec_id < 400, the rest batch-appended — a one-time
     * offline artifact like the IVF append store. */
-  private val nswAppendCache =
-    new java.util.concurrent.ConcurrentHashMap[String, NswAnn.Graph]()
   private def nswAppendGraph(s: SparkSession, d: String): NswAnn.Graph =
-    nswAppendCache.computeIfAbsent(d, dir => {
-      val emb = table(s, dir, "embeddings")
+    memo("nsw_append", d) {
+      val emb = table(s, d, "embeddings")
       val base = emb.filter(col("vec_id") < 400)
       val fresh = emb.filter(col("vec_id") >= 400)
       val g0 = NswAnn.build(base, "vec_id", "embedding",
@@ -187,77 +280,76 @@ object SparkEntry {
       val pinned = g1.copy(adj = g1.adj.persist())
       pinned.adj.count()
       pinned
-    })
+    }
   /** NSW at-scale layout per sf dir: adjacency + store written as
     * id-bucketed catalog tables (BucketedStore), so the beam's per-hop
     * id-equality probes are bucket-pruned point lookups instead of
     * full scans — the layout NswAnn.Graph's scaladoc promises. The
     * bucketed write is a one-time offline artifact (the IVF-store
     * pattern); the row measures query cost. */
-  private val nswDiskCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String, Seq[Long])]()
   private def nswDisk(s: SparkSession, d: String): (String, String, Seq[Long]) =
-    nswDiskCache.computeIfAbsent(d, dir => {
-      val suffix = math.abs(dir.hashCode).toString
+    memo("nsw_disk", d) {
+      val suffix = math.abs(d.hashCode).toString
       val adjTbl = s"graft_nsw_adj_$suffix"
       val embTbl = s"graft_nsw_emb_$suffix"
-      val g = nswGraph(s, dir)
+      val g = nswGraph(s, d)
       BucketedStore.writeBucketed(g.adj, adjTbl, "id", 8)
-      BucketedStore.writeBucketed(table(s, dir, "embeddings"), embTbl,
+      BucketedStore.writeBucketed(table(s, d, "embeddings"), embTbl,
         "vec_id", 8)
       (adjTbl, embTbl, g.entryIds)
-    })
-  /** Bucketed catalog tables per sf dir — the bucketed layout is a
-    * one-time write (like the IVF store), not part of each query. */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
+    }
+  /** Bucketed catalog tables per sf dir (lineitem, orders by orderkey)
+    * — the bucketed layout is a one-time write, not part of each query. */
+  private def bucketedStore(s: SparkSession, d: String): (String, String) =
+    memo("bucketed", d) {
+      val suffix = math.abs(d.hashCode).toString
+      val li = s"graft_li_bkt_$suffix"
+      val ord = s"graft_ord_bkt_$suffix"
+      BucketedStore.writeBucketed(table(s, d, "lineitem"), li, "l_orderkey", 8)
+      BucketedStore.writeBucketed(table(s, d, "orders"), ord, "o_orderkey", 8)
+      (li, ord)
+    }
   /** Wire-format blob store per sf dir — one-time offline dump, written
-    * distributed (VectorBlobSource.writeDistributed: one file per
-    * partition, executor-side, no driver collect). */
-  private val blobStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    * distributed: each of the 4 partitions writes its own blob file
+    * executor-side — the same shape a 100 TB export takes (no driver
+    * collect anywhere in the dump). */
+  private def blobStore(s: SparkSession, d: String): String =
+    memo("blob_store", d) {
+      val p = tempDir("graft_blob_store")
+      graft.sources.VectorBlobSource.writeDistributed(
+        table(s, d, "embeddings").select("vec_id", "embedding")
+          .repartition(4, col("vec_id")), p)
+      p
+    }
   /** Trained BPE merge list per sf dir — the tokenizer fit is a
     * one-time offline pass (one word-count aggregate + a driver loop
     * over ≤ Bpe.TopWords rows), shared by the fit/vocab/tokenize rows. */
-  private val bpeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[Bpe.Merge]]()
-
   private def bpeMerges(s: SparkSession, d: String): Seq[Bpe.Merge] =
-    bpeCache.computeIfAbsent(d, dir => Bpe.train(table(s, dir, "documents"), "text"))
+    memo("bpe", d)(Bpe.train(table(s, d, "documents"), "text"))
 
   /** Trained WordPiece model per sf dir — same one-time-fit sharing as
-    * [[bpeCache]]. */
-  private val wordpieceCache =
-    new java.util.concurrent.ConcurrentHashMap[String, WordPiece.Model]()
-
+    * [[bpeMerges]]. */
   private def wordpieceModel(s: SparkSession, d: String): WordPiece.Model =
-    wordpieceCache.computeIfAbsent(d,
-      dir => WordPiece.train(table(s, dir, "documents"), "text"))
+    memo("wordpiece", d)(WordPiece.train(table(s, d, "documents"), "text"))
 
   /** Fitted unigram-LM vocabulary per sf dir — same one-time-fit
-    * sharing as [[bpeCache]]/[[wordpieceCache]] (the r16 verdict
+    * sharing as [[bpeMerges]]/[[wordpieceModel]] (the r16 verdict
     * flagged the inconsistency: tokenizer_compare offline-cached the
     * BPE and WordPiece fits but re-ran the unigram fit per rep). The
     * fit is materialized (fitVocab localCheckpoints its count
-    * relation), so the cached handle is a vocabulary-sized RDD, not a
-    * lazy corpus plan. The unigram_vocab/segment/refit rows keep
+    * relation), so the memoized handle is a vocabulary-sized RDD, not
+    * a lazy corpus plan. The unigram_vocab/segment/refit rows keep
     * calling fitVocab directly — the fit itself stays a measured
     * query. */
-  private val ugVocabCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   private def ugVocab(s: SparkSession, d: String): DataFrame =
-    ugVocabCache.computeIfAbsent(d,
-      dir => UnigramLm.fitVocab(table(s, dir, "documents"), "text"))
+    memo("ug_vocab", d)(UnigramLm.fitVocab(table(s, d, "documents"), "text"))
 
   /** Trained exact-k-means model per sf dir — the fit is a one-time
     * offline pass (Iters distributed rounds, k·dim-long driver
     * state), shared by the fit/assign rows. */
-  private val kmeansCache =
-    new java.util.concurrent.ConcurrentHashMap[String, KMeansExact.Model]()
   private def kmeansModel(s: SparkSession, d: String): KMeansExact.Model =
-    kmeansCache.computeIfAbsent(d, dir =>
-      KMeansExact.fit(table(s, dir, "embeddings"), "vec_id", "embedding"))
+    memo("kmeans", d)(
+      KMeansExact.fit(table(s, d, "embeddings"), "vec_id", "embedding"))
 
   /** Naive-Bayes split + vocab knobs: train on doc_id % 5 ≠ 0, score
     * the held-out fifth; fixed top-512 vocabulary keeps the model at
@@ -270,17 +362,15 @@ object SparkEntry {
 
   /** Five CV fold models per sf dir — the explicit r15-adjudication
     * decision (SCALING.md): fitting is the OFFLINE step (the
-    * kmeansCache/dbscanCache convention), so the CV row measures 5×
+    * kmeansModel/dbscanLabels convention), so the CV row measures 5×
     * held-out PREDICT, not 5× refit — which is also the honest 100 TB
     * shape, where fold models are trained once and reused across every
     * eval query. Each fold's likelihood/prior tables are bounded
     * (|classes|·512 + |classes| rows) and materialized eagerly so no
     * fold re-derives its fit lineage at query time. */
-  private val nbCvCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(DataFrame, DataFrame)]]()
   private def nbCvModels(s: SparkSession, d: String): Seq[(DataFrame, DataFrame)] =
-    nbCvCache.computeIfAbsent(d, dir => {
-      val docs = table(s, dir, "documents")
+    memo("nb_cv", d) {
+      val docs = table(s, d, "documents")
       (0 until 5).map { f =>
         val tr = docs.filter(col("doc_id") % 5 =!= f)
         (NaiveBayes.fit(tr, "lang", "text", NbVocab)
@@ -288,7 +378,7 @@ object SparkEntry {
          NaiveBayes.priors(tr, "lang", "text")
            .localCheckpoint(eager = true))
       }
-    })
+    }
 
   /** JSONL fixture: documents rendered as a drifting JSON-lines dump —
     * "n" flips number→string on doc_id % 11, tags/meta appear on % 7,
@@ -320,18 +410,16 @@ object SparkEntry {
     * units sits just under the fixture's percolation threshold, so
     * the run exercises all three roles (sf0.01: 351 core / 38 border
     * / 111 noise across 24 clusters). The clustering itself is a
-    * one-time OFFLINE artifact per sf dir (the [[kmeansCache]] / IVF
+    * one-time OFFLINE artifact per sf dir (the [[kmeansModel]] / IVF
     * pattern: the connected-components rounds are the fit, the rows
     * query its result), checkpointed so both driver rows read the
     * same materialized labels. */
   private val DbscanEps = 20000L
   private val DbscanMinPts = 3
-  private val dbscanCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
   private def dbscanLabels(s: SparkSession, d: String): DataFrame =
-    dbscanCache.computeIfAbsent(d, dir =>
+    memo("dbscan", d)(
       DensityCluster.dbscan(
-        table(s, dir, "embeddings").select(
+        table(s, d, "embeddings").select(
           col("vec_id").as("id"),
           floor(element_at(col("embedding"), 1).cast("double") * lit(1000000.0)
             + lit(0.5)).cast("long").as("x"),
@@ -362,30 +450,26 @@ object SparkEntry {
     * the only distributed pass; the EM fit runs on the driver over
     * those collected rows ([[EntityResolution.fsFit]]'s integral-state
     * discipline). */
-  private val fsCache = new java.util.concurrent.ConcurrentHashMap[
-    String, EntityResolution.FsFit]()
   private def fsModel(s: SparkSession, d: String): EntityResolution.FsFit =
-    fsCache.computeIfAbsent(d, dir => {
+    memo("fs_model", d) {
       val rows = EntityResolution
-        .comparisonPatterns(erRecords(s, dir), "id", "name",
+        .comparisonPatterns(erRecords(s, d), "id", "name",
           blockKeyLen = 8, maxBucket = Some(1024))
         .collect()
         .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
         .toSeq
       EntityResolution.fsFit(rows)
-    })
+    }
 
   /** Materialized ER records store per sf dir (the registered relation
     * the fuzzy-join SQL rewrite fires on) — a one-time offline write,
     * like the blob/bucketed stores. */
-  private val erStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def erStore(s: SparkSession, d: String): String =
-    erStoreCache.computeIfAbsent(d, dir => {
-      val path = java.nio.file.Files.createTempDirectory("graft_er_store").toString
-      erRecords(s, dir).write.mode("overwrite").parquet(path)
+    memo("er_store", d) {
+      val path = tempDir("graft_er_store")
+      erRecords(s, d).write.mode("overwrite").parquet(path)
       path
-    })
+    }
 
   /** Shared fixture for the SCD2 rows: per-customer order-count tier
     * at three cut dates, collapsed into validity intervals. */
@@ -407,46 +491,36 @@ object SparkEntry {
     Snapshot.scd2(versioned, "o_custkey", "version", Seq("tier"))
   }
 
-  private val hllStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** Dedicated documents copy for the HLL rewrite row, so the
     * HllCatalog registration never touches the shared parquet path. */
   private def hllStore(s: SparkSession, d: String): String =
-    hllStoreCache.computeIfAbsent(d, dir => {
-      val path = java.nio.file.Files.createTempDirectory("graft_hll_store").toString
-      table(s, dir, "documents").select("doc_id", "source", "text")
+    memo("hll_store", d) {
+      val path = tempDir("graft_hll_store")
+      table(s, d, "documents").select("doc_id", "source", "text")
         .write.mode("overwrite").parquet(path)
       path
-    })
-
-  private val footerCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Dedicated multi-file documents copy for the footer-count rewrite
     * row — registration scoped to the copy, and 4 files so the
     * distributed footer fan-out is real. */
   private def footerCountStore(s: SparkSession, d: String): String =
-    footerCountCache.computeIfAbsent(d, dir => {
-      val path = java.nio.file.Files.createTempDirectory("graft_fc_store").toString
-      table(s, dir, "documents").repartition(4)
+    memo("footer_count", d) {
+      val path = tempDir("graft_fc_store")
+      table(s, d, "documents").repartition(4)
         .write.mode("overwrite").parquet(path)
       path
-    })
-
-  private val footerEventsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Dedicated events copy (TIMESTAMP_MICROS so footer stats carry a
     * verifiable unit) for the freshness-card rewrite row. */
   private def footerEventsStore(s: SparkSession, d: String): String =
-    footerEventsCache.computeIfAbsent(d, dir => {
+    memo("footer_events", d) {
       val prev = s.conf.getOption("spark.sql.parquet.outputTimestampType")
       s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       try {
-        val path = java.nio.file.Files
-          .createTempDirectory("graft_fce_store").toString
-        graft.streaming.EventPipeline.normalizeTs(table(s, dir, "events"))
+        val path = tempDir("graft_fce_store")
+        graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
           .select("event_id", "user_id", "ts")
           .repartition(4).write.mode("overwrite").parquet(path)
         path
@@ -456,7 +530,7 @@ object SparkEntry {
         case None =>
           s.conf.unset("spark.sql.parquet.outputTimestampType")
       }
-    })
+    }
 
   /** Registered catalog table + materialized rollup per sf dir for the
     * rollup-rewrite row — both one-time offline writes (the summary
@@ -464,77 +538,67 @@ object SparkEntry {
     * amortizes). A dedicated table copy keeps the registration scoped
     * to this row: other driver rows over documents.parquet keep their
     * own plans. */
-  private val rollupCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.plans.RollupCatalog.Params)]()
+  private def rollupStore(s: SparkSession, d: String)
+      : (String, graft.plans.RollupCatalog.Params) =
+    memo("rollup", d) {
+      val base = tempDir("graft_rollup_base")
+      table(s, d, "documents")
+        .select("doc_id", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(base)
+      val summary = tempDir("graft_rollup_sum")
+      (base, graft.plans.RollupCatalog.buildSummary(
+        s, base, summary, Seq("lang", "source"), Seq("n_chars")))
+    }
+
   /** Dedicated table copies for the constraint rewrites — the rollup
     * row's scoping discipline: uniqueness is registered on COPIES so
     * no other query's plan can be affected by the catalog entry.
     * One-time offline writes per sf dir. */
-  private val constraintCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def constraintStore(s: SparkSession, d: String): (String, String) =
-    constraintCache.computeIfAbsent(d, dir => {
-      val docs = java.nio.file.Files.createTempDirectory("graft_uniq_docs").toString
-      table(s, dir, "documents").select("doc_id", "lang", "source", "n_chars")
+    memo("constraint", d) {
+      val docs = tempDir("graft_uniq_docs")
+      table(s, d, "documents").select("doc_id", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(docs)
-      val dim = java.nio.file.Files.createTempDirectory("graft_uniq_part").toString
-      table(s, dir, "part").select("p_partkey", "p_brand", "p_size")
+      val dim = tempDir("graft_uniq_part")
+      table(s, d, "part").select("p_partkey", "p_brand", "p_size")
         .write.mode("overwrite").parquet(dim)
       graft.plans.ConstraintCatalog.registerUnique(docs, Seq("doc_id"))
       graft.plans.ConstraintCatalog.registerUnique(dim, Seq("p_partkey"))
       (docs, dim)
-    })
-
-  private val fkStoreCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
 
   /** Dedicated lineitem copy with a VERIFIED foreign key onto the
     * constraint dim copy (l_partkey ⊆ p_partkey, no NULLs — the
     * profile_ri facts), for the inner-join elimination row. */
   private def fkStore(s: SparkSession, d: String): String =
-    fkStoreCache.computeIfAbsent(d, dir => {
-      val (_, dim) = constraintStore(s, dir)
-      val facts = java.nio.file.Files
-        .createTempDirectory("graft_fk_lineitem").toString
-      table(s, dir, "lineitem")
+    memo("fk_store", d) {
+      val (_, dim) = constraintStore(s, d)
+      val facts = tempDir("graft_fk_lineitem")
+      table(s, d, "lineitem")
         .select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
         .write.mode("overwrite").parquet(facts)
       graft.plans.ConstraintCatalog.registerForeignKey(
         facts, "l_partkey", dim, "p_partkey")
       facts
-    })
-
-  private def rollupStore(s: SparkSession, d: String)
-      : (String, graft.plans.RollupCatalog.Params) =
-    rollupCache.computeIfAbsent(d, dir => {
-      val base = java.nio.file.Files.createTempDirectory("graft_rollup_base").toString
-      table(s, dir, "documents")
-        .select("doc_id", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(base)
-      val summary = java.nio.file.Files.createTempDirectory("graft_rollup_sum").toString
-      (base, graft.plans.RollupCatalog.buildSummary(
-        s, base, summary, Seq("lang", "source"), Seq("n_chars")))
-    })
+    }
 
   /** Hourly event rollup per sf dir — the time-grain twin of
     * [[rollupStore]]: the registered table is the normalized event
     * stream with exact integer cents, the summary is keyed by
     * (event_type, hour grain). One-time offline writes. */
-  private val rollupTimeCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (String, graft.plans.RollupCatalog.Params)]()
   private def rollupTimeStore(s: SparkSession, d: String)
       : (String, graft.plans.RollupCatalog.Params) =
-    rollupTimeCache.computeIfAbsent(d, dir => {
-      val base = java.nio.file.Files.createTempDirectory("graft_rolltime_base").toString
-      graft.streaming.EventPipeline.normalizeTs(table(s, dir, "events"))
+    memo("rollup_time", d) {
+      val base = tempDir("graft_rolltime_base")
+      graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
         .select(col("event_id"), col("ts"), col("event_type"),
           round(col("value") * 100).cast("long").as("cents"))
         .write.mode("overwrite").parquet(base)
-      val summary = java.nio.file.Files.createTempDirectory("graft_rolltime_sum").toString
+      val summary = tempDir("graft_rolltime_sum")
       (base, graft.plans.RollupCatalog.buildSummary(
         s, base, summary, Seq("event_type"), Seq("cents"),
         timeGrain = Some(("ts", "HOUR", "grain_hour"))))
-    })
+    }
 
   private def knn(strategy: SearchStrategy, k: Int,
       filter: Map[String, String] = Map.empty)(
@@ -590,17 +654,7 @@ object SparkEntry {
     // standard top-k pipeline runs on it unchanged. Oracle = the same
     // parquet-derived top-k, proving the connector is lossless.
     "blob_source_topk" -> ((s, d) => {
-      val path = blobStoreCache.computeIfAbsent(d, dir => {
-        val p = java.nio.file.Files.createTempDirectory("graft_blob_store").toString
-        // Distributed dump: each of the 4 partitions writes its own
-        // blob file executor-side — the same shape a 100 TB export
-        // takes (no driver collect anywhere in the dump).
-        graft.sources.VectorBlobSource.writeDistributed(
-          table(s, dir, "embeddings").select("vec_id", "embedding")
-            .repartition(4, col("vec_id")), p)
-        p
-      })
-      val emb = s.read.format("graft-vectors").load(path)
+      val emb = s.read.format("graft-vectors").load(blobStore(s, d))
       VectorSearch.searchWithMetadata(
         emb, table(s, d, "documents"), ("vec_id", "doc_id"), cfg,
         queryVec(s, d), 5, Map.empty, Some(Scale))
@@ -662,32 +716,21 @@ object SparkEntry {
     // (d=32, candidates=128) is the cheapest measured full-recall point
     // (grid in PcaAnnSpec), so the output IS brute force = the oracle;
     // recall itself is pinned in ScalaTest.
-    "ann_pca_topk" -> ((s, d) => {
-      val model = pcaCache.computeIfAbsent(d,
-        dir => Pca.fit(table(s, dir, "embeddings"), "embedding", d = 32))
+    "ann_pca_topk" -> ((s, d) =>
       PcaAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        queryVec(s, d), model, k = 10, candidates = 128, scale = Scale)
-    }),
+        queryVec(s, d), pcaModel(s, d), k = 10, candidates = 128, scale = Scale)),
     // SQ8 scalar-quantized ANN (the fifth index family): int8 codes
     // scored by reconstructed cosine against a per-query coefficient
     // table (the SQ analogue of the ADC LUT), exact re-rank of 64
     // candidates. Quantization error ≤ Δ/2 per dim makes the candidate
     // ranking near-exact, so the output IS brute force = the oracle;
     // recall itself is pinned in Sq8AnnSpec's measured grid.
-    "ann_sq8_topk" -> ((s, d) => {
-      val model = sqCache.computeIfAbsent(d,
-        dir => SqAnn.fit(table(s, dir, "embeddings"), "embedding"))
+    "ann_sq8_topk" -> ((s, d) =>
       SqAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        queryVec(s, d), model, k = 10, candidates = 64, scale = Scale)
-    }),
+        queryVec(s, d), sqModel(s, d), k = 10, candidates = 64, scale = Scale)),
     // R2 — IVF/ANN index path; searchTopSize = numClusters ⇒ exact.
     "ann_ivf_topk" -> ((s, d) => {
-      val (assigned, model) = ivfCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-        (a.cache(), m)
-      })
+      val (assigned, model) = ivfStore(s, d)
       IvfIndex.search(assigned, model, cfg, queryVec(s, d),
         k = 10, searchTopSize = 8, scoreScale = Some(Scale))
     }),
@@ -695,12 +738,7 @@ object SparkEntry {
     // centroids → leaf centroids → partitions, breadth knob per level.
     // Full breadth ⇒ exact (oracle); pruned behavior in IvfIndexSpec.
     "ann_tree_topk" -> ((s, d) => {
-      val (assigned, model) = ivfCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-        (a.cache(), m)
-      })
+      val (assigned, model) = ivfStore(s, d)
       val tree = IvfIndex.buildTree(model, macroClusters = 3)
       IvfIndex.searchTree(assigned, tree, cfg, queryVec(s, d),
         k = 9, searchTopSize = model.numClusters, scoreScale = Some(Scale))
@@ -708,14 +746,7 @@ object SparkEntry {
     // R2 on disk: the 100 TB search path — store written partitionBy
     // cluster_id, search prunes Parquet partitions at file-listing time.
     "ann_ivf_disk" -> ((s, d) => {
-      val (path, model) = ivfDiskCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-        val p = java.nio.file.Files.createTempDirectory("graft_ivf_store").toString
-        IvfIndex.writePartitioned(a, p)
-        (p, m)
-      })
+      val (path, model) = ivfDiskStore(s, d)
       IvfIndex.search(s.read.parquet(path), model, cfg, queryVec(s, d),
         k = 12, searchTopSize = 8, scoreScale = Some(Scale))
     }),
@@ -726,17 +757,7 @@ object SparkEntry {
     // rewrite. Full-breadth search over the merged store must equal
     // brute force over the whole corpus, which is the oracle.
     "ann_ivf_append" -> ((s, d) => {
-      val (path, model) = ivfAppendCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store.filter(col("vec_id") < 400),
-          "embedding", numClusters = 8)
-        val p = java.nio.file.Files.createTempDirectory("graft_ivf_append").toString
-        IvfIndex.writePartitioned(a, p)
-        IvfIndex.appendPartitioned(
-          IvfIndex.assignBatch(store.filter(col("vec_id") >= 400), "embedding", m), p)
-        (p, m)
-      })
+      val (path, model) = ivfAppendStore(s, d)
       IvfIndex.search(s.read.parquet(path), model, cfg, queryVec(s, d),
         k = 12, searchTopSize = 8, scoreScale = Some(Scale))
     }),
@@ -748,17 +769,7 @@ object SparkEntry {
     // (search-after ≡ search-before, dead rows physically gone) is
     // pinned in IvfIndexSpec.
     "ann_ivf_delete" -> ((s, d) => {
-      val (path, model) = ivfDeleteCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store.filter(col("vec_id") < 400),
-          "embedding", numClusters = 8)
-        val p = java.nio.file.Files.createTempDirectory("graft_ivf_delete").toString
-        IvfIndex.writePartitioned(a, p)
-        IvfIndex.appendPartitioned(
-          IvfIndex.assignBatch(store.filter(col("vec_id") >= 400), "embedding", m), p)
-        (p, m)
-      })
+      val (path, model) = ivfAppendStore(s, d)
       val tomb = table(s, d, "embeddings")
         .filter(col("vec_id") % 7 === 3).select("vec_id")
       IvfIndex.searchWithTombstones(s.read.parquet(path), model, cfg,
@@ -774,20 +785,7 @@ object SparkEntry {
     // query is a full-breadth search over the STREAMED store, which
     // must equal brute force — the same oracle as ann_ivf_disk.
     "ann_ivf_streamed" -> ((s, d) => {
-      val (path, model) = ivfStreamCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (_, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-        val src = java.nio.file.Files
-          .createTempDirectory("graft_ivf_stream_src").toString
-        table(s, dir, "embeddings").repartition(3)
-          .write.mode("overwrite").parquet(src)
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_ivf_stream_store").toString
-        graft.streaming.VectorIngest.ingestPartitioned(s, src,
-          s"$dir/documents.parquet", "vec_id", "doc_id", "embedding", m, p)
-        (p, m)
-      })
+      val (path, model) = ivfStreamStore(s, d)
       IvfIndex.search(s.read.parquet(path), model, cfg, queryVec(s, d),
         k = 12, searchTopSize = 8, scoreScale = Some(Scale))
     }),
@@ -798,12 +796,7 @@ object SparkEntry {
     "sql_ann_rewrite" -> ((s, d) => {
       GraftFunctions.register(s)
       graft.plans.IvfRewrite.install(s)
-      val (path, model) = ivfEmbCache.computeIfAbsent(d, dir => {
-        val (a, m) = IvfIndex.build(table(s, dir, "embeddings"), "embedding", numClusters = 8)
-        val p = java.nio.file.Files.createTempDirectory("graft_ivf_emb").toString
-        IvfIndex.writePartitioned(a, p)
-        (p, m)
-      })
+      val (path, model) = ivfEmbStore(s, d)
       graft.plans.IvfIndexCatalog.register(path, model, searchTopSize = model.numClusters)
       s.read.parquet(path).createOrReplaceTempView("graft_ivf_store")
       s.sql(
@@ -2393,26 +2386,10 @@ object SparkEntry {
     // state store), only novel docs land in the clean-store sink. The
     // ingest is a per-sf offline artifact; the query reads the sink and
     // must equal the batch incrementalNew result — the same oracle.
-    "dedup_incremental_streamed" -> ((s, d) => {
-      val path = dedupStreamCache.computeIfAbsent(d, dir => {
-        val docs = table(s, dir, "documents")
-        val src = java.nio.file.Files
-          .createTempDirectory("graft_dedup_stream_src").toString
-        docs.filter(col("doc_id") >= 250).repartition(3)
-          .write.mode("overwrite").parquet(src)
-        val corpus = java.nio.file.Files
-          .createTempDirectory("graft_dedup_stream_corpus").toString
-        docs.filter(col("doc_id") < 250)
-          .write.mode("overwrite").parquet(corpus)
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_dedup_stream_store").toString
-        graft.streaming.CorpusIngest.ingestNovel(s, src, corpus, "text", p)
-        p
-      })
-      s.read.parquet(path)
+    "dedup_incremental_streamed" -> ((s, d) =>
+      s.read.parquet(dedupStreamStore(s, d))
         .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    }),
+        .orderBy("doc_id")),
     // Deterministic train/val/test assignment by md5(id) — reproducible
     // across reruns/engines/partitionings, incremental (new rows land
     // in the same split forever), scan-local. Every row's assignment is
@@ -2732,7 +2709,7 @@ object SparkEntry {
     // ⇔ lossless roundtrip (oracle states the expected summary once
     // per format from the parquet source).
     "format_roundtrip" -> ((s, d) => {
-      val p = java.nio.file.Files.createTempDirectory("graft_formats").toString
+      val p = tempDir("graft_formats")
       graft.sources.FormatSinks.roundtripSummary(
         table(s, d, "documents"), Seq("csv", "json", "orc"), p)
     }),
@@ -3235,16 +3212,7 @@ object SparkEntry {
     // pinned as a grid in MaxSimSpec. The store build is a per-sf
     // offline artifact (index construction is not query cost).
     "retrieval_maxsim_ivf" -> ((s, d) => {
-      val (path, model) = maxsimIvfCache.computeIfAbsent(d, dir => {
-        val dt = table(s, dir, "embeddings")
-          .select(expr("vec_id div 8").as("doc_id"),
-            col("vec_id").as("dtok"), col("embedding"))
-        val (a, m) = IvfIndex.build(dt, "embedding", numClusters = 8)
-        val p = java.nio.file.Files
-          .createTempDirectory("graft_maxsim_ivf").toString
-        IvfIndex.writePartitioned(a, p)
-        (p, m)
-      })
+      val (path, model) = maxsimIvfStore(s, d)
       val qt = table(s, d, "embeddings").filter(col("vec_id") < 16)
         .select((col("vec_id") % 4).as("qid"), col("vec_id").as("qtok"),
           col("embedding"))
@@ -3667,14 +3635,7 @@ object SparkEntry {
     // orderkey (one-time layout cost), then joined with ZERO exchanges —
     // the 100 TB recurring-join pattern. Plan assert in ScalaTest.
     "bucketed_colocated_join" -> ((s, d) => {
-      val (liTbl, ordTbl) = bucketedCache.computeIfAbsent(d, dir => {
-        val suffix = math.abs(dir.hashCode).toString
-        val li = s"graft_li_bkt_$suffix"
-        val ord = s"graft_ord_bkt_$suffix"
-        BucketedStore.writeBucketed(table(s, dir, "lineitem"), li, "l_orderkey", 8)
-        BucketedStore.writeBucketed(table(s, dir, "orders"), ord, "o_orderkey", 8)
-        (li, ord)
-      })
+      val (liTbl, ordTbl) = bucketedStore(s, d)
       s.table(liTbl)
         .join(s.table(ordTbl), col("l_orderkey") === col("o_orderkey"))
         .groupBy("o_orderstatus")
@@ -5544,14 +5505,7 @@ object SparkEntry {
     // pattern by replace-arithmetic and sums.
     "blocklist_scan" -> ((s, d) => {
       GraftFunctions.register(s)
-      // the automaton is a fixed artifact: build/broadcast/register
-      // ONCE per session (bench reps and verify would otherwise mint
-      // a new never-destroyed broadcast per invocation)
-      val tag = acTagCache.computeIfAbsent("blocklist", _ => {
-        val patterns = Seq("dup", "hash", "scan", "slow scan", "table value")
-        graft.functions.AcRegistry.register(s.sparkContext.broadcast(
-          graft.functions.AhoCorasick.build(patterns)))
-      })
+      val tag = blocklistTag(s)
       table(s, d, "documents")
         .filter(col("text").isNotNull)
         .select(col("doc_id"),
@@ -6422,12 +6376,7 @@ object SparkEntry {
     // in PqIndexSpec (same convention as ann_tree_topk).
     "ann_ivfpq_topk" -> ((s, d) => {
       GraftFunctions.register(s)
-      val (assigned, ivf) = ivfCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-        (a.cache(), m)
-      })
+      val (assigned, ivf) = ivfStore(s, d)
       val pq = ivfPqModel
       val encoded = PqIndex.encode(assigned, "embedding", pq)
       PqIndex.ivfPqSearch(encoded, ivf, pq, "vec_id", "embedding",
@@ -6443,12 +6392,7 @@ object SparkEntry {
     // PqIndexSpec.
     "ann_ivfpq_delete" -> ((s, d) => {
       GraftFunctions.register(s)
-      val (assigned, ivf) = ivfCache.computeIfAbsent(d, dir => {
-        val store = table(s, dir, "embeddings")
-          .join(table(s, dir, "documents"), col("vec_id") === col("doc_id"))
-        val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-        (a.cache(), m)
-      })
+      val (assigned, ivf) = ivfStore(s, d)
       val pq = ivfPqModel
       val encoded = PqIndex.encode(assigned, "embedding", pq)
       val tomb = table(s, d, "embeddings")

@@ -3,17 +3,14 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
-  def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
-    // Local-iteration subset: SPARK_GRAFT_ONLY=q1,q2 limits the dump
-    // (the driver never sets it, so the per-round gate stays complete).
-    // Blank/empty values are treated as unset — a leaked empty var must
-    // not silently filter out every query — and an active filter warns
-    // loudly so a partial dump can never masquerade as a gate run.
+  /** Local-iteration subset `SPARK_GRAFT_ONLY=q1,q2`, shared by Verify
+    * and Bench (gate runs never set it, so they stay complete).
+    * Blank/empty values are treated as unset — a leaked empty var must
+    * not silently filter out every query — unknown names are refused,
+    * and an active filter warns loudly so a partial run can never
+    * masquerade as a gate run. */
+  private[graft] def onlyRows(tag: String, doing: String, partial: String)
+      : Option[Set[String]] = {
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       .filter(_.nonEmpty)
@@ -22,11 +19,21 @@ object Verify {
       require(unknown.isEmpty,
         s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: " +
           s"${unknown.toSeq.sorted.mkString(", ")} — a typo here would " +
-          "silently dump nothing")
+          "silently drop that row")
       System.err.println(
-        s"[verify] WARNING: SPARK_GRAFT_ONLY is active — dumping ONLY " +
-          s"${names.toSeq.sorted.mkString(", ")}. This is a PARTIAL dump, not a gate run.")
+        s"[$tag] WARNING: SPARK_GRAFT_ONLY is active — $doing ONLY " +
+          s"${names.toSeq.sorted.mkString(", ")}. $partial")
     }
+    only
+  }
+
+  def main(args: Array[String]): Unit = {
+    val Array(sfDir, outDir) = args
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    new java.io.File(outDir).mkdirs()
+    val only = onlyRows("verify", "dumping", "This is a PARTIAL dump, not a gate run.")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>

@@ -168,7 +168,8 @@ final class SearchHttpServer(
 
   private val server = com.sun.net.httpserver.HttpServer.create(
     new InetSocketAddress(bindHost, port), 0)
-  server.setExecutor(java.util.concurrent.Executors.newFixedThreadPool(4))
+  private val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+  server.setExecutor(pool)
   server.createContext("/", exchange(handleRoot))
   server.createContext("/health", exchange(handleHealth))
   server.createContext("/search", exchange(handleSearch))
@@ -179,7 +180,12 @@ final class SearchHttpServer(
     server.getAddress.getPort
   }
 
-  def stop(): Unit = server.stop(0)
+  /** Stops the listener, then the request pool: its threads are not
+    * daemons, so a pool left running keeps the JVM alive. */
+  def stop(): Unit = {
+    server.stop(0)
+    pool.shutdown()
+  }
 
   // ------------------------------------------------------------- routes
 

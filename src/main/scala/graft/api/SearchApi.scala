@@ -101,16 +101,23 @@ final class HttpEmbedder(url: String, timeoutMs: Int = 30000) extends Embedder {
       val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
       if (resp.statusCode() / 100 != 2)
         return Left(s"embedding API returned status ${resp.statusCode()}")
-      JsonUtil.extractFloatArray(resp.body(), "Embedding")
-        .toRight("response has no 'Embedding' array")
+      JsonParse.parse(resp.body()) match {
+        case obj: Map[_, _] => obj.asInstanceOf[Map[String, Any]].get("Embedding") match {
+          case Some(xs: Vector[_]) if xs.forall(_.isInstanceOf[java.lang.Double]) =>
+            Right(xs.map(_.asInstanceOf[java.lang.Double].floatValue()).toArray)
+          case _ => Left("response has no 'Embedding' array of numbers")
+        }
+        case _ => Left("response is not a JSON object")
+      }
     } catch {
       case e: Exception => Left(e.getMessage)
     }
   }
 }
 
-/** Minimal JSON helpers — enough for the embedder wire contract, no
-  * external dependency (the build is intentionally dependency-free). */
+/** JSON string quoting for the hand-rendered response bodies; parsing
+  * is [[JsonParse]]'s (no external dependency: the build is
+  * intentionally dependency-free). */
 private[api] object JsonUtil {
   def quote(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
@@ -121,17 +128,6 @@ private[api] object JsonUtil {
     case c if c < ' ' => f"\\u${c.toInt}%04x"
     case c => c.toString
   } + "\""
-
-  /** Extract `"key": [n, n, ...]` from a JSON object body. */
-  def extractFloatArray(json: String, key: String): Option[Array[Float]] = {
-    val m = ("\"" + java.util.regex.Pattern.quote(key) + "\"\\s*:\\s*\\[([^\\]]*)\\]").r
-      .findFirstMatchIn(json)
-    m.map { g =>
-      val inner = g.group(1).trim
-      if (inner.isEmpty) Array.empty[Float]
-      else inner.split(",").map(_.trim.toFloat)
-    }
-  }
 }
 
 /**

@@ -98,7 +98,7 @@ object EventPipeline {
     * deterministic function of (fixture key, shape): fixture PREP, not
     * the streamed execution under measurement. Keyed callers
     * (SparkEntry passes the sf dir) therefore write once per JVM and
-    * replay from the same files — the established kmeansCache /
+    * replay from the same files — the established SparkEntry.memo fixture /
     * IVF-store offline-artifact precedent — while un-keyed callers
     * (unit tests) keep per-call dirs, eagerly reclaimed by the row
     * after its query terminates. */

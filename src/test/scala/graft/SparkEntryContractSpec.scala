@@ -37,6 +37,54 @@ class SparkEntryContractSpec extends AnyFunSuite {
       s"row keys not appearing exactly twice (query + oracle): ${bad.keys.toSeq.sorted}")
   }
 
+  // The fixture memo, exercised with plain values (no SparkSession);
+  // each test keys under a fresh dir so reruns never hit a stale entry.
+  private def freshDir(): String = s"memo-spec-${java.util.UUID.randomUUID()}"
+
+  test("memo: one build per key under 8 concurrent callers") {
+    val dir = freshDir()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val go = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    try {
+      val calls = (1 to 8).map(_ => pool.submit(() => {
+        go.await()
+        SparkEntry.memo("spec_once", dir) {
+          Thread.sleep(50)
+          builds.incrementAndGet()
+        }
+      }))
+      go.countDown()
+      val got = calls.map(_.get(30, java.util.concurrent.TimeUnit.SECONDS))
+      assert(builds.get === 1)
+      assert(got.toSet === Set(1))
+    } finally pool.shutdown()
+  }
+
+  test("memo: a build may memo other keys (nested fixtures, any depth)") {
+    val dir = freshDir()
+    // a chain deep enough that some inner key lands in the same hash
+    // bin as an outer key whose build is still running
+    def level(i: Int): Int =
+      if (i == 0) 0 else SparkEntry.memo(s"spec_nest_$i", dir)(level(i - 1) + 1)
+    assert(level(128) === 128)
+    assert(SparkEntry.memo("spec_nest_1", dir)(-1) === 1)
+  }
+
+  test("memo: a build that throws is not kept; the next call retries") {
+    val dir = freshDir()
+    var attempts = 0
+    def build(): String = {
+      attempts += 1
+      if (attempts == 1) throw new IllegalStateException("first build fails")
+      "built"
+    }
+    intercept[IllegalStateException](SparkEntry.memo("spec_retry", dir)(build()))
+    assert(SparkEntry.memo("spec_retry", dir)(build()) === "built")
+    assert(SparkEntry.memo("spec_retry", dir)(build()) === "built")
+    assert(attempts === 2)
+  }
+
   test("README row count matches the queries map") {
     val path = java.nio.file.Paths.get("README.md")
     assume(java.nio.file.Files.exists(path), "README not present")

@@ -11,12 +11,6 @@ class SparkEntrySpec extends SparkFunSuite {
     assert(rows.head.getString(0) === "0") // self-match first
   }
 
-  test("every oracle key has a queries entry") {
-    val qs = SparkEntry.queries.keySet
-    val missing = SparkEntry.oracleSql.keySet -- qs
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
-
   test("sql_rollup_rewrite driver row is served from the summary, not the base") {
     val df = SparkEntry.queries("sql_rollup_rewrite")(spark, Sf0001)
     val plan = df.queryExecution.executedPlan.toString

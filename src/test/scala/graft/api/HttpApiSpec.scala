@@ -149,6 +149,17 @@ class HttpApiSpec extends SparkFunSuite {
     }
   }
 
+  test("stop() ends every non-daemon thread the server started") {
+    def threads = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSet
+    val before = threads
+    withServer() { port => assert(get(port, "/").statusCode() === 200) }
+    val deadline = System.nanoTime() + 5000000000L
+    val leaked = (threads -- before).filterNot(_.isDaemon)
+    leaked.foreach(t => t.join(math.max(1L, (deadline - System.nanoTime()) / 1000000L)))
+    val alive = leaked.filter(_.isAlive).map(_.getName)
+    assert(alive.isEmpty, s"non-daemon threads alive after stop(): $alive")
+  }
+
   test("JsonParse: nesting, escapes, numbers, and malformed input") {
     val v = JsonParse.parse(
       """{"a": [1, -2.5e2, "x\n\"yA"], "b": {"c": true, "d": null}}""")

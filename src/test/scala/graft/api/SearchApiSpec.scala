@@ -107,22 +107,36 @@ class SearchApiSpec extends SparkFunSuite {
     val server = com.sun.net.httpserver.HttpServer.create(
       new java.net.InetSocketAddress("127.0.0.1", 0), 0)
     @volatile var seenBody: String = ""
-    server.createContext("/embed", (ex: com.sun.net.httpserver.HttpExchange) => {
-      seenBody = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
-      val resp = """{"Embedding": [0.5, -0.25, 0.125]}""".getBytes("UTF-8")
-      ex.sendResponseHeaders(200, resp.length)
-      ex.getResponseBody.write(resp)
-      ex.close()
-    })
+    val bodies = Map(
+      "/embed" -> """{"Embedding": [0.5, -0.25, 0.125]}""",
+      // decoys before the real key: inside a string value, and nested
+      "/decoy" -> ("""{"Note": "not \"Embedding\": [9]", "Meta": {"Embedding": [9]}, """ +
+        """"Embedding": [0.5, -0.25, 0.125]}"""),
+      "/nested" -> """{"Data": {"Embedding": [9]}}""",
+      "/strings" -> """{"Embedding": ["0.5"]}""")
+    bodies.foreach { case (path, body) =>
+      server.createContext(path, (ex: com.sun.net.httpserver.HttpExchange) => {
+        seenBody = new String(ex.getRequestBody.readAllBytes(), "UTF-8")
+        val resp = body.getBytes("UTF-8")
+        ex.sendResponseHeaders(200, resp.length)
+        ex.getResponseBody.write(resp)
+        ex.close()
+      })
+    }
     server.start()
     try {
-      val url = s"http://127.0.0.1:${server.getAddress.getPort}/embed"
-      val got = new HttpEmbedder(url).embed("hello world")
+      def embed(path: String) = new HttpEmbedder(
+        s"http://127.0.0.1:${server.getAddress.getPort}$path").embed("hello world")
+      val got = embed("/embed")
       assert(got.isRight)
       assert(got.toOption.get.toSeq === Seq(0.5f, -0.25f, 0.125f))
       // request carries the reference's TextSegments payload (app.py:129)
       assert(seenBody.contains("\"TextSegments\""))
       assert(seenBody.contains("\"query\": \"hello world\""))
+      // only the top-level "Embedding" array of numbers counts
+      assert(embed("/decoy").toOption.map(_.toSeq) === Some(Seq(0.5f, -0.25f, 0.125f)))
+      assert(embed("/nested").isLeft)
+      assert(embed("/strings").isLeft)
     } finally server.stop(0)
   }
 
