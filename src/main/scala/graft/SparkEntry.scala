@@ -824,10 +824,12 @@ object SparkEntry {
       val service = new SearchService(
         s, table(s, d, "embeddings"), table(s, d, "documents"),
         ("vec_id", "doc_id"), cfg, Some(new DeterministicEmbedder(64)), Some(Scale))
-      val resp = service.search(SearchRequest(embedding =
+      // closed before the row returns: nothing stays cached across reps
+      val resp = try service.search(SearchRequest(embedding =
         Some(queryVec(s, d).toSeq))) // k omitted → default 4 (app.py:363)
         .fold(e => throw new IllegalStateException(s"${e.status}: ${e.message}"),
           identity)
+        finally service.close()
       import s.implicits._
       resp.results.toDF()
         .select(col("id"), col("title"), col("vendor"), col("description"), col("score"))
@@ -839,7 +841,7 @@ object SparkEntry {
       val service = new SearchService(s, table(s, d, "embeddings"),
         table(s, d, "documents"), ("vec_id", "doc_id"), cfg)
       import s.implicits._
-      Seq((1, service.health())).toDF("test", "healthy")
+      Seq((1, try service.health() finally service.close())).toDF("test", "healthy")
     }),
     // A4 — effective-config echo (app.py:393-405): every config field as
     // a column, plus the exact JSON the service serializes.
@@ -849,7 +851,7 @@ object SparkEntry {
       import s.implicits._
       Seq((cfg.idCol, cfg.titleCol, cfg.vendorCol, cfg.descriptionCol,
         cfg.embeddingCol, cfg.strategy.name, cfg.indexEnabled,
-        cfg.searchTopSize, cfg.defaultK, service.configJson()))
+        cfg.searchTopSize, cfg.defaultK, try service.configJson() finally service.close()))
         .toDF("id_column", "title_column", "vendor_column", "description_column",
           "embedding_column", "search_strategy", "index_enabled",
           "index_tree_search_top_size", "default_k", "config_json")

@@ -241,6 +241,13 @@ object Evaluation {
     * keeps six significant digits after the division). */
   val BtFactor = 1000000000000L
 
+  private val Dec38 = org.apache.spark.sql.types.DecimalType(38, 0)
+
+  /** ⌊a / b⌋ for a non-negative DECIMAL(38,0) `a` and a positive integral
+    * `b`, kept in DECIMAL(38,0) (`div` returns BIGINT): `a − a % b` is a
+    * multiple of `b`, so the decimal division is exact. */
+  private def truncDiv(a: Column, b: Column): Column = ((a - a % b) / b).cast(Dec38)
+
   /**
    * Bradley–Terry strengths from a preference log via `iters` rounds
    * of Hunter's MM update p_i ← W_i / Σ_j n_ij/(p_i+p_j), normalized
@@ -315,10 +322,10 @@ object Evaluation {
       // DECIMAL(38,0) path handles exactly), and the denominator is
       // consumed as BigInt so no narrowing ever wraps. greatest(…, 1)
       // guards the all-zero-strength corner (two never-winning items
-      // playing each other). Above the gate the pre-existing
-      // distributed MM rounds run unchanged (broadcast strengths +
-      // DECIMAL(38,0) aggregate per round); both paths are pinned
-      // equal in EvaluationSpec.
+      // playing each other). Above the gate the distributed MM rounds
+      // run (broadcast strengths + a DECIMAL(38,0) floor-division sum
+      // per round, read back as BigInt); both paths are pinned equal
+      // in EvaluationSpec.
       val pairGate = spark.conf
         .get("spark.graft.bt.pairCollectGate", "262144").toLong
       val driverReplay = pairGate > 0 && nsym.count() <= pairGate
@@ -351,10 +358,11 @@ object Evaluation {
             .join(broadcast(pRound.select(col("__pk").as("i"), col("p").as("p_i"))), "i")
             .join(broadcast(pRound.select(col("__pk").as("j"), col("p").as("p_j"))), "j")
             .groupBy("i")
-            .agg(sum(expr(
-              s"(CAST(n_ij AS DECIMAL(38,0)) * $BtFactor) div " +
-                "greatest(p_i + p_j, 1L)")).as("denom"))
-            .collect().map(r => r.get(0) -> BigInt(r.getLong(1))).toMap
+            .agg(sum(truncDiv(
+              col("n_ij").cast(Dec38) * lit(BtFactor),
+              greatest(col("p_i") + col("p_j"), lit(1L)))).as("denom"))
+            .collect()
+            .map(r => r.get(0) -> BigInt(r.getDecimal(1).toBigIntegerExact)).toMap
           val praw = items.map { it =>
             val d = denom.getOrElse(it, BigInt(0))
             it -> (if (d > 0) (BigInt(winsM(it)) * BtFactor / d).toLong else 0L)

@@ -212,6 +212,12 @@ object VectorSearch {
    * the plan is `scan embeddings → TakeOrderedAndProject(k) → broadcast
    * join → sort k rows`.
    *
+   * The winners carry the embeddings key in its stored type next to the
+   * string `id` (the output column and the tie-break). When both tables
+   * store the key as the same type the join compares it as stored; only
+   * mismatched key types fall back to comparing both sides as strings,
+   * which casts every metadata key per request.
+   *
    * With a filter on metadata columns the predicate must see the join, so
    * we fall back to join-then-bruteForce (the filter is still pushed into
    * the documents Parquet scan by Catalyst).
@@ -235,12 +241,17 @@ object VectorSearch {
       val qv = typedLit(queryVec.toSeq)
       val score = scoreScale.fold(cfg.strategy.score(col(cfg.embeddingCol), qv))(
         s => cfg.strategy.roundedScore(col(cfg.embeddingCol), qv, s))
+      def keyType(df: DataFrame, c: String) = df.select(col(c)).schema.head.dataType
+      val typedKey = keyType(embeddings, embId) == keyType(metadata, metaId)
       val scored = embeddings.select(
-        col(embId).cast("string").as("id"), score.as("score"))
+        col(embId).cast("string").as("id"), col(embId).as(WinnerKey), score.as("score"))
       val topK = orderedTopK(scored, cfg, k)
+      val on =
+        if (typedKey) topK(WinnerKey) === metadata(metaId)
+        else topK("id") === metadata(metaId).cast("string")
       // k rows — always broadcast-able, regardless of metadata size.
       val joined = broadcast(topK)
-        .join(metadata, topK("id") === metadata(metaId).cast("string"))
+        .join(metadata, on)
         .select(
           col("id"),
           col(cfg.titleCol).as("title"),
@@ -250,4 +261,7 @@ object VectorSearch {
       orderedTopK(joined, cfg, k)
     }
   }
+
+  /** The winners' embeddings key, in its stored type. */
+  private val WinnerKey = "__winner_key"
 }

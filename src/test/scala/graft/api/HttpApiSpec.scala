@@ -21,14 +21,15 @@ class HttpApiSpec extends SparkFunSuite {
 
   private val client = HttpClient.newHttpClient()
 
-  /** Run `f` against a live server, always shutting it down. */
+  /** Run `f` against a live server, always shutting it and its service
+    * down. */
   private def withServer(embedder: Option[Embedder] = Some(new DeterministicEmbedder(64)))(
       f: Int => Unit): Unit = {
     val service = new SearchService(spark, emb, docs, ("vec_id", "doc_id"),
       cfg, embedder, scoreScale = Some(6))
     val server = new SearchHttpServer(service, cfg)
     val port = server.start()
-    try f(port) finally server.stop()
+    try f(port) finally { server.stop(); service.close() }
   }
 
   private def get(port: Int, path: String): HttpResponse[String] =

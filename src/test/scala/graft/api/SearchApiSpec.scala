@@ -3,6 +3,7 @@ package graft.api
 import graft.SparkFunSuite
 import graft.operators.StoreConfig
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** The §2.1 validation matrix, end-to-end through SearchService. */
 class SearchApiSpec extends SparkFunSuite {
@@ -12,74 +13,92 @@ class SearchApiSpec extends SparkFunSuite {
   private val cfg = StoreConfig(idCol = "vec_id", titleCol = "source",
     vendorCol = "lang", descriptionCol = "text")
 
-  private def service(
+  /** Run `f` against a service, always closing it. */
+  private def withService(
       embedder: Option[Embedder] = None,
-      c: StoreConfig = cfg) =
-    new SearchService(spark, emb, docs, ("vec_id", "doc_id"), c, embedder)
+      c: StoreConfig = cfg)(f: SearchService => Unit): Unit = {
+    val service = new SearchService(spark, emb, docs, ("vec_id", "doc_id"), c, embedder)
+    try f(service) finally service.close()
+  }
 
   private def vec: Seq[Float] =
     emb.where(col("vec_id") === 0).select("embedding").head.getSeq[Float](0)
 
   test("400: neither embedding nor query (app.py:328-332)") {
-    val r = service().search(SearchRequest())
-    assert(r.left.exists(_.status === 400))
+    withService() { svc =>
+      assert(svc.search(SearchRequest()).left.exists(_.status === 400))
+    }
   }
 
   test("400: both embedding and query (app.py:334-338)") {
-    val r = service().search(SearchRequest(embedding = Some(vec), query = Some("x")))
-    assert(r.left.exists(_.status === 400))
+    withService() { svc =>
+      val r = svc.search(SearchRequest(embedding = Some(vec), query = Some("x")))
+      assert(r.left.exists(_.status === 400))
+    }
   }
 
   test("400: blank query string (app.py:344-345)") {
-    val r = service().search(SearchRequest(query = Some("   ")))
-    assert(r.left.exists(_.status === 400))
+    withService() { svc =>
+      assert(svc.search(SearchRequest(query = Some("   "))).left.exists(_.status === 400))
+    }
   }
 
   test("501: text query without a configured embedder (app.py:349-351)") {
-    val r = service(embedder = None).search(SearchRequest(query = Some("hello")))
-    assert(r.left.exists(_.status === 501))
+    withService(embedder = None) { svc =>
+      assert(svc.search(SearchRequest(query = Some("hello"))).left.exists(_.status === 501))
+    }
   }
 
   test("502: embedder failure (app.py:352-354)") {
     val failing = new Embedder {
       def embed(q: String) = Left("connection refused")
     }
-    val r = service(Some(failing)).search(SearchRequest(query = Some("hello")))
-    assert(r.left.exists(e => e.status === 502 && e.message.contains("connection refused")))
+    withService(Some(failing)) { svc =>
+      val r = svc.search(SearchRequest(query = Some("hello")))
+      assert(r.left.exists(e => e.status === 502 && e.message.contains("connection refused")))
+    }
   }
 
   test("400: non-positive k (app.py:368-370)") {
-    val r = service().search(SearchRequest(embedding = Some(vec), k = Some(0)))
-    assert(r.left.exists(e => e.status === 400 && e.message.contains("'k'")))
+    withService() { svc =>
+      val r = svc.search(SearchRequest(embedding = Some(vec), k = Some(0)))
+      assert(r.left.exists(e => e.status === 400 && e.message.contains("'k'")))
+    }
   }
 
   test("400: non-positive index_tree_search_top_size (app.py:373-375)") {
-    val r = service().search(SearchRequest(embedding = Some(vec),
-      indexTreeSearchTopSize = Some(-1)))
-    assert(r.left.exists(_.status === 400))
+    withService() { svc =>
+      val r = svc.search(SearchRequest(embedding = Some(vec),
+        indexTreeSearchTopSize = Some(-1)))
+      assert(r.left.exists(_.status === 400))
+    }
   }
 
   test("500: filter with index enabled (app.py:171-172 via 388-390)") {
-    val r = service(c = cfg.copy(indexEnabled = true))
-      .search(SearchRequest(embedding = Some(vec), filter = Map("lang" -> "en")))
-    assert(r.left.exists(_.status === 500))
+    withService(c = cfg.copy(indexEnabled = true)) { svc =>
+      val r = svc.search(SearchRequest(embedding = Some(vec), filter = Map("lang" -> "en")))
+      assert(r.left.exists(_.status === 500))
+    }
   }
 
   test("success shape: results/count/search_time_ms; default k = 4 (app.py:363)") {
-    val r = service().search(SearchRequest(embedding = Some(vec)))
-    assert(r.isRight)
-    val resp = r.toOption.get
-    assert(resp.count === 4 && resp.results.length === 4)
-    assert(resp.searchTimeMs > 0)
-    assert(resp.results.head.id === "0") // self match
-    assert(resp.results.head.score.exists(s => math.abs(s - 1.0) < 1e-9))
+    withService() { svc =>
+      val r = svc.search(SearchRequest(embedding = Some(vec)))
+      assert(r.isRight)
+      val resp = r.toOption.get
+      assert(resp.count === 4 && resp.results.length === 4)
+      assert(resp.searchTimeMs > 0)
+      assert(resp.results.head.id === "0") // self match
+      assert(resp.results.head.score.exists(s => math.abs(s - 1.0) < 1e-9))
+    }
   }
 
   test("text-query path end-to-end with the deterministic embedder") {
-    val r = service(Some(new DeterministicEmbedder(64)))
-      .search(SearchRequest(query = Some("fast table scan"), k = Some(3)))
-    assert(r.isRight)
-    assert(r.toOption.get.count === 3)
+    withService(Some(new DeterministicEmbedder(64))) { svc =>
+      val r = svc.search(SearchRequest(query = Some("fast table scan"), k = Some(3)))
+      assert(r.isRight)
+      assert(r.toOption.get.count === 3)
+    }
   }
 
   test("deterministic embedder: stable, normalized, dimensioned") {
@@ -93,14 +112,45 @@ class SearchApiSpec extends SparkFunSuite {
   }
 
   test("health: real constant query (app.py:89-102)") {
-    assert(service().health())
+    withService()(svc => assert(svc.health()))
   }
 
   test("config echo contains the effective settings (app.py:393-405)") {
-    val json = service().configJson()
-    assert(json.contains("\"search_strategy\": \"CosineSimilarity\""))
-    assert(json.contains("\"index_enabled\": false"))
-    assert(json.contains("\"default_k\": 4"))
+    withService() { svc =>
+      val json = svc.configJson()
+      assert(json.contains("\"search_strategy\": \"CosineSimilarity\""))
+      assert(json.contains("\"index_enabled\": false"))
+      assert(json.contains("\"default_k\": 4"))
+    }
+  }
+
+  private def cachedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+
+  test("close() drops both resident projections from Spark's cache") {
+    withService() { svc =>
+      assert(svc.search(SearchRequest(embedding = Some(vec))).isRight)
+      assert(svc.residentEmbeddings.storageLevel === StorageLevel.MEMORY_ONLY)
+      assert(svc.residentMetadata.storageLevel === StorageLevel.MEMORY_ONLY)
+      svc.close()
+      // storageLevel asks the cache manager for the projection's plan
+      assert(svc.residentEmbeddings.storageLevel === StorageLevel.NONE)
+      assert(svc.residentMetadata.storageLevel === StorageLevel.NONE)
+    }
+  }
+
+  test("a second service over the same DataFrames reuses the filled cache") {
+    val before = cachedRdds
+    withService() { a =>
+      assert(a.search(SearchRequest(embedding = Some(vec))).isRight)
+      val filled = cachedRdds
+      assert((filled -- before).nonEmpty, "the first request filled no cache")
+      withService() { b =>
+        assert(b.search(SearchRequest(embedding = Some(vec), k = Some(7))).isRight)
+        assert(b.search(SearchRequest(embedding = Some(vec),
+          filter = Map("lang" -> "en"))).isRight)
+        assert((cachedRdds -- filled).isEmpty, "the second service cached its own copy")
+      }
+    }
   }
 
   test("HttpEmbedder speaks the reference wire contract (local stub server)") {
@@ -137,6 +187,28 @@ class SearchApiSpec extends SparkFunSuite {
       assert(embed("/decoy").toOption.map(_.toSeq) === Some(Seq(0.5f, -0.25f, 0.125f)))
       assert(embed("/nested").isLeft)
       assert(embed("/strings").isLeft)
+    } finally server.stop(0)
+  }
+
+  test("HttpEmbedder: one HttpClient, so one selector thread, serves every call") {
+    def selectors = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSet
+      .filter(t => t.isAlive && t.getName.matches("HttpClient-\\d+-SelectorManager"))
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/embed", (ex: com.sun.net.httpserver.HttpExchange) => {
+      ex.getRequestBody.readAllBytes()
+      val resp = """{"Embedding": [1.0, 0.0]}""".getBytes("UTF-8")
+      ex.sendResponseHeaders(200, resp.length)
+      ex.getResponseBody.write(resp)
+      ex.close()
+    })
+    server.start()
+    try {
+      val before = selectors
+      val e = new HttpEmbedder(s"http://127.0.0.1:${server.getAddress.getPort}/embed")
+      (1 to 20).foreach(i => assert(e.embed(s"query $i").isRight, s"call $i"))
+      val started = (selectors -- before).map(_.getName)
+      assert(started.size <= 1, s"selector threads alive after 20 calls: $started")
     } finally server.stop(0)
   }
 

@@ -149,6 +149,22 @@ class EvaluationSpec extends SparkFunSuite {
     assert(viaDistributed === viaDriver)
   }
 
+  test("bradleyTerry: distributed rounds stay exact when n_ij * 1e12 passes Long.MaxValue") {
+    // 9.3e6 games between items 0 and 1 (7:3), so n_01 * BtFactor is
+    // 9.3e18 > Long.MaxValue; item 2 plays 1000 games against both.
+    val games = spark.range(9300000L).select(
+        when(col("id") % 10 < 7, 0L).otherwise(1L).as("w"),
+        when(col("id") % 10 < 7, 1L).otherwise(0L).as("l"))
+      .union(spark.range(1000L).select(lit(2L).as("w"), (col("id") % 2).as("l")))
+    def run() = Evaluation.bradleyTerry(games, "w", "l").orderBy("item").collect().toSeq
+    val viaDriver = run()
+    // a gate of 1 pair row sends the 6 pair rows to the distributed branch
+    spark.conf.set("spark.graft.bt.pairCollectGate", "1")
+    val viaDistributed = try run() finally spark.conf.unset("spark.graft.bt.pairCollectGate")
+    assert(viaDriver.map(_.getLong(2)) === Seq(9300500L, 9300500L, 1000L))
+    assert(viaDistributed === viaDriver)
+  }
+
   test("bradleyTerry: deterministic across partitionings") {
     import spark.implicits._
     val games = (0L until 200L)

@@ -65,6 +65,48 @@ class VectorSearchSpec extends SparkFunSuite {
     assert(a.map(_.toSeq).toSeq === b.map(_.toSeq).toSeq)
   }
 
+  test("resident SearchService == searchWithMetadata over the raw tables (all strategies)") {
+    import graft.api.{SearchHit, SearchRequest, SearchService}
+    // the same store with its metadata key stored as a string: the k
+    // winners then join on strings, and must still match the join
+    val docsStr = docs.withColumn("doc_id", col("doc_id").cast("string"))
+    val storeStr = emb.join(docsStr, col("vec_id") === col("doc_id"))
+    val q = qv
+    def hits(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      SearchHit(r.getString(0), r.getString(1), r.getString(2), r.getString(3),
+        if (r.isNullAt(4)) None else Some(r.getDouble(4))))
+    for (strategy <- SearchStrategy.all) {
+      val c = cfg.copy(strategy = strategy)
+      val typed = new SearchService(spark, emb, docs, ("vec_id", "doc_id"), c)
+      val strKey = new SearchService(spark, emb, docsStr, ("vec_id", "doc_id"), c)
+      try {
+        for (filter <- Seq(Map.empty[String, String], Map("lang" -> "en")); k <- Seq(1, 4, 10)) {
+          val req = SearchRequest(embedding = Some(q.toSeq), k = Some(k), filter = filter)
+          val clue = s"${strategy.name} k=$k filter=$filter"
+          val plain = hits(VectorSearch.searchWithMetadata(
+            emb, docs, ("vec_id", "doc_id"), c, q, k, filter))
+          assert(plain.length === k, clue)
+          assert(typed.search(req).map(_.results) === Right(plain), clue)
+          assert(strKey.search(req).map(_.results) ===
+            Right(hits(VectorSearch.bruteForce(storeStr, c, q, k, filter))), clue)
+        }
+      } finally { typed.close(); strKey.close() }
+    }
+  }
+
+  test("equal key types join the k winners as stored: no per-row cast(doc_id)") {
+    import graft.api.SearchService
+    val service = new SearchService(spark, emb, docs, ("vec_id", "doc_id"), cfg)
+    try {
+      for ((e, d) <- Seq((emb, docs),
+          (service.residentEmbeddings, service.residentMetadata))) {
+        val plan = VectorSearch.searchWithMetadata(e, d, ("vec_id", "doc_id"), cfg, qv, 4)
+          .queryExecution.executedPlan.toString
+        assert(!plan.contains("cast(doc_id"), plan)
+      }
+    } finally service.close()
+  }
+
   test("physical plan is TakeOrderedAndProject (no full sort/shuffle)") {
     val plan = VectorSearch.bruteForce(store, cfg, qv, 4)
       .queryExecution.executedPlan.toString
