@@ -1,5 +1,6 @@
 package graft
 
+import graft.queries.Registry
 import org.apache.spark.sql.SparkSession
 
 /**
@@ -25,41 +26,12 @@ import org.apache.spark.sql.SparkSession
  * written to `BENCH_DETAIL.json` in the working directory instead.
  */
 object Bench {
-  /** Per-query override of the 10×-step scaling bound (default 12.0):
-    * list a query here only with a documented cost class that differs
-    * from "≤ O(n log n) in data size". Batch plans are all in that
-    * class, so batch entries would declare a regression; the eight
-    * end-to-end STREAMING rows are the opposite case — their cost is
-    * dominated by scale-INVARIANT micro-batch machinery (trigger setup,
-    * state-store open/commit, no-data watermark batches), measured
-    * ratios 0.9–1.3 on the 10× step. Their bound is pinned at 3.0 so a
-    * real state-store or join-state regression (a 3–4× jump) alerts
-    * instead of hiding under the generic 12× data-scaling allowance. */
-  private val ExpectedScaling: Map[String, Double] = Seq(
-    "events_streamed_parity", "events_dedup_streamed",
-    "events_join_streamed", "events_outer_join_streamed",
-    "events_enrich_streamed", "events_sessions_streamed",
-    "events_sessions_tws", "events_upsert_streamed",
-    "events_totals_streamed", "events_update_streamed",
-    "events_warmstart_streamed", "events_mapstate_streamed")
-    .map(_ -> 3.0).toMap
-
-  /** Always-isolated watchlist, beyond the slowest-8: queries whose
-    * sweep times drifted 1.3–1.5× in the r7→r8 suite growth while
-    * their isolated times held — recording sweep AND isolated for
-    * these each round adjudicates "plan regressed" vs "shared-JVM
-    * suite got bigger" without a manual re-run. */
-  private val IsolatedWatchlist: Seq[String] = Seq(
-    "knn_graph", "sim_join_lsh", "orders_salted_join", "tpch_q1_pricing",
-    // r15 addition: sweep readings swing 3.5–5.7 s while isolated
-    // min-of-3 holds 4.3–4.8 across JVMs (SCALING.md r15 cluster
-    // note) — record both every round so the next drift self-adjudicates
-    "classifier_nb_cv",
-    // r17 addition (VERDICT r16 item 5): the streamed family drifted
-    // +20–60% driver-to-driver for two rounds with no code change;
-    // record sweep AND isolated for the two worst so the drift
-    // self-adjudicates as environment vs plan.
-    "events_mapstate_streamed", "events_join_streamed")
+  /** Per-row scaling bounds and the always-isolated watchlist, both
+    * declared on the rows ([[graft.queries.QuerySpec]]). */
+  private lazy val ExpectedScaling: Map[String, Double] =
+    Registry.all.flatMap(q => q.scalingBound.map(q.name -> _)).toMap
+  private lazy val IsolatedWatchlist: Seq[String] =
+    Registry.all.filter(_.isolate).map(_.name)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")

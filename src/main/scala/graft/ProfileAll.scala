@@ -7,7 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
 /**
  * Overhead map for the whole suite: run every `SparkEntry.queries` row
  * once cold + once measured and record, per row, where the warm wall
- * time goes — planning (analyze/optimize/plan), scheduled jobs, stages,
+ * time goes — DataFrame construction (`build_ms`, which includes any
+ * jobs the row runs while building), planning (`plan_ms`:
+ * analyze/optimize/plan), scheduled jobs, stages,
  * tasks, and the sum of task run time. On sf0.1 the data is tiny, so
  *   wall − Σtask/cores ≈ sequential overhead (stage barriers, codegen,
  *   driver planning)
@@ -41,17 +43,22 @@ object ProfileAll {
     })
 
     val w = new java.io.PrintWriter(out)
-    w.println("name\twall_s\tplan_ms\tjobs\tstages\ttasks\ttask_time_s\tovh_s")
+    w.println("name\twall_s\tbuild_ms\tplan_ms\tjobs\tstages\ttasks\ttask_time_s\tovh_s")
     for (name <- names) {
       val fn = SparkEntry.queries(name)
       try {
         // cold rep: fixture caches, codegen, scan setup
         fn(spark, dir).write.format("noop").mode("overwrite").save()
         System.gc()
-        val tPlan0 = System.nanoTime()
+        // build: DataFrame construction, including any Spark jobs the
+        // row runs while building; plan: analysis/optimization/planning
+        val tBuild0 = System.nanoTime()
         val df = fn(spark, dir)
-        df.queryExecution.executedPlan // force analysis/optimization/planning
-        val planMs = (System.nanoTime() - tPlan0) / 1e6
+        val tPlan0 = System.nanoTime()
+        df.queryExecution.executedPlan
+        val tPlan1 = System.nanoTime()
+        val buildMs = (tPlan0 - tBuild0) / 1e6
+        val planMs = (tPlan1 - tPlan0) / 1e6
         Thread.sleep(150) // drain listener events from the cold rep
         jobs.set(0); stages.set(0); tasks.set(0); taskTimeMs.set(0)
         val t0 = System.nanoTime()
@@ -60,7 +67,7 @@ object ProfileAll {
         Thread.sleep(150) // let queued listener events land
         val tt = taskTimeMs.get / 1e3
         val ovh = wall - tt / cpus.toDouble
-        val line = f"$name\t$wall%.3f\t$planMs%.1f\t${jobs.get}\t${stages.get}\t${tasks.get}\t$tt%.2f\t$ovh%.3f"
+        val line = f"$name\t$wall%.3f\t$buildMs%.1f\t$planMs%.1f\t${jobs.get}\t${stages.get}\t${tasks.get}\t$tt%.2f\t$ovh%.3f"
         w.println(line); w.flush()
         System.err.println(s"[profile] $line")
       } catch {

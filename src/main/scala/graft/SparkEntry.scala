@@ -1,16502 +1,26 @@
 package graft
 
-import graft.api._
-import graft.functions.GraftFunctions
-import graft.operators._
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import graft.operators.SearchStrategy
+import graft.queries.Registry
+import graft.queries.Shared.knn
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /**
- * Driver contract — one `queries` entry per implemented operator
- * (SURVEY.md §2 + the beyond-reference LLM-pipeline operators), each
- * with an ANSI-SQL DuckDB oracle in [[oracleSql]] where expressible.
- *
- * Determinism rules shared by every query/oracle pair:
- *  - scores are rounded to 6 decimals on BOTH sides before ordering,
- *  - every ordering has a total tie-break (id, or the full key),
- *  - aggregates over floats are avoided or exact (integer sums, one
- *    final division), so partition order cannot change results.
- *
- * Store mapping for the vector queries: `embeddings ⋈ documents` on
- * vec_id = doc_id, with id=vec_id, title=source, vendor=lang,
- * description=text — the reference's 4 string columns + embedding
- * (reference: /root/reference/app.py:40-51).
+ * Driver contract: every [[graft.queries.Registry]] row as a Spark
+ * query in [[queries]] and its DuckDB oracle in [[oracleSql]], keyed by
+ * row name. The rows, each next to its oracle, live in the family files
+ * under `graft/queries/`.
  */
 object SparkEntry {
-
-  private val Scale = 6
-
-  /** The 3-query retrieval batch shared by retrieval_bm25_batch /
-    * retrieval_mrr / retrieval_map — ONE source of truth so the three
-    * rows (and their oracles' VALUES lists) can never score different
-    * query sets. */
-  private val RetrBatch: Seq[(Long, Seq[String])] = Seq(
-    1L -> Seq("dup", "hash", "merge"),
-    2L -> Seq("vector", "spark", "window"),
-    3L -> Seq("dup", "slow"))
-
-  /** All-terms-present relevance judge over the `text` column. */
-  private def allTermsRel(ts: Seq[String]): Column = {
-    val toks = split(col("text"), " ")
-    ts.map(t => array_contains(toks, t)).reduce(_ && _)
-  }
-
-  /** Per-row judge for a batched ranking joined back to `text`:
-    * dispatches [[allTermsRel]] on `query_id`. */
-  private def batchRelExpr: Column =
-    RetrBatch.foldRight(lit(false)) { case ((qid, ts), acc) =>
-      when(col("query_id") === qid, allTermsRel(ts)).otherwise(acc)
-    }
-
-  /** Synthetic PQ codebook shared by ann_ivfpq_topk / ann_ivfpq_delete
-    * (m=8, k=4, dsub=8); both oracles hard-code the same
-    * (c − 1.5) + t·0.01 centroid formula — change all four together. */
-  private lazy val ivfPqModel: PqIndex.PqModel = {
-    val m = 8; val k = 4; val dsub = 8
-    val cb: Array[Float] = Array.tabulate(m * k * dsub) { idx =>
-      val t = idx % dsub
-      val c = (idx / dsub) % k
-      ((c - 1.5) + t * 0.01).toFloat
-    }
-    PqIndex.PqModel(m, k, 64, cb)
-  }
-
-  /** The HLL small-range (linear-counting) table as a SQL list
-    * literal — the SAME precomputed integers the rewrite plan embeds
-    * ([[graft.operators.HyperLogLog.LinearCountingTable]]), so the
-    * correction is cross-engine bit-exact with no query-time `ln`. */
-  private lazy val HllLcList: String =
-    graft.operators.HyperLogLog.LinearCountingTable.mkString(", ")
-
-  /** Render a Scala string as a DuckDB expression, ASCII runs as
-    * plain literals and everything else as chr(codepoint) — the
-    * text_normalize oracle's technique, generalized, so planted
-    * non-ASCII fixtures keep ONE source of truth and the SQL dump
-    * stays pure ASCII. */
-  private def sqlChrLit(s: String): String = {
-    if (s.isEmpty) return "''"
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val run = new StringBuilder
-    def flush(): Unit = if (run.nonEmpty) {
-      parts += "'" + run.result().replace("'", "''") + "'"
-      run.clear()
-    }
-    s.foreach { ch =>
-      if (ch >= 0x20 && ch < 0x7f) run += ch
-      else { flush(); parts += s"chr(${ch.toInt})" }
-    }
-    flush()
-    parts.mkString(" || ")
-  }
-
-  /** Planted mojibake variants (single source of truth for the
-    * text_mojibake row AND its oracle SQL): Latin-1 misdecodes of
-    * "café déjà", curly-quote/em-dash punctuation, "naïve über", and
-    * a decoy lead (Ã before ASCII) that must NOT flag. */
-  private val MojiAccents = " caf\u00C3\u00A9 d\u00C3\u00A9j\u00C3\u00A0"
-  private val MojiPunct =
-    " \u00E2\u0080\u009Cq\u00E2\u0080\u009D em\u00E2\u0080\u0094dash"
-  private val MojiUmlaut = " na\u00C3\u00AFve \u00C3\u00BCber"
-  private val MojiDecoy = " \u00C3 x"
-
-  private val cfg = StoreConfig(
-    idCol = "vec_id", titleCol = "source", vendorCol = "lang",
-    descriptionCol = "text", embeddingCol = "embedding")
-
-  private def table(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // events.parquet carries TIMESTAMP(NANOS), which the Parquet reader
-    // rejects by default; read as long and normalize downstream
-    // (EventPipeline converts ns → TimestampType).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
-  }
-
-  /** Offline fixtures (index fits, written stores, tokenizer models):
-    * built at most once per (name, sf dir) and reused by every later
-    * rep; a build that throws is not kept, so the next call retries.
-    * The build runs outside `computeIfAbsent`, in the holder's lazy
-    * val, because fixtures nest (nswDisk → nswGraph, fkStore →
-    * constraintStore) and a nested computeIfAbsent on one map throws. */
-  private[graft] final class Once[T](build: => T) { lazy val value: T = build }
-  private[graft] val fixtures =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Once[Any]]()
-  private[graft] def memo[T](name: String, dir: String)(build: => T): T =
-    fixtures.computeIfAbsent((name, dir), _ => new Once[Any](build))
-      .value.asInstanceOf[T]
-
-  /** Fixed deterministic query vector: row vec_id=0's own embedding —
-    * self-match at rank 1 is a free sanity check. Memoized per dir: it
-    * is a fixed query parameter, not part of the measured work. */
-  private def queryVec(s: SparkSession, d: String): Array[Float] =
-    memo("query_vec", d)(table(s, d, "embeddings").where(col("vec_id") === 0)
-      .select("embedding").head().getSeq[Float](0).toArray)
-
-  /** Trained quality-classifier model per dir — model FIT is an
-    * offline step like the IVF index build (the three consumer rows
-    * score/calibrate/noise-audit the SAME model, and refitting per
-    * query triples the descent's collect-boundary jobs). */
-  private def clsModel(s: SparkSession, d: String): QualityClassifier.Model =
-    memo("quality_cls", d)(
-      QualityClassifier.fit(table(s, d, "documents"), "doc_id", "text"))
-
-  /** The blocklist automaton, built, broadcast and registered ONCE per
-    * JVM (its patterns are fixed, so the key is not per dir): bench
-    * reps and verify would otherwise mint a new never-destroyed
-    * broadcast per invocation. */
-  private def blocklistTag(s: SparkSession): String =
-    memo("ac_blocklist", "") {
-      val patterns = Seq("dup", "hash", "scan", "slow scan", "table value")
-      graft.functions.AcRegistry.register(s.sparkContext.broadcast(
-        graft.functions.AhoCorasick.build(patterns)))
-    }
-
-  private def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
-
-  /** IVF index per dir over `embeddings ⋈ documents` — index build is
-    * an offline step (the reference's kmeans-tree index pre-exists at
-    * query time; building it per query would charge index construction
-    * to every search). ONE fit serves the in-memory rows, the
-    * partitioned on-disk store and the streamed store's centroids. */
-  private def ivfStore(s: SparkSession, d: String): (DataFrame, IvfIndex.IvfModel) =
-    memo("ivf", d) {
-      val store = table(s, d, "embeddings")
-        .join(table(s, d, "documents"), col("vec_id") === col("doc_id"))
-      val (a, m) = IvfIndex.build(store, "embedding", numClusters = 8)
-      (a.cache(), m)
-    }
-
-  /** [[ivfStore]] written partitionBy(cluster_id). */
-  private def ivfDiskStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
-    memo("ivf_disk", d) {
-      val (a, m) = ivfStore(s, d)
-      val p = tempDir("graft_ivf_store")
-      IvfIndex.writePartitioned(a, p)
-      (p, m)
-    }
-
-  /** IVF store built (and written partitioned) from vec_id < 400 only;
-    * the vec_id >= 400 batch assigned to the FROZEN centroids and
-    * appended. Shared by the append and delete rows: tombstones are
-    * anti-joined at query time, never written to the store. */
-  private def ivfAppendStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
-    memo("ivf_append", d) {
-      val store = table(s, d, "embeddings")
-        .join(table(s, d, "documents"), col("vec_id") === col("doc_id"))
-      val (a, m) = IvfIndex.build(store.filter(col("vec_id") < 400),
-        "embedding", numClusters = 8)
-      val p = tempDir("graft_ivf_append")
-      IvfIndex.writePartitioned(a, p)
-      IvfIndex.appendPartitioned(
-        IvfIndex.assignBatch(store.filter(col("vec_id") >= 400), "embedding", m), p)
-      (p, m)
-    }
-
-  /** Embeddings streamed through VectorIngest against [[ivfStore]]'s
-    * frozen centroids into a partitioned parquet sink. */
-  private def ivfStreamStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
-    memo("ivf_stream", d) {
-      val m = ivfStore(s, d)._2
-      val src = tempDir("graft_ivf_stream_src")
-      table(s, d, "embeddings").repartition(3)
-        .write.mode("overwrite").parquet(src)
-      val p = tempDir("graft_ivf_stream_store")
-      graft.streaming.VectorIngest.ingestPartitioned(s, src,
-        s"$d/documents.parquet", "vec_id", "doc_id", "embedding", m, p)
-      (p, m)
-    }
-
-  /** IVF over the bare embeddings table, written partitioned — the
-    * store the SQL rewrite row registers. */
-  private def ivfEmbStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
-    memo("ivf_emb", d) {
-      val (a, m) = IvfIndex.build(table(s, d, "embeddings"), "embedding", numClusters = 8)
-      val p = tempDir("graft_ivf_emb")
-      IvfIndex.writePartitioned(a, p)
-      (p, m)
-    }
-
-  /** Multi-vector store: doc token vectors (8 per doc) IVF-assigned and
-    * written partitionBy(cluster_id). */
-  private def maxsimIvfStore(s: SparkSession, d: String): (String, IvfIndex.IvfModel) =
-    memo("maxsim_ivf", d) {
-      val dt = table(s, d, "embeddings")
-        .select(expr("vec_id div 8").as("doc_id"),
-          col("vec_id").as("dtok"), col("embedding"))
-      val (a, m) = IvfIndex.build(dt, "embedding", numClusters = 8)
-      val p = tempDir("graft_maxsim_ivf")
-      IvfIndex.writePartitioned(a, p)
-      (p, m)
-    }
-
-  /** Clean-store sink of the streamed dedup gate: docs ≥ 250 stream in
-    * against the static corpus of docs < 250. */
-  private def dedupStreamStore(s: SparkSession, d: String): String =
-    memo("dedup_stream", d) {
-      val docs = table(s, d, "documents")
-      val src = tempDir("graft_dedup_stream_src")
-      docs.filter(col("doc_id") >= 250).repartition(3)
-        .write.mode("overwrite").parquet(src)
-      val corpus = tempDir("graft_dedup_stream_corpus")
-      docs.filter(col("doc_id") < 250)
-        .write.mode("overwrite").parquet(corpus)
-      val p = tempDir("graft_dedup_stream_store")
-      graft.streaming.CorpusIngest.ingestNovel(s, src, corpus, "text", p)
-      p
-    }
-
-  /** Fitted PCA model per sf dir — like the IVF fit, the pre-existing
-    * index build, not part of each search. */
-  private def pcaModel(s: SparkSession, d: String): Pca.PcaModel =
-    memo("pca", d)(Pca.fit(table(s, d, "embeddings"), "embedding", d = 32))
-
-  /** Fitted SQ8 grid per sf dir — 2·dim doubles, an offline fit. */
-  private def sqModel(s: SparkSession, d: String): SqAnn.SqModel =
-    memo("sq8", d)(SqAnn.fit(table(s, d, "embeddings"), "embedding"))
-
-  /** NSW graph per sf dir — the adjacency build (banded-LSH k-NN graph
-    * + entry-point sample) is the offline index step; the adjacency is
-    * persisted so each search hop probes memory, the stand-in for the
-    * id-bucketed adjacency table a deployment would keep on disk. */
-  private def nswGraph(s: SparkSession, d: String): NswAnn.Graph =
-    memo("nsw", d) {
-      val g = NswAnn.build(table(s, d, "embeddings"), "vec_id",
-        "embedding", degree = 16, entries = 8)
-      g.adj.persist().count()
-      g
-    }
-  /** NSW build-then-append graph per sf dir (the lifecycle row): base
-    * graph over vec_id < 400, the rest batch-appended — a one-time
-    * offline artifact like the IVF append store. */
-  private def nswAppendGraph(s: SparkSession, d: String): NswAnn.Graph =
-    memo("nsw_append", d) {
-      val emb = table(s, d, "embeddings")
-      val base = emb.filter(col("vec_id") < 400)
-      val fresh = emb.filter(col("vec_id") >= 400)
-      val g0 = NswAnn.build(base, "vec_id", "embedding",
-        degree = 16, entries = 8)
-      val g1 = NswAnn.append(g0, base, fresh, "vec_id", "embedding",
-        degree = 16, entries = 8)
-      val pinned = g1.copy(adj = g1.adj.persist())
-      pinned.adj.count()
-      pinned
-    }
-  /** NSW at-scale layout per sf dir: adjacency + store written as
-    * id-bucketed catalog tables (BucketedStore), so the beam's per-hop
-    * id-equality probes are bucket-pruned point lookups instead of
-    * full scans — the layout NswAnn.Graph's scaladoc promises. The
-    * bucketed write is a one-time offline artifact (the IVF-store
-    * pattern); the row measures query cost. */
-  private def nswDisk(s: SparkSession, d: String): (String, String, Seq[Long]) =
-    memo("nsw_disk", d) {
-      val suffix = math.abs(d.hashCode).toString
-      val adjTbl = s"graft_nsw_adj_$suffix"
-      val embTbl = s"graft_nsw_emb_$suffix"
-      val g = nswGraph(s, d)
-      BucketedStore.writeBucketed(g.adj, adjTbl, "id", 8)
-      BucketedStore.writeBucketed(table(s, d, "embeddings"), embTbl,
-        "vec_id", 8)
-      (adjTbl, embTbl, g.entryIds)
-    }
-  /** Bucketed catalog tables per sf dir (lineitem, orders by orderkey)
-    * — the bucketed layout is a one-time write, not part of each query. */
-  private def bucketedStore(s: SparkSession, d: String): (String, String) =
-    memo("bucketed", d) {
-      val suffix = math.abs(d.hashCode).toString
-      val li = s"graft_li_bkt_$suffix"
-      val ord = s"graft_ord_bkt_$suffix"
-      BucketedStore.writeBucketed(table(s, d, "lineitem"), li, "l_orderkey", 8)
-      BucketedStore.writeBucketed(table(s, d, "orders"), ord, "o_orderkey", 8)
-      (li, ord)
-    }
-  /** Wire-format blob store per sf dir — one-time offline dump, written
-    * distributed: each of the 4 partitions writes its own blob file
-    * executor-side — the same shape a 100 TB export takes (no driver
-    * collect anywhere in the dump). */
-  private def blobStore(s: SparkSession, d: String): String =
-    memo("blob_store", d) {
-      val p = tempDir("graft_blob_store")
-      graft.sources.VectorBlobSource.writeDistributed(
-        table(s, d, "embeddings").select("vec_id", "embedding")
-          .repartition(4, col("vec_id")), p)
-      p
-    }
-  /** Trained BPE merge list per sf dir — the tokenizer fit is a
-    * one-time offline pass (one word-count aggregate + a driver loop
-    * over ≤ Bpe.TopWords rows), shared by the fit/vocab/tokenize rows. */
-  private def bpeMerges(s: SparkSession, d: String): Seq[Bpe.Merge] =
-    memo("bpe", d)(Bpe.train(table(s, d, "documents"), "text"))
-
-  /** Trained WordPiece model per sf dir — same one-time-fit sharing as
-    * [[bpeMerges]]. */
-  private def wordpieceModel(s: SparkSession, d: String): WordPiece.Model =
-    memo("wordpiece", d)(WordPiece.train(table(s, d, "documents"), "text"))
-
-  /** Fitted unigram-LM vocabulary per sf dir — same one-time-fit
-    * sharing as [[bpeMerges]]/[[wordpieceModel]] (the r16 verdict
-    * flagged the inconsistency: tokenizer_compare offline-cached the
-    * BPE and WordPiece fits but re-ran the unigram fit per rep). The
-    * fit is materialized (fitVocab localCheckpoints its count
-    * relation), so the memoized handle is a vocabulary-sized RDD, not
-    * a lazy corpus plan. The unigram_vocab/segment/refit rows keep
-    * calling fitVocab directly — the fit itself stays a measured
-    * query. */
-  private def ugVocab(s: SparkSession, d: String): DataFrame =
-    memo("ug_vocab", d)(UnigramLm.fitVocab(table(s, d, "documents"), "text"))
-
-  /** Trained exact-k-means model per sf dir — the fit is a one-time
-    * offline pass (Iters distributed rounds, k·dim-long driver
-    * state), shared by the fit/assign rows. */
-  private def kmeansModel(s: SparkSession, d: String): KMeansExact.Model =
-    memo("kmeans", d)(
-      KMeansExact.fit(table(s, d, "embeddings"), "vec_id", "embedding"))
-
-  /** Naive-Bayes split + vocab knobs: train on doc_id % 5 ≠ 0, score
-    * the held-out fifth; fixed top-512 vocabulary keeps the model at
-    * |classes|·512 rows — broadcastable at any corpus size. */
-  private val NbVocab = 512
-  private def nbTrain(s: SparkSession, d: String): DataFrame =
-    table(s, d, "documents").filter(col("doc_id") % 5 =!= 0)
-  private def nbTest(s: SparkSession, d: String): DataFrame =
-    table(s, d, "documents").filter(col("doc_id") % 5 === 0)
-
-  /** Five CV fold models per sf dir — the explicit r15-adjudication
-    * decision (SCALING.md): fitting is the OFFLINE step (the
-    * kmeansModel/dbscanLabels convention), so the CV row measures 5×
-    * held-out PREDICT, not 5× refit — which is also the honest 100 TB
-    * shape, where fold models are trained once and reused across every
-    * eval query. Each fold's likelihood/prior tables are bounded
-    * (|classes|·512 + |classes| rows) and materialized eagerly so no
-    * fold re-derives its fit lineage at query time. */
-  private def nbCvModels(s: SparkSession, d: String): Seq[(DataFrame, DataFrame)] =
-    memo("nb_cv", d) {
-      val docs = table(s, d, "documents")
-      (0 until 5).map { f =>
-        val tr = docs.filter(col("doc_id") % 5 =!= f)
-        (NaiveBayes.fit(tr, "lang", "text", NbVocab)
-           .localCheckpoint(eager = true),
-         NaiveBayes.priors(tr, "lang", "text")
-           .localCheckpoint(eager = true))
-      }
-    }
-
-  /** JSONL fixture: documents rendered as a drifting JSON-lines dump —
-    * "n" flips number→string on doc_id % 11, tags/meta appear on % 7,
-    * a null field on % 13, and % 31 lines are TRUNCATED mid-string
-    * (the partial-write failure mode). Pure string concat, so the
-    * oracle rebuilds byte-identical lines. */
-  private def jsonlFixture(s: SparkSession, d: String): DataFrame =
-    table(s, d, "documents").select(
-      when(col("doc_id") % 31 === 0,
-        concat(lit("{\"id\": "), col("doc_id"),
-          lit(", \"lang\": \""), col("lang")))
-        .otherwise(concat(
-          lit("{\"id\": "), col("doc_id"),
-          lit(", \"lang\": \""), col("lang"), lit("\""),
-          when(col("doc_id") % 11 === 0,
-            concat(lit(", \"n\": \""), col("n_chars"), lit("\"")))
-            .otherwise(concat(lit(", \"n\": "), col("n_chars"))),
-          when(col("doc_id") % 7 === 0,
-            concat(lit(", \"tags\": [\"a\", \"b\"], \"meta\": {\"src\": \""),
-              col("source"), lit("\"}")))
-            .otherwise(lit("")),
-          lit(", \"ok\": "),
-          when(col("doc_id") % 2 === 0, lit("true")).otherwise(lit("false")),
-          when(col("doc_id") % 13 === 0, lit(", \"note\": null"))
-            .otherwise(lit("")),
-          lit("}"))).as("line"))
-
-  /** DBSCAN knobs for the embedding 2-D projection: ε = 0.02 in µ
-    * units sits just under the fixture's percolation threshold, so
-    * the run exercises all three roles (sf0.01: 351 core / 38 border
-    * / 111 noise across 24 clusters). The clustering itself is a
-    * one-time OFFLINE artifact per sf dir (the [[kmeansModel]] / IVF
-    * pattern: the connected-components rounds are the fit, the rows
-    * query its result), checkpointed so both driver rows read the
-    * same materialized labels. */
-  private val DbscanEps = 20000L
-  private val DbscanMinPts = 3
-  private def dbscanLabels(s: SparkSession, d: String): DataFrame =
-    memo("dbscan", d)(
-      DensityCluster.dbscan(
-        table(s, d, "embeddings").select(
-          col("vec_id").as("id"),
-          floor(element_at(col("embedding"), 1).cast("double") * lit(1000000.0)
-            + lit(0.5)).cast("long").as("x"),
-          floor(element_at(col("embedding"), 2).cast("double") * lit(1000000.0)
-            + lit(0.5)).cast("long").as("y")),
-        "id", "x", "y", epsMicro = DbscanEps, minPts = DbscanMinPts)
-        .localCheckpoint(true))
-
-  /** Entity-resolution fixture: each document's 24-char title plus a
-    * corrupted copy (the char after position 4 + doc_id % 16 deleted,
-    * id offset by 1,000,000) — the linkage the fuzzy join must
-    * rediscover. Derivation is pure column arithmetic so the DuckDB
-    * oracle rebuilds the identical relation. */
-  private def erRecords(s: SparkSession, d: String): DataFrame = {
-    val base = table(s, d, "documents")
-      .filter(length(col("text")) >= 24)
-      .select(col("doc_id").cast("long").as("id"),
-        substring(col("text"), 1, 24).as("name"))
-    val pos = (col("id") % 16 + lit(4)).cast("int")
-    val corrupted = base.select(
-      (col("id") + 1000000L).as("id"),
-      concat(col("name").substr(lit(1), pos),
-        col("name").substr(pos + lit(2), lit(24))).as("name"))
-    base.unionByName(corrupted)
-  }
-
-  /** Fellegi–Sunter model per sf dir: the ≤8-row pattern relation is
-    * the only distributed pass; the EM fit runs on the driver over
-    * those collected rows ([[EntityResolution.fsFit]]'s integral-state
-    * discipline). */
-  private def fsModel(s: SparkSession, d: String): EntityResolution.FsFit =
-    memo("fs_model", d) {
-      val rows = EntityResolution
-        .comparisonPatterns(erRecords(s, d), "id", "name",
-          blockKeyLen = 8, maxBucket = Some(1024))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-        .toSeq
-      EntityResolution.fsFit(rows)
-    }
-
-  /** Materialized ER records store per sf dir (the registered relation
-    * the fuzzy-join SQL rewrite fires on) — a one-time offline write,
-    * like the blob/bucketed stores. */
-  private def erStore(s: SparkSession, d: String): String =
-    memo("er_store", d) {
-      val path = tempDir("graft_er_store")
-      erRecords(s, d).write.mode("overwrite").parquet(path)
-      path
-    }
-
-  /** Shared fixture for the SCD2 rows: per-customer order-count tier
-    * at three cut dates, collapsed into validity intervals. */
-  private def scd2TierHistory(s: SparkSession, d: String): DataFrame = {
-    val cuts = Seq("1997-01-01", "1999-01-01", "2001-01-01")
-    val nCols = cuts.zipWithIndex.map { case (c, i) =>
-      sum(when(col("o_orderdate") < lit(c).cast("timestamp"), 1L)
-        .otherwise(0L)).as(s"n$i")
-    }
-    val counts = table(s, d, "orders")
-      .groupBy("o_custkey").agg(nCols.head, nCols.tail: _*)
-    val versioned = counts
-      .select(col("o_custkey"), explode(array(cuts.indices.map(i =>
-        struct(lit(i + 1L).as("version"), col(s"n$i").as("n"))): _*)).as("v"))
-      .filter(col("v.n") > 0)
-      .select(col("o_custkey"), col("v.version").as("version"),
-        when(col("v.n") >= 8, "high").when(col("v.n") >= 4, "mid")
-          .otherwise("low").as("tier"))
-    Snapshot.scd2(versioned, "o_custkey", "version", Seq("tier"))
-  }
-
-  /** Dedicated documents copy for the HLL rewrite row, so the
-    * HllCatalog registration never touches the shared parquet path. */
-  private def hllStore(s: SparkSession, d: String): String =
-    memo("hll_store", d) {
-      val path = tempDir("graft_hll_store")
-      table(s, d, "documents").select("doc_id", "source", "text")
-        .write.mode("overwrite").parquet(path)
-      path
-    }
-
-  /** Dedicated multi-file documents copy for the footer-count rewrite
-    * row — registration scoped to the copy, and 4 files so the
-    * distributed footer fan-out is real. */
-  private def footerCountStore(s: SparkSession, d: String): String =
-    memo("footer_count", d) {
-      val path = tempDir("graft_fc_store")
-      table(s, d, "documents").repartition(4)
-        .write.mode("overwrite").parquet(path)
-      path
-    }
-
-  /** Dedicated events copy (TIMESTAMP_MICROS so footer stats carry a
-    * verifiable unit) for the freshness-card rewrite row. */
-  private def footerEventsStore(s: SparkSession, d: String): String =
-    memo("footer_events", d) {
-      val prev = s.conf.getOption("spark.sql.parquet.outputTimestampType")
-      s.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      try {
-        val path = tempDir("graft_fce_store")
-        graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-          .select("event_id", "user_id", "ts")
-          .repartition(4).write.mode("overwrite").parquet(path)
-        path
-      } finally prev match {
-        case Some(v) =>
-          s.conf.set("spark.sql.parquet.outputTimestampType", v)
-        case None =>
-          s.conf.unset("spark.sql.parquet.outputTimestampType")
-      }
-    }
-
-  /** Registered catalog table + materialized rollup per sf dir for the
-    * rollup-rewrite row — both one-time offline writes (the summary
-    * build is the single full scan every later rollup query
-    * amortizes). A dedicated table copy keeps the registration scoped
-    * to this row: other driver rows over documents.parquet keep their
-    * own plans. */
-  private def rollupStore(s: SparkSession, d: String)
-      : (String, graft.plans.RollupCatalog.Params) =
-    memo("rollup", d) {
-      val base = tempDir("graft_rollup_base")
-      table(s, d, "documents")
-        .select("doc_id", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(base)
-      val summary = tempDir("graft_rollup_sum")
-      (base, graft.plans.RollupCatalog.buildSummary(
-        s, base, summary, Seq("lang", "source"), Seq("n_chars")))
-    }
-
-  /** Dedicated table copies for the constraint rewrites — the rollup
-    * row's scoping discipline: uniqueness is registered on COPIES so
-    * no other query's plan can be affected by the catalog entry.
-    * One-time offline writes per sf dir. */
-  private def constraintStore(s: SparkSession, d: String): (String, String) =
-    memo("constraint", d) {
-      val docs = tempDir("graft_uniq_docs")
-      table(s, d, "documents").select("doc_id", "lang", "source", "n_chars")
-        .write.mode("overwrite").parquet(docs)
-      val dim = tempDir("graft_uniq_part")
-      table(s, d, "part").select("p_partkey", "p_brand", "p_size")
-        .write.mode("overwrite").parquet(dim)
-      graft.plans.ConstraintCatalog.registerUnique(docs, Seq("doc_id"))
-      graft.plans.ConstraintCatalog.registerUnique(dim, Seq("p_partkey"))
-      (docs, dim)
-    }
-
-  /** Dedicated lineitem copy with a VERIFIED foreign key onto the
-    * constraint dim copy (l_partkey ⊆ p_partkey, no NULLs — the
-    * profile_ri facts), for the inner-join elimination row. */
-  private def fkStore(s: SparkSession, d: String): String =
-    memo("fk_store", d) {
-      val (_, dim) = constraintStore(s, d)
-      val facts = tempDir("graft_fk_lineitem")
-      table(s, d, "lineitem")
-        .select("l_orderkey", "l_partkey", "l_quantity", "l_returnflag")
-        .write.mode("overwrite").parquet(facts)
-      graft.plans.ConstraintCatalog.registerForeignKey(
-        facts, "l_partkey", dim, "p_partkey")
-      facts
-    }
-
-  /** Hourly event rollup per sf dir — the time-grain twin of
-    * [[rollupStore]]: the registered table is the normalized event
-    * stream with exact integer cents, the summary is keyed by
-    * (event_type, hour grain). One-time offline writes. */
-  private def rollupTimeStore(s: SparkSession, d: String)
-      : (String, graft.plans.RollupCatalog.Params) =
-    memo("rollup_time", d) {
-      val base = tempDir("graft_rolltime_base")
-      graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-        .select(col("event_id"), col("ts"), col("event_type"),
-          round(col("value") * 100).cast("long").as("cents"))
-        .write.mode("overwrite").parquet(base)
-      val summary = tempDir("graft_rolltime_sum")
-      (base, graft.plans.RollupCatalog.buildSummary(
-        s, base, summary, Seq("event_type"), Seq("cents"),
-        timeGrain = Some(("ts", "HOUR", "grain_hour"))))
-    }
-
-  private def knn(strategy: SearchStrategy, k: Int,
-      filter: Map[String, String] = Map.empty)(
-      spark: SparkSession, dir: String): DataFrame =
-    VectorSearch.searchWithMetadata(
-      table(spark, dir, "embeddings"), table(spark, dir, "documents"),
-      ("vec_id", "doc_id"), cfg.copy(strategy = strategy),
-      queryVec(spark, dir), k, filter, Some(Scale))
-
-  // ------------------------------------------------------------- flagship
 
   /** Flagship: cosine top-4 (the reference's defaults) on sf0.001. */
   def entry(spark: SparkSession): DataFrame =
     knn(SearchStrategy.CosineSimilarity, 4)(spark, "/root/testdata/sf0.001")
 
-  // -------------------------------------------------------------- queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    Registry.all.map(q => q.name -> q.build).toMap
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    // R1+R4+R5+R6+R7+R8 — the reference's one query template, 5 strategies.
-    "knn_topk_cosine" -> ((s, d) => knn(SearchStrategy.CosineSimilarity, 4)(s, d)),
-    "knn_topk_inner_product" -> ((s, d) => knn(SearchStrategy.InnerProductSimilarity, 4)(s, d)),
-    "knn_topk_cosine_distance" -> ((s, d) => knn(SearchStrategy.CosineDistance, 4)(s, d)),
-    "knn_topk_euclidean" -> ((s, d) => knn(SearchStrategy.EuclideanDistance, 4)(s, d)),
-    "knn_topk_manhattan" -> ((s, d) => knn(SearchStrategy.ManhattanDistance, 4)(s, d)),
-    // R3 — conjunctive equality filter (on the vendor/lang column).
-    "knn_topk_filtered" -> ((s, d) =>
-      knn(SearchStrategy.CosineSimilarity, 8, Map("lang" -> "en"))(s, d)),
-    // V6+V7 — binary codec round-trip, exploded to scalar (id, idx, val)
-    // rows: the driver's comparator hashes scalar cells, not arrays.
-    // Exact float equality is the point — encode→decode must be lossless.
-    "codec_roundtrip" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "embeddings").select(
-        col("vec_id").as("id"),
-        posexplode(GraftFunctions.fromBinaryVector(
-          GraftFunctions.toBinaryVector(col("embedding")))))
-        .select(col("id"), col("pos").cast("long").as("idx"), col("col").as("val"))
-        .orderBy("id", "idx")
-    }),
-    // V6 + R4 — distance over a binary-encoded store column.
-    "binary_store_topk" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val emb = table(s, d, "embeddings")
-        .select(col("vec_id"), GraftFunctions.toBinaryVector(col("embedding")).as("embedding"))
-      VectorSearch.searchWithMetadata(
-        emb, table(s, d, "documents"), ("vec_id", "doc_id"), cfg,
-        queryVec(s, d), 6, Map.empty, Some(Scale))
-    }),
-    // Custom DataSource V2 connector: the store dumped in the
-    // reference's NATIVE wire format (int64 id + length-prefixed Knn
-    // binary payloads, app.py:157-162) reads back as a Spark table
-    // with file-level partitioning and column pruning — then the
-    // standard top-k pipeline runs on it unchanged. Oracle = the same
-    // parquet-derived top-k, proving the connector is lossless.
-    "blob_source_topk" -> ((s, d) => {
-      val emb = s.read.format("graft-vectors").load(blobStore(s, d))
-      VectorSearch.searchWithMetadata(
-        emb, table(s, d, "documents"), ("vec_id", "doc_id"), cfg,
-        queryVec(s, d), 5, Map.empty, Some(Scale))
-    }),
-    // Binary-quantization ANN: sign-bit sketches (8 B/row) → Hamming
-    // top-64 pre-filter → exact cosine re-rank of the candidates. The
-    // oracle replicates the same sketch semantics in SQL (sign
-    // comparisons instead of packed xor+popcount), so the match is exact
-    // whatever the sketch recall; recall itself is pinned in ScalaTest.
-    "ann_bitsketch_topk" -> ((s, d) =>
-      BitSketchAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        queryVec(s, d), k = 8, candidates = 64, scale = Scale)),
-    // NSW graph ANN (the graph-index family, batch-native): beam
-    // search over the symmetrized banded-LSH k-NN graph, one whole hop
-    // per Spark job, exact rounded-cosine scoring of every visited id.
-    // (degree=16, entries=8, beam=64) is a measured full-recall point
-    // (grid in NswAnnSpec), so the output IS brute force = the oracle;
-    // recall itself is pinned in ScalaTest.
-    "ann_nsw_topk" -> ((s, d) =>
-      NswAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        nswGraph(s, d), queryVec(s, d), k = 10, beam = 64,
-        maxIters = 12, scale = Scale)),
-    // NSW over the AT-SCALE layout: adjacency and store live as
-    // id-bucketed catalog tables (the layout the Graph scaladoc
-    // promises), so every per-hop probe bucket-prunes to point lookups
-    // (plan-asserted in NswAnnSpec). Same shipped full-recall point →
-    // same brute-force oracle.
-    "ann_nsw_disk" -> ((s, d) => {
-      val (adjTbl, embTbl, entries) = nswDisk(s, d)
-      NswAnn.topK(s.table(embTbl), "vec_id", "embedding",
-        NswAnn.Graph(s.table(adjTbl), entries), queryVec(s, d), k = 10,
-        beam = 64, maxIters = 12, scale = Scale)
-    }),
-    // NSW lifecycle: base graph on vec_id < 400, the rest appended in
-    // one batch (bidirectional links to knn over the union, entries
-    // re-ranked) — search quality survives growth without a rebuild,
-    // so the same brute-force oracle applies (recall pinned in
-    // NswAnnSpec).
-    "ann_nsw_append" -> ((s, d) =>
-      NswAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        nswAppendGraph(s, d), queryVec(s, d), k = 10, beam = 64,
-        maxIters = 12, scale = Scale)),
-    // NSW delete: ids ≡ 3 (mod 7) are tombstoned — still ROUTABLE
-    // (severing a hub pre-compaction costs recall) but never emitted;
-    // the bounded tombstone id set rides the driver like IVF's.
-    // Oracle = brute force over the LIVE rows; compaction parity
-    // (tombstones ≡ reconnected graph) is pinned in NswAnnSpec.
-    "ann_nsw_delete" -> ((s, d) => {
-      val dead = table(s, d, "embeddings")
-        .filter(col("vec_id") % 7 === 3)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-      NswAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        nswGraph(s, d), queryVec(s, d), k = 10, beam = 64,
-        maxIters = 12, scale = Scale, tombstones = dead)
-    }),
-    // PCA-projected ANN (the fourth index family): top-32 principal
-    // axes, projected-cosine candidate scan over the mat_vec kernel and
-    // the double-vector cosine kernel, exact re-rank of 128 candidates.
-    // (d=32, candidates=128) is the cheapest measured full-recall point
-    // (grid in PcaAnnSpec), so the output IS brute force = the oracle;
-    // recall itself is pinned in ScalaTest.
-    "ann_pca_topk" -> ((s, d) =>
-      PcaAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        queryVec(s, d), pcaModel(s, d), k = 10, candidates = 128, scale = Scale)),
-    // SQ8 scalar-quantized ANN (the fifth index family): int8 codes
-    // scored by reconstructed cosine against a per-query coefficient
-    // table (the SQ analogue of the ADC LUT), exact re-rank of 64
-    // candidates. Quantization error ≤ Δ/2 per dim makes the candidate
-    // ranking near-exact, so the output IS brute force = the oracle;
-    // recall itself is pinned in Sq8AnnSpec's measured grid.
-    "ann_sq8_topk" -> ((s, d) =>
-      SqAnn.topK(table(s, d, "embeddings"), "vec_id", "embedding",
-        queryVec(s, d), sqModel(s, d), k = 10, candidates = 64, scale = Scale)),
-    // R2 — IVF/ANN index path; searchTopSize = numClusters ⇒ exact.
-    "ann_ivf_topk" -> ((s, d) => {
-      val (assigned, model) = ivfStore(s, d)
-      IvfIndex.search(assigned, model, cfg, queryVec(s, d),
-        k = 10, searchTopSize = 8, scoreScale = Some(Scale))
-    }),
-    // R2, 2-level kmeans tree (YDB vector_kmeans_tree shape): macro
-    // centroids → leaf centroids → partitions, breadth knob per level.
-    // Full breadth ⇒ exact (oracle); pruned behavior in IvfIndexSpec.
-    "ann_tree_topk" -> ((s, d) => {
-      val (assigned, model) = ivfStore(s, d)
-      val tree = IvfIndex.buildTree(model, macroClusters = 3)
-      IvfIndex.searchTree(assigned, tree, cfg, queryVec(s, d),
-        k = 9, searchTopSize = model.numClusters, scoreScale = Some(Scale))
-    }),
-    // R2 on disk: the 100 TB search path — store written partitionBy
-    // cluster_id, search prunes Parquet partitions at file-listing time.
-    "ann_ivf_disk" -> ((s, d) => {
-      val (path, model) = ivfDiskStore(s, d)
-      IvfIndex.search(s.read.parquet(path), model, cfg, queryVec(s, d),
-        k = 12, searchTopSize = 8, scoreScale = Some(Scale))
-    }),
-    // Incremental index maintenance: store built (and written
-    // partitioned) from vec_id < 400 only; the vec_id >= 400 batch is
-    // assigned to the FROZEN centroids by the codegen'd m=1 pq_encode
-    // kernel and APPENDED to the partition layout — no rebuild, no
-    // rewrite. Full-breadth search over the merged store must equal
-    // brute force over the whole corpus, which is the oracle.
-    "ann_ivf_append" -> ((s, d) => {
-      val (path, model) = ivfAppendStore(s, d)
-      IvfIndex.search(s.read.parquet(path), model, cfg, queryVec(s, d),
-        k = 12, searchTopSize = 8, scoreScale = Some(Scale))
-    }),
-    // Deletion path: same base-∪-appended store as ann_ivf_append, but
-    // ids ≡ 3 (mod 7) are TOMBSTONED — search prunes clusters, then
-    // drops tombstoned rows with a broadcast anti-join
-    // (IvfIndex.searchWithTombstones). Full breadth ⇒ brute force over
-    // the LIVE rows exactly, which is the oracle; compaction
-    // (search-after ≡ search-before, dead rows physically gone) is
-    // pinned in IvfIndexSpec.
-    "ann_ivf_delete" -> ((s, d) => {
-      val (path, model) = ivfAppendStore(s, d)
-      val tomb = table(s, d, "embeddings")
-        .filter(col("vec_id") % 7 === 3).select("vec_id")
-      IvfIndex.searchWithTombstones(s.read.parquet(path), model, cfg,
-        queryVec(s, d), k = 12, searchTopSize = 8,
-        tombstones = tomb, idCol = "vec_id", scoreScale = Some(Scale))
-    }),
-    // Streaming ANN ingestion (the 13th streaming surface, stateless):
-    // embeddings arrive as a file stream, stream-static join to the
-    // metadata table, frozen-centroid assignment via the codegen m=1
-    // pq_encode kernel, parquet sink partitionBy(cluster_id) — the
-    // continuous form of appendPartitioned. The ingest is a per-sf
-    // offline artifact (index construction is not query cost); the
-    // query is a full-breadth search over the STREAMED store, which
-    // must equal brute force — the same oracle as ann_ivf_disk.
-    "ann_ivf_streamed" -> ((s, d) => {
-      val (path, model) = ivfStreamStore(s, d)
-      IvfIndex.search(s.read.parquet(path), model, cfg, queryVec(s, d),
-        k = 12, searchTopSize = 8, scoreScale = Some(Scale))
-    }),
-    // Catalyst optimizer rule: plain SQL top-k over an IVF-registered
-    // store is auto-rewritten to cluster pruning (full breadth ⇒ exact,
-    // so the oracle checks it bit-for-bit; pruned-plan behavior is
-    // covered in IvfRewriteSpec).
-    "sql_ann_rewrite" -> ((s, d) => {
-      GraftFunctions.register(s)
-      graft.plans.IvfRewrite.install(s)
-      val (path, model) = ivfEmbStore(s, d)
-      graft.plans.IvfIndexCatalog.register(path, model, searchTopSize = model.numClusters)
-      s.read.parquet(path).createOrReplaceTempView("graft_ivf_store")
-      s.sql(
-        """SELECT vec_id, round(knn_cosine_similarity(embedding, :qv), 6) AS score
-          |FROM graft_ivf_store ORDER BY score DESC, vec_id LIMIT 7""".stripMargin,
-        Map("qv" -> typedLit(queryVec(s, d).toSeq)))
-    }),
-    // SQL surface + parameter binding (R8): named param, not inlined.
-    "sql_topk_cosine" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "embeddings").createOrReplaceTempView("graft_embeddings")
-      table(s, d, "documents").createOrReplaceTempView("graft_documents")
-      s.sql(
-        """SELECT CAST(e.vec_id AS STRING) AS id, d.source AS title,
-          |       d.lang AS vendor, d.text AS description,
-          |       round(knn_cosine_similarity(e.embedding, :qv), 6) AS score
-          |FROM graft_embeddings e JOIN graft_documents d ON e.vec_id = d.doc_id
-          |ORDER BY score DESC NULLS LAST, id
-          |LIMIT 5""".stripMargin,
-        Map("qv" -> typedLit(queryVec(s, d).toSeq)))
-    }),
-    // A1-A4 — full request/response layer end-to-end (text query path
-    // uses the deterministic embedder in tests; here the embedding path).
-    "api_search_cosine" -> ((s, d) => {
-      val service = new SearchService(
-        s, table(s, d, "embeddings"), table(s, d, "documents"),
-        ("vec_id", "doc_id"), cfg, Some(new DeterministicEmbedder(64)), Some(Scale))
-      // closed before the row returns: nothing stays cached across reps
-      val resp = try service.search(SearchRequest(embedding =
-        Some(queryVec(s, d).toSeq))) // k omitted → default 4 (app.py:363)
-        .fold(e => throw new IllegalStateException(s"${e.status}: ${e.message}"),
-          identity)
-        finally service.close()
-      import s.implicits._
-      resp.results.toDF()
-        .select(col("id"), col("title"), col("vendor"), col("description"), col("score"))
-        .orderBy(col("score").desc_nulls_last, col("id"))
-    }),
-    // A3 — health probe: the service's real constant-query check
-    // (reference app.py:89-102, SELECT 1 semantics) surfaced as a row.
-    "api_health" -> ((s, d) => {
-      val service = new SearchService(s, table(s, d, "embeddings"),
-        table(s, d, "documents"), ("vec_id", "doc_id"), cfg)
-      import s.implicits._
-      Seq((1, try service.health() finally service.close())).toDF("test", "healthy")
-    }),
-    // A4 — effective-config echo (app.py:393-405): every config field as
-    // a column, plus the exact JSON the service serializes.
-    "api_config" -> ((s, d) => {
-      val service = new SearchService(s, table(s, d, "embeddings"),
-        table(s, d, "documents"), ("vec_id", "doc_id"), cfg)
-      import s.implicits._
-      Seq((cfg.idCol, cfg.titleCol, cfg.vendorCol, cfg.descriptionCol,
-        cfg.embeddingCol, cfg.strategy.name, cfg.indexEnabled,
-        cfg.searchTopSize, cfg.defaultK, try service.configJson() finally service.close()))
-        .toDF("id_column", "title_column", "vendor_column", "description_column",
-          "embedding_column", "search_strategy", "index_enabled",
-          "index_tree_search_top_size", "default_k", "config_json")
-    }),
-
-    // ----------------- beyond-reference: LLM-data-pipeline operators ----
-
-    // Exact dedup groups on a prefix fingerprint.
-    "dedup_exact" -> ((s, d) =>
-      Dedup.exactGroups(table(s, d, "documents"), "doc_id",
-        substring(col("text"), 1, 16)).orderBy("fp")),
-    // Blocked n-gram Jaccard near-dup pairs (exact, oracle-checked).
-    "dedup_ngram_jaccard" -> ((s, d) =>
-      Dedup.blockedJaccardPairs(table(s, d, "documents"), "doc_id", "text",
-        blockLen = 16, threshold = 0.5, scale = Scale).orderBy("a_id", "b_id")),
-    // MinHash+LSH near-dup pairs, candidates verified with exact shingle
-    // Jaccard. Oracle = the full quadratic exact threshold join: every
-    // qualifying pair on this corpus sits far above the 8×4 S-curve knee
-    // (min Jaccard 0.9 at sf0.01, per-pair collision prob > 0.999), so
-    // LSH recall is 1 and the output IS the exact join. ScalaTest pins
-    // recall against ground truth independently of the corpus.
-    "dedup_minhash" -> ((s, d) =>
-      Dedup.minHashPairs(table(s, d, "documents"), "doc_id", "text",
-        bands = 8, rowsPerBand = 4, threshold = 0.5, scale = Scale)
-        .orderBy("a_id", "b_id")),
-    // Asymmetric shingle containment (Broder): |S(A)∩S(B)|/|S(A)| over
-    // informative (df-capped) shingles — the quote/subset detector
-    // Jaccard misses. Array-free: one hashed inverted-index self-join
-    // + pair-count aggregate. Oracle replays the identical contract
-    // (no fixture shingle is hotter than the cap, so the card equals
-    // the uncapped metric here; the cap semantics are spec-pinned).
-    "dedup_containment" -> ((s, d) =>
-      Dedup.containmentPairs(table(s, d, "documents"), "doc_id", "text",
-        thresholdMicro = 800000L)),
-    // LSH calibration card: per verified near-dup pair, the
-    // probability the 8×4 MinHash S-curve detects it — 1-(1-s^r)^b
-    // via fixed multiply chains on the micro-quantized exact Jaccard
-    // (no pow: libm differs across engines; multiply chains are
-    // bit-identical). Turns "our dedup knobs are fine" into numbers.
-    "lsh_calibration" -> ((s, d) =>
-      Dedup.lshCalibration(table(s, d, "documents"), "doc_id", "text",
-        blockLen = 16, threshold = 0.5, bands = 8, rowsPerBand = 4)
-        .orderBy("a_id", "b_id")),
-    // SimHash exact-collision groups (rows-only).
-    "dedup_simhash" -> ((s, d) =>
-      Dedup.simhashGroups(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("sh")),
-    // SimHash NEAR-match pairs (Manku et al. WWW'07 block scheme):
-    // Hamming ≤ 3 over 4 blocks — pigeonhole recall 1 by construction,
-    // so the oracle is the exact all-pairs Hamming join over the same
-    // SQL-recomputed simhashes. Candidates are (block, value) equality
-    // collisions, capped; bit_count(xor) verifies in-stage.
-    "dedup_simhash_near" -> ((s, d) => {
-      GraftFunctions.register(s)
-      Dedup.hammingNearPairs(
-        table(s, d, "documents")
-          .select(col("doc_id"), GraftFunctions.simhash64(col("text")).as("sh")),
-        "doc_id", "sh", nBlocks = 4, maxHamming = 3, maxBucket = Some(1024))
-        .orderBy("a_id", "b_id")
-    }),
-    // Crawl-scale Hamming near-match: identical semantics and oracle to
-    // dedup_simhash_near, through the multi-block key scheme — C(6,3) =
-    // 20 tables on ~32-bit packed keys instead of 4 tables on 16-bit
-    // blocks, so random-fingerprint block collisions fall from n/2^16
-    // to n/2^32 per key (the crawl-scale difference; measured by
-    // graft.tools.HammingBlockProbe, table in SCALING.md). Recall is 1
-    // by the same pigeonhole, so both entries return identical rows.
-    "dedup_simhash_near_wide" -> ((s, d) => {
-      GraftFunctions.register(s)
-      Dedup.hammingNearPairsWide(
-        table(s, d, "documents")
-          .select(col("doc_id"), GraftFunctions.simhash64(col("text")).as("sh")),
-        "doc_id", "sh", nBlocks = 6, maxHamming = 3, maxBucket = Some(1024))
-        .orderBy("a_id", "b_id")
-    }),
-    // Cross-document duplicated-span scan (the token-n-gram formulation
-    // of Lee-et-al substring dedup): per document, the fraction of its
-    // token-8-gram instances occurring in >= 2 distinct documents —
-    // catches PARTIAL overlap (one copied paragraph inside original
-    // text) that whole-doc fingerprints miss. Grams ride the shuffle as
-    // 64-bit hashes; the oracle recomputes on raw gram text in DuckDB.
-    "dedup_span_stats" -> ((s, d) =>
-      Dedup.duplicateNgramStats(table(s, d, "documents"), "doc_id", "text",
-        n = 8, minDocs = 2, scale = Scale).orderBy("doc_id")),
-    // The rewrite half: cut every token covered by a cross-document
-    // duplicated 8-gram and reassemble the survivors in order — exact
-    // copies collapse to empty, partial overlap keeps the original
-    // remainder. The oracle re-derives coverage and the ordered
-    // re-concatenation per row.
-    "dedup_span_removal" -> ((s, d) =>
-      Dedup.removeDuplicateSpans(table(s, d, "documents"), "doc_id", "text",
-        n = 8, minDocs = 2).orderBy("doc_id")),
-    // Near-dup CLUSTERS: transitive closure of the blocked-Jaccard pair
-    // graph via iterative min-label propagation — pairwise hits alone
-    // under-dedup chains (A~B, B~C, A≁C). component = min reachable id;
-    // keep one doc per component. Oracle = DuckDB recursive CTE over
-    // the same pair graph.
-    "dedup_components" -> ((s, d) =>
-      ConnectedComponents.componentSizes(
-        Dedup.blockedJaccardPairs(table(s, d, "documents"), "doc_id", "text",
-          blockLen = 16, threshold = 0.3, scale = Scale),
-        "a_id", "b_id")
-        .orderBy("id")),
-    // Quality-aware representative selection over the same near-dup
-    // clusters: keep each cluster's LONGEST member (n_chars, ties →
-    // lowest id) — the production rule "keep the most complete
-    // variant", replacing min-id with an argmax picked by one
-    // max_by hash aggregate (no per-cluster sort).
-    "dedup_keep_best" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      Dedup.keepBestVerdict(docs, "doc_id", col("n_chars"),
-        Dedup.blockedJaccardPairs(docs, "doc_id", "text",
-          blockLen = 16, threshold = 0.3, scale = Scale))
-        .orderBy("id")
-    }),
-    // Entity resolution (record linkage): multi-pass prefix/suffix
-    // blocking → equality join on block keys → levenshtein only within
-    // blocks → connected components for entity ids. The fixture links
-    // each 24-char document title to a deterministically corrupted
-    // copy (one char deleted); blocking recall is 1 by pigeonhole
-    // (an edit keeps the prefix-8 OR the suffix-8 key intact — the
-    // single-edit guarantee holds whenever 2k <= name length; k=8 on
-    // 24-char names measured 7.7x fewer candidate pairs than k=6 at
-    // sf0.1 with identical fixture recall), which
-    // the exact DuckDB oracle confirms. maxBucket caps viral blocks.
-    "er_fuzzy_join" -> ((s, d) => {
-      EntityResolution.fuzzyPairs(erRecords(s, d), "id", "name",
-        maxDist = 2, blockKeyLen = 8, maxBucket = Some(1024))
-        .orderBy("a_id", "b_id")
-    }),
-    "er_entities" -> ((s, d) => {
-      EntityResolution.resolveEntities(erRecords(s, d), "id", "name",
-        maxDist = 2, blockKeyLen = 8, maxBucket = Some(1024))
-        .orderBy("record_id")
-    }),
-    // Jaro–Winkler fuzzy join over the same blocking — the kernel is
-    // pinned to DuckDB's native jaro_winkler_similarity conventions,
-    // so the oracle is an INDEPENDENT implementation of the same
-    // function agreeing pair-by-pair on the 6-dp grid.
-    "er_jaro_join" -> ((s, d) =>
-      EntityResolution.jaroPairs(erRecords(s, d), "id", "name",
-        minSim = 0.94, blockKeyLen = 8, maxBucket = Some(1024))
-        .orderBy("a_id", "b_id")),
-    // Fellegi–Sunter (1969) probabilistic record linkage over the
-    // same blocked candidates: 3-field agreement patterns (≤8 rows —
-    // the only distributed pass), unsupervised EM for m/u/prevalence
-    // on the integral micro grid (bit-reproducible in any engine),
-    // then the per-pattern match posteriors and the field-level log₂
-    // likelihood-ratio weights every linkage handbook tabulates.
-    "er_fs_patterns" -> ((s, d) =>
-      EntityResolution.fsPatterns(
-        EntityResolution.comparisonPatterns(erRecords(s, d), "id", "name",
-          blockKeyLen = 8, maxBucket = Some(1024)),
-        fsModel(s, d))
-        .orderBy("g1", "g2", "g3")),
-    "er_fs_weights" -> ((s, d) =>
-      EntityResolution.fsWeights(s, fsModel(s, d)).orderBy("field")),
-    // Naive O(n²) edit-distance SQL self-join auto-rewritten into the
-    // blocked ER subtree (third rewrite rule beside the ANN and LSH
-    // rewrites). maxDist=1 is lossless by pigeonhole on ≥16-char
-    // names, so the oracle is the EXACT naive join.
-    "sql_fuzzy_join_rewrite" -> ((s, d) => {
-      import graft.plans.{FuzzyJoinCatalog, FuzzyJoinRewrite}
-      FuzzyJoinRewrite.install(s)
-      val path = erStore(s, d)
-      FuzzyJoinCatalog.register(path, FuzzyJoinCatalog.Params(
-        "id", "name", blockKeyLen = 8, maxBucket = Some(1024)))
-      s.sql(
-        s"""SELECT a.id AS a_id, b.id AS b_id,
-           |       levenshtein(a.name, b.name) AS dist
-           |FROM parquet.`$path` a JOIN parquet.`$path` b
-           |  ON a.id < b.id AND levenshtein(a.name, b.name) <= 1
-           |ORDER BY a_id, b_id""".stripMargin)
-    }),
-    // Materialized-rollup auto-rewrite (FOURTH rewrite rule): repeated
-    // corpus rollups are served from a registered pre-aggregate
-    // instead of rescanning the base. count/sum/min/max are
-    // MERGE-CLOSED, so the naive GROUP BY re-plans as a merge
-    // aggregate over the (lang, source) summary — here with a coarser
-    // grain (lang) AND a commuting WHERE on a grain column, the two
-    // transforms that make a rollup reusable. At 100 TB this turns a
-    // datacard refresh from a corpus scan into a few-thousand-row
-    // read. The oracle runs the SAME naive SQL on the base table: the
-    // rewrite must be semantically invisible (float sums, avg,
-    // count(col), DISTINCT and non-grain predicates all REFUSE —
-    // pinned by RollupRewriteSpec).
-    // SEVENTH auto-rewrite: DISTINCT over a superset of a registered
-    // unique key deletes the Aggregate — at 100 TB that is a full
-    // shuffle of every distinct row, erased by a declared constraint
-    // Spark has no metadata channel for. Plan-asserted in-row; the
-    // oracle runs the REAL DISTINCT in DuckDB, so the rewrite must be
-    // result-identical.
-    "sql_distinct_elim_rewrite" -> ((s, d) => {
-      graft.plans.ConstraintRewriteRule.ensureRegistered(s)
-      val (docs, _) = constraintStore(s, d)
-      val df = s.read.parquet(docs).select("doc_id", "lang", "source")
-        .distinct()
-      require(df.queryExecution.optimizedPlan.collect {
-        case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate => a
-      }.isEmpty, "distinct elimination did not fire")
-      df.orderBy("doc_id")
-    }),
-    // EIGHTH auto-rewrite: a LEFT JOIN to an unreferenced unique
-    // dimension is multiplicity-preserving and is deleted — the
-    // star-schema query stops scanning the dimension entirely. The
-    // oracle executes the REAL left join in DuckDB.
-    "sql_join_elim_rewrite" -> ((s, d) => {
-      graft.plans.ConstraintRewriteRule.ensureRegistered(s)
-      val (_, dim) = constraintStore(s, d)
-      val l = table(s, d, "lineitem")
-      val p = s.read.parquet(dim)
-      val df = l.join(p, l("l_partkey") === p("p_partkey"), "left_outer")
-        .groupBy(l("l_returnflag"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-      require(df.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.isEmpty, "join elimination did not fire")
-      df.orderBy("l_returnflag")
-    }),
-    // ELEVENTH auto-rewrite: INNER join to an unreferenced dimension
-    // deletes when the fk is a REGISTERED verified foreign key onto
-    // the dim's unique key — unlike the left-join case this needs
-    // containment + no-null-fk, which is exactly what the profile_ri
-    // card verifies (run the card, then register). The oracle runs
-    // the REAL inner join in DuckDB.
-    "sql_fk_join_elim_rewrite" -> ((s, d) => {
-      graft.plans.ConstraintRewriteRule.ensureRegistered(s)
-      val (_, dim) = constraintStore(s, d)
-      val facts = fkStore(s, d)
-      val l = s.read.parquet(facts)
-      val p = s.read.parquet(dim)
-      val df = l.join(p, l("l_partkey") === p("p_partkey"), "inner")
-        .groupBy(l("l_returnflag"))
-        .agg(count(lit(1)).as("n_items"),
-          sum(col("l_quantity").cast("long")).as("sum_qty"))
-      require(df.queryExecution.optimizedPlan.collect {
-        case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
-      }.isEmpty, "fk inner-join elimination did not fire")
-      df.orderBy("l_returnflag")
-    }),
-    "sql_rollup_rewrite" -> ((s, d) => {
-      import graft.plans.{RollupCatalog, RollupRewrite}
-      RollupRewrite.install(s)
-      val (base, params) = rollupStore(s, d)
-      RollupCatalog.register(base, params)
-      s.sql(
-        s"""SELECT lang, count(*) AS n_docs, sum(n_chars) AS total_chars,
-           |       min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-           |       round(avg(n_chars), 6) AS avg_chars
-           |FROM parquet.`$base`
-           |WHERE source <> 'src0'
-           |GROUP BY lang ORDER BY lang""".stripMargin)
-    }),
-    // Time-grain rollup serving: the HOURLY event summary answers the
-    // DAILY dashboard because date_trunc('DAY', date_trunc('HOUR',
-    // ts)) == date_trunc('DAY', ts) — the rule re-truncates the
-    // stored grain instead of rescanning the stream. At 100 TB this
-    // is the whole point of keeping an hourly cube: every coarser
-    // time rollup reads |types × hours| rows, never the corpus. The
-    // oracle is the same naive SQL over the raw events.
-    "sql_rollup_time_rewrite" -> ((s, d) => {
-      import graft.plans.{RollupCatalog, RollupRewrite}
-      RollupRewrite.install(s)
-      val (base, params) = rollupTimeStore(s, d)
-      RollupCatalog.register(base, params)
-      s.sql(
-        s"""SELECT event_type, date_trunc('DAY', ts) AS day,
-           |       count(*) AS n_events, sum(cents) AS total_cents,
-           |       round(avg(cents), 6) AS avg_cents
-           |FROM parquet.`$base`
-           |GROUP BY event_type, date_trunc('DAY', ts)
-           |ORDER BY event_type, day""".stripMargin)
-    }),
-    // Data-quality expectation suites (the Deequ pattern): a whole
-    // constraint card — uniqueness, completeness, domains, ranges,
-    // formats — compiled into ONE aggregate pass; verdicts compare
-    // integer violation counts, so the card is exact at any scale.
-    "data_expectations" -> ((s, d) => {
-      import Expectations._
-      validate(table(s, d, "orders"), Seq(
-        UniqueRule("orderkey_unique", "o_orderkey"),
-        RowRule("custkey_complete", "o_custkey", col("o_custkey").isNull),
-        RowRule("totalprice_positive", "o_totalprice",
-          !(col("o_totalprice") > 0)),
-        RowRule("totalprice_le_100k", "o_totalprice",
-          col("o_totalprice") > 100000, maxViolations = 100),
-        RowRule("status_domain", "o_orderstatus",
-          !col("o_orderstatus").isin("O", "F", "P")),
-        RowRule("priority_format", "o_orderpriority",
-          !col("o_orderpriority").rlike("^[1-5]-"))))
-        .orderBy("check")
-    }),
-    "corpus_expectations" -> ((s, d) => {
-      import Expectations._
-      validate(table(s, d, "documents"), Seq(
-        UniqueRule("doc_id_unique", "doc_id"),
-        RowRule("text_complete", "text", col("text").isNull),
-        RowRule("n_chars_consistent", "n_chars",
-          col("n_chars") =!= length(col("text"))),
-        RowRule("lang_domain", "lang",
-          !col("lang").isin("en", "de", "zh", "fr", "es")),
-        RowRule("source_format", "source",
-          !col("source").rlike("^src[0-9]+$")),
-        RowRule("text_min_len", "text",
-          length(col("text")) < 50, maxViolations = 1000)))
-        .orderBy("check")
-    }),
-    // Flesch readability card: reading-ease + grade level from three
-    // codegen regexp_count integers, scan-local, no shuffle.
-    "doc_readability" -> ((s, d) =>
-      TextAnalysis.readability(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // Per-user hourly gap-filled resampling (dense training series);
-    // values as exact integer cents. maxSpanHours guards runaway grids.
-    "events_resample" -> ((s, d) =>
-      graft.streaming.EventPipeline.resampleHourly(table(s, d, "events"))
-        .orderBy("user_id", "hour")),
-    // Count-Min point-frequency estimates for the exact top-20 terms:
-    // the sketch is a (j, bucket, cnt) relation, the estimate a min
-    // over d md5-seeded cells — deterministic, so the oracle rebuilds
-    // the identical sketch and checks estimate ≥ truth cell by cell.
-    "sketch_cms_topk" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val tc = CountMinSketch.termCounts(docs, "text")
-      val sketch = CountMinSketch.build(docs, "text", depth = 4, width = 256)
-      val top = tc.orderBy(col("cnt").desc, col("term")).limit(20)
-      CountMinSketch.estimate(sketch, top.select("term"), depth = 4, width = 256)
-        .join(broadcast(top), Seq("term"))
-        .select(col("term"), col("cnt").as("exact"), col("estimate"))
-        .orderBy(col("exact").desc, col("term"))
-    }),
-    // Bottom-k source-similarity sketches: per-source k-min md5
-    // digests → pairwise Jaccard estimates beside the exact values.
-    // Deterministic end to end, so the oracle rebuilds the sketches.
-    "sketch_kmin_jaccard" -> ((s, d) =>
-      BottomKSketch.pairwiseJaccard(table(s, d, "documents"),
-        "source", "text", k = 64)
-        .orderBy("src_a", "src_b")),
-    // SFT conversation prep: render a turns relation through the
-    // ChatML-shaped template with the loss-mask boundary (train on the
-    // final assistant response only). The turns fixture derives from
-    // document text slices; the oracle re-renders with string_agg and
-    // re-derives the boundary from integer turn lengths.
-    "chat_render" -> ((s, d) => {
-      val docs = table(s, d, "documents").filter(length(col("text")) >= 80)
-      val t = docs.select(col("doc_id").as("conv_id"), col("doc_id"),
-        explode(array(
-          struct(lit(0L).as("turn_idx"), lit("system").as("role"),
-            lit("You are helpful.").as("content")),
-          struct(lit(1L).as("turn_idx"), lit("user").as("role"),
-            substring(col("text"), 1, 40).as("content")),
-          struct(lit(2L).as("turn_idx"), lit("assistant").as("role"),
-            substring(col("text"), 41, 40).as("content")),
-          struct(lit(3L).as("turn_idx"), lit("user").as("role"),
-            substring(col("text"), 17, 25).as("content")),
-          struct(lit(4L).as("turn_idx"), lit("assistant").as("role"),
-            substring(col("text"), 5, 30).as("content")))).as("t"))
-        .filter(col("t.turn_idx") <= 2 || col("doc_id") % 3 === 0)
-        .select(col("conv_id"), col("t.turn_idx").as("turn_idx"),
-          col("t.role").as("role"), col("t.content").as("content"))
-      ChatFormat.render(t, "conv_id", "turn_idx", "role", "content")
-        .orderBy("conv_id")
-    }),
-    // Incremental corpus refresh: MERGE a derived changeset (updates,
-    // deletes, inserts keyed off doc_id residues) into the snapshot —
-    // one full-outer join, exactly reproduced by the oracle's set SQL.
-    "corpus_merge" -> ((s, d) => {
-      val snap = table(s, d, "documents")
-        .select("doc_id", "text", "lang", "source", "n_chars")
-      val u = snap.filter(col("doc_id") % 7 === 0)
-        .select(col("doc_id"), upper(col("text")).as("text"), col("lang"),
-          col("source"), col("n_chars"), lit("U").as("op"))
-      val del = snap.filter(col("doc_id") % 7 === 1)
-        .withColumn("op", lit("D"))
-      val ins = snap.filter(col("doc_id") % 7 === 2)
-        .select((col("doc_id") + 1000000L).as("doc_id"),
-          concat(lit("copy: "), col("text")).as("text"),
-          lit("xx").as("lang"), lit("srcNew").as("source"),
-          (col("n_chars") + 6L).as("n_chars"), lit("I").as("op"))
-      Snapshot.merge(snap, u.unionByName(del).unionByName(ins), "doc_id")
-        .orderBy("doc_id")
-    }),
-    // Language-ID eval card: the marker-word classifier's predictions
-    // cross-tabulated against the labeled language.
-    "lang_confusion" -> ((s, d) =>
-      TextAnalysis.langConfusion(table(s, d, "documents"), "lang", "text")
-        .orderBy("lang_true", "lang_pred")),
-    // Wilson lower confidence bound on per-source good-doc rate — the
-    // statistically honest release ranking (3/3 must not beat
-    // 960/1000). Derived per source from two integer counts through
-    // one fixed double expression, identical on both sides.
-    "source_quality_wilson" -> ((s, d) =>
-      TextAnalysis.sourceWilson(table(s, d, "documents"), "source",
-        col("n_chars") >= 200)
-        .orderBy("source")),
-    // Batched multi-query KNN — the ANN counterpart of
-    // retrieval_bm25_batch: Q=8 broadcast query vectors amortize ONE
-    // corpus scan; per-query top-k is the bounded topk_by_score
-    // aggregate (k slots per query ride the exchange, never a sort).
-    "knn_topk_batch" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = table(s, d, "embeddings")
-      val queries = emb.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-      emb.crossJoin(broadcast(queries))
-        .select(col("query_id"), col("vec_id"),
-          round(expr("knn_cosine_similarity(embedding, qv)"), 6).as("score"))
-        .groupBy("query_id")
-        .agg(expr("topk_by_score(score, vec_id, 4)").as("top"))
-        .select(col("query_id"), posexplode(col("top")))
-        .select(col("query_id"), (col("pos") + 1).cast("long").as("rank"),
-          col("col.id").as("id"), col("col.score").as("score"))
-        .orderBy("query_id", "rank")
-    }),
-    // Matryoshka-truncated search: cosine top-4 on the leading 16 of
-    // 64 dims (truncate-then-cosine ≡ truncate-renormalize-dot) — the
-    // standard cheap first-stage for MRL-trained embeddings; 4× less
-    // scan arithmetic and bandwidth at the cost of recall the exact
-    // rows measure.
-    "ann_matryoshka_topk" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      val emb = table(s, d, "embeddings")
-      val qv = emb.filter(col("vec_id") === 0)
-        .select(slice(col("embedding"), 1, 16).as("qv"))
-      emb.crossJoin(broadcast(qv))
-        .select(col("vec_id").as("id"),
-          round(expr("knn_cosine_similarity(slice(embedding, 1, 16), qv)"), 6)
-            .as("score"))
-        .orderBy(col("score").desc, col("id"))
-        .limit(4)
-    }),
-    // Conversion funnel signup → view → purchase: users reaching each
-    // step with strictly-increasing event times.
-    "events_funnel" -> ((s, d) =>
-      graft.streaming.EventPipeline.funnel(table(s, d, "events"),
-        Seq("signup", "view", "purchase"))
-        .orderBy("step_idx")),
-    // Masked-LM corruption (denoising objective prep): deterministic
-    // seeded-hash mask positions, [MASK] input + position-ordered
-    // target, one scan-local HOF projection.
-    "mlm_corruption" -> ((s, d) =>
-      ObjectivePrep.mlmCorruption(table(s, d, "documents"),
-        "doc_id", "text", oneIn = 7)
-        .orderBy("doc_id")),
-    // Fill-in-the-Middle corruption (the fourth objective): PSM
-    // reordering on the md5-seeded half of the corpus, cut points by
-    // per-doc hash arithmetic — scan-local, byte-deterministic. The
-    // oracle rebuilds every PSM string and matches the md5.
-    "objective_fim" -> ((s, d) =>
-      ObjectivePrep.fimCorruption(table(s, d, "documents"),
-        "doc_id", "text")
-        .orderBy("doc_id")),
-    // Inverse Cloze Task pairs (Lee et al. 2019 — retriever
-    // pretraining): one 8-token block per doc becomes the pseudo-query
-    // (md5-seeded choice), the rest its context; 1-in-10 docs keep the
-    // query in context (the paper's lexical-overlap trick). One hash
-    // aggregate per doc over document-bounded segment lists.
-    "ict_pairs" -> ((s, d) => {
-      val docs = table(s, d, "documents").filter(col("text").isNotNull)
-      val toks = split(col("text"), " ")
-      val segs = docs
-        .select(col("doc_id"), toks.as("__toks"),
-          explode(sequence(lit(0),
-            ceil(size(toks) / lit(8.0)).cast("int") - 1)).as("seg_idx"))
-        .select(col("doc_id"), col("seg_idx"),
-          concat_ws(" ", expr("slice(__toks, seg_idx * 8 + 1, 8)"))
-            .as("seg_text"))
-      ObjectivePrep.ictPairs(segs, "doc_id", "seg_idx", "seg_text",
-        keepOneIn = 10).orderBy("doc_id")
-    }),
-    // Token-level F1 (the SQuAD answer metric): multiset unigram
-    // overlap between a perturbed prediction and the reference —
-    // exact integral precision/recall/F1 per pair, one id-keyed join.
-    "eval_token_f1" -> ((s, d) =>
-      GenEval.overlapF1(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", n = 1).orderBy("doc_id")),
-    // Distinct-n diversity (Li et al. 2016): unique / total token
-    // n-grams for n = 1..4 — the mode-collapse check.
-    "eval_distinct_n" -> ((s, d) =>
-      GenEval.distinctN(table(s, d, "documents"), "text")
-        .orderBy("n")),
-    // Self-BLEU (Zhu et al. 2018): mean pairwise smoothed BLEU-2
-    // over a deterministic sample — the paraphrase-collapse check
-    // distinct-n misses.
-    "eval_self_bleu" -> ((s, d) =>
-      GenEval.selfBleu(table(s, d, "documents"), "doc_id", "text")),
-    // ROUGE-2 (Lin 2004): the same multiset overlap over bigrams —
-    // the summarization-eval standard.
-    "eval_rouge2" -> ((s, d) =>
-      GenEval.overlapF1(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", n = 2).orderBy("doc_id")),
-    // Corpus chrF (Popović 2015): character n-gram F2 averaged over
-    // n = 1..6, whitespace stripped — the MT metric robust to
-    // tokenization; exact integral micros end to end.
-    "eval_chrf" -> ((s, d) =>
-      GenEval.corpusChrF(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", maxN = 6, beta = 2)),
-    // Corpus chrF++ (Popović 2017): chrF's char n-gram orders plus
-    // word 1/2-gram orders, equal-weight integral mean — the
-    // sacrebleu chrF++ shape on the same one-scan kernel (both
-    // kernel calls in a single projection; still no explode/join).
-    "eval_chrfpp" -> ((s, d) =>
-      GenEval.corpusChrFpp(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", charMaxN = 6, wordMaxN = 2, beta = 2)),
-    // True Damerau–Levenshtein (Lowrance–Wagner) beside plain
-    // Levenshtein on a REAL transposition: pred = the 64-char window
-    // with its first two characters swapped, so damerau_dist = 1
-    // where lev_dist = 2 whenever they differ — the typo metric's
-    // defining separation, checked value-exact against DuckDB's
-    // damerau_levenshtein.
-    "eval_damerau" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "documents")
-        .filter(col("text").isNotNull && length(col("text")) >= 4)
-        .select(col("doc_id"),
-          expr("substring(text, 1, 64)").as("gold"),
-          expr("concat(substring(text, 2, 1), substring(text, 1, 1), " +
-            "substring(text, 3, 62))").as("pred"))
-        .select(col("doc_id"),
-          GraftFunctions.damerauDistance(col("pred"), col("gold"))
-            .as("damerau_dist"),
-          GraftFunctions.editDistance(col("pred"), col("gold"), "byte")
-            .as("lev_dist"))
-        .orderBy("doc_id")
-    }),
-    // Two-pass exact heavy hitters: Misra–Gries candidates (bounded
-    // map-side partials — the exchange carries ≤ capacity pairs per
-    // task regardless of vocabulary size) + an exact recount of the
-    // candidates. Output exact ⇒ plain SQL oracle.
-    "corpus_heavy_hitters" -> ((s, d) =>
-      HeavyHitters.heavyTokens(table(s, d, "documents"), "text",
-        num = 1, den = 1000).orderBy("token")),
-    // Edit-distance similarity self-join (τ = 1): deletion-
-    // neighborhood blocking (complete for τ = 1) + exact bit-parallel
-    // verify — output ≡ brute force, and the oracle IS the literal
-    // quadratic DuckDB self-join. The ER/spell-correction primitive.
-    "dedup_edit_join" -> ((s, d) =>
-      EditJoin.editSelfJoin(
-        table(s, d, "customer").select(col("c_custkey"), col("c_name")),
-        "c_custkey", "c_name", tau = 1).orderBy("id_a", "id_b")),
-    // Per-pair sentence BLEU-4 with add-one smoothing (Lin & Och
-    // 2004): the segment-level bitext/generation quality filter —
-    // exact integer counts per pair, one fixed-order 6-dp
-    // transcendental, pure projection.
-    "eval_sentence_bleu" -> ((s, d) =>
-      GenEval.sentenceBleu(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", maxN = 4).orderBy("doc_id")),
-    // Character error rate (byte units — bit-identical to DuckDB's
-    // byte-level levenshtein, so the oracle replays the DP exactly):
-    // the OCR/ASR eval standard, per pair, pure projection.
-    "eval_cer" -> ((s, d) =>
-      GenEval.editErrorRate(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", unit = "byte").orderBy("doc_id")),
-    // Word error rate (token units). The oracle maps each pair's
-    // distinct tokens to single printable bytes (a bijection, so
-    // token-level Levenshtein equals DuckDB's byte-level levenshtein
-    // on the mapped strings); pairs with > 94 distinct tokens can't
-    // map into one printable byte each and are filtered on BOTH
-    // sides — a fixture bound, not an operator limit.
-    "eval_wer" -> ((s, d) =>
-      GenEval.editErrorRate(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold"))
-          .filter(size(array_distinct(concat(
-            split(col("pred"), " "), split(col("gold"), " ")))) <= 94),
-        "doc_id", "pred", "gold", unit = "token").orderBy("doc_id")),
-    // Min-k%-prob membership inference (Shi et al. 2023): mean
-    // log-prob of each doc's 20% least-likely windows under the
-    // corpus trigram LM — memorized/contaminated docs have no
-    // low-probability outliers, so a HIGH min-k mean is the flag.
-    // Window log-probs quantize once to the micro grid; selection is
-    // an exact ordered prefix sum per doc.
-    "contamination_min_k" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      LanguageModel.minKProb(docs, "doc_id", "text",
-        docs, "doc_id", "text", kPct = 20).orderBy("doc_id")
-    }),
-    // Corpus BLEU-4 (Papineni et al. 2002): clipped n-gram precisions
-    // and brevity penalty as exact integers, one 6-dp transcendental
-    // combination — the MT-eval standard, the natural companion of
-    // the bitext-mining card.
-    "eval_bleu4" -> ((s, d) =>
-      GenEval.corpusBleu(
-        table(s, d, "documents").filter(col("text").isNotNull)
-          .select(col("doc_id"),
-            expr("replace(text, 'table', 'chair')").as("pred"),
-            col("text").as("gold")),
-        "doc_id", "pred", "gold", maxN = 4)),
-    // Unigram-LM (SentencePiece) vocabulary: all 1..4-char n-grams of
-    // corpus words with count >= 2 (1-char fallback always kept),
-    // scored as micro log-probs — the third tokenizer trainer beside
-    // BPE.
-    "unigram_vocab" -> ((s, d) =>
-      UnigramLm.fitVocab(table(s, d, "documents"), "text")
-        .orderBy("piece")),
-    // Unigram-LM Viterbi segmentation: per-doc piece counts and
-    // log-likelihood under the fitted vocab — the DP packs (logp,
-    // pieces) into ONE BIGINT per position, so the maximum-likelihood
-    // split replays bit-for-bit in the oracle's unrolled CTE chain.
-    // The DP runs over DISTINCT words (vocabulary-sized); docs join
-    // back through a broadcast.
-    "unigram_segment" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      UnigramLm.segmentCorpus(docs, "doc_id", "text",
-        UnigramLm.fitVocab(docs, "text")).orderBy("doc_id")
-    }),
-    // Unigram-LM hard-EM refit: backtrace every word's Viterbi split
-    // (columnar — one aggregate() fold walking p → p − l*(p) over the
-    // dp array), recount pieces weighted by word frequency, rescore.
-    // Pieces never chosen surface with viterbi_cnt = 0.
-    "unigram_refit" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      UnigramLm.refit(docs, "doc_id", "text",
-        UnigramLm.fitVocab(docs, "text")).orderBy("piece")
-    }),
-    // DSIR importance weights (Xie et al. 2023): every non-English doc
-    // scored by how English-like its hashed-n-gram bag is — per-bucket
-    // count table (1024 rows, broadcast), 6-dp-rounded log10 deltas in
-    // exact DECIMAL. The published cheap stand-in for "select raw web
-    // data that looks like the target corpus".
-    "dsir_weights" -> ((s, d) =>
-      DataSelection.dsirWeights(table(s, d, "documents"),
-        "doc_id", "text", isTarget = col("lang") === "en")
-        .orderBy("doc_id")),
-    // DSIR selection: the 50 most target-like raw docs — one
-    // TakeOrderedAndProject over the weights, ties by id.
-    "dsir_select" -> ((s, d) =>
-      DataSelection.dsirSelect(table(s, d, "documents"),
-        "doc_id", "text", isTarget = col("lang") === "en", k = 50)),
-    // DPO preference-pair prep (the third objective beside causal-LM
-    // packing and masked-LM corruption): 4 candidate completions per
-    // prompt (doc_id div 4), ranked by an integer token-count score;
-    // best/worst become (chosen, rejected) via ONE max_by/min_by hash
-    // aggregate over a total ranking key — no per-group window sort.
-    // Zero-margin groups emit nothing.
-    "dpo_pairs" -> ((s, d) => {
-      val cands = table(s, d, "documents").select(
-        expr("doc_id div 4").as("prompt_id"),
-        col("doc_id").as("cand_id"),
-        substring(col("text"), 1, 64).as("resp"),
-        size(split(col("text"), " ")).cast("long").as("score"))
-      ObjectivePrep.dpoPairs(cands, "prompt_id", "cand_id", "resp", "score")
-        .orderBy("prompt_id")
-    }),
-    // Incremental stats maintenance — the write-side twin of the
-    // rollup rewrite: state(old) ⊕ state(delta) == state(old ∪ delta)
-    // for merge-closed statistics (cnt/sum/sumsq/min/max; sumsq is
-    // DECIMAL(38,0) so the second moment survives 100 TB), so the
-    // datacard refresh scans ONLY the delta. The oracle is the full
-    // rescan the merge replaces. The card emits sumsq_v as a canonical
-    // decimal STRING: the internal accumulator stays exact DECIMAL(38),
-    // but a decimal-typed OUTPUT column hash-mismatches in the driver
-    // comparator (pandas object-Decimal vs DuckDB float64), so the
-    // boundary serializes it losslessly instead of down-casting.
-    "stats_incremental" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val old = docs.filter(col("doc_id") % 10 =!= 0)
-      val delta = docs.filter(col("doc_id") % 10 === 0)
-      IncrementalStats.card(
-        IncrementalStats.merge(Seq(
-          IncrementalStats.summarize(old, Seq("lang"), "n_chars"),
-          IncrementalStats.summarize(delta, Seq("lang"), "n_chars")),
-          Seq("lang")), Scale)
-        .withColumn("sumsq_v", col("sumsq_v").cast("string"))
-        .orderBy("lang")
-    }),
-    // Retrieval quality card: MRR / P@5 / recall@10 for the BM25
-    // ranking against a deterministic relevance rule (doc contains ALL
-    // query terms) — integer counts and single divisions, so the card
-    // is exact; the relevance judge is independent of the ranker.
-    "retrieval_eval" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val terms = Seq("dup", "hash", "merge")
-      val isRel = terms.map(t => array_contains(split(col("text"), " "), t))
-        .reduce(_ && _)
-      val rel = docs.select(col("doc_id"), isRel.as("rel"))
-      val ranked = Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 10)
-        .join(rel, Seq("doc_id"))
-      val tot = rel.agg(
-        sum(when(col("rel"), 1L).otherwise(0L)).as("n_rel_corpus"))
-      ranked.agg(
-          count(lit(1)).as("n_results"),
-          sum(when(col("rel"), 1L).otherwise(0L)).as("n_rel_top10"),
-          sum(when(col("rel") && col("rnk") <= 5, 1L).otherwise(0L))
-            .as("n_rel_top5"),
-          min(when(col("rel"), col("rnk"))).as("first_rel_rank"))
-        .crossJoin(broadcast(tot))
-        .select(col("n_results"), col("n_rel_top10"), col("n_rel_top5"),
-          col("first_rel_rank"), col("n_rel_corpus"),
-          coalesce(lit(1.0) / col("first_rel_rank").cast("double"), lit(0.0))
-            .as("mrr"),
-          (col("n_rel_top5").cast("double") / lit(5.0)).as("p_at_5"),
-          (col("n_rel_top10").cast("double") / col("n_rel_corpus").cast("double"))
-            .as("recall_at_10"))
-    }),
-    // nDCG@10 over the same BM25 ranking — the graded-position metric
-    // beside MRR/P@5/recall. The irrational log2 gains were computed
-    // ONCE in the JVM (Retrieval.DcgGainMicro); plan and oracle share
-    // the exact integer literals, so dcg/idcg/ndcg are BIGINT-exact
-    // (the HLL linear-counting discipline applied to ranking).
-    "retrieval_ndcg" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val terms = Seq("dup", "hash", "merge")
-      val isRel = terms.map(t => array_contains(split(col("text"), " "), t))
-        .reduce(_ && _)
-      val rel = docs.select(col("doc_id"), isRel.as("rel"))
-      val ranked = Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 10)
-        .join(rel, Seq("doc_id"))
-      val tot = rel.agg(
-        sum(when(col("rel"), 1L).otherwise(0L)).as("n_rel_corpus"))
-      Retrieval.ndcgCard(ranked, "rnk", "rel", k = 10, tot)
-    }),
-    // Hard-negative mining — the standard "BM25 negatives" recipe for
-    // embedding-model training: the top-k lexical hits that are NOT
-    // relevant under the independent judge are exactly the confusable
-    // examples a bi-encoder must learn to push away. One bounded
-    // bm25TopK subtree + a broadcast relevance anti-filter; at 100 TB
-    // the batched-BM25 variant amortizes the corpus scan over the
-    // whole training-query set.
-    "retrieval_hard_negatives" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val terms = Seq("dup", "hash", "merge")
-      val isRel = terms.map(t => array_contains(split(col("text"), " "), t))
-        .reduce(_ && _)
-      val rel = docs.select(col("doc_id"), isRel.as("rel"))
-      Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 20)
-        .join(rel, Seq("doc_id"))
-        .filter(!col("rel"))
-        .select(col("rnk"), col("doc_id").as("neg_id"), col("score"))
-        .orderBy("rnk")
-    }),
-    // TPC-H Q13: customer order-count distribution (left outer join
-    // keeps zero-order customers in the c_count=0 bucket).
-    "tpch_q13_custdist" -> ((s, d) =>
-      RelationalAnalytics.customerOrderDistribution(
-        table(s, d, "customer"), table(s, d, "orders"))),
-    // Join-skew diagnostics: distinct keys, heaviest keys (bounded
-    // top-k aggregate), and the max/avg frequency ratio that predicts
-    // whether the next join on this key needs salting.
-    "skew_diagnostics" -> ((s, d) =>
-      RelationalAnalytics.skewDiagnostics(table(s, d, "orders"),
-        "o_custkey", k = 10)),
-    // Rolling 7-day activity per (user, day): RANGE frame over integer
-    // day numbers on the daily pre-aggregate.
-    "events_rolling_7d" -> ((s, d) =>
-      graft.streaming.EventPipeline.rolling7dActivity(table(s, d, "events"))
-        .orderBy("user_id", "day")),
-    // Winsorization card: exact p01/p99 fences + clamp counts.
-    "events_winsorize" -> ((s, d) =>
-      graft.streaming.EventPipeline.typeValueWinsorize(table(s, d, "events"))
-        .select(col("event_type"), round(col("lo"), 6).as("lo"),
-          round(col("hi"), 6).as("hi"), col("n_below"), col("n_above"),
-          col("n"))
-        .orderBy("event_type")),
-    // Robust outliers by modified z-score (|v − med| > 3.5·MAD).
-    "events_outliers" -> ((s, d) =>
-      graft.streaming.EventPipeline.typeValueOutliers(table(s, d, "events"), 3.5)
-        .select(col("event_id"), col("event_type"), round(col("value"), 6).as("value"),
-          round(col("median"), 6).as("median"), round(col("mad"), 6).as("mad"))
-        .orderBy("event_id")),
-    // Exact median + MAD per event type (robust dispersion; same
-    // (n-1)q interpolation as the quantile rows).
-    "events_mad" -> ((s, d) =>
-      graft.streaming.EventPipeline.typeValueMad(table(s, d, "events"))
-        .select(col("event_type"), round(col("median"), 6).as("median"),
-          round(col("mad"), 6).as("mad"))
-        .orderBy("event_type")),
-    // Checksum-validated PII: 16-digit card candidates (synthesized
-    // in-plan with a correct Luhn check digit iff doc_id % 3 == 0) are
-    // extracted and validated by the ISO 7812 mod-10 sum. The oracle
-    // derives the verdict from the CONSTRUCTION (valid ⟺ residue 0),
-    // so Spark's checksum arithmetic is checked independently.
-    "pii_luhn" -> ((s, d) => {
-      val base = lpad((col("doc_id") * 7919L % 1000000000000000L)
-        .cast("string"), 15, "0")
-      val revB = reverse(base)
-      val s15 = aggregate(
-        transform(sequence(lit(1), lit(15)), j => {
-          val dg = ascii(revB.substr(j, lit(1))) - lit(48)
-          when(j % 2 === 1,
-            when(dg * 2 > 9, dg * 2 - 9).otherwise(dg * 2)).otherwise(dg)
-        }),
-        lit(0), (acc, v) => acc + v)
-      val check = ((lit(10) - s15 % 10) % 10 +
-        when(col("doc_id") % 3 === 0, 0).otherwise(5)) % 10
-      val fixture = table(s, d, "documents")
-        .select(col("doc_id"),
-          concat(col("text"), lit(" "), base, check.cast("string")).as("text"))
-      Pii.luhnAudit(fixture, "doc_id", "text").orderBy("doc_id")
-    }),
-    // Type-2 code clone groups — the dedup class exact hashing can't
-    // see: forks that renamed every variable and changed every
-    // literal. Fixture: four code templates whose identifiers/
-    // literals vary per doc (incl. a string literal carrying the doc
-    // source — normalized away), so normalization collapses the
-    // corpus to exactly the four structural classes; the oracle pins
-    // that group structure arithmetically (doc_id % 4), the
-    // normalization itself is spec-pinned. Exact-dedup economics: one
-    // 32-byte-key hash aggregate.
-    "code_clone_groups" -> ((s, d) => {
-      val a = (col("doc_id") % 7).cast("string")
-      val b = (col("doc_id") % 5).cast("string")
-      val c = (col("doc_id") % 13).cast("string")
-      val codeText = when(col("doc_id") % 4 === 0,
-          concat(lit("def f"), a, lit("(x"), b, lit("): if x"), b,
-            lit(" > "), c, lit(": return x"), b, lit(" * "), c))
-        .when(col("doc_id") % 4 === 1,
-          concat(lit("for i"), a, lit(" in range("), c, lit("): s"), b,
-            lit(" = s"), b, lit(" + i"), a))
-        .when(col("doc_id") % 4 === 2,
-          concat(lit("while n"), a, lit(" < "), c, lit(": n"), a,
-            lit(" = n"), a, lit(" * 2")))
-        .otherwise(
-          concat(lit("class C"), a, lit(": val y"), b, lit(" = \""),
-            col("source"), lit("\"")))
-      CodeCorpus.cloneGroups(
-        table(s, d, "documents").select(col("doc_id"),
-          codeText.as("text")),
-        "doc_id", "text").orderBy("doc_id")
-    }),
-    // Redaction-span union — several detectors' half-open spans per
-    // doc merge by sweep (overlap/containment/adjacency become one
-    // cut) before any string surgery. Windows partitioned per doc;
-    // the oracle replays the identical sweep.
-    "pii_span_merge" -> ((s, d) => {
-      val a = (col("doc_id") * 7) % 50
-      val k = col("doc_id") % 4
-      val spans = table(s, d, "documents")
-        .select(col("doc_id"), explode(array(
-          struct(a.as("s"), (a + 5).as("e")),
-          struct((a + 3 + k).as("s"), (a + 9 + k).as("e")),
-          struct((a + 20).as("s"), (a + 24).as("e")))).as("sp"))
-        .select(col("doc_id"), col("sp.s").as("s"), col("sp.e").as("e"))
-      Pii.spanMergeCard(spans, "doc_id", "s", "e").orderBy("doc_id")
-    }),
-    // IBAN audit — the account-number analogue of pii_luhn: extract
-    // ISO 13616-shaped candidates and gate them on the ISO 7064
-    // mod-97-10 checksum, folded char-by-char in int arithmetic (the
-    // big number never materializes; acc stays < 97). Fixture IBANs
-    // carry id-derived check digits, so ~1/100 validate — exactly the
-    // false-positive separation the checksum exists for. Scan-local
-    // HOF projection; the oracle replays the fold with list_reduce.
-    "pii_iban" -> ((s, d) => {
-      val fixture = table(s, d, "documents")
-        .select(col("doc_id"),
-          concat(col("text"), lit(" iban DE"),
-            lpad((col("doc_id") % 100).cast("string"), 2, "0"),
-            lpad((col("doc_id") * 7919L % 100000000000L).cast("string"),
-              11, "0")).as("text"))
-      Pii.ibanAudit(fixture, "doc_id", "text").orderBy("doc_id")
-    }),
-    // Embedding similarity join, blocked on label (exact, oracle-checked).
-    // maxBucket ENGAGED: `label` is a coarse key by construction (its
-    // cardinality doesn't grow with the corpus), so at 100× one label
-    // block would dominate and the within-block join is quadratic. The
-    // cap bounds any block at 1024 rows (1024²/2 pairs); at test scale
-    // the largest label block is far under the cap, so output is
-    // byte-identical to the uncapped exact join — which is what the
-    // DuckDB oracle checks.
-    "sim_join_label" -> ((s, d) =>
-      SimilarityJoin.blockedCosinePairs(table(s, d, "embeddings"), "vec_id",
-        "embedding", "label", threshold = 0.3, scale = Scale,
-        maxBucket = Some(1024))
-        .orderBy("a_id", "b_id")),
-    // Embedding-cosine near-dup dedup: pairs above threshold (blocked on
-    // label) collapse to keep-the-min-id; output = removed id → kept id.
-    // Same coarse-key hazard, same cap (see sim_join_label above).
-    "dedup_embedding" -> ((s, d) =>
-      SimilarityJoin.blockedCosinePairs(table(s, d, "embeddings"), "vec_id",
-        "embedding", "label", threshold = 0.3, scale = Scale,
-        maxBucket = Some(1024))
-        .groupBy(col("b_id").as("removed_id"))
-        .agg(min("a_id").as("kept_id"))
-        .orderBy("removed_id")),
-    // Banded (multi-table) LSH similarity join. Oracle = the exact
-    // quadratic threshold join: the 6-bits × 64-tables configuration is
-    // the cheapest point on the MEASURED recall/cost sweep
-    // (graft.CosineLshRecall) with recall exactly 1 at every tested
-    // scale — so the LSH output IS the exact join, at ~37% fewer
-    // candidates than 4×64 (and ~4× fewer at 10× the rows, since bucket
-    // sizes shrink 4× per +2 bits). Recall vs ground truth is pinned in
-    // SimilarityJoinSpec.
-    // Slim layout (default): the candidate dedup runs on 16-byte pairs
-    // and the vector join-backs broadcast — measured ~2× faster here
-    // than carrying vectors through the bucket join (carryVectors wins
-    // only once the vector side outgrows the broadcast threshold AND
-    // collisions stay near-unique; see SimilarityJoin scaladoc).
-    // maxBucket = the viral-bucket guardrail, ENGAGED: a boilerplate
-    // cluster (near-identical embeddings land in identical buckets in
-    // every table) can never contribute more than 1024²/2 candidate
-    // pairs per bucket. Measured headroom (LshScaleProbe): the largest
-    // bucket is 24 rows at sf0.01 and 97 at sf0.1, so the cap drops
-    // nothing at test scales (capDrop=0 measured) and the oracle's
-    // exact join still matches. Rows a cap WOULD drop are exact-dup
-    // territory, which dedup_exact handles with one hash aggregate.
-    "sim_join_lsh" -> ((s, d) =>
-      SimilarityJoin.lshCosinePairsBanded(table(s, d, "embeddings"), "vec_id",
-        "embedding", bitsPerTable = 6, nTables = 64, threshold = 0.4, scale = Scale,
-        maxBucket = Some(1024))
-        .orderBy("a_id", "b_id")),
-    // Catalyst rewrite: the NAIVE SQL cosine self-join (O(n²)
-    // inequality join as written) over a SimJoinCatalog-registered
-    // store re-plans as the banded-LSH candidate plan at the query's
-    // own threshold/scale — unmodified SQL gets the scale path, the
-    // declarative-engine counterpart of sql_ann_rewrite. The oracle is
-    // the exact join; the rewrite's firing is plan-asserted in
-    // SimJoinRewriteSpec.
-    "sql_sim_join_rewrite" -> ((s, d) => {
-      import graft.plans.{SimJoinCatalog, SimJoinRewrite}
-      GraftFunctions.register(s)
-      SimJoinRewrite.install(s)
-      val path = s"$d/embeddings.parquet"
-      SimJoinCatalog.register(path, SimJoinCatalog.Params(
-        "vec_id", "embedding", bitsPerTable = 6, nTables = 64,
-        seed = 42L, maxBucket = Some(1024), minThreshold = 0.4))
-      s.sql(
-        s"""SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-           |       round(knn_cosine_similarity(a.embedding, b.embedding), 6) AS cos_sim
-           |FROM parquet.`$path` a JOIN parquet.`$path` b
-           |  ON a.vec_id < b.vec_id
-           |WHERE round(knn_cosine_similarity(a.embedding, b.embedding), 6) >= 0.4
-           |ORDER BY a_id, b_id""".stripMargin)
-    }),
-    // k-NN graph (k=3) over the embeddings corpus: same recall-1 LSH
-    // candidates as sim_join_lsh, symmetrized, then a per-id bounded
-    // top-k (one hash exchange on id). Ranked by rounded cosine with
-    // neighbor-id tie-break, so the oracle's exact-threshold graph
-    // reproduces every rank.
-    "knn_graph" -> ((s, d) =>
-      SimilarityJoin.knnGraph(table(s, d, "embeddings"), "vec_id",
-        "embedding", k = 3, bitsPerTable = 6, nTables = 64, threshold = 0.4,
-        scale = Scale, maxBucket = Some(1024))
-        .orderBy("id", "nbr_rank")),
-    // Mutual (reciprocal) k-NN pairs over the same k=3 graph: keep a
-    // pair only when EACH endpoint ranks the other in its own top-k —
-    // the hub-suppression refinement near-dup pipelines apply before
-    // trusting a neighbor edge (a vector that is "everyone's neighbor"
-    // without reciprocating is a density artifact). One self-join of
-    // the bounded n·k graph relation; the corpus is never re-scanned.
-    "knn_mutual" -> ((s, d) =>
-      SimilarityJoin.mutualKnn(
-        SimilarityJoin.knnGraph(table(s, d, "embeddings"), "vec_id",
-          "embedding", k = 3, bitsPerTable = 6, nTables = 64, threshold = 0.4,
-          scale = Scale, maxBucket = Some(1024)))
-        .orderBy("a_id", "b_id")),
-    // Two-relation retrieval top-5: each query vector (vec_id >= 400)
-    // against the corpus (vec_id < 400) — hard-negative mining / RAG
-    // eval. Query×corpus bucket collisions only (recall-1 parameters),
-    // one bounded per-query top-k; the oracle ranks the exact join.
-    "knn_between" -> ((s, d) => {
-      val emb = table(s, d, "embeddings")
-      SimilarityJoin.knnBetween(
-        emb.filter(col("vec_id") >= 400), emb.filter(col("vec_id") < 400),
-        "vec_id", "embedding", k = 5, bitsPerTable = 6, nTables = 64,
-        threshold = 0.4, scale = Scale, maxBucket = Some(1024))
-        .orderBy("query_id", "hit_rank")
-    }),
-    // Incremental SEMANTIC ingestion gate: batch rows (vec_id >= 250)
-    // with no cosine-0.4 near-dup in the historical corpus (vec_id <
-    // 250) survive. Candidates are batch×corpus bucket collisions only
-    // (same 6×64 recall-1 parameters as sim_join_lsh, so the gate
-    // equals the oracle's exact NOT EXISTS); corpus×corpus pairs are
-    // never generated.
-    "dedup_semantic_incremental" -> ((s, d) => {
-      val emb = table(s, d, "embeddings")
-      Dedup.incrementalSemanticNew(
-        emb.filter(col("vec_id") >= 250), emb.filter(col("vec_id") < 250),
-        "vec_id", "embedding", bitsPerTable = 6, nTables = 64,
-        threshold = 0.4, maxBucket = Some(1024))
-        .select("vec_id", "label")
-        .orderBy("vec_id")
-    }),
-    // SemDeDup-style semantic dedup over EMBEDDINGS: LSH-bucketed
-    // cosine pairs (recall 1 at these measured parameters, so the pair
-    // graph is exactly the threshold join) → connected components →
-    // per-row keep verdict. Every corpus row is labeled with its
-    // cluster representative; singletons keep themselves.
-    "dedup_semantic" -> ((s, d) => {
-      val emb = table(s, d, "embeddings")
-      Dedup.semanticKeepVerdict(emb, "vec_id",
-        SimilarityJoin.lshCosinePairsBanded(emb, "vec_id", "embedding",
-          bitsPerTable = 6, nTables = 64, threshold = 0.4, scale = Scale,
-          maxBucket = Some(1024)))
-        .orderBy("id")
-    }),
-    // Benchmark-contamination detection: training docs (doc_id < 450)
-    // sharing ≥ 2 verbatim token-3-gram shingles with the held-out set
-    // (doc_id >= 450). The eval side broadcasts; the corpus never
-    // shuffles for the match.
-    "contamination_check" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      ContaminationCheck.ngramOverlap(
-        docs.filter(col("doc_id") < 450), docs.filter(col("doc_id") >= 450),
-        "doc_id", "text", minShingles = 2L)
-        .orderBy("train_id", "eval_id")
-    }),
-    // Paraphrase-level (embedding) contamination — the leakage the
-    // verbatim n-gram scan can't see: training vectors (vec_id >= 50)
-    // cosine-0.4-close to any eval vector (vec_id < 50), with the
-    // closest eval doc as evidence. Candidates are train×eval bucket
-    // collisions only (6×64 = the measured recall-1 parameters, so the
-    // output equals the oracle's exact quadratic join); the corpus is
-    // never shuffled.
-    "contamination_semantic" -> ((s, d) => {
-      val emb = table(s, d, "embeddings")
-      ContaminationCheck.semanticOverlap(
-        emb.filter(col("vec_id") >= 50), emb.filter(col("vec_id") < 50),
-        "vec_id", "embedding", threshold = 0.4, scale = Scale,
-        maxBucket = Some(1024))
-        .orderBy("train_id")
-    }),
-    // WARC (ISO 28500) round trip — the web-crawl wire format: the
-    // documents table exports as 16 sharded .warc.gz images (warcinfo
-    // lead record + one gzip-member HTTP response record per doc),
-    // then the reader parses them back via Content-Length framing.
-    // Every field must come back byte-identical, so the oracle is the
-    // documents table itself — a data-dependent identity proof with
-    // zero pinned constants, the same strongest-form oracle as the
-    // PNG round trip. The parse itself is the 100 TB ingest path
-    // (binaryFile scan → per-file parse, shuffle-free); only the
-    // export side shuffles, once, to form shards.
-    "warc_roundtrip" -> ((s, d) => {
-      import s.implicits._
-      val docs = table(s, d, "documents")
-      graft.sources.WarcCodec.exportWarcShards(docs, "doc_id", "text", nShards = 16)
-        .as[(Int, Array[Byte])]
-        .flatMap { case (_, blob) => graft.sources.WarcCodec.parseWarc(blob) }
-        .toDF()
-        .select(
-          regexp_extract(col("url"), "/doc/(\\d+)$", 1).cast("long").as("doc_id"),
-          col("http_status"),
-          decode(col("body"), "UTF-8").as("text_back"))
-        .orderBy("doc_id")
-    }),
-    // Archive census: documents → sharded TAR / ZIP images →
-    // decode-free member walk (tar header blocks with payloads skipped
-    // by size arithmetic; zip central directory only, located from the
-    // file tail) → per-doc size fields vs a closed-form oracle. The
-    // triage pass a code-corpus drop (GitHub tars, Kaggle zips) needs
-    // before any extraction at 100 TB: payload bytes are never
-    // scanned, so census cost is O(members), not O(archive bytes).
-    "tar_census" -> ((s, d) => {
-      import s.implicits._
-      graft.sources.ArchiveExport
-        .exportTarShards(table(s, d, "documents"), "doc_id", "text", 16)
-        .as[(Int, Array[Byte])]
-        .flatMap { case (_, blob) => graft.sources.ArchiveCodec.parseTar(blob) }
-        .toDF()
-        .select(
-          regexp_extract(col("name"), "^doc_(\\d+)\\.txt$", 1)
-            .cast("long").as("doc_id"),
-          col("size").as("n_bytes"), col("type_flag"), col("mtime"))
-        .orderBy("doc_id")
-    }),
-    // Parquet footer census — the engine's own file format read from
-    // scratch: Spark writes a 3-bucket partitioned copy of documents,
-    // then the thrift-COMPACT footer parser recovers per-file
-    // version / row counts / row-group layout / schema leaves from
-    // RAW BYTES (payload untouched). The oracle re-derives every
-    // field from table arithmetic (bucket counts) + the pinned writer
-    // facts (version 1, 1 row group, 5 leaf columns) — and the spec
-    // cross-validates the parser against parquet-mr's own reader,
-    // including multi-row-group and nested-schema files.
-    "parquet_footer_census" -> ((s, d) => {
-      import s.implicits._
-      import scala.jdk.CollectionConverters._
-      val tmp = java.nio.file.Files.createTempDirectory("graft_pq_census")
-      table(s, d, "documents")
-        .withColumn("bucket", col("doc_id") % 3)
-        .repartition(3, col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-      val files = (0L until 3L).map { bkt =>
-        val dir = tmp.resolve(s"bucket=$bkt")
-        val fs = java.nio.file.Files.list(dir).iterator().asScala
-          .filter(_.toString.endsWith(".parquet")).toSeq
-        require(fs.size == 1, s"expected 1 parquet file per bucket, got $fs")
-        (bkt, fs.head.toString)
-      }
-      files.toDF("bucket", "path").as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (bkt, p) =>
-            val m = graft.sources.ParquetFooter.parse(
-              java.nio.file.Files.readAllBytes(
-                java.nio.file.Paths.get(p))).get
-            (bkt, m.version.toLong, m.num_rows,
-              m.row_groups.length.toLong, m.schema_leaves.toLong,
-              m.row_groups.head.num_rows,
-              m.row_groups.head.n_columns.toLong, m.created_by)
-          }
-        }
-        .toDF("bucket", "version", "file_rows", "n_row_groups",
-          "schema_leaves", "rg0_rows", "n_columns", "has_created_by")
-        .orderBy("bucket")
-    }),
-    // Schema-drift card between two snapshot writes, detected from
-    // FOOTER BYTES alone (the ParquetFooter leaf names/types, now
-    // parquet-mr-cross-validated): a removed column, an added column
-    // and an INT64→INT32 narrowing — the contract check an ingestion
-    // pipeline runs before a snapshot swap. The oracle pins the
-    // expected verdict table.
-    "parquet_schema_drift" -> ((s, d) => {
-      import s.implicits._
-      import scala.jdk.CollectionConverters._
-      def writeAndLeaves(df: org.apache.spark.sql.DataFrame): Map[String, String] = {
-        val dir = java.nio.file.Files.createTempDirectory("graft_drift")
-        df.repartition(1).write.mode("overwrite").parquet(dir.toString)
-        val f = java.nio.file.Files.list(dir).iterator().asScala
-          .filter(_.toString.endsWith(".parquet")).toSeq.head
-        graft.sources.ParquetFooter.parse(java.nio.file.Files.readAllBytes(f))
-          .get.leaves.map(l => l.name -> l.typeName).toMap
-      }
-      val docs = table(s, d, "documents")
-      val l1 = writeAndLeaves(
-        docs.select("doc_id", "text", "lang", "n_chars"))
-      val l2 = writeAndLeaves(docs.select(
-        col("doc_id"), col("lang"),
-        col("n_chars").cast("int").as("n_chars"),
-        (col("n_chars") % 100 / 100.0).as("quality")))
-      val names = (l1.keySet ++ l2.keySet).toSeq.sorted
-      names.map { n =>
-        val st = (l1.get(n), l2.get(n)) match {
-          case (Some(a), Some(b)) if a == b => "unchanged"
-          case (Some(_), Some(_)) => "type_changed"
-          case (Some(_), None) => "removed"
-          case _ => "added"
-        }
-        (n, l1.getOrElse(n, ""), l2.getOrElse(n, ""), st)
-      }.toDF("col", "v1_type", "v2_type", "status").orderBy("col")
-    }),
-    "zip_census" -> ((s, d) => {
-      import s.implicits._
-      graft.sources.ArchiveExport
-        .exportZipShards(table(s, d, "documents"), "doc_id", "text", 16)
-        .as[(Int, Array[Byte])]
-        .flatMap { case (_, blob) => graft.sources.ArchiveCodec.parseZip(blob) }
-        .toDF()
-        .select(
-          regexp_extract(col("name"), "^doc_(\\d+)\\.txt$", 1)
-            .cast("long").as("doc_id"),
-          col("method").cast("long").as("method"),
-          col("csize").as("c_bytes"), col("usize").as("n_bytes"))
-        .orderBy("doc_id")
-    }),
-    // ZIP64 census — the same shards emitted with the 64-bit
-    // structures a >4 GiB archive carries (saturated 32-bit EOCD
-    // fields routing through the ZIP64 EOCD locator + record, sizes
-    // resolved from each entry's 0x0001 extended-information extra
-    // field, APPNOTE 4.3.14/4.5.3). Values must come back identical
-    // to the 32-bit census — which is exactly what the shared oracle
-    // asserts.
-    "zip64_census" -> ((s, d) => {
-      import s.implicits._
-      graft.sources.ArchiveExport
-        .exportZipShards(table(s, d, "documents"), "doc_id", "text", 16,
-          forceZip64 = true)
-        .as[(Int, Array[Byte])]
-        .flatMap { case (_, blob) => graft.sources.ArchiveCodec.parseZip(blob) }
-        .toDF()
-        .select(
-          regexp_extract(col("name"), "^doc_(\\d+)\\.txt$", 1)
-            .cast("long").as("doc_id"),
-          col("method").cast("long").as("method"),
-          col("csize").as("c_bytes"), col("usize").as("n_bytes"))
-        .orderBy("doc_id")
-    }),
-    // Long-name tar census — names over the ustar 100-byte field,
-    // carried as GNU 'L' longname entries (even ids) and PAX 'x'
-    // `path=` records (odd ids); the census must consume the metadata
-    // entry and surface the member under its FULL name (tar-lister
-    // semantics). The oracle rebuilds every name arithmetically.
-    "tar_longname_census" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .select(col("doc_id").cast("long"),
-          coalesce(col("text"), lit("")).as("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val name = s"deep/${"p" * (96 + (id % 8)).toInt}/doc_$id.txt"
-            val tar = graft.sources.ArchiveCodec.buildTar(
-              Iterator(name -> text.getBytes(java.nio.charset.StandardCharsets.UTF_8)),
-              paxLongNames = id % 2 == 1)
-            val e = graft.sources.ArchiveCodec.parseTar(tar).head
-            (id, e.name, e.name.length.toLong, e.size)
-          }
-        }
-        .toDF("doc_id", "member_name", "name_len", "n_bytes")
-        .orderBy("doc_id")
-    }),
-    // Zstd frame census — the decode-free triage for .zst corpus
-    // drops (how web-scale text dumps actually ship): frame/block
-    // structure, declared content size, dictionary id and checksum
-    // presence from HEADERS only, payload bytes skipped. Legal frames
-    // (raw + RLE blocks, optional skippable prefix, 2-byte dict ids)
-    // are assembled in-plan from each document's bytes; the oracle
-    // re-derives the census arithmetically (ceil-div block counts).
-    "zstd_census" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 250)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 250).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, bytes) =>
-            val b0 = bytes(0) & 0xff; val b1 = bytes(1) & 0xff
-            val clen = 50 + b0 % 200
-            val rleLen = if (b0 % 2 == 1) 1 + b1 % 32 else 0
-            val dictId = if (b0 % 5 == 0) 1000 + b1 else 0
-            val frame = graft.sources.ZstdCodec.buildZstd(
-              bytes.take(clen), 1 + b1 % 64, rleLen, 0x41, dictId)
-            val stream =
-              if (b1 % 3 == 0)
-                graft.sources.ZstdCodec.buildSkippable(bytes.take(11)) ++ frame
-              else frame
-            val m = graft.sources.ZstdCodec.parseZstd(stream).get
-            (id, m.n_frames, m.n_skippable, m.n_blocks, m.n_raw, m.n_rle,
-              m.content_bytes, m.dict_id, m.has_checksum)
-          }
-        }
-        .toDF("id", "n_frames", "n_skippable", "n_blocks", "n_raw",
-          "n_rle", "content_bytes", "dict_id", "has_checksum")
-        .orderBy("id")
-    }),
-    // LZ4 frame census — completes the storage-codec triage pair with
-    // zstd_census, and goes one step further: LZ4's XXH32 header /
-    // block / content checksums are computed for REAL (reference
-    // algorithm, vector-pinned), so the census VALIDATES integrity
-    // instead of skipping bytes. Legal uncompressed-block frames are
-    // assembled in-plan; the oracle re-derives the census
-    // arithmetically with content_ok necessarily true.
-    "lz4_census" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 250)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 250).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, bytes) =>
-            val b0 = bytes(0) & 0xff; val b1 = bytes(1) & 0xff
-            val clen = 50 + b0 % 200
-            val frame = graft.sources.Lz4Codec.buildLz4(
-              bytes.take(clen), 1 + b1 % 64,
-              blockChecksums = b1 % 2 == 1,
-              dictId = if (b0 % 5 == 0) 70000L + b1 else 0L,
-              bmCode = 4 + b0 % 4)
-            val stream =
-              if (b0 % 3 == 0)
-                graft.sources.Lz4Codec.buildSkippable(bytes.take(13)) ++ frame
-              else frame
-            val m = graft.sources.Lz4Codec.parseLz4(stream).get
-            (id, m.n_frames, m.n_skippable, m.n_blocks, m.n_uncompressed,
-              m.content_bytes, m.block_max_kb, m.dict_id, m.content_ok)
-          }
-        }
-        .toDF("id", "n_frames", "n_skippable", "n_blocks",
-          "n_uncompressed", "content_bytes", "block_max_kb", "dict_id",
-          "content_ok")
-        .orderBy("id")
-    }),
-    // Deterministic Poisson bootstrap (Chamandy et al.) over a
-    // per-example eval metric: 32 replicas resampled via the seeded
-    // 16-bit md5 → Poisson(1) inverse-CDF multiplicity — no indexing,
-    // no RNG state, one scan fanning out to B exact integer
-    // aggregates. The oracle re-derives every replica.
-    "eval_bootstrap" -> ((s, d) => {
-      val ex = table(s, d, "documents")
-        .filter(col("lang") === "de")
-        .select(col("doc_id"), (col("n_chars") % 2).as("score"))
-      Bootstrap.poissonBootstrap(ex, "doc_id", "score", reps = 32)
-        .orderBy("rep")
-    }),
-    // Paired permutation (sign-flip) test per source — the
-    // continuous-metric sibling of eval_mcnemar: md5-seeded flips
-    // regenerate the null identically on any engine; add-one p on the
-    // micro grid never reports 0.
-    "eval_permutation" -> ((s, d) =>
-      Bootstrap.permutationTest(
-        table(s, d, "documents").select(col("source"), col("doc_id"),
-          ((col("n_chars") % 5) - 2 +
-            when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).as("d")),
-        "source", "doc_id", "d", reps = 64)
-        .orderBy("source")),
-    // Multiple-testing corrections (Bonferroni / Holm / BH-FDR) over
-    // the per-source permutation p-value family — exact integral
-    // micros, deterministic (p, group) rank ties.
-    "eval_multiple_testing" -> ((s, d) =>
-      Bootstrap.multipleTesting(
-        Bootstrap.permutationTest(
-          table(s, d, "documents").select(col("source"), col("doc_id"),
-            ((col("n_chars") % 5) - 2 +
-              when(col("doc_id") % 2 === 0, 1L).otherwise(0L)).as("d")),
-          "source", "doc_id", "d", reps = 64),
-        "source", "p_micro")
-        .orderBy("rnk")),
-    // Delete-one-USER jackknife variance of the clicks-per-view
-    // ratio — the cluster-correct error bar for ratio metrics that
-    // completes the inferential kit (bootstrap CI, McNemar,
-    // permutation): both numerator and denominator vary per user, so
-    // the binomial formula is wrong and deleting whole users is the
-    // correction. Micro-grid integers end to end; variance (micro²)
-    // rather than SE, keeping sqrt out of the contract.
-    "eval_jackknife_ratio" -> ((s, d) =>
-      Bootstrap.jackknifeRatio(
-        table(s, d, "events").select(col("user_id"),
-          when(col("event_type") === "click", 1L).otherwise(0L).as("num"),
-          when(col("event_type") === "view", 1L).otherwise(0L).as("den")),
-        "user_id", "num", "den")),
-    // Exact ROC-AUC per source via the Mann–Whitney rank-sum with
-    // midrank ties (Hanley–McNeil 1982): the classifier-quality gate
-    // a labeling pipeline runs per slice. Scores live on an integer
-    // grid (ties engineered via % 100) and labels lean +40 on the
-    // grid, so each source's AUC is informative but < 1. All-BIGINT
-    // until one division; the per-(source, score) relation is what
-    // shuffles, never per-row ranks.
-    "eval_auc" -> ((s, d) => {
-      val pos = col("doc_id") % 3 === 0
-      val scored = table(s, d, "documents").select(
-        col("source"),
-        pos.cast("long").as("label"),
-        ((col("n_chars") * 7 + col("doc_id") * 13) % 100 +
-          when(pos, 40).otherwise(0)).as("score"))
-      Evaluation.aucExact(scored, "source", "label", "score")
-        .orderBy("source")
-    }),
-    // DeLong variance of the same per-source AUC — the error bar on
-    // the rank-sum point estimate: doubled placements, centered
-    // squares with cleared denominators, all DECIMAL(38)-exact.
-    "eval_auc_delong" -> ((s, d) => {
-      val pos = col("doc_id") % 3 === 0
-      val scored = table(s, d, "documents").select(
-        col("source"),
-        pos.cast("long").as("label"),
-        ((col("n_chars") * 7 + col("doc_id") * 13) % 100 +
-          when(pos, 40).otherwise(0)).as("score"))
-      Evaluation.aucDeLong(scored, "source", "label", "score")
-        .orderBy("source")
-    }),
-    // Cohen's kappa per source: two simulated annotators over a
-    // 3-class truth (doc_id % 3), each corrupted on its own stride
-    // (every 7th / every 5th doc) — the inter-annotator agreement
-    // card a labeling QA pipeline reports. Confusion marginals from
-    // two slim per-(source, class) aggregates; exact integers until
-    // the one kappa division.
-    "eval_kappa" -> ((s, d) => {
-      val t = col("doc_id") % 3
-      val rated = table(s, d, "documents").select(
-        col("source"),
-        when(col("doc_id") % 7 === 0, (t + 1) % 3).otherwise(t).as("r1"),
-        when(col("doc_id") % 5 === 0, (t + 2) % 3).otherwise(t).as("r2"))
-      Evaluation.cohensKappa(rated, "source", "r1", "r2")
-        .orderBy("source")
-    }),
-    // Krippendorff's alpha: the variable-rater agreement coefficient
-    // kappa cannot be — three simulated annotators with md5-free
-    // arithmetic coverage gaps ((doc_id + j) % 4 = 0 skips), so units
-    // carry 2–3 ratings and some drop as unpairable; per-unit rational
-    // terms floored to the 1e-12 grid, one alpha division.
-    "eval_krippendorff" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val ratings = (0 to 2).map { j =>
-        docs.filter((col("doc_id") + lit(j)) % 4 =!= 0)
-          .select(col("doc_id").as("unit"),
-            when((col("doc_id") + lit(11 * j)) % 7 === 0,
-              (col("doc_id") + lit(1 + j)) % 3)
-              .otherwise(col("doc_id") % 3).as("rating"))
-      }.reduce(_ unionByName _)
-      Evaluation.krippendorffAlpha(ratings, "unit", "rating")
-    }),
-    // Bradley–Terry strengths from a pairwise-preference log (the DPO
-    // data-QC card): 8 items whose simulated win odds follow
-    // strength ∝ item+1 — (doc_id + n_chars) % (a+b+2) <= a wins for
-    // a with probability (a+1)/(a+b+2), the BT model itself. Three
-    // micro-integer MM rounds (Hunter 2004) on the ≤ 8² pair-count
-    // relation; the preference log never leaves the scan unaggregated.
-    "eval_bradley_terry" -> ((s, d) => {
-      val prefs = table(s, d, "documents")
-        .select(
-          (col("doc_id") % 8).as("a"),
-          (expr("doc_id div 8") % 8).as("b"),
-          ((col("doc_id") + col("n_chars")) % (col("doc_id") % 8 +
-            expr("doc_id div 8") % 8 + 2)).as("roll"))
-        .filter(col("a") =!= col("b"))
-        .select(
-          when(col("roll") <= col("a"), col("a")).otherwise(col("b")).as("w"),
-          when(col("roll") <= col("a"), col("b")).otherwise(col("a")).as("l"))
-      Evaluation.bradleyTerry(prefs, "w", "l", iters = 3)
-        .orderBy("item")
-    }),
-    // Code-corpus license gate (the-Stack-style): a canonical notice
-    // chosen by doc_id arithmetic is prepended in-plan; the regex
-    // cascade must rediscover it — spdx id, family, keep verdict —
-    // while the oracle re-derives the ground truth arithmetically,
-    // so the detector is tested against truth it never saw. Priority
-    // order resolves multi-license files conservatively (spec-pinned).
-    "code_license_scan" -> ((s, d) => {
-      val idx = col("doc_id") % 10
-      val header = CodeCorpus.Licenses.map(_._4).zipWithIndex
-        .foldRight(lit(""): org.apache.spark.sql.Column) {
-          case ((txt, i), rest) => when(idx === i, lit(txt + "\n")).otherwise(rest)
-        }
-      val fixed = table(s, d, "documents")
-        .select(col("doc_id"), concat(header, col("text")).as("text"))
-      CodeCorpus.licenseScan(fixed, "doc_id", "text").orderBy("doc_id")
-    }),
-    // OPTIMIZE planner: small-file compaction groups from a file
-    // inventory (one METADATA row per file) via per-partition
-    // cumulative-size binning — the Delta/Iceberg bin-packer as one
-    // window cumsum, no sequential driver loop. The plan relation
-    // then drives the real rewrite jobs.
-    "layout_compaction" -> ((s, d) => {
-      val inv = table(s, d, "documents").select(
-        col("lang"),
-        concat(lit("part-"), lpad(col("doc_id").cast("string"), 8, "0"),
-          lit(".parquet")).as("file"),
-        col("n_chars").as("bytes"))
-      DataLayout.compactionPlan(inv, "file", "bytes",
-        targetBytes = 4096, partitionCols = Seq("lang"))
-        .orderBy("lang", "group_id")
-    }),
-    // Change data feed derived from plain snapshots (the inverse of
-    // corpus_merge): one full-outer join on the storage key emits the
-    // insert/delete/update stream a CDC consumer replays — unchanged
-    // rows emit nothing. Snapshots and the update rule are pure
-    // column arithmetic, so the oracle rebuilds both sides.
-    "snapshot_cdf" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val old = docs.filter(col("doc_id") % 10 < 8)
-        .select(col("doc_id"), col("text"))
-      val nw = docs.filter(col("doc_id") % 10 > 1)
-        .select(col("doc_id"),
-          when(col("doc_id") % 3 === 0, concat(col("text"), lit("!")))
-            .otherwise(col("text")).as("text"))
-      Snapshot.changeDataFeed(old, nw, "doc_id", Seq("text"))
-        .orderBy("doc_id")
-    }),
-    // Corpus snapshot diff by content fingerprint: docs < 250 as v1,
-    // >= 250 as v2 → added/removed/retained classes with distinct-text
-    // and doc counts. Only 32-hex fingerprints ever shuffle.
-    "corpus_diff" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      TextAnalysis.corpusDiff(
-        docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250),
-        "text")
-        .orderBy("status")
-    }),
-    // Winnowing fingerprint sketch (Schleimer et al. 2003, the MOSS
-    // selection rule): token-3-gram FNV-1a hashes → per-window-of-4
-    // minima → each doc's distinct selected fingerprints. One codegen
-    // kernel pass in the scan stage; the oracle recomputes every hash
-    // and window minimum in DuckDB HUGEINT arithmetic.
-    "doc_winnow" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "documents")
-        .select(col("doc_id"),
-          explode(GraftFunctions.winnowFingerprints(col("text"), 3, 4)).as("fp"))
-        .orderBy("doc_id", "fp")
-    }),
-    // Winnow-sketch overlap pairs: documents sharing ≥ 2 selected
-    // fingerprints — local-overlap (plagiarism-style) detection over
-    // the ~2/(w+1)-volume sketch instead of every n-gram. Explode →
-    // equality join on the 8-byte hash → pair count; the guarantee
-    // bounds misses to runs shorter than n+w-1 tokens. maxBucket
-    // ENGAGED: a fingerprint selected from universal boilerplate can
-    // never make the self-join quadratic (measured headroom: largest
-    // bucket is 6 at sf0.01, 170× under the cap — drops nothing here).
-    "dedup_winnow_pairs" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val fp = Dedup.capBuckets(
-        table(s, d, "documents")
-          .select(col("doc_id"),
-            explode(GraftFunctions.winnowFingerprints(col("text"), 3, 4)).as("fp")),
-        Seq("fp"), Some(1024))
-      fp.alias("a").join(fp.alias("b"),
-          col("a.fp") === col("b.fp") && col("a.doc_id") < col("b.doc_id"))
-        .groupBy(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        .agg(count(lit(1)).as("n_shared"))
-        .filter(col("n_shared") >= 2)
-        .orderBy("a_id", "b_id")
-    }),
-    // Contamination release gate: per-source contaminated-doc counts
-    // and rates over the same train/eval split — the distinct hit set
-    // broadcasts back onto the train relation, one stratum aggregate.
-    "contamination_by_source" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      ContaminationCheck.overlapBySource(
-        docs.filter(col("doc_id") < 450), docs.filter(col("doc_id") >= 450),
-        "doc_id", "text", "source", minShingles = 2L)
-        .orderBy("source")
-    }),
-    // Incremental dedup: the continuous-ingestion shape — new batch
-    // (doc_id >= 250) anti-joined against the historical fingerprint
-    // set (doc_id < 250); only genuinely new content survives.
-    "dedup_incremental" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val old = docs.filter(col("doc_id") < 250)
-      val batch = docs.filter(col("doc_id") >= 250)
-      Dedup.incrementalNew(batch, old, "doc_id",
-        TextAnalysis.fingerprint(col("text")), TextAnalysis.fingerprint(col("text")))
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")
-    }),
-    // The 14th streaming surface: the SAME daily-ingest dedup gate run
-    // continuously — new docs stream in, each micro-batch anti-joins on
-    // content fingerprint against the static corpus (stateless; no
-    // state store), only novel docs land in the clean-store sink. The
-    // ingest is a per-sf offline artifact; the query reads the sink and
-    // must equal the batch incrementalNew result — the same oracle.
-    "dedup_incremental_streamed" -> ((s, d) =>
-      s.read.parquet(dedupStreamStore(s, d))
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-    // Deterministic train/val/test assignment by md5(id) — reproducible
-    // across reruns/engines/partitionings, incremental (new rows land
-    // in the same split forever), scan-local. Every row's assignment is
-    // driver-verified (the oracle recomputes the md5 bucket in DuckDB).
-    "dataset_split" -> ((s, d) =>
-      DatasetSplit.assignSplits(table(s, d, "documents"), "doc_id")
-        .select("doc_id", "lang", "bucket", "split")
-        .orderBy("doc_id")),
-    // Train/test leakage through near-duplicates: the MinHash pair
-    // relation (recall 1 at these knobs on this corpus — the
-    // dedup_minhash contract) tagged with each side's md5-bucket split;
-    // a cross-split cell means the eval set contains paraphrases of
-    // training rows. Slim pair relation, two equality joins, one tiny
-    // aggregate.
-    "split_leakage" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      DatasetSplit.leakageCard(
-        Dedup.minHashPairs(docs, "doc_id", "text",
-          bands = 8, rowsPerBand = 4, threshold = 0.5, scale = Scale),
-        "a_id", "b_id",
-        DatasetSplit.assignSplits(docs, "doc_id"), "doc_id", "split")
-    }),
-    // Stratified deterministic sampling — the data-mixture knob: keep
-    // 100%/50%/25%/10% of four sources by md5 id-bucket; unlisted
-    // sources drop. Reproducible, incremental, scan-local.
-    "stratified_sample" -> ((s, d) =>
-      DatasetSplit.stratifiedSample(table(s, d, "documents"), "doc_id", "source",
-        Map("src0" -> 100, "src1" -> 50, "src2" -> 25, "src3" -> 10))
-        .select(col("doc_id"), col("source"),
-          DatasetSplit.bucket(col("doc_id")).as("bucket"))
-        .orderBy("doc_id")),
-    // Temperature-scaled mixture recipe (w_s ∝ T_s^0.5, global budget
-    // τ=0.5 of corpus tokens): per-source token mass, weight, integer
-    // token budget, and the realized deterministic sample's doc/token
-    // counts. The oracle re-derives every budget and verdict in DuckDB.
-    "mixture_plan" -> ((s, d) =>
-      MixtureSampling.mixtureReport(table(s, d, "documents"), "doc_id",
-        "source", size(split(col("text"), " ")).cast("long"), tau = 0.5)
-        .orderBy("source")),
-    // The materialized mixture sample itself: scan-local integer
-    // bucket-vs-budget filter (bucket24·T_s < budget_s·2^24), zero
-    // shuffles of the corpus. Every kept row is driver-verified.
-    "corpus_mixture" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-        .select(col("source"), col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      MixtureSampling.sampleByPlan(docs, "doc_id", "source",
-        MixtureSampling.mixturePlan(docs, "source", col("n_tokens"), tau = 0.5))
-        .select("doc_id", "source", "n_tokens")
-        .orderBy("doc_id")
-    }),
-    // Export manifest: the shard-level release record (doc/token
-    // volumes + order-independent integer checksums) a 100 TB export
-    // ships next to its files — one aggregate over the deterministic
-    // shard key, no per-shard sort, every value integer-exact.
-    "export_manifest" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-        .select(col("doc_id"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"),
-          DatasetSplit.shardKey(col("doc_id"), numShards = 16).as("shard"))
-      docs.groupBy("shard")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_tokens").cast("long").as("n_tokens"),
-          sum("doc_id").cast("long").as("id_sum"),
-          expr("bit_xor(doc_id)").as("id_xor"))
-        .orderBy("shard")
-    }),
-    // Balanced per-stratum pick: exactly 20 docs per language, ranked
-    // by seeded md5 with id tie-break — the deterministic eval-batch
-    // constructor (rate sampling can't promise exact counts). The
-    // 50% hash-prefix prefilter is the scale path: the sort only sees
-    // the prefix, short strata re-rank unfiltered, result EXACT
-    // either way (spec-pinned equal to the naive rank; the oracle
-    // ranks every row).
-    "balanced_sample" -> ((s, d) =>
-      DatasetSplit.balancedSample(table(s, d, "documents"), "doc_id",
-        "lang", n = 20, prefilterPct = Some(50))
-        .select("doc_id", "lang", "pick_rank")
-        .orderBy("doc_id")),
-    // Fractional-epoch upsampling: materialize "2.5 epochs of src0,
-    // 1 of src1, 0.4 of src2, 0.25 of src3" as labeled row copies —
-    // full copies for everyone plus a deterministic promille id-bucket
-    // slice for the fraction. Scan-local explode; unlisted sources drop.
-    "corpus_epochs" -> ((s, d) =>
-      MixtureSampling.upsampleEpochs(table(s, d, "documents"), "doc_id",
-        "source", Map("src0" -> 2.5, "src1" -> 1.0, "src2" -> 0.4,
-          "src3" -> 0.25))
-        .select("doc_id", "source", "epoch")
-        .orderBy("doc_id", "epoch")),
-    // Deterministic global training shuffle: seeded-md5 (shard, pos)
-    // coordinates — shard-shuffled loading order without a global sort
-    // (one hash exchange + independent per-shard sorts). Reproducible
-    // across engines; the oracle re-derives every coordinate in DuckDB.
-    "corpus_shuffle" -> ((s, d) =>
-      DatasetSplit.shuffleOrder(table(s, d, "documents"), "doc_id", numShards = 16)
-        .select("doc_id", "shard", "pos")
-        .orderBy("doc_id")),
-    // Sequence packing (pretraining data prep): concatenate each
-    // source-shard's docs in doc_id order and cut at 256-token context
-    // windows; every doc gets its stream offset and pack assignment.
-    // One window running-sum per shard — deterministic, so the oracle
-    // recomputes the identical layout.
-    "pack_sequences" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-        .select(col("doc_id"), col("source"),
-          size(split(col("text"), " ")).cast("long").as("n_tokens"))
-      SequencePacking.packSequences(docs, "source", "doc_id", "n_tokens", ctxLen = 256)
-        .orderBy("doc_id")
-    }),
-    // L2 normalization to unit length (the ingest half of the cosine
-    // fast path: over a unit-norm store, inner product ≡ cosine).
-    "vector_normalize" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "embeddings")
-        .select(col("vec_id").as("id"),
-          posexplode(GraftFunctions.vectorNormalize(col("embedding"))))
-        .select(col("id"), col("pos").cast("long").as("idx"),
-          round(col("col"), Scale).as("v_norm"))
-        .orderBy("id", "idx")
-    }),
-    // Embedding int8 quantization (4x storage/scan compression with
-    // bounded error; floor(x+0.5) levels for cross-engine determinism).
-    "vector_quantize" -> ((s, d) =>
-      VectorCompression.quantizeToRows(table(s, d, "embeddings"), "vec_id", "embedding")
-        .orderBy("id", "idx")),
-    // Product quantization, driver-verified with a FIXED codebook
-    // (centroid[c][t] = float((c-1.5) + t*0.01), identical in both
-    // engines): pq_encode picks each subvector's nearest centroid and
-    // pq_adc_score sums the per-query lookup table over the codes —
-    // the oracle re-derives both from the same public math with the
-    // same IEEE op order. (The learned-codebook path — per-subspace
-    // KMeans — is covered by recall tests in PqIndexSpec; k-means is
-    // not SQL-expressible.)
-    "pq_adc_fixed" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val m = 8; val k = 4; val dsub = 8
-      val cb: Array[Float] = Array.tabulate(m * k * dsub) { idx =>
-        val t = idx % dsub
-        val c = (idx / dsub) % k
-        ((c - 1.5) + t * 0.01).toFloat
-      }
-      val model = PqIndex.PqModel(m, k, 64, cb)
-      val lut = PqIndex.adcLut(model, queryVec(s, d))
-      table(s, d, "embeddings").select(
-        col("vec_id").as("id"),
-        round(GraftFunctions.pqAdcScore(
-          GraftFunctions.pqEncode(col("embedding"), typedLit(cb.toSeq), m, k),
-          typedLit(lut.toSeq), k), 6).as("adc"))
-        .orderBy("id")
-    }),
-    // The FAISS-style two-stage scan: ADC candidate generation (8-byte
-    // codes, the compressed scan) → top-64 cut by (adc, id) via
-    // TakeOrderedAndProject → exact cosine re-rank of candidates only.
-    // At 64-of-500 candidates the true top-10 survive the cut, so the
-    // oracle replays the identical two-stage pipeline in SQL; pruned/
-    // learned-codebook recall is pinned in PqIndexSpec.
-    "ann_adc_rerank" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val m = 8; val k = 4; val dsub = 8
-      val cb: Array[Float] = Array.tabulate(m * k * dsub) { idx =>
-        val t = idx % dsub
-        val c = (idx / dsub) % k
-        ((c - 1.5) + t * 0.01).toFloat
-      }
-      val model = PqIndex.PqModel(m, k, 64, cb)
-      val qv = queryVec(s, d)
-      val lut = PqIndex.adcLut(model, qv)
-      val cand = table(s, d, "embeddings").select(
-          col("vec_id").as("id"),
-          round(GraftFunctions.pqAdcScore(
-            GraftFunctions.pqEncode(col("embedding"), typedLit(cb.toSeq), m, k),
-            typedLit(lut.toSeq), k), 6).as("adc"))
-        .orderBy(col("adc"), col("id")).limit(64)
-      table(s, d, "embeddings")
-        .join(broadcast(cand), col("vec_id") === col("id"))
-        .select(col("id"),
-          round(GraftFunctions.knnCosineSimilarity(
-            col("embedding"), typedLit(qv.toSeq)), 6).as("score"))
-        .orderBy(col("score").desc, col("id")).limit(10)
-    }),
-    // End-to-end corpus curation: quality gate → exact dedup →
-    // near-dup removal, composed as ONE lazy plan. The oracle replays
-    // the identical funnel in SQL, so the composition (stage order,
-    // keep-first semantics, survivor set) is driver-verified — not
-    // just the individual stages.
-    "corpus_curation" -> ((s, d) =>
-      CurationPipeline.curate(table(s, d, "documents"), "doc_id", "text")
-        .select("doc_id", "lang", "quality")
-        .orderBy("doc_id")),
-    // The END-TO-END training-data pipeline as ONE lazy plan: quality
-    // gate → exact dedup → near-dup removal → deterministic train
-    // split → per-shard sequence packing. Composition is where lazy
-    // DataFrames pay off at 100 TB — the cheap per-row gates run
-    // before any shuffle sees a row, and Catalyst plans the whole
-    // funnel as one job. The oracle re-derives every stage in SQL.
-    "corpus_to_batches" -> ((s, d) => {
-      val curated = CurationPipeline.curate(table(s, d, "documents"), "doc_id", "text")
-      val train = DatasetSplit.assignSplits(curated, "doc_id")
-        .filter(col("split") === "train")
-        .select(col("doc_id"), col("source"),
-          size(org.apache.spark.sql.functions.split(col("text"), " "))
-            .cast("long").as("n_tokens"))
-      SequencePacking.packSequences(train, "source", "doc_id", "n_tokens", ctxLen = 256)
-        .orderBy("doc_id")
-    }),
-    // The recipe-era funnel: curation (quality → exact dedup →
-    // near-dup removal) → temperature mixture sample (τ=0.6 token
-    // budget over the CURATED per-source masses) → sequence packing —
-    // one lazy plan end to end; the mixture verdicts stay pure BIGINT
-    // and the oracle replays every stage.
-    "recipe_to_batches" -> ((s, d) => {
-      // Slim (3-column) curated relation, materialized once: it is
-      // referenced by both the mixture plan and the sample filter —
-      // unmaterialized, the whole curation funnel re-derived per
-      // reference (guide §5.2 bounded-intermediate discipline; the
-      // checkpoint holds doc_id/source/n_tokens, never text).
-      val curated = CurationPipeline.curate(table(s, d, "documents"), "doc_id", "text")
-        .select(col("doc_id"), col("source"),
-          size(org.apache.spark.sql.functions.split(col("text"), " "))
-            .cast("long").as("n_tokens"))
-        .localCheckpoint(true)
-      val plan = MixtureSampling.mixturePlan(curated, "source",
-        col("n_tokens"), tau = 0.6)
-      val sampled = MixtureSampling.sampleByPlan(curated, "doc_id", "source", plan)
-      SequencePacking.packSequences(sampled, "source", "doc_id", "n_tokens",
-        ctxLen = 256)
-        .orderBy("doc_id")
-    }),
-    // Text analysis.
-    "text_stats" -> ((s, d) =>
-      TextAnalysis.textStats(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // One-row corpus datacard: volumes, diversity, exact-dup surplus.
-    "corpus_datacard" -> ((s, d) =>
-      TextAnalysis.corpusDatacard(table(s, d, "documents"), "doc_id", "text",
-        "lang", "source")),
-    // Per-source scorecard: volumes, quality full-pass rate (same
-    // expressions as the doc_quality gate), exact-dup surplus — one
-    // scan, one source-keyed hash aggregate.
-    "source_scorecard" -> ((s, d) =>
-      TextAnalysis.sourceScorecard(table(s, d, "documents"), "doc_id",
-        "text", "source")
-        .orderBy("source")),
-    "token_counts" -> ((s, d) =>
-      TextAnalysis.tokenCounts(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "lang_id" -> ((s, d) =>
-      TextAnalysis.languageId(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    "lang_stats" -> ((s, d) =>
-      TextAnalysis.langStats(table(s, d, "documents"), "lang", "text")
-        .orderBy("lang")),
-    "doc_fingerprint" -> ((s, d) =>
-      TextAnalysis.fingerprints(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // Composite quality scoring (Gopher/C4-style corpus filter).
-    "doc_quality" -> ((s, d) =>
-      TextAnalysis.qualityScore(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // Gopher-style intra-document repetition metrics (dup 3-grams,
-    // dup tokens, most-frequent-token share) — one scan-local projection.
-    "doc_repetition" -> ((s, d) =>
-      TextAnalysis.repetitionStats(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // CCNet-style fluency signal: count-based trigram LM (stupid
-    // backoff, Brants et al. 2007) trained on the corpus, then each
-    // document scored under it — the perplexity ranking CCNet uses to
-    // keep the fluent tail of a crawl. Model card first, per-doc
-    // perplexity second.
-    // RefinedWeb/CCNet boilerplate pass: pages assembled in-plan with a
-    // per-source copyright header, a global nav line, the document body
-    // and a low-frequency promo line; lines recurring in ≥3 distinct
-    // docs of a source are template chrome and get deleted, prose and
-    // rare promos survive. Output = per-doc removal summary + cleaned
-    // fingerprint (order-preserving).
-    "line_boilerplate" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val page = concat(
-        lit("c "), col("source"), lit(" all rights reserved\n"),
-        lit("nav home about\n"),
-        col("text"), lit("\n"),
-        lit("promo "), (col("doc_id") % 250).cast("string"))
-      Boilerplate.removeBoilerplate(
-        docs.select(col("doc_id"), col("source"), page.as("page")),
-        "doc_id", "source", "page", minDocs = 3)
-        .orderBy("doc_id")
-    }),
-    // Spearman feature-redundancy card: rank correlation between the
-    // cheap per-doc features a quality classifier would ingest —
-    // exact integer algebra over doubled average ranks, one
-    // sqrt+division at the end.
-    "doc_feature_spearman" -> ((s, d) => {
-      val docs = table(s, d, "documents").filter(col("text").isNotNull)
-        .select(size(split(col("text"), " ")).cast("long").as("n_tokens"),
-          octet_length(col("text")).cast("long").as("n_bytes"),
-          size(array_distinct(split(col("text"), " "))).cast("long")
-            .as("n_distinct"))
-      def pair(label: String, a: String, b: String) =
-        TextAnalysis.spearman(docs, a, b)
-          .select(lit(label).as("pair"), col("n"), col("rho"))
-      pair("bytes_distinct", "n_bytes", "n_distinct")
-        .unionAll(pair("tokens_bytes", "n_tokens", "n_bytes"))
-        .unionAll(pair("tokens_distinct", "n_tokens", "n_distinct"))
-        .orderBy("pair")
-    }),
-    "lm_ngram_stats" -> ((s, d) =>
-      LanguageModel.modelStats(table(s, d, "documents"), "doc_id", "text")),
-    // Interpolated Kneser-Ney bigram smoothing: continuation-count
-    // backoff, exact integer counts, fixed-order double probability.
-    "lm_kneser_ney" -> ((s, d) =>
-      LanguageModel.kneserNey(table(s, d, "documents"), "doc_id", "text")),
-    "doc_perplexity" -> ((s, d) =>
-      LanguageModel.selfPerplexity(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // Built-in format surface: documents → ORC / CSV / JSON-lines →
-    // read back with explicit schema → identical per-format summaries
-    // ⇔ lossless roundtrip (oracle states the expected summary once
-    // per format from the parquet source).
-    "format_roundtrip" -> ((s, d) => {
-      val p = tempDir("graft_formats")
-      graft.sources.FormatSinks.roundtripSummary(
-        table(s, d, "documents"), Seq("csv", "json", "orc"), p)
-    }),
-    // fastText/FineWeb-Edu-style quality classifier: logistic regression
-    // distilling the Gopher rule gate, trained by 3 full-batch GD
-    // iterations where each iteration is ONE map-side-partial aggregate
-    // and the weights are EXACT micro-integers (the oracle re-runs the
-    // whole descent in SQL and matches them bit-for-bit).
-    "quality_classifier_fit" -> ((s, d) =>
-      QualityClassifier.fitSummary(table(s, d, "documents"), "doc_id", "text")),
-    "quality_classifier" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d))
-        .orderBy("doc_id")
-    }),
-    // Confident-learning label-noise card (Northcutt et al. 2021):
-    // the rule labels are FLIPPED on a 1-in-11 stride, the trained
-    // classifier's 4-dp scores stand in for out-of-sample probs, and
-    // the confident joint estimates which slice of each source is
-    // mislabeled — the relabel/drop queue of a labeling pipeline.
-    // Thresholds compare as cross-multiplied integer rationals; the
-    // oracle re-runs the descent AND the joint in SQL.
-    // McNemar's paired test per source: the trained classifier vs a
-    // crude length heuristic against the rule truth — only the
-    // discordant cells carry signal; continuity-corrected χ² on the
-    // micro grid with the 3.841459 (p<.05, 1 df) gate as data.
-    "eval_mcnemar" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val lab = QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d))
-        .join(docs.select(col("doc_id"), col("source"), col("n_chars")),
-          "doc_id")
-        .select(col("source"), col("rule_label").as("y"),
-          col("label").cast("long").as("pa"),
-          (col("n_chars") >= 400).cast("long").as("pb"))
-      Evaluation.mcnemarCard(lab, "source", "y", "pa", "pb")
-        .orderBy("source")
-    }),
-    "label_noise_card" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val noisy = QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d))
-        .join(docs.select(col("doc_id"), col("source")), "doc_id")
-        .withColumn("noisy_label",
-          when(col("doc_id") % 11 === 0, lit(1L) - col("rule_label"))
-            .otherwise(col("rule_label")))
-      Evaluation.confidentLearningCard(noisy, "source", "score", "noisy_label")
-        .orderBy("source")
-    }),
-    // Per-source distinct-content cardinality: exact count_distinct
-    // (oracle-matched) next to the HLL++ sketch — the 100 TB path,
-    // whose map-side register-merge never shuffles values — verified
-    // in-plan through a 5% relative-error bound (HLL++ at rsd=0.02 is
-    // deterministic for a fixed input set, so the bound is stable).
-    "corpus_cardinality" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val fp = TextAnalysis.fingerprint(col("text"))
-      docs.groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          count_distinct(fp).as("n_distinct"),
-          approx_count_distinct(fp, 0.02).as("__approx"))
-        .select(col("source"), col("n_docs"), col("n_distinct"),
-          (abs(col("__approx") - col("n_distinct")).cast("double") /
-            col("n_distinct") <= 0.05).as("approx_within_5pct"))
-        .orderBy("source")
-    }),
-    // Vocabulary coverage: top-20 corpus vocab (count DESC, term ASC
-    // cut) → per-doc out-of-vocabulary token fraction.
-    "vocab_coverage" -> ((s, d) =>
-      TextAnalysis.vocabCoverage(table(s, d, "documents"), "doc_id", "text",
-        vocabSize = 20)
-        .orderBy("doc_id")),
-    // Sliding-window token chunking (40-token windows, stride 30) — the
-    // pre-embedding fan-out, one generate+explode inside the scan stage.
-    "doc_chunks" -> ((s, d) =>
-      TextAnalysis.chunkTokens(table(s, d, "documents"), "doc_id", "text",
-        chunkSize = 40, stride = 30)
-        .orderBy("doc_id", "chunk_id")),
-    // PII detection + redaction audit. The synthetic corpus has no
-    // natural PII, so a deterministic augmentation step (emails/phones/
-    // IPv4s derived from doc_id) is part of the fixture IN the plan —
-    // both engines build the identical text, then scrub it.
-    // Release-gate governance beside the PII text pass: k-anonymity
-    // over the (lang, source) quasi-identifiers — the risk card
-    // (sizes, at-risk flags, distinct-content l-diversity evidence)
-    // and the standard suppression rewrite (QIs of sub-k groups
-    // blanked, payload kept). The group-size relation is |groups|
-    // rows, broadcast back; the rewrite itself is scan-local.
-    "privacy_k_anonymity" -> ((s, d) =>
-      Anonymity.kAnonymityCard(table(s, d, "documents"),
-        Seq("lang", "source"), "text", k = 5)
-        .orderBy("lang", "source")),
-    // GDPR erasure-cascade audit: the deletion manifest a
-    // right-to-be-forgotten batch must produce — per-table
-    // before/removed/after counts as the victim set cascades through
-    // the foreign keys (customer → orders → lineitem). Victims and
-    // order keys are broadcast semi/anti-join sides; each table is
-    // scanned once.
-    "privacy_erasure_cascade" -> ((s, d) => {
-      val cust = table(s, d, "customer")
-      val ord = table(s, d, "orders")
-      val li = table(s, d, "lineitem")
-      val victims = cust.filter(col("c_custkey") % 97 === 3)
-        .select(col("c_custkey").as("k"))
-      val deadOrders = ord.join(broadcast(victims),
-        col("o_custkey") === col("k")).select(col("o_orderkey").as("ok"))
-      def cardRow(name: String, df: DataFrame, removed: DataFrame) = {
-        val b = df.agg(count(lit(1)).as("rows_before"))
-        val r = removed.agg(count(lit(1)).as("rows_removed"))
-        b.crossJoin(r).select(lit(name).as("table_name"),
-          col("rows_before"), col("rows_removed"),
-          (col("rows_before") - col("rows_removed")).as("rows_after"))
-      }
-      cardRow("customer", cust,
-          cust.join(broadcast(victims), col("c_custkey") === col("k")))
-        .unionAll(cardRow("lineitem", li,
-          li.join(broadcast(deadOrders), col("l_orderkey") === col("ok"))))
-        .unionAll(cardRow("orders", ord,
-          ord.join(broadcast(victims), col("o_custkey") === col("k"))))
-        .orderBy("table_name")
-    }),
-    "privacy_suppress" -> ((s, d) =>
-      Anonymity.suppressSmallGroups(table(s, d, "documents"),
-        Seq("lang", "source"), k = 5)
-        .select("doc_id", "lang", "source")
-        .orderBy("doc_id")),
-    // l-diversity (Machanavajjhala et al. 2006) — the middle rung of
-    // the k-anon / l-div / t-closeness release ladder: per source
-    // group, distinct AND entropy l-diversity over the language
-    // attribute, the entropy on the exact 6-dp log grid.
-    "privacy_l_diversity" -> ((s, d) =>
-      Anonymity.lDiversityCard(table(s, d, "documents"),
-        Seq("source"), "lang", l = 3)
-        .orderBy("source")),
-    // t-closeness (Li et al. 2007) — the third rung of the release
-    // ladder after k-anonymity (size) and l-diversity (variety): a
-    // group whose length distribution sits in one tail of the
-    // corpus-wide distribution leaks even when large and varied.
-    // Ordered-bin EMD in EXACT integer arithmetic (cum sums in
-    // DECIMAL(38,0), micro result by integral division) — the oracle
-    // replays the identical sums in HUGEINT. One corpus-sized
-    // aggregate; everything after runs on the |groups|x|bins| grid.
-    // Per-source Gini concentration of document volume — "is this
-    // source many documents or three giant crawls and dust?" — the
-    // mixture-weighting / dedup-priority signal. Exact grouped-data
-    // rank formula on the (source, length) histogram; partitioned
-    // window only.
-    "source_gini" -> ((s, d) =>
-      RelationalAnalytics.giniByGroup(
-        table(s, d, "documents"), "source", "n_chars")
-        .orderBy("source")),
-    // Corpus-relative percentile rank WITHOUT the global sort SQL
-    // percent_rank demands: bounded-domain counting (histogram +
-    // two-level cumulate + broadcast rank table). The oracle computes
-    // the same number with the window it CAN afford at sf scale —
-    // the plans differ by design, the integers match bitwise.
-    "quality_percentile" -> ((s, d) =>
-      RelationalAnalytics.percentileRank(
-        table(s, d, "documents"), "doc_id", "n_chars", bucketWidth = 64L)
-        .orderBy("doc_id")),
-    "privacy_t_closeness" -> ((s, d) =>
-      Anonymity.tClosenessCard(table(s, d, "documents"),
-        Seq("lang", "source"), "n_chars", bucketWidth = 64L,
-        tMicro = 150000L)
-        .orderBy("lang", "source")),
-    "pii_redact" -> ((s, d) => {
-      val aug = concat(col("text"),
-        when(col("doc_id") % 3 === 0,
-          concat(lit(" contact user"), col("doc_id").cast("string"),
-            lit("@example.com"))).otherwise(lit("")),
-        when(col("doc_id") % 5 === 0,
-          concat(lit(" call 555-"),
-            lpad((col("doc_id") % 10000).cast("string"), 4, "0"))).otherwise(lit("")),
-        when(col("doc_id") % 7 === 0,
-          concat(lit(" host 10.0."), (col("doc_id") % 256).cast("string"),
-            lit("."), ((col("doc_id") * 7) % 256).cast("string"))).otherwise(lit("")))
-      Pii.scrub(table(s, d, "documents").withColumn("text", aug), "doc_id", "text")
-        .orderBy("doc_id")
-    }),
-    // Exact per-type value quantiles (approx_percentile is the 100 TB
-    // path, pinned against this exact operator in ScalaTest).
-    "events_quantiles" -> ((s, d) =>
-      graft.streaming.EventPipeline.typeValueQuantiles(
-        table(s, d, "events"), Seq(0.5, 0.9, 0.99))
-        .orderBy("event_type", "q")),
-    // The unbounded-group scale path: approx_percentile sketch, driver-
-    // verified via its rank guarantee (`approx_rank_ok` must be TRUE in
-    // every row) alongside the exact oracle-matched quantile value.
-    "events_quantiles_approx" -> ((s, d) =>
-      graft.streaming.EventPipeline.typeValueQuantilesApprox(
-        table(s, d, "events"), Seq(0.5, 0.9, 0.99))
-        .orderBy("event_type", "q")),
-    "tfidf_top_terms" -> ((s, d) =>
-      TextAnalysis.tfIdfTopTerms(table(s, d, "documents"), "doc_id", "text", topK = 3)
-        .orderBy("doc_id", "rnk")),
-    // Corpus 3-gram saturation curve over 10 arrival-order buckets:
-    // new-vs-seen distinct grams per bucket — the "is more data still
-    // new data" card behind collect-more vs dedup-harder decisions.
-    // Grams shuffle as md5 fingerprints; exact integer counts.
-    "corpus_saturation" -> ((s, d) =>
-      TextAnalysis.saturationCurve(table(s, d, "documents"),
-        "doc_id", "text", n = 3, buckets = 10)
-        .orderBy("bucket")),
-    // Rank-biased overlap between the lexical and vector top-10 for
-    // the same information need — the retriever-agreement card
-    // (Webber et al. 2010). Chained p-powers, nano-quantized terms,
-    // exact integer sum; the oracle rebuilds both lists and the sum.
-    "retrieval_rbo" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
-      val lex = Retrieval.bm25TopK(table(s, d, "documents"), "doc_id", "text",
-        Seq("dup", "hash", "merge"), k = 10)
-        .select(lit(0L).as("query_id"), col("doc_id"),
-          col("rnk").as("lex_rnk"))
-      val wv = Window
-        .partitionBy(Retrieval.singlePartitionKey(col("doc_id")))
-        .orderBy(col("cos").desc, col("doc_id"))
-      val vec = table(s, d, "embeddings")
-        .select(col("vec_id").as("doc_id"),
-          round(GraftFunctions.knnCosineSimilarity(col("embedding"),
-            typedLit(queryVec(s, d).toSeq)), 6).as("cos"))
-        .orderBy(col("cos").desc, col("doc_id")).limit(10)
-        .withColumn("vec_rnk", row_number().over(wv).cast("long"))
-        .select(lit(0L).as("query_id"), col("doc_id"), col("vec_rnk"))
-      Retrieval.rankBiasedOverlap(lex, vec, "query_id", "doc_id",
-        "lex_rnk", "vec_rnk", k = 10)
-        .orderBy("query_id")
-    }),
-    // Term burstiness (Church & Gale 1995): exact variance-to-mean
-    // ratio of per-doc counts, zeros included — the content-word vs
-    // function-word separation IDF only approximates. One explode
-    // aggregate + per-term moments; top-25 by cf.
-    "term_burstiness" -> ((s, d) =>
-      TextAnalysis.termBurstiness(table(s, d, "documents"),
-        "doc_id", "text", k = 25)),
-    // Per-source hapax rate — vocabulary richness: templates collapse
-    // it toward 0, noise inflates it toward 1, prose sits between.
-    "source_hapax" -> ((s, d) =>
-      TextAnalysis.hapaxRate(table(s, d, "documents"), "source", "text")
-        .orderBy("source")),
-    // Yule's K + Simpson repeat-rate per source — the inverse signal
-    // of hapax from the same term relation: lexical CONCENTRATION
-    // (authorship/genre constant; boilerplate rises, prose sits low).
-    "source_yule" -> ((s, d) =>
-      TextAnalysis.lexicalConcentration(
-        table(s, d, "documents"), "source", "text")
-        .orderBy("source")),
-    // Postings-at-rest census: per-term df/cf/doc-range and the max
-    // doc-id gap (the delta-encoding width driver) for the vocabulary
-    // head — gaps via a term-partitioned lag window, top-k via
-    // TakeOrderedAndProject.
-    "retrieval_postings" -> ((s, d) =>
-      Retrieval.postingsStats(table(s, d, "documents"), "doc_id", "text",
-        k = 20)
-        .orderBy("rnk")),
-    // PMI-lift collocation mining: adjacent-pair counts vs unigram
-    // marginals in exact DECIMAL integral arithmetic (no cross-engine
-    // log; lift is PMI's monotone transform, so the ranking is PMI's).
-    // Vocab-sized count relations, broadcast totals, top-k via
-    // TakeOrderedAndProject.
-    "text_collocations" -> ((s, d) =>
-      TextAnalysis.collocations(table(s, d, "documents"), "doc_id", "text",
-        minCount = 5, k = 20)
-        .orderBy("rnk")),
-    // Unicode canonicalization (the C4/CCNet pre-pass): NFC compose +
-    // accent-strip through the codegen UnicodeKernels, which every
-    // fingerprint operator needs upstream (composed é and decomposed
-    // e+U+0301 are different bytes, so un-normalized corpora defeat
-    // exact AND near dedup). The corpus is extended in-plan with a
-    // mixed composed/decomposed suffix so the row exercises REAL
-    // normalization on every document — the synthetic corpus is pure
-    // ASCII, where NFC is the identity. Oracle = DuckDB's utf8proc
-    // implementations of the same UAX #15 forms.
-    "text_normalize" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val suffix = " caf\u00e9 cafe\u0301 n\u0303o \u212b"
-      table(s, d, "documents")
-        .select(col("doc_id"),
-          concat(coalesce(col("text"), lit("")), lit(suffix)).as("s"))
-        .select(col("doc_id"),
-          length(col("s")).cast("long").as("raw_chars"),
-          length(GraftFunctions.nfcNormalize(col("s"))).cast("long").as("nfc_chars"),
-          (GraftFunctions.nfcNormalize(col("s")) =!= col("s")).as("changed"),
-          md5(GraftFunctions.nfcNormalize(col("s")).cast("binary")).as("nfc_md5"),
-          md5(GraftFunctions.stripAccents(col("s")).cast("binary")).as("plain_md5"))
-        .orderBy("doc_id")
-    }),
-    // Mojibake (encoding-damage) triage — the ftfy-class routing pass:
-    // UTF-8-misdecoded-as-Latin-1 signatures (lead Â/Ã/â + a
-    // continuation-range char) are planted in-plan on four id strides
-    // (2-byte accents, the 3-byte punctuation block, a repeat, and a
-    // DECOY lead with no continuation that must NOT flag); the card
-    // counts signature bigrams + raw continuation chars scan-locally.
-    // The oracle runs the same regex class in DuckDB's RE2 — an
-    // independent engine's detector must agree hit-for-hit.
-    "text_mojibake" -> ((s, d) => {
-      val v = col("doc_id") % 5
-      val planted = table(s, d, "documents")
-        .select(col("doc_id").as("id"),
-          concat(coalesce(col("text"), lit("")),
-            when(v === 1, lit(MojiAccents))
-              .when(v === 2, lit(MojiPunct))
-              .when(v === 3, lit(MojiUmlaut))
-              .when(v === 4, lit(MojiDecoy))
-              .otherwise(lit(""))).as("text"))
-      Mojibake.card(planted, "id", "text").orderBy("id")
-    }),
-    // Corpus diversity card: distinct-n ratios for n=1..3 (n=1 is the
-    // type-token ratio; falling 2/3-gram ratios flag template spam and
-    // synthetic mode collapse). Grams shuffle as MD5 fingerprints —
-    // bounded key width at any n; the 100 TB variant swaps exact
-    // count(distinct) for approx_count_distinct (spec-pinned).
-    "corpus_diversity" -> ((s, d) =>
-      TextAnalysis.ngramDiversity(table(s, d, "documents"), "text")
-        .orderBy("n")),
-    // Per-dimension embedding profile — the encoder-drift monitor:
-    // exact µ-integer moments (DECIMAL(38) sums, integer-division
-    // variance), ONE aggregate to dim rows. A shifted mean or
-    // collapsed variance flags an encoder regression before any
-    // downstream metric moves.
-    "embedding_profile" -> ((s, d) =>
-      EmbeddingQuality.dimProfile(table(s, d, "embeddings"), "embedding")
-        .orderBy("dim")),
-    // Chi-square drift card between corpus snapshots (doc_id halves,
-    // the corpus_diff split) over token-count buckets: integer counts
-    // + one identical-shape double expression → oracle-exact.
-    "corpus_drift" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      TextAnalysis.bucketDrift(
-        docs.filter(col("doc_id") < 250), docs.filter(col("doc_id") >= 250),
-        "text").orderBy("bucket")
-    }),
-    // BPE subword tokenizer (Sennrich 2016): corpus-trained merge
-    // table (the model card), the learned subword vocabulary, and
-    // per-doc segmentation stats. Training = ONE distributed
-    // word-count aggregate + a driver loop over the capped top-512
-    // word relation; application = codegen bpe_apply over DISTINCT
-    // words joined back (the zipfian corpus pays per word TYPE). The
-    // oracle re-runs the full 16-round training loop as unrolled SQL
-    // CTEs and the application as a recursive CTE — bit-for-bit.
-    "bpe_fit" -> ((s, d) => Bpe.fitTable(s, bpeMerges(s, d)).orderBy("rank")),
-    "bpe_vocab" -> ((s, d) =>
-      Bpe.vocab(table(s, d, "documents"), "text", bpeMerges(s, d))
-        .orderBy(col("freq").desc, col("token").asc)),
-    "bpe_tokenize" -> ((s, d) =>
-      Bpe.tokenize(table(s, d, "documents"), "doc_id", "text", bpeMerges(s, d))
-        .orderBy("doc_id")),
-    // WordPiece (the BERT tokenizer): likelihood-scored merges
-    // (c_pair / (c_lhs · c_rhs) argmax on the IEEE double grid, ties
-    // UTF-8-lexicographic) and greedy longest-match inference with
-    // whole-word [UNK] fallback — the structural contrasts with BPE.
-    // The oracle replays the 16-round scored training loop as
-    // unrolled CTEs and the greedy matcher as a recursive CTE.
-    "wordpiece_fit" -> ((s, d) =>
-      WordPiece.fitTable(s, wordpieceModel(s, d)).orderBy("rank")),
-    "wordpiece_tokenize" -> ((s, d) =>
-      WordPiece.tokenize(table(s, d, "documents"), "doc_id", "text",
-        wordpieceModel(s, d))
-        .orderBy("doc_id")),
-    // Tokenizer selection card: the same corpus through all three
-    // trained families (BPE / unigram-LM / WordPiece) on one grid —
-    // fertility and bytes-per-token, with the UNK/overlong fallback
-    // counted as one token. One token-stream pass; all three
-    // segmenters run per DISTINCT word and join back broadcast.
-    "tokenizer_compare" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      TokenizerCompare.card(docs, "text", bpeMerges(s, d),
-        wordpieceModel(s, d), ugVocab(s, d))
-        .orderBy("tokenizer")
-    }),
-    // Tokenizer fertility per language — the multilingual-equity card
-    // (Petrov et al., "Language Model Tokenizers Introduce Unfairness"):
-    // subwords-per-word and bytes-per-token by lang under the SAME
-    // trained BPE; a language paying 2× the tokens pays 2× the compute
-    // and gets half the context. Exact integer sums, micro divisions.
-    "bpe_fertility_lang" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      Bpe.tokenize(docs, "doc_id", "text", bpeMerges(s, d))
-        .join(docs.select(col("doc_id"), col("lang"),
-          octet_length(col("text")).cast("long").as("n_bytes")), "doc_id")
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_docs"),
-          sum("n_words").as("n_words"),
-          sum("n_subwords").as("n_subwords"),
-          sum("n_bytes").as("n_bytes"))
-        .withColumn("fertility_micro",
-          expr("(CAST(n_subwords AS DECIMAL(38,0)) * 1000000) div n_words"))
-        .withColumn("bytes_per_token_micro",
-          expr("(CAST(n_bytes AS DECIMAL(38,0)) * 1000000) div n_subwords"))
-        .orderBy("lang")
-    }),
-    // Exact integer k-means (Lloyd's) over the embedding corpus: the
-    // clustering primitive under SemDeDup / cluster-balanced mixing /
-    // IVF coarse quantizers, run entirely in µ-integer arithmetic so
-    // the model is bit-reproducible under ANY partitioning (float
-    // k-means is not). Per iteration: one scan-local codegen
-    // assignment pass + one (cluster, dim)-keyed BIGINT-sum aggregate
-    // whose k·dim-row output is the only driver state. The oracle
-    // re-runs all Iters Lloyd's rounds as unrolled CTEs — bit-for-bit
-    // centroids, sizes, and assignments.
-    "kmeans_fit" -> ((s, d) =>
-      KMeansExact.fitTable(table(s, d, "embeddings"), "vec_id", "embedding",
-        kmeansModel(s, d)).orderBy("cluster", "dim")),
-    "kmeans_assign" -> ((s, d) =>
-      KMeansExact.assign(table(s, d, "embeddings"), "vec_id", "embedding",
-        kmeansModel(s, d)).orderBy("vec_id")),
-    // Centroid-based silhouette per cluster — the "is k right" card:
-    // exact integer L2 against the broadcast codebook, rounded
-    // (b−a)/max(a,b) means in DECIMAL.
-    "kmeans_silhouette" -> ((s, d) =>
-      KMeansExact.silhouette(table(s, d, "embeddings"), "vec_id", "embedding",
-        kmeansModel(s, d))),
-    // DBSCAN (Ester et al. 1996) over the PCA-style 2-D projection
-    // (first two embedding dims, µ-quantized): unknown-count,
-    // arbitrary-shape clusters plus a principled NOISE set — what
-    // k-means cannot produce. Grid-blocked ε-join (3×3 cell probe, a
-    // proven superset of the ε-ball), integer-exact ball test,
-    // min-core-id labels via connected components; the oracle replays
-    // the quadratic definition with a recursive min-label CTE.
-    "cluster_dbscan" -> ((s, d) =>
-      dbscanLabels(s, d)
-        .withColumnRenamed("id", "vec_id")
-        .orderBy("vec_id")),
-    // Per-cluster triage card over the same run: size + core/border
-    // split per cluster, the noise row as cluster −1.
-    "cluster_dbscan_card" -> ((s, d) =>
-      DensityCluster.dbscanSummary(dbscanLabels(s, d))),
-    // MAUVE-shaped distribution check: each source's k-means cluster
-    // histogram vs the corpus histogram, scored by Jensen-Shannon on
-    // exact integer-ratio log grids.
-    "embedding_js_divergence" -> ((s, d) =>
-      EmbeddingQuality.sourceJsDivergence(
-        table(s, d, "embeddings"), "vec_id", "embedding",
-        table(s, d, "documents"), "doc_id", "source",
-        kmeansModel(s, d))),
-    // Sinkhorn transport drift between two corpus slices over the
-    // same centroid grid — the geometry-aware severity JS lacks (mass
-    // moving one cluster over costs less than mass crossing the
-    // space). Rational Gibbs kernel + BigInt driver iterations on
-    // k-vector state; the marginal-violation honesty metric rides the
-    // row. Oracle unrolls the identical 10 rounds as HUGEINT CTEs.
-    "embedding_ot_drift" -> ((s, d) =>
-      OptimalTransport.sinkhornDrift(
-        table(s, d, "embeddings"), "vec_id", "embedding",
-        table(s, d, "documents")
-          .select(col("doc_id"), (col("doc_id") % 2 === 0).as("ga")),
-        "doc_id", "ga", kmeansModel(s, d))),
-    // Okapi BM25 lexical retrieval top-10 for a 3-term query (one
-    // corpus-rare term + two ubiquitous ones — the realistic shape:
-    // the rare term's idf dominates). Per-term contributions rounded
-    // then summed in DECIMAL; final top-k is TakeOrderedAndProject.
-    "retrieval_bm25" -> ((s, d) =>
-      Retrieval.bm25TopK(table(s, d, "documents"), "doc_id", "text",
-        Seq("dup", "hash", "merge"), k = 10)
-        .orderBy("rnk")),
-    // Query-likelihood retrieval (Dirichlet μ=2000) on the same query
-    // — the LM-based classic beside BM25, same slim two-pass scan,
-    // rounded-log pieces combined exactly in DECIMAL.
-    "retrieval_ql_dirichlet" -> ((s, d) =>
-      Retrieval.queryLikelihoodTopK(table(s, d, "documents"), "doc_id", "text",
-        Seq("dup", "hash", "merge"), k = 10)
-        .orderBy("rnk")),
-    // RM3 pseudo-relevance feedback: the interpolated expansion-model
-    // card (term weights from the QL top-10's relevance model) and
-    // the weighted-QL second pass, whose scores are pure BIGINTs in
-    // 1e-12 units — zero float accumulation.
-    "retrieval_rm3_terms" -> ((s, d) =>
-      Retrieval.rm3Model(table(s, d, "documents"), "doc_id", "text",
-        Seq("dup", "hash", "merge"))
-        .orderBy(col("weight_micro").desc, col("term"))),
-    "retrieval_rm3" -> ((s, d) =>
-      Retrieval.rm3TopK(table(s, d, "documents"), "doc_id", "text",
-        Seq("dup", "hash", "merge"), k = 10)
-        .orderBy("rnk")),
-    // Late-interaction (multi-vector) retrieval: ColBERT-style maxsim
-    // over a token-level embedding relation — every other retrieval
-    // and ANN row scores ONE vector per document (mirroring the
-    // reference's single-embedding store); this row scores per-token.
-    // Fixture: embeddings become doc token bags (8 tokens per doc,
-    // doc_id = vec_id div 8); 4 queries of 4 token vectors each
-    // (vec_id < 16, qid = vec_id % 4). Exact path — bounded query
-    // batch broadcast, two hash aggregates, k-slot top-k; the oracle
-    // replays the full score matrix in DuckDB.
-    "retrieval_maxsim" -> ((s, d) => {
-      val emb = table(s, d, "embeddings")
-      val qt = emb.filter(col("vec_id") < 16)
-        .select((col("vec_id") % 4).as("qid"), col("vec_id").as("qtok"),
-          col("embedding"))
-      val dt = emb.select(expr("vec_id div 8").as("doc_id"),
-        col("embedding"))
-      Retrieval.maxSimTopK(qt, "qid", "qtok", dt, "doc_id", "embedding",
-        k = 5)
-        .orderBy("qid", "rnk")
-    }),
-    // Late interaction AT REST: the same 4-query maxsim batch served
-    // from the IVF-partitioned multi-vector store (doc token vectors
-    // written partitionBy(cluster_id), per-token centroid routing,
-    // probed-partition scan). Full breadth (searchTopSize = 8 = all
-    // clusters) ⇒ bit-for-bit the exact maxsim, so the oracle is the
-    // same exact SQL as retrieval_maxsim; pruned-breadth doc recall is
-    // pinned as a grid in MaxSimSpec. The store build is a per-sf
-    // offline artifact (index construction is not query cost).
-    "retrieval_maxsim_ivf" -> ((s, d) => {
-      val (path, model) = maxsimIvfStore(s, d)
-      val qt = table(s, d, "embeddings").filter(col("vec_id") < 16)
-        .select((col("vec_id") % 4).as("qid"), col("vec_id").as("qtok"),
-          col("embedding"))
-      Retrieval.maxSimTopKIndexed(qt, "qid", "qtok",
-        s.read.parquet(path), model, "doc_id", "embedding",
-        k = 5, searchTopSize = 8)
-        .orderBy("qid", "rnk")
-    }),
-    // Batched BM25: three queries amortize ONE corpus scan (the shape
-    // that matters when the scan dominates); per-query top-5 via the
-    // bounded topk_by_score aggregate, never a window sort. Scores are
-    // bit-identical to the single-query path (shared contribution
-    // expression).
-    "retrieval_bm25_batch" -> ((s, d) =>
-      Retrieval.bm25BatchTopK(table(s, d, "documents"), "doc_id", "text",
-        RetrBatch, k = 5)
-        .orderBy("query_id", "rnk")),
-    // Mean reciprocal rank over the SAME 3-query BM25 batch — the
-    // batch-eval staple beside retrieval_ndcg. Per-query relevance is
-    // the all-terms-present judge; each 1/rank quantizes to the micro
-    // grid BEFORE the mean (10⁶ div r on both engines), and the
-    // denominator is the whole batch (a query with no relevant hit in
-    // its top-10 counts — that is what "mean" means in MRR).
-    "retrieval_mrr" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val ranked = Retrieval.bm25BatchTopK(docs, "doc_id", "text",
-        RetrBatch, k = 10)
-      val withRel = ranked.join(docs.select("doc_id", "text"), "doc_id")
-        .withColumn("rel", batchRelExpr)
-      Retrieval.mrrCard(withRel, "query_id", "rnk", "rel", k = 10,
-        nQueries = RetrBatch.size.toLong)
-    }),
-    // Mean average precision over the same batch — the third ranking
-    // staple. Per-query corpus relevant counts ride ONE extra scan
-    // (stack of three conditional sums), so a relevant doc the ranking
-    // missed still divides its query's AP down; every precision@r, AP,
-    // and the mean quantize by integral division on the micro grid.
-    "retrieval_map" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val ranked = Retrieval.bm25BatchTopK(docs, "doc_id", "text",
-        RetrBatch, k = 10)
-      val withRel = ranked.join(docs.select("doc_id", "text"), "doc_id")
-        .withColumn("rel", batchRelExpr)
-      val tot = docs
-        .agg(
-          sum(when(allTermsRel(RetrBatch(0)._2), 1L).otherwise(0L)).as("r1"),
-          sum(when(allTermsRel(RetrBatch(1)._2), 1L).otherwise(0L)).as("r2"),
-          sum(when(allTermsRel(RetrBatch(2)._2), 1L).otherwise(0L)).as("r3"))
-        .selectExpr("stack(3, CAST(1 AS BIGINT), r1, CAST(2 AS BIGINT), r2," +
-          " CAST(3 AS BIGINT), r3) AS (query_id, n_rel_corpus)")
-      Retrieval.mapCard(withRel, "query_id", "rnk", "rel", k = 10,
-        tot, nQueries = RetrBatch.size.toLong)
-    }),
-    // Kendall τ between the BM25 and Dirichlet-QL top-20 for the same
-    // query — the ranker-agreement card. Exact concordant/discordant
-    // counts over the ≤ 20² bounded pair join; τ leaves the integer
-    // grid once as a rounded double.
-    "eval_kendall" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val terms = Seq("dup", "hash", "merge")
-      Retrieval.kendallTau(
-        Retrieval.bm25TopK(docs, "doc_id", "text", terms, k = 20),
-        Retrieval.queryLikelihoodTopK(docs, "doc_id", "text", terms, k = 20),
-        "doc_id", "rnk")
-    }),
-    // Hybrid RAG retrieval: BM25 top-20 ∪ cosine top-20 fused by
-    // reciprocal-rank fusion (1/(60+rank)), top-10 out. The two
-    // k-bounded rank lists join in constant space; absent-in-one-list
-    // docs carry rank 0 and contribute nothing from that list.
-    "retrieval_hybrid_rrf" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
-      val lex = Retrieval.bm25TopK(table(s, d, "documents"), "doc_id", "text",
-        Seq("dup", "hash", "merge"), k = 20)
-        .select(col("doc_id"), col("rnk").as("lex_rnk"))
-      val wv = Window
-        .partitionBy(Retrieval.singlePartitionKey(col("doc_id")))
-        .orderBy(col("cos").desc, col("doc_id"))
-      val vec = table(s, d, "embeddings")
-        .select(col("vec_id").as("doc_id"),
-          round(GraftFunctions.knnCosineSimilarity(col("embedding"),
-            typedLit(queryVec(s, d).toSeq)), 6).as("cos"))
-        .orderBy(col("cos").desc, col("doc_id")).limit(20)
-        .withColumn("vec_rnk", row_number().over(wv).cast("long"))
-        .select("doc_id", "vec_rnk")
-      Retrieval.rrfFuse(lex, vec, "doc_id", "lex_rnk", "vec_rnk", k = 10)
-        .orderBy("rnk")
-    }),
-    // MMR diversified re-ranking (Carbonell–Goldstein 1998): 4 query
-    // groups (vec_id % 4, query = the group's own lowest-id vector),
-    // top-6 candidate pools by 6-dp cosine, then the greedy
-    // λ=0.7 pick-3 — the post-retrieval pass that keeps RAG contexts
-    // from being k near-copies of the best hit. The pool is k-bounded
-    // BEFORE the sequential selection (the scale contract); the
-    // oracle unrolls the same three picks as CTE stages with
-    // identical one-op IEEE arithmetic.
-    "retrieval_mmr" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      GraftFunctions.register(s)
-      val emb = table(s, d, "embeddings")
-      val q = emb.filter(col("vec_id") < 4)
-        .select(col("vec_id").as("g"), col("embedding").as("qv"))
-      val w = Window.partitionBy("g").orderBy(col("rel").desc, col("vec_id"))
-      val pool = emb
-        .select((col("vec_id") % 4).as("g"), col("vec_id"), col("embedding"))
-        .join(broadcast(q), "g")
-        .select(col("g"), col("vec_id"), col("embedding"),
-          round(GraftFunctions.knnCosineSimilarity(col("embedding"),
-            col("qv")), 6).as("rel"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= 6).drop("rn")
-      Retrieval.mmrRerank(pool, "g", "vec_id", "embedding", "rel", k = 3)
-        .orderBy("g", "rnk")
-    }),
-    // Positional retrieval — exact phrase and term proximity, the
-    // capability bag-of-words BM25 cannot express. Positions are
-    // derived IN the scan (array HOFs over the token split); no
-    // positional postings ever shuffle — the only exchange is the
-    // k-row TakeOrderedAndProject boundary.
-    "retrieval_phrase" -> ((s, d) =>
-      Retrieval.phraseTopK(table(s, d, "documents"), "doc_id", "text",
-        Seq("table", "hash"), k = 10).orderBy("rnk")),
-    "retrieval_proximity" -> ((s, d) =>
-      Retrieval.proximityTopK(table(s, d, "documents"), "doc_id", "text",
-        "vector", "join", window = 5, k = 10).orderBy("rnk")),
-    // Zipf-frequency document quality: mean log10 corpus frequency of
-    // each doc's tokens (rare-token-heavy docs — OCR noise, gibberish —
-    // score low). Per-token logs rounded then summed in DECIMAL, so the
-    // score is partition-order independent.
-    "doc_logfreq" -> ((s, d) =>
-      TextAnalysis.tokenLogFreqScore(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("doc_id")),
-    // CCNet-style calibrated gate: per-language logfreq terciles from
-    // the corpus's own distribution (head/middle/tail buckets), never a
-    // hardcoded constant. Buckets (not raw interpolated thresholds) are
-    // the output, so the oracle's quantile interpolation matches.
-    "doc_logfreq_buckets" -> ((s, d) =>
-      TextAnalysis.logFreqBuckets(table(s, d, "documents"), "doc_id", "text", "lang")
-        .orderBy("doc_id")),
-    // Top-k per group via the custom TypedImperativeAggregate — the
-    // map-side-partial alternative to a row_number window: the shuffle
-    // carries at most k (score, id) pairs per group per task instead of
-    // every row, and no per-group sort ever materializes. Oracle = the
-    // window formulation, proving the two are equivalent.
-    "events_topk_agg" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "events")
-        .groupBy("event_type")
-        .agg(GraftFunctions.topKByScore(col("value"), col("event_id"), 3).as("top"))
-        .select(col("event_type"), posexplode(col("top")))
-        .select(col("event_type"), (col("pos") + 1).cast("long").as("rnk"),
-          col("col.id").as("event_id"), round(col("col.score"), Scale).as("score"))
-        .orderBy("event_type", "rnk")
-    }),
-    // Window ranking: top-3 longest docs per language.
-    "top_docs_per_lang" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy("lang").orderBy(col("n_chars").desc, col("doc_id"))
-      table(s, d, "documents")
-        .withColumn("rnk", row_number().over(w).cast("long"))
-        .filter(col("rnk") <= 3)
-        .select("lang", "doc_id", "n_chars", "rnk")
-        .orderBy("lang", "rnk")
-    }),
-    // Set operations: EXCEPT and INTERSECT over filtered id sets.
-    "docs_setops" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      val en = docs.filter(col("lang") === "en").select("doc_id")
-      val longDocs = docs.filter(size(split(col("text"), " ")) >= 60).select("doc_id")
-      en.except(longDocs).withColumn("op", lit("except"))
-        .unionByName(en.intersect(longDocs).withColumn("op", lit("intersect")))
-        .orderBy("op", "doc_id")
-    }),
-    // Hierarchical aggregation: ROLLUP(lang, source).
-    "lang_source_rollup" -> ((s, d) =>
-      table(s, d, "documents")
-        .rollup("lang", "source")
-        .agg(count(lit(1)).as("n_docs"))
-        .orderBy(col("lang").asc_nulls_first, col("source").asc_nulls_first)),
-    // ---- relational analytics over the TPC-H star schema (warehouse
-    // side of a training-data pipeline). Each query exercises one scale
-    // pattern: partial aggregation, broadcast dimension joins, semi/anti
-    // joins, grouping sets, explicit skew salting, bucketed co-location.
-    "tpch_q1_pricing" -> ((s, d) =>
-      RelationalAnalytics.pricingSummary(table(s, d, "lineitem"), "2000-09-01")),
-    "tpch_q3_top_orders" -> ((s, d) =>
-      RelationalAnalytics.topRevenueOrders(
-        table(s, d, "customer"), table(s, d, "orders"), table(s, d, "lineitem"),
-        segment = "BUILDING", cutoff = "1996-03-15", k = 10)),
-    // TPC-H Q18 shape: the IN-(HAVING) subquery computed ONCE and
-    // reused as the probe side — one lineitem scan, AQE-broadcast
-    // detail joins, exact decimal quantity sums.
-    "tpch_q18_large_orders" -> ((s, d) =>
-      RelationalAnalytics.largeVolumeCustomers(
-        table(s, d, "customer"), table(s, d, "orders"),
-        table(s, d, "lineitem"), minTotalQty = 150.0, k = 100)),
-    "tpch_q5_region_volume" -> ((s, d) =>
-      RelationalAnalytics.regionalSupplierVolume(
-        table(s, d, "region"), table(s, d, "nation"), table(s, d, "customer"),
-        table(s, d, "supplier"), table(s, d, "orders"), table(s, d, "lineitem"),
-        regionName = "ASIA", yearStart = "1996-01-01", yearEnd = "1997-01-01")),
-    "cust_no_orders_anti" -> ((s, d) =>
-      RelationalAnalytics.customersWithoutOrders(
-        table(s, d, "customer"), table(s, d, "orders"),
-        from = "1995-01-01", until = "1995-03-01")),
-    "order_priority_semi" -> ((s, d) =>
-      RelationalAnalytics.bulkOrderPriorities(
-        table(s, d, "orders"), table(s, d, "lineitem"), minQty = 45)),
-    "segment_status_cube" -> ((s, d) =>
-      RelationalAnalytics.segmentStatusCube(
-        table(s, d, "customer"), table(s, d, "orders"))),
-    "top_parts_per_brand" -> ((s, d) =>
-      RelationalAnalytics.topPartsPerBrand(
-        table(s, d, "part"), table(s, d, "lineitem"), k = 3)),
-    // FD-discovery card (Papenbrock-style, cardinality algebra): does
-    // each LHS value determine one RHS? One check that holds (unique
-    // key) and two that fail with exact violation counts.
-    "profile_fds" -> ((s, d) => {
-      val fd = graft.operators.Profiling.functionalDependency _
-      fd(table(s, d, "orders"), "orders", "o_orderkey", "o_orderpriority")
-        .unionByName(fd(table(s, d, "lineitem"), "lineitem",
-          "l_orderkey", "l_returnflag"))
-        .unionByName(fd(table(s, d, "part"), "part", "p_brand", "p_type"))
-        .orderBy("relation", "dependency")
-    }),
-    // Referential-integrity card: orphan fact rows vanish silently
-    // from inner joins — count them per FK edge of the star schema.
-    "profile_ri" -> ((s, d) => {
-      val ri = graft.operators.Profiling.referentialIntegrity _
-      ri(table(s, d, "orders"), "o_custkey",
-        table(s, d, "customer"), "c_custkey", "orders->customer")
-        .unionByName(ri(table(s, d, "lineitem"), "l_orderkey",
-          table(s, d, "orders"), "o_orderkey", "lineitem->orders"))
-        .unionByName(ri(table(s, d, "lineitem"), "l_partkey",
-          table(s, d, "part"), "p_partkey", "lineitem->part"))
-        .orderBy("relation")
-    }),
-    // TPC-H Q7: bilateral nation-pair trade volume by ship year —
-    // both nation maps broadcast, facts join on keys only.
-    "tpch_q7_volume_shipping" -> ((s, d) =>
-      RelationalAnalytics.volumeShipping(
-        table(s, d, "nation"), table(s, d, "customer"),
-        table(s, d, "supplier"), table(s, d, "orders"),
-        table(s, d, "lineitem"), "NATION_3", "NATION_7",
-        from = "1996-01-01", until = "1998-01-01")),
-    // TPC-H Q8: one nation's market share of a region's PROMO-part
-    // spend by order year — exact DECIMAL sums, one rounded division.
-    "tpch_q8_market_share" -> ((s, d) =>
-      RelationalAnalytics.marketShare(
-        table(s, d, "region"), table(s, d, "nation"),
-        table(s, d, "customer"), table(s, d, "supplier"),
-        table(s, d, "orders"), table(s, d, "lineitem"),
-        table(s, d, "part"), regionName = "ASIA", partType = "PROMO",
-        targetNation = "NATION_5",
-        from = "1996-01-01", until = "1998-01-01")),
-    // TPC-H Q14: promotion share of one month's revenue.
-    "tpch_q14_promo" -> ((s, d) =>
-      RelationalAnalytics.promoRevenue(
-        table(s, d, "lineitem"), table(s, d, "part"),
-        from = "1996-03-01", until = "1996-04-01")),
-    // TPC-H Q15: supplier(s) at the quarter's max revenue (ties all
-    // surface) — one aggregate + a 1-row max broadcast.
-    "tpch_q15_top_supplier" -> ((s, d) =>
-      RelationalAnalytics.topSupplier(
-        table(s, d, "supplier"), table(s, d, "lineitem"),
-        from = "1996-01-01", until = "1996-04-01")),
-    // TPC-H Q17: revenue lost to small-quantity orders of one brand's
-    // small parts; the 20%-of-average filter is exact
-    // cross-multiplication, no division in the comparison.
-    "tpch_q17_small_qty" -> ((s, d) =>
-      RelationalAnalytics.smallQuantityRevenue(
-        table(s, d, "lineitem"), table(s, d, "part"),
-        brand = "Brand#3", sizeCap = 15)),
-    // TPC-H Q22 (adapted — nation stands in for the phone country
-    // code this schema lacks): rich inactive customers per nation;
-    // scalar-average broadcast + anti join + group count.
-    "tpch_q22_global_sales" -> ((s, d) =>
-      RelationalAnalytics.globalSalesOpportunity(
-        table(s, d, "customer"), table(s, d, "orders"),
-        table(s, d, "nation"),
-        from = "1996-01-01", until = "1998-01-01")),
-    // Pre-flight join-size profile: exact per-key pair cardinality of
-    // a planned orders ⋈ lineitem join on a deliberately skewed key
-    // (residues 9..19 collapse onto 9, so one key is quadratically
-    // hot) — the salt/plain planning card, from two key-count
-    // aggregates; the fact tables never join.
-    "join_size_profile" -> ((s, d) =>
-      RelationalAnalytics.joinSizeProfile(
-        table(s, d, "orders")
-          .select(expr("least(o_orderkey % 20, 9)").as("key")), "key",
-        table(s, d, "lineitem")
-          .select(expr("least(l_orderkey % 20, 9)").as("key")), "key",
-        k = 10)),
-    // TPC-H Q2 (adapted — the part-supplier catalog is derived from
-    // lineitem, supply cost = min observed extendedprice): for each
-    // STANDARD part of size ≤ 20, the EUROPE supplier(s) at the
-    // part's regional minimum cost. Correlated-min via aggregate +
-    // broadcast join-back; total-order top-100.
-    "tpch_q2_min_cost_supp" -> ((s, d) =>
-      RelationalAnalytics.minCostSupplier(
-        table(s, d, "region"), table(s, d, "nation"),
-        table(s, d, "supplier"), table(s, d, "part"),
-        table(s, d, "lineitem"), regionName = "EUROPE",
-        partType = "STANDARD", sizeCap = 20, k = 100)),
-    // TPC-H Q4 (adapted — late = shipped >60d after order date):
-    // orders in a quarter with at least one late line, by priority.
-    // The EXISTS predicate references both sides, so it stays a
-    // conditioned semi join, never a key-only one.
-    "tpch_q4_priority_check" -> ((s, d) =>
-      RelationalAnalytics.orderPriorityCheck(
-        table(s, d, "orders"), table(s, d, "lineitem"),
-        from = "1996-01-01", until = "1996-04-01", lateDays = 60)),
-    // TPC-H Q9 (adapted — unit supply cost proxied as 10% of
-    // p_retailprice): profit on 'red' parts by supplier nation and
-    // order year; the five-table join pyramid with a negative-capable
-    // measure, exact decimal sums.
-    "tpch_q9_product_profit" -> ((s, d) =>
-      RelationalAnalytics.productTypeProfit(
-        table(s, d, "nation"), table(s, d, "supplier"),
-        table(s, d, "part"), table(s, d, "orders"),
-        table(s, d, "lineitem"), nameContains = "red")),
-    // TPC-H Q11 (adapted — part value = exact decimal sum of the
-    // nation's lineitem extendedprice): parts above 1/800 of the
-    // nation total; scalar-subquery threshold as an exact
-    // cross-multiplied comparison against a 1-row broadcast.
-    "tpch_q11_important_parts" -> ((s, d) =>
-      RelationalAnalytics.importantParts(
-        table(s, d, "nation"), table(s, d, "supplier"),
-        table(s, d, "lineitem"), nationName = "NATION_3",
-        fracDen = 800)),
-    // TPC-H Q12 (adapted — shipmode derived from l_linenumber mod 3,
-    // late = the shipdate-lag proxy): urgent vs other late lines per
-    // mode over one ship year.
-    "tpch_q12_shipmode" -> ((s, d) =>
-      RelationalAnalytics.shipmodePriority(
-        table(s, d, "orders"), table(s, d, "lineitem"),
-        from = "1996-01-01", until = "1997-01-01", lateDays = 60)),
-    // TPC-H Q16 (adapted — partsupp = distinct fact-table pairs,
-    // complaints = negative balance): distinct-supplier counts per
-    // (brand, type, size) over the qualifying part grid.
-    "tpch_q16_supplier_counts" -> ((s, d) =>
-      RelationalAnalytics.partSupplierCounts(
-        table(s, d, "part"), table(s, d, "supplier"),
-        table(s, d, "lineitem"), excludeBrand = "Brand#5",
-        excludeType = "PROMO", sizes = Seq(1, 5, 10, 15, 20, 25, 30, 35))),
-    // TPC-H Q20 (adapted — availability = all-time shipped quantity):
-    // suppliers of 'blue' parts whose 1996 shipments exceed half
-    // their all-time quantity, in three nations; nested aggregate +
-    // exact half-test + distinct semi join up the dimensions.
-    "tpch_q20_promotable_supp" -> ((s, d) =>
-      RelationalAnalytics.promotablePartSuppliers(
-        table(s, d, "nation"), table(s, d, "supplier"),
-        table(s, d, "part"), table(s, d, "lineitem"),
-        namePrefix = "blue",
-        nationNames = Seq("NATION_3", "NATION_8", "NATION_12"),
-        from = "1996-01-01", until = "1997-01-01")),
-    // TPC-H Q21 (adapted — late = the shipdate-lag proxy): suppliers
-    // in four nations who were the ONLY late supplier on finished
-    // multi-supplier orders — the exists/not-exists double
-    // correlation collapsed into one per-order aggregate join.
-    "tpch_q21_waiting_supp" -> ((s, d) =>
-      RelationalAnalytics.waitingSuppliers(
-        table(s, d, "nation"), table(s, d, "supplier"),
-        table(s, d, "orders"), table(s, d, "lineitem"),
-        nationNames = Seq("NATION_3", "NATION_8", "NATION_12", "NATION_13"),
-        lateDays = 60, k = 100)),
-    // TPC-H Q19: disjunctive brand × size × quantity bands in ONE
-    // scan — the predicate-pushdown-of-ORs query.
-    "tpch_q19_disjunct" -> ((s, d) =>
-      RelationalAnalytics.discountedRevenue(
-        table(s, d, "lineitem"), table(s, d, "part"),
-        Seq(("Brand#1", 5, 1L, 11L), ("Brand#2", 10, 10L, 20L),
-          ("Brand#3", 15, 20L, 30L)))),
-    // Skew-salted fact⋈fact join (hot orderkeys split across 4 salt
-    // buckets, cold remainder joined plainly) — result must equal the
-    // plain join, which is exactly what the oracle checks. The TPC-H
-    // data is deliberately unskewed, so hotKeyMinCount is set low
-    // purely to push real volume through BOTH the salted and the cold
-    // path; production thresholds target only keys hotter than an
-    // executor (the bench delta vs the plain join is the price of the
-    // detection pass + replication, paid only when skew warrants it).
-    // Benford first-digit screen on order totals (exact cents grid):
-    // the fabricated-numbers triage — string-first-char digit
-    // extraction (no log10 boundary ulps), integral micro shares vs
-    // the 6-dp public Benford constants.
-    "orders_benford" -> ((s, d) =>
-      BenfordAudit.screenCard(
-        table(s, d, "orders").select(
-          round(col("o_totalprice") * 100).cast("long").as("cents")),
-        "cents")),
-    "orders_salted_join" -> ((s, d) => {
-      val li = table(s, d, "lineitem")
-      val ord = table(s, d, "orders")
-        .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-      SkewJoin.saltedInnerJoin(li, ord, "l_orderkey", buckets = 4, hotKeyMinCount = 5L)
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n_lines"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(18,6)")).cast("double").as("rev"))
-        .orderBy("o_orderpriority")
-    }),
-    // Bloom-pruned fact⋈dim join: a Bloom filter over the selective dim
-    // side's keys drops non-matching fact rows AT THE SCAN (codegen'd
-    // probe before the exchange); the exact join removes the false
-    // positives, so the result — and the oracle — is the plain join.
-    "bloom_join_prune" -> ((s, d) => {
-      val urgent = table(s, d, "orders")
-        .filter(col("o_orderpriority") === "1-URGENT")
-        .select("o_orderkey")
-      BloomJoin.prunedJoin(table(s, d, "lineitem"), "l_orderkey",
-          urgent, "o_orderkey", expectedItems = 200000L, fpp = 0.01)
-        .groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n_lines"),
-          sum(col("l_quantity").cast("decimal(18,6)")).cast("double").as("sum_qty"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(18,6)")).cast("double").as("rev"))
-        .orderBy("l_returnflag")
-    }),
-    // Shuffle-free co-located join: both fact tables written bucketed by
-    // orderkey (one-time layout cost), then joined with ZERO exchanges —
-    // the 100 TB recurring-join pattern. Plan assert in ScalaTest.
-    "bucketed_colocated_join" -> ((s, d) => {
-      val (liTbl, ordTbl) = bucketedStore(s, d)
-      s.table(liTbl)
-        .join(s.table(ordTbl), col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_lines"),
-          sum((col("l_extendedprice") * (lit(1.0) - col("l_discount")))
-            .cast("decimal(18,6)")).cast("double").as("rev"))
-        .orderBy("o_orderstatus")
-    }),
-    // Multimodal: opaque binary payload + metadata (plumbing oracle) and
-    // stubbed feature extraction (rows-only).
-    "multimodal_meta" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "embeddings").select(
-        col("vec_id").as("id"),
-        length(GraftFunctions.toBinaryVector(col("embedding"))).cast("long")
-          .as("payload_bytes"),
-        round(element_at(col("embedding"), 1).cast("double"), 6).as("feat0"))
-        .orderBy("id")
-    }),
-    // Custom aggregate expression: per-label centroid of the embedding
-    // column (TypedImperativeAggregate with map-side partials), exploded
-    // to scalar (label, idx, val) rows for the driver comparator. idx is
-    // 1-based to line up with DuckDB's 1-based list indexing.
-    "vector_centroids" -> ((s, d) => {
-      GraftFunctions.register(s)
-      table(s, d, "embeddings")
-        .groupBy("label")
-        .agg(GraftFunctions.vectorAvg(col("embedding")).as("centroid"))
-        .select(col("label"), posexplode(col("centroid")))
-        .select(col("label"), (col("pos") + 1).cast("long").as("idx"),
-          round(col("col"), 6).as("val"))
-        .orderBy("label", "idx")
-    }),
-    // Embedding-space outlier screen: distance-to-label-centroid
-    // z-score >= 2 flags encoder failures / mislabeled rows the text
-    // filters can't see. Centroids and distances round to 6 dp and the
-    // moment sums accumulate exactly in DECIMAL, so mean/std/z are
-    // engine-independent and the oracle rebuilds them all in DuckDB.
-    "embedding_outliers" -> ((s, d) =>
-      EmbeddingQuality.outliers(table(s, d, "embeddings"), "vec_id", "embedding",
-        "label", zThreshold = 2.0, scale = Scale).orderBy("vec_id")),
-    // Greedy k-center coreset (Gonzalez 1985; Sener & Savarese 2018)
-    // — k maximally diverse exemplars: where k-means summarizes MASS,
-    // k-center covers EXTENT. Deterministic farthest-point traversal
-    // on the shared micro-cosine grid, argmin (maxsim, id) per round;
-    // k scans + k 1-row collects, the bounded-model-state shape. The
-    // radius_micro column is the coverage curve.
-    "embedding_kcenter" -> ((s, d) =>
-      graft.operators.Coreset.kCenterSeeds(
-        table(s, d, "embeddings"), "vec_id", "embedding", k = 6)
-        .orderBy("rank")),
-    // Corpus second-moment (uncentered covariance) matrix — the
-    // one-pass PCA/whitening input (operators/Pca.scala): map-side
-    // 16 KB GramMatrix buffers, exact micro-unit accumulation, one
-    // 64×64 matrix out. Exploded to (i, j, m2) upper-triangle rows.
-    "vector_gram" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val dim = 64
-      val idx = for { i <- 1 to dim; j <- i to dim } yield (i, j)
-      val is = typedLit(idx.map(_._1))
-      val js = typedLit(idx.map(_._2))
-      table(s, d, "embeddings")
-        .agg(GraftFunctions.vectorGram(col("embedding")).as("g"))
-        .select(col("g.n").as("n"), posexplode(col("g.sums")).as(Seq("pos", "micro")))
-        .select(
-          element_at(is, col("pos") + 1).cast("long").as("i"),
-          element_at(js, col("pos") + 1).cast("long").as("j"),
-          round(col("micro") / 1e6 / col("n"), 6).as("m2"))
-        .orderBy("i", "j")
-    }),
-    // Windowed aggregation over the events stream shape (batch mode of
-    // the Structured Streaming pipeline; exact decimal sums).
-    "events_windowed" -> ((s, d) =>
-      graft.streaming.EventPipeline.windowedTypeStats(
-        table(s, d, "events"), "1 hour")
-        .orderBy("window_start", "event_type")),
-    // The SAME windowed aggregation through a real Structured
-    // Streaming micro-batch execution: parquet file source →
-    // watermarked agg → append-mode parquet sink (AvailableNow,
-    // checkpointed, state-store-backed), sink read back. Emits
-    // exactly the watermark-CLOSED windows, which the oracle replays
-    // as HAVING window_end <= max(ts) - 30 min — the driver-level
-    // streaming gate the r9 verdict asked for.
-    // Second end-to-end Structured Streaming row: the stateful DEDUP
-    // shape (per-key state, not windowed aggregation) run as a real
-    // file-source -> file-sink micro-batch over a DOUBLED copy of the
-    // event table; the sink must reproduce the clean table's per-type
-    // counts exactly (event ids are unique in the source).
-    // FOURTH end-to-end streaming mode: stream-static broadcast
-    // enrichment — events streamed through a real file source, joined
-    // per micro-batch against a static event_type→tier dimension
-    // (stateless: no watermark, no state store), parquet sink, then
-    // re-aggregated; must equal the batch join exactly.
-    "events_enrich_streamed" -> ((s, d) => {
-      val ev = table(s, d, "events")
-      val dim = ev.select(col("event_type")).distinct()
-        .select(col("event_type"),
-          (length(col("event_type")) % 3).cast("long").as("tier"))
-      graft.streaming.EventPipeline
-        .streamedStaticEnrichParity(s, ev, dim, fixtureKey = Some(d))
-        .orderBy("tier")
-    }),
-    "events_dedup_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedDedupParity(
-        s, table(s, d, "events"), "10 minutes", fixtureKey = Some(d))
-        .orderBy("event_type")),
-    "events_streamed_parity" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedWindowedTypeStats(
-        s, s"$d/events.parquet", "1 hour", "30 minutes")
-        .orderBy("window_start", "event_type")),
-    // THIRD end-to-end streaming row: the watermarked stream-stream
-    // click←view join through real file sources + parquet sink
-    // (AvailableNow). Inner joins emit on match — the watermark only
-    // bounds state — so the streamed output equals the batch join
-    // row-for-row against the same DuckDB oracle as
-    // events_stream_join.
-    "events_join_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedClickViewParity(
-        s, table(s, d, "events"), "10 minutes", horizonSeconds = 600,
-        fixtureKey = Some(d))
-        .orderBy("click_id", "view_id")),
-    // EIGHTH streaming mode: foreachBatch keyed UPSERT sink — the
-    // CDC materialized view (latest row per user), batchId-versioned
-    // writes for idempotence; order-free parity with the batch
-    // max_by.
-    "events_upsert_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedUpsertParity(
-        s, table(s, d, "events"), fixtureKey = Some(d))
-        .orderBy("user_id")),
-    // SEVENTH streaming mode: the same two-stream join LEFT OUTER —
-    // null rows emit only when the watermark proves no view can
-    // match (the no-data batch after the last data batch); clicks
-    // still inside the final horizon stay in state. The oracle
-    // encodes that closure rule explicitly.
-    "events_outer_join_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedClickViewOuterParity(
-        s, table(s, d, "events"), "10 minutes", horizonSeconds = 600,
-        fixtureKey = Some(d))
-        .orderBy("click_id", "view_id")),
-    // As-of join: each click matched to the user's most recent prior
-    // view (oracle = DuckDB's native ASOF JOIN).
-    // Discrete return-hazard life table over inter-activity gaps —
-    // hazard(k) = returns at day k / users still silent at k; the
-    // where-are-users-lost curve DAU/WAU can't localize. Censoring
-    // explicit: long gaps stay in every denominator.
-    "events_return_hazard" -> ((s, d) =>
-      graft.streaming.EventPipeline.returnHazard(
-        table(s, d, "events"), maxDays = 14)),
-    // Whale concentration: top-10-user share of each type's volume —
-    // the sampling-weight and salting-threshold warning.
-    "events_whales" -> ((s, d) =>
-      graft.streaming.EventPipeline.whaleConcentration(
-        table(s, d, "events"), k = 10)
-        .orderBy("event_type")),
-    // Seasonal hour-of-week outliers — hours breaking their own
-    // weekly rhythm: exact-median baselines per hour-of-week class,
-    // residual gate at 3× the global residual MAD. CUSUM's
-    // level-drift complement.
-    "events_seasonal_outliers" -> ((s, d) =>
-      graft.streaming.EventPipeline.seasonalOutliers(
-        table(s, d, "events"), k = 3)
-        .orderBy("hour_ts")),
-    // CUSUM change-point card (Page 1954) over the hourly event rate
-    // — accumulates small sustained drifts EWMA's level threshold
-    // misses. Sequential recurrence re-expressed as the closed form
-    // c_t − min(0, running-min c) so it's two windows on the BOUNDED
-    // hours relation, never a corpus sort. Drift allowance k=15/h,
-    // alarm h=30.
-    "events_cusum_hourly" -> ((s, d) =>
-      graft.streaming.EventPipeline.cusumHourly(
-        table(s, d, "events"), driftK = 15L, alarmH = 30L)
-        .orderBy("hour_ts")),
-    // Binary-segmentation changepoints (depth 2) over the hourly
-    // rate: exact integer between-variance gains from prefix sums,
-    // IEEE-double argmax with position tie-break — CUSUM's offline
-    // complement, the elbow read.
-    "events_changepoints" -> ((s, d) =>
-      graft.streaming.EventPipeline.binarySegmentation(
-        table(s, d, "events"), levels = 2)),
-    "events_asof" -> ((s, d) => {
-      import org.apache.spark.sql.expressions.Window
-      val ev = graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-      val clicks = ev.filter(col("event_type") === "click")
-        .select("user_id", "ts", "event_id")
-      val views = ev.filter(col("event_type") === "view")
-        .withColumn("__rn", row_number().over(
-          Window.partitionBy("user_id", "ts").orderBy(col("event_id").desc)))
-        .filter(col("__rn") === 1)
-        .select("user_id", "ts", "value")
-      TemporalJoins.asOfJoin(clicks, views, "user_id", "ts", Seq("value"))
-        .orderBy("user_id", "ts", "event_id")
-    }),
-    // Exact two-sample KS statistic between the click and view value
-    // distributions (cents grid): the classic drift gate. Histogram +
-    // two-level cumulative counts, never an unpartitioned window.
-    "events_ks_drift" -> ((s, d) =>
-      StatTests.ksTwoSample(
-        table(s, d, "events").select(col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_type", "cents", "click", "view")),
-    // First/last-touch conversion attribution: converting users credit
-    // their first event ever and the last non-purchase event before
-    // the first purchase (none → the "direct" bucket); argmin/argmax
-    // of the total (ts, event_id) order, deterministic under ties.
-    "events_attribution" -> ((s, d) =>
-      graft.streaming.EventPipeline.attribution(
-        table(s, d, "events"), conversionType = "purchase")),
-    // Exact 1-D Wasserstein (earth-mover) distance on the same cents
-    // grid — the MAGNITUDE-sensitive drift metric next to KS (max
-    // discrepancy) and PSI (bin log-odds): how far the distribution
-    // moved in metric units. Same two-level cumulative scan; the gap
-    // column adds one bounded block-minima boundary relation.
-    "events_w1_drift" -> ((s, d) =>
-      StatTests.wasserstein1(
-        table(s, d, "events").select(col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_type", "cents", "click", "view")),
-    // Per-decile shift table on the same grid — WHERE the distribution
-    // moved: exact order statistics at rank ⌈q·n/10⌉ per group and
-    // their signed gaps, separating a location shift from a tail-only
-    // regression.
-    "events_quantile_shift" -> ((s, d) =>
-      StatTests.quantileShift(
-        table(s, d, "events").select(col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_type", "cents", "click", "view")),
-    // Population stability index, view (reference) vs purchase
-    // (comparison), 10 equal-width bins over the reference's cents
-    // range — the scorecard drift card; exact integral terms.
-    "events_psi" -> ((s, d) =>
-      StatTests.psi(
-        table(s, d, "events").select(col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_type", "cents", ref = "view", cmp = "purchase")),
-    // Mann–Whitney U with midrank ties (doubled-rank integers) and the
-    // tie-corrected normal z — the rank-sum A/B test on a skewed
-    // metric where the t-test's normality assumption fails.
-    "events_mann_whitney" -> ((s, d) =>
-      StatTests.mannWhitney(
-        table(s, d, "events").select(col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_type", "cents", "click", "purchase")),
-    // Spearman ρ between doc length in chars and in tokens — midrank
-    // ties as doubled integers (the mann_whitney convention), exact
-    // DECIMAL moments, one rounded double division at the end.
-    "corpus_spearman" -> ((s, d) =>
-      StatTests.spearmanCard(
-        table(s, d, "documents").select(col("n_chars").as("x"),
-          size(split(col("text"), " ")).cast("long").as("y")),
-        "x", "y")),
-    // CUPED variance reduction: per-user pre-period spend (before the
-    // midpoint timestamp) as the covariate for post-period spend —
-    // the experiment-sensitivity card (Deng et al. 2013).
-    // Fisher randomization test on per-user spend (odd vs even user
-    // ids — a true-null split, so p should be comfortably interior):
-    // 199 seeded md5-rank re-assignments over the bounded USER
-    // relation, exact cross-multiplied integer statistic, add-one
-    // Monte-Carlo p. The variance-model-free significance companion
-    // to events_cuped/events_mannwhitney.
-    "events_permutation_test" -> ((s, d) => {
-      val units = table(s, d, "events")
-        .groupBy(col("user_id"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("y"))
-        .select(col("user_id"),
-          when(col("user_id") % 2 === 0, "a").otherwise("b").as("grp"),
-          col("y"))
-      Bootstrap.twoSampleRandomizationTest(units, "grp", "y", "a", "b",
-        "user_id", trials = 199)
-    }),
-    // Poisson bootstrap CI on per-user spend: 199 hash-weighted
-    // resamples in ONE aggregate (no per-trial rank — weights are
-    // row-independent), integral micro means, type-1 quantile pair at
-    // ranks ceil(.025 T)/ceil(.975 T). The CI companion to
-    // events_permutation_test's p-value.
-    "events_bootstrap_ci" -> ((s, d) => {
-      val units = table(s, d, "events")
-        .groupBy(col("user_id"))
-        .agg(sum(round(col("value") * 100).cast("long")).as("y"))
-      Bootstrap.poissonBootstrapCi(units, "user_id", "y", reps = 199)
-    }),
-    "events_cuped" -> ((s, d) => {
-      val ev = table(s, d, "events").select(col("user_id"),
-        // NTZ → TZ cast shifts every row by the same session-zone
-        // constant, which cancels in the `us < mid` split
-        expr("unix_micros(CAST(ts AS TIMESTAMP))").as("__us"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("__cents"))
-      val mid = ev.agg(expr("(min(__us) + max(__us)) div 2").as("__mid"))
-      val units = ev.crossJoin(broadcast(mid))
-        .groupBy(col("user_id"))
-        .agg(sum(when(col("__us") < col("__mid"), col("__cents"))
-          .otherwise(0L)).as("x"),
-          sum(when(col("__us") >= col("__mid"), col("__cents"))
-            .otherwise(0L)).as("y"))
-      StatTests.cuped(units, "x", "y")
-    }),
-    // NINTH streaming mode — COMPLETE output: unwindowed global totals
-    // re-emitted whole each micro-batch over a bounded group domain;
-    // the final table must equal the batch group-by exactly.
-    "events_totals_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedTypeTotalsComplete(
-        s, table(s, d, "events"), fixtureKey = Some(d)).orderBy("event_type")),
-    // TENTH streaming mode — Update output: per-batch delta re-emits
-    // of changed windowed counts through a real multi-batch run; the
-    // parity gate is the max over each key's monotone emissions
-    // (order-free by construction; no watermark so no order-dependent
-    // drop set). Completes the OutputMode matrix: Append family,
-    // foreachBatch, Complete, Update.
-    "events_update_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedWindowedUpdateParity(
-        s, table(s, d, "events"), fixtureKey = Some(d))
-        .orderBy("window_start", "event_type")),
-    // ELEVENTH streaming mode — WARM-START initial state
-    // (StatefulProcessorWithInitialState): a batch backfill aggregate
-    // seeds transformWithState's per-key state, only the other half
-    // of the corpus streams (RocksDB, Update output, multi-batch),
-    // and the final totals must equal the batch aggregate over the
-    // WHOLE corpus — the backfill→tail handoff with nothing lost or
-    // double-counted. Order-free parity: n_events is strictly
-    // increasing per key emission.
-    "events_warmstart_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedWarmStartParity(
-        s, table(s, d, "events"), fixtureKey = Some(d))
-        .orderBy("user_id")),
-    // TWELFTH streaming mode — MAP + LIST state: per-user event-type
-    // histogram in a MapState (sub-keyed updates touch only the
-    // batch's types) and the user's 3-largest cents in a ListState
-    // (bounded ranked buffer, associative merge); both metrics are
-    // monotone per key, so the order-free gate is max over emissions,
-    // replayed in batch by the oracle's count + top-3 window.
-    "events_mapstate_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.streamedTypeHistParity(
-        s, table(s, d, "events"), fixtureKey = Some(d))
-        .orderBy("user_id", "event_type")),
-    // Frequent 3-step behavior paths — the sequence-mining card one
-    // level up from the Markov transition matrix; contiguous trigrams
-    // keep it one user-partitioned window pass.
-    "events_paths3" -> ((s, d) =>
-      graft.streaming.EventPipeline.typePaths3(
-        table(s, d, "events"), minSupport = 5L)),
-    // Difference-in-differences on a seeded 50/50 user split × the
-    // midpoint time split — exact floored micro cell means.
-    "events_did" -> ((s, d) => {
-      val ev = table(s, d, "events").select(col("user_id"),
-        expr("unix_micros(CAST(ts AS TIMESTAMP))").as("__us"),
-        expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-          .as("cents"))
-      val mid = ev.agg(expr("(min(__us) + max(__us)) div 2").as("__mid"))
-      val cells = ev.crossJoin(broadcast(mid))
-        .select((DatasetSplit.bucket(col("user_id")) < 50).as("treated"),
-          (col("__us") >= col("__mid")).as("post"), col("cents"))
-      StatTests.diffInDiff(cells, "treated", "post", "cents")
-    }),
-    // Minimal detectable effect at the observed sizes and pooled
-    // variance — the "big enough to read a p-value" gate.
-    "events_ab_power" -> ((s, d) =>
-      StatTests.abPower(
-        table(s, d, "events").select(col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_type", "cents", "click", "view")),
-    // Robust means (plain / 5%-trimmed / winsorized) — all exact from
-    // the cents histogram and its order statistics.
-    "events_robust_mean" -> ((s, d) =>
-      StatTests.robustMean(
-        table(s, d, "events").select(
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")), "cents")),
-    // Corpus token entropy vs the log2(V) maximum — the redundancy
-    // single-number beside the Zipf slope card.
-    "corpus_token_entropy" -> ((s, d) =>
-      TextAnalysis.tokenEntropy(table(s, d, "documents"), "text")),
-    // Split conformal prediction at α = 10%: per-event-type floor-mean
-    // predictor from the train split, order-statistic radius from the
-    // calibration split, distribution-free ŷ ± q̂ intervals on test.
-    "events_conformal_card" -> ((s, d) =>
-      Conformal.card(
-        table(s, d, "events").select(col("event_id"), col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_id", "event_type", "cents")),
-    "events_conformal_intervals" -> ((s, d) =>
-      Conformal.intervals(
-        table(s, d, "events").select(col("event_id"), col("event_type"),
-          expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)")
-            .as("cents")),
-        "event_id", "event_type", "cents")),
-    // Range self-join: event pairs per user within a 300 s window,
-    // bucketed equality join (never an inequality-only join).
-    "events_range_join" -> ((s, d) => {
-      val ev = graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-        .select("event_id", "user_id", "ts")
-      TemporalJoins.rangeSelfJoin(ev, "user_id", "ts", "event_id", rangeSeconds = 300)
-        .orderBy("a_id", "b_id")
-    }),
-    // Stream-stream join (batch mode of the watermarked two-stream
-    // join): clicks attributed to same-user views ≤ 600 s older. The
-    // batch plan is an equality join on user_id with a time post-filter
-    // — fine while per-user event counts are bounded; at 100 TB batch
-    // scale use TemporalJoins.rangeSelfJoin's time-bucketed shape
-    // instead (the streaming mode bounds state by the watermark).
-    "events_stream_join" -> ((s, d) => {
-      val ev = table(s, d, "events")
-      graft.streaming.EventPipeline.clickViewJoin(
-        ev.filter(col("event_type") === "click"),
-        ev.filter(col("event_type") === "view"),
-        watermark = "10 minutes", horizonSeconds = 600)
-        .orderBy("click_id", "view_id")
-    }),
-    // Z-order (Morton) clustering key over (user bucket, time-of-day
-    // bucket): the data-skipping layout key, oracle-checked bit for bit.
-    "events_zorder" -> ((s, d) => {
-      val ev = graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-      val userQ = pmod(col("user_id"), lit(256L))
-      val timeQ = floor((hour(col("ts")) * 60 + minute(col("ts"))) / 6) // 0..239
-      ev.select(col("event_id"),
-          DataLayout.zorderKey(Seq(userQ, timeQ), bits = 8).as("zkey"))
-        .orderBy("event_id")
-    }),
-    // Hilbert layout key over the same (user, time-of-day) quantization
-    // as events_zorder — the stronger clustering key: every unit step
-    // along the curve is a grid-neighbor step, so range predicates
-    // touch fewer, more contiguous files than Morton order. The oracle
-    // unrolls the same 8 rotate/reflect bit-plane iterations as CTEs.
-    "events_hilbert" -> ((s, d) => {
-      val ev = graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-      val userQ = pmod(col("user_id"), lit(256L))
-      val timeQ = floor((hour(col("ts")) * 60 + minute(col("ts"))) / 6) // 0..239
-      DataLayout.withHilbertKey(
-          ev.select(col("event_id"), userQ.as("__u"), timeQ.as("__t")),
-          col("__u"), col("__t"), bits = 8, out = "hkey")
-        .select("event_id", "hkey")
-        .orderBy("event_id")
-    }),
-    // JSON property extraction + rollup.
-    "events_json_rollup" -> ((s, d) =>
-      graft.streaming.EventPipeline.propsRollup(table(s, d, "events"))
-        .orderBy("k")),
-    // Gap-based sessionization (10-minute inactivity gap).
-    "events_sessions" -> ((s, d) =>
-      graft.streaming.EventPipeline.sessionize(table(s, d, "events"), gapSeconds = 600)
-        .orderBy("user_id", "session_idx")),
-    // The SAME sessionization as a real micro-batch stream —
-    // flatMapGroupsWithState + event-time timeout, file source/sink,
-    // AvailableNow. Emits every session except a user's last when the
-    // stream quiets inside its timeout horizon; the oracle replays
-    // that closure rule (end + gap < max(ts) − delay, ms clock) over
-    // the batch sessionization CTE.
-    "events_sessions_streamed" -> ((s, d) =>
-      graft.streaming.EventPipeline.sessionsStreamedParity(
-        s, s"$d/events.parquet", gapSeconds = 600, watermark = "30 minutes")
-        .orderBy("user_id", "session_start")),
-    // The SAME sessionization on transformWithState (Spark 4's
-    // arbitrary-state API, SPARK-45939): typed ValueState + explicit
-    // event-time timers over the RocksDB provider — semantically
-    // identical closure rule, so the oracle is shared with
-    // events_sessions_streamed.
-    "events_sessions_tws" -> ((s, d) =>
-      graft.streaming.EventPipeline.sessionsTwsParity(
-        s, s"$d/events.parquet", gapSeconds = 600, watermark = "30 minutes")
-        .orderBy("user_id", "session_start")),
-    // Theil–Sen robust trend: median of pairwise hourly-count slopes
-    // per type — the outlier-proof alternative to OLS; quadratic in
-    // HOURS only (grid-bounded), one scan of the data.
-    "events_theil_sen" -> ((s, d) =>
-      graft.streaming.EventPipeline.theilSenTrend(table(s, d, "events"))
-        .orderBy("event_type")),
-    // Mann–Kendall trend significance: exact-integer S and 18·Var(S)
-    // with tie correction; z and tau on the rounded-double grid.
-    "events_mann_kendall" -> ((s, d) =>
-      graft.streaming.EventPipeline.mannKendallTrend(table(s, d, "events"))
-        .orderBy("event_type")),
-    // Distinct aggregation (two-phase: partial sets map-side, exact).
-    "events_user_stats" -> ((s, d) =>
-      table(s, d, "events")
-        .groupBy("event_type")
-        .agg(
-          count(lit(1)).as("n_events"),
-          countDistinct(col("user_id")).as("n_users"),
-          sum(col("value").cast("decimal(18,2)")).cast("double").as("total_value"))
-        .orderBy("event_type")),
-    // Multimodal feature extraction (mapPartitions over opaque binary
-    // payloads), exploded to scalar rows. Payload = the document's UTF-8
-    // bytes (the corpus is ASCII), so the stub's byte histogram has a
-    // DuckDB oracle; n_in_bin recovers the stub's exact integer bin
-    // count from the float32 ratio (error ≤ n_bytes·2⁻²⁴ ≪ 0.5).
-    "multimodal_features" -> ((s, d) => {
-      val payloads = table(s, d, "documents")
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-      graft.multimodal.Multimodal.extractFeatures(payloads, "doc_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id"), col("n_bytes"), posexplode(col("features")))
-        .select(col("id"), col("n_bytes"), col("pos").cast("long").as("bin"),
-          round(col("col").cast("double") * col("n_bytes")).cast("long").as("n_in_bin"))
-        .orderBy("id", "bin")
-    }),
-    // The documented undecodable-media FALLBACK, contract-tested: each
-    // document's first 32 bytes wrapped in a JPEG-looking envelope
-    // (SOI + SOF2 followed by text bytes — structurally MALFORMED:
-    // well-formed progressive JPEG now decodes for real, see
-    // multimodal_progressive_decode). The decode attempt must yield
-    // ZERO rows (`decoded` = false for every payload — asserted by
-    // the oracle, not just observed), and the byte-histogram fallback
-    // must be total and deterministic over the same payloads — the
-    // oracle recomputes it from the envelope constants plus the raw
-    // text bytes.
-    "multimodal_progressive_fallback" -> ((s, d) => {
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 32)
-        .select(col("doc_id"),
-          concat(
-            lit(Array(0xFF, 0xD8, 0xFF, 0xC2).map(_.toByte)),
-            // char-slice THEN cast, matching both the oracle's
-            // substr(text,1,32) and every other multimodal row's
-            // convention (byte-slicing diverges on non-ASCII text)
-            substring(col("text"), 1, 32).cast("binary")).as("payload"))
-      val decoded = graft.multimodal.Multimodal
-        .extractImageFeatures(payloads, "doc_id", "payload").toDF()
-        .select(col("id"), lit(1).as("__dec"))
-      val feats = graft.multimodal.Multimodal
-        .extractFeatures(payloads, "doc_id", "payload", bins = 16).toDF()
-      feats.join(decoded, Seq("id"), "left")
-        .select(col("id"), col("n_bytes"),
-          col("__dec").isNotNull.as("decoded"),
-          posexplode(col("features")))
-        .select(col("id"), col("n_bytes"), col("decoded"),
-          col("pos").cast("long").as("bin"),
-          round(col("col").cast("double") * col("n_bytes")).cast("long")
-            .as("n_in_bin"))
-        .orderBy("id", "bin")
-    }),
-    // MP3 metadata census WITHOUT decode — the triage pass a 100 TB
-    // audio corpus runs before any expensive stage. Each document's
-    // first bytes pick a bitrate index / frame count / ID3v2 pad;
-    // valid MPEG-1 Layer III streams are built in-plan and the parser
-    // must recover the parameters by actually walking frame headers
-    // (ID3 skip, sync, tabulated bitrate/samplerate, recomputed frame
-    // lengths). The oracle re-derives the census from the same bytes
-    // through the public bitrate table — the parser can't cheat.
-    "multimodal_mp3_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val kbpsTable = Array(32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-          it.map { case (id, b) =>
-            val bidx = 1 + (b(0) & 0xff) % 14
-            val frames = 2 + (b(1) & 0xff) % 3
-            val tagPad = (b(0) & 0xff) % 32
-            val frameLen = 144 * kbpsTable(bidx - 1) * 1000 / 44100
-            val bos = new java.io.ByteArrayOutputStream()
-            bos.write('I'); bos.write('D'); bos.write('3')      // ID3v2 tag
-            bos.write(4); bos.write(0); bos.write(0)            // version, flags
-            bos.write(0); bos.write(0); bos.write(0); bos.write(tagPad) // syncsafe size
-            var i = 0
-            while (i < tagPad) { bos.write(0); i += 1 }
-            var f = 0
-            while (f < frames) {
-              bos.write(0xff); bos.write(0xfb)                  // sync, MPEG1 L3 no-CRC
-              bos.write(bidx << 4); bos.write(0)                // bitrate idx, 44100, no pad
-              var j = 4
-              while (j < frameLen) { bos.write(0); j += 1 }
-              f += 1
-            }
-            val m = graft.multimodal.Mp3Parser.parseMp3(bos.toByteArray).get
-            (id, m.version, m.layer, m.bitrateKbps, m.sampleRate, m.frames, m.durationMs)
-          }
-        }
-        .toDF("id", "version", "layer", "bitrate_kbps", "sample_rate", "frames", "duration_ms")
-        .orderBy("id")
-    }),
-    // MP3 side-info parse — the CONTENT-bearing step beyond the frame
-    // census (the r9 verdict's stretch ask): per-granule global_gain
-    // (the quantizer step, a log-energy/loudness proxy),
-    // part2_3_length (encoder bit budget — spectral complexity) and
-    // big_values, read from the real ISO 11172-3 side-info bit layout
-    // with a bit reader (9+5+4 header bits, 59-bit granule blocks).
-    // The builder PLANTS values at the exact bit positions with an
-    // independent bit writer; the parser must walk the actual bits to
-    // recover them, and the oracle re-derives the planted arithmetic.
-    // Decode-free: silence detection / loudness routing at 100 TB
-    // without an MDCT.
-    "multimodal_mp3_gain" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val kbpsTable = Array(32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-          it.flatMap { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val bidx = 1 + b0 % 14
-            val frames = 2 + b1 % 3
-            val frameLen = 144 * kbpsTable(bidx - 1) * 1000 / 44100
-            val bos = new java.io.ByteArrayOutputStream()
-            var f = 0
-            while (f < frames) {
-              bos.write(0xff); bos.write(0xfb)          // MPEG1 L3, no CRC
-              bos.write(bidx << 4); bos.write(0xc0)     // 44.1k, mono
-              val side = new Array[Byte](17)
-              def put(bitOff: Int, width: Int, value: Int): Unit = {
-                var i = 0
-                while (i < width) {
-                  if (((value >> (width - 1 - i)) & 1) != 0) {
-                    val pos = bitOff + i
-                    side(pos >> 3) = (side(pos >> 3) | (1 << (7 - (pos & 7)))).toByte
-                  }
-                  i += 1
-                }
-              }
-              var g = 0
-              while (g < 2) {
-                val base = 18 + g * 59 // 9+5+4 header bits, 59-bit granules
-                put(base, 12, (b1 * 13 + 29 * f + 7 * g) % 4096)
-                put(base + 12, 9, (b0 + b1 + 3 * f + g) % 512)
-                put(base + 21, 8, (b0 + 17 * f + 11 * g) % 256)
-                g += 1
-              }
-              bos.write(side)
-              var j = 4 + 17
-              while (j < frameLen) { bos.write(0); j += 1 }
-              f += 1
-            }
-            graft.multimodal.Mp3Parser.parseGranules(bos.toByteArray).get
-              .map(gr => (id, gr.frameIdx, gr.granule,
-                gr.globalGain, gr.part23Length, gr.bigValues))
-          }
-        }
-        .toDF("id", "frame_idx", "granule", "global_gain", "part23_len", "big_values")
-        .orderBy("id", "frame_idx", "granule")
-    }),
-    // H.264 GOP-structure census: REAL §7.3.3 slice-header prefixes
-    // (Exp-Golomb first_mb/slice_type) planted per an arithmetic GOP
-    // cadence and recovered by the bit walk — I-frame spacing and
-    // B-usage without decoding a single macroblock. The oracle
-    // re-derives the cadence on a generate_series grid.
-    "multimodal_h264_gop" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val gopLen = 2 + b0 % 5
-            val nSlices = 4 + b1 % 6
-            val types = (0 until nSlices).map { j =>
-              if (j % gopLen == 0) 2 else if (j % 3 == 2) 1 else 0
-            }
-            val sl = graft.multimodal.H264Parser.parseSliceHeaders(
-              graft.multimodal.H264Parser.buildAnnexBGop(66, 30, types)).get
-            val iPos = sl.filter(_.kind == "I").map(_.idx)
-            val maxGap =
-              if (iPos.size < 2) 0L
-              else iPos.sliding(2).map(p => (p(1) - p(0)).toLong).max
-            (id, sl.size.toLong,
-              sl.count(_.kind == "I").toLong, sl.count(_.kind == "P").toLong,
-              sl.count(_.kind == "B").toLong, sl.head.kind, maxGap)
-          }
-        }
-        .toDF("id", "n_slices", "n_i", "n_p", "n_b", "first_kind",
-          "max_i_gap")
-        .orderBy("id")
-    }),
-    // ID3v2 tag census — the metadata layer the frame/side-info rows
-    // skip over: TIT2/TPE1/TALB text frames in BOTH tag versions
-    // (v2.3 plain big-endian frame sizes vs v2.4 syncsafe — the
-    // compatibility trap), values planted by id arithmetic and
-    // re-derived by the oracle.
-    "multimodal_id3" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val m = graft.multimodal.Mp3Parser.parseId3(
-              graft.multimodal.Mp3Parser.buildId3(
-                "T" + (b0 % 100), "A" + (b1 % 50),
-                "AL" + ((b0 + b1) % 30),
-                v24 = b1 % 2 == 1, Array[Byte](0x55))).get
-            (id, m.version.toLong, m.title, m.artist, m.album,
-              m.n_frames.toLong)
-          }
-        }
-        .toDF("id", "version", "title", "artist", "album", "n_frames")
-        .orderBy("id")
-    }),
-    // MP4/ISO-BMFF container census — the video counterpart of the MP3
-    // triage row. Real ISO 14496-12 files (ftyp + moov{mvhd,trak...} +
-    // a size==0 trailing mdat) are assembled in-plan from each
-    // document's first bytes; the parser must recover movie timescale/
-    // duration, track count, handler fourccs, and stsd codec ids by
-    // walking the box tree (v0 AND v1 mvhd layouts both exercised).
-    // The oracle re-derives the same integers from the same bytes.
-    // WEBP/TIFF container censuses — decode-free dimension recovery
-    // from RIFF chunk headers / IFD entries, built in-plan from each
-    // document's leading bytes like the MP3/MP4 rows; the oracle
-    // re-derives the same integers arithmetically.
-    "multimodal_webp_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val w = 1 + (b(0) & 0xff) % 1000
-            val h = 1 + (b(1) & 0xff) % 800
-            val alpha = (b(0) & 1) == 1
-            val exif = (b(1) & 0xff) % 64
-            val m = graft.multimodal.ImageContainers.parseWebp(
-              graft.multimodal.ImageContainers
-                .buildWebpLossless(w, h, alpha, exif)).get
-            (id, m.format, m.width, m.height, m.n_chunks, m.has_alpha)
-          }
-        }
-        .toDF("id", "format", "width", "height", "n_chunks", "has_alpha")
-        .orderBy("id")
-    }),
-    "multimodal_tiff_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val a0 = b(0) & 0xff
-            val a1 = b(1) & 0xff
-            val m = graft.multimodal.ImageContainers.parseTiff(
-              graft.multimodal.ImageContainers.buildTiff(
-                1L + (a0 * 256 + a1) % 5000, 1L + (a0 + a1 * 7) % 3000,
-                bigEndian = (a0 & 1) == 1)).get
-            (id, m.big_endian, m.width, m.height, m.n_entries)
-          }
-        }
-        .toDF("id", "big_endian", "width", "height", "n_entries")
-        .orderBy("id")
-    }),
-    // JPEG APP1/EXIF census: orientation (tag 0x0112 — ignore it and
-    // you train on sideways images), make and DateTimeOriginal parsed
-    // from real EXIF TIFF structures in both byte orders, behind a
-    // JFIF APP0 the walker must skip. Short makes ride IN the value
-    // field, long ones are offset-stored — both TIFF rules exercised
-    // in-plan. The oracle re-derives the planted arithmetic.
-    "multimodal_exif" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val make =
-              if (b1 % 3 == 0) "AB" // <=4 bytes with NUL: in-field ASCII
-              else "CAMERA" + (b1 % 100)
-            val dt = f"2021:${1 + b1 % 12}%02d:${1 + b0 % 28}%02d " +
-              f"${b0 % 24}%02d:${b1 % 60}%02d:00"
-            val m = graft.multimodal.ExifParser.parseExif(
-              graft.multimodal.ExifParser.buildJpegExif(
-                1 + b0 % 8, make, dt, bigEndian = (b0 & 1) == 1)).get
-            (id, m.big_endian, m.orientation, m.make, m.dt_original)
-          }
-        }
-        .toDF("id", "big_endian", "orientation", "make", "dt_original")
-        .orderBy("id")
-    }),
-    "multimodal_mp4_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          def u32(v: Long): Array[Byte] = Array(
-            ((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-            ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-          def u64(v: Long): Array[Byte] = u32(v >>> 32) ++ u32(v & 0xffffffffL)
-          def cc(x: String): Array[Byte] =
-            x.getBytes(java.nio.charset.StandardCharsets.US_ASCII)
-          def bx(t: String, body: Array[Byte]): Array[Byte] =
-            u32(body.length + 8L) ++ cc(t) ++ body
-          def trak(handler: String, fmt: String): Array[Byte] = {
-            val hdlr = bx("hdlr",
-              u32(0) ++ u32(0) ++ cc(handler) ++ Array.fill[Byte](12)(0))
-            val stsd = bx("stsd",
-              u32(0) ++ u32(1) ++ (u32(16) ++ cc(fmt) ++ Array.fill[Byte](8)(0)))
-            bx("trak", bx("mdia", hdlr ++ bx("minf", bx("stbl", stsd))))
-          }
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val timescale = 600L * (1 + b0 % 3)
-            val duration = 1001L + b1 * 97L
-            val mvhd =
-              if (b0 % 2 == 1) // version 1: 64-bit creation/modification/duration
-                bx("mvhd", Array[Byte](1, 0, 0, 0) ++ u64(0) ++ u64(0) ++
-                  u32(timescale) ++ u64(duration))
-              else
-                bx("mvhd", Array[Byte](0, 0, 0, 0) ++ u32(0) ++ u32(0) ++
-                  u32(timescale) ++ u32(duration))
-            val traks =
-              if (b1 % 2 == 1) trak("vide", "avc1") ++ trak("soun", "mp4a")
-              else trak("vide", "avc1")
-            val bytes =
-              bx("ftyp", cc("isom") ++ u32(0) ++ cc("isom")) ++
-                bx("moov", mvhd ++ traks) ++
-                (u32(0) ++ cc("mdat") ++ Array.fill[Byte](b1 % 7)(0))
-            val m = graft.multimodal.Mp4Parser.parseMp4(bytes).get
-            (id, m.majorBrand, m.timescale, m.duration, m.durationMs,
-              m.tracks, m.handlers.mkString(","), m.codecs.mkString(","))
-          }
-        }
-        .toDF("id", "brand", "timescale", "duration", "duration_ms",
-          "tracks", "handlers", "codecs")
-        .orderBy("id")
-    }),
-    // FLAC / OGG container censuses — the audio members of the
-    // decode-free triage family. Real containers (fLaC STREAMINFO +
-    // PADDING; OggS page chains with a Vorbis ident header) are
-    // assembled in-plan from each document's first bytes; the parsers
-    // recover rate/channels/duration by walking metadata blocks /
-    // page lacing, and the oracles re-derive the same integers.
-    "multimodal_flac_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val rates = Array(8000, 16000, 22050, 24000, 32000, 44100, 48000)
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val rate = rates(b0 % 7)
-            val samples = 1000L + (b0 * 256L + b1) * 31L
-            val pad = b1 % 100
-            val m = graft.multimodal.AudioContainers.parseFlac(
-              graft.multimodal.AudioContainers.buildFlac(
-                rate, 1 + b1 % 8, 16 + 8 * (b0 % 3), samples, pad)).get
-            (id, m.sample_rate, m.channels, m.bits_per_sample,
-              m.total_samples, m.n_blocks, m.duration_ms)
-          }
-        }
-        .toDF("id", "sample_rate", "channels", "bits_per_sample",
-          "total_samples", "n_blocks", "duration_ms")
-        .orderBy("id")
-    }),
-    "multimodal_ogg_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val rates = Array(8000, 16000, 22050, 24000, 32000, 44100, 48000)
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val rate = rates(b1 % 7).toLong
-            val granule = 960L * (1L + b1 * 13L)
-            val m = graft.multimodal.AudioContainers.parseOgg(
-              graft.multimodal.AudioContainers.buildOggVorbis(
-                1 + b0 % 2, rate, 1 + b0 % 4, granule)).get
-            (id, m.codec, m.channels, m.sample_rate, m.n_pages,
-              m.last_granule, m.duration_ms)
-          }
-        }
-        .toDF("id", "codec", "channels", "sample_rate", "n_pages",
-          "last_granule", "duration_ms")
-        .orderBy("id")
-    }),
-    // H.264/AVC Annex-B NAL census — ELEMENTARY-STREAM triage below
-    // the container censuses (MP4/WebM say which codec; this says
-    // what the bitstream holds: parameter sets, random-access IDR vs
-    // predicted slices, profile/level, and the SPS's coded+cropped
-    // dimensions via the real §7.3.2.1.1 Exp-Golomb walk — a third of
-    // the rows exercise frame_cropping, and the High-profile rows the
-    // chroma-format branch). The oracle re-derives every integer
-    // arithmetically from the same document bytes.
-    "multimodal_h264_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val profiles = Array(66, 77, 100)
-          val levels = Array(30, 31, 40, 41, 50)
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val cropped = b1 % 3 == 0
-            val m = graft.multimodal.H264Parser.parseAnnexB(
-              graft.multimodal.H264Parser.buildAnnexB(
-                profiles(b0 % 3), levels(b1 % 5),
-                1 + b0 % 3, 2 + b1 % 5,
-                width = 176 + 16 * (b0 % 20) - (if (cropped) 8 else 0),
-                height = 144 + 16 * (b1 % 15) - (if (cropped) 4 else 0))).get
-            (id, m.profile, m.profileIdc, m.levelIdc, m.width, m.height,
-              m.nNal, m.nSps, m.nPps, m.nIdr, m.nNonIdr)
-          }
-        }
-        .toDF("id", "profile", "profile_idc", "level_idc",
-          "width", "height", "n_nal", "n_sps", "n_pps", "n_idr", "n_non_idr")
-        .orderBy("id")
-    }),
-    // WebM/Matroska (EBML) census — with multimodal_mp4_meta this
-    // covers both web video containers; real EBML element trees are
-    // assembled in-plan (VINT sizes, Void filler, default-vs-explicit
-    // timestamp scale) and the walker recovers doc type, scale, and
-    // the track/codec inventory.
-    "multimodal_webm_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val tracks = b0 % 4 match {
-              case 0 => Seq((2, "A_OPUS"))
-              case 1 => Seq((1, "V_VP9"))
-              case 2 => Seq((1, "V_VP9"), (2, "A_OPUS"))
-              case _ => Seq((1, "V_VP8"), (2, "A_VORBIS"), (17, "S_TEXT/UTF8"))
-            }
-            val m = graft.multimodal.WebmParser.parseWebm(
-              graft.multimodal.WebmParser.buildWebm(
-                if (b1 % 2 == 0) "webm" else "matroska",
-                100000L * (1 + b1 % 20), tracks, fillerBytes = b1 % 64)).get
-            (id, m.doc_type, m.timestamp_scale, m.n_tracks,
-              m.track_types.mkString(","), m.codec_ids.mkString(","))
-          }
-        }
-        .toDF("id", "doc_type", "timestamp_scale", "n_tracks",
-          "track_types", "codec_ids")
-        .orderBy("id")
-    }),
-    // AVIF census — the ISO-BMFF image side (meta is a FULL box; the
-    // ispe property carries the dims). Completes the web image family.
-    "multimodal_avif_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          it.map { case (id, b) =>
-            val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-            val m = graft.multimodal.AvifParser.parseAvif(
-              graft.multimodal.AvifParser.buildAvif(
-                1L + (b0 * 256L + b1) % 4000L, 1L + (b0 + b1 * 3L) % 3000L,
-                withPixi = b1 % 2 == 1)).get
-            (id, m.brand, m.width, m.height, m.n_props)
-          }
-        }
-        .toDF("id", "brand", "width", "height", "n_props")
-        .orderBy("id")
-    }),
-    // HTML → text extraction — the curation stage between WARC ingest
-    // and every text operator. A full page (comment, title, script
-    // and style with NESTED fake markup, nav, quote-guarded '>' in
-    // attributes, named+numeric entities, footer) is built in-plan
-    // around each document's HTML-ESCAPED text; the extractor must
-    // drop the boilerplate machinery and recover the exact original
-    // text (escape→extract is the identity), title, and link count.
-    // Scan-local and shuffle-free — the 100 TB pass is one map.
-    "html_extract_clean" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val nLinks = (1 + id % 3).toInt
-            val links = (0 until nLinks)
-              .map(k => s"""<a href="/l$k" data-q="a>b">More</a>""")
-              .mkString(" ")
-            val html =
-              s"""<!-- crawl fixture --><html><head><title>Doc $id</title>
-                 |<script type="text/javascript">var x = "<p>not text</p>";</script>
-                 |<style>.m { content: "<b>x</b>" }</style></head><body>
-                 |<nav>Top Nav</nav>
-                 |<p>${graft.operators.HtmlExtract.escapeHtml(text)}</p>
-                 |$links
-                 |<div>&#65;&#x42;&amp;&lt;tag&gt;</div>
-                 |<footer>(c) corp</footer>
-                 |</body></html>""".stripMargin
-            val e = graft.operators.HtmlExtract.extract(html)
-            (id, e.title, e.text, e.nLinks)
-          }
-        }
-        .toDF("id", "title", "text_clean", "n_links")
-        .orderBy("id")
-    }),
-    // URL canonicalization — the dedup key / per-domain grouping key
-    // of a crawl corpus. Hostile raw URLs (uppercase scheme+host,
-    // default ports, dot-segments, unreserved percent-escapes,
-    // utm_/fbclid tracking params, unsorted query, fragment) are
-    // built in-plan per document; the normalizer must produce the
-    // exact canonical form and the registered-domain heuristic must
-    // cross the two-part-suffix (co.uk) boundary correctly.
-    "url_normalize" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val tld = if ((id % 10) % 3 == 0) "co.uk" else "com"
-            val raw = (if (id % 2 == 0) "HTTP" else "HTTPS") +
-              s"://WWW.Site${id % 10}.$tld" +
-              (if (id % 2 == 0) ":80" else ":443") +
-              s"/d${id % 7}/./sk%41ip/../p%41ge" +
-              s"?utm_source=feed&id=$id&b=2&a=1&fbclid=XYZ#top"
-            val norm = graft.operators.UrlOps.normalize(raw).get
-            val host = graft.operators.UrlOps.parse(raw).get.host.toLowerCase
-            (id, norm, host, graft.operators.UrlOps.registeredDomain(host))
-          }
-        }
-        .toDF("id", "url_norm", "host", "domain")
-        .orderBy("id")
-    }),
-    // END-TO-END crawl pipeline: render each document as a hostile
-    // HTML page keyed by a hostile raw URL → shard into real .warc.gz
-    // file images (gzip-per-record, warcinfo lead) → parse the WARC
-    // back → HTML-extract the text and canonicalize the URL. This is
-    // the exact composition a 100 TB crawl runs: after the one
-    // shard-shuffle, parse+extract+normalize all fuse into the read
-    // task — scan-local, nothing but (url, page) ever moves.
-    "crawl_pipeline" -> ((s, d) => {
-      import s.implicits._
-      // write half: one exchange on the shard key, rows sorted
-      // (shard, id) within partitions, then each shard RUN streams
-      // record-by-record into the gzip writer — the heap never holds
-      // a shard's uncompressed rows, only the compressed image (the
-      // product). A mis-sized shard count degrades to big files, not
-      // an executor OOM.
-      val shards = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select((col("doc_id").cast("long") % 16).cast("int").as("shard"),
-          col("doc_id").cast("long").as("id"), col("text"))
-        .repartition(16, col("shard"))
-        .sortWithinPartitions("shard", "id")
-        .as[(Int, Long, String)]
-        .mapPartitions { it =>
-          val buf = it.buffered
-          new Iterator[(Int, Array[Byte])] {
-            def hasNext: Boolean = buf.hasNext
-            def next(): (Int, Array[Byte]) = {
-              val shard = buf.head._1
-              val run = new Iterator[(String, Array[Byte], String)] {
-                def hasNext: Boolean = buf.hasNext && buf.head._1 == shard
-                def next(): (String, Array[Byte], String) = {
-                  val (_, id, text) = buf.next()
-                  val tld = if ((id % 10) % 3 == 0) "co.uk" else "com"
-                  val raw = (if (id % 2 == 0) "HTTP" else "HTTPS") +
-                    s"://WWW.Site${id % 10}.$tld" +
-                    (if (id % 2 == 0) ":80" else ":443") +
-                    s"/d${id % 7}/./page?utm_source=feed&id=$id#top"
-                  val html =
-                    s"""<html><head><title>Doc $id</title>
-                       |<script>var x = "<p>not text</p>";</script></head>
-                       |<body><p>${graft.operators.HtmlExtract.escapeHtml(text)}</p>
-                       |<a href="/next">next</a></body></html>""".stripMargin
-                  (raw, html.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-                    "text/html; charset=utf-8")
-                }
-              }
-              val bos = new java.io.ByteArrayOutputStream()
-              graft.sources.WarcCodec.writeWarcGz(bos, run)
-              (shard, bos.toByteArray)
-            }
-          }
-        }
-        .toDF("shard", "warc_gz")
-      shards.select(col("warc_gz")).as[Array[Byte]]
-        .flatMap(blob => graft.sources.WarcCodec.parseWarc(blob))
-        .map { doc =>
-          // charset-aware decode off the framed Content-Type — no
-          // hardcoded UTF-8 anywhere in the read path
-          val dec = graft.operators.CharsetSniff.decode(doc.body, doc.content_type)
-          val e = graft.operators.HtmlExtract.extract(dec.text)
-          val norm = graft.operators.UrlOps.normalize(doc.url).getOrElse("")
-          val host = graft.operators.UrlOps.parse(doc.url)
-            .map(_.host.toLowerCase).getOrElse("")
-          (e.title.stripPrefix("Doc ").toLong, norm,
-            graft.operators.UrlOps.registeredDomain(host),
-            e.text, e.nLinks, doc.http_status)
-        }
-        .toDF("id", "url_norm", "domain", "text_clean", "n_links", "status")
-        .orderBy("id")
-    }),
-    // CHARSET-aware crawl decode: real crawls are ~10–20% legacy-
-    // charset, so each document becomes a page in one of five
-    // authoring conventions — UTF-8 declared by the HTTP header
-    // (with a LYING meta tag the header must outrank), Latin-1 via
-    // <meta charset>, Windows-1251 via http-equiv, undeclared
-    // (→ ISO-8859-1 fallback), and UTF-8-BOM'd with a lying meta
-    // (BOM outranks everything). Pages carry non-ASCII marker chars
-    // whose survival PROVES the right codec ran; the bytes travel
-    // through real WARC response framing so the Content-Type is
-    // parsed off the wire, not passed around in memory.
-    "crawl_charset" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"), col("text"))
-        .as[(Long, String)]
-        .mapPartitions { it =>
-          it.map { case (id, text) =>
-            val cls = (id % 5).toInt
-            val (marker, csName, httpCt, metaTag, bom) = cls match {
-              case 0 => ("café Ж", "UTF-8", "text/html; charset=utf-8",
-                "<meta http-equiv=\"Content-Type\" " +
-                  "content=\"text/html; charset=windows-1251\">", false)
-              case 1 => ("é±", "ISO-8859-1", "text/html",
-                "<meta charset=\"iso-8859-1\">", false)
-              case 2 => ("Дж", "windows-1251", "text/html",
-                "<meta http-equiv=\"Content-Type\" " +
-                  "content=\"text/html; charset=windows-1251\">", false)
-              case 3 => ("éü", "ISO-8859-1", "text/html", "", false)
-              case _ => ("Ωπ", "UTF-8", "text/html",
-                "<meta charset=\"iso-8859-1\">", true)
-            }
-            val html =
-              s"""<html><head>$metaTag<title>Doc $id</title></head>
-                 |<body><p>${graft.operators.HtmlExtract.escapeHtml(text)} $marker</p>
-                 |</body></html>""".stripMargin
-            val enc = html.getBytes(java.nio.charset.Charset.forName(csName))
-            val body =
-              if (bom) Array(0xEF.toByte, 0xBB.toByte, 0xBF.toByte) ++ enc
-              else enc
-            val bos = new java.io.ByteArrayOutputStream()
-            graft.sources.WarcCodec.writeWarcGz(bos,
-              Iterator((s"https://crawl.example/p/$id", body, httpCt)))
-            val doc = graft.sources.WarcCodec.parseWarc(bos.toByteArray).head
-            val dec = graft.operators.CharsetSniff.decode(doc.body, doc.content_type)
-            val e = graft.operators.HtmlExtract.extract(dec.text)
-            (id, dec.charset, dec.source, e.title, e.text)
-          }
-        }
-        .toDF("id", "charset", "src", "title", "text_clean")
-        .orderBy("id")
-    }),
-    // LINK GRAPH edges — the standard domain-quality signal of crawl
-    // curation (a domain linked from many registered domains ranks
-    // above one only it links to). Each document's page carries every
-    // href form a crawl meets (absolute, protocol-relative with an
-    // entity-encoded query, absolute-path, relative with dot-segments,
-    // query-only, fragment-only, and an href-less named anchor);
-    // extraction → RFC 3986 resolution against the page URL →
-    // canonicalization → registered-domain edges. Shape at 100 TB:
-    // extract+resolve are scan-local flatMap work; the only exchange
-    // is the final (src, dst) count aggregate — edges shuffle as two
-    // short strings, never pages.
-    "crawl_links" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val pageUrl = s"HTTPS://WWW.Site$h.$tld/d${id % 7}/page"
-          val html =
-            s"""<html><body>
-               |<a href="https://partner$q.example/x">p</a>
-               |<a href="//cdn.site$h.com/img?a=1&amp;b=2">c</a>
-               |<a href="/about">a</a> <a href="../up">u</a>
-               |<a href='?page=2'>n</a> <a href=#sec>s</a>
-               |<a name="top">anchor</a>
-               |</body></html>""".stripMargin
-          val e = graft.operators.HtmlExtract.extract(html)
-          val src = graft.operators.UrlOps.parse(pageUrl)
-            .map(u => graft.operators.UrlOps.registeredDomain(u.host))
-            .getOrElse("")
-          e.links.flatMap { href =>
-            graft.operators.UrlOps.resolve(pageUrl, href)
-              .flatMap(graft.operators.UrlOps.normalize)
-              .flatMap(graft.operators.UrlOps.parse)
-              .map(u => (src, graft.operators.UrlOps.registeredDomain(u.host)))
-          }
-        }
-        .toDF("src_domain", "dst_domain")
-        .groupBy("src_domain", "dst_domain")
-        .agg(count(lit(1)).as("n_links"))
-        .orderBy("src_domain", "dst_domain")
-    }),
-    // URL-level dedup — the FIRST dedup pass of every crawl pipeline:
-    // the same page fetched repeatedly under scheme/host case noise,
-    // default ports, dot-segments, shuffled params, per-fetch tracking
-    // ids, and fragments collapses onto ONE canonical URL, keeping the
-    // best capture (longest text, ties → lowest id — the
-    // keep-best convention of Dedup.keepBestVerdict). Shape at
-    // 100 TB: normalization is scan-local; the only exchange carries
-    // (canonical url, id, n_chars) — one hash aggregate, no pages.
-    "crawl_url_dedup" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"), col("n_chars").cast("long"))
-        .as[(Long, Long)]
-        .mapPartitions { it =>
-          it.map { case (id, nChars) =>
-            val g = id % 120 // ~4 fetches of each canonical page
-            val scheme = if (g % 2 == 0) "http" else "https"
-            val schemeRaw = if (id % 2 == 0) scheme.toUpperCase else scheme
-            val host = (if (id % 3 == 0) s"WWW.Page${g % 10}"
-              else s"www.page${g % 10}") + ".com"
-            val port =
-              if (id % 2 == 0) { if (g % 2 == 0) ":80" else ":443" } else ""
-            val path = if (id % 3 == 0) s"/a${g % 5}/./x" else s"/a${g % 5}/x"
-            val qs =
-              if (id % 2 == 0) s"?k=$g&b=1&utm_source=f$id"
-              else s"?b=1&fbclid=Z$id&k=$g"
-            val raw = s"$schemeRaw://$host$port$path$qs#frag$id"
-            (id, nChars, graft.operators.UrlOps.normalize(raw).get)
-          }
-        }
-        .toDF("id", "n_chars", "url_norm")
-        .groupBy("url_norm")
-        .agg(count(lit(1)).as("n_fetches"),
-          min_by(col("id"), struct(negate(col("n_chars")), col("id")))
-            .as("keep_id"),
-          max(col("n_chars")).as("max_len"))
-        .orderBy("url_norm")
-    }),
-    // Robots fetch-policy gate (RFC 9309) — the step between link
-    // discovery and the fetch queue. One fixture policy exercises the
-    // semantics that decide real crawls: named-group EXCLUSIVITY
-    // (graftbot does not inherit the * group's /tmp* ban),
-    // longest-pattern precedence with Allow winning ties, `$` end
-    // anchors out-ranking shorter Disallows, and `*` prefix-anchored
-    // wildcards. Six path classes per document; both a named crawler
-    // and a defaulting one are decided. Scan-local: the policy is a
-    // per-domain broadcast-sized object, the decision a pure map.
-    "crawl_robots" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .mapPartitions { it =>
-          val robots = graft.operators.RobotsTxt.parse(
-            """# graft fixture policy
-              |User-agent: graftbot
-              |Allow: /private/graft/
-              |Disallow: /private/
-              |
-              |User-agent: *
-              |Disallow: /private/
-              |Disallow: /tmp*
-              |Allow: /private/ok$
-              |Crawl-delay: 2
-              |Sitemap: https://www.example.com/sitemap.xml""".stripMargin)
-          it.map { id =>
-            val path = (id % 6) match {
-              case 0 => s"/public/p$id"
-              case 1 => s"/private/p$id"
-              case 2 => s"/private/graft/p$id"
-              case 3 => s"/tmpfile$id"
-              case 4 => "/private/ok"
-              case _ => s"/ok/tmp$id"
-            }
-            (id, path,
-              graft.operators.RobotsTxt.isAllowed(robots, "graftbot/1.0", path),
-              graft.operators.RobotsTxt.isAllowed(robots, "otherbot/2.0", path))
-          }
-        }
-        .toDF("id", "path", "allowed_graft", "allowed_other")
-        .orderBy("id")
-    }),
-    // Sitemap ingestion — frontier SEEDING, the other half of the
-    // policy loop crawl_robots gates: each document becomes a
-    // urlset with 1–3 entries (entity-encoded locs, lastmod,
-    // priority), parsed back by the DOM-free total scanner and
-    // exploded to frontier rows. Scan-local flatMap; nothing but the
-    // seeded rows ever moves.
-    "crawl_sitemap" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val k = (1 + id % 3).toInt
-          val urls = (0 until k).map { j =>
-            s"""  <url>
-               |    <loc>https://www.site${id % 10}.com/page$id/$j?a=1&amp;b=$j</loc>
-               |    <lastmod>2026-0${1 + id % 9}-01</lastmod>
-               |    <changefreq>weekly</changefreq>
-               |    <priority>0.${id % 10}</priority>
-               |  </url>""".stripMargin
-          }.mkString("\n")
-          val xml =
-            s"""<?xml version="1.0" encoding="UTF-8"?>
-               |<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-               |$urls
-               |</urlset>""".stripMargin
-          graft.operators.Sitemap.parse(xml).entries.zipWithIndex.map {
-            case (e, j) => (id, j.toLong, e.loc, e.lastmod, e.priority)
-          }
-        }
-        .toDF("id", "pos", "loc", "lastmod", "priority")
-        .orderBy("id", "pos")
-    }),
-    // Sitemap INDEX expansion — the two-level protocol shape real
-    // sites use (a <sitemapindex> pointing at child urlsets): the
-    // index parses to child locs, each child "fetches" (built
-    // in-plan from the same residues) and parses to pages, flattened
-    // to frontier rows with the child provenance kept. Scan-local
-    // flatMap; the oracle re-derives every row arithmetically.
-    "crawl_sitemap_index" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val k = (1 + id % 3).toInt
-          def childXml(j: Int): String = {
-            val m = (1 + (id + j) % 2).toInt
-            val urls = (0 until m).map { u =>
-              s"""  <url><loc>https://www.site$h.com/p$id/c$j/u$u</loc>
-                 |    <lastmod>2026-0${1 + (id + j + u) % 9}-02</lastmod>
-                 |  </url>""".stripMargin
-            }.mkString("\n")
-            s"""<?xml version="1.0" encoding="UTF-8"?>
-               |<urlset xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-               |$urls
-               |</urlset>""".stripMargin
-          }
-          val children = (0 until k).map(j =>
-            s"""  <sitemap><loc>https://www.site$h.com/maps/sm$j.xml</loc>
-               |  </sitemap>""".stripMargin).mkString("\n")
-          val indexXml =
-            s"""<?xml version="1.0" encoding="UTF-8"?>
-               |<sitemapindex xmlns="http://www.sitemaps.org/schemas/sitemap/0.9">
-               |$children
-               |</sitemapindex>""".stripMargin
-          val idx = graft.operators.Sitemap.parse(indexXml)
-          if (!idx.isIndex) Seq.empty
-          else idx.entries.zipWithIndex.flatMap { case (child, j) =>
-            // the "fetch" of the child loc, deterministic in-plan
-            graft.operators.Sitemap.parse(childXml(j)).entries.zipWithIndex
-              .map { case (e, u) =>
-                (id, j.toLong, u.toLong, child.loc, e.loc, e.lastmod)
-              }
-          }
-        }
-        .toDF("id", "child_idx", "pos", "child_loc", "loc", "lastmod")
-        .orderBy("id", "child_idx", "pos")
-    }),
-    // IDN canonicalization: crawled URLs carry internationalized
-    // hosts both ways (Unicode in hrefs, xn-- on the wire); the
-    // normalizer's RFC 3492 punycode makes them ONE dedup/grouping
-    // key. Three Unicode host classes (plus an ASCII control) built
-    // in-plan with uppercase noise; the oracle pins the published
-    // xn-- encodings, which the spec independently validates against
-    // java.net.IDN over 3000 fuzz labels.
-    "crawl_idn" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val raw = (id % 4) match {
-              case 0 => s"HTTP://WWW.Site${id % 10}.COM/p$id"
-              case 1 => s"HTTP://WWW.MÜNCHEN.DE/p$id" // MÜNCHEN
-              case 2 => s"HTTPS://Shop.Bücher.example/p$id" // Bücher
-              case _ => s"HTTP://www.café.com/p$id" // café
-            }
-            val norm = graft.operators.UrlOps.normalize(raw).get
-            val host = graft.operators.UrlOps.parse(raw).get.host
-            (id, norm, graft.operators.UrlOps.registeredDomain(host))
-          }
-        }
-        .toDF("id", "url_norm", "domain")
-        .orderBy("id")
-    }),
-    // Domain PageRank — the RANKING stage of crawl curation, over the
-    // same domain universe crawl_links discovers (sites → partners/
-    // cdns/self). Integer micro-rank arithmetic (r' = 150000 +
-    // 85·Σ(r div outdeg) div 100) makes 5 iterations of shuffled
-    // joins BITWISE deterministic under any partitioning — the
-    // property float PageRank can't give a reproducible pipeline.
-    // Danglers (partner/cdn domains with no out-links) leak mass by
-    // the documented variant; duplicate edges collapse (simple graph).
-    "crawl_rank" -> ((s, d) => {
-      import s.implicits._
-      val edges = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val src = s"site$h.$tld"
-          Seq((src, s"partner$q.example"), (src, s"site$h.com"), (src, src))
-        }
-        .toDF("src", "dst")
-      graft.operators.LinkRank.pageRank(edges, iters = 5)
-        .orderBy("domain")
-    }),
-    // Link communities — deterministic synchronous label propagation
-    // over the same domain graph crawl_rank ranks: each round every
-    // domain adopts its neighbors' most frequent label (least label
-    // on ties), pure count/min aggregates, so three shuffled rounds
-    // are exact under any partitioning (the textbook random-order LPA
-    // is non-reproducible by construction). Curation treats a
-    // community — mirror ring, partner cluster — as one unit.
-    "crawl_communities" -> ((s, d) => {
-      import s.implicits._
-      val edges = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val src = s"site$h.$tld"
-          Seq((src, s"partner$q.example"), (src, s"site$h.com"), (src, src))
-        }
-        .toDF("src", "dst")
-      graft.operators.LinkRank.labelPropagation(edges, iters = 3)
-        .orderBy("domain")
-    }),
-    // Newman modularity of those LPA communities — the "are they
-    // real" gate: per-community exact-integer contribution
-    // (4·m·e_c − d_c²)/4m²; a partition no better than the degree
-    // null model scores ≤ 0.
-    "crawl_modularity" -> ((s, d) => {
-      import s.implicits._
-      val edges = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val src = s"site$h.$tld"
-          Seq((src, s"partner$q.example"), (src, s"site$h.com"), (src, src))
-        }
-        .toDF("src", "dst")
-        // The typed flatMap is OPAQUE (no exchange under it, so AQE
-        // reuse can never dedup it): every reference inside the LPA
-        // rounds + modularity re-ran the corpus scan + flatMap.
-        // Materialize the slim edge list once (3 rows/doc of two short
-        // strings).
-        .localCheckpoint(true)
-      graft.operators.LinkRank.modularity(edges,
-        graft.operators.LinkRank.labelPropagation(edges, iters = 3))
-    }),
-    // Triangle counting + local clustering over a denser synthetic
-    // domain graph (97 nodes, 3 pseudo-random out-edges each) — the
-    // link-farm signal: cliques close into triangles, organic link
-    // neighborhoods don't. Degree-ordered orientation (Suri &
-    // Vassilvitskii 2011) bounds every vertex's wedge fan-out by
-    // √|E|, so the hub-vertex d² blowup cannot happen; the oracle
-    // replays the same orientation joins in SQL.
-    // k-core decomposition (Seidman 1983) via the distributable
-    // H-operator iteration (Lü et al., PNAS 2016) over a structured
-    // domain graph: a 97-node ring (organic chain, core 2) with a
-    // 13-domain clique on the multiples of 8 (the link farm, core 12)
-    // plus chord spokes — coreness separates farm from organic at
-    // EQUAL degree, the signal clustering and reciprocity miss. The
-    // oracle unrolls the same monotone H rounds to their fixpoint.
-    "crawl_kcore" -> ((s, d) => {
-      def node(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(lit("d"), lpad(c.cast("string"), 2, "0"), lit(".example"))
-      val docs = table(s, d, "documents")
-      val n = col("doc_id") % 97
-      val ring = docs.select(node(n).as("src"), node((n + 1) % 97).as("dst"))
-      val farm = docs.filter(n % 8 === 0)
-        .select(node(n).as("src"),
-          explode(sequence(lit(1), lit(12))).as("__k"),
-          expr("(doc_id % 97) div 8").as("__i"))
-        .select(col("src"), node((col("__i") + col("__k")) % 13 * 8).as("dst"))
-      val spokes = docs.filter(n % 7 === 3)
-        .select(node(n).as("src"), node((n * 5 + 11) % 97).as("dst"))
-      graft.operators.LinkRank.kcore(ring.unionByName(farm).unionByName(spokes))
-        .orderBy("domain")
-    }),
-    "crawl_triangles" -> ((s, d) => {
-      def node(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(lit("d"), lpad(c.cast("string"), 2, "0"), lit(".example"))
-      val n = col("doc_id") % 97
-      val edges = table(s, d, "documents")
-        .select(explode(array(
-          struct(node(n).as("src"), node((n * 3 + 1) % 97).as("dst")),
-          struct(node(n).as("src"), node((n * 7 + 2) % 97).as("dst")),
-          struct(node(n).as("src"), node((n + 1) % 97).as("dst")))).as("e"))
-        .select("e.src", "e.dst")
-      graft.operators.LinkRank.triangles(edges).orderBy("domain")
-    }),
-    // Degree assortativity (Newman 2002) over the same 97-node graph:
-    // exact integer moments over the symmetrized edge list, one
-    // end-of-pipeline 6-dp Pearson r — the hubs-link-to-hubs number
-    // whose sign flip flags a structural anomaly in a crawl segment.
-    "crawl_assortativity" -> ((s, d) => {
-      def node(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(lit("d"), lpad(c.cast("string"), 2, "0"), lit(".example"))
-      val n = col("doc_id") % 97
-      val edges = table(s, d, "documents")
-        .select(explode(array(
-          struct(node(n).as("src"), node((n * 3 + 1) % 97).as("dst")),
-          struct(node(n).as("src"), node((n * 7 + 2) % 97).as("dst")),
-          struct(node(n).as("src"), node((n + 1) % 97).as("dst")))).as("e"))
-        .select("e.src", "e.dst")
-      graft.operators.LinkRank.assortativity(edges)
-    }),
-    // Top co-citation pairs over the same 97-node graph — the
-    // related-pages signal (Small 1973; Dean & Henzinger): domains
-    // many distinct sources link to TOGETHER. One capped self-join on
-    // src + one pair count; TakeOrdered(15).
-    "crawl_cocitation" -> ((s, d) => {
-      def node(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(lit("d"), lpad(c.cast("string"), 2, "0"), lit(".example"))
-      val n = col("doc_id") % 97
-      val edges = table(s, d, "documents")
-        .select(explode(array(
-          struct(node(n).as("src"), node((n * 3 + 1) % 97).as("dst")),
-          struct(node(n).as("src"), node((n * 7 + 2) % 97).as("dst")),
-          struct(node(n).as("src"), node((n + 1) % 97).as("dst")))).as("e"))
-        .select("e.src", "e.dst")
-      graft.operators.LinkRank.coCitation(edges, k = 15)
-    }),
-    // Link reciprocity over the same 97-node graph — the
-    // link-exchange discount signal beside clustering: 6 of its 286
-    // directed edges are mutual, so the card separates exchange
-    // participants from organic linkers. One self-join on the
-    // reversed key + one aggregate.
-    "crawl_reciprocity" -> ((s, d) => {
-      def node(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-        concat(lit("d"), lpad(c.cast("string"), 2, "0"), lit(".example"))
-      val n = col("doc_id") % 97
-      val edges = table(s, d, "documents")
-        .select(explode(array(
-          struct(node(n).as("src"), node((n * 3 + 1) % 97).as("dst")),
-          struct(node(n).as("src"), node((n * 7 + 2) % 97).as("dst")),
-          struct(node(n).as("src"), node((n + 1) % 97).as("dst")))).as("e"))
-        .select("e.src", "e.dst")
-      graft.operators.LinkRank.reciprocity(edges).orderBy("domain")
-    }),
-    // Mirror-host detection — hosts with IDENTICAL distinct outlink
-    // sets alias to one representative before fetch budget is spent
-    // (the host-level dedup every crawl does before page dedup).
-    // Fixture: hosts m0..m9 whose link sets depend only on h%5, so
-    // h and h+5 are exact mirrors. Only the 32-byte fingerprint
-    // travels past the one per-host aggregate.
-    "crawl_mirrors" -> ((s, d) => {
-      val h = col("doc_id") % 10
-      val k = h % 5
-      val src = concat(lit("m"), h.cast("string"), lit(".example"))
-      val edges = table(s, d, "documents")
-        .select(explode(array(
-          struct(src.as("src"),
-            concat(lit("asset"), k.cast("string"), lit(".cdn")).as("dst")),
-          struct(src.as("src"),
-            concat(lit("page"), ((k * 3 + 1) % 7).cast("string"),
-              lit(".example")).as("dst")))).as("e"))
-        .select("e.src", "e.dst")
-      graft.operators.LinkRank.mirrorGroups(edges)
-        .orderBy("group_rep", "host")
-    }),
-    // Anchor-text aggregation — the link graph's EDGE LABELS: inbound
-    // anchor text is the classic third-party description of the
-    // TARGET (the signal early web search weighted above on-page
-    // words). Extraction handles entity-encoded text, markup nested
-    // inside the anchor, and named anchors; hrefs resolve against the
-    // page URL and group by the target's registrable domain. Shape:
-    // scan-local extract+resolve flatMap, one (domain) hash aggregate
-    // — anchor strings shuffle, pages never do.
-    "crawl_anchor_text" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val pageUrl = s"https://www.site$h.$tld/d${id % 7}/page"
-          val html =
-            s"""<html><body>
-               |<a href="https://partner$q.example/x">review $q &amp; deals</a>
-               |<a href="/about"><b>about</b> site$h</a>
-               |<a href="//cdn.site$h.com/asset">cdn $h</a>
-               |<a name="top">not a link</a>
-               |</body></html>""".stripMargin
-          graft.operators.HtmlExtract.anchors(html).flatMap {
-            case (href, text) =>
-              graft.operators.UrlOps.resolve(pageUrl, href)
-                .flatMap(graft.operators.UrlOps.parse)
-                .map(u => (graft.operators.UrlOps.registeredDomain(u.host),
-                  text))
-          }
-        }
-        .toDF("dst_domain", "anchor")
-        .groupBy("dst_domain")
-        .agg(count(lit(1)).as("n_anchors"),
-          countDistinct(col("anchor")).as("n_texts"),
-          min(col("anchor")).as("top_text"))
-        .orderBy("dst_domain")
-    }),
-    // Crawl depth — BFS layers from a seed set over the directed
-    // domain graph (min-plus frontier iteration, integral depths):
-    // the "seeds + N hops" scope cut and the Frontier's scheduling
-    // prior. Unreached domains are absent, which IS the scope
-    // decision. The oracle replays each wave as a chained CTE.
-    "crawl_depth" -> ((s, d) => {
-      import s.implicits._
-      val edges = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val src = s"site$h.$tld"
-          Seq((src, s"partner$q.example"), (src, s"site$h.com"), (src, src))
-        }
-        .toDF("src", "dst")
-      val seeds = Seq("site0.co.uk", "site3.co.uk").toDF("domain")
-      graft.operators.LinkRank.bfsDepth(edges, seeds, maxDepth = 3)
-        .orderBy("domain")
-    }),
-    // hreflang translation clusters — the page's SELF-DECLARED
-    // language variants (<link rel=alternate hreflang>): free
-    // aligned-document candidates, extracted (entity decoding,
-    // relative hrefs), resolved against the fetch URL, one row per
-    // (page, lang). Bitext mining then SCORES what sites declare.
-    // Meta-robots gate — the in-document half of the robots protocol
-    // (robots.txt is the other): page-level noindex/nofollow/
-    // noarchive (incl the `none` equivalence and a COMMENTED-OUT meta
-    // that must stay invisible) + link-level rel=nofollow counts.
-    // Five planted variants per id stride; arithmetic oracle.
-    "crawl_meta_robots" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .map { id =>
-          val meta = (id % 5) match {
-            case 1 => """<meta name="robots" content="noindex, follow">"""
-            case 2 => """<meta NAME="ROBOTS" CONTENT="NOFOLLOW,noarchive">"""
-            case 3 => """<meta name="robots" content="none">"""
-            case 4 => """<!-- <meta name="robots" content="noindex"> -->"""
-            case _ => """<meta name="description" content="noindex">"""
-          }
-          val nf = (id % 3).toInt
-          val links = (1 to nf).map(k =>
-            s"""<a href="/l$k" rel="nofollow">x</a>""").mkString +
-            """<a href="/plain">y</a>"""
-          val html =
-            s"<html><head>$meta<title>t</title></head><body>$links</body></html>"
-          val r = graft.operators.HtmlExtract.metaRobots(html)
-          (id, r.noindex, r.nofollow, r.noarchive, r.nofollowLinks.toLong)
-        }
-        .toDF("id", "noindex", "nofollow", "noarchive", "nofollow_links")
-        .orderBy("id")
-    }),
-    "crawl_hreflang" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val p = id % 7
-          val pageUrl = s"https://www.site$h.com/en/p$p"
-          val langs = Seq("en", "de") ++ (if (id % 2 == 0) Seq("fr") else Nil)
-          val links = langs.map(l =>
-            s"""<link rel="alternate" hreflang="$l" href="/$l/p$p?x=1&amp;y=2">""")
-            .mkString("\n")
-          val html = s"<html><head>$links" +
-            "<link rel=\"stylesheet\" href=\"/css\"></head><body>b</body></html>"
-          graft.operators.HtmlExtract.hreflangs(html).flatMap {
-            case (lang, href) =>
-              graft.operators.UrlOps.resolve(pageUrl, href)
-                .map(u => (id, lang, u))
-          }
-        }
-        .toDF("id", "lang", "url")
-        .orderBy("id", "lang")
-    }),
-    // Code-switch segmentation: per-8-token-block language id (the
-    // lang_id marker heuristic) with same-language runs collapsed —
-    // the fixture appends a German and a French marker run to every
-    // document, so each one ends in real language switches whatever
-    // its body predicts. Same block/boundary/window mechanics as
-    // text_tiling; integer hits, deterministic tie order.
-    "lang_segments" -> ((s, d) => {
-      val fixed = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          concat(col("text"), lit(" der die das und der die das und" +
-            " le la les et le la les et")).as("text"))
-      TextAnalysis.languageSegments(fixed, "doc_id", "text")
-        .orderBy("id", "seg_id")
-    }),
-    // Change-rate recrawl schedule — the freshness half of frontier
-    // policy: pages stable for r consecutive fetches back off to
-    // base·2^r seconds (capped); each document contributes a 6-fetch
-    // history whose fingerprint stops changing at fetch id%6. All
-    // integral; the oracle replays the backoff arithmetic.
-    "crawl_recrawl" -> ((s, d) => {
-      val fetches = table(s, d, "documents")
-        .select(col("doc_id"))
-        .withColumn("fetch_idx", explode(sequence(lit(0L), lit(5L))))
-        .withColumn("fp", concat(lit("f"),
-          least(col("fetch_idx"), col("doc_id") % 6)))
-        .withColumn("fetch_s", lit(1700000000L) + col("doc_id"))
-      Frontier.recrawlSchedule(fetches, "doc_id", "fetch_idx", "fp",
-        "fetch_s").orderBy("page")
-    }),
-    // Homoglyph spoof-domain card — UTS #39-style skeletons: Cyrillic
-    // а and digit-1 variants of falcon<h>.example must flag as spoofs
-    // of the legit domain (which itself stays clean). One scan-local
-    // skeleton map + one equality self-join on the skeleton key.
-    "crawl_spoof_domains" -> ((s, d) => {
-      import s.implicits._
-      val domains = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .map { id =>
-          // letter suffix, not a digit: the skeleton's classic
-          // digit substitutions ('0'->'o','1'->'l') are PART of the
-          // transform, so legit fixture names must not carry digits.
-          // id%3 is coprime with the id%10 residue, so every suffix
-          // sees all three variants (id%5 would be constant — gcd trap)
-          val suffix = ('a' + (id % 10)).toChar
-          (id % 3) match {
-            case 0 => s"fаlcon$suffix.example" // Cyrillic а
-            case 1 => s"fa1con$suffix.example"      // digit 1 for l
-            case _ => s"falcon$suffix.example"
-          }
-        }
-        .toDF("domain")
-      Homoglyph.spoofCandidates(domains, "domain").orderBy("domain")
-    }),
-    // Weighted priority sample (sequential Poisson): top-50 documents
-    // by priority = weight·65536 div (seeded-u16+1) — survival odds
-    // ~proportional to n_chars, reproducible (md5 uniform), and
-    // mergeable: one TakeOrderedAndProject, never a global sort. The
-    // oracle replays the integer priorities and the same total order.
-    "priority_sample" -> ((s, d) =>
-      DatasetSplit.prioritySample(
-        table(s, d, "documents").select(
-          col("doc_id"), col("lang"), col("n_chars")),
-        "doc_id", "n_chars", k = 50)),
-    // Horvitz–Thompson subset-sum card over the SAME priority sample
-    // (Duffield–Lund–Thorup): Σ max(w, τ) with τ = the (k+1)-th
-    // priority — the unbiased corpus-total estimate a 50-row sample
-    // supports, shown against the truth with its relative error.
-    "sample_ht_estimate" -> ((s, d) =>
-      DatasetSplit.priorityEstimate(
-        table(s, d, "documents").select(col("doc_id"), col("n_chars")),
-        "doc_id", "n_chars", k = 50)),
-    // Largest-remainder (Hamilton) apportionment of a 100-slot
-    // eval/annotation budget across languages: floor quotas plus
-    // largest remainders, integer-exact, sums to the budget by
-    // construction. Remainder rank via a strata-sized broadcast
-    // self-join — no unpartitioned window even at 5 rows.
-    // Neyman (optimal) allocation: n_h ∝ N_h·σ_h with the weight kept
-    // as ONE integer square root of exact moments (N·Σv² − (Σv)²) —
-    // variance-aware budget splitting with no per-stratum float
-    // variance; zero-variance strata draw nothing.
-    "sample_neyman" -> ((s, d) =>
-      MixtureSampling.neymanAllocation(
-        table(s, d, "documents"), "lang", "n_chars", n = 200)
-        .orderBy("stratum")),
-    "sample_allocation" -> ((s, d) =>
-      MixtureSampling.apportion(table(s, d, "documents"), "lang", n = 100)
-        .orderBy("stratum")),
-    // Temperature-scaled mixture (the mC4/XLM-R multilingual recipe):
-    // 1000 slots across sources ∝ cnt^0.3 — small sources up-sampled,
-    // Hamilton remainders spend the budget exactly. The one
-    // transcendental (pow) rounds to integer micros before any
-    // arithmetic, so the card replays exactly.
-    "mixture_temperature" -> ((s, d) =>
-      MixtureSampling.temperatureApportion(table(s, d, "documents"),
-        "source", n = 1000, alphaNum = 3, alphaDen = 10)),
-    // Heaps'-law fit: vocabulary growth V(2^j) at doubling prefixes
-    // of the deterministic corpus order, log-log OLS for beta —
-    // near-dup floods depress it, noise inflates it.
-    "corpus_heaps_fit" -> ((s, d) =>
-      TextAnalysis.heapsFit(table(s, d, "documents"), "doc_id", "text")),
-    // Good-Turing frequency-of-frequencies: N_r per count r and the
-    // r* re-estimate — the classical smoothing diagnostic; N_1/N is
-    // the unseen-mass estimate.
-    "lm_good_turing" -> ((s, d) =>
-      LanguageModel.goodTuring(table(s, d, "documents"), "text")),
-    // Zipf-law fit: log-log OLS over the term-frequency table —
-    // slope ≈ −1 / r² near 1 for natural text; template floods bend
-    // the line. Exact decimal moments, fixed-order double divisions.
-    "corpus_zipf_fit" -> ((s, d) =>
-      TextAnalysis.zipfFit(table(s, d, "documents"), "text")),
-    // TextRank keyterms (Mihalcea & Tarau 2004): integer PageRank
-    // over the adjacent-token co-occurrence graph (length-≥4
-    // candidates), top-20 — centrality, not frequency. The iteration
-    // runs on the vocabulary-sized simple graph, independent of
-    // corpus row count.
-    "text_rank_terms" -> ((s, d) =>
-      TextAnalysis.textRankTerms(table(s, d, "documents"), "text",
-        k = 20, minLen = 4, iters = 4)),
-    // SIXTH optimizer rewrite: a 2500-element IN list (the routine
-    // "exclude these opted-out ids" blocklist filter) re-plans as a
-    // BROADCAST set probe — result-identical exact membership, but
-    // the plan carries a handle instead of re-serializing the set
-    // into every stage's task binary. The oracle replays the list's
-    // closed form arithmetically.
-    "sql_inset_rewrite" -> ((s, d) => {
-      graft.plans.InSetBroadcastRule.install(s)
-      val blocked = (0 until 2500).map(i => (i * 4 + 1).toLong)
-      table(s, d, "documents")
-        .filter(col("doc_id").isin(blocked: _*))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n_blocked"),
-          sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
-    }),
-    // Blocklist scan — Aho-Corasick multi-pattern matching: all
-    // patterns (words AND multi-word phrases, including one that is a
-    // substring of another) found in ONE text pass per document,
-    // O(text + matches) regardless of pattern count; the automaton is
-    // driver-built and broadcast (handle in the plan, payload fetched
-    // once per executor). The oracle re-counts each borderless
-    // pattern by replace-arithmetic and sums.
-    "blocklist_scan" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val tag = blocklistTag(s)
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          GraftFunctions.acScan(tag, col("text")).as("r"))
-        .select(col("doc_id"),
-          col("r.total_matches").as("total_matches"),
-          col("r.distinct_patterns").as("distinct_patterns"))
-        .orderBy("doc_id")
-    }),
-    // JSONL ingest triage over a drifting dump (the codegen
-    // json_field_types kernel: one byte scan per line, no parsed
-    // tree): field × type counts including the string→number drift on
-    // "n", optional fields, and the truncated-line malformed row —
-    // what you check BEFORE committing spark.read.json to a schema.
-    // The oracle rebuilds the identical lines and classifies them
-    // with DuckDB's own strict JSON parser.
-    "jsonl_field_census" -> ((s, d) =>
-      graft.sources.JsonLines.fieldCensus(jsonlFixture(s, d), "line")),
-    // Per-field schema decision card over the same dump: presence,
-    // type arity, dominant type, monomorphic flag.
-    "jsonl_schema_card" -> ((s, d) =>
-      graft.sources.JsonLines.schemaCard(jsonlFixture(s, d), "line")),
-    // Typed extraction of the dump's valid lines with the schema the
-    // card decided (id/lang/ok; "n" read as string — its observed
-    // supertype under the number→string drift): from_json is
-    // codegen'd and scan-local; malformed lines drop via the same
-    // kernel validity gate, so the parse row count ties out against
-    // the census. The oracle re-parses with DuckDB's json_extract.
-    "jsonl_parse" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      jsonlFixture(s, d)
-        .filter(graft.functions.GraftFunctions
-          .jsonFieldTypes(col("line")).isNotNull)
-        .select(from_json(col("line"),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("id",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("lang",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("n",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("ok",
-              org.apache.spark.sql.types.BooleanType)))).as("r"))
-        .select(col("r.id").as("id"), col("r.lang").as("lang"),
-          col("r.n").as("n"), col("r.ok").as("ok"))
-        .orderBy("id")
-    }),
-    // CSV dialect sniffing — the tabular ingestion gate: per-file
-    // delimiter (count-consistency scoring, quote-aware so embedded
-    // delimiters inside quoted fields don't fool it), quoting, header
-    // (two-row numeric heuristic), and column count from a bounded
-    // sample. Four dialects built in-plan per document — the quoted
-    // ones embed the delimiter INSIDE a quoted field, which a naive
-    // raw-count sniffer miscounts. The oracle pins every expected
-    // dialect arithmetically.
-    "csv_sniff" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .map { id =>
-          val nCols = (3 + id % 3).toInt
-          val (delim, quoted) = (id % 4) match {
-            case 0 => (",", true)
-            case 1 => (";", false)
-            case 2 => ("\t", false)
-            case _ => ("|", true)
-          }
-          val hasHeader = id % 2 == 0
-          def row(r: Int): String = (0 until nCols).map {
-            case 0 if quoted => "\"x" + delim + "y\"" // embedded delimiter
-            case 0 => s"x_$r"
-            case 1 => s"${id + r}" // numeric field
-            case j => s"t$j"
-          }.mkString(delim)
-          val header = (0 until nCols).map(j => s"c$j").mkString(delim)
-          val sample = ((if (hasHeader) Seq(header) else Nil) ++
-            (0 until 4).map(row)).mkString("\n")
-          val dd = graft.sources.CsvSniff.sniff(sample).get
-          (id, graft.sources.CsvSniff.delimiterName(dd.delimiter),
-            dd.quoted, dd.header, dd.nCols.toLong)
-        }
-        .toDF("id", "delimiter", "quoted", "header", "n_cols")
-        .orderBy("id")
-    }),
-    // Crawler-trap detection — URL-space amplification per host:
-    // URLs collapse to templates (digit runs → N, ≥8-char hex runs →
-    // H, query values dropped), and a host whose distinct URLs vastly
-    // outnumber its templates is GENERATING them (calendar, session
-    // id, tracking-param traps — all three built in-plan, next to
-    // honest article pages that stay under the threshold). Feeds
-    // Frontier as a per-host budget cap. The oracle replays every
-    // count arithmetically.
-    "crawl_trap_scores" -> ((s, d) => {
-      import s.implicits._
-      val urls = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .map { id =>
-          (id % 10) match {
-            case 0 => s"https://cal.example/events/${2000 + id % 20}/" +
-              s"${1 + id % 12}/${1 + id % 28}"
-            case 1 => s"https://shop.example/s/" +
-              f"${(id * 2654435761L) % 4294967296L}%08x/item"
-            case 2 => s"https://track.example/p?page=${id % 9}" +
-              s"&session=${id * 31 + 7}"
-            // (id div 10) % 5 varies WITHIN a host (id % 5 would be
-            // constant per h — the gcd trap): each honest host gets
-            // ~5 distinct articles collapsing to one template, the
-            // under-threshold control case
-            case h => s"https://site$h.example/article/${(id / 10) % 5}"
-          }
-        }
-        .toDF("url")
-      graft.operators.CrawlTraps.trapScores(urls, "url").orderBy("host")
-    }),
-    // TextTiling topical segmentation (Hearst 1997, block form) —
-    // "semantic chunking" without a model: documents split where the
-    // Jaccard cohesion of adjacent 8-token blocks drops below the
-    // threshold, on the micro-integer grid. Chunks that respect topic
-    // boundaries embed/retrieve better than blind 512-token slices.
-    "text_tiling" -> ((s, d) =>
-      TextTiling.segments(table(s, d, "documents"), "doc_id", "text")
-        .orderBy("id", "seg_id")),
-    // Margin-based bitext mining (the CCMatrix/LASER recipe): en↔de
-    // translation-pair candidates scored by cosine normalized against
-    // each side's k-NN neighborhood mean, mutual-best + threshold.
-    // All post-cosine arithmetic runs on a micro-integer grid, so the
-    // mined set is bit-exact and the oracle replays it. Candidates
-    // are the SCALE PATH: the two-relation banded LSH bucket join
-    // (en×de bucket collisions only — corpus×corpus pairs never
-    // materialize) with the ANN-recipe candidate floor
-    // cos_micro >= 300000 as part of the row's semantics. At the
-    // 3×64 parameters LSH recall on this relation is exactly 1, so
-    // the oracle replays the candidate set as the exact threshold
-    // relation (cross join + WHERE — the oracle may be O(n²); the
-    // plan is not, which BitextPlanSpec asserts structurally).
-    "bitext_mining" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val docs = table(s, d, "documents")
-      val emb = table(s, d, "embeddings")
-      def side(lang: String) = docs.filter(col("lang") === lang)
-        .select(col("doc_id").as("id"))
-        .join(emb.select(col("vec_id").as("id"),
-          col("embedding").as("v")), "id")
-      val cands = BitextMining.candidatesBetween(
-        side("en"), side("de"), "id", "v", thresholdMicro = 300000L,
-        bitsPerTable = 3, nTables = 64, maxBucket = Some(4096))
-      BitextMining.marginPairs(cands, "x_id", "y_id", "cos_micro")
-        .orderBy("x_id")
-    }),
-    // pass@k evaluation card (Chen et al. 2021, the unbiased
-    // estimator): per task with n samples and c correct,
-    // pass@k = 1 - C(n-c,k)/C(n,k). One Retrieval.passAtK builder per
-    // k — an expression loop of exact BIGINT falling-factorial
-    // factors (a zero factor handles n-c < k; NULL when k > n), then
-    // one double division — cross-engine exact at ANY k, not four
-    // hardcoded terms (the r9 verdict's reusability ask). Tasks are
-    // 16-sample groups so pass@10 is defined on every row. The
-    // canonical model-eval aggregate: one hash aggregate over
-    // per-sample verdicts, driver state zero.
-    "eval_pass_at_k" -> ((s, d) =>
-      table(s, d, "documents")
-        .groupBy(expr("doc_id div 16").as("task_id"))
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("n_chars") % 3 === 0, 1L).otherwise(0L)).as("c"))
-        .filter(col("n") >= 4)
-        .select(col("task_id"), col("n"), col("c"),
-          Retrieval.passAtK(col("n"), col("c"), 1, Scale).as("pass_at_1"),
-          Retrieval.passAtK(col("n"), col("c"), 4, Scale).as("pass_at_4"),
-          Retrieval.passAtK(col("n"), col("c"), 10, Scale).as("pass_at_10"))
-        .orderBy("task_id")),
-    // Hour-of-day reliability card: Wilson lower bound on the
-    // non-error event fraction per ingestion hour — 3/3 clean cannot
-    // outrank 960/1000 clean (same generic sourceWilson operator, a
-    // different grouping + predicate).
-    "events_hour_reliability" -> ((s, d) =>
-      TextAnalysis.sourceWilson(
-        graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-          .withColumn("hr", hour(col("ts")).cast("long")),
-        "hr", col("event_type") =!= "error")
-        .withColumnRenamed("source", "hr")
-        .orderBy("hr")),
-    // CUSUM changepoint card (Page 1954): two-sided peak excursion of
-    // the daily count series per type via the prefix-extreme closed
-    // form — one partitioned window over the bounded day grid, exact
-    // micro integers.
-    "events_cusum" -> ((s, d) =>
-      EventSeries.cusumChangepoint(
-        graft.streaming.EventPipeline.normalizeTs(table(s, d, "events")))),
-    // Median/MAD day-level anomaly flags per type — the robust
-    // distribution-free outlier card over the same zero-filled grid.
-    "events_mad_anomalies" -> ((s, d) =>
-      EventSeries.madAnomalies(
-        graft.streaming.EventPipeline.normalizeTs(table(s, d, "events")),
-        k = 2)),
-    // Hour-of-day seasonal profile: dense 24-hour share grid + peak
-    // flags per type.
-    "events_seasonality" -> ((s, d) =>
-      EventSeries.seasonalProfile(
-        graft.streaming.EventPipeline.normalizeTs(table(s, d, "events")))),
-    // Unicode script-mix card: per-doc counts over explicit BMP
-    // ranges (no \p{Script=} classes — engine availability differs),
-    // dominant script with declared tie order. The fixture appends
-    // known script runs so every block exercises.
-    "text_script_mix" -> ((s, d) => {
-      val fixed = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id"),
-          concat(col("text"),
-            when(col("doc_id") % 3 === 0, lit(" абвг αβ 漢字数 ١٢"))
-              .when(col("doc_id") % 3 === 1, lit(" नमस्ते 12"))
-              .otherwise(lit(""))).as("text"))
-      TextAnalysis.scriptMix(fixed, "doc_id", "text").orderBy("doc_id")
-    }),
-    // Equi-width value histogram: min/max pass broadcasts, bucketing
-    // pass counts — edges emitted as data, counts integer-exact.
-    "orders_price_histogram" -> ((s, d) =>
-      RelationalAnalytics.equiWidthHistogram(
-        table(s, d, "orders"), "o_totalprice", nBuckets = 16)),
-    // Market-basket frequent pairs: order-bounded self-join (equality
-    // on the basket key, a<b on the item), exact support counts,
-    // lift from one rounded division.
-    "orders_basket_pairs" -> ((s, d) =>
-      RelationalAnalytics.basketPairs(table(s, d, "lineitem"),
-        minSupport = 2L)),
-    // Directional association rules: confidence(a→b) vs (b→a) on the
-    // micro grid + an exact-integral lift ranking — the asymmetric
-    // signal the symmetric lift card hides.
-    "orders_assoc_rules" -> ((s, d) =>
-      RelationalAnalytics.assocRules(table(s, d, "lineitem"),
-        minSupport = 2L, k = 25)
-        .orderBy("rnk")),
-    // Engagement card: DAU / trailing-7 WAU / stickiness — the WAU
-    // side is a 7-way explode to an equality aggregate (constant
-    // blow-up), never an interval join or a distinct-over-window.
-    "events_dau_wau" -> ((s, d) =>
-      graft.streaming.EventPipeline.dauWau(table(s, d, "events"))),
-    // Cohort retention grid: acquisition month x months-since —
-    // integer-exact distinct-active counts over cohort sizes, one
-    // 6-dp division.
-    "orders_cohort_retention" -> ((s, d) =>
-      RelationalAnalytics.cohortRetention(table(s, d, "orders"))),
-    // Event-type transition matrix (first-order Markov view): keyed
-    // lag bigrams -> hash-aggregate counts -> per-prev probabilities.
-    "events_transitions" -> ((s, d) =>
-      graft.streaming.EventPipeline.typeTransitions(table(s, d, "events"))),
-    // FIFTH optimizer rewrite: count(DISTINCT x) over an HllCatalog-
-    // registered path re-plans as the HLL register pipeline — the one
-    // OPT-IN approximate rewrite (registration is explicit consent;
-    // unregistered paths keep the exact distinct aggregate). The
-    // oracle replays the register arithmetic and the same rounding.
-    // NINTH optimizer rewrite: unfiltered count(*) over a REGISTERED
-    // parquet table answers from FOOTERS ONLY — |files| tail reads of
-    // a few KB replace the table-sized data scan (the first query
-    // every ingestion check runs, at 100 TB the most wasteful one).
-    // Distributed mapPartitions footer parse (graft's own thrift
-    // reader), loud failure on an unreadable footer, in-row plan
-    // assertions that the rewrite fired and no data scan survived.
-    "sql_count_footer_rewrite" -> ((s, d) => {
-      graft.plans.FooterCountRewrite.install(s)
-      val path = footerCountStore(s, d)
-      graft.plans.FooterCountCatalog.register(path)
-      val out = s.sql(s"SELECT count(*) AS n_docs FROM parquet.`$path`")
-      val phys = out.queryExecution.executedPlan.toString
-      require(phys.contains("MapPartitions"),
-        s"footer-count rewrite did not fire:\n$phys")
-      require(!phys.contains("Scan parquet"),
-        s"parquet data scan survived the rewrite:\n$phys")
-      out
-    }),
-    // TENTH optimizer rewrite: unfiltered min/max/count over a
-    // registered parquet table answers from COLUMN-CHUNK STATISTICS
-    // in the footers — the "freshness check" queries every ingestion
-    // monitor schedules (SELECT min(id), max(id), count(*)), at
-    // 100 TB the difference between KBs of tail reads and a full
-    // scan. INT32/INT64 only (fixed width → stats never truncated,
-    // and no NaN divergence); nulls exact via null_count.
-    "sql_minmax_footer_rewrite" -> ((s, d) => {
-      graft.plans.FooterStatsRewrite.install(s)
-      val path = footerCountStore(s, d)
-      graft.plans.FooterCountCatalog.register(path)
-      val out = s.sql(
-        s"""SELECT min(doc_id) AS min_id, max(doc_id) AS max_id,
-           |       min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-           |       count(*) AS n_docs, count(lang) AS n_langs
-           |FROM parquet.`$path`""".stripMargin)
-      val phys = out.queryExecution.executedPlan.toString
-      require(phys.contains("MapPartitions"),
-        s"footer-stats rewrite did not fire:\n$phys")
-      require(!phys.contains("Scan parquet"),
-        s"parquet data scan survived the rewrite:\n$phys")
-      out
-    }),
-    // The freshness card proper: min/max of the EVENT-TIME column —
-    // the query every ingestion monitor schedules — answered from
-    // footer timestamp statistics (INT64 micros, unit VERIFIED from
-    // the schema's converted_type, never assumed; INT96 refuses).
-    "sql_freshness_footer_rewrite" -> ((s, d) => {
-      graft.plans.FooterStatsRewrite.install(s)
-      val path = footerEventsStore(s, d)
-      graft.plans.FooterCountCatalog.register(path)
-      val out = s.sql(
-        s"""SELECT min(ts) AS first_ts, max(ts) AS last_ts,
-           |       count(*) AS n_events
-           |FROM parquet.`$path`""".stripMargin)
-      val phys = out.queryExecution.executedPlan.toString
-      require(phys.contains("MapPartitions"),
-        s"freshness footer rewrite did not fire:\n$phys")
-      require(!phys.contains("Scan parquet"),
-        s"parquet data scan survived the rewrite:\n$phys")
-      out
-    }),
-    "sql_hll_rewrite" -> ((s, d) => {
-      graft.plans.HllRewrite.install(s)
-      // dedicated table copy (the rollup row's discipline): the
-      // registration stays scoped to THIS row — other driver rows
-      // over documents.parquet keep their exact distinct plans.
-      val path = hllStore(s, d)
-      graft.plans.HllCatalog.register(path)
-      s.sql(
-        s"""SELECT source, count(DISTINCT text) AS n_distinct
-           |FROM parquet.`$path`
-           |GROUP BY source ORDER BY source""".stripMargin)
-    }),
-    // Canonical-link dedup — the page's SELF-DECLARED dedup key:
-    // in-plan pages carry <link rel="canonical" href="/item..">
-    // (relative, as real sites emit); the pipeline extracts it
-    // (HtmlExtract.canonical), resolves it against the fetch URL
-    // (UrlOps.resolve), normalizes, and collapses fetch variants.
-    // Pages without a canonical fall back to their normalized fetch
-    // URL. The oracle re-derives every key arithmetically.
-    "crawl_canonical_dedup" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val g = id % 120
-            val v = (id / 120) % 4
-            val url = s"https://www.page${g % 10}.com/v$v/item$g"
-            val canonTag =
-              if (id % 5 == 0) ""
-              else s"""<link rel="canonical" href="/item$g">"""
-            val html = s"<html><head><title>T</title>$canonTag</head>" +
-              s"<body>body $id</body></html>"
-            val e = graft.operators.HtmlExtract.extract(html)
-            val key =
-              if (e.canonical.nonEmpty)
-                graft.operators.UrlOps.resolve(url, e.canonical)
-                  .flatMap(graft.operators.UrlOps.normalize)
-                  .getOrElse(url)
-              else graft.operators.UrlOps.normalize(url).getOrElse(url)
-            (id, url, key)
-          }
-        }
-        .toDF("id", "url", "key")
-        .groupBy("key")
-        .agg(count(lit(1)).as("n_fetches"),
-          countDistinct(col("url")).as("n_urls"),
-          min(col("id")).as("keep_id"))
-        .orderBy("key")
-    }),
-    // HITS hubs & authorities over the same domain graph — the
-    // complementary ranking signal (authorities weight sources, hubs
-    // seed discovery). Unnormalized integer iterations: the L2
-    // normalization is a positive scalar, so the RANKING — all
-    // curation consumes — is identical, and Long sums stay bitwise
-    // deterministic under any partitioning.
-    "crawl_hits" -> ((s, d) => {
-      import s.implicits._
-      val edges = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .flatMap { id =>
-          val h = id % 10
-          val q = id % 4
-          val tld = if (h % 3 == 0) "co.uk" else "com"
-          val src = s"site$h.$tld"
-          Seq((src, s"partner$q.example"), (src, s"site$h.com"), (src, src))
-        }
-        .toDF("src", "dst")
-      graft.operators.LinkRank.hits(edges, iters = 4)
-        .orderBy("domain")
-    }),
-    // Frontier scheduling — the crawl control plane's LAST stage:
-    // per-host top-k candidates by (priority DESC, id ASC) via the
-    // bounded topk_by_score aggregate (k pairs per host ride the
-    // shuffle, never the viral host's millions), slot s fetched at
-    // s·crawl_delay. Politeness makes per-host grouping inherent;
-    // the oracle re-derives the schedule with a window (fine at
-    // oracle scale; the aggregate is the 100 TB shape).
-    "crawl_frontier" -> ((s, d) => {
-      import s.implicits._
-      GraftFunctions.register(s)
-      val cand = table(s, d, "documents")
-        .filter(col("text").isNotNull)
-        .select(col("doc_id").cast("long"))
-        .as[Long]
-        .mapPartitions { it =>
-          it.map { id =>
-            val h = id % 7
-            (s"site$h.com", id, (id / 7) % 10, 1000L * (1 + h % 3))
-          }
-        }
-        .toDF("host", "url_id", "priority", "delay_ms")
-      graft.operators.Frontier.schedule(cand, k = 5)
-        .withColumn("url",
-          concat(lit("https://"), col("host"), lit("/p"), col("url_id")))
-        .select("host", "slot", "url_id", "url", "priority", "fetch_at_ms")
-        .orderBy("host", "slot")
-    }),
-    // REAL BMP round trip: same shape as GIF — the JDK's independent
-    // ImageIO BMP writer encodes each document's 6x8 raster (8-bit
-    // palette, padded bottom-up rows), our pure-Scala decoder reads
-    // it back byte-identical; same shared lossless histogram oracle.
-    "multimodal_bmp_decode" -> ((s, d) => {
-      import s.implicits._
-      val bmp = table(s, d, "documents")
-        .filter(length(col("text")) >= 48)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 48).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val writer = javax.imageio.ImageIO.getImageWritersByFormatName("bmp").next()
-          it.map { case (id, px) =>
-            val img = new java.awt.image.BufferedImage(
-              6, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            var p = 0
-            while (p < 48) {
-              img.getRaster.setSample(p % 6, p / 6, 0, px(p) & 0xff)
-              p += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-            writer.setOutput(out)
-            writer.write(new javax.imageio.IIOImage(img, null, null))
-            out.close()
-            (id, bos.toByteArray)
-          }
-        }
-        .toDF("doc_id", "payload")
-      graft.multimodal.Multimodal.extractImageFeatures(bmp, "doc_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id"), col("width"), col("height"), posexplode(col("hist")))
-        .select(col("id"), col("width"), col("height"),
-          col("pos").cast("long").as("bin"), col("col").as("n"))
-        .orderBy("id", "bin")
-    }),
-    // REAL image decode (pure-Scala Netpbm/PGM decoder, no codec libs
-    // needed): each document's first 48 bytes become the pixel buffer
-    // of a valid 6x8 P5 image (header built in-plan), the decoder
-    // parses header+pixels, and the luminance histogram comes back as
-    // exact integer counts. The oracle recomputes the histogram from
-    // the same bytes with string functions — so header parsing, pixel
-    // extraction, and binning are all driver-verified.
-    // REAL baseline-JPEG decode (pure-Scala T.81 decoder — Huffman,
-    // dequant, IDCT; JpegDecoder.scala): three embedded block-uniform
-    // fixtures (DC-only blocks, where conforming IDCTs are exact — the
-    // spec pins our decode bit-identical to the JDK's independent
-    // ImageIO decoder) run through the same distributed feature
-    // pipeline as Netpbm; the oracle pins the decoder-independent
-    // luminance histograms. Entropy coding is not SQL-expressible, so
-    // pinned ground truth is the strongest oracle form available here.
-    "multimodal_jpeg_decode" -> ((s, d) => {
-      import s.implicits._
-      val payloads = graft.multimodal.JpegFixtures.payloads
-        .toDF("fix_id", "payload")
-      graft.multimodal.Multimodal
-        .extractImageFeatures(payloads, "fix_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id").as("fix_id"), col("width"), col("height"),
-          col("n_pixels"), posexplode(col("hist")))
-        .select(col("fix_id"), col("width"), col("height"), col("n_pixels"),
-          col("pos").cast("long").as("bin"), col("col").as("n_in_bin"))
-        .orderBy("fix_id", "bin")
-    }),
-    // REAL progressive-JPEG decode (T.81 Annex G: multi-scan
-    // successive-approximation coefficient refinement — DC first/refine,
-    // AC first with EOB runs, AC refinement correction bits): the SAME
-    // three block-uniform rasters as multimodal_jpeg_decode, written
-    // with ImageIO's progressive scan script. DC-only blocks
-    // reconstruct exactly through successive approximation, so the
-    // pinned histograms are identical to the baseline fixtures' —
-    // quantized coefficients don't change with entropy-coding order —
-    // and JpegDecoderSpec pins the gray decodes bit-identical to the
-    // JDK's independent progressive decoder.
-    "multimodal_progressive_decode" -> ((s, d) => {
-      import s.implicits._
-      val payloads = graft.multimodal.JpegFixtures.progressivePayloads
-        .toDF("fix_id", "payload")
-      graft.multimodal.Multimodal
-        .extractImageFeatures(payloads, "fix_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id").as("fix_id"), col("width"), col("height"),
-          col("n_pixels"), posexplode(col("hist")))
-        .select(col("fix_id"), col("width"), col("height"), col("n_pixels"),
-          col("pos").cast("long").as("bin"), col("col").as("n_in_bin"))
-        .orderBy("fix_id", "bin")
-    }),
-    // REAL PNG round trip over corpus data: each document's first 48
-    // bytes are ENCODED executor-side as a 6x8 grayscale PNG
-    // (PngDecoder.encodeGray — chunks, CRCs, JDK deflate), then decoded
-    // back through the same distributed image pipeline. PNG is
-    // lossless, so the oracle recomputes the histogram from the raw
-    // text bytes with string functions — a data-dependent proof that
-    // encode→decode is the identity, with zero pinned constants.
-    // PNG textual-metadata census (tEXt/zTXt/iTXt, spec §11.3.4):
-    // real chunks with real CRC32s and REAL deflate for zTXt,
-    // inserted after IHDR and recovered without touching IDAT — the
-    // third metadata family beside EXIF and ID3. The oracle replays
-    // the planted values.
-    "multimodal_png_text" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 2)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 2).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .flatMap { case (id, b) =>
-          val b0 = b(0) & 0xff; val b1 = b(1) & 0xff
-          val base = graft.multimodal.PngDecoder.encodeGray(
-            2, 2, Array.fill[Byte](4)((b0 % 7).toByte))
-          val png = graft.multimodal.PngDecoder.withTextChunks(base, Seq(
-            ("tEXt", "Title", "T" + (b0 % 100)),
-            ("zTXt", "Author", ("A" + (b1 % 50)) * (1 + b0 % 3)),
-            ("iTXt", "Comment", "C" + ((b0 + b1) % 30))))
-          graft.multimodal.PngDecoder.textChunks(png).get
-            .map(t => (id, t.kind, t.keyword, t.value, t.crc_ok))
-        }
-        .toDF("id", "kind", "keyword", "value", "crc_ok")
-        .orderBy("id", "kind")
-    }),
-    "multimodal_png_decode" -> ((s, d) => {
-      import s.implicits._
-      val png = table(s, d, "documents")
-        .filter(length(col("text")) >= 48)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 48).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.map { case (id, px) =>
-          (id, graft.multimodal.PngDecoder.encodeGray(6, 8, px))
-        })
-        .toDF("doc_id", "payload")
-      graft.multimodal.Multimodal.extractImageFeatures(png, "doc_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id"), col("width"), col("height"), posexplode(col("hist")))
-        .select(col("id"), col("width"), col("height"),
-          col("pos").cast("long").as("bin"), col("col").as("n"))
-        .orderBy("id", "bin")
-    }),
-    // REAL GIF round trip over corpus data: the same 6x8 rasters,
-    // encoded executor-side by the JDK's INDEPENDENT ImageIO GIF
-    // writer (LZW + interlace — the JDK's own reader mis-decodes its
-    // tiny interlaced output; ours doesn't, see GifDecoderSpec), then
-    // decoded back through our pure-Scala LZW decoder. Gray GIF is
-    // lossless (r=g=b palette entries, exact BT.601 luma), so the
-    // same string-function histogram oracles the full round trip —
-    // zero pinned constants, and the encoder is not our own code.
-    "multimodal_gif_decode" -> ((s, d) => {
-      import s.implicits._
-      val gif = table(s, d, "documents")
-        .filter(length(col("text")) >= 48)
-        .select(col("doc_id").cast("long"),
-          substring(col("text"), 1, 48).cast("binary"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          val writer = javax.imageio.ImageIO.getImageWritersByFormatName("gif").next()
-          it.map { case (id, px) =>
-            val img = new java.awt.image.BufferedImage(
-              6, 8, java.awt.image.BufferedImage.TYPE_BYTE_GRAY)
-            var p = 0
-            while (p < 48) {
-              img.getRaster.setSample(p % 6, p / 6, 0, px(p) & 0xff)
-              p += 1
-            }
-            val bos = new java.io.ByteArrayOutputStream()
-            val out = new javax.imageio.stream.MemoryCacheImageOutputStream(bos)
-            writer.setOutput(out)
-            writer.write(new javax.imageio.IIOImage(img, null, null))
-            out.close()
-            (id, bos.toByteArray)
-          }
-        }
-        .toDF("doc_id", "payload")
-      graft.multimodal.Multimodal.extractImageFeatures(gif, "doc_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id"), col("width"), col("height"), posexplode(col("hist")))
-        .select(col("id"), col("width"), col("height"),
-          col("pos").cast("long").as("bin"), col("col").as("n"))
-        .orderBy("id", "bin")
-    }),
-    "multimodal_image_decode" -> ((s, d) => {
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 48)
-        .select(col("doc_id"),
-          concat(lit("P5\n6 8\n255\n").cast("binary"),
-            substring(col("text"), 1, 48).cast("binary")).as("payload"))
-      graft.multimodal.Multimodal.extractImageFeatures(payloads, "doc_id", "payload", bins = 16)
-        .toDF()
-        .select(col("id"), col("width"), col("height"), posexplode(col("hist")))
-        .select(col("id"), col("width"), col("height"),
-          col("pos").cast("long").as("bin"), col("col").as("n"))
-        .orderBy("id", "bin")
-    }),
-    // Perceptual image dedup: decode the same PGM fixtures through the
-    // REAL Netpbm decoder, average-hash at native 6x8 (48 integer
-    // brighter-than-mean bits), group identical hashes — SimHash's
-    // shape for pictures. The oracle recomputes every hash from the
-    // raw bytes.
-    "multimodal_image_dedup" -> ((s, d) => {
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 48)
-        .select(col("doc_id"),
-          concat(lit("P5\n6 8\n255\n").cast("binary"),
-            substring(col("text"), 1, 48).cast("binary")).as("payload"))
-      graft.multimodal.Multimodal.imageAHash(payloads, "doc_id", "payload",
-        hashW = 6, hashH = 8)
-        .toDF()
-        .groupBy("ahash")
-        .agg(count(lit(1)).as("n_imgs"), min("id").as("keep_id"))
-        .filter(col("n_imgs") > 1)
-        .orderBy("ahash")
-    }),
-    // Image NEAR-dup pairs: the 48-bit aHashes through the same Manku
-    // block scheme (4×12-bit blocks, Hamming ≤ 3 — pigeonhole recall 1,
-    // exact all-pairs oracle): small pixel edits that flip a couple of
-    // brighter-than-mean bits still pair up.
-    "multimodal_image_near_dedup" -> ((s, d) => {
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 48)
-        .select(col("doc_id"),
-          concat(lit("P5\n6 8\n255\n").cast("binary"),
-            substring(col("text"), 1, 48).cast("binary")).as("payload"))
-      Dedup.hammingNearPairs(
-        graft.multimodal.Multimodal.imageAHash(payloads, "doc_id", "payload",
-          hashW = 6, hashH = 8).toDF(),
-        "id", "ahash", nBlocks = 4, maxHamming = 3,
-        maxBucket = Some(1024), bits = 48)
-        .orderBy("a_id", "b_id")
-    }),
-    // REAL audio decode (pure-Scala RIFF/WAV PCM16 decoder): each
-    // document's first 96 bytes become the sample data of a valid mono
-    // 8 kHz WAV (44-byte canonical header built as a binary literal);
-    // the decoder walks the RIFF chunks and the per-window integer
-    // energies hash-match the oracle's recomputation from the same
-    // bytes. ASCII samples are positive, so zero_crossings is 0 here;
-    // signed/stereo/chunk-skipping behavior is pinned in MultimodalSpec.
-    "multimodal_audio_decode" -> ((s, d) => {
-      def le16(v: Int) = Seq((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-      def le32(v: Int) = le16(v & 0xffff) ++ le16((v >> 16) & 0xffff)
-      val header: Array[Byte] = (
-        "RIFF".getBytes("US-ASCII").toSeq ++ le32(132) ++
-          "WAVE".getBytes("US-ASCII").toSeq ++
-          "fmt ".getBytes("US-ASCII").toSeq ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII").toSeq ++ le32(96)).toArray
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 96)
-        .select(col("doc_id"),
-          concat(lit(header), substring(col("text"), 1, 96).cast("binary"))
-            .as("payload"))
-      graft.multimodal.Multimodal.extractAudioFeatures(payloads, "doc_id", "payload",
-        nWindows = 4)
-        .toDF()
-        .orderBy("id", "window")
-    }),
-    // Perceptual audio dedup: the same WAV fixtures through the REAL
-    // PCM16 decoder, 48-bit sample-vs-prefix-mean fingerprint
-    // (volume-scale invariant, integer-only), identical hashes
-    // grouped — completing the text/image/audio dedup matrix. The
-    // oracle recomputes every fingerprint from the 2-byte LE samples.
-    "multimodal_audio_dedup" -> ((s, d) => {
-      def le16(v: Int) = Seq((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
-      def le32(v: Int) = le16(v & 0xffff) ++ le16((v >> 16) & 0xffff)
-      val header: Array[Byte] = (
-        "RIFF".getBytes("US-ASCII").toSeq ++ le32(132) ++
-          "WAVE".getBytes("US-ASCII").toSeq ++
-          "fmt ".getBytes("US-ASCII").toSeq ++ le32(16) ++
-          le16(1) ++ le16(1) ++ le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
-          "data".getBytes("US-ASCII").toSeq ++ le32(96)).toArray
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 96)
-        .select(col("doc_id"),
-          concat(lit(header), substring(col("text"), 1, 96).cast("binary"))
-            .as("payload"))
-      graft.multimodal.Multimodal.audioFingerprint(payloads, "doc_id", "payload",
-        nBits = 48)
-        .toDF()
-        .groupBy("afp")
-        .agg(count(lit(1)).as("n_clips"), min("id").as("keep_id"))
-        .filter(col("n_clips") > 1)
-        .orderBy("afp")
-    }),
-    // REAL video decode + frame sampling (pure-Scala YUV4MPEG2/Y4M
-    // decoder): each document's first 96 bytes become the luma planes
-    // of a valid 4-frame 4x6 monochrome Y4M stream (header + FRAME
-    // markers built in-plan), the decoder walks header tags and frame
-    // boundaries, and every 2nd frame is kept with exact integer luma
-    // stats. The oracle recomputes sum/min/max from the same bytes —
-    // header parsing, frame segmentation, and sampling all
-    // driver-verified. (Chroma-plane skipping for 4:2:0/4:2:2/4:4:4 is
-    // pinned in MultimodalSpec; compressed codecs remain the stub.)
-    "multimodal_video_frames" -> ((s, d) => {
-      val frames = (0 until 4).map(f =>
-        concat(lit("FRAME\n").cast("binary"),
-          substring(col("text"), f * 24 + 1, 24).cast("binary")))
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 96)
-        .select(col("doc_id"),
-          concat(lit("YUV4MPEG2 W4 H6 F25:1 Cmono\n").cast("binary") +: frames: _*)
-            .as("payload"))
-      graft.multimodal.Multimodal.sampleVideoFrames(payloads, "doc_id", "payload",
-        everyNth = 2)
-        .toDF()
-        .orderBy("id", "frame_idx")
-    }),
-    // Perceptual video dedup: the same Y4M fixtures through the REAL
-    // decoder, per-frame integer aHash folded over the ordered frame
-    // sequence with an FNV-prime polynomial — container-robust video
-    // dedup, completing the modality matrix. The oracle recomputes
-    // every frame hash and the fold in HUGEINT arithmetic.
-    "multimodal_video_dedup" -> ((s, d) => {
-      val frames = (0 until 4).map(f =>
-        concat(lit("FRAME\n").cast("binary"),
-          substring(col("text"), f * 24 + 1, 24).cast("binary")))
-      val payloads = table(s, d, "documents")
-        .filter(length(col("text")) >= 96)
-        .select(col("doc_id"),
-          concat(lit("YUV4MPEG2 W4 H6 F25:1 Cmono\n").cast("binary") +: frames: _*)
-            .as("payload"))
-      graft.multimodal.Multimodal.videoFingerprint(payloads, "doc_id", "payload")
-        .toDF()
-        .groupBy("vfp")
-        .agg(count(lit(1)).as("n_videos"), min("id").as("keep_id"))
-        .filter(col("n_videos") > 1)
-        .orderBy("vfp")
-    }),
-    // Byte-payload dedup via content-defined chunking (rows-only: the
-    // Gear/FNV fingerprints are engine-defined; CDC properties are
-    // pinned in ScalaTest).
-    "multimodal_chunk_dedup" -> ((s, d) =>
-      Dedup.chunkDedupStats(
-        table(s, d, "documents").select(col("doc_id"), col("text").cast("binary").as("payload")),
-        "doc_id", "payload", avgBits = 5)
-        .orderBy("chunk")),
-    // PDF structural census: in-plan builder (catalog + page tree +
-    // per-page content streams, classic xref with exact offsets) →
-    // decode-free parse (header, LAST startxref, xref walk, trailer,
-    // dict-region-only page/stream scan). Page count and slice bytes
-    // re-derived arithmetically by the oracle. Char slicing happens in
-    // Spark SQL substring (code-point semantics, same as DuckDB
-    // substr) BEFORE the byte-assembly stage.
-    "multimodal_pdf_meta" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 1)
-        .select(col("doc_id").cast("long"),
-          array((0 until 3).map(i =>
-            substring(col("text"), 1 + 20 * i, 20)): _*),
-          ascii(substring(col("text"), 1, 1)).cast("int"))
-        .as[(Long, Seq[String], Int)]
-        .mapPartitions { it =>
-          it.flatMap { case (id, slices, b0) =>
-            val p = 1 + b0 % 3
-            val contents = slices.take(p)
-              .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-            graft.multimodal.PdfParser.parse(
-              graft.multimodal.PdfParser.build(contents)).map(m =>
-              (id, m.version, m.nObjects, m.nFree, m.size, m.nPages,
-                m.streamBytes, m.encrypted, m.hasEof))
-          }
-        }
-        .toDF("id", "version", "n_objects", "n_free", "size", "n_pages",
-          "stream_bytes", "encrypted", "has_eof")
-        .orderBy("id")
-    }),
-    // Incremental per-source HLL datacard: registers built separately
-    // over the old corpus and a delta batch, union-MERGED by
-    // per-register max — the refresh path that never rescans history.
-    // The oracle rebuilds registers over the FULL table: merge(old,
-    // delta) == direct build is exactly the claim under test.
-    "sketch_hll_incremental" -> ((s, d) => {
-      val docs = table(s, d, "documents").filter(col("text").isNotNull)
-      val old = docs.filter(col("doc_id") % 10 =!= 0)
-      val delta = docs.filter(col("doc_id") % 10 === 0)
-      val merged = HyperLogLog.mergeRegisters(Seq("source"),
-        HyperLogLog.registersPer(old, "text", Seq("source")),
-        HyperLogLog.registersPer(delta, "text", Seq("source")))
-      val exact = docs.groupBy("source")
-        .agg(countDistinct(col("text")).as("exact_distinct"))
-      HyperLogLog.estimatePer(merged, Seq("source"))
-        .join(exact, Seq("source"))
-        .orderBy("source")
-    }),
-    // Minified/generated-code gate: even doc_ids become single-line
-    // space-stripped "bundles" (tripled to trip the avg-line cap),
-    // odd ones become one-word-per-line "formatted" files; the
-    // detector recomputes the three features per row and the oracle
-    // replays them arithmetically.
-    "code_minified_scan" -> ((s, d) => {
-      val fixed = table(s, d, "documents")
-        .filter(length(col("text")) >= 1)
-        .select(col("doc_id"),
-          when(col("doc_id") % 2 === 0,
-            repeat(regexp_replace(col("text"), " ", ""), 3))
-            .otherwise(translate(col("text"), " ", "\n")).as("text"))
-      CodeCorpus.minifiedStats(fixed, "doc_id", "text").orderBy("doc_id")
-    }),
-    // RFM segmentation WITHOUT the global-ntile anti-pattern:
-    // quartile fences from one exact-percentile aggregate, broadcast
-    // back, CASE per score — no unpartitioned window, no global sort.
-    "customer_rfm" -> ((s, d) =>
-      RelationalAnalytics.rfmSegmentation(
-        table(s, d, "orders"), refDate = "2001-09-01")
-        .orderBy("o_custkey")),
-    // Relational pivot: per-user event-type counts as COLUMNS. The
-    // pivot value list is explicit (deterministic schema — never let
-    // the engine discover pivot columns from data at 100 TB: that is
-    // an extra distinct scan and a nondeterministic column order).
-    "events_pivot" -> ((s, d) => {
-      val types = Seq("click", "view", "purchase", "signup")
-      table(s, d, "events")
-        .groupBy("user_id")
-        .pivot("event_type", types)
-        .agg(count(lit(1)))
-        .na.fill(0L, types)
-        .orderBy("user_id")
-    }),
-    // Unpivot/melt: the three lineitem money columns as (metric,
-    // amount) rows — the inverse reshape, one scan, no shuffle
-    // (ids stay on their partitions; output is 3x rows, narrower).
-    "lineitem_unpivot" -> ((s, d) =>
-      table(s, d, "lineitem")
-        .filter(col("l_orderkey") % 100 === 0)
-        .unpivot(
-          Array(col("l_orderkey"), col("l_linenumber")),
-          Array(col("l_extendedprice"), col("l_discount"), col("l_tax")),
-          "metric", "amount")
-        .orderBy("l_orderkey", "l_linenumber", "metric")),
-    // Per-user EWMA smoothing (alpha = 1/2): collect+sort+fold per
-    // key — sequential by construction, so the per-step double
-    // rounding is identical to the oracle's recursive CTE.
-    "events_ewma" -> ((s, d) =>
-      graft.streaming.EventPipeline.ewmaSmoothed(table(s, d, "events"))
-        .orderBy("user_id", "event_id")),
-    // Holt's linear smoothing (alpha = beta = 1/2): level + trend per
-    // user with a one-step forecast — the same sequential fold
-    // discipline as events_ewma, replayed by a recursive CTE.
-    "events_holt" -> ((s, d) =>
-      graft.streaming.EventPipeline.holtSmoothed(table(s, d, "events"))
-        .orderBy("user_id", "event_id")),
-    // Benford first-digit audit over order totals: magnitude-band
-    // CASE digits (no log10, no cast-to-string at query time),
-    // micro-integer chi-square, expected probabilities interpolated
-    // from the SAME precomputed literal table as the oracle.
-    "audit_benford" -> ((s, d) =>
-      BenfordAudit.benfordCard(table(s, d, "orders"), "o_totalprice")),
-    // IVF-PQ: the composed billion-scale index (coarse cluster prune →
-    // ADC over m-byte codes → exact re-rank, faiss's default shape).
-    // Full breadth here ⇒ the prune is a no-op and the oracle replays
-    // ADC → cut → euclidean re-rank exactly; PRUNED recall is pinned
-    // in PqIndexSpec (same convention as ann_tree_topk).
-    "ann_ivfpq_topk" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val (assigned, ivf) = ivfStore(s, d)
-      val pq = ivfPqModel
-      val encoded = PqIndex.encode(assigned, "embedding", pq)
-      PqIndex.ivfPqSearch(encoded, ivf, pq, "vec_id", "embedding",
-        queryVec(s, d), k = 10, searchTopSize = 8, candidates = 64,
-        scoreScale = Some(Scale))
-        .withColumnRenamed("vec_id", "id")
-    }),
-    // IVF-PQ deletion path: ids ≡ 3 (mod 7) tombstoned, anti-joined
-    // AFTER cluster pruning and BEFORE the ADC scan (a dead row must
-    // not consume a candidate slot). Full breadth + exact re-rank ⇒
-    // brute force over the live rows; random-churn parity (append/
-    // delete/compact, frozen centroids + codebook) is pinned in
-    // PqIndexSpec.
-    "ann_ivfpq_delete" -> ((s, d) => {
-      GraftFunctions.register(s)
-      val (assigned, ivf) = ivfStore(s, d)
-      val pq = ivfPqModel
-      val encoded = PqIndex.encode(assigned, "embedding", pq)
-      val tomb = table(s, d, "embeddings")
-        .filter(col("vec_id") % 7 === 3).select("vec_id")
-      PqIndex.ivfPqSearchWithTombstones(encoded, ivf, pq, "vec_id",
-        "embedding", queryVec(s, d), k = 10, searchTopSize = 8,
-        candidates = 64, tombstones = tomb, scoreScale = Some(Scale))
-        .withColumnRenamed("vec_id", "id")
-    }),
-    // Native session_window (Catalyst SessionWindow operator — the
-    // same definition runs under Structured Streaming with watermark
-    // state): gap semantics are half-open [start, last+gap), so an
-    // event at exactly gap distance starts a NEW session (vs the
-    // hand-rolled events_sessions row's closed `> gap` — both
-    // conventions exist; the oracle replays `>=`).
-    "events_session_window" -> ((s, d) =>
-      graft.streaming.EventPipeline.normalizeTs(table(s, d, "events"))
-        .groupBy(col("user_id"), session_window(col("ts"), "600 seconds").as("w"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast("decimal(18,2)")).cast("double")
-            .as("total_value"))
-        .select(col("user_id"), col("w.start").as("session_start"),
-          col("w.end").as("session_end"), col("n_events"), col("total_value"))
-        .orderBy("user_id", "session_start")),
-    // TPC-H Q10 shape: returned-item revenue by customer for one
-    // quarter — fact⋈fact on orderkey (the one shuffle), dimensions
-    // broadcast, top-20 via TakeOrderedAndProject.
-    "tpch_q10_returns" -> ((s, d) =>
-      RelationalAnalytics.returnedItemReport(
-        table(s, d, "customer"), table(s, d, "orders"),
-        table(s, d, "lineitem"), table(s, d, "nation"),
-        quarterStart = "1996-10-01", quarterEnd = "1997-01-01", k = 20)),
-    // Reliability card over the trained quality classifier: score
-    // deciles vs observed positive rate + ECE. All aggregation is
-    // exact-integer (scores re-quantized from their 4-dp rounding);
-    // doubles only in final divisions, 6-dp rounded.
-    "classifier_calibration" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      QualityClassifier.calibration(
-        QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d)),
-        "score", "rule_label")
-    }),
-    // Platt scaling of the same scored relation: σ(A·s + B) fit by
-    // integral-state GD with Platt's smoothed targets — the
-    // parametric calibration sibling of the isotonic row; A/B are
-    // bit-exact micro integers.
-    // Multinomial Naive Bayes (McCallum & Nigam 1998) over whitespace
-    // tokens, class = lang, trained on the doc_id % 5 ≠ 0 split:
-    // the token-level generative counterpart to the numeric-feature
-    // logistic bootstrap above. Model = Laplace-smoothed 6-dp-micro
-    // log-likelihoods over a FIXED top-512 vocabulary (bounded →
-    // broadcastable at any corpus size); fit is two grouped counts,
-    // no gradient loop.
-    "classifier_nb_model" -> ((s, d) =>
-      NaiveBayes.fit(nbTrain(s, d), "lang", "text", NbVocab)
-        .withColumnRenamed("cls", "lang")
-        .orderBy("lang", "token")),
-    // Held-out MAP prediction (doc_id % 5 = 0): prior + token
-    // log-likelihood sums, argmax ties to the smaller class, OOV
-    // tokens dropped (truncated-vocab convention).
-    "classifier_nb_predict" -> ((s, d) => {
-      val tr = nbTrain(s, d)
-      NaiveBayes.predict(nbTest(s, d), "doc_id", "lang", "text",
-        NaiveBayes.fit(tr, "lang", "text", NbVocab),
-        NaiveBayes.priors(tr, "lang", "text"))
-        .select(col("id").as("doc_id"), col("actual").as("lang"),
-          col("predicted").as("pred_lang"), col("score_micro"))
-        .orderBy("doc_id")
-    }),
-    // Confusion-matrix card over the held-out predictions.
-    "classifier_nb_confusion" -> ((s, d) => {
-      val tr = nbTrain(s, d)
-      NaiveBayes.confusion(
-        NaiveBayes.predict(nbTest(s, d), "doc_id", "lang", "text",
-          NaiveBayes.fit(tr, "lang", "text", NbVocab),
-          NaiveBayes.priors(tr, "lang", "text")))
-        .select(col("actual").as("lang"), col("predicted").as("pred_lang"),
-          col("n"))
-    }),
-    // Discriminative-token feature selection ("Fightin' Words"-family
-    // log-odds with integral Haldane correction): per class, the top
-    // 10 tokens by document-presence log-odds — χ²'s question with
-    // PAIRWISE exact products that hold at any corpus size.
-    "classifier_feature_odds" -> ((s, d) =>
-      NaiveBayes.featureLogOdds(table(s, d, "documents"),
-        "doc_id", "lang", "text", NbVocab, topPerClass = 10)
-        .withColumnRenamed("cls", "lang")),
-    // 5-fold cross-validation card: per fold, train on the other four
-    // fifths, score the held-out fifth — the variance check a single
-    // split hides. All five held-out fifths score in ONE fused corpus
-    // pass (`NaiveBayes.predictFolds`: fold-keyed broadcast of the
-    // five cached models — row-identical to five independent predict
-    // plans, spec-pinned); the oracle runs the whole harness GROUPED
-    // BY fold in one CTE chain.
-    "classifier_nb_cv" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      NaiveBayes.predictFolds(docs, "doc_id", "lang", "text",
-        col("doc_id") % 5, nbCvModels(s, d))
-        .groupBy("fold")
-        .agg(count(lit(1)).as("n"),
-          sum(when(col("actual") === col("predicted"), 1L).otherwise(0L))
-            .as("n_correct"))
-        .withColumn("acc_micro", expr("(1000000 * n_correct) div n"))
-        .select("fold", "n", "n_correct", "acc_micro")
-        .orderBy("fold")
-    }),
-    "classifier_platt" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      QualityClassifier.plattSummary(
-        QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d)),
-        "score", "rule_label")
-    }),
-    // Isotonic calibration (PAV via the minimax closed form) of the
-    // same scored relation: monotone calibrated probabilities per
-    // score bin, all integral micros — the proper recalibration step
-    // after the reliability curve shows miscalibration.
-    "classifier_isotonic" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      QualityClassifier.isotonic(
-        QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d)),
-        "score", "rule_label")
-    }),
-    // Murphy decomposition of the Brier score over the same scored
-    // relation — brier = reliability − resolution + uncertainty, all
-    // micro-BIGINTs from denominator-cleared integer algebra (scores
-    // enter 4-dp-exact). The one-number-per-concern card behind the
-    // calibration curve: can scores be sampling weights (reliability)
-    // and do they carry signal at all (resolution)?
-    "classifier_brier" -> ((s, d) => {
-      val docs = table(s, d, "documents")
-      QualityClassifier.brierDecomposition(
-        QualityClassifier.score(docs, "doc_id", "text", clsModel(s, d)),
-        "score", "rule_label")
-    }),
-    // Noisy group counts (truncated geometric mechanism) as a
-    // deterministic SIMULATION: the seed is fixed and visible here so
-    // the oracle can replay the noise — a 16-bit md5 uniform of the
-    // unit-separator-encoded key through precomputed integer
-    // inverse-CDF thresholds (eps-DP requires a secret seed; see
-    // DifferentialPrivacy's class doc). True n rides along for the
-    // gate only.
-    "privacy_dp_counts" -> ((s, d) =>
-      DifferentialPrivacy.noisyCounts(
-        table(s, d, "documents"), Seq("lang", "source"),
-        secretSeed = "dp")
-        .orderBy("lang", "source")),
-    // PDF text extraction (the stage after the census): content
-    // streams read back by xref offset + declared /Length and joined
-    // in document order — the round trip recovers exactly the
-    // contiguous char slices the builder embedded, so the oracle is
-    // one substr.
-    "multimodal_pdf_text" -> ((s, d) => {
-      import s.implicits._
-      table(s, d, "documents")
-        .filter(length(col("text")) >= 1)
-        .select(col("doc_id").cast("long"),
-          array((0 until 3).map(i =>
-            substring(col("text"), 1 + 20 * i, 20)): _*),
-          ascii(substring(col("text"), 1, 1)).cast("int"))
-        .as[(Long, Seq[String], Int)]
-        .mapPartitions { it =>
-          it.map { case (id, slices, b0) =>
-            val p = 1 + b0 % 3
-            val pdf = graft.multimodal.PdfParser.build(slices.take(p)
-              .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-            val streams = graft.multimodal.PdfParser.extractStreams(pdf)
-            (id, streams.length,
-              streams.map(new String(_,
-                java.nio.charset.StandardCharsets.UTF_8)).mkString(""))
-          }
-        }
-        .toDF("id", "n_streams", "text_out")
-        .orderBy("id")
-    }),
-    // TPC-H Q6 shape: ONE filtered scan, ONE scalar aggregate, zero
-    // joins — all three predicates land in PushedFilters, row-group
-    // stats on l_shipdate skip most files, decimal-exact revenue sum.
-    "tpch_q6_forecast" -> ((s, d) =>
-      RelationalAnalytics.forecastRevenue(table(s, d, "lineitem"),
-        "1996-01-01", "1997-01-01", discLo = 0.02, discHi = 0.04,
-        qtyCap = 24.0)),
-    // HyperLogLog distinct sketch: 256 md5-derived registers per key
-    // column, raw harmonic-mean estimate beside the exact count. The
-    // 2^-rho terms are exact powers of two, so the double sum is
-    // partition-order independent and the oracle matches bit-exactly.
-    "sketch_hll_distinct" -> ((s, d) => {
-      val ev = table(s, d, "events")
-      HyperLogLog.estimateWithTruth(ev, "user_id")
-        .withColumn("key_col", lit("user_id"))
-        .unionByName(
-          HyperLogLog.estimateWithTruth(ev, "event_id")
-            .withColumn("key_col", lit("event_id")))
-        .select("key_col", "m", "v_zero", "est_distinct", "exact_distinct")
-        .orderBy("key_col")
-    }),
-    // SCD2 dimension history: per-customer order-count tier at three
-    // cut dates (cumulative snapshots derived in-plan from orders)
-    // collapses into validity intervals via one keyed window — lag
-    // marks change points, lead closes intervals.
-    "snapshot_scd2" -> ((s, d) =>
-      scd2TierHistory(s, d).orderBy("o_custkey", "valid_from")),
-    // Point-in-time lookup against that history — the consumer side
-    // of SCD2: each order joins the tier interval valid at its own
-    // version (equality on custkey + interval residual; no
-    // nested-loop). Facts past the last cut hit the open current
-    // interval.
-    "snapshot_scd2_pit" -> ((s, d) => {
-      val facts = table(s, d, "orders").select(
-        col("o_orderkey"), col("o_custkey"),
-        when(col("o_orderdate") < lit("1997-01-01").cast("timestamp"), 1L)
-          .when(col("o_orderdate") < lit("1999-01-01").cast("timestamp"), 2L)
-          .when(col("o_orderdate") < lit("2001-01-01").cast("timestamp"), 3L)
-          .otherwise(4L).as("version"))
-      Snapshot.scd2Lookup(facts, scd2TierHistory(s, d),
-        "o_custkey", "version")
-        .select("o_orderkey", "o_custkey", "version", "tier",
-          "valid_from", "valid_to_excl")
-        .orderBy("o_orderkey")
-    })
-  )
-
-  // ------------------------------------------------------------- oracles
-
-  /** FNV-1a 64 of the byte values yielded by `bytesExpr` (a DuckDB list
-    * of HUGEINT byte values), as unsigned HUGEINT arithmetic mod 2^64 —
-    * mirrors [[graft.functions.TextHashKernels.fnv1a64]]. The corpus is
-    * ASCII, so `ascii(substr(...))` yields the UTF-8 bytes. */
-  private def fnvSql(bytesExpr: String): String =
-    s"""list_reduce(
-       |  list_prepend(CAST(14695981039346656037 AS HUGEINT), $bytesExpr),
-       |  (h, b) -> (CAST(xor(CAST(h AS UBIGINT), CAST(b AS UBIGINT)) AS HUGEINT)
-       |             * 1099511628211) % 18446744073709551616)""".stripMargin
-
-  /** (x * c) mod 2^64 without INT128 overflow: 32-bit split —
-    * ((hi·c mod 2^32)·2^32 + lo·c) mod 2^64. `x` must be UBIGINT. */
-  private def mulModSql(x: String, c: String): String =
-    s"""CAST((((CAST(($x) >> 32 AS HUGEINT) * $c) % 4294967296) * 4294967296
-       | + CAST(($x) & 4294967295 AS HUGEINT) * $c) % 18446744073709551616 AS UBIGINT)""".stripMargin
-
-  /** Reinterpret an unsigned HUGEINT value < 2^64 as signed BIGINT
-    * (two's complement) — Spark's LongType hash keys are signed. */
-  private def toSignedSql(x: String): String =
-    s"""CAST(CASE WHEN ($x) >= 9223372036854775808
-       | THEN ($x) - 18446744073709551616 ELSE ($x) END AS BIGINT)""".stripMargin
-
-  /** Cosine-similarity score expression mirroring [[graft.functions.VectorKernels]]
-    * op-for-op (sequential double accumulation, dot / (√na·√nb)). */
-  private val CosExpr =
-    "list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) / " +
-      "(sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) * " +
-      "sqrt(list_inner_product(qv.q, qv.q)))"
-
-  /** Shared BM25 CTE chain (query = dup/hash/merge, the driver rows'
-    * fixed query): mirrors [[graft.operators.Retrieval.bm25TopK]]
-    * op-for-op. Every fractional constant is e-notation so DuckDB
-    * parses it as DOUBLE — a bare `2.2` is DECIMAL there, and exact
-    * decimal arithmetic rounds differently from Spark's doubles. */
-  /** Exact late-interaction oracle: per-token max cosine (6-dp micro
-    * grid) summed per doc, top-5 per query. Shared by retrieval_maxsim
-    * (the broadcast-exact path) and retrieval_maxsim_ivf (full-breadth
-    * IVF ≡ exact — every cluster probed, every pair scored). */
-  private lazy val MaxsimExactSql: String =
-    """WITH dt AS (
-      |  SELECT vec_id // 8 AS doc_id, CAST(embedding AS DOUBLE[]) AS v
-      |  FROM embeddings),
-      |qt AS (
-      |  SELECT vec_id % 4 AS qid, vec_id AS qtok,
-      |         CAST(embedding AS DOUBLE[]) AS v
-      |  FROM embeddings WHERE vec_id < 16),
-      |sim AS (
-      |  SELECT q.qid, q.qtok, d.doc_id,
-      |         CAST(round(round(list_inner_product(q.v, d.v) /
-      |              (sqrt(list_inner_product(q.v, q.v)) *
-      |               sqrt(list_inner_product(d.v, d.v))), 6) * 1e6)
-      |           AS BIGINT) AS sim_micro
-      |  FROM qt q CROSS JOIN dt d),
-      |tokmax AS (
-      |  SELECT qid, qtok, doc_id, max(sim_micro) AS tok_max
-      |  FROM sim GROUP BY 1, 2, 3),
-      |score AS (
-      |  SELECT qid, doc_id, CAST(sum(tok_max) AS BIGINT) AS maxsim_micro
-      |  FROM tokmax GROUP BY 1, 2),
-      |r AS (
-      |  SELECT qid, doc_id, maxsim_micro,
-      |         CAST(row_number() OVER (PARTITION BY qid
-      |                ORDER BY maxsim_micro DESC, doc_id) AS BIGINT) AS rnk
-      |  FROM score)
-      |SELECT qid, doc_id, maxsim_micro, rnk FROM r
-      |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin
-
-  /** Shared batch-BM25 scoring chain for the [[RetrBatch]] oracles
-    * (retrieval_bm25_batch / retrieval_mrr / retrieval_map): the
-    * VALUES list through the per-(query, doc) 6-dp DECIMAL score —
-    * one copy, so a k1/b or rounding tweak can never drift one row's
-    * parity while the others keep the old arithmetic. */
-  private lazy val bm25BatchCtes: String =
-    """WITH qt(query_id, term) AS (VALUES
-      |  (CAST(1 AS BIGINT), 'dup'), (1, 'hash'), (1, 'merge'),
-      |  (2, 'vector'), (2, 'spark'), (2, 'window'),
-      |  (3, 'dup'), (3, 'slow')),
-      |stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n,
-      |         CAST(sum(length(string_split(text, ' '))) AS BIGINT) AS sumdl
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, CAST(length(string_split(text, ' ')) AS BIGINT) AS dl,
-      |         unnest(string_split(text, ' ')) AS term
-      |  FROM documents),
-      |tfd AS (
-      |  SELECT doc_id, dl, term, count(*) AS tf FROM toks
-      |  WHERE term IN (SELECT term FROM qt) GROUP BY doc_id, dl, term),
-      |dfd AS (SELECT term, count(*) AS df FROM tfd GROUP BY term),
-      |scored AS (
-      |  SELECT q.query_id, t.doc_id,
-      |         CAST(sum(CAST(round(
-      |           ln(1.0e0 + (s.n - d.df + 0.5e0) / (d.df + 0.5e0)) *
-      |           ((t.tf * 2.2e0) /
-      |            (t.tf + 1.2e0 * ((1.0e0 - 0.75e0) +
-      |             ((0.75e0 * t.dl) / (CAST(s.sumdl AS DOUBLE) / s.n))))),
-      |           6) AS DECIMAL(28,6))) AS DOUBLE) AS score
-      |  FROM tfd t JOIN dfd d USING (term) JOIN qt q USING (term), stats s
-      |  GROUP BY q.query_id, t.doc_id)""".stripMargin
-
-  /** Shared shingle chain (distinct word trigrams with the <3-token
-    * fallback) for the MinHash-family oracles (dedup_minhash /
-    * dedup_containment / split_leakage). */
-  private lazy val shingleCtes: String =
-    """toks AS (
-      |  SELECT doc_id AS id, list_filter(string_split(text, ' '), t -> t != '') AS t
-      |  FROM documents),
-      |sh AS (
-      |  SELECT id, CASE WHEN len(t) = 0 THEN []
-      |                  WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-      |                  ELSE list_distinct(list_transform(generate_series(1, len(t) - 2),
-      |                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS s
-      |  FROM toks)""".stripMargin
-
-  /** Exact-join MinHash pair replay at the 0.5 Jaccard threshold
-    * (recall 1 at the fixture knobs — the dedup_minhash contract);
-    * expects [[shingleCtes]] upstream. */
-  private lazy val minhashPairsCte: String =
-    """mh_pairs AS (
-      |  SELECT * FROM (
-      |    SELECT a.id AS a_id, b.id AS b_id,
-      |           round(CAST(len(list_intersect(a.s, b.s)) AS DOUBLE) /
-      |                 len(list_distinct(list_cat(a.s, b.s))), 6) AS jaccard
-      |    FROM sh a JOIN sh b ON a.id < b.id)
-      |  WHERE jaccard >= 0.5)""".stripMargin
-
-  /** The md5 percent-bucket expression ([[DatasetSplit.bucket]]'s
-    * replay), shared by dataset_split / stratified_sample /
-    * split_leakage. */
-  private def md5BucketSql(idExpr: String): String =
-    s"""CAST(list_sum(list_transform(generate_series(1, 4),
-       |           i -> (strpos('0123456789abcdef',
-       |                   substr(md5(CAST($idExpr AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-       |                * CAST(16 ** (4 - i) AS BIGINT))) % 100 AS BIGINT)""".stripMargin
-
-  private lazy val bm25Ctes: String =
-    """WITH stats AS (
-      |  SELECT CAST(count(*) AS DOUBLE) AS n,
-      |         CAST(sum(length(string_split(text, ' '))) AS BIGINT) AS sumdl
-      |  FROM documents),
-      |toks AS (
-      |  SELECT doc_id, CAST(length(string_split(text, ' ')) AS BIGINT) AS dl,
-      |         unnest(string_split(text, ' ')) AS term
-      |  FROM documents),
-      |tfq AS (
-      |  SELECT doc_id, dl, term, count(*) AS tf FROM toks
-      |  WHERE term IN ('dup', 'hash', 'merge') GROUP BY doc_id, dl, term),
-      |dfq AS (SELECT term, count(*) AS df FROM tfq GROUP BY term),
-      |bm25 AS (
-      |  SELECT t.doc_id, count(*) AS n_terms,
-      |         CAST(sum(CAST(round(
-      |           ln(1.0e0 + (s.n - d.df + 0.5e0) / (d.df + 0.5e0)) *
-      |           ((t.tf * 2.2e0) /
-      |            (t.tf + 1.2e0 * ((1.0e0 - 0.75e0) +
-      |             ((0.75e0 * t.dl) / (CAST(s.sumdl AS DOUBLE) / s.n))))),
-      |           6) AS DECIMAL(28,6))) AS DOUBLE) AS score
-      |  FROM tfq t JOIN dfq d USING (term), stats s
-      |  GROUP BY t.doc_id)""".stripMargin
-
-  /** Shared RM3 oracle chain: the QL pass-1 CTEs, feedback-doc
-    * weights, relevance-model masses, and the interpolated term
-    * weights (wrel) — every step on the exact grids the Scala
-    * operators use. */
-  private lazy val rm3Ctes: String =
-    """WITH stats AS MATERIALIZED (
-      |  SELECT CAST(sum(length(string_split(text, ' '))) AS BIGINT) AS sumdl
-      |  FROM documents),
-      |toks AS MATERIALIZED (
-      |  SELECT doc_id, CAST(length(string_split(text, ' ')) AS BIGINT) AS dl,
-      |         unnest(string_split(text, ' ')) AS term
-      |  FROM documents),
-      |tfq AS (
-      |  SELECT doc_id, dl, term, count(*) AS tf FROM toks
-      |  WHERE term IN ('dup', 'hash', 'merge') GROUP BY doc_id, dl, term),
-      |cfq AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tfq GROUP BY term),
-      |qc AS (
-      |  SELECT CAST(count(*) AS BIGINT) AS nq,
-      |         sum(CAST(round(ln(2000.0e0 *
-      |           (CAST(cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))), 6)
-      |           AS DECIMAL(28,6))) AS c0
-      |  FROM cfq, stats s),
-      |ql1 AS (
-      |  SELECT t.doc_id, t.dl,
-      |         sum(CAST(round(
-      |           ln(t.tf + 2000.0e0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))) -
-      |           ln(2000.0e0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))), 6)
-      |           AS DECIMAL(28,6))) AS sd
-      |  FROM tfq t JOIN cfq c USING (term), stats s
-      |  GROUP BY t.doc_id, t.dl),
-      |fb AS MATERIALIZED (
-      |  SELECT doc_id,
-      |         CAST(sd + qc.c0 - CAST(round(qc.nq * ln(CAST(dl AS DOUBLE) + 2000.0e0), 6)
-      |              AS DECIMAL(28,6)) AS DOUBLE) AS score
-      |  FROM ql1, qc ORDER BY score DESC, doc_id LIMIT 10),
-      |mx AS (SELECT max(score) AS ms FROM fb),
-      |fbw AS (SELECT doc_id,
-      |          CAST(floor(exp(score - ms) * 1000000 + 0.5) AS BIGINT) AS wq
-      |        FROM fb, mx),
-      |fbt AS (SELECT t.doc_id, f.wq, t.dl, t.term, CAST(count(*) AS BIGINT) AS tf
-      |        FROM toks t JOIN fbw f USING (doc_id) GROUP BY 1, 2, 3, 4),
-      |srel AS (SELECT term, CAST(sum((wq * tf * 1000000) // dl) AS BIGINT) AS s
-      |         FROM fbt GROUP BY 1),
-      |tope AS (SELECT term, s FROM srel ORDER BY s DESC, term LIMIT 10),
-      |sums AS (SELECT CAST(sum(s) AS BIGINT) AS ss FROM tope),
-      |orig(term, qtf) AS (VALUES ('dup', CAST(1 AS BIGINT)), ('hash', 1), ('merge', 1)),
-      |wrel AS MATERIALIZED (
-      |  SELECT coalesce(o.term, e.term) AS term,
-      |         CAST(coalesce(e.s, 0) AS BIGINT) AS s_micro,
-      |         CAST(coalesce((500000 * o.qtf) // 3, 0) +
-      |              coalesce((500000 * e.s) // ss, 0) AS BIGINT) AS weight_micro,
-      |         o.term IS NOT NULL AS is_original
-      |  FROM orig o FULL JOIN tope e ON o.term = e.term CROSS JOIN sums)""".stripMargin
-
-  private def knnOracle(scoreExpr: String, desc: Boolean, k: Int,
-      where: String = ""): String = {
-    val dir = if (desc) "DESC" else "ASC"
-    s"""WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-       |SELECT CAST(e.vec_id AS VARCHAR) AS id, d.source AS title, d.lang AS vendor,
-       |       d.text AS description, round($scoreExpr, 6) AS score
-       |FROM embeddings e JOIN documents d ON e.vec_id = d.doc_id, qv
-       |$where
-       |ORDER BY score $dir NULLS LAST, id
-       |LIMIT $k""".stripMargin
-  }
-
-  /** The luminance histogram of each document's first 48 bytes laid
-    * out as a 6x8 gray raster — recomputed with DuckDB string
-    * functions. Shared by every LOSSLESS image path (`multimodal_image_decode`'s
-    * in-plan Netpbm build, and the PNG / GIF encode→decode round
-    * trips): decoded pixels must BE the raw bytes, zero pinned
-    * constants. */
-  private lazy val gray6x8HistogramOracle: String =
-    """WITH docs AS (
-      |  SELECT doc_id AS id, substr(text, 1, 48) AS px
-      |  FROM documents WHERE length(text) >= 48),
-      |bins AS (SELECT CAST(g - 1 AS BIGINT) AS bin
-      |         FROM unnest(generate_series(1, 16)) t(g)),
-      |counts AS (
-      |  SELECT id, ascii(substr(px, CAST(i AS INT), 1)) // 16 AS bin, count(*) AS c
-      |  FROM docs, unnest(generate_series(1, 48)) t(i)
-      |  GROUP BY id, bin)
-      |SELECT d.id, CAST(6 AS INT) AS width, CAST(8 AS INT) AS height, b.bin,
-      |       CAST(COALESCE(c.c, 0) AS BIGINT) AS n
-      |FROM docs d CROSS JOIN bins b
-      |LEFT JOIN counts c ON c.id = d.id AND c.bin = b.bin
-      |ORDER BY d.id, b.bin""".stripMargin
-
-  /** embedding_kcenter's oracle: the greedy farthest-point traversal
-    * replayed round by round in chained CTEs — same micro-cosine
-    * grid, same (maxsim, id) argmin order. */
-  private def kCenterOracle(k: Int): String = {
-    def cosExpr(av: String, bv: String) =
-      s"CAST(floor(1000000.0 * (list_inner_product($av, $bv) / " +
-        s"(sqrt(list_inner_product($av, $av)) * " +
-        s"sqrt(list_inner_product($bv, $bv)))) + 0.5) AS BIGINT)"
-    val sb = new StringBuilder
-    sb ++= "WITH v AS (SELECT vec_id AS id, " +
-      "CAST(embedding AS DOUBLE[]) AS v FROM embeddings),\n"
-    sb ++= "c1 AS (SELECT min(id) AS id FROM v),\n"
-    sb ++= "s1 AS (SELECT x.id, x.v, " + cosExpr("x.v", "cv.v") +
-      " AS maxsim FROM v x, (SELECT v.v FROM v, c1 WHERE v.id = c1.id) cv" +
-      " WHERE x.id <> (SELECT id FROM c1)),\n"
-    for (r <- 2 to k) {
-      sb ++= s"c$r AS (SELECT id, maxsim FROM s${r - 1} " +
-        "ORDER BY maxsim, id LIMIT 1),\n"
-      if (r < k)
-        sb ++= s"s$r AS (SELECT x.id, x.v, greatest(x.maxsim, " +
-          cosExpr("x.v", "cv.v") + s") AS maxsim FROM s${r - 1} x, " +
-          s"(SELECT s.v FROM s${r - 1} s, c$r WHERE s.id = c$r.id) cv " +
-          s"WHERE x.id <> (SELECT id FROM c$r)),\n"
-    }
-    sb ++= "sel AS (\n  SELECT CAST(1 AS BIGINT) AS rank, " +
-      "(SELECT id FROM c1) AS vec_id, " +
-      "CAST(-1000000 AS BIGINT) AS radius_micro\n"
-    for (r <- 2 to k)
-      sb ++= s"  UNION ALL SELECT $r, (SELECT id FROM c$r), " +
-        s"(SELECT maxsim FROM c$r)\n"
-    sb ++= ")\nSELECT rank, vec_id, radius_micro FROM sel ORDER BY rank"
-    sb.toString
-  }
-
-  /** crawl_rank's oracle, one chained CTE per PageRank iteration. The
-    * recurrence is pure integer arithmetic (`//` floor-division equals
-    * Spark's `div` truncation on the non-negative ranks), so DuckDB
-    * re-derives the engine's result exactly — no float tolerance. */
-  private def pageRankOracle(iters: Int): String = {
-    val head =
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |dd AS (
-        |  SELECT DISTINCT id % 10 AS h, id % 4 AS q,
-        |         CASE WHEN (id % 10) % 3 = 0 THEN 'co.uk' ELSE 'com' END AS tld
-        |  FROM src),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT 'site' || h || '.' || tld AS src,
-        |         'partner' || q || '.example' AS dst FROM dd
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.com' FROM dd
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.' || tld FROM dd)),
-        |verts AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
-        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-        |r0 AS (SELECT v, CAST(1000000 AS BIGINT) AS r FROM verts)""".stripMargin
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS (
-         |  SELECT verts.v, 150000 + (85 * COALESCE(c.s, 0)) // 100 AS r
-         |  FROM verts LEFT JOIN (
-         |    SELECT e.dst AS v, SUM(r${i - 1}.r // deg.outdeg) AS s
-         |    FROM e JOIN r${i - 1} ON r${i - 1}.v = e.src
-         |    JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON c.v = verts.v)""".stripMargin
-    }
-    (head +: steps).mkString(",\n") +
-      s"\nSELECT v AS domain, CAST(r AS BIGINT) AS rank_micros " +
-      s"FROM r$iters ORDER BY domain"
-  }
-
-  /** Shared CTE chain for the two DSIR oracles: md5-nibble buckets,
-    * per-bucket target/raw counts, 6-dp log10 lambda deltas, the
-    * n·offset normalizer — everything up to the final projection. */
-  /** Shared split-conformal derivation: md5 split buckets (the
-    * dataset_split replay), per-type floor-mean predictor from train,
-    * calibration residuals, rank-r order statistic q̂, test rows. */
-  private val conformalCtes: String =
-    """WITH ev AS (
-      |  SELECT event_id, event_type,
-      |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-      |  FROM events),
-      |b AS (
-      |  SELECT event_id, event_type, cents,
-      |         CAST(list_sum(list_transform(generate_series(1, 4),
-      |           i -> (strpos('0123456789abcdef',
-      |                   substr(md5(CAST(event_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-      |                * CAST(16 ** (4 - i) AS BIGINT))) % 100 AS BIGINT) AS bucket
-      |  FROM ev),
-      |sp AS (
-      |  SELECT event_id, event_type, cents,
-      |         CASE WHEN bucket < 80 THEN 'train'
-      |              WHEN bucket < 90 THEN 'val' ELSE 'test' END AS split
-      |  FROM b),
-      |yh AS (SELECT event_type, CAST(sum(cents) // count(*) AS BIGINT) AS yhat
-      |       FROM sp WHERE split = 'train' GROUP BY 1),
-      |cal AS (SELECT abs(cents - yhat) AS s
-      |        FROM sp JOIN yh USING (event_type) WHERE split = 'val'),
-      |nc AS (SELECT CAST(count(*) AS BIGINT) AS n_cal,
-      |              CAST(least(((count(*) + 1) * 90 + 99) // 100, count(*))
-      |                   AS BIGINT) AS r
-      |       FROM cal),
-      |q AS (SELECT n_cal, r, CAST(min(s) AS BIGINT) AS qhat
-      |      FROM (SELECT s, row_number() OVER (ORDER BY s) AS rn FROM cal), nc
-      |      WHERE rn = r GROUP BY n_cal, r),
-      |t AS (SELECT sp.event_id, sp.event_type, sp.cents, yh.yhat
-      |      FROM sp JOIN yh USING (event_type) WHERE split = 'test')""".stripMargin
-
-  private val dsirCtes: String =
-    """WITH t AS (
-      |  SELECT doc_id, lang = 'en' AS tgt,
-      |         string_split(text, ' ') AS toks
-      |  FROM documents WHERE text IS NOT NULL),
-      |n AS (
-      |  SELECT doc_id, tgt,
-      |         unnest(list_concat(toks,
-      |           list_transform(generate_series(1, len(toks) - 1),
-      |             i -> toks[CAST(i AS INT)] || ' ' ||
-      |                  toks[CAST(i + 1 AS INT)]))) AS ng
-      |  FROM t),
-      |b AS (
-      |  SELECT doc_id, tgt,
-      |    CAST(list_sum(list_transform(generate_series(1, 4), i ->
-      |      (strpos('0123456789abcdef',
-      |         substr(md5(ng), CAST(i AS INT), 1)) - 1)
-      |      * CAST(16 ** (4 - i) AS BIGINT))) % 1024 AS BIGINT) AS bk
-      |  FROM n),
-      |c AS (
-      |  SELECT bk, sum(CASE WHEN tgt THEN 1 ELSE 0 END) AS ct,
-      |         sum(CASE WHEN tgt THEN 0 ELSE 1 END) AS cq
-      |  FROM b GROUP BY 1),
-      |lam AS (
-      |  SELECT bk,
-      |         CAST(round(log10(ct + 1), 6) AS DECIMAL(28,6)) -
-      |         CAST(round(log10(cq + 1), 6) AS DECIMAL(28,6)) AS l
-      |  FROM c),
-      |tot AS (
-      |  SELECT CAST(round(log10(sum(ct) + 1024), 6) AS DECIMAL(28,6)) -
-      |         CAST(round(log10(sum(cq) + 1024), 6) AS DECIMAL(28,6))
-      |           AS off
-      |  FROM c),
-      |wgt AS (
-      |  SELECT b.doc_id, CAST(count(*) AS BIGINT) AS n_ngrams,
-      |         round(CAST(sum(lam.l) - count(*) * tot.off AS DOUBLE), 6)
-      |           AS logweight
-      |  FROM b JOIN lam USING (bk), tot
-      |  WHERE NOT b.tgt
-      |  GROUP BY b.doc_id, tot.off)""".stripMargin
-
-  /** eval_bleu4's oracle: tagged per-n unit counts on both sides, the
-    * clipped-overlap join, scalar-subquery pivot, and the identical
-    * fixed-order bleu expression over the exact integers. */
-  private def bleuOracle(maxN: Int): String = {
-    def units(side: String): String = (1 to maxN).map { n =>
-      val parts = (0 until n)
-        .map(o => s"toks[CAST(i + $o AS INT)]").mkString(" || ' ' || ")
-      s"""SELECT doc_id, $n AS n,
-         |  unnest(CASE WHEN len(toks) >= $n THEN
-         |    list_transform(generate_series(1, len(toks) - ${n - 1}),
-         |      i -> $parts) ELSE [] END) AS u
-         |FROM (SELECT doc_id, string_split($side, ' ') AS toks
-         |      FROM pairs)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val lnSum = (1 to maxN).map(n =>
-      s"ln((SELECT o FROM perN WHERE n = $n) * 1.0 / " +
-        s"(SELECT t FROM perN WHERE n = $n))").mkString(" + ")
-    val anyZero = (1 to maxN)
-      .map(n => s"(SELECT o FROM perN WHERE n = $n) = 0")
-      .mkString(" OR ")
-    val pCols = (1 to maxN).map(n =>
-      s"CAST((1000000 * (SELECT o FROM perN WHERE n = $n)) // " +
-        s"(SELECT t FROM perN WHERE n = $n) AS BIGINT) AS p${n}_micro")
-      .mkString(",\n       ")
-    s"""WITH pairs AS (
-       |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-       |         text AS gold
-       |  FROM documents WHERE text IS NOT NULL),
-       |pu AS (${units("pred")}),
-       |gu AS (${units("gold")}),
-       |pc AS (SELECT doc_id, n, u, count(*) AS cp FROM pu GROUP BY 1, 2, 3),
-       |gc AS (SELECT doc_id, n, u, count(*) AS cg FROM gu GROUP BY 1, 2, 3),
-       |perN AS (
-       |  SELECT pc.n, sum(least(cp, COALESCE(cg, 0))) AS o,
-       |         sum(cp) AS t
-       |  FROM pc LEFT JOIN gc
-       |    ON pc.doc_id = gc.doc_id AND pc.n = gc.n AND pc.u = gc.u
-       |  GROUP BY pc.n),
-       |rr AS (SELECT sum(cg) AS r FROM gc WHERE n = 1)
-       |SELECT CAST((SELECT t FROM perN WHERE n = 1) AS BIGINT) AS c,
-       |       CAST(rr.r AS BIGINT) AS r,
-       |       $pCols,
-       |       round(CASE WHEN $anyZero THEN 0.0 ELSE
-       |         exp(least(0.0, 1.0 - rr.r * 1.0 /
-       |               (SELECT t FROM perN WHERE n = 1)) +
-       |             ($lnSum) / $maxN) END, 6) AS bleu
-       |FROM rr""".stripMargin
-  }
-
-  /** eval_chrf's oracle: whitespace-stripped char n-gram counts per
-    * side, full-outer clipped overlap per order, the same integral
-    * F-beta and mean. */
-  private def chrfOracle(maxN: Int, beta: Int): String = {
-    def units(side: String): String = (1 to maxN).map { n =>
-      s"""SELECT doc_id, $n AS n,
-         |  unnest(CASE WHEN len(s) >= $n THEN
-         |    list_transform(generate_series(1, len(s) - ${n - 1}),
-         |      i -> substr(s, CAST(i AS INT), $n)) ELSE [] END) AS u
-         |FROM (SELECT doc_id, replace($side, ' ', '') AS s FROM pairs)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val b2 = beta * beta
-    val fCols = (1 to maxN).map(n =>
-      s"CAST((SELECT f FROM perN WHERE n = $n) AS BIGINT) AS f${n}_micro")
-      .mkString(",\n       ")
-    val fSum = (1 to maxN)
-      .map(n => s"(SELECT f FROM perN WHERE n = $n)").mkString(" + ")
-    s"""WITH pairs AS (
-       |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-       |         text AS gold
-       |  FROM documents WHERE text IS NOT NULL),
-       |pu AS (${units("pred")}),
-       |gu AS (${units("gold")}),
-       |pc AS (SELECT doc_id, n, u, count(*) AS cp FROM pu GROUP BY 1, 2, 3),
-       |gc AS (SELECT doc_id, n, u, count(*) AS cg FROM gu GROUP BY 1, 2, 3),
-       |agg AS (
-       |  SELECT COALESCE(pc.n, gc.n) AS n,
-       |         sum(least(COALESCE(cp, 0), COALESCE(cg, 0))) AS o,
-       |         sum(COALESCE(cp, 0)) AS tp,
-       |         sum(COALESCE(cg, 0)) AS tg
-       |  FROM pc FULL OUTER JOIN gc
-       |    ON pc.doc_id = gc.doc_id AND pc.n = gc.n AND pc.u = gc.u
-       |  GROUP BY 1),
-       |pr AS (
-       |  SELECT n, (1000000 * o) // tp AS p, (1000000 * o) // tg AS r
-       |  FROM agg),
-       |perN AS (
-       |  SELECT n, CASE WHEN $b2 * p + r > 0
-       |    THEN (${1 + b2} * p * r) // ($b2 * p + r) ELSE 0 END AS f
-       |  FROM pr)
-       |SELECT $fCols,
-       |       CAST(($fSum) // $maxN AS BIGINT) AS chrf_micro""".stripMargin
-  }
-
-  /** eval_chrfpp's oracle: chrfOracle's char n-gram orders UNION'd
-    * with word n-gram orders (tagged 100+n so the two families share
-    * one per-order aggregate), the same integral F-beta per order,
-    * and the equal-weight mean over charMaxN + wordMaxN orders. */
-  private def chrfPpOracle(charMaxN: Int, wordMaxN: Int, beta: Int): String = {
-    def charUnits(side: String): String = (1 to charMaxN).map { n =>
-      s"""SELECT doc_id, $n AS n,
-         |  unnest(CASE WHEN len(s) >= $n THEN
-         |    list_transform(generate_series(1, len(s) - ${n - 1}),
-         |      i -> substr(s, CAST(i AS INT), $n)) ELSE [] END) AS u
-         |FROM (SELECT doc_id, replace($side, ' ', '') AS s FROM pairs)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    def wordUnits(side: String): String = (1 to wordMaxN).map { n =>
-      val parts = (0 until n)
-        .map(o => s"toks[CAST(i + $o AS INT)]").mkString(" || ' ' || ")
-      s"""SELECT doc_id, ${100 + n} AS n,
-         |  unnest(CASE WHEN len(toks) >= $n THEN
-         |    list_transform(generate_series(1, len(toks) - ${n - 1}),
-         |      i -> $parts) ELSE [] END) AS u
-         |FROM (SELECT doc_id, string_split($side, ' ') AS toks
-         |      FROM pairs)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val b2 = beta * beta
-    val tags = (1 to charMaxN).map(n => (s"fc${n}_micro", n)) ++
-      (1 to wordMaxN).map(n => (s"fw${n}_micro", 100 + n))
-    // COALESCE: an order with no grams at all has no agg row — it
-    // contributes f = 0 to the fixed-denominator mean, matching the
-    // Spark side's total (ANSI-safe) convention
-    val fCols = tags.map { case (name, tag) =>
-      s"CAST(COALESCE((SELECT f FROM perN WHERE n = $tag), 0) AS BIGINT) AS $name"
-    }.mkString(",\n       ")
-    val fSum = tags.map { case (_, tag) =>
-      s"COALESCE((SELECT f FROM perN WHERE n = $tag), 0)"
-    }.mkString(" + ")
-    s"""WITH pairs AS (
-       |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-       |         text AS gold
-       |  FROM documents WHERE text IS NOT NULL),
-       |pu AS (${charUnits("pred")}
-       |UNION ALL
-       |${wordUnits("pred")}),
-       |gu AS (${charUnits("gold")}
-       |UNION ALL
-       |${wordUnits("gold")}),
-       |pc AS (SELECT doc_id, n, u, count(*) AS cp FROM pu GROUP BY 1, 2, 3),
-       |gc AS (SELECT doc_id, n, u, count(*) AS cg FROM gu GROUP BY 1, 2, 3),
-       |agg AS (
-       |  SELECT COALESCE(pc.n, gc.n) AS n,
-       |         sum(least(COALESCE(cp, 0), COALESCE(cg, 0))) AS o,
-       |         sum(COALESCE(cp, 0)) AS tp,
-       |         sum(COALESCE(cg, 0)) AS tg
-       |  FROM pc FULL OUTER JOIN gc
-       |    ON pc.doc_id = gc.doc_id AND pc.n = gc.n AND pc.u = gc.u
-       |  GROUP BY 1),
-       |pr AS (
-       |  SELECT n,
-       |         CASE WHEN tp > 0 THEN (1000000 * o) // tp ELSE 0 END AS p,
-       |         CASE WHEN tg > 0 THEN (1000000 * o) // tg ELSE 0 END AS r
-       |  FROM agg),
-       |perN AS (
-       |  SELECT n, CASE WHEN $b2 * p + r > 0
-       |    THEN (${1 + b2} * p * r) // ($b2 * p + r) ELSE 0 END AS f
-       |  FROM pr)
-       |SELECT $fCols,
-       |       CAST(($fSum) // ${charMaxN + wordMaxN} AS BIGINT) AS chrfpp_micro""".stripMargin
-  }
-
-  /** eval_sentence_bleu's oracle: bleuOracle's tagged per-n unit
-    * counts and clipped-overlap join, but grouped PER PAIR, with the
-    * (doc × order) grid filling absent orders with (o, t) = (0, 0),
-    * add-one-smoothed micros for n ≥ 2, and the identical fixed-order
-    * 6-dp bleu expression per row. */
-  private def sentenceBleuOracle(maxN: Int): String =
-    sentenceBleuOracleOver(
-      """pairs AS (
-        |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-        |         text AS gold
-        |  FROM documents WHERE text IS NOT NULL)""".stripMargin, maxN)
-
-  /** The sentence-BLEU replay over ANY `pairs AS (...doc_id, pred,
-    * gold...)` CTE text — shared by the per-pair eval row and the
-    * sampled self-BLEU diversity row. */
-  private def sentenceBleuOracleOver(pairsCte: String, maxN: Int): String = {
-    def units(side: String): String = (1 to maxN).map { n =>
-      val parts = (0 until n)
-        .map(o => s"toks[CAST(i + $o AS INT)]").mkString(" || ' ' || ")
-      s"""SELECT doc_id, $n AS n,
-         |  unnest(CASE WHEN len(toks) >= $n THEN
-         |    list_transform(generate_series(1, len(toks) - ${n - 1}),
-         |      i -> $parts) ELSE [] END) AS u
-         |FROM (SELECT doc_id, string_split($side, ' ') AS toks
-         |      FROM pairs)""".stripMargin
-    }.mkString("\nUNION ALL\n")
-    val pivCols = (1 to maxN).map(n =>
-      s"max(CASE WHEN n = $n THEN o END) AS o$n, " +
-        s"max(CASE WHEN n = $n THEN t END) AS t$n").mkString(",\n  ")
-    val pCols = ((
-      "CAST(CASE WHEN t1 > 0 THEN (1000000 * o1) // t1 ELSE 0 END " +
-        "AS BIGINT) AS p1_micro") +:
-      (2 to maxN).map(n =>
-        s"CAST((1000000 * (o$n + 1)) // (t$n + 1) AS BIGINT) AS p${n}_micro"))
-      .mkString(",\n       ")
-    val lnSum = s"ln(o1 * 1.0 / t1)" +
-      (2 to maxN).map(n => s" + ln((o$n + 1.0) / (t$n + 1.0))").mkString
-    s"""WITH $pairsCte,
-       |pu AS (${units("pred")}),
-       |gu AS (${units("gold")}),
-       |pc AS (SELECT doc_id, n, u, count(*) AS cp FROM pu GROUP BY 1, 2, 3),
-       |gc AS (SELECT doc_id, n, u, count(*) AS cg FROM gu GROUP BY 1, 2, 3),
-       |perN AS (
-       |  SELECT pc.doc_id, pc.n, sum(least(cp, COALESCE(cg, 0))) AS o,
-       |         sum(cp) AS t
-       |  FROM pc LEFT JOIN gc
-       |    ON pc.doc_id = gc.doc_id AND pc.n = gc.n AND pc.u = gc.u
-       |  GROUP BY pc.doc_id, pc.n),
-       |grid AS (SELECT doc_id, unnest(generate_series(1, $maxN)) AS n
-       |         FROM pairs),
-       |filled AS (
-       |  SELECT g.doc_id, g.n, COALESCE(p.o, 0) AS o, COALESCE(p.t, 0) AS t
-       |  FROM grid g LEFT JOIN perN p ON g.doc_id = p.doc_id AND g.n = p.n),
-       |piv AS (SELECT doc_id,
-       |  $pivCols
-       |  FROM filled GROUP BY doc_id),
-       |sides AS (SELECT doc_id,
-       |  CAST(len(string_split(gold, ' ')) AS BIGINT) AS r FROM pairs)
-       |SELECT piv.doc_id, CAST(t1 AS BIGINT) AS c, sides.r AS r,
-       |       $pCols,
-       |       round(CASE WHEN o1 = 0 THEN 0.0 ELSE
-       |         exp(least(0.0, 1.0 - sides.r * 1.0 / t1) +
-       |             ($lnSum) / $maxN) END, 6) AS bleu
-       |FROM piv JOIN sides ON piv.doc_id = sides.doc_id""".stripMargin
-  }
-
-  /** eval_cer's oracle: DuckDB's levenshtein IS byte-level (verified:
-    * levenshtein('héllo','hello') = 2), which is exactly the kernel's
-    * UnitByte mode — the error rate replays on the same micro grid. */
-  private lazy val cerOracle: String =
-    """WITH pairs AS (
-      |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-      |         text AS gold
-      |  FROM documents WHERE text IS NOT NULL)
-      |SELECT doc_id,
-      |       CAST(levenshtein(pred, gold) AS BIGINT) AS edit_dist,
-      |       CAST(strlen(gold) AS BIGINT) AS n_gold,
-      |       CAST(CASE WHEN strlen(gold) > 0
-      |         THEN (1000000 * levenshtein(pred, gold)) // strlen(gold)
-      |         WHEN levenshtein(pred, gold) = 0 THEN 0
-      |         ELSE 1000000 END AS BIGINT) AS err_micro
-      |FROM pairs""".stripMargin
-
-  /** eval_wer's oracle: token-level Levenshtein via a bijection trick
-    * — each pair's distinct tokens map to single printable bytes
-    * (row_number 1..94 → chr(33..126)), the token sequences become
-    * byte strings, and DuckDB's byte-level levenshtein computes the
-    * token edit distance exactly (a bijection preserves unit
-    * equality). Pairs with > 94 distinct tokens are filtered on both
-    * sides — a fixture bound, not an operator limit. */
-  private lazy val werOracle: String =
-    """WITH pairs AS (
-      |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-      |         text AS gold
-      |  FROM documents WHERE text IS NOT NULL),
-      |pp AS (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS pos
-      |       FROM (SELECT doc_id, string_split(pred, ' ') AS t FROM pairs)),
-      |gp AS (SELECT doc_id, t, unnest(generate_series(1, len(t))) AS pos
-      |       FROM (SELECT doc_id, string_split(gold, ' ') AS t FROM pairs)),
-      |pu AS (SELECT doc_id, pos, t[CAST(pos AS INT)] AS u FROM pp),
-      |gu AS (SELECT doc_id, pos, t[CAST(pos AS INT)] AS u FROM gp),
-      |vocab AS (
-      |  SELECT doc_id, u,
-      |         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY u) AS INT) AS r
-      |  FROM (SELECT DISTINCT doc_id, u FROM
-      |          (SELECT doc_id, u FROM pu UNION ALL SELECT doc_id, u FROM gu))),
-      |ok AS (SELECT doc_id FROM vocab GROUP BY doc_id HAVING max(r) <= 94),
-      |pm AS (SELECT pu.doc_id,
-      |              string_agg(chr(32 + v.r), '' ORDER BY pu.pos) AS s
-      |       FROM pu
-      |       JOIN vocab v ON pu.doc_id = v.doc_id AND pu.u = v.u
-      |       JOIN ok ON pu.doc_id = ok.doc_id
-      |       GROUP BY pu.doc_id),
-      |gm AS (SELECT gu.doc_id,
-      |              string_agg(chr(32 + v.r), '' ORDER BY gu.pos) AS s
-      |       FROM gu
-      |       JOIN vocab v ON gu.doc_id = v.doc_id AND gu.u = v.u
-      |       JOIN ok ON gu.doc_id = ok.doc_id
-      |       GROUP BY gu.doc_id)
-      |SELECT p.doc_id,
-      |       CAST(levenshtein(pm.s, gm.s) AS BIGINT) AS edit_dist,
-      |       CAST(len(string_split(p.gold, ' ')) AS BIGINT) AS n_gold,
-      |       CAST((1000000 * levenshtein(pm.s, gm.s)) //
-      |            len(string_split(p.gold, ' ')) AS BIGINT) AS err_micro
-      |FROM pairs p
-      |JOIN pm ON p.doc_id = pm.doc_id
-      |JOIN gm ON p.doc_id = gm.doc_id""".stripMargin
-
-  /** The two generation-eval oracles (token-F1, ROUGE-n): per-side
-    * multiset unit counts, least() overlap, integral micro scores —
-    * [[graft.operators.GenEval.overlapF1]]'s arithmetic with the same
-    * replace-perturbed fixture. */
-  private def genEvalOracle(n: Int): String = {
-    val unit =
-      if (n == 1) "unnest(string_split(t, ' '))"
-      else {
-        val parts = (0 until n)
-          .map(o => s"toks[CAST(i + $o AS INT)]").mkString(" || ' ' || ")
-        s"unnest(CASE WHEN len(string_split(t, ' ')) >= $n THEN " +
-          s"list_transform(generate_series(1, " +
-          s"len(string_split(t, ' ')) - ${n - 1}), i -> $parts) " +
-          "ELSE [] END)"
-      }
-    val tokAlias =
-      if (n == 1) "" else ", string_split(t, ' ') AS toks"
-    s"""WITH pairs AS (
-       |  SELECT doc_id, replace(text, 'table', 'chair') AS pred,
-       |         text AS gold
-       |  FROM documents WHERE text IS NOT NULL),
-       |pu AS (SELECT doc_id, $unit AS u FROM
-       |  (SELECT doc_id, pred AS t$tokAlias FROM pairs)),
-       |gu AS (SELECT doc_id, $unit AS u FROM
-       |  (SELECT doc_id, gold AS t$tokAlias FROM pairs)),
-       |pc AS (SELECT doc_id, u, count(*) AS cp FROM pu GROUP BY 1, 2),
-       |gc AS (SELECT doc_id, u, count(*) AS cg FROM gu GROUP BY 1, 2),
-       |ov AS (SELECT doc_id, sum(least(cp, cg)) AS overlap
-       |       FROM pc JOIN gc USING (doc_id, u) GROUP BY 1),
-       |tp AS (SELECT doc_id, sum(cp) AS n_pred FROM pc GROUP BY 1),
-       |tg AS (SELECT doc_id, sum(cg) AS n_gold FROM gc GROUP BY 1),
-       |m AS (
-       |  SELECT p.doc_id,
-       |         COALESCE(tp.n_pred, 0) AS n_pred,
-       |         COALESCE(tg.n_gold, 0) AS n_gold,
-       |         COALESCE(ov.overlap, 0) AS overlap
-       |  FROM pairs p
-       |  LEFT JOIN tp ON p.doc_id = tp.doc_id
-       |  LEFT JOIN tg ON p.doc_id = tg.doc_id
-       |  LEFT JOIN ov ON p.doc_id = ov.doc_id)
-       |SELECT doc_id, CAST(n_pred AS BIGINT) AS n_pred,
-       |       CAST(n_gold AS BIGINT) AS n_gold,
-       |       CAST(overlap AS BIGINT) AS overlap,
-       |       CAST(CASE WHEN n_pred > 0
-       |            THEN (1000000 * overlap) // n_pred ELSE 0 END
-       |            AS BIGINT) AS p_micro,
-       |       CAST(CASE WHEN n_gold > 0
-       |            THEN (1000000 * overlap) // n_gold ELSE 0 END
-       |            AS BIGINT) AS r_micro,
-       |       CAST(CASE WHEN n_pred + n_gold > 0
-       |            THEN (2000000 * overlap) // (n_pred + n_gold)
-       |            ELSE 0 END AS BIGINT) AS f1_micro
-       |FROM m ORDER BY doc_id""".stripMargin
-  }
-
-  /** Shared vocab CTEs for the unigram-LM oracles: word explode,
-    * piece n-grams (two chained unnests — lengths depend on the
-    * position), counts with the 1-char fallback, micro log-prob
-    * scores on the 6-dp grid. */
-  private val unigramVocabCtes: String =
-    """WITH w0 AS (
-      |  SELECT unnest(string_split(text, ' ')) AS w FROM documents
-      |  WHERE text IS NOT NULL),
-      |w2 AS (SELECT w FROM w0 WHERE len(w) >= 1),
-      |pi AS (SELECT w, unnest(generate_series(1, len(w))) AS i FROM w2),
-      |pl AS (SELECT w, i,
-      |         unnest(generate_series(1, least(4, len(w) - i + 1))) AS l
-      |       FROM pi),
-      |pc AS (SELECT substr(w, CAST(i AS INT), CAST(l AS INT)) AS piece
-      |       FROM pl),
-      |voc0 AS (
-      |  SELECT piece, count(*) AS cnt FROM pc GROUP BY 1
-      |  HAVING count(*) >= 2 OR len(piece) = 1),
-      |vt AS (SELECT sum(cnt) AS tt FROM voc0),
-      |voc AS (
-      |  SELECT piece, cnt,
-      |         CAST((CAST(round(log10(cnt), 6) AS DECIMAL(28,6)) -
-      |               CAST(round(log10(tt), 6) AS DECIMAL(28,6)))
-      |              * 1000000 AS BIGINT) AS score_micro
-      |  FROM voc0, vt)""".stripMargin
-
-  /** unigram_segment's oracle: the packed-BIGINT Viterbi DP unrolled
-    * as one chained CTE per word position (dp_i = greatest over piece
-    * lengths of dp_{i-l} + 32·score − 1), then the per-doc rollup
-    * with explicit NULL poisoning — exactly [[UnigramLm]]'s
-    * arithmetic. */
-  /** The unigram vocab + chained-dp CTE prefix (through d<maxWordLen>)
-    * shared by the segment and refit oracles. */
-  private def unigramDpCtes(maxPiece: Int, maxWordLen: Int): String = {
-    val head = unigramVocabCtes +
-      """,
-        |words AS (SELECT DISTINCT w AS word FROM w2),
-        |d0 AS (SELECT word, CAST(31 AS BIGINT) AS dp0 FROM words)""".stripMargin
-    val steps = (1 to maxWordLen).map { i =>
-      val cands = (1 to math.min(i, maxPiece)).map { l =>
-        s"dp${i - l} + 32 * (SELECT score_micro FROM voc " +
-          s"WHERE piece = substr(word, ${i - l + 1}, $l)) - 1"
-      }
-      val best = if (cands.size == 1) cands.head
-        else s"greatest(${cands.mkString(", ")})"
-      s"""d$i AS (SELECT *, CASE WHEN len(word) >= $i
-         |  THEN $best END AS dp$i FROM d${i - 1})""".stripMargin
-    }
-    (head +: steps).mkString(",\n")
-  }
-
-  private def unigramSegmentOracle(maxPiece: Int, maxWordLen: Int): String = {
-    val finalCase = (1 to maxWordLen)
-      .map(i => s"WHEN $i THEN dp$i").mkString(" ")
-    val tail =
-      s"""f AS (SELECT word, CASE len(word) $finalCase END AS f
-         |     FROM d$maxWordLen),
-         |g AS (SELECT word, f, ((f % 32) + 32) % 32 AS r FROM f),
-         |seg AS (SELECT word, 31 - r AS np, (f - r) // 32 AS lp FROM g),
-         |occ AS (
-         |  SELECT doc_id, unnest(string_split(text, ' ')) AS word
-         |  FROM documents WHERE text IS NOT NULL),
-         |occ2 AS (SELECT doc_id, word FROM occ WHERE len(word) >= 1)
-         |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_words,
-         |  CAST(CASE WHEN sum(CASE WHEN s.np IS NULL THEN 1 ELSE 0 END) > 0
-         |       THEN NULL ELSE sum(s.np) END AS BIGINT) AS n_pieces,
-         |  CAST(CASE WHEN sum(CASE WHEN s.np IS NULL THEN 1 ELSE 0 END) > 0
-         |       THEN NULL ELSE sum(s.lp) END AS BIGINT) AS logp_micro
-         |FROM occ2 JOIN seg s USING (word)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin
-    unigramDpCtes(maxPiece, maxWordLen) + ",\n" + tail
-  }
-
-  /** unigram_refit's oracle: the dp CTEs, then the backtrace unrolled
-    * as one CTE per step (p → p − l*(p), l* = smallest piece length
-    * reproducing dp(p) exactly), viterbi piece recount weighted by
-    * word frequency, rescore — [[UnigramLm.refit]]'s arithmetic. */
-  private def unigramRefitOracle(maxPiece: Int, maxWordLen: Int): String = {
-    val dparr = (0 to maxWordLen).map(i => s"dp$i").mkString(", ")
-    def lstarCase(): String = (1 to maxPiece).map { l =>
-      s"CASE WHEN p >= $l AND da[CAST(p + 1 AS INT)] = " +
-        s"da[CAST(p - $l + 1 AS INT)] + 32 * (SELECT score_micro " +
-        s"FROM voc WHERE piece = substr(word, CAST(p - $l + 1 AS INT), $l)) " +
-        s"- 1 THEN $l END"
-    }.mkString("COALESCE(", ", ", ")")
-    val btSteps = (1 to maxWordLen).map { k =>
-      s"""bt$k AS (
-         |  SELECT word, da,
-         |    CASE WHEN p > 0 AND ls IS NOT NULL THEN p - ls
-         |         ELSE 0 END AS p,
-         |    CASE WHEN p > 0 AND ls IS NOT NULL
-         |         THEN list_append(ps,
-         |           substr(word, CAST(p - ls + 1 AS INT), CAST(ls AS INT)))
-         |         ELSE ps END AS ps
-         |  FROM (SELECT *, ${lstarCase()} AS ls FROM bt${k - 1}))""".stripMargin
-    }
-    val tail =
-      s"""pieces AS (
-         |  SELECT word, unnest(ps) AS piece FROM bt$maxWordLen),
-         |freq AS (
-         |  SELECT w AS word, count(*) AS f FROM w2
-         |  WHERE len(w) <= $maxWordLen GROUP BY 1),
-         |vc AS (
-         |  SELECT piece, sum(f) AS viterbi_cnt
-         |  FROM pieces JOIN freq USING (word) GROUP BY 1),
-         |j AS (
-         |  SELECT voc.piece, voc.cnt, voc.score_micro,
-         |         COALESCE(vc.viterbi_cnt, 0) AS viterbi_cnt
-         |  FROM voc LEFT JOIN vc USING (piece)),
-         |tv AS (SELECT sum(viterbi_cnt) AS t FROM j)
-         |SELECT piece, CAST(cnt AS BIGINT) AS cnt, score_micro,
-         |       CAST(viterbi_cnt AS BIGINT) AS viterbi_cnt,
-         |       CASE WHEN viterbi_cnt > 0 THEN CAST(
-         |         (CAST(round(log10(viterbi_cnt), 6) AS DECIMAL(28,6)) -
-         |          CAST(round(log10(t), 6) AS DECIMAL(28,6)))
-         |         * 1000000 AS BIGINT) END AS new_score_micro
-         |FROM j, tv ORDER BY piece""".stripMargin
-    unigramDpCtes(maxPiece, maxWordLen) + ",\n" +
-      s"""bt0 AS (
-         |  SELECT word, list_value($dparr) AS da,
-         |         CAST(len(word) AS BIGINT) AS p,
-         |         CAST([] AS VARCHAR[]) AS ps
-         |  FROM d$maxWordLen WHERE len(word) <= $maxWordLen)""".stripMargin +
-      ",\n" + btSteps.mkString(",\n") + ",\n" + tail
-  }
-
-  /** text_rank_terms' oracle: the adjacent-token candidate graph
-    * (length ≥ 4, both directions, simple), then the same chained
-    * integer-PageRank CTEs as [[pageRankOracle]], top-k by rank. */
-  private def textRankOracle(iters: Int, k: Int): String = {
-    val head =
-      """WITH tt AS (
-        |  SELECT string_split(text, ' ') AS toks FROM documents
-        |  WHERE text IS NOT NULL AND len(string_split(text, ' ')) >= 2),
-        |pp AS (
-        |  SELECT toks[CAST(i AS INT)] AS a, toks[CAST(i + 1 AS INT)] AS b
-        |  FROM (SELECT toks,
-        |          unnest(generate_series(1, len(toks) - 1)) AS i FROM tt)
-        |  WHERE len(toks[CAST(i AS INT)]) >= 4
-        |    AND len(toks[CAST(i + 1 AS INT)]) >= 4
-        |    AND toks[CAST(i AS INT)] <> toks[CAST(i + 1 AS INT)]),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT a AS src, b AS dst FROM pp
-        |  UNION ALL SELECT b, a FROM pp)),
-        |verts AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
-        |deg AS (SELECT src, count(*) AS outdeg FROM e GROUP BY src),
-        |r0 AS (SELECT v, CAST(1000000 AS BIGINT) AS r FROM verts)""".stripMargin
-    val steps = (1 to iters).map { i =>
-      s"""r$i AS (
-         |  SELECT verts.v, 150000 + (85 * COALESCE(c.s, 0)) // 100 AS r
-         |  FROM verts LEFT JOIN (
-         |    SELECT e.dst AS v, SUM(r${i - 1}.r // deg.outdeg) AS s
-         |    FROM e JOIN r${i - 1} ON r${i - 1}.v = e.src
-         |    JOIN deg ON deg.src = e.src
-         |    GROUP BY e.dst) c ON c.v = verts.v)""".stripMargin
-    }
-    (head +: steps).mkString(",\n") +
-      s"\nSELECT v AS term, CAST(r AS BIGINT) AS rank_micros " +
-      s"FROM r$iters ORDER BY rank_micros DESC, term LIMIT $k"
-  }
-
-  /** The crawl fixture's edge + vertex CTEs, shared by the four
-    * link-graph oracles (PageRank, HITS, label propagation, BFS). */
-  private val linkGraphCtes: String =
-    """WITH src AS (
-      |  SELECT CAST(doc_id AS BIGINT) AS id
-      |  FROM documents WHERE text IS NOT NULL),
-      |dd AS (
-      |  SELECT DISTINCT id % 10 AS h, id % 4 AS q,
-      |         CASE WHEN (id % 10) % 3 = 0 THEN 'co.uk' ELSE 'com' END AS tld
-      |  FROM src),
-      |e AS (SELECT DISTINCT src, dst FROM (
-      |  SELECT 'site' || h || '.' || tld AS src,
-      |         'partner' || q || '.example' AS dst FROM dd
-      |  UNION ALL SELECT 'site' || h || '.' || tld,
-      |         'site' || h || '.com' FROM dd
-      |  UNION ALL SELECT 'site' || h || '.' || tld,
-      |         'site' || h || '.' || tld FROM dd))""".stripMargin
-
-  /** crawl_communities' oracle: one chained CTE per synchronous LPA
-    * round — neighbor label counts, the per-vertex max, least label
-    * among the tied winners. Pure count/min: no tolerance. */
-  private def lpaCtes(iters: Int): String = {
-    val head = linkGraphCtes +
-      """,
-        |u AS (SELECT DISTINCT a, b FROM (
-        |  SELECT src AS a, dst AS b FROM e
-        |  UNION ALL SELECT dst, src FROM e) WHERE a != b),
-        |verts AS (SELECT DISTINCT a AS v FROM u),
-        |l0 AS (SELECT v, v AS label FROM verts)""".stripMargin
-    val steps = (1 to iters).map { i =>
-      s"""cnt$i AS (
-         |  SELECT u.a AS v, l.label, count(*) AS cnt
-         |  FROM u JOIN l${i - 1} l ON l.v = u.b GROUP BY 1, 2),
-         |top$i AS (SELECT v, max(cnt) AS mc FROM cnt$i GROUP BY v),
-         |l$i AS (
-         |  SELECT verts.v, COALESCE(w.label, verts.v) AS label
-         |  FROM verts LEFT JOIN (
-         |    SELECT c.v, min(c.label) AS label
-         |    FROM cnt$i c JOIN top$i t ON t.v = c.v AND c.cnt = t.mc
-         |    GROUP BY c.v) w ON w.v = verts.v)""".stripMargin
-    }
-    (head +: steps).mkString(",\n")
-  }
-
-  private def lpaOracle(iters: Int): String =
-    lpaCtes(iters) +
-      s"\nSELECT v AS domain, label AS community FROM l$iters ORDER BY domain"
-
-  /** crawl_depth's oracle: one chained CTE per BFS wave — frontier
-    * joins the edge list, already-reached vertices excluded, depths
-    * accumulate. Integral throughout. */
-  private def bfsOracle(maxDepth: Int): String = {
-    val head = linkGraphCtes +
-      """,
-        |seeds AS (SELECT 'site0.co.uk' AS v UNION ALL SELECT 'site3.co.uk'),
-        |f0 AS (SELECT DISTINCT v, CAST(0 AS BIGINT) AS d FROM seeds),
-        |d0 AS (SELECT * FROM f0)""".stripMargin
-    val steps = (1 to maxDepth).map { i =>
-      s"""f$i AS (
-         |  SELECT DISTINCT e.dst AS v, CAST($i AS BIGINT) AS d
-         |  FROM e JOIN f${i - 1} ON e.src = f${i - 1}.v
-         |  WHERE e.dst NOT IN (SELECT v FROM d${i - 1})),
-         |d$i AS (SELECT * FROM d${i - 1} UNION ALL SELECT * FROM f$i)""".stripMargin
-    }
-    (head +: steps).mkString(",\n") +
-      s"\nSELECT v AS domain, d AS depth FROM d$maxDepth ORDER BY domain"
-  }
-
-  /** crawl_hits' oracle: the pageRankOracle edge CTEs, then `iters`
-    * chained unnormalized integer HITS rounds. */
-  private def hitsOracle(iters: Int): String = {
-    val head =
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |dd AS (
-        |  SELECT DISTINCT id % 10 AS h, id % 4 AS q,
-        |         CASE WHEN (id % 10) % 3 = 0 THEN 'co.uk' ELSE 'com' END AS tld
-        |  FROM src),
-        |e AS (SELECT DISTINCT src, dst FROM (
-        |  SELECT 'site' || h || '.' || tld AS src,
-        |         'partner' || q || '.example' AS dst FROM dd
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.com' FROM dd
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.' || tld FROM dd)),
-        |verts AS (SELECT src AS v FROM e UNION SELECT dst FROM e),
-        |h0 AS (SELECT v, CAST(1 AS BIGINT) AS h FROM verts)""".stripMargin
-    val steps = (1 to iters).map { i =>
-      s"""a$i AS (
-         |  SELECT verts.v, CAST(COALESCE(c.s, 0) AS BIGINT) AS a
-         |  FROM verts LEFT JOIN (
-         |    SELECT e.dst AS v, SUM(h${i - 1}.h) AS s
-         |    FROM e JOIN h${i - 1} ON h${i - 1}.v = e.src
-         |    GROUP BY e.dst) c ON c.v = verts.v),
-         |h$i AS (
-         |  SELECT verts.v, CAST(COALESCE(c.s, 0) AS BIGINT) AS h
-         |  FROM verts LEFT JOIN (
-         |    SELECT e.src AS v, SUM(a$i.a) AS s
-         |    FROM e JOIN a$i ON a$i.v = e.dst
-         |    GROUP BY e.src) c ON c.v = verts.v)""".stripMargin
-    }
-    (head +: steps).mkString(",\n") +
-      s"\nSELECT h$iters.v AS domain, h$iters.h AS hub, a$iters.a AS auth " +
-      s"FROM h$iters JOIN a$iters ON a$iters.v = h$iters.v ORDER BY domain"
-  }
-
-  /** Pinned decoder-independent truth for the block-uniform JPEG
-    * fixtures — shared by `multimodal_jpeg_decode` (baseline encodes)
-    * and `multimodal_progressive_decode` (progressive encodes of the
-    * same rasters at the same quality: identical quantized
-    * coefficients, so identical histograms). */
-  private lazy val jpegFixtureOracle: String = {
-    val rows = for {
-      (fid, w, h, n, fullBins) <- graft.multimodal.JpegFixtures.expected
-      b <- 0 until 16
-    } yield s"($fid, $w, $h, $n, $b, ${if (fullBins(b)) 64 else 0})"
-    s"""SELECT CAST(fix_id AS BIGINT) AS fix_id, CAST(w AS INT) AS width,
-       |       CAST(h AS INT) AS height, CAST(n AS BIGINT) AS n_pixels,
-       |       CAST(bin AS BIGINT) AS bin, CAST(c AS BIGINT) AS n_in_bin
-       |FROM (VALUES ${rows.mkString(", ")}) t(fix_id, w, h, n, bin, c)
-       |ORDER BY fix_id, bin""".stripMargin
-  }
-
-  /** Exact all-pairs Hamming-≤3 join over SQL-recomputed simhashes —
-    * shared by `dedup_simhash_near` (4-block scheme) and
-    * `dedup_simhash_near_wide` (multi-block scheme): both candidate
-    * generators have recall 1 by pigeonhole, so no approximation
-    * enters the oracle. */
-  private lazy val simhashNearHammingOracle: String =
-    s"""WITH toks AS (
-       |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t != '')) AS tok
-       |  FROM documents),
-       |th AS (
-       |  SELECT doc_id,
-       |    ${fnvSql("list_transform(generate_series(1, length(tok)), i -> CAST(ascii(substr(tok, i, 1)) AS HUGEINT))")} AS h
-       |  FROM toks),
-       |votes AS (
-       |  SELECT doc_id, bit,
-       |         sum(CASE WHEN (CAST(h AS UBIGINT) >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-       |  FROM th, unnest(generate_series(0, 63)) AS t(bit)
-       |  GROUP BY doc_id, bit),
-       |sh AS (
-       |  SELECT doc_id,
-       |         sum(CASE WHEN v > 0 THEN CAST(CAST(1 AS UBIGINT) << bit AS HUGEINT) ELSE 0 END) AS shu
-       |  FROM votes GROUP BY doc_id),
-       |allsh AS (
-       |  SELECT d.doc_id, CAST(COALESCE(s.shu, 0) AS UBIGINT) AS shu
-       |  FROM documents d LEFT JOIN sh s USING (doc_id))
-       |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-       |       CAST(bit_count(xor(a.shu, b.shu)) AS BIGINT) AS hamming
-       |FROM allsh a JOIN allsh b ON a.doc_id < b.doc_id
-       |WHERE bit_count(xor(a.shu, b.shu)) <= 3
-       |ORDER BY a_id, b_id""".stripMargin
-
-  /** Shared CTE chain of the quality-classifier oracles: re-runs the
-    * ENTIRE training pipeline in SQL — micro-quantized features, exact
-    * integer moments, standardization, class weights and all
-    * QualityClassifier.Iters gradient-descent steps (the iteration
-    * blocks are GENERATED below, one (p, g, w) CTE triple per step).
-    * Exactness contract (mirrors QualityClassifier): per-doc features
-    * and gradient terms are quantized with floor(v*1e6 + 0.5) BEFORE
-    * any sum, sums are BIGINT/DECIMAL(38) (exact under partitioning),
-    * mean/sd/weights derive by correctly-rounded single ops, and every
-    * float expression is written in the same association order as the
-    * Scala side — so the learned weights match bit-for-bit. */
-  /** Generated CTE chain re-running the full BPE training loop
-    * (operators/Bpe.scala) in SQL: w0 = per-codepoint split of the
-    * capped top-word relation, then one (p, b, w) CTE triple per merge
-    * round — pair counts over adjacent positions (overlaps included),
-    * argmax with (count DESC, lhs, rhs) tie-break, and a greedy
-    * left-to-right merge as a `list_reduce` fold. The fold is exactly
-    * `TextHashKernels.mergeOnce`: a merged symbol lhs||rhs is strictly
-    * longer than lhs, so `acc` can only end in a bare lhs when that
-    * symbol is un-merged this round — the non-overlap guarantee. The
-    * `(?s)` dotall flag keeps the per-codepoint split total for words
-    * carrying newlines (RE2's `.` excludes \n by default). */
-  private val BpeCtes: String = {
-    val rounds = (1 to Bpe.MergeRounds).map { k =>
-      val prev = s"w${k - 1}"
-      s"""p$k AS MATERIALIZED (
-         |  SELECT s[i] AS l, s[i + 1] AS r, sum(cnt) AS c
-         |  FROM (
-         |    SELECT s, cnt, unnest(generate_series(1, len(s) - 1)) AS i
-         |    FROM (SELECT string_split(seq, ' ') AS s, cnt FROM $prev))
-         |  GROUP BY 1, 2),
-         |b$k AS MATERIALIZED (SELECT l, r, c FROM p$k ORDER BY c DESC, l, r LIMIT 1),
-         |w$k AS MATERIALIZED (
-         |  SELECT w.word, w.cnt,
-         |         list_reduce(string_split(w.seq, ' '), (acc, x) ->
-         |           CASE WHEN x = b.r AND (acc = b.l OR ends_with(acc, ' ' || b.l))
-         |                THEN acc || b.r ELSE acc || ' ' || x END) AS seq
-         |  FROM $prev w CROSS JOIN b$k b)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH RECURSIVE
-       |bpe_tk AS MATERIALIZED (
-       |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t != '')) AS word
-       |  FROM documents),
-       |bpe_wc AS MATERIALIZED (SELECT word, count(*) AS cnt FROM bpe_tk GROUP BY word),
-       |w0 AS MATERIALIZED (
-       |  SELECT word, cnt, rtrim(regexp_replace(word, '(?s)(.)', '\\1 ', 'g'), ' ') AS seq
-       |  FROM (SELECT word, cnt FROM bpe_wc ORDER BY cnt DESC, word LIMIT ${Bpe.TopWords})),
-       |$rounds""".stripMargin
-  }
-
-  /** The trained merge table (rank, lhs, rhs, merged, freq) as a UNION
-    * over the per-round argmax CTEs. */
-  private val BpeMergesSelect: String =
-    (1 to Bpe.MergeRounds).map { k =>
-      s"SELECT $k AS rank, l AS lhs, r AS rhs, l || r AS merged, CAST(c AS BIGINT) AS freq FROM b$k"
-    }.mkString("\n UNION ALL ")
-
-  /**
-   * Generated CTE chain re-running WordPiece.train in SQL — the
-   * [[BpeCtes]] structure with the two WordPiece differences: the
-   * argmax is the likelihood score c/(c_lhs·c_rhs) (per-round symbol
-   * counts vs$$k join in, the ORDER BY casts to DOUBLE in the same
-   * order the Scala trainer multiplies), and the fold concatenates
-   * `l || substr(r, 3)` — the right side always sheds its `##`
-   * continuation prefix. v0 seeds code points with `##` on every
-   * non-initial symbol.
-   */
-  private val WpCtes: String = {
-    val rounds = (1 to WordPiece.MergeRounds).map { k =>
-      val prev = s"v${k - 1}"
-      s"""vp$k AS MATERIALIZED (
-         |  SELECT s[i] AS l, s[i + 1] AS r, sum(cnt) AS c
-         |  FROM (
-         |    SELECT s, cnt, unnest(generate_series(1, len(s) - 1)) AS i
-         |    FROM (SELECT string_split(seq, ' ') AS s, cnt FROM $prev))
-         |  GROUP BY 1, 2),
-         |vs$k AS MATERIALIZED (
-         |  SELECT x AS sym, sum(cnt) AS c FROM (
-         |    SELECT unnest(string_split(seq, ' ')) AS x, cnt FROM $prev)
-         |  GROUP BY 1),
-         |vb$k AS MATERIALIZED (
-         |  SELECT p.l, p.r, p.c, sl.c AS cl, sr.c AS cr
-         |  FROM vp$k p JOIN vs$k sl ON sl.sym = p.l JOIN vs$k sr ON sr.sym = p.r
-         |  ORDER BY CAST(p.c AS DOUBLE) / (CAST(sl.c AS DOUBLE) * CAST(sr.c AS DOUBLE)) DESC, p.l, p.r
-         |  LIMIT 1),
-         |v$k AS MATERIALIZED (
-         |  SELECT w.word, w.cnt,
-         |         list_reduce(string_split(w.seq, ' '), (acc, x) ->
-         |           CASE WHEN x = b.r AND (acc = b.l OR ends_with(acc, ' ' || b.l))
-         |                THEN acc || substr(b.r, 3) ELSE acc || ' ' || x END) AS seq
-         |  FROM $prev w CROSS JOIN vb$k b)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH RECURSIVE
-       |wp_tk AS MATERIALIZED (
-       |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t != '')) AS word
-       |  FROM documents),
-       |wp_wc AS MATERIALIZED (SELECT word, count(*) AS cnt FROM wp_tk GROUP BY word),
-       |v0 AS MATERIALIZED (
-       |  SELECT word, cnt,
-       |    array_to_string(list_transform(
-       |      string_split(rtrim(regexp_replace(word, '(?s)(.)', '\\1 ', 'g'), ' '), ' '),
-       |      (x, i) -> CASE WHEN i = 1 THEN x ELSE '##' || x END), ' ') AS seq
-       |  FROM (SELECT word, cnt FROM wp_wc ORDER BY cnt DESC, word LIMIT ${Bpe.TopWords})),
-       |$rounds""".stripMargin
-  }
-
-  /**
-   * Generated CTE chain re-running EntityResolution.fsFit in SQL: the
-   * blocked-candidate pattern counts (fs0, ≤8 rows), then one
-   * (e$$k, par$$k) pair per EM iteration — the E-step posterior
-   * micro-quantized with the same fixed-order double product, the
-   * M-step as exact HUGEINT sums and clamped integral divisions — so
-   * par$$k's m/u/p are bit-identical to the Scala fit's after every
-   * iteration.
-   */
-  private val FsCtes: String = {
-    def caseProd(v: Char): String =
-      (1 to 3).map(k =>
-        s"(CASE WHEN g$k = 1 THEN $v$k / 1e6 ELSE 1 - $v$k / 1e6 END)")
-        .mkString(" * ")
-    val num = s"(p / 1e6) * ${caseProd('m')}"
-    val den = s"((1000000 - p) / 1e6) * ${caseProd('u')}"
-    val wq = s"CAST(floor(($num) / (($num) + ($den)) * 1000000 + 0.5) AS BIGINT)"
-    val iters = (1 to EntityResolution.FsIters).map { i =>
-      s"""e$i AS (
-         |  SELECT f.g1, f.g2, f.g3, f.n, $wq AS wq
-         |  FROM fs0 f CROSS JOIN par${i - 1}),
-         |par$i AS (
-         |  SELECT
-         |    greatest(1, least(999999, (1000000 * sum(wq * n * g1)) // sum(wq * n))) AS m1,
-         |    greatest(1, least(999999, (1000000 * sum(wq * n * g2)) // sum(wq * n))) AS m2,
-         |    greatest(1, least(999999, (1000000 * sum(wq * n * g3)) // sum(wq * n))) AS m3,
-         |    greatest(1, least(999999, (1000000 * sum((1000000 - wq) * n * g1)) // sum((1000000 - wq) * n))) AS u1,
-         |    greatest(1, least(999999, (1000000 * sum((1000000 - wq) * n * g2)) // sum((1000000 - wq) * n))) AS u2,
-         |    greatest(1, least(999999, (1000000 * sum((1000000 - wq) * n * g3)) // sum((1000000 - wq) * n))) AS u3,
-         |    greatest(1, least(999999, sum(wq * n) // sum(n))) AS p
-         |  FROM e$i)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH base AS (
-       |  SELECT CAST(doc_id AS BIGINT) AS id, substr(text, 1, 24) AS name
-       |  FROM documents WHERE length(text) >= 24),
-       |pos AS (SELECT id, name, CAST(id % 16 + 4 AS INT) AS p FROM base),
-       |records AS (
-       |  SELECT id, name FROM base
-       |  UNION ALL
-       |  SELECT id + 1000000, substr(name, 1, p) || substr(name, p + 2, 24)
-       |  FROM pos),
-       |keys AS (
-       |  SELECT 'p:' || substr(name, 1, 8) AS blk, id, name FROM records
-       |  UNION ALL
-       |  SELECT 's:' || substr(name, -8, 8) AS blk, id, name FROM records),
-       |keep AS (SELECT blk FROM keys GROUP BY blk HAVING count(*) <= 1024),
-       |k2 AS (SELECT k.* FROM keys k JOIN keep USING (blk)),
-       |cand AS (
-       |  SELECT DISTINCT a.id AS a_id, b.id AS b_id,
-       |         a.name AS a_name, b.name AS b_name
-       |  FROM k2 a JOIN k2 b ON a.blk = b.blk AND a.id < b.id),
-       |cmp AS (
-       |  SELECT CASE WHEN substr(a_name, 1, 8) = substr(b_name, 1, 8)
-       |              THEN 1 ELSE 0 END AS g1,
-       |         CASE WHEN substr(a_name, -8, 8) = substr(b_name, -8, 8)
-       |              THEN 1 ELSE 0 END AS g2,
-       |         CASE WHEN length(a_name) = length(b_name)
-       |              THEN 1 ELSE 0 END AS g3
-       |  FROM cand),
-       |fs0 AS (SELECT g1, g2, g3, CAST(count(*) AS BIGINT) AS n
-       |        FROM cmp GROUP BY 1, 2, 3),
-       |par0 AS (SELECT CAST(900000 AS BIGINT) AS m1, CAST(900000 AS BIGINT) AS m2,
-       |                CAST(900000 AS BIGINT) AS m3, CAST(100000 AS BIGINT) AS u1,
-       |                CAST(100000 AS BIGINT) AS u2, CAST(100000 AS BIGINT) AS u3,
-       |                CAST(500000 AS BIGINT) AS p),
-       |$iters,
-       |ef AS (
-       |  SELECT f.g1, f.g2, f.g3, f.n, $wq AS wq
-       |  FROM fs0 f CROSS JOIN par${EntityResolution.FsIters})""".stripMargin
-  }
-
-  private val WpMergesSelect: String =
-    (1 to WordPiece.MergeRounds).map { k =>
-      s"SELECT $k AS rank, l AS lhs, r AS rhs, l || substr(r, 3) AS merged, " +
-        s"CAST(c AS BIGINT) AS c_pair, CAST(cl AS BIGINT) AS c_lhs, " +
-        s"CAST(cr AS BIGINT) AS c_rhs FROM vb$k"
-    }.mkString("\n UNION ALL ")
-
-  /** Generated CTE chain re-running Evaluation.bradleyTerry's three
-    * MM rounds in SQL: the ordered-pair count relation, symmetrized
-    * games, then one (d, r, p) CTE triple per round — the same
-    * greatest(p_i+p_j, 1) guard, exact HUGEINT products mirroring the
-    * Spark side's DECIMAL(38,0) `div`, and per-round floor
-    * renormalization to mean 1e6. Item ranking by strength desc then
-    * item. */
-  private val BradleyTerryOracle: String = {
-    val sb = new StringBuilder
-    sb ++=
-      """WITH raw AS (
-        |  SELECT doc_id % 8 AS a, (doc_id // 8) % 8 AS b, doc_id, n_chars
-        |  FROM documents),
-        |games AS (
-        |  SELECT CASE WHEN (doc_id + n_chars) % (a + b + 2) <= a
-        |              THEN a ELSE b END AS w,
-        |         CASE WHEN (doc_id + n_chars) % (a + b + 2) <= a
-        |              THEN b ELSE a END AS l
-        |  FROM raw WHERE a <> b),
-        |dir AS (SELECT w AS i, l AS j, COUNT(*) AS wc FROM games GROUP BY 1, 2),
-        |nsym AS (SELECT i, j, CAST(SUM(wc) AS BIGINT) AS n_ij FROM
-        |           (SELECT i, j, wc FROM dir
-        |            UNION ALL SELECT j AS i, i AS j, wc FROM dir)
-        |         GROUP BY 1, 2),
-        |wins AS (SELECT n.i, CAST(COALESCE(MAX(d.wtot), 0) AS BIGINT) AS wins,
-        |           CAST(SUM(n.n_ij) AS BIGINT) AS games
-        |         FROM nsym n LEFT JOIN
-        |           (SELECT i, SUM(wc) AS wtot FROM dir GROUP BY 1) d USING (i)
-        |         GROUP BY 1),
-        |k AS (SELECT CAST(COUNT(*) AS BIGINT) AS kk FROM wins),
-        |p0 AS (SELECT i, CAST(1000000 AS BIGINT) AS p FROM wins),
-        |""".stripMargin
-    for (t <- 1 to 3) {
-      sb ++=
-        s"""d$t AS (SELECT n.i,
-           |  CAST(SUM(CAST(n.n_ij AS HUGEINT) * 1000000000000 //
-           |    GREATEST(pi.p + pj.p, 1)) AS BIGINT) AS denom
-           |  FROM nsym n
-           |  JOIN p${t - 1} pi ON n.i = pi.i
-           |  JOIN p${t - 1} pj ON n.j = pj.i GROUP BY 1),
-           |r$t AS (SELECT w.i,
-           |  CASE WHEN d.denom > 0 THEN
-           |    CAST(CAST(w.wins AS HUGEINT) * 1000000000000 // d.denom AS BIGINT)
-           |  ELSE 0 END AS praw
-           |  FROM wins w JOIN d$t d USING (i)),
-           |p$t AS (SELECT r.i,
-           |  CASE WHEN t.tot > 0 THEN
-           |    CAST(CAST(r.praw AS HUGEINT) * k.kk * 1000000 // t.tot AS BIGINT)
-           |  ELSE 0 END AS p
-           |  FROM r$t r, (SELECT SUM(praw) AS tot FROM r$t) t, k),
-           |""".stripMargin
-    }
-    sb ++=
-      """fin AS (SELECT w.i AS item, w.wins, w.games, p.p AS strength_micro
-        |        FROM wins w JOIN p3 p USING (i))
-        |SELECT item, wins, games, strength_micro,
-        |       CAST(ROW_NUMBER() OVER
-        |         (ORDER BY strength_micro DESC, item) AS BIGINT) AS rnk
-        |FROM fin ORDER BY item""".stripMargin
-    sb.result()
-  }
-
-  /** Generated CTE chain re-running KMeansExact's full training loop
-    * in SQL: µ-quantized (id, pos, v) triples, first-K-by-id init,
-    * then one (a, s, c) CTE triple per Lloyd's round — integer-L2²
-    * argmin with (dist2, cid) tie-break, BIGINT coordinate sums, and
-    * the correctly-rounded mean re-quantization
-    * `floor(sv·1.0/n + 0.5)`; an empty cluster's LEFT-JOIN miss keeps
-    * the previous centroid. `afin` is the final assignment under the
-    * trained model. Bit-for-bit vs operators/KMeansExact.scala. */
-  private val KMeansCtes: String = {
-    val rounds = (0 until KMeansExact.Iters).map { i =>
-      s"""a$i AS MATERIALIZED (
-         |  SELECT id, cluster FROM (
-         |    SELECT qd.id, c.cluster, sum((qd.v - c.v) * (qd.v - c.v)) AS d2
-         |    FROM qd JOIN c$i c ON qd.pos = c.pos
-         |    GROUP BY qd.id, c.cluster)
-         |  QUALIFY row_number() OVER (PARTITION BY id ORDER BY d2, cluster) = 1),
-         |s$i AS MATERIALIZED (
-         |  SELECT a.cluster, qd.pos, sum(qd.v) AS sv, count(*) AS n
-         |  FROM a$i a JOIN qd USING (id) GROUP BY a.cluster, qd.pos),
-         |c${i + 1} AS MATERIALIZED (
-         |  SELECT c.cluster, c.pos,
-         |         CASE WHEN s.sv IS NULL THEN c.v
-         |              ELSE CAST(floor(s.sv * 1.0 / s.n + 0.5) AS BIGINT) END AS v
-         |  FROM c$i c LEFT JOIN s$i s ON c.cluster = s.cluster AND c.pos = s.pos)""".stripMargin
-    }.mkString(",\n")
-    s"""WITH qd AS MATERIALIZED (
-       |  SELECT vec_id AS id, i - 1 AS pos,
-       |         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS v
-       |  FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)),
-       |ini AS (
-       |  SELECT id, CAST(row_number() OVER (ORDER BY id) - 1 AS BIGINT) AS cluster
-       |  FROM (SELECT DISTINCT id FROM qd) ORDER BY id LIMIT ${KMeansExact.K}),
-       |c0 AS MATERIALIZED (SELECT ini.cluster, qd.pos, qd.v FROM ini JOIN qd USING (id)),
-       |$rounds,
-       |afin AS MATERIALIZED (
-       |  SELECT id, cluster, d2 FROM (
-       |    SELECT qd.id, c.cluster, sum((qd.v - c.v) * (qd.v - c.v)) AS d2
-       |    FROM qd JOIN c${KMeansExact.Iters} c ON qd.pos = c.pos
-       |    GROUP BY qd.id, c.cluster)
-       |  QUALIFY row_number() OVER (PARTITION BY id ORDER BY d2, cluster) = 1)""".stripMargin
-  }
-
-  /** Sinkhorn OT oracle: the same smoothed µ-marginals, rational
-    * kernel and [[OptimalTransport.Iters]] scaling rounds unrolled as
-    * HUGEINT CTEs over the KMeansCtes centroid grid — every division
-    * a positive truncation, so the fixed sequence matches the BigInt
-    * driver iteration bit-for-bit. */
-  private val OtDriftOracle: String = {
-    val K = KMeansExact.K
-    val rounds = (1 to OptimalTransport.Iters).map { t =>
-      s"""u$t AS MATERIALIZED (
-         |  SELECT rr.i, (rr.rv * CAST(1000000000000 AS HUGEINT)) //
-         |         greatest(1, su.s // 1000000) AS u
-         |  FROM rmarg rr JOIN (
-         |    SELECT k.i, sum(k.kv * v.v) AS s
-         |    FROM ker k JOIN v${t - 1} v ON k.j = v.j GROUP BY k.i) su
-         |    ON su.i = rr.i),
-         |v$t AS MATERIALIZED (
-         |  SELECT cc.j, (cc.cv * CAST(1000000000000 AS HUGEINT)) //
-         |         greatest(1, sv.s // 1000000) AS v
-         |  FROM cmarg cc JOIN (
-         |    SELECT k.j, sum(k.kv * u.u) AS s
-         |    FROM ker k JOIN u$t u ON k.i = u.i GROUP BY k.j) sv
-         |    ON sv.j = cc.j)""".stripMargin
-    }.mkString(",\n")
-    s"""$KMeansCtes,
-       |lab AS MATERIALIZED (
-       |  SELECT a.cluster, (d.doc_id % 2 = 0) AS ga
-       |  FROM afin a JOIN documents d ON a.id = d.doc_id),
-       |clg AS (SELECT CAST(unnest(generate_series(0, ${K - 1})) AS BIGINT) AS cluster),
-       |mar AS MATERIALIZED (
-       |  SELECT cluster, sum(CASE WHEN ga THEN 1 ELSE 0 END) AS ca,
-       |         sum(CASE WHEN ga THEN 0 ELSE 1 END) AS cb
-       |  FROM lab GROUP BY 1),
-       |sm AS MATERIALIZED (
-       |  SELECT clg.cluster, CAST(coalesce(m.ca, 0) + 1 AS HUGEINT) AS av,
-       |         CAST(coalesce(m.cb, 0) + 1 AS HUGEINT) AS bv
-       |  FROM clg LEFT JOIN mar m USING (cluster)),
-       |tots AS (SELECT sum(av) AS sa, sum(bv) AS sb,
-       |                CAST(sum(av) - $K AS BIGINT) AS n_a,
-       |                CAST(sum(bv) - $K AS BIGINT) AS n_b FROM sm),
-       |rmarg AS MATERIALIZED (SELECT cluster AS i, (1000000 * av) // sa AS rv FROM sm, tots),
-       |cmarg AS MATERIALIZED (SELECT cluster AS j, (1000000 * bv) // sb AS cv FROM sm, tots),
-       |costg AS MATERIALIZED (
-       |  SELECT ci.cluster AS i, cj.cluster AS j,
-       |         CAST(sum((ci.v - cj.v) * (ci.v - cj.v)) AS HUGEINT) AS cost
-       |  FROM c${KMeansExact.Iters} ci JOIN c${KMeansExact.Iters} cj
-       |    ON ci.pos = cj.pos
-       |  GROUP BY 1, 2),
-       |cmx AS (SELECT max(cost) AS m FROM costg),
-       |cng AS MATERIALIZED (SELECT i, j,
-       |          CASE WHEN m > 0 THEN (CAST(1000000 AS HUGEINT) * cost) // m
-       |               ELSE CAST(0 AS HUGEINT) END AS cn
-       |        FROM costg, cmx),
-       |ker AS MATERIALIZED (SELECT i, j, cn,
-       |          CAST(1000000000000 AS HUGEINT) // (1000000 + 10 * cn) AS kv
-       |        FROM cng),
-       |v0 AS MATERIALIZED (SELECT cluster AS j, CAST(1000000 AS HUGEINT) AS v FROM clg),
-       |$rounds,
-       |pg AS MATERIALIZED (
-       |  SELECT k.i, k.j, u.u * k.kv * v.v AS p, k.cn
-       |  FROM ker k JOIN u${OptimalTransport.Iters} u ON k.i = u.i
-       |             JOIN v${OptimalTransport.Iters} v ON k.j = v.j),
-       |tpt AS (SELECT greatest(1, sum(p)) AS tp FROM pg),
-       |png AS MATERIALIZED (SELECT i, j, (CAST(1000000 AS HUGEINT) * p) // tp AS pn, cn
-       |        FROM pg, tpt),
-       |objv AS (SELECT CAST(sum(pn * cn) // 1000000 AS BIGINT) AS cost_micro
-       |         FROM png),
-       |rme AS (SELECT i, sum(pn) AS s FROM png GROUP BY 1),
-       |cme AS (SELECT j, sum(pn) AS s FROM png GROUP BY 1),
-       |errv AS (
-       |  SELECT CAST(greatest(
-       |    (SELECT max(abs(r.s - rr.rv)) FROM rme r JOIN rmarg rr ON r.i = rr.i),
-       |    (SELECT max(abs(c.s - cc.cv)) FROM cme c JOIN cmarg cc ON c.j = cc.j))
-       |    AS BIGINT) AS marg_err_micro)
-       |SELECT t.n_a, t.n_b, o.cost_micro, e.marg_err_micro
-       |FROM tots t, objv o, errv e""".stripMargin
-  }
-
-  /** DBSCAN oracle scaffolding: quadratic pair relation over the 2-D
-    * µ-quantized projection, cores, recursive min-label components
-    * (`cl`) and border labels (`bl`). */
-  /** Dense zero-filled (event_type, day) count grid over the global
-    * day span — the shared base of the event-series cards (CUSUM, MAD
-    * anomalies); day = days since 1970-01-01 under the UTC session
-    * zone on both engines. */
-  private val EventDayGridCtes: String =
-    """WITH base AS (
-      |  SELECT event_type,
-      |         CAST(date_diff('day', DATE '1970-01-01',
-      |              CAST(CAST(ts AS TIMESTAMP) AS DATE)) AS BIGINT) AS day
-      |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-      |counts AS (
-      |  SELECT event_type, day, CAST(count(*) AS BIGINT) AS cnt
-      |  FROM base GROUP BY 1, 2),
-      |span AS (SELECT min(day) AS lo, max(day) AS hi FROM base),
-      |days AS (
-      |  SELECT CAST(unnest(generate_series(lo, hi)) AS BIGINT) AS day FROM span),
-      |types AS (SELECT DISTINCT event_type FROM base),
-      |grid AS (
-      |  SELECT t.event_type, d.day, coalesce(c.cnt, 0) AS cnt
-      |  FROM types t CROSS JOIN days d
-      |  LEFT JOIN counts c ON c.event_type = t.event_type AND c.day = d.day)"""
-      .stripMargin
-
-  private val DbscanCtes: String =
-    s"""WITH RECURSIVE
-       |p AS MATERIALIZED (
-       |  SELECT vec_id AS id,
-       |         CAST(floor(CAST(embedding[1] AS DOUBLE) * 1000000.0 + 0.5)
-       |           AS BIGINT) AS x,
-       |         CAST(floor(CAST(embedding[2] AS DOUBLE) * 1000000.0 + 0.5)
-       |           AS BIGINT) AS y
-       |  FROM embeddings),
-       |pr AS MATERIALIZED (
-       |  SELECT a.id AS ida, b.id AS idb
-       |  FROM p a JOIN p b
-       |    ON (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y)
-       |       <= ${DbscanEps * DbscanEps}),
-       |core AS MATERIALIZED (
-       |  SELECT ida AS id FROM pr GROUP BY ida HAVING count(*) >= $DbscanMinPts),
-       |ce AS MATERIALIZED (
-       |  SELECT ida, idb FROM pr
-       |  WHERE ida IN (SELECT id FROM core) AND idb IN (SELECT id FROM core)),
-       |lbl(id, l) AS (
-       |  SELECT id, id FROM core
-       |  UNION
-       |  SELECT ce.idb, lbl.l FROM lbl JOIN ce ON ce.ida = lbl.id),
-       |cl AS MATERIALIZED (SELECT id, min(l) AS cluster FROM lbl GROUP BY id),
-       |bl AS MATERIALIZED (
-       |  SELECT pr.ida AS id, min(cl.cluster) AS cluster
-       |  FROM pr JOIN cl ON pr.idb = cl.id
-       |  WHERE pr.ida NOT IN (SELECT id FROM core)
-       |  GROUP BY pr.ida)""".stripMargin
-
-  /** JSONL oracle scaffolding: the fixture lines rebuilt by string
-    * concat, validity via DuckDB's strict parser, per-key types via
-    * json_keys + json_type, the census relation. */
-  private val JsonlCtes: String =
-    """WITH lines AS MATERIALIZED (
-      |  SELECT CASE
-      |    WHEN doc_id % 31 = 0 THEN '{"id": ' || doc_id || ', "lang": "' || lang
-      |    ELSE '{"id": ' || doc_id || ', "lang": "' || lang || '"' ||
-      |      CASE WHEN doc_id % 11 = 0 THEN ', "n": "' || n_chars || '"'
-      |           ELSE ', "n": ' || n_chars END ||
-      |      CASE WHEN doc_id % 7 = 0
-      |           THEN ', "tags": ["a", "b"], "meta": {"src": "' || source || '"}'
-      |           ELSE '' END ||
-      |      ', "ok": ' || CASE WHEN doc_id % 2 = 0 THEN 'true' ELSE 'false' END ||
-      |      CASE WHEN doc_id % 13 = 0 THEN ', "note": null' ELSE '' END || '}'
-      |  END AS line FROM documents),
-      |flag AS MATERIALIZED (
-      |  SELECT line,
-      |         CASE WHEN json_valid(line)
-      |              THEN json_type(line) = 'OBJECT' ELSE FALSE END AS ok
-      |  FROM lines),
-      |v AS MATERIALIZED (SELECT line FROM flag WHERE ok),
-      |kv AS (
-      |  SELECT k AS key,
-      |         coalesce(CASE json_type(line, '$."' || k || '"')
-      |           WHEN 'VARCHAR' THEN 'string'
-      |           WHEN 'BIGINT' THEN 'number'
-      |           WHEN 'UBIGINT' THEN 'number'
-      |           WHEN 'DOUBLE' THEN 'number'
-      |           WHEN 'BOOLEAN' THEN 'boolean'
-      |           WHEN 'OBJECT' THEN 'object'
-      |           WHEN 'ARRAY' THEN 'array'
-      |         END, 'null') AS vtype
-      |  FROM v, unnest(json_keys(line)) t(k)),
-      |census AS (
-      |  SELECT key, vtype, CAST(count(*) AS BIGINT) AS n FROM kv GROUP BY 1, 2
-      |  UNION ALL
-      |  SELECT '__malformed__', 'invalid', CAST(count(*) AS BIGINT)
-      |  FROM flag WHERE NOT ok HAVING count(*) > 0)""".stripMargin
-
-  /** Naive-Bayes oracle scaffolding: train-split token stream, top-N
-    * vocab (count desc, token tie-break), smoothed model + priors on
-    * the 6-dp micro grid, and held-out MAP predictions. */
-  private val NbCtes: String =
-    s"""WITH tr AS MATERIALIZED (
-       |  SELECT lang, text FROM documents
-       |  WHERE doc_id % 5 <> 0 AND text IS NOT NULL AND lang IS NOT NULL),
-       |tk0 AS (SELECT lang, unnest(string_split(text, ' ')) AS token FROM tr),
-       |tk AS MATERIALIZED (SELECT lang, token FROM tk0 WHERE len(token) >= 1),
-       |voc AS MATERIALIZED (
-       |  SELECT token FROM (
-       |    SELECT token, count(*) AS c FROM tk GROUP BY 1
-       |    ORDER BY c DESC, token LIMIT $NbVocab)),
-       |vn AS (SELECT count(*) AS v FROM voc),
-       |ct AS MATERIALIZED (
-       |  SELECT lang, token, count(*) AS cnt
-       |  FROM tk JOIN voc USING (token) GROUP BY 1, 2),
-       |grid AS MATERIALIZED (
-       |  SELECT c.lang, v.token, coalesce(ct.cnt, 0) AS cnt
-       |  FROM (SELECT DISTINCT lang FROM tk) c
-       |  CROSS JOIN voc v
-       |  LEFT JOIN ct ON ct.lang = c.lang AND ct.token = v.token),
-       |tt AS (SELECT lang, sum(cnt) AS tot FROM grid GROUP BY 1),
-       |model AS MATERIALIZED (
-       |  SELECT g.lang, g.token, CAST(g.cnt AS BIGINT) AS cnt,
-       |         CAST((CAST(round(log10(g.cnt + 1), 6) AS DECIMAL(28,6)) -
-       |               CAST(round(log10(t.tot + vn.v), 6) AS DECIMAL(28,6)))
-       |              * 1000000 AS BIGINT) AS loglik_micro
-       |  FROM grid g JOIN tt t USING (lang), vn),
-       |pri AS MATERIALIZED (
-       |  SELECT lang,
-       |         CAST((CAST(round(log10(count(*)), 6) AS DECIMAL(28,6)) -
-       |               CAST(round(log10((SELECT count(*) FROM tr)), 6)
-       |                 AS DECIMAL(28,6)))
-       |              * 1000000 AS BIGINT) AS prior_micro
-       |  FROM tr GROUP BY 1),
-       |te AS MATERIALIZED (
-       |  SELECT doc_id, lang, text FROM documents
-       |  WHERE doc_id % 5 = 0 AND text IS NOT NULL AND lang IS NOT NULL),
-       |tetk0 AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM te),
-       |tetk AS (SELECT doc_id, token FROM tetk0 WHERE len(token) >= 1),
-       |ll AS MATERIALIZED (
-       |  SELECT k.doc_id, m.lang AS cls, sum(m.loglik_micro) AS ll
-       |  FROM tetk k JOIN model m USING (token) GROUP BY 1, 2),
-       |sc AS MATERIALIZED (
-       |  SELECT te.doc_id, te.lang AS actual, p.lang AS cls,
-       |         p.prior_micro + coalesce(ll.ll, 0) AS score
-       |  FROM te CROSS JOIN pri p
-       |  LEFT JOIN ll ON ll.doc_id = te.doc_id AND ll.cls = p.lang),
-       |pred AS MATERIALIZED (
-       |  SELECT doc_id, actual, cls, score FROM sc
-       |  QUALIFY row_number() OVER (PARTITION BY doc_id
-       |    ORDER BY score DESC, cls) = 1)""".stripMargin
-
-  private val ClassifierFitCtes: String = {
-    val base =
-      """WITH fm AS MATERIALIZED (
-        |  SELECT doc_id, y,
-        |         CAST(floor(ln(CAST(nt AS DOUBLE) + 1.0) * 1000000.0 + 0.5) AS BIGINT) AS xm1,
-        |         CAST(floor(sr * 1000000.0 + 0.5) AS BIGINT) AS xm2,
-        |         CAST(floor(pr * 1000000.0 + 0.5) AS BIGINT) AS xm3,
-        |         CAST(floor(mwl / 10.0 * 1000000.0 + 0.5) AS BIGINT) AS xm4
-        |  FROM (
-        |    SELECT doc_id, nt, mwl, sr, pr,
-        |           CASE WHEN (CASE WHEN nt >= 20 AND nt <= 100000 THEN 1 ELSE 0 END +
-        |                      CASE WHEN mwl >= 3.0 AND mwl <= 10.0 THEN 1 ELSE 0 END +
-        |                      CASE WHEN sr >= 0.01 THEN 1 ELSE 0 END +
-        |                      CASE WHEN pr <= 0.2 THEN 1 ELSE 0 END) >= 3
-        |                THEN 1.0 ELSE 0.0 END AS y
-        |    FROM (
-        |      SELECT doc_id, nt,
-        |             CAST(nc - (nt - 1) AS DOUBLE) / nt AS mwl,
-        |             CAST(st AS DOUBLE) / nt AS sr,
-        |             CASE WHEN nc = 0 THEN 0.0 ELSE CAST(np AS DOUBLE) / nc END AS pr
-        |      FROM (
-        |        SELECT doc_id,
-        |               len(string_split(text, ' ')) AS nt,
-        |               length(text) AS nc,
-        |               len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS np,
-        |               len(list_filter(string_split(text, ' '),
-        |                   t -> t IN ('the', 'a', 'of', 'and'))) AS st
-        |        FROM documents)))),
-        |st AS MATERIALIZED (
-        |  SELECT count(*) AS n,
-        |         CAST(sum(CASE WHEN y = 1.0 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-        |         CAST(sum(xm1) AS BIGINT) AS sx1, sum(CAST(xm1 AS DECIMAL(38,0)) * xm1) AS qx1,
-        |         CAST(sum(xm2) AS BIGINT) AS sx2, sum(CAST(xm2 AS DECIMAL(38,0)) * xm2) AS qx2,
-        |         CAST(sum(xm3) AS BIGINT) AS sx3, sum(CAST(xm3 AS DECIMAL(38,0)) * xm3) AS qx3,
-        |         CAST(sum(xm4) AS BIGINT) AS sx4, sum(CAST(xm4 AS DECIMAL(38,0)) * xm4) AS qx4
-        |  FROM fm),
-        |sd AS MATERIALIZED (
-        |  SELECT n, n1, m1, m2, m3, m4,
-        |         CASE WHEN v1 <= 0 THEN 1.0 ELSE sqrt(v1) END AS s1,
-        |         CASE WHEN v2 <= 0 THEN 1.0 ELSE sqrt(v2) END AS s2,
-        |         CASE WHEN v3 <= 0 THEN 1.0 ELSE sqrt(v3) END AS s3,
-        |         CASE WHEN v4 <= 0 THEN 1.0 ELSE sqrt(v4) END AS s4
-        |  FROM (
-        |    SELECT n, n1,
-        |           sx1 / n AS m1, CAST(qx1 AS DOUBLE) / n - sx1 / n * (sx1 / n) AS v1,
-        |           sx2 / n AS m2, CAST(qx2 AS DOUBLE) / n - sx2 / n * (sx2 / n) AS v2,
-        |           sx3 / n AS m3, CAST(qx3 AS DOUBLE) / n - sx3 / n * (sx3 / n) AS v3,
-        |           sx4 / n AS m4, CAST(qx4 AS DOUBLE) / n - sx4 / n * (sx4 / n) AS v4
-        |    FROM st)),
-        |f2 AS MATERIALIZED (
-        |  SELECT doc_id, y,
-        |         CASE WHEN y = 1.0 THEN (n - n1) * 2.0 / n ELSE n1 * 2.0 / n END AS cw,
-        |         (xm1 - m1) / s1 AS x1, (xm2 - m2) / s2 AS x2,
-        |         (xm3 - m3) / s3 AS x3, (xm4 - m4) / s4 AS x4
-        |  FROM fm CROSS JOIN sd),
-        |w0 AS MATERIALIZED (
-        |  SELECT CAST(0 AS BIGINT) AS w1m, CAST(0 AS BIGINT) AS w2m,
-        |         CAST(0 AS BIGINT) AS w3m, CAST(0 AS BIGINT) AS w4m,
-        |         CAST(0 AS BIGINT) AS bm)""".stripMargin
-    val steps = (1 to QualityClassifier.Iters).map { i =>
-      val pw = s"w${i - 1}"
-      s"""p$i AS MATERIALIZED (
-         |  SELECT f2.*, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-         |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-         |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-         |  FROM f2 CROSS JOIN $pw),
-         |g$i AS MATERIALIZED (
-         |  SELECT count(*) AS n,
-         |         sum(CAST(floor(cw * (p - y) * x1 * 1000000.0 + 0.5) AS BIGINT)) AS s1,
-         |         sum(CAST(floor(cw * (p - y) * x2 * 1000000.0 + 0.5) AS BIGINT)) AS s2,
-         |         sum(CAST(floor(cw * (p - y) * x3 * 1000000.0 + 0.5) AS BIGINT)) AS s3,
-         |         sum(CAST(floor(cw * (p - y) * x4 * 1000000.0 + 0.5) AS BIGINT)) AS s4,
-         |         sum(CAST(floor(cw * (p - y) * 1000000.0 + 0.5) AS BIGINT)) AS sb
-         |  FROM p$i),
-         |w$i AS MATERIALIZED (
-         |  SELECT w.w1m - CAST(floor(2.0 * g.s1 / g.n + 0.5) AS BIGINT) AS w1m,
-         |         w.w2m - CAST(floor(2.0 * g.s2 / g.n + 0.5) AS BIGINT) AS w2m,
-         |         w.w3m - CAST(floor(2.0 * g.s3 / g.n + 0.5) AS BIGINT) AS w3m,
-         |         w.w4m - CAST(floor(2.0 * g.s4 / g.n + 0.5) AS BIGINT) AS w4m,
-         |         w.bm - CAST(floor(2.0 * g.sb / g.n + 0.5) AS BIGINT) AS bm
-         |  FROM g$i g CROSS JOIN $pw w)""".stripMargin
-    }.mkString(",\n")
-    base + ",\n" + steps
-  }
-
-  def oracleSql: Map[String, String] = Map(
-    "quality_classifier_fit" -> (ClassifierFitCtes +
-      s"\nSELECT st.n AS n, st.n1 AS n_pos, w1m, w2m, w3m, w4m, bm " +
-      s"FROM w${QualityClassifier.Iters} CROSS JOIN st"),
-    "quality_classifier" -> (ClassifierFitCtes + s"""
-      |, scored AS (
-      |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-      |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-      |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-      |  FROM f2 CROSS JOIN w${QualityClassifier.Iters})
-      |SELECT doc_id, round(p, 4) AS score, p >= 0.5 AS label,
-      |       CAST(y AS BIGINT) AS rule_label
-      |FROM scored ORDER BY doc_id""".stripMargin),
-    // The same descent, then McNemar's discordant cells + corrected
-    // χ² in HUGEINT.
-    "eval_mcnemar" -> (ClassifierFitCtes + s"""
-      |, scored AS (
-      |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-      |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-      |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-      |  FROM f2 CROSS JOIN w${QualityClassifier.Iters}),
-      |lab AS (
-      |  SELECT d.source, s.y,
-      |         CASE WHEN s.p >= 0.5 THEN 1 ELSE 0 END AS pa,
-      |         CASE WHEN d.n_chars >= 400 THEN 1 ELSE 0 END AS pb
-      |  FROM scored s JOIN documents d USING (doc_id)),
-      |a AS (
-      |  SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-      |         CAST(SUM(CASE WHEN pa = y AND pb <> y THEN 1 ELSE 0 END)
-      |           AS BIGINT) AS b,
-      |         CAST(SUM(CASE WHEN pa <> y AND pb = y THEN 1 ELSE 0 END)
-      |           AS BIGINT) AS c
-      |  FROM lab GROUP BY 1),
-      |c2 AS (
-      |  SELECT source, n, b, c,
-      |         CAST(CASE WHEN b + c > 0 THEN
-      |           CAST(GREATEST(ABS(b - c) - 1, 0) AS HUGEINT) *
-      |             GREATEST(ABS(b - c) - 1, 0) * 1000000 // (b + c)
-      |         ELSE 0 END AS BIGINT) AS chi2_micro
-      |  FROM a)
-      |SELECT source, n, b, c, chi2_micro,
-      |       chi2_micro >= 3841459 AS significant_05
-      |FROM c2 ORDER BY source""".stripMargin),
-    // The same descent, then the confident joint on the 1e4 integer
-    // grid — thresholds as cross-multiplied rationals, midpoint tie
-    // to class 1, exactly the operator's arithmetic.
-    "label_noise_card" -> (ClassifierFitCtes + s"""
-      |, scored AS (
-      |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-      |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-      |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-      |  FROM f2 CROSS JOIN w${QualityClassifier.Iters}),
-      |lab AS (
-      |  SELECT s.doc_id, d.source,
-      |         CAST(floor(round(s.p, 4) * 10000 + 0.5) AS BIGINT) AS p1,
-      |         CASE WHEN s.doc_id % 11 = 0 THEN 1 - s.y ELSE s.y END AS yt
-      |  FROM scored s JOIN documents d USING (doc_id)),
-      |m2 AS (SELECT source, yt, p1, 10000 - p1 AS p0 FROM lab),
-      |th AS (
-      |  SELECT CAST(COALESCE(SUM(CASE WHEN yt = 1 THEN p1 END), 0) AS BIGINT)
-      |           AS sum1,
-      |         CAST(COUNT(CASE WHEN yt = 1 THEN 1 END) AS BIGINT) AS n1,
-      |         CAST(COALESCE(SUM(CASE WHEN yt = 0 THEN p0 END), 0) AS BIGINT)
-      |           AS sum0,
-      |         CAST(COUNT(CASE WHEN yt = 0 THEN 1 END) AS BIGINT) AS n0
-      |  FROM m2),
-      |a AS (
-      |  SELECT m.source, m.yt, m.p1,
-      |         (t.n1 > 0 AND m.p1 * t.n1 >= t.sum1) AS q1,
-      |         (t.n0 > 0 AND m.p0 * t.n0 >= t.sum0) AS q0
-      |  FROM m2 m, th t),
-      |cj AS (
-      |  SELECT source, yt,
-      |         CASE WHEN q1 AND q0 THEN
-      |                (CASE WHEN 2 * p1 >= 10000 THEN 1 ELSE 0 END)
-      |              WHEN q1 THEN 1 WHEN q0 THEN 0 END AS cj
-      |  FROM a)
-      |SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-      |       CAST(SUM(CASE WHEN yt = 0 AND cj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c00,
-      |       CAST(SUM(CASE WHEN yt = 0 AND cj = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c01,
-      |       CAST(SUM(CASE WHEN yt = 1 AND cj = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c10,
-      |       CAST(SUM(CASE WHEN yt = 1 AND cj = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c11,
-      |       CAST(SUM(CASE WHEN cj IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-      |         AS unassigned,
-      |       CAST(SUM(CASE WHEN yt = 0 AND cj = 1 THEN 1 ELSE 0 END) +
-      |            SUM(CASE WHEN yt = 1 AND cj = 0 THEN 1 ELSE 0 END) AS BIGINT)
-      |         AS est_errors
-      |FROM cj GROUP BY source ORDER BY source""".stripMargin),
-    "knn_topk_cosine" -> knnOracle(CosExpr, desc = true, k = 4),
-    "knn_topk_inner_product" -> knnOracle(
-      "list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q)", desc = true, k = 4),
-    // Round the similarity FIRST, then subtract (then the harness's outer
-    // 6-dp round is a no-op-shaped safety net) — mirrors
-    // SearchStrategy.CosineDistance.roundedScore exactly; rounding 1−s
-    // directly is not reproducible across engines at half-way boundaries.
-    "knn_topk_cosine_distance" -> knnOracle(s"1.0 - round($CosExpr, 6)", desc = false, k = 4),
-    "knn_topk_euclidean" -> knnOracle(
-      "list_distance(CAST(e.embedding AS DOUBLE[]), qv.q)", desc = false, k = 4),
-    "knn_topk_manhattan" -> knnOracle(
-      "list_sum(list_transform(generate_series(1, len(e.embedding)), " +
-        "i -> abs(CAST(e.embedding[i] AS DOUBLE) - qv.q[i])))", desc = false, k = 4),
-    "knn_topk_filtered" -> knnOracle(CosExpr, desc = true, k = 8,
-      where = "WHERE d.lang = 'en'"),
-    "codec_roundtrip" ->
-      """SELECT vec_id AS id, CAST(g - 1 AS BIGINT) AS idx, embedding[g] AS val
-        |FROM embeddings, unnest(generate_series(1, len(embedding))) AS t(g)
-        |ORDER BY id, idx""".stripMargin,
-    "binary_store_topk" -> knnOracle(CosExpr, desc = true, k = 6),
-    "blob_source_topk" -> knnOracle(CosExpr, desc = true, k = 5),
-    "ann_ivf_topk" -> knnOracle(CosExpr, desc = true, k = 10),
-    "ann_ivf_disk" -> knnOracle(CosExpr, desc = true, k = 12),
-    "ann_ivf_append" -> knnOracle(CosExpr, desc = true, k = 12),
-    "ann_ivf_delete" -> knnOracle(CosExpr, desc = true, k = 12,
-      where = "WHERE e.vec_id % 7 <> 3"),
-    // Full breadth over the streamed store ⇒ brute force, same as disk.
-    "ann_ivf_streamed" -> knnOracle(CosExpr, desc = true, k = 12),
-    "ann_tree_topk" -> knnOracle(CosExpr, desc = true, k = 9),
-    // Same sign-sketch semantics via per-dimension sign comparisons
-    // (= xor+popcount on the packed longs), then the exact re-rank.
-    "ann_bitsketch_topk" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0),
-        |sk AS (
-        |  SELECT e.vec_id AS id, CAST(e.embedding AS DOUBLE[]) AS v,
-        |         CAST(len(list_filter(generate_series(1, least(len(e.embedding), 64)),
-        |              i -> (CAST(e.embedding[i] AS DOUBLE) >= 0) != (qv.q[i] >= 0))) AS BIGINT)
-        |           AS hamming
-        |  FROM embeddings e, qv),
-        |cand AS (SELECT * FROM sk ORDER BY hamming, id LIMIT 64)
-        |SELECT c.id, c.hamming,
-        |       round(list_inner_product(c.v, qv.q) /
-        |             (sqrt(list_inner_product(c.v, c.v)) * sqrt(list_inner_product(qv.q, qv.q))), 6)
-        |         AS score
-        |FROM cand c, qv
-        |ORDER BY score DESC NULLS LAST, c.id
-        |LIMIT 8""".stripMargin,
-    // Exact brute-force cosine — valid because (d=32, candidates=128)
-    // is a measured full-recall operating point on this corpus.
-    // NSW beam search at the shipped full-recall point returns exactly
-    // the brute-force top-10 (grid in NswAnnSpec).
-    "ann_nsw_topk" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |ORDER BY score DESC NULLS LAST, id
-        |LIMIT 10""".stripMargin,
-    // Tombstoned ids are routable but never emitted: brute force over
-    // the live rows only.
-    "ann_nsw_delete" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |WHERE e.vec_id % 7 <> 3
-        |ORDER BY score DESC NULLS LAST, id
-        |LIMIT 10""".stripMargin,
-    // Append lifecycle keeps the shipped full-recall operating point
-    // (spec-pinned), so the oracle is again brute force.
-    "ann_nsw_append" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |ORDER BY score DESC NULLS LAST, id
-        |LIMIT 10""".stripMargin,
-    // Bucketed-layout NSW runs the same full-recall beam over catalog
-    // tables — the result contract is unchanged, so the oracle is the
-    // same brute-force cosine top-10.
-    "ann_nsw_disk" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |ORDER BY score DESC NULLS LAST, id
-        |LIMIT 10""".stripMargin,
-    "ann_pca_topk" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |ORDER BY score DESC NULLS LAST, id
-        |LIMIT 10""".stripMargin,
-    // SQ8 re-rank is exact at (candidates=64) — measured recall grid in
-    // Sq8AnnSpec — so the oracle is brute-force cosine top-10.
-    "ann_sq8_topk" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |ORDER BY score DESC NULLS LAST, id
-        |LIMIT 10""".stripMargin,
-    "sql_topk_cosine" -> knnOracle(CosExpr, desc = true, k = 5),
-    "sql_ann_rewrite" ->
-      """WITH qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), qv.q) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(qv.q, qv.q))), 6) AS score
-        |FROM embeddings e, qv
-        |ORDER BY score DESC NULLS LAST, e.vec_id
-        |LIMIT 7""".stripMargin,
-    "api_search_cosine" -> knnOracle(CosExpr, desc = true, k = 4),
-    "api_health" -> "SELECT CAST(1 AS INT) AS test, TRUE AS healthy",
-    "api_config" ->
-      """SELECT 'vec_id' AS id_column, 'source' AS title_column,
-        |       'lang' AS vendor_column, 'text' AS description_column,
-        |       'embedding' AS embedding_column,
-        |       'CosineSimilarity' AS search_strategy,
-        |       FALSE AS index_enabled,
-        |       CAST(10 AS INT) AS index_tree_search_top_size,
-        |       CAST(4 AS INT) AS default_k,
-        |       '{"id_column": "vec_id", "title_column": "source", "vendor_column": "lang", "description_column": "text", "embedding_column": "embedding", "search_strategy": "CosineSimilarity", "index_enabled": false, "index_tree_search_top_size": 10, "default_k": 4}' AS config_json""".stripMargin,
-    "dedup_exact" ->
-      """SELECT substr(text, 1, 16) AS fp, count(*) AS dup_count, min(doc_id) AS keep_id
-        |FROM documents GROUP BY fp ORDER BY fp""".stripMargin,
-    "dedup_ngram_jaccard" ->
-      """WITH base AS (
-        |  SELECT doc_id AS id, substr(text, 1, 16) AS bk,
-        |         list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents)
-        |SELECT * FROM (
-        |  SELECT a.id AS a_id, b.id AS b_id,
-        |         round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |               len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-        |  FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id)
-        |WHERE jaccard >= 0.5
-        |ORDER BY a_id, b_id""".stripMargin,
-    // The same pair CTE as dedup_ngram_jaccard, then the identical
-    // multiply chains: p^4 left-associated, (1-p^4)^8 left-associated.
-    "lsh_calibration" ->
-      """WITH base AS (
-        |  SELECT doc_id AS id, substr(text, 1, 16) AS bk,
-        |         list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT * FROM (
-        |    SELECT a.id AS a_id, b.id AS b_id,
-        |           round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |                 len(list_distinct(list_cat(a.toks, b.toks))), 6)
-        |             AS jaccard
-        |    FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id)
-        |  WHERE jaccard >= 0.5),
-        |c AS (
-        |  SELECT a_id, b_id,
-        |         CAST(floor(jaccard * 1000000.0 + 0.5) AS BIGINT) AS jacc_micro
-        |  FROM pairs),
-        |e AS (
-        |  SELECT *, (1.0 - (((CAST(jacc_micro AS DOUBLE) / 1000000.0 *
-        |    (CAST(jacc_micro AS DOUBLE) / 1000000.0)) *
-        |    (CAST(jacc_micro AS DOUBLE) / 1000000.0)) *
-        |    (CAST(jacc_micro AS DOUBLE) / 1000000.0))) AS m1
-        |  FROM c)
-        |SELECT a_id, b_id, jacc_micro,
-        |       round(1.0 - (((((((m1*m1)*m1)*m1)*m1)*m1)*m1)*m1), 6)
-        |         AS detect_prob
-        |FROM e ORDER BY a_id, b_id""".stripMargin,
-    "dedup_span_stats" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (
-        |  SELECT doc_id, array_to_string(list_slice(t, s + 1, s + 8), ' ') AS gram
-        |  FROM toks, unnest(generate_series(0, len(t) - 8)) AS u(s)),
-        |per_doc AS (
-        |  SELECT doc_id, gram, count(*) AS cnt FROM g GROUP BY doc_id, gram),
-        |dup AS (
-        |  SELECT gram FROM per_doc GROUP BY gram HAVING count(*) >= 2),
-        |agg AS (
-        |  SELECT p.doc_id,
-        |         CAST(sum(p.cnt) AS BIGINT) AS n_grams,
-        |         CAST(sum(CASE WHEN d.gram IS NOT NULL THEN p.cnt ELSE 0 END) AS BIGINT)
-        |           AS dup_grams
-        |  FROM per_doc p LEFT JOIN dup d USING (gram)
-        |  GROUP BY p.doc_id)
-        |SELECT doc.doc_id,
-        |       coalesce(a.n_grams, 0) AS n_grams,
-        |       coalesce(a.dup_grams, 0) AS dup_grams,
-        |       CASE WHEN coalesce(a.n_grams, 0) = 0 THEN 0.0
-        |            ELSE round(CAST(a.dup_grams AS DOUBLE) / a.n_grams, 6) END AS dup_frac
-        |FROM documents doc LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "dedup_span_removal" ->
-      """WITH toks AS (
-        |  SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        |g AS (
-        |  SELECT doc_id, s, array_to_string(list_slice(t, s + 1, s + 8), ' ') AS gram
-        |  FROM toks, unnest(generate_series(0, len(t) - 8)) AS u(s)),
-        |pd AS (
-        |  SELECT doc_id, gram FROM g GROUP BY doc_id, gram),
-        |dup AS (
-        |  SELECT gram FROM pd GROUP BY gram HAVING count(*) >= 2),
-        |cov AS (
-        |  SELECT DISTINCT g.doc_id, g.s + i.i AS pos
-        |  FROM g JOIN dup USING (gram), unnest(generate_series(0, 7)) AS i(i)),
-        |tok AS (
-        |  SELECT doc_id, w.i - 1 AS pos, t[w.i] AS tok
-        |  FROM toks, unnest(generate_series(1, len(t))) AS w(i)),
-        |kept AS (
-        |  SELECT k.doc_id, k.pos, k.tok
-        |  FROM tok k LEFT JOIN cov c ON k.doc_id = c.doc_id AND k.pos = c.pos
-        |  WHERE c.doc_id IS NULL),
-        |agg AS (
-        |  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |         string_agg(tok, ' ' ORDER BY pos) AS clean
-        |  FROM kept GROUP BY doc_id)
-        |SELECT d.doc_id,
-        |       CAST(len(string_split(d.text, ' ')) AS BIGINT) AS n_tokens,
-        |       CAST(len(string_split(d.text, ' ')) - coalesce(a.n_kept, 0) AS BIGINT)
-        |         AS n_removed,
-        |       coalesce(a.clean, '') AS text_clean
-        |FROM documents d LEFT JOIN agg a USING (doc_id)
-        |ORDER BY doc_id""".stripMargin,
-    "dedup_embedding" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT * FROM (
-        |    SELECT a.id AS a_id, b.id AS b_id,
-        |           round(list_inner_product(a.v, b.v) /
-        |                 (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))), 6)
-        |             AS cos_sim
-        |    FROM base a JOIN base b ON a.label = b.label AND a.id < b.id)
-        |  WHERE cos_sim >= 0.3)
-        |SELECT b_id AS removed_id, min(a_id) AS kept_id
-        |FROM pairs GROUP BY b_id ORDER BY removed_id""".stripMargin,
-    "sim_join_label" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT * FROM (
-        |  SELECT a.id AS a_id, b.id AS b_id,
-        |         round(list_inner_product(a.v, b.v) /
-        |               (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))), 6)
-        |           AS cos_sim
-        |  FROM base a JOIN base b ON a.label = b.label AND a.id < b.id)
-        |WHERE cos_sim >= 0.3
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Entity-resolution oracles rebuild the identical fixture relation
-    // (24-char titles + one-char-deleted copies), replicate the
-    // prefix/suffix blocking with the 1024 viral-block cap, and verify
-    // with DuckDB's own levenshtein; the similarity is the same
-    // single-division double expression on both sides.
-    "er_fuzzy_join" ->
-      """WITH base AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id, substr(text, 1, 24) AS name
-        |  FROM documents WHERE length(text) >= 24),
-        |pos AS (SELECT id, name, CAST(id % 16 + 4 AS INT) AS p FROM base),
-        |records AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000, substr(name, 1, p) || substr(name, p + 2, 24)
-        |  FROM pos),
-        |keys AS (
-        |  SELECT 'p:' || substr(name, 1, 8) AS blk, id, name FROM records
-        |  UNION ALL
-        |  SELECT 's:' || substr(name, -8, 8) AS blk, id, name FROM records),
-        |keep AS (SELECT blk FROM keys GROUP BY blk HAVING count(*) <= 1024),
-        |k2 AS (SELECT k.* FROM keys k JOIN keep USING (blk)),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS a_id, b.id AS b_id,
-        |         a.name AS a_name, b.name AS b_name
-        |  FROM k2 a JOIN k2 b ON a.blk = b.blk AND a.id < b.id)
-        |SELECT a_id, b_id, a_name, b_name,
-        |       CAST(levenshtein(a_name, b_name) AS INT) AS dist,
-        |       1.0 - CAST(levenshtein(a_name, b_name) AS DOUBLE) /
-        |             CAST(greatest(length(a_name), length(b_name)) AS DOUBLE) AS sim
-        |FROM cand WHERE levenshtein(a_name, b_name) <= 2
-        |ORDER BY a_id, b_id""".stripMargin,
-    "er_jaro_join" ->
-      """WITH base AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id, substr(text, 1, 24) AS name
-        |  FROM documents WHERE length(text) >= 24),
-        |pos AS (SELECT id, name, CAST(id % 16 + 4 AS INT) AS p FROM base),
-        |records AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000, substr(name, 1, p) || substr(name, p + 2, 24)
-        |  FROM pos),
-        |keys AS (
-        |  SELECT 'p:' || substr(name, 1, 8) AS blk, id, name FROM records
-        |  UNION ALL
-        |  SELECT 's:' || substr(name, -8, 8) AS blk, id, name FROM records),
-        |keep AS (SELECT blk FROM keys GROUP BY blk HAVING count(*) <= 1024),
-        |k2 AS (SELECT k.* FROM keys k JOIN keep USING (blk)),
-        |cand AS (
-        |  SELECT DISTINCT a.id AS a_id, b.id AS b_id,
-        |         a.name AS a_name, b.name AS b_name
-        |  FROM k2 a JOIN k2 b ON a.blk = b.blk AND a.id < b.id)
-        |SELECT a_id, b_id, a_name, b_name,
-        |       round(jaro_winkler_similarity(a_name, b_name), 6) AS jw
-        |FROM cand WHERE round(jaro_winkler_similarity(a_name, b_name), 6) >= 0.94
-        |ORDER BY a_id, b_id""".stripMargin,
-    "er_fs_patterns" -> (FsCtes + """
-      |SELECT g1, g2, g3, n AS n_pairs, wq AS w_micro
-      |FROM ef ORDER BY g1, g2, g3""".stripMargin),
-    "er_fs_weights" -> (FsCtes + s"""
-      |SELECT field, m_micro, u_micro,
-      |       round(log2(CAST(m_micro AS DOUBLE) / CAST(u_micro AS DOUBLE)), 6)
-      |         AS agree_weight,
-      |       round(log2(CAST(1000000 - m_micro AS DOUBLE) /
-      |                  CAST(1000000 - u_micro AS DOUBLE)), 6)
-      |         AS disagree_weight
-      |FROM (
-      |  SELECT 'prefix' AS field, CAST(m1 AS BIGINT) AS m_micro,
-      |         CAST(u1 AS BIGINT) AS u_micro FROM par${EntityResolution.FsIters}
-      |  UNION ALL
-      |  SELECT 'suffix', CAST(m2 AS BIGINT), CAST(u2 AS BIGINT)
-      |  FROM par${EntityResolution.FsIters}
-      |  UNION ALL
-      |  SELECT 'length', CAST(m3 AS BIGINT), CAST(u3 AS BIGINT)
-      |  FROM par${EntityResolution.FsIters})
-      |ORDER BY field""".stripMargin),
-    "er_entities" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id, substr(text, 1, 24) AS name
-        |  FROM documents WHERE length(text) >= 24),
-        |pos AS (SELECT id, name, CAST(id % 16 + 4 AS INT) AS p FROM base),
-        |records AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000, substr(name, 1, p) || substr(name, p + 2, 24)
-        |  FROM pos),
-        |keys AS (
-        |  SELECT 'p:' || substr(name, 1, 8) AS blk, id, name FROM records
-        |  UNION ALL
-        |  SELECT 's:' || substr(name, -8, 8) AS blk, id, name FROM records),
-        |keep AS (SELECT blk FROM keys GROUP BY blk HAVING count(*) <= 1024),
-        |k2 AS (SELECT k.* FROM keys k JOIN keep USING (blk)),
-        |pairs AS (
-        |  SELECT DISTINCT a.id AS a_id, b.id AS b_id
-        |  FROM k2 a JOIN k2 b ON a.blk = b.blk AND a.id < b.id
-        |  WHERE levenshtein(a.name, b.name) <= 2),
-        |edges AS (
-        |  SELECT a_id AS src, b_id AS dst FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs),
-        |reach AS (
-        |  SELECT src, dst FROM edges
-        |  UNION
-        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src),
-        |lbl AS (SELECT src, min(dst) AS mn FROM reach GROUP BY src)
-        |SELECT r.id AS record_id, r.name,
-        |       least(r.id, coalesce(l.mn, r.id)) AS entity_id
-        |FROM records r LEFT JOIN lbl l ON l.src = r.id
-        |ORDER BY record_id""".stripMargin,
-    // The rewrite's oracle is the NAIVE exact join itself — the
-    // strongest possible statement of the dist≤1 losslessness claim.
-    "sql_fuzzy_join_rewrite" ->
-      """WITH base AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id, substr(text, 1, 24) AS name
-        |  FROM documents WHERE length(text) >= 24),
-        |pos AS (SELECT id, name, CAST(id % 16 + 4 AS INT) AS p FROM base),
-        |records AS (
-        |  SELECT id, name FROM base
-        |  UNION ALL
-        |  SELECT id + 1000000, substr(name, 1, p) || substr(name, p + 2, 24)
-        |  FROM pos)
-        |SELECT a.id AS a_id, b.id AS b_id,
-        |       CAST(levenshtein(a.name, b.name) AS INT) AS dist
-        |FROM records a JOIN records b
-        |  ON a.id < b.id AND levenshtein(a.name, b.name) <= 1
-        |ORDER BY a_id, b_id""".stripMargin,
-    // The naive rollup SQL over the BASE table: the materialized-
-    // rollup rewrite must be semantically invisible, so the oracle is
-    // the un-rewritten aggregate itself (exact integer sums).
-    // The REAL distinct/left-join executed by DuckDB — the rewrites
-    // must be result-identical to the unrewritten semantics.
-    "sql_distinct_elim_rewrite" ->
-      """SELECT DISTINCT doc_id, lang, source
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "sql_join_elim_rewrite" ->
-      """SELECT l.l_returnflag,
-        |       CAST(COUNT(*) AS BIGINT) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem l LEFT OUTER JOIN part p
-        |  ON l.l_partkey = p.p_partkey
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "sql_fk_join_elim_rewrite" ->
-      """SELECT l.l_returnflag,
-        |       CAST(COUNT(*) AS BIGINT) AS n_items,
-        |       CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS sum_qty
-        |FROM lineitem l JOIN part p
-        |  ON l.l_partkey = p.p_partkey
-        |GROUP BY 1 ORDER BY l_returnflag""".stripMargin,
-    "sql_rollup_rewrite" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(n_chars) AS BIGINT) AS total_chars,
-        |       min(n_chars) AS min_chars, max(n_chars) AS max_chars,
-        |       round(CAST(sum(n_chars) AS DOUBLE) / count(n_chars), 6)
-        |         AS avg_chars
-        |FROM documents WHERE source <> 'src0'
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    // The naive daily rollup over the raw event stream — what the
-    // hourly-summary re-truncation must reproduce exactly.
-    "sql_rollup_time_rewrite" ->
-      """WITH ev AS (
-        |  SELECT event_type, CAST(ts AS TIMESTAMP) AS ts,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events)
-        |SELECT event_type, CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
-        |       count(*) AS n_events,
-        |       CAST(sum(cents) AS BIGINT) AS total_cents,
-        |       round(CAST(sum(cents) AS DOUBLE) / count(cents), 6)
-        |         AS avg_cents
-        |FROM ev GROUP BY 1, 2
-        |ORDER BY event_type, day""".stripMargin,
-    // Expectation cards: one scalar-aggregate CTE re-derives every
-    // violation count; verdicts are integer-count comparisons.
-    "data_expectations" ->
-      """WITH t AS (SELECT
-        |  CAST(count(*) AS BIGINT) AS total,
-        |  CAST(count(o_orderkey) - count(DISTINCT o_orderkey) AS BIGINT) AS v0,
-        |  CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |  CAST(sum(CASE WHEN NOT (o_totalprice > 0) THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |  CAST(sum(CASE WHEN o_totalprice > 100000 THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-        |  CAST(sum(CASE WHEN NOT (o_orderstatus IN ('O','F','P')) THEN 1 ELSE 0 END) AS BIGINT) AS v4,
-        |  CAST(sum(CASE WHEN NOT regexp_matches(o_orderpriority, '^[1-5]-') THEN 1 ELSE 0 END) AS BIGINT) AS v5
-        |  FROM orders)
-        |SELECT * FROM (
-        |  SELECT 'orderkey_unique' AS "check", 'o_orderkey' AS "column",
-        |         v0 AS violations, total, v0 <= 0 AS passed FROM t
-        |  UNION ALL SELECT 'custkey_complete', 'o_custkey', v1, total, v1 <= 0 FROM t
-        |  UNION ALL SELECT 'totalprice_positive', 'o_totalprice', v2, total, v2 <= 0 FROM t
-        |  UNION ALL SELECT 'totalprice_le_100k', 'o_totalprice', v3, total, v3 <= 100 FROM t
-        |  UNION ALL SELECT 'status_domain', 'o_orderstatus', v4, total, v4 <= 0 FROM t
-        |  UNION ALL SELECT 'priority_format', 'o_orderpriority', v5, total, v5 <= 0 FROM t)
-        |ORDER BY "check"""".stripMargin,
-    "corpus_expectations" ->
-      """WITH t AS (SELECT
-        |  CAST(count(*) AS BIGINT) AS total,
-        |  CAST(count(doc_id) - count(DISTINCT doc_id) AS BIGINT) AS v0,
-        |  CAST(sum(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS v1,
-        |  CAST(sum(CASE WHEN n_chars != length(text) THEN 1 ELSE 0 END) AS BIGINT) AS v2,
-        |  CAST(sum(CASE WHEN NOT (lang IN ('en','de','zh','fr','es')) THEN 1 ELSE 0 END) AS BIGINT) AS v3,
-        |  CAST(sum(CASE WHEN NOT regexp_matches(source, '^src[0-9]+$') THEN 1 ELSE 0 END) AS BIGINT) AS v4,
-        |  CAST(sum(CASE WHEN length(text) < 50 THEN 1 ELSE 0 END) AS BIGINT) AS v5
-        |  FROM documents)
-        |SELECT * FROM (
-        |  SELECT 'doc_id_unique' AS "check", 'doc_id' AS "column",
-        |         v0 AS violations, total, v0 <= 0 AS passed FROM t
-        |  UNION ALL SELECT 'text_complete', 'text', v1, total, v1 <= 0 FROM t
-        |  UNION ALL SELECT 'n_chars_consistent', 'n_chars', v2, total, v2 <= 0 FROM t
-        |  UNION ALL SELECT 'lang_domain', 'lang', v3, total, v3 <= 0 FROM t
-        |  UNION ALL SELECT 'source_format', 'source', v4, total, v4 <= 0 FROM t
-        |  UNION ALL SELECT 'text_min_len', 'text', v5, total, v5 <= 1000 FROM t)
-        |ORDER BY "check"""".stripMargin,
-    // Readability re-derived from the same three regex counts; the
-    // float scores are the identical expression shape on both sides,
-    // computed per row from integers (no accumulation order).
-    "doc_readability" ->
-      """WITH c AS (
-        |  SELECT doc_id,
-        |         greatest(1, len(regexp_extract_all(text, '[.!?]+'))) AS s,
-        |         greatest(1, len(regexp_extract_all(text, '[A-Za-z]+'))) AS w,
-        |         len(regexp_extract_all(lower(text), '[aeiouy]+')) AS y
-        |  FROM documents)
-        |SELECT doc_id,
-        |       CAST(s AS BIGINT) AS n_sentences,
-        |       CAST(w AS BIGINT) AS n_words,
-        |       CAST(y AS BIGINT) AS n_syllables,
-        |       CAST(w AS DOUBLE) / CAST(s AS DOUBLE) AS words_per_sentence,
-        |       CAST(y AS DOUBLE) / CAST(w AS DOUBLE) AS syllables_per_word,
-        |       206.835 - 1.015 * (CAST(w AS DOUBLE) / CAST(s AS DOUBLE))
-        |               - 84.6 * (CAST(y AS DOUBLE) / CAST(w AS DOUBLE)) AS flesch,
-        |       0.39 * (CAST(w AS DOUBLE) / CAST(s AS DOUBLE))
-        |         + 11.8 * (CAST(y AS DOUBLE) / CAST(w AS DOUBLE)) - 15.59 AS fk_grade
-        |FROM c ORDER BY doc_id""".stripMargin,
-    // The dense per-user hour grid rebuilt with generate_series
-    // (inclusive ends, like Spark's sequence); values in exact cents.
-    "events_resample" ->
-      """WITH ev AS (
-        |  SELECT user_id, date_trunc('hour', ts) AS h,
-        |         CAST(round(value * 100) AS BIGINT) AS cents
-        |  FROM events),
-        |counts AS (
-        |  SELECT user_id, h, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(cents) AS BIGINT) AS vc
-        |  FROM ev GROUP BY 1, 2),
-        |spans AS (SELECT user_id, min(h) AS h0, max(h) AS h1 FROM ev GROUP BY 1),
-        |grid AS (
-        |  SELECT user_id, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS h
-        |  FROM spans)
-        |SELECT g.user_id, g.h AS hour,
-        |       coalesce(c.n, 0) AS n_events, coalesce(c.vc, 0) AS value_cents
-        |FROM grid g LEFT JOIN counts c ON c.user_id = g.user_id AND c.h = g.h
-        |ORDER BY g.user_id, hour""".stripMargin,
-    // The CMS rebuilt cell by cell from the same md5-seeded buckets
-    // (first two digest nibbles, width 256, depth 4): estimates must
-    // match exactly, not just bound the truth.
-    "sketch_cms_topk" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS term FROM documents),
-        |tc AS (
-        |  SELECT term, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM toks WHERE term != '' GROUP BY term),
-        |js(j) AS (VALUES (0), (1), (2), (3)),
-        |cells AS (
-        |  SELECT js.j,
-        |         ((strpos('0123456789abcdef',
-        |             substr(md5('cms:' || js.j || ':' || tc.term), 1, 1)) - 1) * 16
-        |          + strpos('0123456789abcdef',
-        |             substr(md5('cms:' || js.j || ':' || tc.term), 2, 1)) - 1) % 256
-        |           AS bucket,
-        |         CAST(sum(tc.cnt) AS BIGINT) AS cnt
-        |  FROM tc CROSS JOIN js GROUP BY 1, 2),
-        |top AS (SELECT term, cnt AS exact FROM tc ORDER BY cnt DESC, term LIMIT 20),
-        |probes AS (
-        |  SELECT t.term, t.exact, js.j,
-        |         ((strpos('0123456789abcdef',
-        |             substr(md5('cms:' || js.j || ':' || t.term), 1, 1)) - 1) * 16
-        |          + strpos('0123456789abcdef',
-        |             substr(md5('cms:' || js.j || ':' || t.term), 2, 1)) - 1) % 256
-        |           AS bucket
-        |  FROM top t CROSS JOIN js)
-        |SELECT p.term, p.exact,
-        |       CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS estimate
-        |FROM probes p LEFT JOIN cells c ON c.j = p.j AND c.bucket = p.bucket
-        |GROUP BY p.term, p.exact
-        |ORDER BY exact DESC, term""".stripMargin,
-    // Bottom-k sketches rebuilt digest by digest: same md5 order, same
-    // row_number cut, same integer counts, same single divisions.
-    "sketch_kmin_jaccard" ->
-      """WITH allh AS (SELECT DISTINCT source AS src, md5(text) AS h FROM documents),
-        |srcs AS (SELECT DISTINCT src FROM allh),
-        |pairs AS (
-        |  SELECT a.src AS src_a, b.src AS src_b
-        |  FROM srcs a, srcs b WHERE a.src < b.src),
-        |sk AS (SELECT src, h FROM (
-        |  SELECT src, h, row_number() OVER (PARTITION BY src ORDER BY h) AS rk
-        |  FROM allh) WHERE rk <= 64),
-        |u AS (
-        |  SELECT p.src_a, p.src_b, s.h
-        |  FROM pairs p JOIN sk s ON s.src = p.src_a
-        |  UNION
-        |  SELECT p.src_a, p.src_b, s.h
-        |  FROM pairs p JOIN sk s ON s.src = p.src_b),
-        |m AS (SELECT src_a, src_b, h FROM (
-        |  SELECT src_a, src_b, h,
-        |         row_number() OVER (PARTITION BY src_a, src_b ORDER BY h) AS rk
-        |  FROM u) WHERE rk <= 64),
-        |msize AS (
-        |  SELECT src_a, src_b, CAST(count(*) AS BIGINT) AS m_size
-        |  FROM m GROUP BY 1, 2),
-        |estn AS (
-        |  SELECT m.src_a, m.src_b, CAST(count(*) AS BIGINT) AS est_num
-        |  FROM m JOIN sk sa ON sa.src = m.src_a AND sa.h = m.h
-        |         JOIN sk sb ON sb.src = m.src_b AND sb.h = m.h
-        |  GROUP BY 1, 2),
-        |sizes AS (SELECT src, CAST(count(*) AS BIGINT) AS n FROM allh GROUP BY 1),
-        |intr AS (
-        |  SELECT a.src AS src_a, b.src AS src_b, CAST(count(*) AS BIGINT) AS inter
-        |  FROM allh a JOIN allh b ON a.h = b.h AND a.src < b.src GROUP BY 1, 2)
-        |SELECT p.src_a, p.src_b,
-        |       coalesce(e.est_num, 0) AS est_num,
-        |       coalesce(ms.m_size, 0) AS m_size,
-        |       CAST(coalesce(e.est_num, 0) AS DOUBLE) / CAST(ms.m_size AS DOUBLE)
-        |         AS est_jaccard,
-        |       coalesce(i.inter, 0) AS inter,
-        |       sa.n + sb.n - coalesce(i.inter, 0) AS uni,
-        |       CAST(coalesce(i.inter, 0) AS DOUBLE) /
-        |         CAST(sa.n + sb.n - coalesce(i.inter, 0) AS DOUBLE) AS exact_jaccard
-        |FROM pairs p
-        |LEFT JOIN msize ms ON ms.src_a = p.src_a AND ms.src_b = p.src_b
-        |LEFT JOIN estn e ON e.src_a = p.src_a AND e.src_b = p.src_b
-        |JOIN sizes sa ON sa.src = p.src_a
-        |JOIN sizes sb ON sb.src = p.src_b
-        |LEFT JOIN intr i ON i.src_a = p.src_a AND i.src_b = p.src_b
-        |ORDER BY p.src_a, p.src_b""".stripMargin,
-    // The conversation re-rendered with string_agg in turn order; the
-    // mask boundary re-derived from integer turn lengths: chars of all
-    // turns before the last assistant turn + its 22-char header + 1.
-    "chat_render" ->
-      """WITH docs AS (SELECT doc_id, text FROM documents WHERE length(text) >= 80),
-        |turns AS (
-        |  SELECT doc_id AS conv_id, 0 AS i, 'system' AS r,
-        |         'You are helpful.' AS c FROM docs
-        |  UNION ALL SELECT doc_id, 1, 'user', substr(text, 1, 40) FROM docs
-        |  UNION ALL SELECT doc_id, 2, 'assistant', substr(text, 41, 40) FROM docs
-        |  UNION ALL SELECT doc_id, 3, 'user', substr(text, 17, 25)
-        |            FROM docs WHERE doc_id % 3 = 0
-        |  UNION ALL SELECT doc_id, 4, 'assistant', substr(text, 5, 30)
-        |            FROM docs WHERE doc_id % 3 = 0),
-        |agg AS (
-        |  SELECT conv_id,
-        |         CAST(count(*) AS BIGINT) AS n_turns,
-        |         string_agg('<|im_start|>' || r || chr(10) || c || '<|im_end|>'
-        |                    || chr(10), '' ORDER BY i) AS text,
-        |         max(CASE WHEN r = 'assistant' THEN i END) AS la
-        |  FROM turns GROUP BY conv_id),
-        |bounds AS (
-        |  SELECT t.conv_id,
-        |         CAST(sum(CASE WHEN t.i < a.la
-        |              THEN 24 + length(t.r) + length(t.c) ELSE 0 END) AS BIGINT)
-        |           AS prefix_chars,
-        |         CAST(max(CASE WHEN t.i = a.la THEN length(t.c) END) AS BIGINT)
-        |           AS tlen
-        |  FROM turns t JOIN agg a ON a.conv_id = t.conv_id
-        |  GROUP BY t.conv_id)
-        |SELECT a.conv_id, a.n_turns, a.text,
-        |       CAST(b.prefix_chars + 23 AS BIGINT) AS mask_from,
-        |       b.tlen AS target_len
-        |FROM agg a JOIN bounds b ON b.conv_id = a.conv_id
-        |ORDER BY a.conv_id""".stripMargin,
-    // The merge's set semantics re-derived directly: untouched rows,
-    // updated payloads, inserts; deleted residues absent.
-    "corpus_merge" ->
-      """WITH up AS (
-        |  SELECT doc_id, upper(text) AS text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 7 = 0),
-        |keep AS (
-        |  SELECT doc_id, text, lang, source, n_chars
-        |  FROM documents WHERE doc_id % 7 NOT IN (0, 1)),
-        |ins AS (
-        |  SELECT doc_id + 1000000 AS doc_id, 'copy: ' || text AS text,
-        |         'xx' AS lang, 'srcNew' AS source, n_chars + 6 AS n_chars
-        |  FROM documents WHERE doc_id % 7 = 2)
-        |SELECT * FROM keep
-        |UNION ALL SELECT * FROM up
-        |UNION ALL SELECT * FROM ins
-        |ORDER BY doc_id""".stripMargin,
-    // The confusion matrix over the same marker-word hit counters and
-    // tie-break chain as the lang_id oracle.
-    "lang_confusion" ->
-      """WITH h AS (
-        |  SELECT lang,
-        |    len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'and', 'of'))) AS en_hits,
-        |    len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das', 'und'))) AS de_hits,
-        |    len(list_filter(string_split(text, ' '), t -> t IN ('le', 'la', 'les', 'et'))) AS fr_hits,
-        |    len(list_filter(string_split(text, ' '), t -> t IN ('el', 'los', 'las', 'y'))) AS es_hits
-        |  FROM documents)
-        |SELECT lang AS lang_true,
-        |       CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits THEN 'en'
-        |            WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
-        |            WHEN fr_hits >= es_hits THEN 'fr'
-        |            ELSE 'es' END AS lang_pred,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM h GROUP BY 1, 2 ORDER BY lang_true, lang_pred""".stripMargin,
-    // Wilson bound re-derived from the same (n, k) integers with the
-    // identically-shaped double expression (z cast to DOUBLE so the
-    // decimal literal cannot change the arithmetic).
-    "source_quality_wilson" ->
-      """WITH a AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END) AS BIGINT) AS k
-        |  FROM documents GROUP BY source),
-        |c AS (
-        |  SELECT source, n, k,
-        |         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |         CAST(n AS DOUBLE) AS nd,
-        |         CAST(1.96 AS DOUBLE) AS z
-        |  FROM a)
-        |SELECT source, n, k, p AS p_hat,
-        |       (p + z * z / (2.0 * nd) -
-        |        z * sqrt(p * (1.0 - p) / nd + z * z / (4.0 * nd * nd))) /
-        |       (1.0 + z * z / nd) AS wilson_lower
-        |FROM c ORDER BY source""".stripMargin,
-    // The mask positions re-derived nibble by nibble from the same
-    // md5(id:pos) seed (the dataset_split pattern), the input/target
-    // rebuilt with ordered list transforms.
-    "mlm_corruption" ->
-      """WITH t AS (
-        |  SELECT doc_id AS id, string_split(text, ' ') AS toks FROM documents),
-        |f AS (
-        |  SELECT id, toks,
-        |         list_transform(generate_series(1, len(toks)), p ->
-        |           (list_sum(list_transform(generate_series(1, 4), i ->
-        |              (strpos('0123456789abcdef',
-        |                 substr(md5(CAST(id AS VARCHAR) || ':' || CAST(p AS VARCHAR)),
-        |                        CAST(i AS INT), 1)) - 1)
-        |              * CAST(16 ** (4 - i) AS BIGINT))) % 7 = 0)) AS flags
-        |  FROM t)
-        |SELECT id AS doc_id, CAST(len(toks) AS BIGINT) AS n_tokens,
-        |       CAST(len(list_filter(flags, x -> x)) AS BIGINT) AS n_masked,
-        |       array_to_string(list_transform(generate_series(1, len(toks)), p ->
-        |         CASE WHEN flags[CAST(p AS INT)] THEN '[MASK]'
-        |              ELSE toks[CAST(p AS INT)] END), ' ') AS input_text,
-        |       coalesce(array_to_string(list_filter(
-        |         list_transform(generate_series(1, len(toks)), p ->
-        |           CASE WHEN flags[CAST(p AS INT)] THEN toks[CAST(p AS INT)] END),
-        |         x -> x IS NOT NULL), ' '), '') AS target_text
-        |FROM f ORDER BY id""".stripMargin,
-    // Every PSM string rebuilt from the same md5 cut-point arithmetic
-    // and re-hashed — byte-level agreement, not just lengths.
-    "objective_fim" -> {
-      def nib4(salt: Int): String =
-        s"""list_sum(list_transform(generate_series(1, 4), i ->
-           |           (strpos('0123456789abcdef',
-           |              substr(md5(CAST(id AS VARCHAR) || ':fim:$salt'),
-           |                     CAST(i AS INT), 1)) - 1)
-           |           * CAST(16 ** (4 - i) AS BIGINT)))""".stripMargin
-      s"""WITH t AS (
-         |  SELECT doc_id AS id, text, string_split(text, ' ') AS toks
-         |  FROM documents),
-         |h AS (
-         |  SELECT id, text, toks, CAST(len(toks) AS BIGINT) AS n,
-         |         CAST(${nib4(0)} AS BIGINT) AS h0,
-         |         CAST(${nib4(1)} AS BIGINT) AS h1,
-         |         CAST(${nib4(2)} AS BIGINT) AS h2
-         |  FROM t),
-         |c AS (SELECT *, (n >= 3 AND h0 % 2 = 0) AS applied, h1 % n AS a
-         |      FROM h),
-         |c2 AS (SELECT *, a + h2 % (n - a) AS b FROM c),
-         |p AS (
-         |  SELECT id, text, applied, n, a, b,
-         |         concat_ws(' ', '<PRE>',
-         |           COALESCE(array_to_string(toks[1:CAST(a AS INT)], ' '), ''),
-         |           '<SUF>',
-         |           COALESCE(array_to_string(
-         |             toks[CAST(b + 1 AS INT):CAST(n AS INT)], ' '), ''),
-         |           '<MID>',
-         |           COALESCE(array_to_string(
-         |             toks[CAST(a + 1 AS INT):CAST(b AS INT)], ' '), ''))
-         |           AS psm
-         |  FROM c2)
-         |SELECT id AS doc_id, applied AS fim_applied, n AS n_tokens,
-         |       CASE WHEN applied THEN a ELSE 0 END AS p_len,
-         |       CASE WHEN applied THEN b - a ELSE 0 END AS m_len,
-         |       CASE WHEN applied THEN n - b ELSE 0 END AS s_len,
-         |       md5(CASE WHEN applied THEN psm ELSE text END) AS out_md5
-         |FROM p ORDER BY doc_id""".stripMargin
-    },
-    // ICT pairs re-derived: same 8-token blocks, same md5(id:ict:k)
-    // choice arithmetic, list ops instead of array HOFs.
-    "ict_pairs" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks FROM documents
-        |  WHERE text IS NOT NULL),
-        |s AS (
-        |  SELECT doc_id,
-        |         unnest(generate_series(0,
-        |           CAST(ceil(len(toks) / 8.0) AS INT) - 1)) AS seg_idx,
-        |         toks
-        |  FROM t),
-        |g AS (
-        |  SELECT doc_id, seg_idx,
-        |         array_to_string(
-        |           toks[CAST(seg_idx*8+1 AS INT):CAST(seg_idx*8+8 AS INT)],
-        |           ' ') AS seg_text
-        |  FROM s),
-        |d AS (
-        |  SELECT doc_id, count(*) AS n_segments,
-        |         list(struct_pack(i := seg_idx, t := seg_text)
-        |              ORDER BY seg_idx) AS ss
-        |  FROM g GROUP BY 1 HAVING count(*) >= 2),
-        |h AS (
-        |  SELECT doc_id, n_segments, ss,
-        |    CAST(list_sum(list_transform(generate_series(1, 4), i ->
-        |      (strpos('0123456789abcdef',
-        |         substr(md5(CAST(doc_id AS VARCHAR) || ':ict:0'),
-        |                CAST(i AS INT), 1)) - 1)
-        |      * CAST(16 ** (4 - i) AS BIGINT))) % n_segments AS INT)
-        |      AS qpos,
-        |    (list_sum(list_transform(generate_series(1, 4), i ->
-        |      (strpos('0123456789abcdef',
-        |         substr(md5(CAST(doc_id AS VARCHAR) || ':ict:1'),
-        |                CAST(i AS INT), 1)) - 1)
-        |      * CAST(16 ** (4 - i) AS BIGINT))) % 10 = 0) AS keep
-        |  FROM d)
-        |SELECT doc_id, CAST(n_segments AS BIGINT) AS n_segments,
-        |       CAST(ss[qpos + 1].i AS BIGINT) AS query_idx,
-        |       keep AS kept_in_context,
-        |       ss[qpos + 1].t AS query_text,
-        |       array_to_string(list_transform(
-        |         list_filter(ss, x -> x.i != ss[qpos + 1].i OR keep),
-        |         x -> x.t), ' ') AS context_text
-        |FROM h ORDER BY doc_id""".stripMargin,
-    // BLEU-4 replayed: tagged n-gram unions, clipped sums, the same
-    // fixed-order transcendental combination.
-    "eval_bleu4" -> bleuOracle(4),
-    // chrF replayed: char n-gram unions, integral F-beta.
-    "eval_chrf" -> chrfOracle(6, 2),
-    "eval_chrfpp" -> chrfPpOracle(6, 2, 2),
-    "eval_cer" -> cerOracle,
-    "eval_wer" -> werOracle,
-    "eval_sentence_bleu" -> sentenceBleuOracle(4),
-    "eval_self_bleu" -> s"""SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-      |  round(CAST(sum(CAST(bleu AS DECIMAL(28,6))) AS DOUBLE) / count(*), 6)
-      |    AS self_bleu
-      |FROM (
-      |${sentenceBleuOracleOver(
-          """samp AS (
-            |  SELECT doc_id, text FROM documents
-            |  WHERE text IS NOT NULL
-            |  ORDER BY md5('graft:' || CAST(doc_id AS VARCHAR)), doc_id
-            |  LIMIT 250),
-            |pairs AS (
-            |  SELECT a.doc_id * 1000000 + b.doc_id AS doc_id,
-            |         a.text AS pred, b.text AS gold
-            |  FROM samp a JOIN samp b ON a.doc_id <> b.doc_id)""".stripMargin, 2)}
-      |)""".stripMargin,
-    "dedup_edit_join" ->
-      """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
-        |       CAST(levenshtein(a.c_name, b.c_name) AS BIGINT) AS dist
-        |FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
-        |WHERE levenshtein(a.c_name, b.c_name) <= 1""".stripMargin,
-    "eval_damerau" ->
-      """SELECT doc_id,
-        |  CAST(damerau_levenshtein(pred, gold) AS BIGINT) AS damerau_dist,
-        |  CAST(levenshtein(pred, gold) AS BIGINT) AS lev_dist
-        |FROM (SELECT doc_id, substr(text, 1, 64) AS gold,
-        |        substr(text, 2, 1) || substr(text, 1, 1) ||
-        |        substr(text, 3, 62) AS pred
-        |      FROM documents
-        |      WHERE text IS NOT NULL AND length(text) >= 4)""".stripMargin,
-    "corpus_heavy_hitters" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS token
-        |  FROM documents WHERE text IS NOT NULL),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM toks),
-        |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt
-        |      FROM toks GROUP BY token)
-        |SELECT token, cnt FROM c, tot WHERE 1000 * cnt >= 1 * n""".stripMargin,
-    // Token-F1 replayed: per-side multiset counts, least() overlap.
-    "eval_token_f1" -> genEvalOracle(1),
-    // ROUGE-2: the same replay over bigram units.
-    "eval_rouge2" -> genEvalOracle(2),
-    "eval_distinct_n" -> ((1 to 4).map { n =>
-      s"""SELECT CAST($n AS BIGINT) AS n,
-         |       CAST(count(*) AS BIGINT) AS n_total,
-         |       CAST(count(DISTINCT g) AS BIGINT) AS n_distinct,
-         |       CAST(CASE WHEN count(*) > 0
-         |            THEN (1000000 * count(DISTINCT g)) // count(*)
-         |            ELSE 0 END AS BIGINT) AS distinct_micro
-         |FROM (
-         |  SELECT unnest(list_transform(
-         |           generate_series(1, len(toks) - ${n - 1}),
-         |           i -> array_to_string(toks[CAST(i AS INT):CAST(i + $n - 1 AS INT)], ' '))) AS g
-         |  FROM (SELECT string_split(text, ' ') AS toks
-         |        FROM documents WHERE text IS NOT NULL))""".stripMargin
-    }.mkString("\nUNION ALL\n") + "\nORDER BY n"),
-    // Unigram vocab replayed: two chained unnests for the n-grams,
-    // the same 6-dp log-prob scores.
-    "unigram_vocab" -> (unigramVocabCtes +
-      "\nSELECT piece, CAST(cnt AS BIGINT) AS cnt, score_micro " +
-      "FROM voc ORDER BY piece"),
-    // The packed-BIGINT Viterbi replayed as 16 chained CTEs.
-    "unigram_segment" -> unigramSegmentOracle(4, 16),
-    // The backtrace replayed: 16 more CTEs walking p → p − l*(p).
-    "unigram_refit" -> unigramRefitOracle(4, 16),
-    // DSIR weights re-derived: same md5-nibble buckets, same
-    // 6-dp-rounded log10 deltas in DECIMAL(28,6), same n·offset
-    // normalizer — bit-for-bit.
-    "dsir_weights" -> (dsirCtes +
-      "\nSELECT doc_id, n_ngrams, logweight FROM wgt ORDER BY doc_id"),
-    // Same derivation, top-50 by (logweight desc, id).
-    "dsir_select" -> (dsirCtes +
-      "\nSELECT doc_id, n_ngrams, logweight FROM wgt " +
-      "ORDER BY logweight DESC, doc_id LIMIT 50"),
-    // Preference pairs re-derived via arg_max/arg_min over the same
-    // total ranking key (score·2^20 + id mod 2^20) — exact integers,
-    // so the tie-break contract is checked, not just the values.
-    "dpo_pairs" ->
-      """WITH cands AS (
-        |  SELECT doc_id // 4 AS prompt_id, doc_id AS cand_id,
-        |         substr(text, 1, 64) AS resp,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS score
-        |  FROM documents),
-        |keyed AS (
-        |  SELECT *, score * 1048576 + cand_id % 1048576 AS k FROM cands)
-        |SELECT prompt_id,
-        |       arg_max(cand_id, k) AS chosen_id, arg_max(resp, k) AS chosen,
-        |       arg_min(cand_id, k) AS rejected_id, arg_min(resp, k) AS rejected,
-        |       CAST(max(score) - min(score) AS BIGINT) AS margin,
-        |       count(*) AS n_cands
-        |FROM keyed GROUP BY prompt_id
-        |HAVING max(score) - min(score) > 0
-        |ORDER BY prompt_id""".stripMargin,
-    // The full rescan the incremental merge replaces: cnt/sum/sumsq/
-    // min/max per lang plus mean as one final division.
-    "stats_incremental" ->
-      """SELECT lang, count(*) AS cnt,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_v,
-        |       CAST(CAST(sum(CAST(n_chars AS HUGEINT) * n_chars)
-        |                 AS DECIMAL(38,0)) AS VARCHAR) AS sumsq_v,
-        |       min(n_chars) AS min_v, max(n_chars) AS max_v,
-        |       round(CAST(sum(n_chars) AS DOUBLE) / count(*), 6) AS mean_v
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    // Same ranking CTE as retrieval_bm25; the relevance rule and all
-    // metrics re-derived from integers and single divisions.
-    "retrieval_eval" ->
-      s"""$bm25Ctes,
-         |ranked AS (
-         |  SELECT doc_id, rnk FROM (
-         |    SELECT doc_id,
-         |           CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-         |             AS rnk
-         |    FROM bm25) WHERE rnk <= 10),
-         |rel AS (
-         |  SELECT doc_id,
-         |         (list_contains(string_split(text, ' '), 'dup') AND
-         |          list_contains(string_split(text, ' '), 'hash') AND
-         |          list_contains(string_split(text, ' '), 'merge')) AS rel
-         |  FROM documents),
-         |agg AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS n_results,
-         |         CAST(sum(CASE WHEN rel THEN 1 ELSE 0 END) AS BIGINT) AS n_rel_top10,
-         |         CAST(sum(CASE WHEN rel AND rnk <= 5 THEN 1 ELSE 0 END) AS BIGINT)
-         |           AS n_rel_top5,
-         |         CAST(min(CASE WHEN rel THEN rnk END) AS BIGINT) AS first_rel_rank
-         |  FROM ranked JOIN rel USING (doc_id)),
-         |tot AS (
-         |  SELECT CAST(sum(CASE WHEN rel THEN 1 ELSE 0 END) AS BIGINT)
-         |           AS n_rel_corpus
-         |  FROM rel)
-         |SELECT a.n_results, a.n_rel_top10, a.n_rel_top5, a.first_rel_rank,
-         |       t.n_rel_corpus,
-         |       coalesce(1.0e0 / CAST(a.first_rel_rank AS DOUBLE), 0.0e0) AS mrr,
-         |       CAST(a.n_rel_top5 AS DOUBLE) / 5.0e0 AS p_at_5,
-         |       CAST(a.n_rel_top10 AS DOUBLE) / CAST(t.n_rel_corpus AS DOUBLE)
-         |         AS recall_at_10
-         |FROM agg a, tot t""".stripMargin,
-    "retrieval_ndcg" -> {
-      val gains = graft.operators.Retrieval.DcgGainMicro
-        .mkString("[", ", ", "]")
-      val prefix = graft.operators.Retrieval.DcgPrefixMicro
-        .mkString("[", ", ", "]")
-      s"""$bm25Ctes,
-         |ranked AS (
-         |  SELECT doc_id, rnk FROM (
-         |    SELECT doc_id,
-         |           CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT)
-         |             AS rnk
-         |    FROM bm25) WHERE rnk <= 10),
-         |rel AS (
-         |  SELECT doc_id,
-         |         (list_contains(string_split(text, ' '), 'dup') AND
-         |          list_contains(string_split(text, ' '), 'hash') AND
-         |          list_contains(string_split(text, ' '), 'merge')) AS rel
-         |  FROM documents),
-         |tot AS (
-         |  SELECT CAST(sum(CASE WHEN rel THEN 1 ELSE 0 END) AS BIGINT)
-         |           AS n_rel_corpus
-         |  FROM rel),
-         |d AS (
-         |  SELECT CAST(coalesce(sum(CASE WHEN rel AND rnk <= 10
-         |                                THEN ($gains)[CAST(rnk AS INT)]
-         |                                ELSE 0 END), 0) AS BIGINT) AS dcg_micro
-         |  FROM ranked JOIN rel USING (doc_id)),
-         |i AS (
-         |  SELECT n_rel_corpus,
-         |         CASE WHEN n_rel_corpus > 0
-         |              THEN ($prefix)[CAST(least(n_rel_corpus, 10) AS INT)]
-         |              ELSE 0 END AS idcg_micro
-         |  FROM tot)
-         |SELECT i.n_rel_corpus, d.dcg_micro,
-         |       CAST(i.idcg_micro AS BIGINT) AS idcg_micro,
-         |       CAST(CASE WHEN i.idcg_micro > 0
-         |                 THEN (1000 * d.dcg_micro) // i.idcg_micro
-         |                 ELSE 0 END AS BIGINT) AS ndcg_milli
-         |FROM d, i""".stripMargin
-    },
-    "tpch_q13_custdist" ->
-      """SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-        |FROM (
-        |  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-        |  FROM customer c LEFT OUTER JOIN orders o
-        |    ON c.c_custkey = o.o_custkey
-        |  GROUP BY c.c_custkey)
-        |GROUP BY c_count
-        |ORDER BY custdist DESC, c_count DESC""".stripMargin,
-    "skew_diagnostics" ->
-      """WITH freq AS (
-        |  SELECT o_custkey AS key, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM orders GROUP BY 1),
-        |top AS (SELECT key, cnt FROM freq ORDER BY cnt DESC, key LIMIT 10)
-        |SELECT (SELECT CAST(count(*) AS BIGINT) FROM freq) AS n_keys,
-        |       (SELECT CAST(sum(cnt) AS BIGINT) FROM freq) AS n_rows,
-        |       (SELECT CAST(max(cnt) AS BIGINT) FROM freq) AS max_freq,
-        |       (SELECT CAST(max(cnt) AS DOUBLE) * CAST(count(*) AS DOUBLE) /
-        |               CAST(sum(cnt) AS DOUBLE) FROM freq) AS skew_ratio,
-        |       (SELECT string_agg(CAST(key AS VARCHAR), ','
-        |                          ORDER BY cnt DESC, key) FROM top) AS top_keys""".stripMargin,
-    // Rolling window re-derived with the identical RANGE frame over
-    // epoch-day numbers.
-    "events_rolling_7d" ->
-      """WITH daily AS (
-        |  SELECT user_id, date_trunc('day', ts) AS day,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         date_diff('day', DATE '1970-01-01', CAST(date_trunc('day', ts) AS DATE))
-        |           AS day_num
-        |  FROM events GROUP BY 1, 2)
-        |SELECT user_id, day, n,
-        |       CAST(sum(n) OVER (PARTITION BY user_id ORDER BY day_num
-        |                         RANGE BETWEEN 6 PRECEDING AND CURRENT ROW)
-        |            AS BIGINT) AS n_7d
-        |FROM daily ORDER BY user_id, day""".stripMargin,
-    // Winsorize fences from the same exact percentile definition;
-    // clamp counts are integer comparisons against identical doubles.
-    "events_winsorize" ->
-      """WITH f AS (
-        |  SELECT event_type, quantile_cont(value, 0.01) AS lo,
-        |         quantile_cont(value, 0.99) AS hi
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_type, round(max(f.lo), 6) AS lo, round(max(f.hi), 6) AS hi,
-        |       CAST(sum(CASE WHEN e.value < f.lo THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_below,
-        |       CAST(sum(CASE WHEN e.value > f.hi THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_above,
-        |       CAST(count(*) AS BIGINT) AS n
-        |FROM events e JOIN f ON f.event_type = e.event_type
-        |GROUP BY e.event_type ORDER BY e.event_type""".stripMargin,
-    // The same modified-z rule over identical median/MAD doubles.
-    "events_outliers" ->
-      """WITH med AS (
-        |  SELECT event_type, quantile_cont(value, 0.5) AS med
-        |  FROM events GROUP BY 1),
-        |mad AS (
-        |  SELECT e.event_type, max(m.med) AS median,
-        |         quantile_cont(abs(e.value - m.med), 0.5) AS mad
-        |  FROM events e JOIN med m ON m.event_type = e.event_type
-        |  GROUP BY e.event_type)
-        |SELECT e.event_id, e.event_type, round(e.value, 6) AS value,
-        |       round(s.median, 6) AS median, round(s.mad, 6) AS mad
-        |FROM events e JOIN mad s ON s.event_type = e.event_type
-        |WHERE abs(e.value - s.median) > 3.5 * s.mad
-        |ORDER BY e.event_id""".stripMargin,
-    // Median + MAD from the same exact interpolated percentile
-    // definition as the quantile rows; round(6) on both sides.
-    "events_mad" ->
-      """WITH med AS (
-        |  SELECT event_type, quantile_cont(value, 0.5) AS med
-        |  FROM events GROUP BY event_type)
-        |SELECT e.event_type,
-        |       round(max(m.med), 6) AS median,
-        |       round(quantile_cont(abs(e.value - m.med), 0.5), 6) AS mad
-        |FROM events e JOIN med m ON m.event_type = e.event_type
-        |GROUP BY e.event_type
-        |ORDER BY e.event_type""".stripMargin,
-    // Batched KNN re-ranked with a window over the exact scored cross;
-    // same rounded cosine, same (score DESC, id) order.
-    "knn_topk_batch" ->
-      """WITH q AS (
-        |  SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id < 8),
-        |scored AS (
-        |  SELECT q.query_id, e.vec_id AS id,
-        |         round(list_inner_product(CAST(e.embedding AS DOUBLE[]), q.qv) /
-        |               (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]),
-        |                                        CAST(e.embedding AS DOUBLE[]))) *
-        |                sqrt(list_inner_product(q.qv, q.qv))), 6) AS score
-        |  FROM embeddings e, q),
-        |ranked AS (
-        |  SELECT query_id, id, score,
-        |         row_number() OVER (PARTITION BY query_id
-        |                            ORDER BY score DESC, id) AS rank
-        |  FROM scored)
-        |SELECT query_id, CAST(rank AS BIGINT) AS rank, id, score
-        |FROM ranked WHERE rank <= 4
-        |ORDER BY query_id, rank""".stripMargin,
-    "ann_matryoshka_topk" ->
-      """WITH q AS (
-        |  SELECT CAST(embedding[1:16] AS DOUBLE[]) AS qv
-        |  FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding[1:16] AS DOUBLE[]), q.qv) /
-        |             (sqrt(list_inner_product(CAST(e.embedding[1:16] AS DOUBLE[]),
-        |                                      CAST(e.embedding[1:16] AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(q.qv, q.qv))), 6) AS score
-        |FROM embeddings e, q
-        |ORDER BY score DESC, id LIMIT 4""".stripMargin,
-    // The funnel re-derived step by step with the same strictly-after
-    // semantics; scalar-subquery counts per step.
-    "events_funnel" ->
-      """WITH s1 AS (
-        |  SELECT user_id, min(ts) AS t FROM events
-        |  WHERE event_type = 'signup' GROUP BY 1),
-        |s2 AS (
-        |  SELECT e.user_id, min(e.ts) AS t
-        |  FROM events e JOIN s1 ON s1.user_id = e.user_id
-        |  WHERE e.event_type = 'view' AND e.ts > s1.t GROUP BY 1),
-        |s3 AS (
-        |  SELECT e.user_id, min(e.ts) AS t
-        |  FROM events e JOIN s2 ON s2.user_id = e.user_id
-        |  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1)
-        |SELECT * FROM (
-        |  SELECT 1 AS step_idx, 'signup' AS step,
-        |         (SELECT CAST(count(*) AS BIGINT) FROM s1) AS n_users
-        |  UNION ALL SELECT 2, 'view', (SELECT CAST(count(*) AS BIGINT) FROM s2)
-        |  UNION ALL SELECT 3, 'purchase', (SELECT CAST(count(*) AS BIGINT) FROM s3))
-        |ORDER BY step_idx""".stripMargin,
-    // The fixture's check digit is correct iff doc_id % 3 = 0, so the
-    // oracle states the verdict from the construction — Spark's Luhn
-    // arithmetic must reach the same booleans on its own.
-    "pii_luhn" ->
-      """WITH f AS (
-        |  SELECT doc_id,
-        |         lpad(CAST(doc_id * 7919 % 1000000000000000 AS VARCHAR), 15, '0')
-        |           AS b
-        |  FROM documents),
-        |s AS (
-        |  SELECT doc_id, b,
-        |         list_sum(list_transform(generate_series(1, 15), j ->
-        |           CASE WHEN j % 2 = 1 THEN
-        |             CASE WHEN 2 * (ascii(substr(reverse(b), CAST(j AS INT), 1)) - 48) > 9
-        |                  THEN 2 * (ascii(substr(reverse(b), CAST(j AS INT), 1)) - 48) - 9
-        |                  ELSE 2 * (ascii(substr(reverse(b), CAST(j AS INT), 1)) - 48) END
-        |           ELSE ascii(substr(reverse(b), CAST(j AS INT), 1)) - 48 END)) AS s15
-        |  FROM f)
-        |SELECT doc_id,
-        |       b || CAST(((10 - s15 % 10) % 10 +
-        |                  CASE WHEN doc_id % 3 = 0 THEN 0 ELSE 5 END) % 10
-        |                 AS VARCHAR) AS candidate,
-        |       (doc_id % 3 = 0) AS luhn_valid
-        |FROM s ORDER BY doc_id""".stripMargin,
-    "code_clone_groups" ->
-      """WITH g AS (
-        |  SELECT doc_id % 4 AS t, CAST(count(*) AS BIGINT) AS n_clones,
-        |         min(doc_id) AS clone_rep
-        |  FROM documents GROUP BY 1)
-        |SELECT d.doc_id, g.clone_rep, g.n_clones
-        |FROM documents d JOIN g ON d.doc_id % 4 = g.t
-        |ORDER BY d.doc_id""".stripMargin,
-    "pii_span_merge" ->
-      """WITH base AS (
-        |  SELECT doc_id, (doc_id * 7) % 50 AS a, doc_id % 4 AS k
-        |  FROM documents),
-        |sp AS (
-        |  SELECT doc_id, a AS s, a + 5 AS e FROM base
-        |  UNION ALL
-        |  SELECT doc_id, a + 3 + k, a + 9 + k FROM base
-        |  UNION ALL
-        |  SELECT doc_id, a + 20, a + 24 FROM base),
-        |g AS (
-        |  SELECT doc_id, s, e,
-        |         CASE WHEN max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |              IS NULL
-        |           OR s > max(e) OVER (PARTITION BY doc_id ORDER BY s, e
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |         THEN 1 ELSE 0 END AS nw
-        |  FROM sp),
-        |g2 AS (
-        |  SELECT doc_id, s, e,
-        |         sum(nw) OVER (PARTITION BY doc_id ORDER BY s, e) AS grp
-        |  FROM g),
-        |m AS (
-        |  SELECT doc_id, grp, min(s) AS ms, max(e) AS me
-        |  FROM g2 GROUP BY 1, 2)
-        |SELECT doc_id, CAST(3 AS BIGINT) AS n_raw,
-        |       CAST(count(*) AS BIGINT) AS n_merged,
-        |       CAST(sum(me - ms) AS BIGINT) AS covered_chars
-        |FROM m GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "pii_iban" ->
-      """WITH cand AS (
-        |  SELECT doc_id,
-        |         'DE' || lpad(CAST(doc_id % 100 AS VARCHAR), 2, '0') ||
-        |         lpad(CAST(doc_id * 7919 % 100000000000 AS VARCHAR), 11, '0')
-        |           AS candidate
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, candidate,
-        |         substr(candidate, 5) || substr(candidate, 1, 4) AS re
-        |  FROM cand)
-        |SELECT doc_id, candidate,
-        |       list_reduce(
-        |         list_prepend(CAST(0 AS BIGINT),
-        |           list_transform(range(1, length(re) + 1),
-        |             i -> CAST(CASE WHEN ascii(substr(re, CAST(i AS INT), 1)) >= 65
-        |                       THEN 65536 + ascii(substr(re, CAST(i AS INT), 1)) - 55
-        |                       ELSE ascii(substr(re, CAST(i AS INT), 1)) - 48 END
-        |                       AS BIGINT))),
-        |         (acc, x) -> (acc * (CASE WHEN x >= 65536 THEN 100 ELSE 10 END)
-        |                      + x % 65536) % 97) = 1 AS iban_valid
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "corpus_curation" ->
-      """WITH qual AS (
-        |  SELECT doc_id, round((c1 + c2 + c3 + c4) / 4.0, 6) AS quality
-        |  FROM (
-        |    SELECT doc_id,
-        |           CASE WHEN n_tokens >= 20 AND n_tokens <= 100000 THEN 1 ELSE 0 END AS c1,
-        |           CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1 ELSE 0 END AS c2,
-        |           CASE WHEN stopword_ratio >= 0.01 THEN 1 ELSE 0 END AS c3,
-        |           CASE WHEN punct_ratio <= 0.2 THEN 1 ELSE 0 END AS c4
-        |    FROM (
-        |      SELECT doc_id,
-        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |             CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-        |               / len(string_split(text, ' ')) AS mean_word_len,
-        |             CAST(len(list_filter(string_split(text, ' '),
-        |                  t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-        |               / len(string_split(text, ' ')) AS stopword_ratio,
-        |             CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-        |               / length(text) AS punct_ratio
-        |      FROM documents))
-        |  WHERE (c1 + c2 + c3 + c4) / 4.0 >= 0.75),
-        |qualified AS (
-        |  SELECT d.doc_id, d.text, d.lang, q.quality
-        |  FROM documents d JOIN qual q USING (doc_id)),
-        |exact AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY md5(lower(text)) ORDER BY doc_id) AS rn
-        |    FROM qualified)
-        |  WHERE rn = 1),
-        |losers AS (
-        |  SELECT DISTINCT b_id AS doc_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |           round(CAST(len(list_intersect(list_distinct(string_split(a.text, ' ')),
-        |                                          list_distinct(string_split(b.text, ' ')))) AS DOUBLE) /
-        |                 len(list_distinct(list_cat(list_distinct(string_split(a.text, ' ')),
-        |                                            list_distinct(string_split(b.text, ' '))))), 6) AS j
-        |    FROM exact a JOIN exact b
-        |      ON substr(a.text, 1, 16) = substr(b.text, 1, 16) AND a.doc_id < b.doc_id)
-        |  WHERE j >= 0.5)
-        |SELECT e.doc_id, e.lang, e.quality
-        |FROM exact e
-        |WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)
-        |ORDER BY e.doc_id""".stripMargin,
-    "corpus_to_batches" ->
-      """WITH qual AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id,
-        |           CASE WHEN n_tokens >= 20 AND n_tokens <= 100000 THEN 1 ELSE 0 END +
-        |           CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1 ELSE 0 END +
-        |           CASE WHEN stopword_ratio >= 0.01 THEN 1 ELSE 0 END +
-        |           CASE WHEN punct_ratio <= 0.2 THEN 1 ELSE 0 END AS passed
-        |    FROM (
-        |      SELECT doc_id,
-        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |             CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-        |               / len(string_split(text, ' ')) AS mean_word_len,
-        |             CAST(len(list_filter(string_split(text, ' '),
-        |                  t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-        |               / len(string_split(text, ' ')) AS stopword_ratio,
-        |             CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-        |               / length(text) AS punct_ratio
-        |      FROM documents))
-        |  WHERE passed / 4.0 >= 0.75),
-        |qualified AS (
-        |  SELECT d.doc_id, d.text, d.source FROM documents d JOIN qual USING (doc_id)),
-        |exact AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY md5(lower(text)) ORDER BY doc_id) AS rn
-        |    FROM qualified)
-        |  WHERE rn = 1),
-        |losers AS (
-        |  SELECT DISTINCT b_id AS doc_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |           round(CAST(len(list_intersect(list_distinct(string_split(a.text, ' ')),
-        |                                          list_distinct(string_split(b.text, ' ')))) AS DOUBLE) /
-        |                 len(list_distinct(list_cat(list_distinct(string_split(a.text, ' ')),
-        |                                            list_distinct(string_split(b.text, ' '))))), 6) AS j
-        |    FROM exact a JOIN exact b
-        |      ON substr(a.text, 1, 16) = substr(b.text, 1, 16) AND a.doc_id < b.doc_id)
-        |  WHERE j >= 0.5),
-        |kept AS (
-        |  SELECT e.doc_id, e.source, e.text FROM exact e
-        |  WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)),
-        |train AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM kept
-        |  WHERE CAST(list_sum(list_transform(generate_series(1, 4),
-        |          i -> (strpos('0123456789abcdef',
-        |                       substr(md5(CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |               * CAST(16 ** (4 - i) AS BIGINT))) % 100 AS BIGINT) < 80),
-        |o AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |              - n_tokens AS BIGINT) AS stream_offset
-        |  FROM train)
-        |SELECT doc_id, source, n_tokens, stream_offset,
-        |       CAST(stream_offset // 256 AS BIGINT) AS pack_id,
-        |       CAST(stream_offset % 256 AS BIGINT) AS pack_offset
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "corpus_datacard" ->
-      """SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(DISTINCT md5(lower(text))) AS BIGINT) AS n_distinct_texts,
-        |       CAST(count(*) - count(DISTINCT md5(lower(text))) AS BIGINT)
-        |         AS exact_dup_docs,
-        |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-        |       round(avg(len(string_split(text, ' '))), 4) AS avg_tokens,
-        |       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-        |       CAST(count(DISTINCT source) AS BIGINT) AS n_sources
-        |FROM documents""".stripMargin,
-    "text_stats" ->
-      """SELECT doc_id, CAST(length(text) AS BIGINT) AS len_chars,
-        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |       CAST(len(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct,
-        |       round(CAST(len(list_distinct(string_split(text, ' '))) AS DOUBLE) /
-        |             len(string_split(text, ' ')), 6) AS ttr,
-        |       round(CAST(len(list_filter(string_split(text, ' '),
-        |                 t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE) /
-        |             len(string_split(text, ' ')), 6) AS stopword_ratio
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "token_counts" ->
-      """SELECT doc_id,
-        |       CAST(len(regexp_extract_all(text, '[a-z]+')) AS BIGINT) AS n_alpha,
-        |       CAST(len(regexp_extract_all(text, '[0-9]+')) AS BIGINT) AS n_num,
-        |       CAST(len(string_split(text, ' ')) AS BIGINT) AS n_ws
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "lang_id" ->
-      """SELECT doc_id, en_hits, de_hits, fr_hits, es_hits,
-        |       CASE WHEN en_hits >= de_hits AND en_hits >= fr_hits AND en_hits >= es_hits THEN 'en'
-        |            WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
-        |            WHEN fr_hits >= es_hits THEN 'fr'
-        |            ELSE 'es' END AS lang_pred
-        |FROM (
-        |  SELECT doc_id,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('the', 'a', 'and', 'of'))) AS BIGINT) AS en_hits,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('der', 'die', 'das', 'und'))) AS BIGINT) AS de_hits,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('le', 'la', 'les', 'et'))) AS BIGINT) AS fr_hits,
-        |    CAST(len(list_filter(string_split(text, ' '), t -> t IN ('el', 'los', 'las', 'y'))) AS BIGINT) AS es_hits
-        |  FROM documents)
-        |ORDER BY doc_id""".stripMargin,
-    "lang_stats" ->
-      """SELECT lang, count(*) AS n_docs,
-        |       CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS total_tokens,
-        |       round(avg(length(text)), 4) AS avg_chars
-        |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,
-    "doc_fingerprint" ->
-      "SELECT doc_id, md5(lower(text)) AS fp FROM documents ORDER BY doc_id",
-    // PQ with the fixed codebook: per subspace j the encode-side
-    // distance list (vs the stored embedding) picks the code via
-    // first-minimum argmin, then the query-side lut value for that
-    // code accumulates — all sequential double arithmetic mirroring
-    // VectorKernels.pqEncode/pqAdcScore op for op. The single-element
-    // list_transform is a `let` binding for the distance list.
-    "pq_adc_fixed" ->
-      """WITH qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0)
-        |SELECT e.vec_id AS id,
-        |  round(list_sum(list_transform(generate_series(0, 7), j ->
-        |    list_transform(
-        |      [list_transform(generate_series(0, 3), c ->
-        |         list_sum(list_transform(generate_series(0, 7), t ->
-        |           (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |            CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |           (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |            CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))],
-        |      dl ->
-        |        list_transform(generate_series(0, 3), c ->
-        |          list_sum(list_transform(generate_series(0, 7), t ->
-        |            (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |             CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |            (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |             CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))
-        |        [list_position(dl, list_min(dl))]
-        |    )[1])), 6) AS adc
-        |FROM embeddings e, qv
-        |ORDER BY id""".stripMargin,
-    // Identical ADC pipeline → top-64 (adc, id) cut → exact cosine
-    // re-rank, replayed stage for stage.
-    "ann_adc_rerank" ->
-      """WITH qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0),
-        |adc AS (
-        |  SELECT e.vec_id AS id,
-        |    round(list_sum(list_transform(generate_series(0, 7), j ->
-        |      list_transform(
-        |        [list_transform(generate_series(0, 3), c ->
-        |           list_sum(list_transform(generate_series(0, 7), t ->
-        |             (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |              CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |             (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |              CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))],
-        |        dl ->
-        |          list_transform(generate_series(0, 3), c ->
-        |            list_sum(list_transform(generate_series(0, 7), t ->
-        |              (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |               CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |              (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |               CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))
-        |          [list_position(dl, list_min(dl))]
-        |      )[1])), 6) AS adc
-        |  FROM embeddings e, qv),
-        |cand AS (SELECT id FROM adc ORDER BY adc, id LIMIT 64)
-        |SELECT e.vec_id AS id,
-        |       round(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(qv.q AS DOUBLE[])) /
-        |             (sqrt(list_inner_product(CAST(e.embedding AS DOUBLE[]), CAST(e.embedding AS DOUBLE[]))) *
-        |              sqrt(list_inner_product(CAST(qv.q AS DOUBLE[]), CAST(qv.q AS DOUBLE[])))), 6) AS score
-        |FROM embeddings e JOIN cand ON e.vec_id = cand.id, qv
-        |ORDER BY score DESC, id LIMIT 10""".stripMargin,
-    "dedup_incremental" ->
-      """SELECT b.doc_id, b.lang, b.source
-        |FROM documents b
-        |WHERE b.doc_id >= 250 AND NOT EXISTS (
-        |  SELECT 1 FROM documents o
-        |  WHERE o.doc_id < 250 AND md5(lower(o.text)) = md5(lower(b.text)))
-        |ORDER BY b.doc_id""".stripMargin,
-    // The streamed gate's sink must equal the batch anti-join exactly.
-    "dedup_incremental_streamed" ->
-      """SELECT b.doc_id, b.lang, b.source
-        |FROM documents b
-        |WHERE b.doc_id >= 250 AND NOT EXISTS (
-        |  SELECT 1 FROM documents o
-        |  WHERE o.doc_id < 250 AND md5(lower(o.text)) = md5(lower(b.text)))
-        |ORDER BY b.doc_id""".stripMargin,
-    // md5-bucket split recomputed hex-nibble by hex-nibble (strpos
-    // into the hex alphabet), so the whole assignment function — hash,
-    // bucket, cut points — is externally verified per row.
-    "dataset_split" ->
-      (s"""WITH b AS (
-        |  SELECT doc_id, lang, ${md5BucketSql("doc_id")} AS bucket
-        |  FROM documents)
-        |SELECT doc_id, lang, bucket,
-        |       CASE WHEN bucket < 80 THEN 'train'
-        |            WHEN bucket < 90 THEN 'val'
-        |            ELSE 'test' END AS split
-        |FROM b ORDER BY doc_id""".stripMargin),
-    // Leakage card: the exact-join MinHash pair replay (recall 1 at
-    // the fixture knobs) cross-tagged with the md5-bucket splits.
-    "split_leakage" ->
-      (s"WITH $shingleCtes,\n$minhashPairsCte," + s"""
-        |sp AS (
-        |  SELECT doc_id, ${md5BucketSql("doc_id")} AS bucket
-        |  FROM documents),
-        |spl AS (
-        |  SELECT doc_id, CASE WHEN bucket < 80 THEN 'train'
-        |                      WHEN bucket < 90 THEN 'val'
-        |                      ELSE 'test' END AS split
-        |  FROM sp)
-        |SELECT sa.split AS split_a, sb.split AS split_b,
-        |       CAST(count(*) AS BIGINT) AS n_pairs,
-        |       sa.split <> sb.split AS leaked
-        |FROM mh_pairs p
-        |JOIN spl sa ON p.a_id = sa.doc_id
-        |JOIN spl sb ON p.b_id = sb.doc_id
-        |GROUP BY 1, 2, 4 ORDER BY split_a, split_b""".stripMargin),
-    "stratified_sample" ->
-      (s"""WITH b AS (
-        |  SELECT doc_id, source, ${md5BucketSql("doc_id")} AS bucket
-        |  FROM documents)
-        |SELECT doc_id, source, bucket
-        |FROM b JOIN (VALUES ('src0', 100), ('src1', 50), ('src2', 25), ('src3', 10))
-        |            r(source, pct) USING (source)
-        |WHERE bucket < pct
-        |ORDER BY doc_id""".stripMargin),
-    // The corpus_to_batches funnel stages (qual/exact/losers/kept) +
-    // the mixture CTEs computed over the curated survivors + the
-    // packing window, replayed end to end.
-    "recipe_to_batches" ->
-      """WITH qual AS (
-        |  SELECT doc_id FROM (
-        |    SELECT doc_id,
-        |           CASE WHEN n_tokens >= 20 AND n_tokens <= 100000 THEN 1 ELSE 0 END +
-        |           CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1 ELSE 0 END +
-        |           CASE WHEN stopword_ratio >= 0.01 THEN 1 ELSE 0 END +
-        |           CASE WHEN punct_ratio <= 0.2 THEN 1 ELSE 0 END AS passed
-        |    FROM (
-        |      SELECT doc_id,
-        |             CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |             CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-        |               / len(string_split(text, ' ')) AS mean_word_len,
-        |             CAST(len(list_filter(string_split(text, ' '),
-        |                  t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-        |               / len(string_split(text, ' ')) AS stopword_ratio,
-        |             CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-        |               / length(text) AS punct_ratio
-        |      FROM documents))
-        |  WHERE passed / 4.0 >= 0.75),
-        |qualified AS (
-        |  SELECT d.doc_id, d.text, d.source FROM documents d JOIN qual USING (doc_id)),
-        |exact AS (
-        |  SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY md5(lower(text)) ORDER BY doc_id) AS rn
-        |    FROM qualified)
-        |  WHERE rn = 1),
-        |losers AS (
-        |  SELECT DISTINCT b_id AS doc_id FROM (
-        |    SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-        |           round(CAST(len(list_intersect(list_distinct(string_split(a.text, ' ')),
-        |                                          list_distinct(string_split(b.text, ' ')))) AS DOUBLE) /
-        |                 len(list_distinct(list_cat(list_distinct(string_split(a.text, ' ')),
-        |                                            list_distinct(string_split(b.text, ' '))))), 6) AS j
-        |    FROM exact a JOIN exact b
-        |      ON substr(a.text, 1, 16) = substr(b.text, 1, 16) AND a.doc_id < b.doc_id)
-        |  WHERE j >= 0.5),
-        |kept AS (
-        |  SELECT e.doc_id, e.source,
-        |         CAST(len(string_split(e.text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM exact e
-        |  WHERE NOT EXISTS (SELECT 1 FROM losers l WHERE l.doc_id = e.doc_id)),
-        |per AS (
-        |  SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens
-        |  FROM kept GROUP BY source),
-        |tot AS (
-        |  SELECT sum(sqrt(t_tokens)) AS z,
-        |         CAST(sum(t_tokens) AS BIGINT) AS t_total FROM per),
-        |plan AS (
-        |  SELECT source, t_tokens,
-        |         CAST(floor(floor(t_total * 0.6) * round(sqrt(t_tokens) / z, 4))
-        |              AS BIGINT) AS token_budget
-        |  FROM per, tot),
-        |samp AS (
-        |  SELECT k.doc_id, k.source, k.n_tokens
-        |  FROM kept k JOIN plan USING (source)
-        |  WHERE CAST(list_sum(list_transform(generate_series(1, 6),
-        |          i -> (strpos('0123456789abcdef',
-        |                       substr(md5(CAST(k.doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |               * CAST(16 ** (6 - i) AS BIGINT))) AS BIGINT) * t_tokens
-        |        < token_budget * CAST(16777216 AS BIGINT)),
-        |o AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |              - n_tokens AS BIGINT) AS stream_offset
-        |  FROM samp)
-        |SELECT doc_id, source, n_tokens, stream_offset,
-        |       CAST(stream_offset // 256 AS BIGINT) AS pack_id,
-        |       CAST(stream_offset % 256 AS BIGINT) AS pack_offset
-        |FROM o ORDER BY doc_id""".stripMargin,
-    // Temperature mixture: per-source token mass → sqrt weights rounded
-    // to 4 decimals → integer token budgets → integer bucket-vs-budget
-    // verdict per row. Shares every numeric step with the Spark side
-    // (sqrt is IEEE correctly-rounded; the only float, the weight, is
-    // rounded before any budget is derived; the row filter is pure
-    // BIGINT arithmetic).
-    "mixture_plan" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |per AS (
-        |  SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens
-        |  FROM d GROUP BY source),
-        |tot AS (
-        |  SELECT sum(sqrt(t_tokens)) AS z,
-        |         CAST(sum(t_tokens) AS BIGINT) AS t_total FROM per),
-        |plan AS (
-        |  SELECT source, t_tokens,
-        |         round(sqrt(t_tokens) / z, 4) AS weight,
-        |         CAST(floor(floor(t_total * 0.5) * round(sqrt(t_tokens) / z, 4))
-        |              AS BIGINT) AS token_budget
-        |  FROM per, tot),
-        |kept AS (
-        |  SELECT d.source, count(*) AS n_kept,
-        |         CAST(sum(n_tokens) AS BIGINT) AS kept_tokens
-        |  FROM d JOIN plan USING (source)
-        |  WHERE CAST(list_sum(list_transform(generate_series(1, 6),
-        |          i -> (strpos('0123456789abcdef',
-        |                       substr(md5(CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |               * CAST(16 ** (6 - i) AS BIGINT))) AS BIGINT) * t_tokens
-        |        < token_budget * CAST(16777216 AS BIGINT)
-        |  GROUP BY d.source)
-        |SELECT source, t_tokens, weight, token_budget,
-        |       CAST(coalesce(n_kept, 0) AS BIGINT) AS n_kept,
-        |       CAST(coalesce(kept_tokens, 0) AS BIGINT) AS kept_tokens
-        |FROM plan LEFT JOIN kept USING (source)
-        |ORDER BY source""".stripMargin,
-    "corpus_mixture" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |per AS (
-        |  SELECT source, CAST(sum(n_tokens) AS BIGINT) AS t_tokens
-        |  FROM d GROUP BY source),
-        |tot AS (
-        |  SELECT sum(sqrt(t_tokens)) AS z,
-        |         CAST(sum(t_tokens) AS BIGINT) AS t_total FROM per),
-        |plan AS (
-        |  SELECT source, t_tokens,
-        |         CAST(floor(floor(t_total * 0.5) * round(sqrt(t_tokens) / z, 4))
-        |              AS BIGINT) AS token_budget
-        |  FROM per, tot)
-        |SELECT doc_id, source, n_tokens
-        |FROM d JOIN plan USING (source)
-        |WHERE CAST(list_sum(list_transform(generate_series(1, 6),
-        |        i -> (strpos('0123456789abcdef',
-        |                     substr(md5(CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |             * CAST(16 ** (6 - i) AS BIGINT))) AS BIGINT) * t_tokens
-        |      < token_budget * CAST(16777216 AS BIGINT)
-        |ORDER BY doc_id""".stripMargin,
-    // Shard from the same seeded-md5 nibbles as the corpus_shuffle
-    // oracle; checksums are order-independent integer aggregates.
-    "export_manifest" ->
-      """WITH b AS (
-        |  SELECT doc_id,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(list_sum(list_transform(generate_series(1, 4),
-        |           i -> (strpos('0123456789abcdef',
-        |                        substr(md5('graft:' || CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |                * CAST(16 ** (4 - i) AS BIGINT))) % 16 AS BIGINT) AS shard
-        |  FROM documents)
-        |SELECT shard, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-        |       CAST(sum(doc_id) AS BIGINT) AS id_sum,
-        |       CAST(bit_xor(doc_id) AS BIGINT) AS id_xor
-        |FROM b GROUP BY shard
-        |ORDER BY shard""".stripMargin,
-    // Same seeded-md5 ranking re-derived per row; the digest is
-    // lowercase-hex ASCII in both engines, so string order agrees.
-    "balanced_sample" ->
-      """WITH h AS (
-        |  SELECT doc_id, lang,
-        |         md5('graft:' || CAST(doc_id AS VARCHAR)) AS hx
-        |  FROM documents),
-        |r AS (
-        |  SELECT doc_id, lang,
-        |         CAST(row_number() OVER (PARTITION BY lang ORDER BY hx, doc_id)
-        |              AS BIGINT) AS pick_rank
-        |  FROM h)
-        |SELECT doc_id, lang, pick_rank
-        |FROM r WHERE pick_rank <= 20
-        |ORDER BY doc_id""".stripMargin,
-    // Epoch factors as (full copies, promille fraction); every row's
-    // copy count re-derived from its md5 bucket, copies unrolled with
-    // generate_series.
-    "corpus_epochs" ->
-      """WITH f(source, n_full, promille) AS (
-        |  VALUES ('src0', 2, 500), ('src1', 1, 0),
-        |         ('src2', 0, 400), ('src3', 0, 250)),
-        |b AS (
-        |  SELECT doc_id, source, n_full, promille,
-        |         CAST(list_sum(list_transform(generate_series(1, 6),
-        |           i -> (strpos('0123456789abcdef',
-        |                        substr(md5(CAST(doc_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |                * CAST(16 ** (6 - i) AS BIGINT))) AS BIGINT) AS bkt
-        |  FROM documents JOIN f USING (source)),
-        |c AS (
-        |  SELECT doc_id, source,
-        |         n_full + CASE WHEN bkt * 1000 < promille * CAST(16777216 AS BIGINT)
-        |                       THEN 1 ELSE 0 END AS copies
-        |  FROM b)
-        |SELECT doc_id, source, CAST(epoch AS BIGINT) AS epoch
-        |FROM c, unnest(generate_series(0, CAST(copies AS BIGINT) - 1)) t(epoch)
-        |WHERE copies > 0
-        |ORDER BY doc_id, epoch""".stripMargin,
-    // Seeded-md5 shuffle coordinates re-derived per row: shard from the
-    // first four hex nibbles, pos by ranking the full hex digest within
-    // the shard (the digest is lowercase-hex ASCII in both engines, so
-    // string order agrees).
-    "corpus_shuffle" ->
-      """WITH h AS (
-        |  SELECT doc_id, md5('graft:' || CAST(doc_id AS VARCHAR)) AS hx FROM documents),
-        |b AS (
-        |  SELECT doc_id, hx,
-        |         CAST(list_sum(list_transform(generate_series(1, 4),
-        |           i -> (strpos('0123456789abcdef', substr(hx, CAST(i AS INT), 1)) - 1)
-        |                * CAST(16 ** (4 - i) AS BIGINT))) % 16 AS BIGINT) AS shard
-        |  FROM h)
-        |SELECT doc_id, shard,
-        |       CAST(row_number() OVER (PARTITION BY shard ORDER BY hx, doc_id) AS BIGINT)
-        |         AS pos
-        |FROM b ORDER BY doc_id""".stripMargin,
-    "pack_sequences" ->
-      """WITH d AS (
-        |  SELECT doc_id, source,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens
-        |  FROM documents),
-        |o AS (
-        |  SELECT doc_id, source, n_tokens,
-        |         CAST(sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |              - n_tokens AS BIGINT) AS stream_offset
-        |  FROM d)
-        |SELECT doc_id, source, n_tokens, stream_offset,
-        |       CAST(stream_offset // 256 AS BIGINT) AS pack_id,
-        |       CAST(stream_offset % 256 AS BIGINT) AS pack_offset
-        |FROM o ORDER BY doc_id""".stripMargin,
-    "vector_normalize" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |n AS (
-        |  SELECT id, v, sqrt(list_inner_product(v, v)) AS nrm FROM base)
-        |SELECT id, CAST(i - 1 AS BIGINT) AS idx, round(v[i] / nrm, 6) AS v_norm
-        |FROM n, unnest(generate_series(1, len(v))) t(i)
-        |ORDER BY id, idx""".stripMargin,
-    "vector_quantize" ->
-      """SELECT vec_id AS id, CAST(g - 1 AS BIGINT) AS idx,
-        |       CAST(CASE WHEN mx = mn THEN 0
-        |                 ELSE floor((CAST(embedding[g] AS DOUBLE) - mn) * 255.0 / (mx - mn) + 0.5)
-        |            END AS BIGINT) AS qval
-        |FROM (
-        |  SELECT vec_id, embedding,
-        |         CAST(list_min(embedding) AS DOUBLE) AS mn,
-        |         CAST(list_max(embedding) AS DOUBLE) AS mx
-        |  FROM embeddings),
-        |  unnest(generate_series(1, len(embedding))) AS t(g)
-        |ORDER BY id, idx""".stripMargin,
-    "doc_repetition" ->
-      """WITH m AS (
-        |  SELECT doc_id, tk,
-        |         CASE WHEN len(tk) >= 3
-        |              THEN list_transform(generate_series(1, len(tk) - 2),
-        |                   i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])
-        |              ELSE [] END AS sh
-        |  FROM (SELECT doc_id, string_split(text, ' ') AS tk FROM documents))
-        |SELECT doc_id,
-        |  CAST(len(tk) AS BIGINT) AS n_tokens,
-        |  CAST(len(sh) AS BIGINT) AS n_shingles,
-        |  CASE WHEN len(sh) = 0 THEN 0.0
-        |       ELSE round(1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh), 6) END
-        |    AS dup_3gram_ratio,
-        |  CASE WHEN len(tk) = 0 THEN 0.0
-        |       ELSE round(1.0 - CAST(len(list_distinct(tk)) AS DOUBLE) / len(tk), 6) END
-        |    AS dup_token_ratio,
-        |  CASE WHEN len(tk) = 0 THEN 0.0
-        |       ELSE round(CAST(list_max(list_transform(list_distinct(tk),
-        |            d -> len(list_filter(tk, x -> x = d)))) AS DOUBLE) / len(tk), 6) END
-        |    AS max_token_ratio
-        |FROM m ORDER BY doc_id""".stripMargin,
-    // Exact side oracle-matched; the sketch side asserts its error
-    // bound in-plan (same scheme as events_quantiles_approx).
-    "corpus_cardinality" ->
-      """SELECT source,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(DISTINCT md5(lower(text))) AS BIGINT) AS n_distinct,
-        |       TRUE AS approx_within_5pct
-        |FROM documents
-        |GROUP BY source
-        |ORDER BY source""".stripMargin,
-    "vocab_coverage" ->
-      """WITH terms AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |vocab AS (
-        |  SELECT term FROM (
-        |    SELECT term, count(*) AS tf,
-        |           row_number() OVER (ORDER BY count(*) DESC, term ASC) AS rk
-        |    FROM terms GROUP BY term)
-        |  WHERE rk <= 20),
-        |dtf AS (
-        |  SELECT doc_id, term, count(*) AS dtf FROM terms GROUP BY doc_id, term)
-        |SELECT d.doc_id,
-        |       CAST(sum(d.dtf) AS BIGINT) AS n_tokens,
-        |       CAST(sum(CASE WHEN v.term IS NULL THEN d.dtf ELSE 0 END) AS BIGINT) AS n_oov,
-        |       round(CAST(sum(CASE WHEN v.term IS NULL THEN d.dtf ELSE 0 END) AS DOUBLE)
-        |             / sum(d.dtf), 6) AS oov_ratio
-        |FROM dtf d LEFT JOIN vocab v USING (term)
-        |GROUP BY d.doc_id
-        |ORDER BY d.doc_id""".stripMargin,
-    "doc_chunks" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS tk,
-        |         len(string_split(text, ' ')) AS n
-        |  FROM documents),
-        |starts AS (
-        |  SELECT doc_id, tk,
-        |         unnest(generate_series(0,
-        |           CASE WHEN n <= 40 THEN 0
-        |                ELSE CAST(floor((n - 40 + 29) / 30.0) AS INT) END)) AS k
-        |  FROM t)
-        |SELECT doc_id,
-        |       CAST(k AS BIGINT) AS chunk_id,
-        |       CAST(len(list_slice(tk, k * 30 + 1, k * 30 + 40)) AS BIGINT)
-        |         AS n_chunk_tokens,
-        |       array_to_string(list_slice(tk, k * 30 + 1, k * 30 + 40), ' ')
-        |         AS chunk_text
-        |FROM starts
-        |ORDER BY doc_id, chunk_id""".stripMargin,
-    "privacy_k_anonymity" ->
-      """SELECT lang, source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(DISTINCT md5(text)) AS BIGINT) AS l_distinct,
-        |       (count(*) < 5) AS at_risk
-        |FROM documents GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-    "privacy_erasure_cascade" ->
-      """WITH victims AS (
-        |  SELECT c_custkey AS k FROM customer WHERE c_custkey % 97 = 3),
-        |dead_orders AS (
-        |  SELECT o_orderkey AS ok FROM orders
-        |  JOIN victims ON o_custkey = k)
-        |SELECT 'customer' AS table_name,
-        |       CAST((SELECT count(*) FROM customer) AS BIGINT) AS rows_before,
-        |       CAST((SELECT count(*) FROM victims) AS BIGINT) AS rows_removed,
-        |       CAST((SELECT count(*) FROM customer) -
-        |            (SELECT count(*) FROM victims) AS BIGINT) AS rows_after
-        |UNION ALL
-        |SELECT 'lineitem',
-        |       CAST((SELECT count(*) FROM lineitem) AS BIGINT),
-        |       CAST((SELECT count(*) FROM lineitem
-        |             JOIN dead_orders ON l_orderkey = ok) AS BIGINT),
-        |       CAST((SELECT count(*) FROM lineitem) -
-        |            (SELECT count(*) FROM lineitem
-        |             JOIN dead_orders ON l_orderkey = ok) AS BIGINT)
-        |UNION ALL
-        |SELECT 'orders',
-        |       CAST((SELECT count(*) FROM orders) AS BIGINT),
-        |       CAST((SELECT count(*) FROM dead_orders) AS BIGINT),
-        |       CAST((SELECT count(*) FROM orders) -
-        |            (SELECT count(*) FROM dead_orders) AS BIGINT)
-        |ORDER BY table_name""".stripMargin,
-    "privacy_suppress" ->
-      """WITH g AS (SELECT lang, source, count(*) AS n FROM documents GROUP BY 1, 2)
-        |SELECT doc_id,
-        |       CASE WHEN n < 5 THEN '*' ELSE d.lang END AS lang,
-        |       CASE WHEN n < 5 THEN '*' ELSE d.source END AS source
-        |FROM documents d JOIN g USING (lang, source) ORDER BY doc_id""".stripMargin,
-    // l-diversity replayed: (source × lang) cells, exact 6-dp-grid
-    // entropy, the SAME pinned log10(l) micro threshold literal.
-    "privacy_l_diversity" -> {
-      val thr = graft.operators.Anonymity.logLMicro(3)
-      s"""WITH cells AS (
-         |  SELECT source, lang, count(*) AS c
-         |  FROM documents GROUP BY 1, 2),
-         |g AS (
-         |  SELECT source, sum(c) AS n_docs, count(*) AS l_distinct
-         |  FROM cells GROUP BY 1),
-         |e AS (
-         |  SELECT cells.source,
-         |         CAST(sum(c * (CAST(round(log10(n_docs), 6) AS DECIMAL(28,6))
-         |                       - CAST(round(log10(c), 6) AS DECIMAL(28,6))))
-         |              AS DECIMAL(38,6)) AS es
-         |  FROM cells JOIN g ON cells.source = g.source
-         |  GROUP BY cells.source)
-         |SELECT g.source, CAST(g.n_docs AS BIGINT) AS n_docs,
-         |       CAST(g.l_distinct AS BIGINT) AS l_distinct,
-         |       CAST(CAST(e.es * 1000000 AS HUGEINT) //
-         |            CAST(g.n_docs AS HUGEINT) AS BIGINT) AS entropy_micro,
-         |       g.l_distinct >= 3 AS distinct_pass,
-         |       CAST(CAST(e.es * 1000000 AS HUGEINT) //
-         |            CAST(g.n_docs AS HUGEINT) AS BIGINT) >= $thr
-         |         AS entropy_pass
-         |FROM g JOIN e ON g.source = e.source
-         |ORDER BY g.source""".stripMargin
-    },
-    "term_burstiness" ->
-      """WITH toks AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |pd AS (
-        |  SELECT term, doc_id, CAST(count(*) AS HUGEINT) AS x
-        |  FROM toks WHERE length(term) > 0 GROUP BY 1, 2),
-        |n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM documents),
-        |t AS (
-        |  SELECT term, CAST(count(*) AS BIGINT) AS df,
-        |         sum(x) AS cf, sum(x * x) AS sx2
-        |  FROM pd GROUP BY 1)
-        |SELECT term, df, CAST(cf AS BIGINT) AS cf,
-        |       CAST((1000000 * ((SELECT n FROM n) * sx2 - cf * cf)) //
-        |            ((SELECT n FROM n) * cf) AS BIGINT) AS vmr_micro
-        |FROM t ORDER BY cf DESC, term LIMIT 25""".stripMargin,
-    "source_hapax" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |pt AS (
-        |  SELECT source, term, CAST(count(*) AS BIGINT) AS c
-        |  FROM toks WHERE length(term) > 0 GROUP BY 1, 2)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_types,
-        |       CAST(sum(c) AS BIGINT) AS n_tokens,
-        |       CAST(sum(CASE WHEN c = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |         AS n_hapax,
-        |       CAST((1000000 * sum(CASE WHEN c = 1 THEN 1 ELSE 0 END)) //
-        |            count(*) AS BIGINT) AS hapax_micro
-        |FROM pt GROUP BY source ORDER BY source""".stripMargin,
-    "source_yule" ->
-      """WITH toks AS (
-        |  SELECT source, unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |pt AS (
-        |  SELECT source, term, CAST(count(*) AS HUGEINT) AS c
-        |  FROM toks WHERE length(term) > 0 GROUP BY 1, 2),
-        |a AS (
-        |  SELECT source, CAST(count(*) AS BIGINT) AS n_types,
-        |         sum(c) AS n, sum(c * c) AS s2, sum(c * (c - 1)) AS rep
-        |  FROM pt GROUP BY 1)
-        |SELECT source, n_types, CAST(n AS BIGINT) AS n_tokens,
-        |       CAST(CASE WHEN n > 1 THEN (10000000 * (s2 - n)) // (n * n)
-        |                 ELSE 0 END AS BIGINT) AS yule_k_milli,
-        |       CAST(CASE WHEN n > 1 THEN (1000000 * rep) // (n * (n - 1))
-        |                 ELSE 0 END AS BIGINT) AS simpson_micro
-        |FROM a ORDER BY source""".stripMargin,
-    "source_gini" ->
-      """WITH h AS (
-        |  SELECT source, n_chars AS v, CAST(count(*) AS HUGEINT) AS c
-        |  FROM documents GROUP BY 1, 2),
-        |cum AS (
-        |  SELECT source, v, c,
-        |         sum(c) OVER (PARTITION BY source ORDER BY v) AS r
-        |  FROM h),
-        |a AS (
-        |  SELECT source, sum(c) AS n, sum(CAST(v AS HUGEINT) * c) AS s0,
-        |         sum(CAST(v AS HUGEINT) * c * (2 * r - c + 1)) AS s1x2
-        |  FROM cum GROUP BY 1)
-        |SELECT source, CAST(n AS BIGINT) AS n_rows,
-        |       CAST(s0 AS BIGINT) AS total,
-        |       CAST(CASE WHEN s0 > 0
-        |                 THEN (1000000 * (s1x2 - (n + 1) * s0)) // (n * s0)
-        |                 ELSE 0 END AS BIGINT) AS gini_micro
-        |FROM a ORDER BY source""".stripMargin,
-    "quality_percentile" ->
-      """WITH r AS (
-        |  SELECT doc_id, n_chars,
-        |         rank() OVER (ORDER BY n_chars) AS rk,
-        |         count(*) OVER () AS n
-        |  FROM documents)
-        |SELECT doc_id, n_chars,
-        |       CAST(CASE WHEN n > 1 THEN (1000000 * (rk - 1)) // (n - 1)
-        |                 ELSE 0 END AS BIGINT) AS pct_micro
-        |FROM r ORDER BY doc_id""".stripMargin,
-    "privacy_t_closeness" ->
-      """WITH cell AS (
-        |  SELECT lang, source, n_chars // 64 AS bk, CAST(count(*) AS HUGEINT) AS c
-        |  FROM documents GROUP BY 1, 2, 3),
-        |g AS (SELECT lang, source, sum(c) AS n_g FROM cell GROUP BY 1, 2),
-        |gl AS (SELECT bk, sum(c) AS cb FROM cell GROUP BY 1),
-        |t AS (SELECT sum(cb) AS n_total, CAST(count(*) AS HUGEINT) AS m FROM gl),
-        |grid AS (
-        |  SELECT g.lang, g.source, gl.bk, g.n_g, gl.cb,
-        |         coalesce(cell.c, 0) AS c
-        |  FROM g CROSS JOIN gl
-        |  LEFT JOIN cell ON cell.lang = g.lang AND cell.source = g.source
-        |                AND cell.bk = gl.bk),
-        |cum AS (
-        |  SELECT lang, source, n_g,
-        |         sum(c * (SELECT n_total FROM t) - cb * n_g)
-        |           OVER (PARTITION BY lang, source ORDER BY bk) AS cu
-        |  FROM grid),
-        |agg AS (
-        |  SELECT lang, source, max(n_g) AS n_g, sum(abs(cu)) AS s
-        |  FROM cum GROUP BY 1, 2),
-        |fin AS (
-        |  SELECT lang, source, n_g,
-        |         CASE WHEN (SELECT m FROM t) > 1
-        |              THEN (1000000 * s) //
-        |                   (((SELECT m FROM t) - 1) * n_g * (SELECT n_total FROM t))
-        |              ELSE 0 END AS emd
-        |  FROM agg)
-        |SELECT lang, source, CAST(n_g AS BIGINT) AS n_docs,
-        |       CAST(emd AS BIGINT) AS emd_micro,
-        |       emd > 150000 AS exceeds_t
-        |FROM fin ORDER BY lang, source""".stripMargin,
-    "pii_redact" ->
-      """WITH aug AS (
-        |  SELECT doc_id,
-        |         text ||
-        |         CASE WHEN doc_id % 3 = 0
-        |              THEN ' contact user' || CAST(doc_id AS VARCHAR) || '@example.com'
-        |              ELSE '' END ||
-        |         CASE WHEN doc_id % 5 = 0
-        |              THEN ' call 555-' || lpad(CAST(doc_id % 10000 AS VARCHAR), 4, '0')
-        |              ELSE '' END ||
-        |         CASE WHEN doc_id % 7 = 0
-        |              THEN ' host 10.0.' || CAST(doc_id % 256 AS VARCHAR) || '.' ||
-        |                   CAST((doc_id * 7) % 256 AS VARCHAR)
-        |              ELSE '' END AS t
-        |  FROM documents),
-        |red AS (
-        |  SELECT doc_id, t,
-        |         regexp_replace(regexp_replace(regexp_replace(t,
-        |           '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-        |           '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b', '<IP>', 'g'),
-        |           '\b[0-9]{3}-[0-9]{4}\b', '<PHONE>', 'g') AS r
-        |  FROM aug)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT)
-        |    AS n_emails,
-        |  CAST(len(regexp_extract_all(t, '\b[0-9]{3}-[0-9]{4}\b')) AS BIGINT) AS n_phones,
-        |  CAST(len(regexp_extract_all(t,
-        |       '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b')) AS BIGINT) AS n_ips,
-        |  CAST(length(r) AS BIGINT) AS n_chars_redacted,
-        |  md5(r) AS redacted_fp
-        |FROM red ORDER BY doc_id""".stripMargin,
-    "doc_quality" ->
-      """SELECT doc_id, n_tokens,
-        |       round(mean_word_len, 6) AS mean_word_len,
-        |       round(stopword_ratio, 6) AS stopword_ratio,
-        |       round(punct_ratio, 6) AS punct_ratio,
-        |       CAST(c1 + c2 + c3 + c4 AS BIGINT) AS checks_passed,
-        |       round((c1 + c2 + c3 + c4) / 4.0, 6) AS quality
-        |FROM (
-        |  SELECT doc_id, n_tokens, mean_word_len, stopword_ratio, punct_ratio,
-        |         CASE WHEN n_tokens >= 20 AND n_tokens <= 100000 THEN 1 ELSE 0 END AS c1,
-        |         CASE WHEN mean_word_len >= 3.0 AND mean_word_len <= 10.0 THEN 1 ELSE 0 END AS c2,
-        |         CASE WHEN stopword_ratio >= 0.01 THEN 1 ELSE 0 END AS c3,
-        |         CASE WHEN punct_ratio <= 0.2 THEN 1 ELSE 0 END AS c4
-        |  FROM (
-        |    SELECT doc_id,
-        |           CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |           CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-        |             / len(string_split(text, ' ')) AS mean_word_len,
-        |           CAST(len(list_filter(string_split(text, ' '),
-        |                t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-        |             / len(string_split(text, ' ')) AS stopword_ratio,
-        |           CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-        |             / length(text) AS punct_ratio
-        |    FROM documents))
-        |ORDER BY doc_id""".stripMargin,
-    // Count-LM oracles: the same one-explode trigram-window relation,
-    // re-derived in DuckDB as (a, b, c) position triples; backoff keys
-    // are string concatenations, which equal the Spark side's
-    // substring_index slices exactly because tokens are space-free
-    // split fields. Trigram pruning (HAVING cnt >= 2) and the stupid-
-    // backoff CASE ladder mirror LanguageModel.docPerplexity branch for
-    // branch; float sums round to 4 (repo determinism convention).
-    // Roundtrip oracle: the per-format summary must equal the parquet
-    // source's summary for every format — stated once per format.
-    "format_roundtrip" ->
-      """WITH s AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_docs,
-        |         CAST(count(DISTINCT md5(text)) AS BIGINT) AS n_distinct_texts,
-        |         CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |         CAST(sum(doc_id) AS BIGINT) AS id_sum
-        |  FROM documents)
-        |SELECT 'csv' AS format, n_docs, n_distinct_texts, total_chars, id_sum FROM s
-        |UNION ALL
-        |SELECT 'json', n_docs, n_distinct_texts, total_chars, id_sum FROM s
-        |UNION ALL
-        |SELECT 'orc', n_docs, n_distinct_texts, total_chars, id_sum FROM s
-        |ORDER BY format""".stripMargin,
-    // Boilerplate oracle: rebuild the same in-plan pages, explode
-    // numbered lines, re-derive the ≥3-distinct-doc verdict per
-    // (source, line), and fingerprint the kept lines in order.
-    "line_boilerplate" ->
-      """WITH pages AS (
-        |  SELECT doc_id, source,
-        |         'c ' || source || ' all rights reserved' || chr(10) ||
-        |         'nav home about' || chr(10) || text || chr(10) ||
-        |         'promo ' || CAST(doc_id % 250 AS VARCHAR) AS page
-        |  FROM documents),
-        |ls AS (
-        |  SELECT doc_id, source, g.pos AS pos, g.line AS line FROM (
-        |    SELECT doc_id, source,
-        |           unnest(list_transform(generate_series(1, len(parts)),
-        |             i -> struct_pack(pos := i, line := parts[i]))) AS g
-        |    FROM (SELECT doc_id, source, string_split(page, chr(10)) AS parts
-        |          FROM pages))),
-        |boiler AS (
-        |  SELECT source, line FROM ls
-        |  GROUP BY 1, 2 HAVING count(DISTINCT doc_id) >= 3),
-        |flagged AS (
-        |  SELECT l.doc_id, l.pos, l.line, b.line IS NOT NULL AS is_b
-        |  FROM ls l LEFT JOIN boiler b
-        |    ON l.source = b.source AND l.line = b.line)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
-        |       CAST(coalesce(sum(CASE WHEN is_b THEN 1 END), 0) AS BIGINT)
-        |         AS n_removed,
-        |       md5(coalesce(string_agg(CASE WHEN NOT is_b THEN line END,
-        |                               chr(10) ORDER BY pos), '')) AS clean_fp
-        |FROM flagged GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    "lm_ngram_stats" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |pos AS (
-        |  SELECT doc_id, g.nw AS nw, g.a AS a, g.b AS b, g.c AS c FROM (
-        |    SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)),
-        |      i -> struct_pack(
-        |        nw := least(i, 3),
-        |        a := CASE WHEN i >= 3 THEN toks[i-2] END,
-        |        b := CASE WHEN i >= 2 THEN toks[i-1] END,
-        |        c := toks[i]))) AS g
-        |    FROM tok)),
-        |uni AS (SELECT c AS g, count(*) AS cnt FROM pos GROUP BY 1),
-        |bi AS (SELECT b || ' ' || c AS g, count(*) AS cnt FROM pos
-        |       WHERE nw >= 2 GROUP BY 1),
-        |tri AS (SELECT a || ' ' || b || ' ' || c AS g, count(*) AS cnt FROM pos
-        |        WHERE nw = 3 GROUP BY 1 HAVING count(*) >= 2)
-        |SELECT CAST(1 AS BIGINT) AS ord, CAST(count(*) AS BIGINT) AS n_grams,
-        |       CAST(coalesce(sum(cnt), 0) AS BIGINT) AS total_occ FROM uni
-        |UNION ALL SELECT CAST(2 AS BIGINT), CAST(count(*) AS BIGINT),
-        |       CAST(coalesce(sum(cnt), 0) AS BIGINT) FROM bi
-        |UNION ALL SELECT CAST(3 AS BIGINT), CAST(count(*) AS BIGINT),
-        |       CAST(coalesce(sum(cnt), 0) AS BIGINT) FROM tri
-        |ORDER BY ord""".stripMargin,
-    "doc_feature_spearman" -> {
-      def branch(label: String, x: String, y: String) =
-        s"""(WITH f AS (
-           |  SELECT CAST(length(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-           |         CAST(strlen(text) AS BIGINT) AS n_bytes,
-           |         CAST(length(list_distinct(string_split(text, ' '))) AS BIGINT) AS n_distinct
-           |  FROM documents WHERE text IS NOT NULL),
-           |r AS (
-           |  SELECT 2 * rank() OVER (ORDER BY $x) + count(*) OVER (PARTITION BY $x) - 1 AS u,
-           |         2 * rank() OVER (ORDER BY $y) + count(*) OVER (PARTITION BY $y) - 1 AS v
-           |  FROM f),
-           |a AS (
-           |  SELECT CAST(count(*) AS BIGINT) AS n,
-           |         sum(CAST(u AS HUGEINT)) AS su, sum(CAST(v AS HUGEINT)) AS sv,
-           |         sum(CAST(u AS HUGEINT) * v) AS suv,
-           |         sum(CAST(u AS HUGEINT) * u) AS suu,
-           |         sum(CAST(v AS HUGEINT) * v) AS svv
-           |  FROM r)
-           |SELECT '$label' AS pair, n,
-           |       round(CAST(CAST(n AS HUGEINT) * suv - su * sv AS DOUBLE) /
-           |             (sqrt(CAST(CAST(n AS HUGEINT) * suu - su * su AS DOUBLE)) *
-           |              sqrt(CAST(CAST(n AS HUGEINT) * svv - sv * sv AS DOUBLE))), 6) AS rho
-           |FROM a)""".stripMargin
-      s"""SELECT * FROM (
-         |${branch("bytes_distinct", "n_bytes", "n_distinct")}
-         |UNION ALL
-         |${branch("tokens_bytes", "n_tokens", "n_bytes")}
-         |UNION ALL
-         |${branch("tokens_distinct", "n_tokens", "n_distinct")}
-         |) ORDER BY pair""".stripMargin
-    },
-    "lm_kneser_ney" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |pos AS (
-        |  SELECT doc_id, g.nw AS nw, g.b AS b, g.c AS c FROM (
-        |    SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)),
-        |      i -> struct_pack(
-        |        nw := least(i, 3),
-        |        b := CASE WHEN i >= 2 THEN toks[i-1] END,
-        |        c := toks[i]))) AS g
-        |    FROM tok)),
-        |bi AS (SELECT b AS w1, c AS w2, CAST(count(*) AS BIGINT) AS c12
-        |       FROM pos WHERE nw >= 2 GROUP BY 1, 2),
-        |ctx AS (SELECT w1, CAST(sum(c12) AS BIGINT) AS c1,
-        |               CAST(count(*) AS BIGINT) AS n1p_fwd FROM bi GROUP BY 1),
-        |cont AS (SELECT w2, CAST(count(*) AS BIGINT) AS n1p_bwd FROM bi GROUP BY 1),
-        |tot AS (SELECT CAST(count(*) AS BIGINT) AS n_bigram_types FROM bi)
-        |SELECT w1, w2, c12, c1, n1p_fwd, n1p_bwd, n_bigram_types,
-        |       round(greatest(CAST(c12 AS DOUBLE) - 0.75, 0.0) / CAST(c1 AS DOUBLE)
-        |           + ((0.75 * CAST(n1p_fwd AS DOUBLE)) / CAST(c1 AS DOUBLE))
-        |             * (CAST(n1p_bwd AS DOUBLE) / CAST(n_bigram_types AS DOUBLE)),
-        |             6) AS p_kn
-        |FROM bi JOIN ctx USING (w1) JOIN cont USING (w2) CROSS JOIN tot
-        |ORDER BY c12 DESC, w1, w2 LIMIT 30""".stripMargin,
-    "doc_perplexity" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |pos AS (
-        |  SELECT doc_id, g.nw AS nw, g.a AS a, g.b AS b, g.c AS c FROM (
-        |    SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)),
-        |      i -> struct_pack(
-        |        nw := least(i, 3),
-        |        a := CASE WHEN i >= 3 THEN toks[i-2] END,
-        |        b := CASE WHEN i >= 2 THEN toks[i-1] END,
-        |        c := toks[i]))) AS g
-        |    FROM tok)),
-        |uni AS (SELECT c AS g, count(*) AS cnt FROM pos GROUP BY 1),
-        |bi AS (SELECT b || ' ' || c AS g, count(*) AS cnt FROM pos
-        |       WHERE nw >= 2 GROUP BY 1),
-        |tri AS (SELECT a || ' ' || b || ' ' || c AS g, count(*) AS cnt FROM pos
-        |        WHERE nw = 3 GROUP BY 1 HAVING count(*) >= 2),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM pos),
-        |probe AS (
-        |  SELECT doc_id, nw, a, b, c, count(*) AS k FROM pos
-        |  GROUP BY doc_id, nw, a, b, c),
-        |sc AS (
-        |  SELECT p.doc_id, p.k,
-        |    CASE WHEN t.cnt IS NOT NULL
-        |           THEN CAST(t.cnt AS DOUBLE) / CAST(coalesce(cb.cnt, 1) AS DOUBLE)
-        |         WHEN bg.cnt IS NOT NULL
-        |           THEN (CASE WHEN p.nw = 3 THEN 0.4 ELSE 1.0 END) *
-        |                CAST(bg.cnt AS DOUBLE) / CAST(coalesce(cu.cnt, 1) AS DOUBLE)
-        |         ELSE (CASE WHEN p.nw = 3 THEN 0.4 * 0.4
-        |                    WHEN p.nw = 2 THEN 0.4 ELSE 1.0 END) *
-        |              CAST(coalesce(u.cnt, 1) AS DOUBLE) / tot.n
-        |    END AS s
-        |  FROM probe p
-        |  LEFT JOIN tri t ON p.nw = 3 AND t.g = p.a || ' ' || p.b || ' ' || p.c
-        |  LEFT JOIN bi cb ON p.nw = 3 AND cb.g = p.a || ' ' || p.b
-        |  LEFT JOIN bi bg ON p.nw >= 2 AND bg.g = p.b || ' ' || p.c
-        |  LEFT JOIN uni cu ON p.nw >= 2 AND cu.g = p.b
-        |  LEFT JOIN uni u ON u.g = p.c
-        |  CROSS JOIN tot)
-        |SELECT doc_id, CAST(sum(k) AS BIGINT) AS n_tokens,
-        |       round(sum(k * ln(s)), 4) AS logprob,
-        |       round(exp(-sum(k * ln(s)) / sum(k)), 4) AS ppl
-        |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // Same probe CTEs as doc_perplexity, then the min-k selection:
-    // micro-quantized window log-probs, ordered prefix sum, exact
-    // integer take arithmetic, one rounded double mean.
-    "contamination_min_k" ->
-      """WITH tok AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-        |pos AS (
-        |  SELECT doc_id, g.nw AS nw, g.a AS a, g.b AS b, g.c AS c FROM (
-        |    SELECT doc_id, unnest(list_transform(generate_series(1, len(toks)),
-        |      i -> struct_pack(
-        |        nw := least(i, 3),
-        |        a := CASE WHEN i >= 3 THEN toks[i-2] END,
-        |        b := CASE WHEN i >= 2 THEN toks[i-1] END,
-        |        c := toks[i]))) AS g
-        |    FROM tok)),
-        |uni AS (SELECT c AS g, count(*) AS cnt FROM pos GROUP BY 1),
-        |bi AS (SELECT b || ' ' || c AS g, count(*) AS cnt FROM pos
-        |       WHERE nw >= 2 GROUP BY 1),
-        |tri AS (SELECT a || ' ' || b || ' ' || c AS g, count(*) AS cnt FROM pos
-        |        WHERE nw = 3 GROUP BY 1 HAVING count(*) >= 2),
-        |tot AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM pos),
-        |probe AS (
-        |  SELECT doc_id, nw, a, b, c, count(*) AS k FROM pos
-        |  GROUP BY doc_id, nw, a, b, c),
-        |sc AS (
-        |  SELECT p.doc_id, p.k,
-        |    CASE WHEN p.nw = 3 THEN p.a || ' ' || p.b || ' ' || p.c
-        |         WHEN p.nw = 2 THEN p.b || ' ' || p.c
-        |         ELSE p.c END AS w,
-        |    CASE WHEN t.cnt IS NOT NULL
-        |           THEN CAST(t.cnt AS DOUBLE) / CAST(coalesce(cb.cnt, 1) AS DOUBLE)
-        |         WHEN bg.cnt IS NOT NULL
-        |           THEN (CASE WHEN p.nw = 3 THEN 0.4 ELSE 1.0 END) *
-        |                CAST(bg.cnt AS DOUBLE) / CAST(coalesce(cu.cnt, 1) AS DOUBLE)
-        |         ELSE (CASE WHEN p.nw = 3 THEN 0.4 * 0.4
-        |                    WHEN p.nw = 2 THEN 0.4 ELSE 1.0 END) *
-        |              CAST(coalesce(u.cnt, 1) AS DOUBLE) / tot.n
-        |    END AS s
-        |  FROM probe p
-        |  LEFT JOIN tri t ON p.nw = 3 AND t.g = p.a || ' ' || p.b || ' ' || p.c
-        |  LEFT JOIN bi cb ON p.nw = 3 AND cb.g = p.a || ' ' || p.b
-        |  LEFT JOIN bi bg ON p.nw >= 2 AND bg.g = p.b || ' ' || p.c
-        |  LEFT JOIN uni cu ON p.nw >= 2 AND cu.g = p.b
-        |  LEFT JOIN uni u ON u.g = p.c
-        |  CROSS JOIN tot),
-        |q AS (
-        |  SELECT doc_id, k, w,
-        |         CAST(CAST(round(log10(s), 6) AS DECIMAL(28,6)) * 1000000
-        |              AS BIGINT) AS lp
-        |  FROM sc),
-        |cum AS (
-        |  SELECT doc_id, k, lp,
-        |         sum(k) OVER (PARTITION BY doc_id ORDER BY lp, w
-        |                      ROWS UNBOUNDED PRECEDING) AS c,
-        |         sum(k) OVER (PARTITION BY doc_id) AS n
-        |  FROM q),
-        |sel AS (
-        |  SELECT doc_id, n, greatest(1, (n * 20) // 100) AS m,
-        |         greatest(0, least(k,
-        |           greatest(1, (n * 20) // 100) - (c - k))) AS take,
-        |         lp
-        |  FROM cum)
-        |SELECT doc_id, CAST(max(n) AS BIGINT) AS n_tokens,
-        |       CAST(max(m) AS BIGINT) AS k_tokens,
-        |       round(CAST(sum(take * lp) AS DOUBLE) / max(m), 6)
-        |         AS mink_logp_micro_mean
-        |FROM sel GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // Same per-doc expressions as the doc_quality oracle, rolled up by
-    // source; ratios are single divisions of integer aggregates.
-    "source_scorecard" ->
-      """WITH q AS (
-        |  SELECT source,
-        |         CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-        |         CAST(length(text) - (len(string_split(text, ' ')) - 1) AS DOUBLE)
-        |           / len(string_split(text, ' ')) AS mean_word_len,
-        |         CAST(len(list_filter(string_split(text, ' '),
-        |              t -> t IN ('the', 'a', 'of', 'and'))) AS DOUBLE)
-        |           / len(string_split(text, ' ')) AS stopword_ratio,
-        |         CAST(len(regexp_extract_all(text, '[^a-zA-Z0-9 ]')) AS DOUBLE)
-        |           / length(text) AS punct_ratio,
-        |         md5(lower(text)) AS fp
-        |  FROM documents),
-        |c AS (
-        |  SELECT source, n_tokens, fp,
-        |         CASE WHEN n_tokens >= 20 AND n_tokens <= 100000
-        |               AND mean_word_len >= 3.0 AND mean_word_len <= 10.0
-        |               AND stopword_ratio >= 0.01 AND punct_ratio <= 0.2
-        |              THEN 1 ELSE 0 END AS pass
-        |  FROM q)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-        |       round(avg(n_tokens), 4) AS mean_tokens,
-        |       CAST(sum(pass) AS BIGINT) AS pass_docs,
-        |       round(CAST(sum(pass) AS DOUBLE) / count(*), 4) AS pass_rate,
-        |       CAST(count(*) - count(DISTINCT fp) AS BIGINT) AS dup_docs
-        |FROM c GROUP BY source
-        |ORDER BY source""".stripMargin,
-    "events_quantiles" ->
-      """SELECT event_type, q, round(v, 6) AS val
-        |FROM (
-        |  SELECT event_type,
-        |         unnest([0.5, 0.9, 0.99]) AS q,
-        |         unnest(quantile_cont(value, [0.5, 0.9, 0.99])) AS v
-        |  FROM events GROUP BY event_type)
-        |ORDER BY event_type, q""".stripMargin,
-    // `val` is the exact interpolated quantile (identical definition);
-    // the sketch side is oracle-checked through its rank guarantee:
-    // approx_rank_ok must come out TRUE for every (type, q).
-    "events_quantiles_approx" ->
-      """SELECT event_type, q, round(v, 6) AS val, TRUE AS approx_rank_ok
-        |FROM (
-        |  SELECT event_type,
-        |         unnest([0.5, 0.9, 0.99]) AS q,
-        |         unnest(quantile_cont(value, [0.5, 0.9, 0.99])) AS v
-        |  FROM events GROUP BY event_type)
-        |ORDER BY event_type, q""".stripMargin,
-    "events_topk_agg" ->
-      """SELECT event_type, rnk, event_id, score FROM (
-        |  SELECT event_type, event_id, round(value, 6) AS score,
-        |         row_number() OVER (PARTITION BY event_type
-        |                            ORDER BY value DESC, event_id) AS rnk
-        |  FROM events)
-        |WHERE rnk <= 3
-        |ORDER BY event_type, rnk""".stripMargin,
-    // Exact shingle-Jaccard threshold join over ALL pairs — the shingling
-    // mirrors TextHashKernels.shingleSet: non-empty space-split tokens,
-    // distinct 3-grams joined by ' ', whole-doc fallback under 3 tokens.
-    "dedup_minhash" ->
-      (s"WITH $shingleCtes,\n$minhashPairsCte\n" +
-        "SELECT a_id, b_id, jaccard FROM mh_pairs ORDER BY a_id, b_id"),
-    // Containment replayed over the same shingle replay with the SAME
-    // informative-shingle contract (df-capped postings, both sides of
-    // the ratio); BIGINT integer division both directions.
-    "dedup_containment" ->
-      (s"WITH $shingleCtes," + """
-        |posts AS (SELECT id, unnest(s) AS sg FROM sh),
-        |rare AS (SELECT sg FROM posts GROUP BY sg HAVING count(*) <= 1024),
-        |inf AS (SELECT p.id, p.sg FROM posts p JOIN rare USING (sg)),
-        |nrel AS (SELECT id, CAST(count(*) AS BIGINT) AS n FROM inf GROUP BY 1),
-        |ov AS (
-        |  SELECT a.id AS a_id, b.id AS b_id, CAST(count(*) AS BIGINT) AS overlap
-        |  FROM inf a JOIN inf b ON a.sg = b.sg AND a.id < b.id
-        |  GROUP BY 1, 2)
-        |SELECT ov.a_id, ov.b_id, na.n AS n_a, nb.n AS n_b, ov.overlap,
-        |       CAST((1000000 * ov.overlap) // na.n AS BIGINT) AS cont_a_micro,
-        |       CAST((1000000 * ov.overlap) // nb.n AS BIGINT) AS cont_b_micro
-        |FROM ov JOIN nrel na ON na.id = ov.a_id
-        |        JOIN nrel nb ON nb.id = ov.b_id
-        |WHERE greatest((1000000 * ov.overlap) // na.n,
-        |               (1000000 * ov.overlap) // nb.n) >= 800000
-        |ORDER BY ov.a_id, ov.b_id""".stripMargin),
-    // Transitive closure of the same blocked-Jaccard pair graph the
-    // Spark side builds (threshold 0.3): component = min reachable id,
-    // computed by a recursive reachability CTE; n_members counts the
-    // cluster.
-    "dedup_components" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id AS id, substr(text, 1, 16) AS bk,
-        |         list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.id AS a_id, b.id AS b_id,
-        |           round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |                 len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-        |    FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id)
-        |  WHERE jaccard >= 0.3),
-        |edges AS (
-        |  SELECT a_id AS u, b_id AS v FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-        |comp AS (
-        |  SELECT u AS id, least(u, min(v)) AS component
-        |  FROM reach GROUP BY u)
-        |SELECT id, component,
-        |       CAST(count(*) OVER (PARTITION BY component) AS BIGINT) AS n_members
-        |FROM comp ORDER BY id""".stripMargin,
-    // Same pair graph + transitive closure as the dedup_components
-    // oracle; the kept member is the component's (max n_chars, min id)
-    // argmax, derived with a window max + min-id reduction.
-    "dedup_keep_best" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT doc_id AS id, substr(text, 1, 16) AS bk,
-        |         list_distinct(string_split(text, ' ')) AS toks
-        |  FROM documents),
-        |pairs AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.id AS a_id, b.id AS b_id,
-        |           round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE) /
-        |                 len(list_distinct(list_cat(a.toks, b.toks))), 6) AS jaccard
-        |    FROM base a JOIN base b ON a.bk = b.bk AND a.id < b.id)
-        |  WHERE jaccard >= 0.3),
-        |edges AS (
-        |  SELECT a_id AS u, b_id AS v FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-        |comp AS (
-        |  SELECT u AS id, least(u, min(v)) AS component
-        |  FROM reach GROUP BY u),
-        |members AS (
-        |  SELECT d.doc_id AS id, coalesce(c.component, d.doc_id) AS comp,
-        |         d.n_chars
-        |  FROM documents d LEFT JOIN comp c ON d.doc_id = c.id),
-        |kept AS (
-        |  SELECT comp, min(id) AS kept_id FROM (
-        |    SELECT comp, id, n_chars,
-        |           max(n_chars) OVER (PARTITION BY comp) AS mx
-        |    FROM members)
-        |  WHERE n_chars = mx GROUP BY comp)
-        |SELECT m.id, k.kept_id, m.id = k.kept_id AS is_kept
-        |FROM members m JOIN kept k USING (comp)
-        |ORDER BY m.id""".stripMargin,
-    // Same shingling as the dedup_minhash oracle; overlap = exact
-    // intersection count per (train, eval) pair.
-    "contamination_check" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) = 0 THEN []
-        |                  WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                  ELSE list_distinct(list_transform(generate_series(1, len(t) - 2),
-        |                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS s
-        |  FROM toks),
-        |tr AS (SELECT doc_id AS train_id, unnest(s) AS shingle FROM sh WHERE doc_id < 450),
-        |ev AS (SELECT doc_id AS eval_id, unnest(s) AS shingle FROM sh WHERE doc_id >= 450)
-        |SELECT train_id, eval_id, count(*) AS n_shared_shingles
-        |FROM tr JOIN ev USING (shingle)
-        |GROUP BY train_id, eval_id
-        |HAVING count(*) >= 2
-        |ORDER BY train_id, eval_id""".stripMargin,
-    // Exact quadratic train×eval cosine join (= the LSH between-join
-    // at measured recall 1); closest eval doc via the rank-1 window,
-    // ties → lowest eval id — the same tie rule as the Spark min_by.
-    "contamination_semantic" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (
-        |  SELECT t.vec_id AS train_id, e.vec_id AS eval_id,
-        |         round(list_inner_product(t.v, e.v) /
-        |               (sqrt(list_inner_product(t.v, t.v)) *
-        |                sqrt(list_inner_product(e.v, e.v))), 6) AS cos_sim
-        |  FROM base t, base e
-        |  WHERE t.vec_id >= 50 AND e.vec_id < 50),
-        |r AS (
-        |  SELECT train_id, eval_id, cos_sim,
-        |         row_number() OVER (PARTITION BY train_id
-        |                            ORDER BY cos_sim DESC, eval_id) AS rk
-        |  FROM p WHERE cos_sim >= 0.4)
-        |SELECT train_id,
-        |       CAST(count(*) AS BIGINT) AS n_eval_hits,
-        |       CAST(min(CASE WHEN rk = 1 THEN eval_id END) AS BIGINT)
-        |         AS closest_eval_id,
-        |       max(cos_sim) AS max_cos_sim
-        |FROM r GROUP BY train_id ORDER BY train_id""".stripMargin,
-    // Identity: the WARC export→parse round trip must reproduce the
-    // documents table byte-for-byte (status 200 is the writer's
-    // constant; null text encodes as the empty body).
-    "warc_roundtrip" ->
-      """SELECT doc_id, CAST(200 AS INT) AS http_status,
-        |       COALESCE(text, '') AS text_back
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Closed-form archive oracles: member sizes are the documents'
-    // UTF-8 byte lengths (DuckDB strlen = bytes), STORED zip means
-    // csize = usize, and the builders pin mtime 0 / typeflag '0'.
-    "tar_census" ->
-      """SELECT doc_id, CAST(strlen(COALESCE(text, '')) AS BIGINT) AS n_bytes,
-        |       '0' AS type_flag, CAST(0 AS BIGINT) AS mtime
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    "zip_census" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS method,
-        |       CAST(strlen(COALESCE(text, '')) AS BIGINT) AS c_bytes,
-        |       CAST(strlen(COALESCE(text, '')) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // The pinned drift verdicts (both snapshot schemas are fixed by
-    // the row itself; the value is the footer-byte derivation).
-    "parquet_schema_drift" ->
-      """SELECT * FROM (VALUES
-        |  ('doc_id', 'INT64', 'INT64', 'unchanged'),
-        |  ('lang', 'BYTE_ARRAY', 'BYTE_ARRAY', 'unchanged'),
-        |  ('n_chars', 'INT64', 'INT32', 'type_changed'),
-        |  ('quality', '', 'DOUBLE', 'added'),
-        |  ('text', 'BYTE_ARRAY', '', 'removed'))
-        |  AS t(col, v1_type, v2_type, status)
-        |ORDER BY col""".stripMargin,
-    // Footer facts re-derived: per-bucket row counts from table
-    // arithmetic; version 1 / single row group / 5 leaf columns /
-    // created_by are the pinned Spark-writer facts the spec
-    // cross-validates against parquet-mr.
-    "parquet_footer_census" ->
-      """SELECT CAST(doc_id % 3 AS BIGINT) AS bucket,
-        |       CAST(1 AS BIGINT) AS version,
-        |       CAST(COUNT(*) AS BIGINT) AS file_rows,
-        |       CAST(1 AS BIGINT) AS n_row_groups,
-        |       CAST(5 AS BIGINT) AS schema_leaves,
-        |       CAST(COUNT(*) AS BIGINT) AS rg0_rows,
-        |       CAST(5 AS BIGINT) AS n_columns,
-        |       TRUE AS has_created_by
-        |FROM documents GROUP BY 1 ORDER BY bucket""".stripMargin,
-    // ZIP64 must census to the SAME values as the 32-bit layout — the
-    // oracle is deliberately identical to zip_census.
-    "zip64_census" ->
-      """SELECT doc_id, CAST(0 AS BIGINT) AS method,
-        |       CAST(strlen(COALESCE(text, '')) AS BIGINT) AS c_bytes,
-        |       CAST(strlen(COALESCE(text, '')) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Long names rebuilt arithmetically: deep/ + 96+(id%8) p's +
-    // /doc_<id>.txt; payload bytes are the documents' UTF-8 lengths.
-    "tar_longname_census" ->
-      """SELECT doc_id,
-        |       'deep/' || repeat('p', CAST(96 + doc_id % 8 AS INT)) ||
-        |         '/doc_' || doc_id || '.txt' AS member_name,
-        |       CAST(strlen('deep/' || repeat('p', CAST(96 + doc_id % 8 AS INT)) ||
-        |         '/doc_' || doc_id || '.txt') AS BIGINT) AS name_len,
-        |       CAST(strlen(COALESCE(text, '')) AS BIGINT) AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // Every replica re-derived: same md5(id:rep) 16-bit value, same
-    // Poisson(1) inverse-CDF table, exact integer sums.
-    "eval_bootstrap" ->
-      """WITH ex AS (
-        |  SELECT doc_id AS id, CAST(n_chars % 2 AS BIGINT) AS score
-        |  FROM documents WHERE lang = 'de'),
-        |grid AS (
-        |  SELECT id, score, CAST(r AS BIGINT) AS rep
-        |  FROM ex, unnest(generate_series(0, 31)) t(r)),
-        |h AS (
-        |  SELECT rep, score,
-        |         list_sum(list_transform(generate_series(1, 4), i ->
-        |           (strpos('0123456789abcdef',
-        |              substr(md5(CAST(id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)),
-        |                     CAST(i AS INT), 1)) - 1)
-        |           * CAST(16 ** (4 - i) AS BIGINT))) AS hv
-        |  FROM grid),
-        |m AS (
-        |  SELECT rep, score,
-        |         CASE WHEN hv < 24113 THEN 0 WHEN hv < 48226 THEN 1
-        |              WHEN hv < 60273 THEN 2 WHEN hv < 64292 THEN 3
-        |              WHEN hv < 65296 THEN 4 WHEN hv < 65497 THEN 5
-        |              WHEN hv < 65531 THEN 6 WHEN hv < 65535 THEN 7
-        |              ELSE 8 END AS mult
-        |  FROM h)
-        |SELECT rep, CAST(sum(mult) AS BIGINT) AS n_eff,
-        |       CAST(sum(mult * score) AS BIGINT) AS sum_score,
-        |       round(CAST(sum(mult * score) AS DOUBLE) / sum(mult), 6)
-        |         AS mean_score
-        |FROM m GROUP BY rep ORDER BY rep""".stripMargin,
-    // Every flip re-derived from the same md5(id:rep) bit.
-    "eval_jackknife_ratio" ->
-      """WITH g AS (
-        |  SELECT user_id,
-        |         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-        |              AS HUGEINT) AS a,
-        |         CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-        |              AS HUGEINT) AS b
-        |  FROM events GROUP BY 1),
-        |t AS (SELECT sum(a) AS ta, sum(b) AS tb,
-        |             CAST(count(*) AS HUGEINT) AS n_groups FROM g),
-        |loo AS (
-        |  SELECT (1000000 * ((SELECT ta FROM t) - a)) //
-        |         ((SELECT tb FROM t) - b) AS r_loo
-        |  FROM g WHERE (SELECT tb FROM t) - b > 0),
-        |u AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n_used,
-        |         (1000000 * (SELECT ta FROM t)) // (SELECT tb FROM t)
-        |           AS ratio_micro
-        |  FROM loo),
-        |p AS (
-        |  SELECT (SELECT n_used FROM u) * (SELECT ratio_micro FROM u) -
-        |         ((SELECT n_used FROM u) - 1) * r_loo AS p
-        |  FROM loo),
-        |m AS (SELECT sum(p) AS sp, sum(p * p) AS sp2 FROM p)
-        |SELECT CAST((SELECT n_groups FROM t) AS BIGINT) AS n_groups,
-        |       CAST(u.n_used AS BIGINT) AS n_used,
-        |       CAST(u.ratio_micro AS BIGINT) AS ratio_micro,
-        |       CAST(m.sp // u.n_used AS BIGINT) AS jack_mean_micro,
-        |       CAST(CASE WHEN u.n_used > 1
-        |                 THEN (u.n_used * m.sp2 - m.sp * m.sp) //
-        |                      (u.n_used * u.n_used * (u.n_used - 1))
-        |                 ELSE 0 END AS BIGINT) AS var_jack_micro2
-        |FROM u, m""".stripMargin,
-    "eval_permutation" ->
-      """WITH ex AS (
-        |  SELECT source, doc_id AS id,
-        |         (n_chars % 5) - 2 +
-        |           CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS d
-        |  FROM documents),
-        |obs AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-        |          CAST(ABS(SUM(d)) AS BIGINT) AS obs_abs
-        |        FROM ex GROUP BY 1),
-        |grid AS (SELECT source, id, d, CAST(r AS BIGINT) AS rep
-        |         FROM ex, unnest(generate_series(0, 63)) t(r)),
-        |h AS (
-        |  SELECT source, rep, d,
-        |         list_sum(list_transform(generate_series(1, 4), i ->
-        |           (strpos('0123456789abcdef',
-        |              substr(md5(CAST(id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)),
-        |                     CAST(i AS INT), 1)) - 1)
-        |           * CAST(16 ** (4 - i) AS BIGINT))) AS hv
-        |  FROM grid),
-        |p AS (SELECT source, rep,
-        |        CAST(ABS(SUM(CASE WHEN hv % 2 = 0 THEN d ELSE -d END))
-        |          AS BIGINT) AS perm_abs
-        |      FROM h GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT p.source, o.n, o.obs_abs,
-        |         CAST(SUM(CASE WHEN p.perm_abs >= o.obs_abs THEN 1 ELSE 0 END)
-        |           AS BIGINT) AS n_ge
-        |  FROM p JOIN obs o USING (source) GROUP BY 1, 2, 3)
-        |SELECT source, n, obs_abs, n_ge, CAST(64 AS BIGINT) AS reps,
-        |       CAST(CAST(n_ge + 1 AS HUGEINT) * 1000000 // 65 AS BIGINT)
-        |         AS p_micro
-        |FROM agg ORDER BY source""".stripMargin,
-    "retrieval_rm3_terms" -> (rm3Ctes + """
-      |SELECT term, s_micro, weight_micro, is_original
-      |FROM wrel ORDER BY weight_micro DESC, term""".stripMargin),
-    "retrieval_maxsim" -> MaxsimExactSql,
-    // Full-breadth IVF maxsim ≡ the exact maxsim (searchTopSize covers
-    // every cluster), so the at-rest row shares the exact-reduction SQL.
-    "retrieval_maxsim_ivf" -> MaxsimExactSql,
-    "retrieval_rm3" -> (rm3Ctes + """,
-      |tf2 AS (SELECT t.doc_id, t.dl, t.term, w.weight_micro AS w,
-      |               CAST(count(*) AS BIGINT) AS tf
-      |        FROM toks t JOIN wrel w USING (term) GROUP BY 1, 2, 3, 4),
-      |cf2 AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tf2 GROUP BY 1),
-      |c0 AS (SELECT
-      |         CAST(sum(w.weight_micro *
-      |           CAST(round(ln(2000.0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE)))
-      |                * 1000000.0) AS BIGINT)) AS BIGINT) AS c0w,
-      |         CAST(sum(w.weight_micro) AS BIGINT) AS sw
-      |       FROM cf2 c JOIN wrel w USING (term), stats s),
-      |sc2 AS (
-      |  SELECT t.doc_id, t.dl, CAST(count(*) AS BIGINT) AS n_terms,
-      |         CAST(sum(t.w * CAST(round(
-      |           (ln(t.tf + 2000.0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))) -
-      |            ln(2000.0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))))
-      |           * 1000000.0) AS BIGINT)) AS BIGINT) AS ps
-      |  FROM tf2 t JOIN cf2 c USING (term), stats s GROUP BY 1, 2),
-      |fin AS (SELECT doc_id, n_terms,
-      |        ps + c0.c0w - c0.sw *
-      |          CAST(round(ln(CAST(dl AS DOUBLE) + 2000.0) * 1000000.0) AS BIGINT)
-      |          AS score_p
-      |        FROM sc2, c0)
-      |SELECT doc_id, n_terms, score_p,
-      |       CAST(row_number() OVER (ORDER BY score_p DESC, doc_id) AS BIGINT) AS rnk
-      |FROM fin ORDER BY score_p DESC, doc_id LIMIT 10""".stripMargin),
-    // The permutation chain again, then the three corrections as
-    // ordered windows over the bounded p-value family.
-    "eval_multiple_testing" ->
-      """WITH ex AS (
-        |  SELECT source, doc_id AS id,
-        |         (n_chars % 5) - 2 +
-        |           CASE WHEN doc_id % 2 = 0 THEN 1 ELSE 0 END AS d
-        |  FROM documents),
-        |obs AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-        |          CAST(ABS(SUM(d)) AS BIGINT) AS obs_abs
-        |        FROM ex GROUP BY 1),
-        |grid AS (SELECT source, id, d, CAST(r AS BIGINT) AS rep
-        |         FROM ex, unnest(generate_series(0, 63)) t(r)),
-        |h AS (
-        |  SELECT source, rep, d,
-        |         list_sum(list_transform(generate_series(1, 4), i ->
-        |           (strpos('0123456789abcdef',
-        |              substr(md5(CAST(id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)),
-        |                     CAST(i AS INT), 1)) - 1)
-        |           * CAST(16 ** (4 - i) AS BIGINT))) AS hv
-        |  FROM grid),
-        |p AS (SELECT source, rep,
-        |        CAST(ABS(SUM(CASE WHEN hv % 2 = 0 THEN d ELSE -d END))
-        |          AS BIGINT) AS perm_abs
-        |      FROM h GROUP BY 1, 2),
-        |agg AS (
-        |  SELECT p.source, o.n, o.obs_abs,
-        |         CAST(SUM(CASE WHEN p.perm_abs >= o.obs_abs THEN 1 ELSE 0 END)
-        |           AS BIGINT) AS n_ge
-        |  FROM p JOIN obs o USING (source) GROUP BY 1, 2, 3),
-        |pv AS (SELECT source,
-        |         CAST(CAST(n_ge + 1 AS HUGEINT) * 1000000 // 65 AS BIGINT)
-        |           AS p_micro
-        |       FROM agg),
-        |adj AS (
-        |  SELECT source, p_micro,
-        |         CAST(count(*) OVER () AS BIGINT) AS m,
-        |         CAST(row_number() OVER (ORDER BY p_micro, source) AS BIGINT)
-        |           AS rnk
-        |  FROM pv),
-        |adj2 AS (
-        |  SELECT source, p_micro, rnk,
-        |         least(p_micro * m, 1000000) AS bonferroni_micro,
-        |         max(least((m - rnk + 1) * p_micro, 1000000))
-        |           OVER (ORDER BY p_micro, source
-        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-        |           AS holm_micro,
-        |         min(least((p_micro * m) // rnk, 1000000))
-        |           OVER (ORDER BY p_micro, source
-        |                 ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING)
-        |           AS bh_micro
-        |  FROM adj)
-        |SELECT source, p_micro, rnk, bonferroni_micro, holm_micro, bh_micro,
-        |       bh_micro <= 50000 AS reject_bh
-        |FROM adj2 ORDER BY rnk""".stripMargin,
-    "eval_auc_delong" ->
-      """WITH scored AS (
-        |  SELECT source,
-        |         CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS label,
-        |         (n_chars * 7 + doc_id * 13) % 100 +
-        |           CASE WHEN doc_id % 3 = 0 THEN 40 ELSE 0 END AS score
-        |  FROM documents),
-        |g AS (SELECT source, score, CAST(count(*) AS BIGINT) AS cnt,
-        |             CAST(sum(label) AS BIGINT) AS pos
-        |      FROM scored GROUP BY 1, 2),
-        |g2 AS (SELECT *, cnt - pos AS neg FROM g),
-        |pl AS (
-        |  SELECT source, pos, neg,
-        |         2 * coalesce(sum(neg) OVER (PARTITION BY source ORDER BY score
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           + neg AS p2p,
-        |         2 * coalesce(sum(pos) OVER (PARTITION BY source ORDER BY score
-        |               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-        |           + pos AS p2n
-        |  FROM g2),
-        |tot AS (SELECT source, CAST(sum(pos) AS BIGINT) AS m,
-        |               CAST(sum(neg) AS BIGINT) AS n,
-        |               CAST(sum(pos * p2p) AS BIGINT) AS u2,
-        |               CAST(sum(neg * p2n) AS BIGINT) AS u2n
-        |        FROM pl GROUP BY 1),
-        |sq AS (
-        |  SELECT p.source, t.m, t.n, t.u2, t.u2n,
-        |         sum(CAST(p.pos AS HUGEINT) * (p.p2p * t.m - t.u2)
-        |             * (p.p2p * t.m - t.u2)) AS s10,
-        |         sum(CAST(p.neg AS HUGEINT) * (p.p2n * t.n - t.u2n)
-        |             * (p.p2n * t.n - t.u2n)) AS s01
-        |  FROM pl p JOIN tot t USING (source) GROUP BY 1, 2, 3, 4, 5)
-        |SELECT source, m AS n_pos, n AS n_neg,
-        |       CASE WHEN m > 0 AND n > 0
-        |            THEN (500000 * u2) // (m * n) END AS auc_micro,
-        |       CASE WHEN m > 1 AND n > 1 THEN CAST(
-        |         (CAST(1000000000000 AS HUGEINT) * s10) //
-        |           (CAST(4 AS HUGEINT) * m * m * m * n * n * (m - 1)) +
-        |         (CAST(1000000000000 AS HUGEINT) * s01) //
-        |           (CAST(4 AS HUGEINT) * m * m * n * n * n * (n - 1))
-        |         AS BIGINT) END AS var_e12
-        |FROM sq ORDER BY source""".stripMargin,
-    // Midrank rank-sum replayed on the per-(source, score) counts.
-    // The cumulative window is tie-free by construction (score is the
-    // grouping key), so DuckDB's RANGE default frame equals Spark's
-    // ROWS frame.
-    "eval_auc" ->
-      """WITH scored AS (
-        |  SELECT source,
-        |         CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END AS label,
-        |         (n_chars * 7 + doc_id * 13) % 100 +
-        |           CASE WHEN doc_id % 3 = 0 THEN 40 ELSE 0 END AS score
-        |  FROM documents),
-        |g AS (SELECT source, score, COUNT(*) AS cnt, SUM(label) AS pos
-        |      FROM scored GROUP BY 1, 2),
-        |r AS (SELECT source, cnt, pos,
-        |        SUM(cnt) OVER (PARTITION BY source ORDER BY score) AS cum
-        |      FROM g),
-        |a AS (SELECT source,
-        |        CAST(SUM(pos) AS BIGINT) AS n_pos,
-        |        CAST(SUM(cnt) - SUM(pos) AS BIGINT) AS n_neg,
-        |        CAST(SUM(pos * (2 * cum - cnt + 1)) AS BIGINT) AS r2
-        |      FROM r GROUP BY 1)
-        |SELECT source, n_pos, n_neg,
-        |       CASE WHEN n_pos > 0 AND n_neg > 0 THEN
-        |         round(CAST(r2 - n_pos * (n_pos + 1) AS DOUBLE) /
-        |               (2.0 * n_pos * n_neg), 6) END AS auc
-        |FROM a ORDER BY source""".stripMargin,
-    // Kappa from the confusion marginals; a class used by only one
-    // rater contributes 0 via the full-outer marginal join.
-    "eval_kappa" ->
-      """WITH rated AS (
-        |  SELECT source,
-        |         CASE WHEN doc_id % 7 = 0 THEN (doc_id % 3 + 1) % 3
-        |              ELSE doc_id % 3 END AS r1,
-        |         CASE WHEN doc_id % 5 = 0 THEN (doc_id % 3 + 2) % 3
-        |              ELSE doc_id % 3 END AS r2
-        |  FROM documents),
-        |base AS (SELECT source, CAST(COUNT(*) AS BIGINT) AS n,
-        |           CAST(SUM(CASE WHEN r1 = r2 THEN 1 ELSE 0 END) AS BIGINT)
-        |             AS agree
-        |         FROM rated GROUP BY 1),
-        |ma AS (SELECT source, r1 AS k, COUNT(*) AS a_k FROM rated GROUP BY 1, 2),
-        |mb AS (SELECT source, r2 AS k, COUNT(*) AS b_k FROM rated GROUP BY 1, 2),
-        |pe AS (SELECT COALESCE(ma.source, mb.source) AS source,
-        |         CAST(SUM(COALESCE(a_k, 0) * COALESCE(b_k, 0)) AS BIGINT)
-        |           AS pe_num
-        |       FROM ma FULL OUTER JOIN mb
-        |         ON ma.source = mb.source AND ma.k = mb.k
-        |       GROUP BY 1)
-        |SELECT b.source, b.n, b.agree,
-        |       CASE WHEN b.n * b.n <> pe.pe_num THEN
-        |         round(CAST(b.n * b.agree - pe.pe_num AS DOUBLE) /
-        |               CAST(b.n * b.n - pe.pe_num AS DOUBLE), 6) END AS kappa
-        |FROM base b JOIN pe USING (source) ORDER BY source""".stripMargin,
-    // The three simulated raters replayed, then the coincidence-matrix
-    // alpha: per-unit terms floored to the 1e-12 grid via HUGEINT //,
-    // one final division, 6-dp round — the exact Spark arithmetic.
-    "eval_krippendorff" ->
-      """WITH r AS (
-        |  SELECT doc_id AS unit,
-        |         CASE WHEN (doc_id + 0) % 7 = 0 THEN (doc_id + 1) % 3
-        |              ELSE doc_id % 3 END AS rating
-        |  FROM documents WHERE (doc_id + 0) % 4 != 0
-        |  UNION ALL
-        |  SELECT doc_id,
-        |         CASE WHEN (doc_id + 11) % 7 = 0 THEN (doc_id + 2) % 3
-        |              ELSE doc_id % 3 END
-        |  FROM documents WHERE (doc_id + 1) % 4 != 0
-        |  UNION ALL
-        |  SELECT doc_id,
-        |         CASE WHEN (doc_id + 22) % 7 = 0 THEN (doc_id + 3) % 3
-        |              ELSE doc_id % 3 END
-        |  FROM documents WHERE (doc_id + 2) % 4 != 0),
-        |uc AS (SELECT unit, rating AS c, CAST(count(*) AS BIGINT) AS m
-        |       FROM r GROUP BY 1, 2),
-        |pu AS (SELECT unit, CAST(sum(m) AS BIGINT) AS mu,
-        |              CAST(sum(m * (m - 1)) AS BIGINT) AS agree2
-        |       FROM uc GROUP BY 1 HAVING sum(m) >= 2),
-        |s AS (SELECT CAST(count(*) AS BIGINT) AS n_units,
-        |             CAST(sum(mu) AS BIGINT) AS n_ratings,
-        |             CAST(sum(CAST(1000000000000 * (mu * (mu - 1) - agree2)
-        |                  AS HUGEINT) // (mu - 1)) AS BIGINT) AS do_scaled
-        |      FROM pu),
-        |nc AS (SELECT c, CAST(sum(m) AS BIGINT) AS nc
-        |       FROM uc JOIN pu USING (unit) GROUP BY 1),
-        |de AS (SELECT CAST(CAST(sum(nc) AS HUGEINT) * sum(nc)
-        |              - sum(CAST(nc AS HUGEINT) * nc) AS BIGINT) AS de_pairs
-        |       FROM nc)
-        |SELECT s.n_units, s.n_ratings, s.do_scaled, de.de_pairs,
-        |       CASE WHEN de.de_pairs > 0 THEN
-        |         round(1.0 - (CAST(s.n_ratings - 1 AS DOUBLE)
-        |               * CAST(s.do_scaled AS DOUBLE))
-        |               / (1e12 * CAST(de.de_pairs AS DOUBLE)), 6)
-        |       END AS alpha
-        |FROM s, de""".stripMargin,
-    // Three MM rounds unrolled as CTE stages; HUGEINT keeps the 1e12
-    // products exact where the Spark side runs DECIMAL(38,0) div.
-    "eval_bradley_terry" -> BradleyTerryOracle,
-    // Ground truth by doc_id arithmetic — the regex cascade never
-    // informs the oracle.
-    "code_license_scan" ->
-      """SELECT doc_id,
-        |  CASE doc_id % 10
-        |    WHEN 0 THEN 'AGPL-3.0' WHEN 1 THEN 'GPL-3.0'
-        |    WHEN 2 THEN 'GPL-2.0' WHEN 3 THEN 'LGPL-2.1'
-        |    WHEN 4 THEN 'MPL-2.0' WHEN 5 THEN 'Apache-2.0'
-        |    WHEN 6 THEN 'MIT' WHEN 7 THEN 'BSD-3-Clause'
-        |    WHEN 8 THEN 'Unlicense' ELSE 'unknown' END AS license,
-        |  CASE WHEN doc_id % 10 IN (0, 1, 2) THEN 'copyleft'
-        |       WHEN doc_id % 10 IN (3, 4) THEN 'weak-copyleft'
-        |       WHEN doc_id % 10 IN (5, 6, 7) THEN 'permissive'
-        |       WHEN doc_id % 10 = 8 THEN 'public-domain'
-        |       ELSE 'unknown' END AS family,
-        |  (doc_id % 10 IN (5, 6, 7, 8)) AS keep
-        |FROM documents ORDER BY doc_id""".stripMargin,
-    // The same cumulative-size binning as one DuckDB window cumsum.
-    "layout_compaction" ->
-      """WITH inv AS (
-        |  SELECT lang,
-        |         'part-' || lpad(CAST(doc_id AS VARCHAR), 8, '0')
-        |           || '.parquet' AS file,
-        |         n_chars AS bytes
-        |  FROM documents),
-        |cum AS (
-        |  SELECT lang, file, bytes,
-        |         sum(bytes) OVER (PARTITION BY lang ORDER BY file
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS cum
-        |  FROM inv)
-        |SELECT lang, CAST((cum - bytes) // 4096 AS BIGINT) AS group_id,
-        |       count(*) AS n_files, CAST(sum(bytes) AS BIGINT) AS total_bytes,
-        |       min(file) AS first_file, max(file) AS last_file
-        |FROM cum GROUP BY lang, group_id
-        |ORDER BY lang, group_id""".stripMargin,
-    // Both snapshots and the update rule rebuilt in SQL; unchanged
-    // rows must emit nothing.
-    "snapshot_cdf" ->
-      """WITH oldt AS (
-        |  SELECT doc_id, md5(text) AS old_fp FROM documents
-        |  WHERE doc_id % 10 < 8),
-        |newt AS (
-        |  SELECT doc_id,
-        |         md5(CASE WHEN doc_id % 3 = 0 THEN text || '!' ELSE text END)
-        |           AS new_fp
-        |  FROM documents WHERE doc_id % 10 > 1)
-        |SELECT doc_id,
-        |       CASE WHEN old_fp IS NULL THEN 'insert'
-        |            WHEN new_fp IS NULL THEN 'delete'
-        |            WHEN old_fp <> new_fp THEN 'update' END AS change_type,
-        |       old_fp, new_fp
-        |FROM oldt FULL OUTER JOIN newt USING (doc_id)
-        |WHERE (CASE WHEN old_fp IS NULL THEN 'insert'
-        |            WHEN new_fp IS NULL THEN 'delete'
-        |            WHEN old_fp <> new_fp THEN 'update' END) IS NOT NULL
-        |ORDER BY doc_id""".stripMargin,
-    // The LZ4 census re-derived arithmetically; content_ok is
-    // necessarily true because the in-plan builder computes real
-    // XXH32 checksums that the parser validates.
-    "lz4_census" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 250)
-        |SELECT id, CAST(1 AS INT) AS n_frames,
-        |       CAST(CASE WHEN b0 % 3 = 0 THEN 1 ELSE 0 END AS INT)
-        |         AS n_skippable,
-        |       CAST((50 + b0 % 200 + b1 % 64) // (1 + b1 % 64) AS INT)
-        |         AS n_blocks,
-        |       CAST((50 + b0 % 200 + b1 % 64) // (1 + b1 % 64) AS INT)
-        |         AS n_uncompressed,
-        |       CAST(50 + b0 % 200 AS BIGINT) AS content_bytes,
-        |       CAST(CASE b0 % 4 WHEN 0 THEN 64 WHEN 1 THEN 256
-        |            WHEN 2 THEN 1024 ELSE 4096 END AS INT) AS block_max_kb,
-        |       CAST(CASE WHEN b0 % 5 = 0 THEN 70000 + b1 ELSE 0 END AS BIGINT)
-        |         AS dict_id,
-        |       true AS content_ok
-        |FROM src ORDER BY id""".stripMargin,
-    // The zstd census re-derived arithmetically from the same document
-    // bytes the in-plan frame builder consumed (ceil-div raw-block
-    // count, RFC 8878 layout).
-    "zstd_census" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 250)
-        |SELECT id, CAST(1 AS INT) AS n_frames,
-        |       CAST(CASE WHEN b1 % 3 = 0 THEN 1 ELSE 0 END AS INT)
-        |         AS n_skippable,
-        |       CAST((50 + b0 % 200 + b1 % 64) // (1 + b1 % 64)
-        |            + CASE WHEN b0 % 2 = 1 THEN 1 ELSE 0 END AS INT)
-        |         AS n_blocks,
-        |       CAST((50 + b0 % 200 + b1 % 64) // (1 + b1 % 64) AS INT)
-        |         AS n_raw,
-        |       CAST(CASE WHEN b0 % 2 = 1 THEN 1 ELSE 0 END AS INT) AS n_rle,
-        |       CAST(50 + b0 % 200 +
-        |            CASE WHEN b0 % 2 = 1 THEN 1 + b1 % 32 ELSE 0 END AS BIGINT)
-        |         AS content_bytes,
-        |       CAST(CASE WHEN b0 % 5 = 0 THEN 1000 + b1 ELSE 0 END AS BIGINT)
-        |         AS dict_id,
-        |       false AS has_checksum
-        |FROM src ORDER BY id""".stripMargin,
-    // Same UAX #15 forms via utf8proc; the suffix is spelled with
-    // chr() so no SQL-literal encoding ambiguity can creep in.
-    "text_normalize" ->
-      """WITH sx AS (SELECT doc_id,
-        |    COALESCE(text, '') || ' caf' || chr(233) || ' cafe' || chr(769) ||
-        |    ' n' || chr(771) || 'o ' || chr(8491) AS s FROM documents)
-        |SELECT doc_id, CAST(length(s) AS BIGINT) AS raw_chars,
-        |       CAST(length(nfc_normalize(s)) AS BIGINT) AS nfc_chars,
-        |       (nfc_normalize(s) <> s) AS changed,
-        |       md5(nfc_normalize(s)) AS nfc_md5,
-        |       md5(strip_accents(s)) AS plain_md5
-        |FROM sx ORDER BY doc_id""".stripMargin,
-    // The same signature class in DuckDB's RE2 over the same planted
-    // text (chr()-built from the shared constants) — an independent
-    // detector must agree hit-for-hit.
-    "text_mojibake" -> {
-      val sig = "[\\x{00C2}\\x{00C3}\\x{00E2}][\\x{0080}-\\x{00BF}]"
-      val cont = "[\\x{0080}-\\x{00BF}]"
-      s"""WITH planted AS (
-         |  SELECT doc_id AS id,
-         |         COALESCE(text, '') ||
-         |           CASE doc_id % 5
-         |             WHEN 1 THEN ${sqlChrLit(MojiAccents)}
-         |             WHEN 2 THEN ${sqlChrLit(MojiPunct)}
-         |             WHEN 3 THEN ${sqlChrLit(MojiUmlaut)}
-         |             WHEN 4 THEN ${sqlChrLit(MojiDecoy)}
-         |             ELSE '' END AS text
-         |  FROM documents)
-         |SELECT id,
-         |       CAST(len(regexp_extract_all(text, '$sig')) AS BIGINT)
-         |         AS moji_hits,
-         |       CAST(length(text) -
-         |         length(regexp_replace(text, '$cont', '', 'g')) AS BIGINT)
-         |         AS cont_chars,
-         |       len(regexp_extract_all(text, '$sig')) >= 1 AS flagged
-         |FROM planted ORDER BY id""".stripMargin
-    },
-    "corpus_diversity" -> {
-      val perN = Seq(1, 2, 3).map { n =>
-        s"""SELECT $n AS n,
-           |  unnest(list_transform(generate_series(1, len(toks) - ${n - 1}),
-           |    i -> array_to_string(toks[i:i+${n - 1}], ' '))) AS gram FROM tk"""
-          .stripMargin
-      }.mkString("\n  UNION ALL\n")
-      s"""WITH tk AS (
-         |  SELECT list_filter(string_split(COALESCE(text, ''), ' '),
-         |                     t -> t != '') AS toks
-         |  FROM documents),
-         |g AS (
-         |$perN)
-         |SELECT CAST(n AS BIGINT) AS n,
-         |       CAST(count(*) AS BIGINT) AS total_ngrams,
-         |       CAST(count(DISTINCT md5(gram)) AS BIGINT) AS distinct_ngrams,
-         |       round(count(DISTINCT md5(gram)) * 1.0 / count(*), 6) AS distinct_ratio
-         |FROM g GROUP BY n ORDER BY n""".stripMargin
-    },
-    // Exact µ-integer moments in HUGEINT; `//` floor-division equals
-    // Spark's truncating `div` because the variance numerator is ≥ 0.
-    "embedding_profile" ->
-      """WITH qd AS (
-        |  SELECT i - 1 AS dim,
-        |         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000.0 + 0.5) AS BIGINT) AS v
-        |  FROM embeddings, unnest(generate_series(1, len(embedding))) t(i)),
-        |a AS (
-        |  SELECT dim, CAST(count(*) AS BIGINT) AS n,
-        |         sum(CAST(v AS HUGEINT)) AS s,
-        |         sum(CAST(v AS HUGEINT) * v) AS s2,
-        |         min(v) AS min_micro, max(v) AS max_micro
-        |  FROM qd GROUP BY dim)
-        |SELECT CAST(dim AS BIGINT) AS dim, n,
-        |       CAST(floor(CAST(s AS DOUBLE) / n + 0.5) AS BIGINT) AS mean_micro,
-        |       min_micro, max_micro,
-        |       CAST((n * s2 - s * s) // (CAST(n AS HUGEINT) * n) AS BIGINT) AS var_micro2
-        |FROM a ORDER BY dim""".stripMargin,
-    "corpus_drift" ->
-      """WITH ob AS (
-        |  SELECT CAST(LEAST(floor(len(string_split(text, ' ')) * 1.0 / 10), 20) AS BIGINT) AS bucket,
-        |         count(*) AS n_old
-        |  FROM documents WHERE doc_id < 250 GROUP BY 1),
-        |nb AS (
-        |  SELECT CAST(LEAST(floor(len(string_split(text, ' ')) * 1.0 / 10), 20) AS BIGINT) AS bucket,
-        |         count(*) AS n_new
-        |  FROM documents WHERE doc_id >= 250 GROUP BY 1),
-        |j AS (
-        |  SELECT COALESCE(ob.bucket, nb.bucket) AS bucket,
-        |         CAST(COALESCE(n_old, 0) AS BIGINT) AS n_old,
-        |         CAST(COALESCE(n_new, 0) AS BIGINT) AS n_new
-        |  FROM ob FULL OUTER JOIN nb ON ob.bucket = nb.bucket),
-        |t AS (SELECT sum(n_old) AS toto, sum(n_new) AS totn FROM j)
-        |SELECT bucket, n_old, n_new,
-        |       CASE WHEN n_old > 0 THEN
-        |         round((n_new - n_old * (CAST(totn AS DOUBLE) / toto)) *
-        |               (n_new - n_old * (CAST(totn AS DOUBLE) / toto)) /
-        |               (n_old * (CAST(totn AS DOUBLE) / toto)), 6)
-        |       END AS contrib
-        |FROM j, t ORDER BY bucket""".stripMargin,
-    // Fingerprint-level full outer join re-derived per class.
-    "corpus_diff" ->
-      """WITH o AS (
-        |  SELECT md5(lower(text)) AS fp, count(*) AS n_old
-        |  FROM documents WHERE doc_id < 250 GROUP BY 1),
-        |n AS (
-        |  SELECT md5(lower(text)) AS fp, count(*) AS n_new
-        |  FROM documents WHERE doc_id >= 250 GROUP BY 1),
-        |j AS (
-        |  SELECT n_old, n_new FROM o FULL OUTER JOIN n ON o.fp = n.fp)
-        |SELECT CASE WHEN n_old IS NULL THEN 'added'
-        |            WHEN n_new IS NULL THEN 'removed'
-        |            ELSE 'retained' END AS status,
-        |       CAST(count(*) AS BIGINT) AS n_texts,
-        |       CAST(sum(coalesce(n_new, n_old)) AS BIGINT) AS n_docs
-        |FROM j GROUP BY 1 ORDER BY status""".stripMargin,
-    // Winnowing re-derived in SQL: canonical single-spaced 3-gram text
-    // → FNV-1a (HUGEINT mod-2^64), window-of-4 minima via a lateral
-    // window-start series, distinct minima per doc. The selected HASH
-    // per window is the min, so the rightmost-tie POSITION rule of the
-    // kernel cannot affect this distinct-hash output.
-    "doc_winnow" -> {
-      val gramHash = fnvSql(
-        "list_transform(generate_series(1, length(g)), " +
-          "i -> CAST(ascii(substr(g, CAST(i AS INT), 1)) AS HUGEINT))")
-      s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS t
-         |  FROM documents),
-         |grams AS (
-         |  SELECT doc_id, CAST(s AS BIGINT) AS pos,
-         |         t[s] || ' ' || t[s+1] || ' ' || t[s+2] AS g
-         |  FROM toks, unnest(generate_series(1, len(t) - 2)) u(s)
-         |  WHERE len(t) >= 3),
-         |gh AS (
-         |  SELECT doc_id, pos, $gramHash AS h FROM grams),
-         |m AS (
-         |  SELECT doc_id, greatest(CAST(count(*) AS BIGINT) - 3, 1) AS last_start
-         |  FROM gh GROUP BY doc_id),
-         |wins AS (
-         |  SELECT g.doc_id, w.s AS ws, g.h
-         |  FROM m, unnest(generate_series(1, m.last_start)) w(s), gh g
-         |  WHERE g.doc_id = m.doc_id AND g.pos >= w.s AND g.pos < w.s + 4),
-         |sel AS (
-         |  SELECT DISTINCT doc_id, mh FROM (
-         |    SELECT doc_id, ws, min(h) AS mh FROM wins GROUP BY doc_id, ws))
-         |SELECT doc_id, ${toSignedSql("mh")} AS fp
-         |FROM sel ORDER BY doc_id, fp""".stripMargin
-    },
-    // The same winnow selection, self-joined on fingerprint equality.
-    "dedup_winnow_pairs" -> {
-      val gramHash = fnvSql(
-        "list_transform(generate_series(1, length(g)), " +
-          "i -> CAST(ascii(substr(g, CAST(i AS INT), 1)) AS HUGEINT))")
-      s"""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS t
-         |  FROM documents),
-         |grams AS (
-         |  SELECT doc_id, CAST(s AS BIGINT) AS pos,
-         |         t[s] || ' ' || t[s+1] || ' ' || t[s+2] AS g
-         |  FROM toks, unnest(generate_series(1, len(t) - 2)) u(s)
-         |  WHERE len(t) >= 3),
-         |gh AS (
-         |  SELECT doc_id, pos, $gramHash AS h FROM grams),
-         |m AS (
-         |  SELECT doc_id, greatest(CAST(count(*) AS BIGINT) - 3, 1) AS last_start
-         |  FROM gh GROUP BY doc_id),
-         |wins AS (
-         |  SELECT g.doc_id, w.s AS ws, g.h
-         |  FROM m, unnest(generate_series(1, m.last_start)) w(s), gh g
-         |  WHERE g.doc_id = m.doc_id AND g.pos >= w.s AND g.pos < w.s + 4),
-         |sel AS (
-         |  SELECT DISTINCT doc_id, mh FROM (
-         |    SELECT doc_id, ws, min(h) AS mh FROM wins GROUP BY doc_id, ws))
-         |SELECT a.doc_id AS a_id, b.doc_id AS b_id,
-         |       CAST(count(*) AS BIGINT) AS n_shared
-         |FROM sel a JOIN sel b ON a.mh = b.mh AND a.doc_id < b.doc_id
-         |GROUP BY a.doc_id, b.doc_id
-         |HAVING count(*) >= 2
-         |ORDER BY a_id, b_id""".stripMargin
-    },
-    // Same shingle join as the contamination_check oracle, rolled up:
-    // distinct contaminated train ids left-joined back per source.
-    "contamination_by_source" ->
-      """WITH toks AS (
-        |  SELECT doc_id, list_filter(string_split(text, ' '), t -> t != '') AS t
-        |  FROM documents),
-        |sh AS (
-        |  SELECT doc_id, CASE WHEN len(t) = 0 THEN []
-        |                  WHEN len(t) < 3 THEN [array_to_string(t, ' ')]
-        |                  ELSE list_distinct(list_transform(generate_series(1, len(t) - 2),
-        |                       i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) END AS s
-        |  FROM toks),
-        |tr AS (SELECT doc_id AS train_id, unnest(s) AS shingle FROM sh WHERE doc_id < 450),
-        |ev AS (SELECT doc_id AS eval_id, unnest(s) AS shingle FROM sh WHERE doc_id >= 450),
-        |hits AS (
-        |  SELECT DISTINCT train_id FROM (
-        |    SELECT train_id, eval_id
-        |    FROM tr JOIN ev USING (shingle)
-        |    GROUP BY train_id, eval_id
-        |    HAVING count(*) >= 2)),
-        |base AS (SELECT doc_id, source FROM documents WHERE doc_id < 450)
-        |SELECT source, CAST(count(*) AS BIGINT) AS n_train_docs,
-        |       CAST(count(h.train_id) AS BIGINT) AS n_contaminated,
-        |       round(CAST(count(h.train_id) AS DOUBLE) / count(*), 4)
-        |         AS contamination_rate
-        |FROM base b LEFT JOIN hits h ON b.doc_id = h.train_id
-        |GROUP BY source ORDER BY source""".stripMargin,
-    // Full SQL reimplementation of the 64-bit SimHash (FNV-1a token
-    // hashes → per-bit votes → sign bits) in DuckDB HUGEINT arithmetic —
-    // proves the engine kernel is deterministic public math, not an
-    // engine-defined black box. Token-less docs hash to 0 (no votes win).
-    "dedup_simhash" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest(list_filter(string_split(text, ' '), t -> t != '')) AS tok
-         |  FROM documents),
-         |th AS (
-         |  SELECT doc_id,
-         |    ${fnvSql("list_transform(generate_series(1, length(tok)), i -> CAST(ascii(substr(tok, i, 1)) AS HUGEINT))")} AS h
-         |  FROM toks),
-         |votes AS (
-         |  SELECT doc_id, bit,
-         |         sum(CASE WHEN (CAST(h AS UBIGINT) >> bit) & 1 = 1 THEN 1 ELSE -1 END) AS v
-         |  FROM th, unnest(generate_series(0, 63)) AS t(bit)
-         |  GROUP BY doc_id, bit),
-         |sh AS (
-         |  SELECT doc_id,
-         |         sum(CASE WHEN v > 0 THEN CAST(CAST(1 AS UBIGINT) << bit AS HUGEINT) ELSE 0 END) AS shu
-         |  FROM votes GROUP BY doc_id),
-         |allsh AS (
-         |  SELECT d.doc_id, COALESCE(s.shu, 0) AS shu
-         |  FROM documents d LEFT JOIN sh s USING (doc_id))
-         |SELECT ${toSignedSql("shu")} AS sh,
-         |       count(*) AS n_docs, min(doc_id) AS keep_id
-         |FROM allsh GROUP BY 1 HAVING count(*) > 1 ORDER BY sh""".stripMargin,
-    // The same SQL-recomputed simhashes, joined all-pairs on exact
-    // Hamming distance — the block scheme's pigeonhole recall is 1 by
-    // construction, so no approximation enters the oracle.
-    "dedup_simhash_near" -> simhashNearHammingOracle,
-    // Same exact all-pairs oracle: the wide (multi-block) candidate
-    // scheme is recall-1 by the same pigeonhole argument.
-    "dedup_simhash_near_wide" -> simhashNearHammingOracle,
-    // Exact cosine threshold join over ALL pairs — the banded LSH query
-    // has recall 1 on this corpus (see the queries entry), so its output
-    // is exactly this join.
-    "sim_join_lsh" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT * FROM (
-        |  SELECT a.id AS a_id, b.id AS b_id,
-        |         round(list_inner_product(a.v, b.v) /
-        |               (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))), 6)
-        |           AS cos_sim
-        |  FROM base a JOIN base b ON a.id < b.id)
-        |WHERE cos_sim >= 0.4
-        |ORDER BY a_id, b_id""".stripMargin,
-    // The rewritten SQL self-join equals the exact join (recall 1 at
-    // the registered parameters) — same oracle as sim_join_lsh.
-    "sql_sim_join_rewrite" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT * FROM (
-        |  SELECT a.id AS a_id, b.id AS b_id,
-        |         round(list_inner_product(a.v, b.v) /
-        |               (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))), 6)
-        |           AS cos_sim
-        |  FROM base a JOIN base b ON a.id < b.id)
-        |WHERE cos_sim >= 0.4
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Exact-threshold k-NN graph (= the LSH graph at recall 1): all
-    // directed pairs above the cosine threshold, row_number per id by
-    // (rounded cosine desc, neighbor id).
-    "knn_graph" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (
-        |  SELECT a.id AS id, b.id AS nbr_id,
-        |         round(list_inner_product(a.v, b.v) /
-        |               (sqrt(list_inner_product(a.v, a.v)) *
-        |                sqrt(list_inner_product(b.v, b.v))), 6) AS cos_sim
-        |  FROM base a JOIN base b ON a.id <> b.id),
-        |r AS (
-        |  SELECT id, nbr_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY id
-        |                ORDER BY cos_sim DESC, nbr_id) AS BIGINT) AS nbr_rank
-        |  FROM p WHERE cos_sim >= 0.4)
-        |SELECT id, nbr_id, cos_sim, nbr_rank
-        |FROM r WHERE nbr_rank <= 3
-        |ORDER BY id, nbr_rank""".stripMargin,
-    // Mutual pairs replayed: the same exact-threshold ranked graph,
-    // self-joined on the canonical (min, max) pair key.
-    "knn_mutual" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (
-        |  SELECT a.id AS id, b.id AS nbr_id,
-        |         round(list_inner_product(a.v, b.v) /
-        |               (sqrt(list_inner_product(a.v, a.v)) *
-        |                sqrt(list_inner_product(b.v, b.v))), 6) AS cos_sim
-        |  FROM base a JOIN base b ON a.id <> b.id),
-        |r AS (
-        |  SELECT id, nbr_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY id
-        |                ORDER BY cos_sim DESC, nbr_id) AS BIGINT) AS nbr_rank
-        |  FROM p WHERE cos_sim >= 0.4),
-        |g AS (SELECT id, nbr_id, cos_sim, nbr_rank FROM r WHERE nbr_rank <= 3)
-        |SELECT f.id AS a_id, f.nbr_id AS b_id, f.cos_sim,
-        |       f.nbr_rank AS rank_ab, b.nbr_rank AS rank_ba
-        |FROM g f JOIN g b ON f.id = b.nbr_id AND f.nbr_id = b.id
-        |WHERE f.id < f.nbr_id
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Exact-threshold retrieval top-k (= the LSH between-join at
-    // recall 1), ranked per query by (rounded cosine desc, corpus id).
-    "knn_between" ->
-      """WITH base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |p AS (
-        |  SELECT q.id AS query_id, c.id AS corpus_id,
-        |         round(list_inner_product(q.v, c.v) /
-        |               (sqrt(list_inner_product(q.v, q.v)) *
-        |                sqrt(list_inner_product(c.v, c.v))), 6) AS cos_sim
-        |  FROM base q JOIN base c ON q.id >= 400 AND c.id < 400),
-        |r AS (
-        |  SELECT query_id, corpus_id, cos_sim,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |                ORDER BY cos_sim DESC, corpus_id) AS BIGINT) AS hit_rank
-        |  FROM p WHERE cos_sim >= 0.4)
-        |SELECT query_id, corpus_id, cos_sim, hit_rank
-        |FROM r WHERE hit_rank <= 5
-        |ORDER BY query_id, hit_rank""".stripMargin,
-    // Exact NOT-EXISTS gate (= the LSH between-join at recall 1).
-    "dedup_semantic_incremental" ->
-      """WITH base AS (
-        |  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS v FROM embeddings)
-        |SELECT b.vec_id, b.label
-        |FROM base b
-        |WHERE b.vec_id >= 250 AND NOT EXISTS (
-        |  SELECT 1 FROM base c
-        |  WHERE c.vec_id < 250 AND
-        |        round(list_inner_product(b.v, c.v) /
-        |              (sqrt(list_inner_product(b.v, b.v)) *
-        |               sqrt(list_inner_product(c.v, c.v))), 6) >= 0.4)
-        |ORDER BY vec_id""".stripMargin,
-    // Exact cosine threshold join (= the LSH pair graph at recall 1)
-    // → recursive-CTE transitive closure → per-row keep verdict over
-    // the whole embeddings corpus, singletons included.
-    "dedup_semantic" ->
-      """WITH RECURSIVE base AS (
-        |  SELECT vec_id AS id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |pairs AS (
-        |  SELECT a_id, b_id FROM (
-        |    SELECT a.id AS a_id, b.id AS b_id,
-        |           round(list_inner_product(a.v, b.v) /
-        |                 (sqrt(list_inner_product(a.v, a.v)) * sqrt(list_inner_product(b.v, b.v))), 6)
-        |             AS cos_sim
-        |    FROM base a JOIN base b ON a.id < b.id)
-        |  WHERE cos_sim >= 0.4),
-        |edges AS (
-        |  SELECT a_id AS u, b_id AS v FROM pairs
-        |  UNION SELECT b_id, a_id FROM pairs),
-        |reach(u, v) AS (
-        |  SELECT u, v FROM edges
-        |  UNION
-        |  SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-        |comp AS (
-        |  SELECT u AS id, least(u, min(v)) AS component
-        |  FROM reach GROUP BY u)
-        |SELECT b.id, coalesce(c.component, b.id) AS kept_id,
-        |       coalesce(c.component, b.id) = b.id AS is_kept
-        |FROM base b LEFT JOIN comp c ON b.id = c.id
-        |ORDER BY b.id""".stripMargin,
-    // Full SQL reimplementation of Gear content-defined chunking: the
-    // 256-entry Gear table (SplitMix64 of the byte value), the byte-wise
-    // rolling hash h = (h<<1 + gear[b]) mod 2^64 (never reset — the
-    // shift-tolerance contract) with boundary rule
-    // (len ≥ min ∧ top-avgBits bits zero) ∨ len ≥ max ∨ end-of-payload,
-    // walked by a recursive CTE (one frontier row per active doc), and
-    // FNV-1a fingerprints per chunk — byte-for-byte the semantics of
-    // TextHashKernels.gearChunkHashes at avgBits=5 (min 8, max 128,
-    // mask = top 5 bits).
-    "multimodal_chunk_dedup" ->
-      s"""WITH RECURSIVE
-         |gearq AS (
-         |  SELECT b, xor(z2, z2 >> 31) AS g
-         |  FROM (
-         |    SELECT b, ${mulModSql("xor(z1, z1 >> 27)", "10723151780598845931")} AS z2
-         |    FROM (
-         |      SELECT b, ${mulModSql("xor(z0, z0 >> 30)", "13787848793156543929")} AS z1
-         |      FROM (
-         |        SELECT CAST(r AS UBIGINT) AS b,
-         |               CAST((CAST(r AS HUGEINT) + 11400714819323198485) % 18446744073709551616 AS UBIGINT) AS z0
-         |        FROM range(256) t(r))))),
-         |bytes AS (
-         |  SELECT doc_id, CAST(i AS BIGINT) AS i,
-         |         CAST(ascii(substr(text, CAST(i AS INT), 1)) AS UBIGINT) AS b,
-         |         CAST(length(text) AS BIGINT) AS n
-         |  FROM documents, unnest(generate_series(1, length(text))) t(i)),
-         |walk AS (
-         |  SELECT doc_id, CAST(0 AS BIGINT) AS i, CAST(0 AS UBIGINT) AS h,
-         |         CAST(1 AS BIGINT) AS start, TRUE AS bnd, CAST(length(text) AS BIGINT) AS n
-         |  FROM documents WHERE length(text) > 0
-         |  UNION ALL
-         |  SELECT doc_id, i, h, start,
-         |         ((i - start + 1) >= 8 AND (h & 17870283321406128128) = 0)
-         |           OR (i - start + 1) >= 128 OR i = n AS bnd, n
-         |  FROM (
-         |    SELECT w.doc_id, b.i,
-         |           CAST((CAST(w.h AS HUGEINT) * 2 + CAST(g.g AS HUGEINT))
-         |                % 18446744073709551616 AS UBIGINT) AS h,
-         |           CASE WHEN w.bnd THEN w.i + 1 ELSE w.start END AS start,
-         |           b.n
-         |    FROM walk w
-         |    JOIN bytes b ON b.doc_id = w.doc_id AND b.i = w.i + 1
-         |    JOIN gearq g ON g.b = b.b)),
-         |chunks AS (
-         |  SELECT w.doc_id,
-         |    ${fnvSql("list_transform(generate_series(CAST(w.start AS INT), CAST(w.i AS INT)), j -> CAST(ascii(substr(d.text, j, 1)) AS HUGEINT))")} AS fpu
-         |  FROM walk w JOIN documents d USING (doc_id)
-         |  WHERE w.bnd AND w.i > 0)
-         |SELECT ${toSignedSql("fpu")} AS chunk,
-         |       count(*) AS n_copies, count(DISTINCT doc_id) AS n_docs, min(doc_id) AS first_id
-         |FROM chunks GROUP BY 1 HAVING count(*) > 1 ORDER BY chunk""".stripMargin,
-    "doc_logfreq" ->
-      """WITH terms AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |freq AS (SELECT term, count(*) AS tf FROM terms GROUP BY term)
-        |SELECT doc_id, count(*) AS n_tokens,
-        |       round(CAST(sum(CAST(round(log10(tf), 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |             / count(*), 6) AS logfreq_score
-        |FROM terms JOIN freq USING (term)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-    // Same logfreq derivation with the stratum carried through, then
-    // per-language continuous-quantile cut points and the bucket
-    // when-chain. quantile_cont and Spark's exact percentile agree on
-    // pos = p·(n−1) linear interpolation; comparing 6-dp scores against
-    // the cut keeps bucket membership stable at the last ulp.
-    "doc_logfreq_buckets" ->
-      """WITH terms AS (
-        |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS term FROM documents),
-        |freq AS (SELECT term, count(*) AS tf FROM terms GROUP BY term),
-        |scored AS (
-        |  SELECT doc_id, lang,
-        |         round(CAST(sum(CAST(round(log10(tf), 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |               / count(*), 6) AS logfreq_score
-        |  FROM terms JOIN freq USING (term)
-        |  GROUP BY doc_id, lang),
-        |thr AS (
-        |  SELECT lang, quantile_cont(logfreq_score, 1.0/3) AS t1,
-        |               quantile_cont(logfreq_score, 2.0/3) AS t2
-        |  FROM scored GROUP BY lang)
-        |SELECT s.doc_id, s.lang, s.logfreq_score,
-        |       CAST(CASE WHEN s.logfreq_score < t.t1 THEN 0
-        |                 WHEN s.logfreq_score < t.t2 THEN 1
-        |                 ELSE 2 END AS BIGINT) AS bucket
-        |FROM scored s JOIN thr t USING (lang)
-        |ORDER BY doc_id""".stripMargin,
-    // Both lists rebuilt, then the RBO sum with the SAME chained
-    // p-powers (left-multiplied 0.9e0 chains — no pow()) and
-    // nano-quantized terms.
-    "retrieval_rbo" -> {
-      val pwCase = (1 to 10).map { d =>
-        val chain =
-          if (d == 1) "1e0" else Seq.fill(d - 1)("0.9e0").mkString(" * ")
-        s"WHEN $d THEN $chain"
-      }.mkString(" ")
-      s"""$bm25Ctes,
-         |lex AS (
-         |  SELECT doc_id, CAST(row_number() OVER
-         |    (ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rnk
-         |  FROM bm25 ORDER BY score DESC, doc_id LIMIT 10),
-         |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings
-         |       WHERE vec_id = 0),
-         |vscore AS (
-         |  SELECT e.vec_id AS doc_id, round($CosExpr, 6) AS cos
-         |  FROM embeddings e, qv),
-         |vec AS (
-         |  SELECT doc_id, CAST(row_number() OVER
-         |    (ORDER BY cos DESC, doc_id) AS BIGINT) AS vec_rnk
-         |  FROM vscore ORDER BY cos DESC, doc_id LIMIT 10),
-         |j AS (
-         |  SELECT CAST(GREATEST(l.lex_rnk, v.vec_rnk) AS BIGINT) AS m
-         |  FROM lex l JOIN vec v USING (doc_id)
-         |  WHERE GREATEST(l.lex_rnk, v.vec_rnk) <= 10),
-         |xd AS (
-         |  SELECT CAST(d AS BIGINT) AS d, CAST(COUNT(*) AS BIGINT) AS x
-         |  FROM j, unnest(generate_series(CAST(m AS INT), 10)) t(d)
-         |  GROUP BY 1),
-         |terms AS (
-         |  SELECT d, x,
-         |         CASE WHEN d = 10 THEN x ELSE 0 END AS xk,
-         |         CAST(floor((CASE d $pwCase END) * x / d * 1e9 + 0.5)
-         |              AS BIGINT) AS term_nano
-         |  FROM xd),
-         |agg AS (SELECT CAST(COALESCE(SUM(xk), 0) AS BIGINT) AS n_common,
-         |               CAST(COALESCE(SUM(term_nano), 0) AS BIGINT) AS s
-         |        FROM terms)
-         |SELECT CAST(0 AS BIGINT) AS query_id, n_common,
-         |       round((1e0 - 0.9e0) * (CAST(s AS DOUBLE) / 1e9), 6) AS rbo
-         |FROM agg""".stripMargin
-    },
-    // The same buckets/fingerprints; tie-free window (bucket is the
-    // group key) so RANGE == ROWS.
-    "corpus_saturation" ->
-      """WITH mx AS (SELECT CAST(MAX(doc_id) AS BIGINT) AS m FROM documents),
-        |tk AS (
-        |  SELECT doc_id,
-        |         list_filter(string_split(COALESCE(text, ''), ' '),
-        |                     t -> t != '') AS toks
-        |  FROM documents),
-        |g AS (
-        |  SELECT (doc_id * 10) // (mx.m + 1) AS b,
-        |         md5(array_to_string(
-        |           toks[CAST(i AS INT):CAST(i + 2 AS INT)], ' ')) AS g
-        |  FROM tk, mx, unnest(generate_series(1, len(toks) - 2)) t(i)),
-        |pb AS (SELECT DISTINCT b, g FROM g),
-        |ib AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS n_grams FROM pb GROUP BY 1),
-        |fs AS (SELECT g, MIN(b) AS b FROM pb GROUP BY 1),
-        |ng AS (SELECT b, CAST(COUNT(*) AS BIGINT) AS new_grams FROM fs GROUP BY 1),
-        |j AS (
-        |  SELECT ib.b AS bucket, ib.n_grams,
-        |         CAST(COALESCE(ng.new_grams, 0) AS BIGINT) AS new_grams
-        |  FROM ib LEFT JOIN ng ON ib.b = ng.b)
-        |SELECT bucket, n_grams, new_grams,
-        |       CAST(SUM(new_grams) OVER (ORDER BY bucket) AS BIGINT) AS cum_new,
-        |       CAST(CAST(new_grams AS HUGEINT) * 1000000 // n_grams AS BIGINT)
-        |         AS novelty_micro
-        |FROM j ORDER BY bucket""".stripMargin,
-    // Postings stats replayed: the same term-partitioned lag window.
-    "retrieval_postings" ->
-      """WITH posting AS (
-        |  SELECT term, doc, CAST(COUNT(*) AS BIGINT) AS tf FROM (
-        |    SELECT doc_id AS doc,
-        |           unnest(list_filter(string_split(COALESCE(text, ''), ' '),
-        |                              t -> t != '')) AS term
-        |    FROM documents) GROUP BY 1, 2),
-        |g AS (
-        |  SELECT term, doc, tf,
-        |         doc - COALESCE(lag(doc) OVER
-        |           (PARTITION BY term ORDER BY doc), doc) AS gap
-        |  FROM posting),
-        |a AS (
-        |  SELECT term, CAST(COUNT(*) AS BIGINT) AS df,
-        |         CAST(SUM(tf) AS BIGINT) AS cf,
-        |         CAST(MIN(doc) AS BIGINT) AS first_doc,
-        |         CAST(MAX(doc) AS BIGINT) AS last_doc,
-        |         CAST(MAX(gap) AS BIGINT) AS max_gap
-        |  FROM g GROUP BY 1)
-        |SELECT term, df, cf, first_doc, last_doc, max_gap,
-        |       CAST(row_number() OVER (ORDER BY df DESC, term) AS BIGINT)
-        |         AS rnk
-        |FROM a ORDER BY df DESC, term LIMIT 20""".stripMargin,
-    // Bigram/unigram counts and the HUGEINT lift mirror of the
-    // DECIMAL(38,0) integral division on the Spark side.
-    "text_collocations" ->
-      """WITH tk AS (
-        |  SELECT list_filter(string_split(COALESCE(text, ''), ' '),
-        |                     t -> t != '') AS toks FROM documents),
-        |uni AS (SELECT unnest(toks) AS term FROM tk),
-        |uc AS (SELECT term, CAST(COUNT(*) AS BIGINT) AS cnt FROM uni GROUP BY 1),
-        |bg AS (
-        |  SELECT toks[CAST(i AS INT)] AS term_a,
-        |         toks[CAST(i + 1 AS INT)] AS term_b
-        |  FROM tk, unnest(generate_series(1, len(toks) - 1)) t(i)),
-        |bc AS (SELECT term_a, term_b, CAST(COUNT(*) AS BIGINT) AS n_ab
-        |       FROM bg GROUP BY 1, 2),
-        |tot AS (SELECT (SELECT CAST(SUM(cnt) AS BIGINT) FROM uc) AS n,
-        |               (SELECT CAST(SUM(n_ab) AS BIGINT) FROM bc) AS b),
-        |l AS (
-        |  SELECT bc.term_a, bc.term_b, bc.n_ab, ua.cnt AS n_a, ub.cnt AS n_b,
-        |         CAST(CAST(bc.n_ab AS HUGEINT) * t.n * t.n * 1000000 //
-        |              (CAST(t.b AS HUGEINT) * ua.cnt * ub.cnt) AS BIGINT)
-        |           AS lift_micro
-        |  FROM bc
-        |  JOIN uc ua ON bc.term_a = ua.term
-        |  JOIN uc ub ON bc.term_b = ub.term, tot t
-        |  WHERE bc.n_ab >= 5)
-        |SELECT term_a, term_b, n_ab, n_a, n_b, lift_micro,
-        |       CAST(row_number() OVER
-        |         (ORDER BY lift_micro DESC, term_a, term_b) AS BIGINT) AS rnk
-        |FROM l ORDER BY lift_micro DESC, term_a, term_b LIMIT 20""".stripMargin,
-    "tfidf_top_terms" ->
-      """WITH terms AS (
-        |  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-        |tf AS (SELECT doc_id, term, count(*) AS tf FROM terms GROUP BY doc_id, term),
-        |df AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM terms) GROUP BY term),
-        |n AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM documents),
-        |scored AS (
-        |  SELECT tf.doc_id, tf.term, tf.tf, df.df,
-        |         round(tf.tf * ln(n.n / df.df), 6) AS tfidf
-        |  FROM tf JOIN df USING (term), n),
-        |ranked AS (
-        |  SELECT doc_id, term, tf, df, tfidf,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY tfidf DESC, term) AS rnk
-        |  FROM scored)
-        |SELECT doc_id, term, tf, df, tfidf, rnk FROM ranked
-        |WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-    "bpe_fit" -> s"""$BpeCtes
-       |SELECT * FROM ($BpeMergesSelect)
-       |ORDER BY rank""".stripMargin,
-    "wordpiece_fit" -> s"""$WpCtes
-       |SELECT * FROM ($WpMergesSelect)
-       |ORDER BY rank""".stripMargin,
-    // Three independently-scoped WITH chains (the BPE and unigram
-    // chains share CTE names), each re-training its tokenizer and
-    // rolling the corpus up to one card row.
-    "tokenizer_compare" -> s"""SELECT * FROM (
-       |($BpeCtes,
-       |bpe_mg AS MATERIALIZED (
-       |${(1 to Bpe.MergeRounds).map(k => s"  SELECT $k AS rk, l AS ml, r AS mr FROM b$k").mkString("\n  UNION ALL\n")}),
-       |bpe_dw AS MATERIALIZED (SELECT DISTINCT word FROM bpe_tk),
-       |bpe_rec AS (
-       |  SELECT word, rtrim(regexp_replace(word, '(?s)(.)', '\\1 ', 'g'), ' ') AS seq, 0 AS k
-       |  FROM bpe_dw
-       |  UNION ALL
-       |  SELECT q.word,
-       |         list_reduce(string_split(q.seq, ' '), (acc, x) ->
-       |           CASE WHEN x = m.mr AND (acc = m.ml OR ends_with(acc, ' ' || m.ml))
-       |                THEN acc || m.mr ELSE acc || ' ' || x END) AS seq,
-       |         q.k + 1
-       |  FROM bpe_rec q JOIN bpe_mg m ON m.rk = q.k + 1),
-       |bpe_seg AS MATERIALIZED (
-       |  SELECT word, CAST(len(string_split(seq, ' ')) AS BIGINT) AS nsub
-       |  FROM bpe_rec WHERE k = ${Bpe.MergeRounds})
-       |SELECT 'bpe' AS tokenizer,
-       |       CAST(count(*) AS BIGINT) AS n_words,
-       |       CAST(sum(s.nsub) AS BIGINT) AS n_tokens,
-       |       CAST(sum(strlen(t.word)) AS BIGINT) AS n_text_bytes,
-       |       CAST(0 AS BIGINT) AS n_fallback,
-       |       round(sum(s.nsub) * 1.0 / count(*), 6) AS fertility,
-       |       round(sum(strlen(t.word)) * 1.0 / sum(s.nsub), 6) AS bytes_per_token
-       |FROM bpe_tk t JOIN bpe_seg s USING (word))
-       |UNION ALL
-       |(${unigramDpCtes(4, 16)},
-       |uf AS (SELECT word, CASE len(word) ${(1 to 16).map(i => s"WHEN $i THEN dp$i").mkString(" ")} END AS f
-       |       FROM d16),
-       |useg AS (SELECT word, 31 - (((f % 32) + 32) % 32) AS np FROM uf)
-       |SELECT 'unigram' AS tokenizer,
-       |       CAST(count(*) AS BIGINT) AS n_words,
-       |       CAST(sum(coalesce(s.np, 1)) AS BIGINT) AS n_tokens,
-       |       CAST(sum(strlen(t.w)) AS BIGINT) AS n_text_bytes,
-       |       CAST(sum(CASE WHEN s.np IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_fallback,
-       |       round(sum(coalesce(s.np, 1)) * 1.0 / count(*), 6) AS fertility,
-       |       round(sum(strlen(t.w)) * 1.0 / sum(coalesce(s.np, 1)), 6) AS bytes_per_token
-       |FROM w2 t JOIN useg s ON s.word = t.w)
-       |UNION ALL
-       |($WpCtes,
-       |wp_vb AS MATERIALIZED (
-       |  SELECT DISTINCT x AS tok FROM (SELECT unnest(string_split(seq, ' ')) AS x FROM v0)
-       |  UNION
-       |${(1 to WordPiece.MergeRounds).map(k => s"  SELECT l || substr(r, 3) FROM vb$k").mkString("\n  UNION\n")}),
-       |wp_v AS MATERIALIZED (
-       |  SELECT tok,
-       |         CASE WHEN tok LIKE '##%' AND length(tok) > 2
-       |              THEN substr(tok, 3) ELSE tok END AS raw,
-       |         tok LIKE '##%' AND length(tok) > 2 AS cont
-       |  FROM wp_vb),
-       |wp_dw AS MATERIALIZED (SELECT DISTINCT word FROM wp_tk),
-       |wp_bm AS MATERIALIZED (
-       |  SELECT w.word, p.pos, max(length(v.raw)) AS best
-       |  FROM wp_dw w,
-       |       LATERAL (SELECT unnest(generate_series(1, length(w.word))) AS pos) p,
-       |       wp_v v
-       |  WHERE v.cont = (p.pos > 1)
-       |    AND substr(w.word, p.pos, length(v.raw)) = v.raw
-       |  GROUP BY 1, 2),
-       |wp_rec AS (
-       |  SELECT word, 1 AS pos, 0 AS np, false AS unk, length(word) AS lw
-       |  FROM wp_dw
-       |  UNION ALL
-       |  SELECT r.word,
-       |         CASE WHEN b.best IS NULL THEN r.lw + 1 ELSE r.pos + b.best END,
-       |         CASE WHEN b.best IS NULL THEN 1 ELSE r.np + 1 END,
-       |         b.best IS NULL,
-       |         r.lw
-       |  FROM wp_rec r LEFT JOIN wp_bm b ON b.word = r.word AND b.pos = r.pos
-       |  WHERE r.pos <= r.lw AND NOT r.unk),
-       |wp_seg AS MATERIALIZED (
-       |  SELECT word, CAST(np AS BIGINT) AS nsub, unk
-       |  FROM wp_rec WHERE pos > lw OR unk)
-       |SELECT 'wordpiece' AS tokenizer,
-       |       CAST(count(*) AS BIGINT) AS n_words,
-       |       CAST(sum(s.nsub) AS BIGINT) AS n_tokens,
-       |       CAST(sum(strlen(t.word)) AS BIGINT) AS n_text_bytes,
-       |       CAST(sum(CASE WHEN s.unk THEN 1 ELSE 0 END) AS BIGINT) AS n_fallback,
-       |       round(sum(s.nsub) * 1.0 / count(*), 6) AS fertility,
-       |       round(sum(strlen(t.word)) * 1.0 / sum(s.nsub), 6) AS bytes_per_token
-       |FROM wp_tk t JOIN wp_seg s USING (word))
-       |) ORDER BY tokenizer""".stripMargin,
-    // Inference replay: vocab = v0 alphabet ∪ merged tokens. The
-    // greedy choice at (word, pos) is path-independent, so the
-    // longest matching vocab entry of the right word-position class
-    // is precomputed per position as a plain lookup relation (wp_bm;
-    // a correlated subquery inside this deep recursive chain
-    // silently yields NULL in DuckDB), and the recursion walks it
-    // with a LEFT JOIN, collapsing to a 1-piece [UNK] word when no
-    // entry matches — decision-for-decision the wordpiece_apply
-    // kernel.
-    "wordpiece_tokenize" -> s"""$WpCtes,
-       |wp_vb AS MATERIALIZED (
-       |  SELECT DISTINCT x AS tok FROM (SELECT unnest(string_split(seq, ' ')) AS x FROM v0)
-       |  UNION
-       |${(1 to WordPiece.MergeRounds).map(k => s"  SELECT l || substr(r, 3) FROM vb$k").mkString("\n  UNION\n")}),
-       |wp_v AS MATERIALIZED (
-       |  SELECT tok,
-       |         CASE WHEN tok LIKE '##%' AND length(tok) > 2
-       |              THEN substr(tok, 3) ELSE tok END AS raw,
-       |         tok LIKE '##%' AND length(tok) > 2 AS cont
-       |  FROM wp_vb),
-       |wp_dw AS MATERIALIZED (SELECT DISTINCT word FROM wp_tk),
-       |wp_bm AS MATERIALIZED (
-       |  SELECT w.word, p.pos, max(length(v.raw)) AS best
-       |  FROM wp_dw w,
-       |       LATERAL (SELECT unnest(generate_series(1, length(w.word))) AS pos) p,
-       |       wp_v v
-       |  WHERE v.cont = (p.pos > 1)
-       |    AND substr(w.word, p.pos, length(v.raw)) = v.raw
-       |  GROUP BY 1, 2),
-       |wp_rec AS (
-       |  SELECT word, 1 AS pos, 0 AS np, false AS unk, length(word) AS lw
-       |  FROM wp_dw
-       |  UNION ALL
-       |  SELECT r.word,
-       |         CASE WHEN b.best IS NULL THEN r.lw + 1 ELSE r.pos + b.best END,
-       |         CASE WHEN b.best IS NULL THEN 1 ELSE r.np + 1 END,
-       |         b.best IS NULL,
-       |         r.lw
-       |  FROM wp_rec r LEFT JOIN wp_bm b ON b.word = r.word AND b.pos = r.pos
-       |  WHERE r.pos <= r.lw AND NOT r.unk),
-       |wp_seg AS MATERIALIZED (
-       |  SELECT word, CAST(np AS BIGINT) AS nsub, unk
-       |  FROM wp_rec WHERE pos > lw OR unk)
-       |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |       CAST(sum(s.nsub) AS BIGINT) AS n_subwords,
-       |       CAST(sum(CASE WHEN s.unk THEN 1 ELSE 0 END) AS BIGINT) AS n_unk,
-       |       round(sum(s.nsub) * 1.0 / count(*), 6) AS fertility
-       |FROM wp_tk t JOIN wp_seg s USING (word)
-       |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    "bpe_vocab" -> s"""$BpeCtes
-       |SELECT token, CAST(sum(cnt) AS BIGINT) AS freq FROM (
-       |  SELECT unnest(string_split(seq, ' ')) AS token, cnt FROM w${Bpe.MergeRounds})
-       |GROUP BY token ORDER BY freq DESC, token LIMIT ${Bpe.VocabLimit}""".stripMargin,
-    // Application as a recursive CTE over the merge ranks: each step is
-    // the same list_reduce fold the training rounds use, driven by the
-    // b1..bN argmax rows — so segmentation in SQL replays the Scala
-    // kernel decision-for-decision over the DISTINCT-words relation.
-    "bpe_tokenize" -> s"""$BpeCtes,
-       |bpe_mg AS MATERIALIZED (
-       |${(1 to Bpe.MergeRounds).map(k => s"  SELECT $k AS rk, l AS ml, r AS mr FROM b$k").mkString("\n  UNION ALL\n")}),
-       |bpe_dw AS MATERIALIZED (SELECT DISTINCT word FROM bpe_tk),
-       |bpe_rec AS (
-       |  SELECT word, rtrim(regexp_replace(word, '(?s)(.)', '\\1 ', 'g'), ' ') AS seq, 0 AS k
-       |  FROM bpe_dw
-       |  UNION ALL
-       |  SELECT q.word,
-       |         list_reduce(string_split(q.seq, ' '), (acc, x) ->
-       |           CASE WHEN x = m.mr AND (acc = m.ml OR ends_with(acc, ' ' || m.ml))
-       |                THEN acc || m.mr ELSE acc || ' ' || x END) AS seq,
-       |         q.k + 1
-       |  FROM bpe_rec q JOIN bpe_mg m ON m.rk = q.k + 1),
-       |bpe_seg AS MATERIALIZED (
-       |  SELECT word, CAST(len(string_split(seq, ' ')) AS BIGINT) AS nsub
-       |  FROM bpe_rec WHERE k = ${Bpe.MergeRounds})
-       |SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |       CAST(sum(s.nsub) AS BIGINT) AS n_subwords,
-       |       round(sum(s.nsub) * 1.0 / count(*), 6) AS fertility
-       |FROM bpe_tk t JOIN bpe_seg s USING (word)
-       |GROUP BY t.doc_id ORDER BY t.doc_id""".stripMargin,
-    // Same segmentation replay, rolled up per language with byte
-    // counts (DuckDB strlen = bytes).
-    "bpe_fertility_lang" -> s"""$BpeCtes,
-       |bpe_mg AS MATERIALIZED (
-       |${(1 to Bpe.MergeRounds).map(k => s"  SELECT $k AS rk, l AS ml, r AS mr FROM b$k").mkString("\n  UNION ALL\n")}),
-       |bpe_dw AS MATERIALIZED (SELECT DISTINCT word FROM bpe_tk),
-       |bpe_rec AS (
-       |  SELECT word, rtrim(regexp_replace(word, '(?s)(.)', '\\1 ', 'g'), ' ') AS seq, 0 AS k
-       |  FROM bpe_dw
-       |  UNION ALL
-       |  SELECT q.word,
-       |         list_reduce(string_split(q.seq, ' '), (acc, x) ->
-       |           CASE WHEN x = m.mr AND (acc = m.ml OR ends_with(acc, ' ' || m.ml))
-       |                THEN acc || m.mr ELSE acc || ' ' || x END) AS seq,
-       |         q.k + 1
-       |  FROM bpe_rec q JOIN bpe_mg m ON m.rk = q.k + 1),
-       |bpe_seg AS MATERIALIZED (
-       |  SELECT word, CAST(len(string_split(seq, ' ')) AS BIGINT) AS nsub
-       |  FROM bpe_rec WHERE k = ${Bpe.MergeRounds}),
-       |per_doc AS (
-       |  SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_words,
-       |         CAST(sum(s.nsub) AS BIGINT) AS n_subwords
-       |  FROM bpe_tk t JOIN bpe_seg s USING (word) GROUP BY t.doc_id)
-       |SELECT d.lang, CAST(COUNT(*) AS BIGINT) AS n_docs,
-       |       CAST(SUM(p.n_words) AS BIGINT) AS n_words,
-       |       CAST(SUM(p.n_subwords) AS BIGINT) AS n_subwords,
-       |       CAST(SUM(strlen(d.text)) AS BIGINT) AS n_bytes,
-       |       CAST(CAST(SUM(p.n_subwords) AS HUGEINT) * 1000000 //
-       |            SUM(p.n_words) AS BIGINT) AS fertility_micro,
-       |       CAST(CAST(SUM(strlen(d.text)) AS HUGEINT) * 1000000 //
-       |            SUM(p.n_subwords) AS BIGINT) AS bytes_per_token_micro
-       |FROM per_doc p JOIN documents d USING (doc_id)
-       |GROUP BY 1 ORDER BY lang""".stripMargin,
-    // Exact integer k-means re-run move-for-move (KMeansCtes): the
-    // model card joins the trained centroids to final-assignment
-    // sizes (empty cluster → 0 members, centroid retained).
-    "kmeans_fit" -> s"""$KMeansCtes
-       |SELECT c.cluster, CAST(COALESCE(sz.n, 0) AS BIGINT) AS n_members,
-       |       c.pos AS dim, c.v AS c_micro
-       |FROM c${KMeansExact.Iters} c
-       |LEFT JOIN (SELECT cluster, count(*) AS n FROM afin GROUP BY cluster) sz
-       |  ON c.cluster = sz.cluster
-       |ORDER BY c.cluster, dim""".stripMargin,
-    "kmeans_assign" -> s"""$KMeansCtes
-       |SELECT id AS vec_id, cluster, CAST(d2 AS BIGINT) AS dist2
-       |FROM afin ORDER BY vec_id""".stripMargin,
-    "kmeans_silhouette" -> s"""$KMeansCtes,
-       |ad AS (
-       |  SELECT qd.id, c.cluster,
-       |         CAST(sum((qd.v - c.v) * (qd.v - c.v)) AS BIGINT) AS d2
-       |  FROM qd JOIN c${KMeansExact.Iters} c ON qd.pos = c.pos
-       |  GROUP BY 1, 2),
-       |own AS (SELECT id, cluster, CAST(d2 AS BIGINT) AS d2a FROM afin),
-       |oth AS (SELECT ad.id, min(ad.d2) AS d2b
-       |        FROM ad JOIN afin a ON ad.id = a.id AND ad.cluster <> a.cluster
-       |        GROUP BY ad.id),
-       |sil AS (
-       |  SELECT o.cluster,
-       |         CASE WHEN greatest(o.d2a, t.d2b) = 0 THEN 0.0
-       |              ELSE round(
-       |                (sqrt(CAST(t.d2b AS DOUBLE)) - sqrt(CAST(o.d2a AS DOUBLE))) /
-       |                greatest(sqrt(CAST(t.d2b AS DOUBLE)),
-       |                         sqrt(CAST(o.d2a AS DOUBLE))), 6) END AS s
-       |  FROM own o JOIN oth t USING (id))
-       |SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-       |       round(CAST(sum(CAST(s AS DECIMAL(28,6))) AS DOUBLE) / count(*), 6)
-       |         AS mean_silhouette
-       |FROM sil GROUP BY cluster ORDER BY cluster""".stripMargin,
-    // DBSCAN replayed from the quadratic definition: all-pairs ball
-    // test on the µ-quantized 2-D projection, core = count ≥ minPts
-    // (self included), components via a recursive min-label CTE,
-    // border = min neighbor-core label, the rest noise.
-    "cluster_dbscan" -> s"""$DbscanCtes
-       |SELECT id AS vec_id, cluster, 'core' AS role FROM cl
-       |UNION ALL
-       |SELECT id, cluster, 'border' FROM bl
-       |UNION ALL
-       |SELECT id, CAST(-1 AS BIGINT), 'noise' FROM p
-       |WHERE id NOT IN (SELECT id FROM cl) AND id NOT IN (SELECT id FROM bl)
-       |ORDER BY vec_id""".stripMargin,
-    "cluster_dbscan_card" -> s"""$DbscanCtes,
-       |allr AS (
-       |  SELECT id, cluster, 'core' AS role FROM cl
-       |  UNION ALL
-       |  SELECT id, cluster, 'border' FROM bl
-       |  UNION ALL
-       |  SELECT id, CAST(-1 AS BIGINT), 'noise' FROM p
-       |  WHERE id NOT IN (SELECT id FROM cl) AND id NOT IN (SELECT id FROM bl))
-       |SELECT cluster, CAST(count(*) AS BIGINT) AS n,
-       |       CAST(sum(CASE WHEN role = 'core' THEN 1 ELSE 0 END) AS BIGINT)
-       |         AS n_core,
-       |       CAST(sum(CASE WHEN role = 'border' THEN 1 ELSE 0 END) AS BIGINT)
-       |         AS n_border
-       |FROM allr GROUP BY cluster ORDER BY cluster""".stripMargin,
-    "embedding_ot_drift" -> OtDriftOracle,
-    "embedding_js_divergence" -> s"""$KMeansCtes,
-       |jj AS (SELECT d.source, a.cluster
-       |       FROM afin a JOIN documents d ON a.id = d.doc_id),
-       |aa AS (SELECT source, cluster, CAST(count(*) AS BIGINT) AS a
-       |       FROM jj GROUP BY 1, 2),
-       |bb AS (SELECT cluster, CAST(count(*) AS BIGINT) AS b FROM jj GROUP BY 1),
-       |btotr AS (SELECT CAST(sum(b) AS BIGINT) AS btot FROM bb),
-       |srcs AS (SELECT DISTINCT source FROM aa),
-       |grid AS (
-       |  SELECT s.source, bb.cluster, coalesce(aa.a, 0) AS a, bb.b
-       |  FROM srcs s CROSS JOIN bb
-       |  LEFT JOIN aa ON aa.source = s.source AND aa.cluster = bb.cluster),
-       |atotr AS (SELECT source, CAST(sum(a) AS BIGINT) AS atot
-       |          FROM grid GROUP BY 1),
-       |terms AS (
-       |  SELECT g.source, t.atot, bt.btot,
-       |    CASE WHEN g.a > 0 THEN g.a * CAST(round(
-       |      ln((2.0 * (g.a * bt.btot)) / (g.a * bt.btot + g.b * t.atot))
-       |      * 1000000.0) AS BIGINT) ELSE 0 END AS t1,
-       |    g.b * CAST(round(
-       |      ln((2.0 * (g.b * t.atot)) / (g.a * bt.btot + g.b * t.atot))
-       |      * 1000000.0) AS BIGINT) AS t2
-       |  FROM grid g JOIN atotr t USING (source) CROSS JOIN btotr bt)
-       |SELECT source, atot AS n_vecs,
-       |       CAST(greatest(sum(t1), 0) // (2 * atot) +
-       |            greatest(sum(t2), 0) // (2 * btot) AS BIGINT) AS js_micro
-       |FROM terms GROUP BY source, atot, btot ORDER BY source""".stripMargin,
-    // Okapi BM25 recomputed op-for-op: smoothed idf, dl/avgdl length
-    // norm with avgdl from an exact integer token sum, contributions
-    // rounded @6 then summed in DECIMAL — same determinism convention
-    // as doc_logfreq.
-    "retrieval_bm25" ->
-      s"""$bm25Ctes
-         |SELECT doc_id, n_terms, score,
-         |       CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-         |FROM bm25 ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-    "retrieval_ql_dirichlet" ->
-      """WITH stats AS (
-        |  SELECT CAST(sum(length(string_split(text, ' '))) AS BIGINT) AS sumdl
-        |  FROM documents),
-        |toks AS (
-        |  SELECT doc_id, CAST(length(string_split(text, ' ')) AS BIGINT) AS dl,
-        |         unnest(string_split(text, ' ')) AS term
-        |  FROM documents),
-        |tfq AS (
-        |  SELECT doc_id, dl, term, count(*) AS tf FROM toks
-        |  WHERE term IN ('dup', 'hash', 'merge') GROUP BY doc_id, dl, term),
-        |cfq AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tfq GROUP BY term),
-        |qc AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS nq,
-        |         sum(CAST(round(ln(2000.0e0 *
-        |           (CAST(cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))), 6)
-        |           AS DECIMAL(28,6))) AS c0
-        |  FROM cfq, stats s),
-        |ql AS (
-        |  SELECT t.doc_id, CAST(count(*) AS BIGINT) AS n_terms, t.dl,
-        |         sum(CAST(round(
-        |           ln(t.tf + 2000.0e0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))) -
-        |           ln(2000.0e0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))), 6)
-        |           AS DECIMAL(28,6))) AS sd
-        |  FROM tfq t JOIN cfq c USING (term), stats s
-        |  GROUP BY t.doc_id, t.dl),
-        |sc AS (
-        |  SELECT doc_id, n_terms,
-        |         CAST(sd + qc.c0 - CAST(round(qc.nq * ln(CAST(dl AS DOUBLE) + 2000.0e0), 6)
-        |              AS DECIMAL(28,6)) AS DOUBLE) AS score
-        |  FROM ql, qc)
-        |SELECT doc_id, n_terms, score,
-        |       CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-        |FROM sc ORDER BY score DESC, doc_id LIMIT 10""".stripMargin,
-    // Kendall τ replay: BM25 and QL top-20 from their shared scoring
-    // CTEs, concordant/discordant over the common-doc pair join, τ as
-    // the identical rounded double division.
-    "eval_kendall" ->
-      s"""$bm25Ctes,
-         |cfq AS (SELECT term, CAST(sum(tf) AS BIGINT) AS cf FROM tfq GROUP BY term),
-         |qc AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS nq,
-         |         sum(CAST(round(ln(2000.0e0 *
-         |           (CAST(cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))), 6)
-         |           AS DECIMAL(28,6))) AS c0
-         |  FROM cfq, stats s),
-         |ql AS (
-         |  SELECT t.doc_id, t.dl,
-         |         sum(CAST(round(
-         |           ln(t.tf + 2000.0e0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))) -
-         |           ln(2000.0e0 * (CAST(c.cf AS DOUBLE) / CAST(s.sumdl AS DOUBLE))), 6)
-         |           AS DECIMAL(28,6))) AS sd
-         |  FROM tfq t JOIN cfq c USING (term), stats s
-         |  GROUP BY t.doc_id, t.dl),
-         |sc AS (
-         |  SELECT doc_id,
-         |         CAST(sd + qc.c0 - CAST(round(qc.nq * ln(CAST(dl AS DOUBLE) + 2000.0e0), 6)
-         |              AS DECIMAL(28,6)) AS DOUBLE) AS score
-         |  FROM ql, qc),
-         |la AS (
-         |  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS ra
-         |  FROM bm25 ORDER BY score DESC, doc_id LIMIT 20),
-         |lb AS (
-         |  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rb
-         |  FROM sc ORDER BY score DESC, doc_id LIMIT 20),
-         |cm AS (SELECT la.doc_id AS id, ra, rb FROM la JOIN lb USING (doc_id)),
-         |cd AS (
-         |  SELECT CAST(coalesce(sum(CASE WHEN (x.ra < y.ra) = (x.rb < y.rb)
-         |                                THEN 1 ELSE 0 END), 0) AS BIGINT) AS concordant,
-         |         CAST(coalesce(sum(CASE WHEN (x.ra < y.ra) <> (x.rb < y.rb)
-         |                                THEN 1 ELSE 0 END), 0) AS BIGINT) AS discordant
-         |  FROM cm x JOIN cm y ON x.id < y.id),
-         |cnts AS (
-         |  SELECT (SELECT CAST(count(*) AS BIGINT) FROM la) AS n_a,
-         |         (SELECT CAST(count(*) AS BIGINT) FROM lb) AS n_b,
-         |         (SELECT CAST(count(*) AS BIGINT) FROM cm) AS n_common)
-         |SELECT c.n_a, c.n_b, c.n_common, d.concordant, d.discordant,
-         |       CASE WHEN c.n_common >= 2
-         |            THEN round(CAST(d.concordant - d.discordant AS DOUBLE) /
-         |                   (CAST(c.n_common AS DOUBLE) * (c.n_common - 1) / 2.0e0), 6)
-         |            ELSE 0.0e0 END AS tau
-         |FROM cnts c, cd d""".stripMargin,
-    // Top-20 BM25 ranking minus the all-terms relevance set = the
-    // hard negatives, re-derived with the same scoring CTEs.
-    "retrieval_hard_negatives" ->
-      s"""$bm25Ctes,
-         |ranked AS (
-         |  SELECT doc_id, score,
-         |         CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-         |  FROM bm25 ORDER BY score DESC, doc_id LIMIT 20),
-         |rel AS (
-         |  SELECT doc_id FROM documents
-         |  WHERE list_contains(string_split(text, ' '), 'dup')
-         |    AND list_contains(string_split(text, ' '), 'hash')
-         |    AND list_contains(string_split(text, ' '), 'merge'))
-         |SELECT r.rnk, r.doc_id AS neg_id, r.score
-         |FROM ranked r
-         |WHERE r.doc_id NOT IN (SELECT doc_id FROM rel)
-         |ORDER BY rnk""".stripMargin,
-    // Batched BM25 mirror: same contribution arithmetic as
-    // retrieval_bm25 with the (query, term) map as a VALUES relation;
-    // df stays per-term over the corpus (independent of the queries).
-    "retrieval_bm25_batch" ->
-      (bm25BatchCtes + """,
-        |ranked AS (
-        |  SELECT query_id, doc_id, score,
-        |         CAST(row_number() OVER (PARTITION BY query_id
-        |                ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-        |  FROM scored)
-        |SELECT query_id, doc_id, score, rnk FROM ranked
-        |WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin),
-    // Same batch-BM25 CTEs at k=10, then the integer micro-grid MRR:
-    // per-query min relevant rank, 10⁶ // r per query, // 3 for the mean.
-    "retrieval_mrr" ->
-      (bm25BatchCtes + """,
-        |ranked AS (
-        |  SELECT query_id, doc_id, rnk FROM (
-        |    SELECT query_id, doc_id,
-        |           CAST(row_number() OVER (PARTITION BY query_id
-        |                  ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-        |    FROM scored) WHERE rnk <= 10),
-        |judged AS (
-        |  SELECT r.query_id, r.rnk,
-        |         CASE r.query_id
-        |           WHEN 1 THEN list_contains(string_split(d.text, ' '), 'dup') AND
-        |                       list_contains(string_split(d.text, ' '), 'hash') AND
-        |                       list_contains(string_split(d.text, ' '), 'merge')
-        |           WHEN 2 THEN list_contains(string_split(d.text, ' '), 'vector') AND
-        |                       list_contains(string_split(d.text, ' '), 'spark') AND
-        |                       list_contains(string_split(d.text, ' '), 'window')
-        |           ELSE list_contains(string_split(d.text, ' '), 'dup') AND
-        |                list_contains(string_split(d.text, ' '), 'slow')
-        |         END AS rel
-        |  FROM ranked r JOIN documents d USING (doc_id)),
-        |firsts AS (
-        |  SELECT query_id,
-        |         min(CASE WHEN rel AND rnk <= 10 THEN rnk END) AS first_rel
-        |  FROM judged GROUP BY query_id)
-        |SELECT CAST(3 AS BIGINT) AS n_queries,
-        |       CAST(coalesce(sum(CASE WHEN first_rel IS NOT NULL
-        |                              THEN 1 ELSE 0 END), 0) AS BIGINT)
-        |         AS n_answered,
-        |       CAST(coalesce(sum(1000000 // first_rel), 0) AS BIGINT)
-        |         AS sum_rr_micro,
-        |       CAST(coalesce(sum(1000000 // first_rel), 0) // 3 AS BIGINT)
-        |         AS mrr_micro
-        |FROM firsts""".stripMargin),
-    // MAP over the same batch: per-query cumulative precision at each
-    // relevant rank (window over k-bounded partitions), AP divided by
-    // min(corpus relevant count, k), mean over the 3-query batch.
-    "retrieval_map" ->
-      (bm25BatchCtes + """,
-        |ranked AS (
-        |  SELECT query_id, doc_id, rnk FROM (
-        |    SELECT query_id, doc_id,
-        |           CAST(row_number() OVER (PARTITION BY query_id
-        |                  ORDER BY score DESC, doc_id) AS BIGINT) AS rnk
-        |    FROM scored) WHERE rnk <= 10),
-        |rel3 AS (
-        |  SELECT doc_id,
-        |         (list_contains(string_split(text, ' '), 'dup') AND
-        |          list_contains(string_split(text, ' '), 'hash') AND
-        |          list_contains(string_split(text, ' '), 'merge')) AS r1,
-        |         (list_contains(string_split(text, ' '), 'vector') AND
-        |          list_contains(string_split(text, ' '), 'spark') AND
-        |          list_contains(string_split(text, ' '), 'window')) AS r2,
-        |         (list_contains(string_split(text, ' '), 'dup') AND
-        |          list_contains(string_split(text, ' '), 'slow')) AS r3
-        |  FROM documents),
-        |tot AS (
-        |  SELECT CAST(1 AS BIGINT) AS query_id,
-        |         CAST(sum(CASE WHEN r1 THEN 1 ELSE 0 END) AS BIGINT) AS n_rel
-        |  FROM rel3
-        |  UNION ALL
-        |  SELECT 2, CAST(sum(CASE WHEN r2 THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM rel3
-        |  UNION ALL
-        |  SELECT 3, CAST(sum(CASE WHEN r3 THEN 1 ELSE 0 END) AS BIGINT)
-        |  FROM rel3),
-        |judged AS (
-        |  SELECT r.query_id, r.rnk,
-        |         CASE r.query_id WHEN 1 THEN d.r1 WHEN 2 THEN d.r2
-        |              ELSE d.r3 END AS rel
-        |  FROM ranked r JOIN rel3 d USING (doc_id)),
-        |cum AS (
-        |  SELECT query_id, rnk, rel,
-        |         sum(CASE WHEN rel THEN 1 ELSE 0 END)
-        |           OVER (PARTITION BY query_id ORDER BY rnk) AS c
-        |  FROM judged),
-        |apq AS (
-        |  SELECT query_id,
-        |         CAST(sum((1000000 * c) // rnk) AS BIGINT) AS ap_num
-        |  FROM cum WHERE rel GROUP BY query_id),
-        |ap AS (
-        |  SELECT t.query_id,
-        |         CASE WHEN t.n_rel > 0
-        |              THEN coalesce(a.ap_num, 0) // least(t.n_rel, 10)
-        |              ELSE 0 END AS ap_micro
-        |  FROM tot t LEFT JOIN apq a USING (query_id))
-        |SELECT CAST(3 AS BIGINT) AS n_queries,
-        |       CAST(coalesce(sum(ap_micro), 0) AS BIGINT) AS sum_ap_micro,
-        |       CAST(coalesce(sum(ap_micro), 0) // 3 AS BIGINT) AS map_micro
-        |FROM ap""".stripMargin),
-    // RRF fusion of the exact BM25 top-20 and the exact cosine top-20
-    // (CosExpr — the same kernel mirror every knn oracle uses).
-    "retrieval_hybrid_rrf" ->
-      s"""$bm25Ctes,
-         |lex AS (
-         |  SELECT doc_id, CAST(row_number() OVER (ORDER BY score DESC, doc_id) AS BIGINT) AS lex_rnk
-         |  FROM bm25 ORDER BY score DESC, doc_id LIMIT 20),
-         |qv AS (SELECT CAST(embedding AS DOUBLE[]) AS q FROM embeddings WHERE vec_id = 0),
-         |vscore AS (
-         |  SELECT e.vec_id AS doc_id, round($CosExpr, 6) AS cos
-         |  FROM embeddings e, qv),
-         |vec AS (
-         |  SELECT doc_id, CAST(row_number() OVER (ORDER BY cos DESC, doc_id) AS BIGINT) AS vec_rnk
-         |  FROM vscore ORDER BY cos DESC, doc_id LIMIT 20),
-         |fused AS (
-         |  SELECT doc_id,
-         |         COALESCE(l.lex_rnk, 0) AS lex_rnk,
-         |         COALESCE(v.vec_rnk, 0) AS vec_rnk,
-         |         round(COALESCE(1.0 / (60 + l.lex_rnk), 0.0) +
-         |               COALESCE(1.0 / (60 + v.vec_rnk), 0.0), 6) AS rrf
-         |  FROM lex l FULL OUTER JOIN vec v USING (doc_id))
-         |SELECT doc_id, lex_rnk, vec_rnk, rrf,
-         |       CAST(row_number() OVER (ORDER BY rrf DESC, doc_id) AS BIGINT) AS rnk
-         |FROM fused ORDER BY rrf DESC, doc_id LIMIT 10""".stripMargin,
-    // The three greedy picks unrolled as CTE stages. Every MMR score
-    // is ONE multiply-subtract on 6-dp doubles with (1 - 0.7)
-    // COMPUTED (never a 0.3 literal), so the arithmetic is
-    // bit-identical to the Spark side's.
-    "retrieval_mmr" ->
-      """WITH base AS (
-        |  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        |q AS (SELECT vec_id AS g, v AS qv FROM base WHERE vec_id < 4),
-        |scored AS (
-        |  SELECT b.vec_id % 4 AS g, b.vec_id, b.v,
-        |         round(list_inner_product(b.v, q.qv) /
-        |               (sqrt(list_inner_product(b.v, b.v)) *
-        |                sqrt(list_inner_product(q.qv, q.qv))), 6) AS rel
-        |  FROM base b JOIN q ON b.vec_id % 4 = q.g),
-        |pool AS (
-        |  SELECT g, vec_id, v, rel FROM scored
-        |  QUALIFY row_number() OVER
-        |    (PARTITION BY g ORDER BY rel DESC, vec_id) <= 6),
-        |p1 AS (
-        |  SELECT g, vec_id AS id1, v AS v1, rel AS rel1 FROM pool
-        |  QUALIFY row_number() OVER
-        |    (PARTITION BY g ORDER BY rel DESC, vec_id) = 1),
-        |r2 AS (
-        |  SELECT c.g, c.vec_id, c.v, c.rel,
-        |         round(list_inner_product(c.v, p.v1) /
-        |               (sqrt(list_inner_product(c.v, c.v)) *
-        |                sqrt(list_inner_product(p.v1, p.v1))), 6) AS ms
-        |  FROM pool c JOIN p1 p USING (g) WHERE c.vec_id <> p.id1),
-        |p2 AS (
-        |  SELECT g, vec_id AS id2, v AS v2, rel AS rel2, ms AS ms2 FROM r2
-        |  QUALIFY row_number() OVER
-        |    (PARTITION BY g ORDER BY 0.7e0 * rel - (1e0 - 0.7e0) * ms DESC, vec_id)
-        |    = 1),
-        |r3 AS (
-        |  SELECT c.g, c.vec_id, c.v, c.rel,
-        |         greatest(
-        |           round(list_inner_product(c.v, a.v1) /
-        |                 (sqrt(list_inner_product(c.v, c.v)) *
-        |                  sqrt(list_inner_product(a.v1, a.v1))), 6),
-        |           round(list_inner_product(c.v, b.v2) /
-        |                 (sqrt(list_inner_product(c.v, c.v)) *
-        |                  sqrt(list_inner_product(b.v2, b.v2))), 6)) AS ms
-        |  FROM pool c JOIN p1 a USING (g) JOIN p2 b USING (g)
-        |  WHERE c.vec_id <> a.id1 AND c.vec_id <> b.id2),
-        |p3 AS (
-        |  SELECT g, vec_id AS id3, rel AS rel3, ms AS ms3 FROM r3
-        |  QUALIFY row_number() OVER
-        |    (PARTITION BY g ORDER BY 0.7e0 * rel - (1e0 - 0.7e0) * ms DESC, vec_id)
-        |    = 1),
-        |allp AS (
-        |  SELECT g, CAST(1 AS BIGINT) AS rnk, id1 AS vec_id, rel1 AS rel,
-        |         0.0 AS max_sim, 0.7e0 * rel1 - (1e0 - 0.7e0) * 0.0 AS mmr_score
-        |  FROM p1
-        |  UNION ALL
-        |  SELECT g, 2, id2, rel2, ms2, 0.7e0 * rel2 - (1e0 - 0.7e0) * ms2 FROM p2
-        |  UNION ALL
-        |  SELECT g, 3, id3, rel3, ms3, 0.7e0 * rel3 - (1e0 - 0.7e0) * ms3 FROM p3)
-        |SELECT g, rnk, vec_id, rel, max_sim, mmr_score
-        |FROM allp ORDER BY g, rnk""".stripMargin,
-    // Positional retrieval re-derived over DuckDB's indexed lambdas
-    // (1-based, matching the Spark side's i+1).
-    "retrieval_phrase" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '),
-        |                             t -> t != '') AS toks FROM documents),
-        |h AS (
-        |  SELECT doc_id, CAST(len(list_filter(
-        |    list_transform(generate_series(1, len(toks) - 1),
-        |                   i -> array_to_string(toks[i:i+1], ' ')),
-        |    g -> g = 'table hash')) AS BIGINT) AS n_hits
-        |  FROM tk)
-        |SELECT doc_id, n_hits,
-        |       CAST(row_number() OVER (ORDER BY n_hits DESC, doc_id) AS BIGINT) AS rnk
-        |FROM h WHERE n_hits > 0 ORDER BY n_hits DESC, doc_id LIMIT 10""".stripMargin,
-    "retrieval_proximity" ->
-      """WITH tk AS (
-        |  SELECT doc_id, list_filter(string_split(COALESCE(text, ''), ' '),
-        |                             t -> t != '') AS toks FROM documents),
-        |p AS (
-        |  SELECT doc_id,
-        |    list_filter(list_transform(toks,
-        |      (x, i) -> CASE WHEN x = 'vector' THEN i ELSE -1 END), q -> q != -1) AS pa,
-        |    list_filter(list_transform(toks,
-        |      (x, i) -> CASE WHEN x = 'join' THEN i ELSE -1 END), q -> q != -1) AS pb
-        |  FROM tk),
-        |dd AS (
-        |  SELECT doc_id, flatten(list_transform(pa,
-        |    i -> list_transform(pb, j -> abs(i - j)))) AS dists FROM p),
-        |m AS (
-        |  SELECT doc_id, CAST(list_min(dists) AS BIGINT) AS min_dist,
-        |         CAST(len(list_filter(dists, x -> x <= 5)) AS BIGINT) AS n_pairs
-        |  FROM dd)
-        |SELECT doc_id, min_dist, n_pairs,
-        |       CAST(row_number() OVER (ORDER BY min_dist, doc_id) AS BIGINT) AS rnk
-        |FROM m WHERE min_dist <= 5 ORDER BY min_dist, doc_id LIMIT 10""".stripMargin,
-    "top_docs_per_lang" ->
-      """SELECT lang, doc_id, n_chars, rnk FROM (
-        |  SELECT lang, doc_id, n_chars,
-        |         row_number() OVER (PARTITION BY lang ORDER BY n_chars DESC, doc_id) AS rnk
-        |  FROM documents)
-        |WHERE rnk <= 3 ORDER BY lang, rnk""".stripMargin,
-    "docs_setops" ->
-      """SELECT doc_id, 'except' AS op FROM (
-        |  SELECT doc_id FROM documents WHERE lang = 'en'
-        |  EXCEPT
-        |  SELECT doc_id FROM documents WHERE len(string_split(text, ' ')) >= 60)
-        |UNION ALL
-        |SELECT doc_id, 'intersect' AS op FROM (
-        |  SELECT doc_id FROM documents WHERE lang = 'en'
-        |  INTERSECT
-        |  SELECT doc_id FROM documents WHERE len(string_split(text, ' ')) >= 60)
-        |ORDER BY op, doc_id""".stripMargin,
-    "lang_source_rollup" ->
-      """SELECT lang, source, count(*) AS n_docs FROM documents
-        |GROUP BY ROLLUP(lang, source)
-        |ORDER BY lang ASC NULLS FIRST, source ASC NULLS FIRST""".stripMargin,
-    // Shared revenue expression: per-row double product (bit-identical
-    // across engines), exact DECIMAL(18,6) sum, one final double cast —
-    // mirrors RelationalAnalytics.decSum.
-    "tpch_q1_pricing" ->
-      """SELECT l_returnflag, l_linestatus, sum_qty, sum_base_price,
-        |       sum_disc_price, sum_charge, count_order,
-        |       round(sum_qty / count_order, 4) AS avg_qty,
-        |       round(sum_base_price / count_order, 4) AS avg_price
-        |FROM (
-        |  SELECT l_returnflag, l_linestatus,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-        |         CAST(sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE) AS sum_base_price,
-        |         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS sum_disc_price,
-        |         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) * (1.0 + l_tax) AS DECIMAL(18,6))) AS DOUBLE) AS sum_charge,
-        |         count(*) AS count_order
-        |  FROM lineitem
-        |  WHERE l_shipdate <= TIMESTAMP '2000-09-01'
-        |  GROUP BY l_returnflag, l_linestatus)
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "tpch_q3_top_orders" ->
-      """SELECT o.o_orderkey, o.o_orderdate, o.o_orderpriority,
-        |       CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS rev
-        |FROM orders o
-        |JOIN customer c ON o.o_custkey = c.c_custkey AND c.c_mktsegment = 'BUILDING'
-        |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderdate < TIMESTAMP '1996-03-15'
-        |  AND l.l_shipdate > TIMESTAMP '1996-03-15'
-        |GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
-        |ORDER BY rev DESC, o.o_orderkey
-        |LIMIT 10""".stripMargin,
-    // The classic Q18 formulation (IN + HAVING subquery) — the engine
-    // side must be plan-better but answer-identical.
-    "tpch_q18_large_orders" ->
-      """WITH big AS (
-        |  SELECT l_orderkey,
-        |         CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE)
-        |           AS total_qty
-        |  FROM lineitem GROUP BY l_orderkey
-        |  HAVING sum(CAST(l_quantity AS DECIMAL(18,6))) > 150.0)
-        |SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate,
-        |       o.o_totalprice, b.total_qty
-        |FROM big b
-        |JOIN orders o ON b.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |ORDER BY o.o_totalprice DESC, o.o_orderkey
-        |LIMIT 100""".stripMargin,
-    "tpch_q5_region_volume" ->
-      """SELECT n.n_name,
-        |       CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS rev
-        |FROM orders o
-        |JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey AND s.s_nationkey = c.c_nationkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |JOIN region r ON n.n_regionkey = r.r_regionkey AND r.r_name = 'ASIA'
-        |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY n.n_name
-        |ORDER BY rev DESC, n.n_name""".stripMargin,
-    "profile_fds" ->
-      """WITH checks AS (
-        |  SELECT 'orders' AS relation,
-        |         'o_orderkey -> o_orderpriority' AS dependency,
-        |         CAST(count(DISTINCT o_orderkey) AS BIGINT) AS n_lhs,
-        |         CAST(count(DISTINCT (o_orderkey, o_orderpriority)) AS BIGINT)
-        |           AS n_pairs
-        |  FROM orders
-        |  UNION ALL
-        |  SELECT 'lineitem', 'l_orderkey -> l_returnflag',
-        |         CAST(count(DISTINCT l_orderkey) AS BIGINT),
-        |         CAST(count(DISTINCT (l_orderkey, l_returnflag)) AS BIGINT)
-        |  FROM lineitem
-        |  UNION ALL
-        |  SELECT 'part', 'p_brand -> p_type',
-        |         CAST(count(DISTINCT p_brand) AS BIGINT),
-        |         CAST(count(DISTINCT (p_brand, p_type)) AS BIGINT)
-        |  FROM part)
-        |SELECT relation, dependency, n_lhs, n_pairs,
-        |       n_pairs = n_lhs AS holds,
-        |       n_pairs - n_lhs AS n_violating_keys
-        |FROM checks ORDER BY relation, dependency""".stripMargin,
-    "profile_ri" ->
-      """WITH checks AS (
-        |  SELECT 'orders->customer' AS relation,
-        |         CAST((SELECT count(*) FROM orders
-        |               WHERE o_custkey IS NOT NULL) AS BIGINT) AS n_child_rows,
-        |         CAST((SELECT count(*) FROM orders
-        |               WHERE o_custkey IS NOT NULL
-        |                 AND o_custkey NOT IN (SELECT c_custkey FROM customer))
-        |              AS BIGINT) AS n_orphan_rows,
-        |         CAST((SELECT count(DISTINCT o_custkey) FROM orders
-        |               WHERE o_custkey IS NOT NULL
-        |                 AND o_custkey NOT IN (SELECT c_custkey FROM customer))
-        |              AS BIGINT) AS n_orphan_keys
-        |  UNION ALL
-        |  SELECT 'lineitem->orders',
-        |         CAST((SELECT count(*) FROM lineitem
-        |               WHERE l_orderkey IS NOT NULL) AS BIGINT),
-        |         CAST((SELECT count(*) FROM lineitem
-        |               WHERE l_orderkey IS NOT NULL
-        |                 AND l_orderkey NOT IN (SELECT o_orderkey FROM orders))
-        |              AS BIGINT),
-        |         CAST((SELECT count(DISTINCT l_orderkey) FROM lineitem
-        |               WHERE l_orderkey IS NOT NULL
-        |                 AND l_orderkey NOT IN (SELECT o_orderkey FROM orders))
-        |              AS BIGINT)
-        |  UNION ALL
-        |  SELECT 'lineitem->part',
-        |         CAST((SELECT count(*) FROM lineitem
-        |               WHERE l_partkey IS NOT NULL) AS BIGINT),
-        |         CAST((SELECT count(*) FROM lineitem
-        |               WHERE l_partkey IS NOT NULL
-        |                 AND l_partkey NOT IN (SELECT p_partkey FROM part))
-        |              AS BIGINT),
-        |         CAST((SELECT count(DISTINCT l_partkey) FROM lineitem
-        |               WHERE l_partkey IS NOT NULL
-        |                 AND l_partkey NOT IN (SELECT p_partkey FROM part))
-        |              AS BIGINT))
-        |SELECT relation, n_child_rows, n_orphan_rows, n_orphan_keys,
-        |       n_orphan_rows = 0 AS intact
-        |FROM checks ORDER BY relation""".stripMargin,
-    "tpch_q7_volume_shipping" ->
-      """WITH cn AS (
-        |  SELECT c_custkey, n_name AS cust_nation FROM customer
-        |  JOIN nation ON c_nationkey = n_nationkey
-        |  WHERE n_name IN ('NATION_3', 'NATION_7')),
-        |sn AS (
-        |  SELECT s_suppkey, n_name AS supp_nation FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |  WHERE n_name IN ('NATION_3', 'NATION_7'))
-        |SELECT sn.supp_nation, cn.cust_nation,
-        |       CAST(year(l.l_shipdate) AS BIGINT) AS l_year,
-        |       CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-        |                     AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN cn ON o.o_custkey = cn.c_custkey
-        |JOIN sn ON l.l_suppkey = sn.s_suppkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l.l_shipdate < TIMESTAMP '1998-01-01'
-        |  AND ((sn.supp_nation = 'NATION_3' AND cn.cust_nation = 'NATION_7')
-        |    OR (sn.supp_nation = 'NATION_7' AND cn.cust_nation = 'NATION_3'))
-        |GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""".stripMargin,
-    "tpch_q8_market_share" ->
-      """WITH base AS (
-        |  SELECT year(o.o_orderdate) AS o_year,
-        |         CAST(l.l_extendedprice * (1.0 - l.l_discount)
-        |              AS DECIMAL(18,6)) AS rev,
-        |         CAST(CASE WHEN sn.n_name = 'NATION_5'
-        |                   THEN l.l_extendedprice * (1.0 - l.l_discount)
-        |                   ELSE 0.0 END AS DECIMAL(18,6)) AS nrev
-        |  FROM lineitem l
-        |  JOIN part p ON l.l_partkey = p.p_partkey AND p.p_type = 'PROMO'
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |  JOIN customer c ON o.o_custkey = c.c_custkey
-        |  JOIN nation cnn ON c.c_nationkey = cnn.n_nationkey
-        |  JOIN region r ON cnn.n_regionkey = r.r_regionkey
-        |                AND r.r_name = 'ASIA'
-        |  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |  JOIN nation sn ON s.s_nationkey = sn.n_nationkey
-        |  WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |    AND o.o_orderdate < TIMESTAMP '1998-01-01')
-        |SELECT CAST(o_year AS BIGINT) AS o_year,
-        |       round(CAST(sum(nrev) AS DOUBLE) / CAST(sum(rev) AS DOUBLE), 6)
-        |         AS mkt_share,
-        |       round(CAST(sum(rev) AS DOUBLE), 6) AS total_rev
-        |FROM base GROUP BY 1 ORDER BY 1""".stripMargin,
-    "tpch_q14_promo" ->
-      """SELECT round(CAST(sum(CAST(CASE WHEN p.p_type = 'PROMO'
-        |                     THEN l.l_extendedprice * (1.0 - l.l_discount)
-        |                     ELSE 0.0 END AS DECIMAL(18,6))) AS DOUBLE)
-        |             * 100.0 /
-        |             CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-        |                           AS DECIMAL(18,6))) AS DOUBLE), 6)
-        |         AS promo_pct,
-        |       round(CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-        |                           AS DECIMAL(18,6))) AS DOUBLE), 6)
-        |         AS total_rev
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1996-03-01'
-        |  AND l.l_shipdate < TIMESTAMP '1996-04-01'""".stripMargin,
-    "tpch_q15_top_supplier" ->
-      """WITH rev AS (
-        |  SELECT l_suppkey AS supplier_no,
-        |         CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
-        |                       AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
-        |  FROM lineitem
-        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |    AND l_shipdate < TIMESTAMP '1996-04-01'
-        |  GROUP BY 1),
-        |mx AS (SELECT max(total_revenue) AS m FROM rev)
-        |SELECT s.s_suppkey, s.s_name,
-        |       round(r.total_revenue, 6) AS total_revenue
-        |FROM rev r, mx, supplier s
-        |WHERE r.total_revenue = mx.m AND s.s_suppkey = r.supplier_no
-        |ORDER BY s.s_suppkey""".stripMargin,
-    "tpch_q17_small_qty" ->
-      """WITH pp AS (
-        |  SELECT p_partkey FROM part
-        |  WHERE p_brand = 'Brand#3' AND p_size <= 15),
-        |li AS (
-        |  SELECT l.l_partkey, l.l_quantity, l.l_extendedprice
-        |  FROM lineitem l JOIN pp ON l.l_partkey = pp.p_partkey),
-        |aq AS (
-        |  SELECT l_partkey AS pk,
-        |         sum(CAST(l_quantity AS DECIMAL(18,6))) AS sq,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM li GROUP BY 1)
-        |SELECT round(CAST(sum(CAST(li.l_extendedprice AS DECIMAL(18,6)))
-        |                  AS DOUBLE) / 7.0, 6) AS avg_yearly
-        |FROM li JOIN aq ON li.l_partkey = aq.pk
-        |WHERE CAST(li.l_quantity AS DECIMAL(18,6)) * 5 * aq.n < aq.sq""".stripMargin,
-    "tpch_q22_global_sales" ->
-      """WITH a AS (
-        |  SELECT sum(CAST(c_acctbal AS DECIMAL(18,6))) AS s,
-        |         CAST(count(*) AS BIGINT) AS n
-        |  FROM customer WHERE c_acctbal > 0.0),
-        |el AS (
-        |  SELECT c.c_custkey, c.c_acctbal, c.c_nationkey
-        |  FROM customer c, a
-        |  WHERE CAST(c.c_acctbal AS DECIMAL(18,6)) * a.n > a.s),
-        |noord AS (
-        |  SELECT el.* FROM el
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM orders o
-        |    WHERE o.o_custkey = el.c_custkey
-        |      AND o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |      AND o.o_orderdate < TIMESTAMP '1998-01-01'))
-        |SELECT n.n_name, CAST(count(*) AS BIGINT) AS numcust,
-        |       round(CAST(sum(CAST(c_acctbal AS DECIMAL(18,6))) AS DOUBLE), 6)
-        |         AS totacctbal
-        |FROM noord JOIN nation n ON noord.c_nationkey = n.n_nationkey
-        |GROUP BY n.n_name ORDER BY n.n_name""".stripMargin,
-    "join_size_profile" ->
-      """WITH lc AS (
-        |  SELECT least(o_orderkey % 20, 9) AS key, count(*) AS cnt_left
-        |  FROM orders GROUP BY 1),
-        |rc AS (
-        |  SELECT least(l_orderkey % 20, 9) AS key, count(*) AS cnt_right
-        |  FROM lineitem GROUP BY 1),
-        |p AS (
-        |  SELECT key, cnt_left, cnt_right,
-        |         CAST(cnt_left AS DECIMAL(38,0)) * cnt_right AS pd
-        |  FROM lc JOIN rc USING (key)),
-        |t AS (SELECT sum(pd) AS tot FROM p),
-        |-- DECIMAL // degrades to DOUBLE in this engine; HUGEINT
-        |-- division is the exact integral quotient Spark's div takes
-        |s AS (
-        |  SELECT key, cnt_left, cnt_right, pd,
-        |         CAST(CAST(1000000 * pd AS HUGEINT) //
-        |              CAST(tot AS HUGEINT) AS BIGINT) AS share_micro
-        |  FROM p, t)
-        |SELECT key, CAST(cnt_left AS BIGINT) AS cnt_left,
-        |       CAST(cnt_right AS BIGINT) AS cnt_right,
-        |       CAST(pd AS VARCHAR) AS pair_rows,
-        |       share_micro,
-        |       CASE WHEN share_micro > 200000
-        |            THEN 'salt' ELSE 'plain' END AS verdict
-        |FROM s ORDER BY share_micro DESC, key LIMIT 10""".stripMargin,
-    "tpch_q2_min_cost_supp" ->
-      """WITH rn AS (
-        |  SELECT n_nationkey, n_name FROM nation
-        |  JOIN region ON n_regionkey = r_regionkey AND r_name = 'EUROPE'),
-        |sp AS (
-        |  SELECT s_suppkey, s_name, s_acctbal, n_name FROM supplier
-        |  JOIN rn ON s_nationkey = n_nationkey),
-        |pp AS (
-        |  SELECT p_partkey FROM part
-        |  WHERE p_type = 'STANDARD' AND p_size <= 20),
-        |cat AS (
-        |  SELECT l_partkey, l_suppkey, min(l_extendedprice) AS supply_cost
-        |  FROM lineitem
-        |  JOIN pp ON l_partkey = p_partkey
-        |  JOIN sp ON l_suppkey = s_suppkey
-        |  GROUP BY 1, 2),
-        |mc AS (SELECT l_partkey AS pk, min(supply_cost) AS m FROM cat GROUP BY 1)
-        |SELECT s.s_acctbal, s.s_name, s.n_name,
-        |       c.l_partkey AS p_partkey,
-        |       round(c.supply_cost, 6) AS supply_cost
-        |FROM cat c
-        |JOIN mc ON c.l_partkey = mc.pk AND c.supply_cost = mc.m
-        |JOIN sp s ON c.l_suppkey = s.s_suppkey
-        |ORDER BY s.s_acctbal DESC, s.n_name, s.s_name, p_partkey
-        |LIMIT 100""".stripMargin,
-    "tpch_q4_priority_check" ->
-      """SELECT o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-        |FROM orders o
-        |WHERE o.o_orderdate >= TIMESTAMP '1996-01-01'
-        |  AND o.o_orderdate < TIMESTAMP '1996-04-01'
-        |  AND EXISTS (
-        |    SELECT 1 FROM lineitem l
-        |    WHERE l.l_orderkey = o.o_orderkey
-        |      AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY)
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "tpch_q9_product_profit" ->
-      """SELECT n.n_name AS nation,
-        |       CAST(year(o.o_orderdate) AS BIGINT) AS o_year,
-        |       round(CAST(sum(CAST(
-        |         l.l_extendedprice * (1.0 - l.l_discount)
-        |           - p.p_retailprice * l.l_quantity * 0.1
-        |         AS DECIMAL(18,6))) AS DOUBLE), 6) AS sum_profit
-        |FROM lineitem l
-        |JOIN part p ON l.l_partkey = p.p_partkey
-        |            AND p.p_name LIKE '%red%'
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |GROUP BY 1, 2 ORDER BY 1, 2 DESC""".stripMargin,
-    "tpch_q11_important_parts" ->
-      """WITH sp AS (
-        |  SELECT s_suppkey FROM supplier
-        |  JOIN nation ON s_nationkey = n_nationkey
-        |              AND n_name = 'NATION_3'),
-        |v AS (
-        |  SELECT l_partkey AS ps_partkey,
-        |         sum(CAST(l_extendedprice AS DECIMAL(18,6))) AS val
-        |  FROM lineitem JOIN sp ON l_suppkey = s_suppkey
-        |  GROUP BY 1),
-        |t AS (SELECT sum(val) AS tot FROM v)
-        |SELECT ps_partkey, round(CAST(val AS DOUBLE), 6) AS value
-        |FROM v, t WHERE val * 800 > tot
-        |ORDER BY value DESC, ps_partkey""".stripMargin,
-    "tpch_q12_shipmode" ->
-      """SELECT CASE WHEN l.l_linenumber % 3 = 0 THEN 'MAIL'
-        |            WHEN l.l_linenumber % 3 = 1 THEN 'SHIP'
-        |            ELSE 'RAIL' END AS shipmode,
-        |       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
-        |                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-        |       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT','2-HIGH')
-        |                     THEN 0 ELSE 1 END) AS BIGINT) AS low_line_count
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l.l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-        |GROUP BY 1 ORDER BY 1""".stripMargin,
-    "tpch_q16_supplier_counts" ->
-      """WITH ps AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
-        |ok AS (SELECT s_suppkey FROM supplier WHERE s_acctbal >= 0.0)
-        |SELECT p.p_brand, p.p_type, CAST(p.p_size AS BIGINT) AS p_size,
-        |       CAST(count(DISTINCT ps.l_suppkey) AS BIGINT) AS supplier_cnt
-        |FROM ps
-        |JOIN part p ON ps.l_partkey = p.p_partkey
-        |JOIN ok ON ps.l_suppkey = ok.s_suppkey
-        |WHERE p.p_brand <> 'Brand#5' AND p.p_type <> 'PROMO'
-        |  AND p.p_size IN (1, 5, 10, 15, 20, 25, 30, 35)
-        |GROUP BY 1, 2, 3
-        |ORDER BY supplier_cnt DESC, 1, 2, 3""".stripMargin,
-    "tpch_q20_promotable_supp" ->
-      """WITH pp AS (SELECT p_partkey FROM part WHERE p_name LIKE 'blue%'),
-        |q AS (
-        |  SELECT l_partkey, l_suppkey,
-        |         sum(CAST(l_quantity AS DECIMAL(18,6))) AS total_qty,
-        |         sum(CAST(CASE WHEN l_shipdate >= TIMESTAMP '1996-01-01'
-        |                        AND l_shipdate < TIMESTAMP '1997-01-01'
-        |                       THEN l_quantity ELSE 0.0 END
-        |             AS DECIMAL(18,6))) AS window_qty
-        |  FROM lineitem JOIN pp ON l_partkey = p_partkey
-        |  GROUP BY 1, 2),
-        |hot AS (SELECT DISTINCT l_suppkey FROM q
-        |        WHERE window_qty * 2 > total_qty)
-        |SELECT s.s_name
-        |FROM hot
-        |JOIN supplier s ON hot.l_suppkey = s.s_suppkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |              AND n.n_name IN ('NATION_3','NATION_8','NATION_12')
-        |ORDER BY s.s_name""".stripMargin,
-    "tpch_q21_waiting_supp" ->
-      """WITH li AS (
-        |  SELECT l.l_orderkey, l.l_suppkey,
-        |         CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 60 DAY
-        |              THEN 1 ELSE 0 END AS late
-        |  FROM lineitem l
-        |  JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |                AND o.o_orderstatus = 'F'),
-        |po AS (
-        |  SELECT l_orderkey, count(DISTINCT l_suppkey) AS supp_cnt,
-        |         count(DISTINCT CASE WHEN late = 1 THEN l_suppkey END)
-        |           AS late_cnt
-        |  FROM li GROUP BY 1),
-        |lr AS (SELECT DISTINCT l_orderkey, l_suppkey FROM li WHERE late = 1)
-        |SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-        |FROM lr
-        |JOIN po ON lr.l_orderkey = po.l_orderkey
-        |        AND po.supp_cnt > 1 AND po.late_cnt = 1
-        |JOIN supplier s ON lr.l_suppkey = s.s_suppkey
-        |JOIN nation n ON s.s_nationkey = n.n_nationkey
-        |              AND n.n_name IN ('NATION_3','NATION_8',
-        |                                'NATION_12','NATION_13')
-        |GROUP BY 1 ORDER BY numwait DESC, s.s_name
-        |LIMIT 100""".stripMargin,
-    "tpch_q19_disjunct" ->
-      """SELECT CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-        |                     AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5
-        |       AND l.l_quantity BETWEEN 1 AND 11)
-        |   OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 1 AND 10
-        |       AND l.l_quantity BETWEEN 10 AND 20)
-        |   OR (p.p_brand = 'Brand#3' AND p.p_size BETWEEN 1 AND 15
-        |       AND l.l_quantity BETWEEN 20 AND 30)""".stripMargin,
-    "cust_no_orders_anti" ->
-      """SELECT c_custkey, c_name, c_mktsegment FROM customer c
-        |WHERE NOT EXISTS (
-        |  SELECT 1 FROM orders o
-        |  WHERE o.o_custkey = c.c_custkey
-        |    AND o.o_orderdate >= TIMESTAMP '1995-01-01'
-        |    AND o.o_orderdate < TIMESTAMP '1995-03-01')
-        |ORDER BY c_custkey""".stripMargin,
-    "order_priority_semi" ->
-      """SELECT o_orderpriority, count(*) AS n_orders FROM orders o
-        |WHERE EXISTS (
-        |  SELECT 1 FROM lineitem l
-        |  WHERE l.l_orderkey = o.o_orderkey AND l.l_quantity >= 45)
-        |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin,
-    "bloom_join_prune" ->
-      """SELECT l_returnflag, count(*) AS n_lines,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS rev
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |WHERE o.o_orderpriority = '1-URGENT'
-        |GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-    "segment_status_cube" ->
-      """SELECT c.c_mktsegment, o.o_orderstatus, count(*) AS n_orders,
-        |       CAST(sum(CAST(o.o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS total_price
-        |FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |GROUP BY CUBE(c.c_mktsegment, o.o_orderstatus)
-        |ORDER BY c_mktsegment ASC NULLS FIRST, o_orderstatus ASC NULLS FIRST""".stripMargin,
-    "top_parts_per_brand" ->
-      """SELECT p_brand, rnk, p_partkey, p_name, rev FROM (
-        |  SELECT p_brand, p_partkey, p_name, rev,
-        |         row_number() OVER (PARTITION BY p_brand ORDER BY rev DESC, p_partkey) AS rnk
-        |  FROM (
-        |    SELECT p.p_brand, p.p_partkey, p.p_name,
-        |           CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS rev
-        |    FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-        |    GROUP BY p.p_brand, p.p_partkey, p.p_name))
-        |WHERE rnk <= 3 ORDER BY p_brand, rnk""".stripMargin,
-    // The salted join must produce EXACTLY the plain inner join.
-    // First digit replayed as the first character of the exact cents
-    // integer; shares as integral micro divisions over the 9-digit
-    // grid; the same 6-dp Benford constants.
-    "orders_benford" ->
-      """WITH c AS (
-        |  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS cents
-        |  FROM orders
-        |  WHERE o_totalprice IS NOT NULL AND round(o_totalprice * 100) > 0),
-        |dg AS (
-        |  SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit
-        |  FROM c),
-        |cnt AS (SELECT digit, CAST(count(*) AS BIGINT) AS n FROM dg GROUP BY 1),
-        |ex AS (SELECT * FROM (VALUES
-        |  (1, 301030), (2, 176091), (3, 124939), (4, 96910), (5, 79181),
-        |  (6, 66947), (7, 57992), (8, 51153), (9, 45757))
-        |  t(digit, benford_micro)),
-        |tot AS (SELECT sum(n) AS t FROM cnt)
-        |SELECT CAST(ex.digit AS BIGINT) AS digit,
-        |       coalesce(cnt.n, 0) AS n,
-        |       CAST(CASE WHEN tot.t > 0
-        |            THEN (1000000 * coalesce(cnt.n, 0)) // tot.t
-        |            ELSE 0 END AS BIGINT) AS share_micro,
-        |       CAST(ex.benford_micro AS BIGINT) AS benford_micro,
-        |       CAST(abs(CASE WHEN tot.t > 0
-        |            THEN (1000000 * coalesce(cnt.n, 0)) // tot.t
-        |            ELSE 0 END - ex.benford_micro) AS BIGINT) AS dev_micro
-        |FROM ex LEFT JOIN cnt ON ex.digit = cnt.digit, tot
-        |ORDER BY digit""".stripMargin,
-    "orders_salted_join" ->
-      """SELECT o.o_orderpriority, count(*) AS n_lines,
-        |       CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS rev
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""".stripMargin,
-    // The bucketed co-located join must produce EXACTLY the plain join.
-    "bucketed_colocated_join" ->
-      """SELECT o.o_orderstatus, count(*) AS n_lines,
-        |       CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS rev
-        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |GROUP BY o.o_orderstatus ORDER BY o.o_orderstatus""".stripMargin,
-    "multimodal_meta" ->
-      """SELECT vec_id AS id, CAST(4 * len(embedding) + 1 AS BIGINT) AS payload_bytes,
-        |       round(CAST(embedding[1] AS DOUBLE), 6) AS feat0
-        |FROM embeddings ORDER BY id""".stripMargin,
-    // Replays the GramMatrix accumulation exactly: per-row products
-    // rounded to 6 dp (half away from zero, same as the kernel's
-    // micro-unit longs), summed in DECIMAL (exact, order-independent),
-    // one final double division + round.
-    "vector_gram" ->
-      """WITH prods AS (
-        |  SELECT ti.i AS i, tj.j AS j,
-        |         CAST(round(CAST(e.embedding[ti.i] AS DOUBLE) *
-        |                    CAST(e.embedding[tj.j] AS DOUBLE), 6) AS DECIMAL(28,6)) AS p
-        |  FROM embeddings e,
-        |       unnest(generate_series(1, 64)) AS ti(i),
-        |       unnest(generate_series(1, 64)) AS tj(j)
-        |  WHERE tj.j >= ti.i),
-        |n AS (SELECT count(*) AS n FROM embeddings)
-        |SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j,
-        |       round(CAST(sum(p) AS DOUBLE) / n.n, 6) AS m2
-        |FROM prods, n
-        |GROUP BY i, j, n.n
-        |ORDER BY i, j""".stripMargin,
-    "vector_centroids" ->
-      """SELECT e.label, CAST(t.i AS BIGINT) AS idx,
-        |       round(avg(CAST(e.embedding[t.i] AS DOUBLE)), 6) AS val
-        |FROM embeddings e, unnest(generate_series(1, len(e.embedding))) AS t(i)
-        |GROUP BY e.label, t.i
-        |ORDER BY label, idx""".stripMargin,
-    // Full z-score pipeline rebuilt: rounded centroid, rounded per-row
-    // distance, DECIMAL-exact moment sums (addition order cannot move
-    // them), then the identical double-precision mean/std/z derivation.
-    "embedding_kcenter" -> kCenterOracle(6),
-    "embedding_outliers" ->
-      """WITH c AS (
-        |  SELECT label, t.i AS i,
-        |         CAST(CAST(round(avg(CAST(embedding[t.i] AS DOUBLE)), 6) AS FLOAT)
-        |              AS DOUBLE) AS c
-        |  FROM embeddings, unnest(generate_series(1, len(embedding))) AS t(i)
-        |  GROUP BY label, t.i),
-        |d AS (
-        |  SELECT e.vec_id, e.label,
-        |         round(sqrt(sum((CAST(e.embedding[c.i] AS DOUBLE) - c.c) *
-        |                        (CAST(e.embedding[c.i] AS DOUBLE) - c.c))), 6) AS dist
-        |  FROM embeddings e JOIN c ON e.label = c.label
-        |  GROUP BY e.vec_id, e.label),
-        |s AS (
-        |  SELECT label, count(*) AS n,
-        |         sum(CAST(dist AS DECIMAL(18,6))) AS sd,
-        |         sum(CAST(dist AS DECIMAL(18,6)) * CAST(dist AS DECIMAL(18,6))) AS sd2
-        |  FROM d GROUP BY label),
-        |z AS (
-        |  SELECT d.vec_id, d.label, d.dist,
-        |         CASE WHEN (CAST(s.sd2 AS DOUBLE) / s.n
-        |                    - (CAST(s.sd AS DOUBLE) / s.n) * (CAST(s.sd AS DOUBLE) / s.n))
-        |                   <= 0 THEN 0.0
-        |              ELSE round((d.dist - CAST(s.sd AS DOUBLE) / s.n) /
-        |                         sqrt(CAST(s.sd2 AS DOUBLE) / s.n
-        |                              - (CAST(s.sd AS DOUBLE) / s.n)
-        |                                * (CAST(s.sd AS DOUBLE) / s.n)), 6) END AS z
-        |  FROM d JOIN s USING (label))
-        |SELECT vec_id, label, dist, z FROM z WHERE z >= 2.0 ORDER BY vec_id""".stripMargin,
-    "multimodal_features" ->
-      """WITH bins AS (SELECT CAST(g - 1 AS BIGINT) AS bin
-        |              FROM unnest(generate_series(1, 16)) AS t(g)),
-        |docs AS (SELECT doc_id AS id,
-        |                CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes
-        |         FROM documents),
-        |counts AS (
-        |  SELECT doc_id AS id, ascii(substr(text, i, 1)) // 16 AS bin, count(*) AS c
-        |  FROM documents, unnest(generate_series(1, length(text))) AS t(i)
-        |  GROUP BY id, bin)
-        |SELECT d.id, d.n_bytes, b.bin, CAST(COALESCE(c.c, 0) AS BIGINT) AS n_in_bin
-        |FROM docs d CROSS JOIN bins b
-        |LEFT JOIN counts c ON c.id = d.id AND c.bin = b.bin
-        |ORDER BY d.id, b.bin""".stripMargin,
-    // The fallback contract in SQL: `decoded` is literal FALSE for
-    // every row (a single decoded payload would hash-mismatch), and
-    // the histogram is the envelope's four constant bytes (FF D8 FF C2
-    // → bins 15, 13, 15, 12) plus the 32 raw text bytes.
-    "multimodal_progressive_fallback" ->
-      """WITH docs AS (
-        |  SELECT doc_id AS id, substr(text, 1, 32) AS px
-        |  FROM documents WHERE length(text) >= 32),
-        |bins AS (SELECT CAST(g - 1 AS BIGINT) AS bin
-        |         FROM unnest(generate_series(1, 16)) t(g)),
-        |counts AS (
-        |  SELECT id, ascii(substr(px, CAST(i AS INT), 1)) // 16 AS bin, count(*) AS c
-        |  FROM docs, unnest(generate_series(1, 32)) t(i)
-        |  GROUP BY id, bin)
-        |SELECT d.id, CAST(36 AS BIGINT) AS n_bytes, FALSE AS decoded, b.bin,
-        |       CAST(COALESCE(c.c, 0)
-        |            + CASE WHEN b.bin = 15 THEN 2
-        |                   WHEN b.bin = 13 THEN 1
-        |                   WHEN b.bin = 12 THEN 1 ELSE 0 END AS BIGINT) AS n_in_bin
-        |FROM docs d CROSS JOIN bins b
-        |LEFT JOIN counts c ON c.id = d.id AND c.bin = b.bin
-        |ORDER BY d.id, b.bin""".stripMargin,
-    // Lossless formats: decoded pixels ARE the text bytes, so ONE
-    // string-function histogram oracles the raw Netpbm parse and the
-    // full PNG and GIF encode→decode round trips alike.
-    "multimodal_png_decode" -> gray6x8HistogramOracle,
-    // Planted text-chunk values replayed per id; kinds sort
-    // iTXt < tEXt < zTXt in binary order on both engines.
-    "multimodal_png_text" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2)
-        |SELECT id, kind, keyword, value, TRUE AS crc_ok FROM (
-        |  SELECT id, 'tEXt' AS kind, 'Title' AS keyword,
-        |         'T' || CAST(b0 % 100 AS VARCHAR) AS value FROM src
-        |  UNION ALL
-        |  SELECT id, 'zTXt', 'Author',
-        |         repeat('A' || CAST(b1 % 50 AS VARCHAR),
-        |                CAST(1 + b0 % 3 AS INT)) FROM src
-        |  UNION ALL
-        |  SELECT id, 'iTXt', 'Comment',
-        |         'C' || CAST((b0 + b1) % 30 AS VARCHAR) FROM src)
-        |ORDER BY id, kind""".stripMargin,
-    "multimodal_gif_decode" -> gray6x8HistogramOracle,
-    "multimodal_bmp_decode" -> gray6x8HistogramOracle,
-    // The census re-derived from the same document bytes through the
-    // public MPEG-1 Layer III bitrate table; duration is exact integer
-    // floor(frames·1152·1000 / 44100) on both sides.
-    "multimodal_mp3_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         1 + ascii(substr(text, 1, 1)) % 14 AS bidx,
-        |         CAST(2 + ascii(substr(text, 2, 1)) % 3 AS INT) AS frames
-        |  FROM documents WHERE length(text) >= 2),
-        |br(bidx, kbps) AS (VALUES
-        |  (1,32),(2,40),(3,48),(4,56),(5,64),(6,80),(7,96),
-        |  (8,112),(9,128),(10,160),(11,192),(12,224),(13,256),(14,320))
-        |SELECT s.id, 'MPEG1' AS version, CAST(3 AS INT) AS layer,
-        |       CAST(b.kbps AS INT) AS bitrate_kbps,
-        |       CAST(44100 AS INT) AS sample_rate, s.frames,
-        |       CAST((s.frames * 1152 * 1000) // 44100 AS BIGINT) AS duration_ms
-        |FROM src s JOIN br b USING (bidx)
-        |ORDER BY id""".stripMargin,
-    // Side-info replay: the planted (gain, part2_3, big_values)
-    // arithmetic per (id, frame, granule) — the Spark side recovers
-    // the same integers by reading the real side-info bit layout.
-    "multimodal_mp3_gain" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2),
-        |f AS (
-        |  SELECT id, b0, b1, CAST(fr AS INT) AS frame_idx
-        |  FROM src, unnest(generate_series(0, 1 + b1 % 3)) t(fr)),
-        |g AS (SELECT *, CAST(gg AS INT) AS granule FROM f, unnest([0, 1]) u(gg))
-        |SELECT id, frame_idx, granule,
-        |       CAST((b0 + 17 * frame_idx + 11 * granule) % 256 AS INT) AS global_gain,
-        |       CAST((b1 * 13 + 29 * frame_idx + 7 * granule) % 4096 AS INT) AS part23_len,
-        |       CAST((b0 + b1 + 3 * frame_idx + granule) % 512 AS INT) AS big_values
-        |FROM g ORDER BY id, frame_idx, granule""".stripMargin,
-    "multimodal_webp_meta" ->
-      """SELECT doc_id AS id, 'VP8L' AS format,
-        |       CAST(1 + ascii(substr(text, 1, 1)) % 1000 AS INT) AS width,
-        |       CAST(1 + ascii(substr(text, 2, 1)) % 800 AS INT) AS height,
-        |       CAST(CASE WHEN ascii(substr(text, 2, 1)) % 64 > 0 THEN 2 ELSE 1 END AS INT) AS n_chunks,
-        |       (ascii(substr(text, 1, 1)) % 2 = 1) AS has_alpha
-        |FROM documents WHERE length(text) >= 2 ORDER BY id""".stripMargin,
-    "multimodal_tiff_meta" ->
-      """SELECT doc_id AS id,
-        |       (ascii(substr(text, 1, 1)) % 2 = 1) AS big_endian,
-        |       CAST(1 + (ascii(substr(text, 1, 1)) * 256 + ascii(substr(text, 2, 1))) % 5000 AS BIGINT) AS width,
-        |       CAST(1 + (ascii(substr(text, 1, 1)) + ascii(substr(text, 2, 1)) * 7) % 3000 AS BIGINT) AS height,
-        |       CAST(3 AS INT) AS n_entries
-        |FROM documents WHERE length(text) >= 2 ORDER BY id""".stripMargin,
-    // GOP cadence replayed on a slice grid; max I-gap via lag.
-    "multimodal_h264_gop" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2),
-        |g AS (SELECT id, 2 + b0 % 5 AS gl, 4 + b1 % 6 AS ns FROM src),
-        |typed AS (
-        |  SELECT id, CAST(j AS BIGINT) AS j,
-        |         CASE WHEN j % gl = 0 THEN 'I'
-        |              WHEN j % 3 = 2 THEN 'B' ELSE 'P' END AS kind
-        |  FROM g, unnest(generate_series(0, ns - 1)) t(j)),
-        |ipos AS (
-        |  SELECT id, j - lag(j) OVER (PARTITION BY id ORDER BY j) AS gap
-        |  FROM typed WHERE kind = 'I'),
-        |gaps AS (SELECT id, CAST(COALESCE(MAX(gap), 0) AS BIGINT) AS max_i_gap
-        |         FROM ipos GROUP BY id),
-        |agg AS (
-        |  SELECT id, CAST(COUNT(*) AS BIGINT) AS n_slices,
-        |         CAST(SUM(CASE WHEN kind = 'I' THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_i,
-        |         CAST(SUM(CASE WHEN kind = 'P' THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_p,
-        |         CAST(SUM(CASE WHEN kind = 'B' THEN 1 ELSE 0 END) AS BIGINT)
-        |           AS n_b,
-        |         MIN(CASE WHEN j = 0 THEN kind END) AS first_kind
-        |  FROM typed GROUP BY id)
-        |SELECT a.id, a.n_slices, a.n_i, a.n_p, a.n_b, a.first_kind,
-        |       g.max_i_gap
-        |FROM agg a JOIN gaps g USING (id) ORDER BY id""".stripMargin,
-    // ID3 replay: the planted tag-frame arithmetic per id.
-    "multimodal_id3" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2)
-        |SELECT id,
-        |       CAST(CASE WHEN b1 % 2 = 1 THEN 4 ELSE 3 END AS BIGINT)
-        |         AS version,
-        |       'T' || CAST(b0 % 100 AS VARCHAR) AS title,
-        |       'A' || CAST(b1 % 50 AS VARCHAR) AS artist,
-        |       'AL' || CAST((b0 + b1) % 30 AS VARCHAR) AS album,
-        |       CAST(3 AS BIGINT) AS n_frames
-        |FROM src ORDER BY id""".stripMargin,
-    // EXIF replay: the planted (orientation, make, datetime)
-    // arithmetic — the Spark side recovers the same values by walking
-    // the real APP1/TIFF structure in both byte orders.
-    "multimodal_exif" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2)
-        |SELECT id,
-        |       (b0 % 2 = 1) AS big_endian,
-        |       CAST(1 + b0 % 8 AS INT) AS orientation,
-        |       CASE WHEN b1 % 3 = 0 THEN 'AB'
-        |            ELSE 'CAMERA' || CAST(b1 % 100 AS VARCHAR) END AS make,
-        |       printf('2021:%02d:%02d %02d:%02d:00',
-        |              1 + b1 % 12, 1 + b0 % 28, b0 % 24, b1 % 60)
-        |         AS dt_original
-        |FROM src ORDER BY id""".stripMargin,
-    // The MP4 census re-derived arithmetically from the same document
-    // bytes the in-plan box builder consumed; duration_ms is exact
-    // integer floor(duration*1000 / timescale) on both sides.
-    "multimodal_mp4_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2)
-        |SELECT id, 'isom' AS brand,
-        |       CAST(600 * (1 + b0 % 3) AS BIGINT) AS timescale,
-        |       CAST(1001 + b1 * 97 AS BIGINT) AS duration,
-        |       CAST((1001 + b1 * 97) * 1000 // (600 * (1 + b0 % 3)) AS BIGINT)
-        |         AS duration_ms,
-        |       CAST(1 + b1 % 2 AS INT) AS tracks,
-        |       CASE WHEN b1 % 2 = 1 THEN 'soun,vide' ELSE 'vide' END AS handlers,
-        |       CASE WHEN b1 % 2 = 1 THEN 'avc1,mp4a' ELSE 'avc1' END AS codecs
-        |FROM src ORDER BY id""".stripMargin,
-    // The NAL census re-derived arithmetically from the same document
-    // bytes the in-plan Annex-B builder consumed (1 SPS + 1 PPS +
-    // nIdr + nNonIdr framed units); width/height replay the builder's
-    // dimension arithmetic, which the engine must recover through the
-    // actual Exp-Golomb SPS walk (incl. the cropping rows).
-    "multimodal_h264_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2)
-        |SELECT id,
-        |       CASE b0 % 3 WHEN 0 THEN 'Baseline' WHEN 1 THEN 'Main'
-        |            ELSE 'High' END AS profile,
-        |       CAST(CASE b0 % 3 WHEN 0 THEN 66 WHEN 1 THEN 77
-        |            ELSE 100 END AS INT) AS profile_idc,
-        |       CAST(CASE b1 % 5 WHEN 0 THEN 30 WHEN 1 THEN 31 WHEN 2 THEN 40
-        |            WHEN 3 THEN 41 ELSE 50 END AS INT) AS level_idc,
-        |       CAST(176 + 16 * (b0 % 20)
-        |            - CASE WHEN b1 % 3 = 0 THEN 8 ELSE 0 END AS INT) AS width,
-        |       CAST(144 + 16 * (b1 % 15)
-        |            - CASE WHEN b1 % 3 = 0 THEN 4 ELSE 0 END AS INT) AS height,
-        |       CAST(5 + b0 % 3 + b1 % 5 AS INT) AS n_nal,
-        |       CAST(1 AS INT) AS n_sps, CAST(1 AS INT) AS n_pps,
-        |       CAST(1 + b0 % 3 AS INT) AS n_idr,
-        |       CAST(2 + b1 % 5 AS INT) AS n_non_idr
-        |FROM src ORDER BY id""".stripMargin,
-    // FLAC/OGG censuses re-derived arithmetically from the same
-    // document bytes the in-plan container builders consumed;
-    // duration_ms is exact integer floor on both sides.
-    "multimodal_flac_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2),
-        |r(idx, rate) AS (VALUES
-        |  (0,8000),(1,16000),(2,22050),(3,24000),(4,32000),(5,44100),(6,48000))
-        |SELECT s.id, CAST(r.rate AS INT) AS sample_rate,
-        |       CAST(1 + b1 % 8 AS INT) AS channels,
-        |       CAST(16 + 8 * (b0 % 3) AS INT) AS bits_per_sample,
-        |       CAST(1000 + (b0 * 256 + b1) * 31 AS BIGINT) AS total_samples,
-        |       CAST(CASE WHEN b1 % 100 > 0 THEN 2 ELSE 1 END AS INT) AS n_blocks,
-        |       CAST((1000 + (b0 * 256 + b1) * 31) * 1000 // r.rate AS BIGINT)
-        |         AS duration_ms
-        |FROM src s JOIN r ON r.idx = s.b0 % 7
-        |ORDER BY id""".stripMargin,
-    "multimodal_ogg_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) AS b0,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2),
-        |r(idx, rate) AS (VALUES
-        |  (0,8000),(1,16000),(2,22050),(3,24000),(4,32000),(5,44100),(6,48000))
-        |SELECT s.id, 'vorbis' AS codec,
-        |       CAST(1 + b0 % 2 AS INT) AS channels,
-        |       CAST(r.rate AS BIGINT) AS sample_rate,
-        |       CAST(2 + b0 % 4 AS INT) AS n_pages,
-        |       CAST(960 * (1 + b1 * 13) AS BIGINT) AS last_granule,
-        |       CAST(960 * (1 + b1 * 13) * 1000 // r.rate AS BIGINT) AS duration_ms
-        |FROM src s JOIN r ON r.idx = s.b1 % 7
-        |ORDER BY id""".stripMargin,
-    "multimodal_avif_meta" ->
-      """SELECT doc_id AS id, 'avif' AS brand,
-        |       CAST(1 + (ascii(substr(text, 1, 1)) * 256 + ascii(substr(text, 2, 1))) % 4000 AS BIGINT) AS width,
-        |       CAST(1 + (ascii(substr(text, 1, 1)) + ascii(substr(text, 2, 1)) * 3) % 3000 AS BIGINT) AS height,
-        |       CAST(CASE WHEN ascii(substr(text, 2, 1)) % 2 = 1 THEN 2 ELSE 1 END AS INT) AS n_props
-        |FROM documents WHERE length(text) >= 2 ORDER BY id""".stripMargin,
-    "multimodal_webm_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id,
-        |         ascii(substr(text, 1, 1)) % 4 AS cfg,
-        |         ascii(substr(text, 2, 1)) AS b1
-        |  FROM documents WHERE length(text) >= 2)
-        |SELECT id,
-        |       CASE WHEN b1 % 2 = 0 THEN 'webm' ELSE 'matroska' END AS doc_type,
-        |       CAST(100000 * (1 + b1 % 20) AS BIGINT) AS timestamp_scale,
-        |       CAST(CASE cfg WHEN 0 THEN 1 WHEN 1 THEN 1 WHEN 2 THEN 2 ELSE 3 END AS INT)
-        |         AS n_tracks,
-        |       CASE cfg WHEN 0 THEN 'audio' WHEN 1 THEN 'video'
-        |                WHEN 2 THEN 'video,audio'
-        |                ELSE 'video,audio,subtitle' END AS track_types,
-        |       CASE cfg WHEN 0 THEN 'A_OPUS' WHEN 1 THEN 'V_VP9'
-        |                WHEN 2 THEN 'V_VP9,A_OPUS'
-        |                ELSE 'V_VP8,A_VORBIS,S_TEXT/UTF8' END AS codec_ids
-        |FROM src ORDER BY id""".stripMargin,
-    // The fixture page's text content re-assembled from the raw
-    // document text (escape→extract is the identity) plus the fixed
-    // boilerplate strings, whitespace-collapsed exactly like the
-    // extractor's final pass.
-    "html_extract_clean" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id, text, CAST(1 + doc_id % 3 AS INT) AS n_links
-        |  FROM documents WHERE text IS NOT NULL)
-        |SELECT id, 'Doc ' || id AS title,
-        |       trim(regexp_replace(
-        |         'Top Nav ' || text || ' ' || repeat('More ', n_links) ||
-        |         'AB&<tag> (c) corp', '[ \t\n\r\f]+', ' ', 'g')) AS text_clean,
-        |       n_links
-        |FROM src ORDER BY id""".stripMargin,
-    // The canonical form re-assembled arithmetically from the same
-    // id the fixture builder used: lowercase scheme/host, default
-    // port gone, /d{k}/./sk%41ip/../p%41ge → /d{k}/pAge, tracking
-    // params gone, survivors sorted (a=1&b=2&id=N), fragment gone.
-    "url_normalize" ->
-      """WITH src AS (SELECT CAST(doc_id AS BIGINT) AS id FROM documents),
-        |d AS (
-        |  SELECT id,
-        |         CASE WHEN id % 2 = 0 THEN 'http' ELSE 'https' END AS scheme,
-        |         'www.site' || (id % 10) ||
-        |           CASE WHEN (id % 10) % 3 = 0 THEN '.co.uk' ELSE '.com' END
-        |           AS host,
-        |         'site' || (id % 10) ||
-        |           CASE WHEN (id % 10) % 3 = 0 THEN '.co.uk' ELSE '.com' END
-        |           AS domain
-        |  FROM src)
-        |SELECT id,
-        |       scheme || '://' || host || '/d' || (id % 7) || '/pAge?a=1&b=2&id='
-        |         || id AS url_norm,
-        |       host, domain
-        |FROM d ORDER BY id""".stripMargin,
-    // The whole pipeline's output re-derived arithmetically: the WARC
-    // wrap/unwrap is the identity on (url, page), the page's only
-    // text is the escaped document text plus the anchor word, and the
-    // URL canonicalizes as in url_normalize (here with /./ removal
-    // and only the id param surviving).
-    "crawl_pipeline" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id, text
-        |  FROM documents WHERE text IS NOT NULL)
-        |SELECT id,
-        |       CASE WHEN id % 2 = 0 THEN 'http' ELSE 'https' END ||
-        |         '://www.site' || (id % 10) ||
-        |         CASE WHEN (id % 10) % 3 = 0 THEN '.co.uk' ELSE '.com' END ||
-        |         '/d' || (id % 7) || '/page?id=' || id AS url_norm,
-        |       'site' || (id % 10) ||
-        |         CASE WHEN (id % 10) % 3 = 0 THEN '.co.uk' ELSE '.com' END
-        |         AS domain,
-        |       trim(regexp_replace(text || ' next', '[ \t\n\r\f]+', ' ', 'g'))
-        |         AS text_clean,
-        |       CAST(1 AS INT) AS n_links,
-        |       CAST(200 AS INT) AS status
-        |FROM src ORDER BY id""".stripMargin,
-    // The decoded page re-derived arithmetically: per class the
-    // charset/provenance are fixed by the fixture's declaration
-    // convention, and the non-ASCII markers are rebuilt from their
-    // Unicode codepoints with chr() — if the wrong codec ran on the
-    // Spark side the markers come back as mojibake and the hash
-    // diverges. Text = document text + marker, whitespace-collapsed
-    // exactly like the extractor.
-    "crawl_charset" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id, text
-        |  FROM documents WHERE text IS NOT NULL),
-        |d AS (SELECT id, text, id % 5 AS cls FROM src)
-        |SELECT id,
-        |       CASE cls WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'ISO-8859-1'
-        |            WHEN 2 THEN 'windows-1251' WHEN 3 THEN 'ISO-8859-1'
-        |            ELSE 'UTF-8' END AS charset,
-        |       CASE cls WHEN 0 THEN 'http' WHEN 1 THEN 'meta'
-        |            WHEN 2 THEN 'meta' WHEN 3 THEN 'fallback'
-        |            ELSE 'bom' END AS src,
-        |       'Doc ' || id AS title,
-        |       trim(regexp_replace(text || ' ' ||
-        |         CASE cls WHEN 0 THEN 'caf' || chr(233) || ' ' || chr(1046)
-        |              WHEN 1 THEN chr(233) || chr(177)
-        |              WHEN 2 THEN chr(1044) || chr(1078)
-        |              WHEN 3 THEN chr(233) || chr(252)
-        |              ELSE chr(937) || chr(960) END,
-        |         '[ \t\n\r\f]+', ' ', 'g')) AS text_clean
-        |FROM d ORDER BY id""".stripMargin,
-    // The edge multiset re-derived arithmetically: per doc the six
-    // hrefs resolve to partner{q}.example, site{h}.com (the cdn), and
-    // four self-edges (absolute-path, dot-segment relative,
-    // query-only, fragment-only); the href-less named anchor emits
-    // nothing.
-    "crawl_links" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |d AS (SELECT id % 10 AS h, id % 4 AS q,
-        |        CASE WHEN (id % 10) % 3 = 0 THEN 'co.uk' ELSE 'com' END AS tld
-        |      FROM src),
-        |e AS (
-        |  SELECT 'site' || h || '.' || tld AS src_domain,
-        |         'partner' || q || '.example' AS dst_domain FROM d
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.com' FROM d
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.' || tld FROM d
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.' || tld FROM d
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.' || tld FROM d
-        |  UNION ALL SELECT 'site' || h || '.' || tld,
-        |         'site' || h || '.' || tld FROM d)
-        |SELECT src_domain, dst_domain, CAST(count(*) AS BIGINT) AS n_links
-        |FROM e GROUP BY src_domain, dst_domain
-        |ORDER BY src_domain, dst_domain""".stripMargin,
-    // The canonical URL re-derived arithmetically from g = id % 120
-    // (everything per-fetch — case, port, dot-segment, tracking ids,
-    // param order, fragment — normalizes away); keep-best via the
-    // window-max + min-id idiom of the dedup_keep_best oracle.
-    "crawl_url_dedup" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id,
-        |         CAST(n_chars AS BIGINT) AS n_chars,
-        |         CAST(doc_id % 120 AS BIGINT) AS g
-        |  FROM documents WHERE text IS NOT NULL),
-        |u AS (
-        |  SELECT id, n_chars,
-        |         CASE WHEN g % 2 = 0 THEN 'http' ELSE 'https' END ||
-        |           '://www.page' || (g % 10) || '.com/a' || (g % 5) ||
-        |           '/x?b=1&k=' || g AS url_norm
-        |  FROM src),
-        |best AS (
-        |  SELECT url_norm, min(id) AS keep_id FROM (
-        |    SELECT url_norm, id, n_chars,
-        |           max(n_chars) OVER (PARTITION BY url_norm) AS mx
-        |    FROM u)
-        |  WHERE n_chars = mx GROUP BY url_norm)
-        |SELECT u.url_norm, CAST(count(*) AS BIGINT) AS n_fetches,
-        |       b.keep_id, max(u.n_chars) AS max_len
-        |FROM u JOIN best b USING (url_norm)
-        |GROUP BY u.url_norm, b.keep_id
-        |ORDER BY u.url_norm""".stripMargin,
-    // Each class's verdict derived BY HAND from RFC 9309 §2.2.2
-    // against the fixture policy: graftbot allowed = {no-match,
-    // graft-carve-out wins by length, tmp* not in its group,
-    // no-match}; otherbot allowed = {no-match, $-anchored Allow
-    // out-ranks Disallow, no-match} — closed-form, zero re-derivation
-    // of the matcher.
-    "crawl_robots" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |d AS (SELECT id, id % 6 AS cls FROM src)
-        |SELECT id,
-        |       CASE cls WHEN 0 THEN '/public/p' || id
-        |            WHEN 1 THEN '/private/p' || id
-        |            WHEN 2 THEN '/private/graft/p' || id
-        |            WHEN 3 THEN '/tmpfile' || id
-        |            WHEN 4 THEN '/private/ok'
-        |            ELSE '/ok/tmp' || id END AS path,
-        |       cls IN (0, 2, 3, 5) AS allowed_graft,
-        |       cls IN (0, 4, 5) AS allowed_other
-        |FROM d ORDER BY id""".stripMargin,
-    // The seeded frontier re-derived arithmetically: k = 1 + id%3
-    // entries per document, loc rebuilt with the DECODED ampersand,
-    // priority re-parsed from the same decimal string both engines
-    // turn into the identical nearest double.
-    "crawl_sitemap" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |d AS (SELECT id, CAST(j - 1 AS BIGINT) AS pos
-        |      FROM src, unnest(generate_series(1, CAST(1 + id % 3 AS INT))) t(j))
-        |SELECT id, pos,
-        |       'https://www.site' || (id % 10) || '.com/page' || id || '/' ||
-        |         pos || '?a=1&b=' || pos AS loc,
-        |       '2026-0' || (1 + id % 9) || '-01' AS lastmod,
-        |       CAST('0.' || (id % 10) AS DOUBLE) AS priority
-        |FROM d ORDER BY id, pos""".stripMargin,
-    // The two-level expansion re-derived: k = 1+id%3 children, child
-    // j holds m = 1+(id+j)%2 pages with the same loc/lastmod residues.
-    "crawl_sitemap_index" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |ch AS (
-        |  SELECT id, CAST(j - 1 AS BIGINT) AS child_idx
-        |  FROM src, unnest(generate_series(1, CAST(1 + id % 3 AS INT))) t(j)),
-        |pg AS (
-        |  SELECT id, child_idx, CAST(u - 1 AS BIGINT) AS pos
-        |  FROM ch, unnest(generate_series(1,
-        |       CAST(1 + (id + child_idx) % 2 AS INT))) t(u))
-        |SELECT id, child_idx, pos,
-        |       'https://www.site' || (id % 10) || '.com/maps/sm' ||
-        |         child_idx || '.xml' AS child_loc,
-        |       'https://www.site' || (id % 10) || '.com/p' || id || '/c' ||
-        |         child_idx || '/u' || pos AS loc,
-        |       '2026-0' || (1 + (id + child_idx + pos) % 9) || '-02' AS lastmod
-        |FROM pg ORDER BY id, child_idx, pos""".stripMargin,
-    // Pinned ground truth: the xn-- forms are the PUBLISHED encodings
-    // of these labels (and the spec re-derives them against the JDK's
-    // independent IDNA implementation), so the oracle simply states
-    // them — punycode itself is not SQL-expressible.
-    "crawl_idn" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |d AS (SELECT id, id % 4 AS cls FROM src)
-        |SELECT id,
-        |       CASE cls
-        |         WHEN 0 THEN 'http://www.site' || (id % 10) || '.com/p' || id
-        |         WHEN 1 THEN 'http://www.xn--mnchen-3ya.de/p' || id
-        |         WHEN 2 THEN 'https://shop.xn--bcher-kva.example/p' || id
-        |         ELSE 'http://www.xn--caf-dma.com/p' || id END AS url_norm,
-        |       CASE cls
-        |         WHEN 0 THEN 'site' || (id % 10) || '.com'
-        |         WHEN 1 THEN 'xn--mnchen-3ya.de'
-        |         WHEN 2 THEN 'xn--bcher-kva.example'
-        |         ELSE 'xn--caf-dma.com' END AS domain
-        |FROM d ORDER BY id""".stripMargin,
-    // The exact integer recurrence mirrored: edge set re-derived (and
-    // DISTINCT'd) from the same residues, then 5 chained iteration
-    // CTEs of r' = 150000 + (85·Σ(r // outdeg)) // 100 — all integral,
-    // so both engines agree bitwise (see pageRankOracle).
-    "crawl_rank" -> pageRankOracle(5),
-    // Same edge CTEs, then 4 unnormalized integer HITS rounds: auth
-    // from current hubs, hub from the NEW auths — both engines run
-    // the identical Long recurrence.
-    "crawl_hits" -> hitsOracle(4),
-    // Same edge CTEs, then 3 synchronous label-propagation rounds —
-    // neighbor-label counts, per-vertex max, least label among ties.
-    "crawl_communities" -> lpaOracle(3),
-    // Modularity replayed over the same LPA labels: canonical
-    // undirected edges, intra counts, degree sums, and the exact
-    // integer form (4·m·e_c − d_c²) / 4m² in HUGEINT (// truncates
-    // toward zero, matching Spark's div on DECIMAL).
-    "crawl_modularity" -> (lpaCtes(3) +
-      """,
-        |uu AS (SELECT DISTINCT least(a, b) AS x, greatest(a, b) AS y FROM u),
-        |lbl AS (SELECT v, label AS community FROM l3),
-        |wl AS (SELECT la.community AS ca, lb.community AS cb
-        |       FROM uu JOIN lbl la ON la.v = uu.x JOIN lbl lb ON lb.v = uu.y),
-        |intra AS (SELECT ca AS community, CAST(count(*) AS BIGINT) AS intra_edges
-        |          FROM wl WHERE ca = cb GROUP BY 1),
-        |dg AS (SELECT v, count(*) AS deg
-        |       FROM (SELECT x AS v FROM uu UNION ALL SELECT y FROM uu)
-        |       GROUP BY v),
-        |pc AS (SELECT lbl.community, CAST(count(*) AS BIGINT) AS n_nodes,
-        |              CAST(sum(dg.deg) AS BIGINT) AS degree_sum
-        |       FROM dg JOIN lbl ON lbl.v = dg.v GROUP BY 1),
-        |mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM uu)
-        |SELECT pc.community, pc.n_nodes,
-        |       coalesce(intra.intra_edges, 0) AS intra_edges, pc.degree_sum,
-        |       CAST((CAST(1000000 AS HUGEINT) *
-        |             (4 * CAST(mm.m AS HUGEINT) * coalesce(intra.intra_edges, 0) -
-        |              CAST(pc.degree_sum AS HUGEINT) * pc.degree_sum)) //
-        |            (4 * CAST(mm.m AS HUGEINT) * mm.m) AS BIGINT) AS q_micro
-        |FROM pc LEFT JOIN intra USING (community), mm
-        |ORDER BY community""".stripMargin),
-    // k-core replayed: same structured graph, the H-operator rounds
-    // unrolled past their fixpoint (the graph converges in 2; extra
-    // rounds are provably no-ops on a fixpoint).
-    "crawl_kcore" -> {
-      val rounds = (1 to 6).map { i =>
-        s"""r$i AS (SELECT e.u, c${i - 1}.c FROM e JOIN c${i - 1} ON c${i - 1}.u = e.v),
-           |c$i AS MATERIALIZED (
-           |  SELECT u, max(least(rn, c)) AS c FROM (
-           |    SELECT u, c, row_number() OVER (PARTITION BY u ORDER BY c DESC) AS rn
-           |    FROM r$i)
-           |  GROUP BY u)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH raw AS (SELECT doc_id % 97 AS n FROM documents),
-         |e0 AS (
-         |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example' AS src,
-         |         'd' || lpad(CAST((n + 1) % 97 AS VARCHAR), 2, '0') || '.example' AS dst
-         |  FROM raw
-         |  UNION ALL
-         |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-         |         'd' || lpad(CAST(8 * ((n // 8 + k) % 13) AS VARCHAR), 2, '0') || '.example'
-         |  FROM raw, unnest(generate_series(1, 12)) t(k) WHERE n % 8 = 0
-         |  UNION ALL
-         |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-         |         'd' || lpad(CAST((n * 5 + 11) % 97 AS VARCHAR), 2, '0') || '.example'
-         |  FROM raw WHERE n % 7 = 3),
-         |und AS (SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-         |        FROM e0 WHERE src <> dst),
-         |e AS MATERIALIZED (
-         |  SELECT a AS u, b AS v FROM und UNION ALL SELECT b, a FROM und),
-         |c0 AS MATERIALIZED (SELECT u, count(*) AS c FROM e GROUP BY u),
-         |$rounds
-         |SELECT u AS domain, CAST(c AS BIGINT) AS core
-         |FROM c6 ORDER BY domain""".stripMargin
-    },
-    // Assortativity replayed: the same canonical undirected edges,
-    // symmetrized exchangeable moments in HUGEINT, one 6-dp Pearson r.
-    "crawl_assortativity" ->
-      """WITH raw AS (SELECT doc_id % 97 AS n FROM documents),
-        |e0 AS (
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example' AS src,
-        |         'd' || lpad(CAST((n*3+1) % 97 AS VARCHAR), 2, '0') || '.example' AS dst
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n*7+2) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n+1) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw),
-        |und AS (
-        |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |  FROM e0 WHERE src <> dst),
-        |deg AS (
-        |  SELECT v, CAST(count(*) AS BIGINT) AS dg
-        |  FROM (SELECT a AS v FROM und UNION ALL SELECT b FROM und)
-        |  GROUP BY v),
-        |sym AS (
-        |  SELECT da.dg AS dx, db.dg AS dy
-        |  FROM und JOIN deg da ON da.v = und.a JOIN deg db ON db.v = und.b
-        |  UNION ALL
-        |  SELECT db.dg, da.dg
-        |  FROM und JOIN deg da ON da.v = und.a JOIN deg db ON db.v = und.b),
-        |mo AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS m2,
-        |         CAST(sum(CAST(dx AS HUGEINT)) AS HUGEINT) AS sx,
-        |         CAST(sum(CAST(dy AS HUGEINT)) AS HUGEINT) AS sy,
-        |         CAST(sum(CAST(dx AS HUGEINT) * dx) AS HUGEINT) AS sxx,
-        |         CAST(sum(CAST(dy AS HUGEINT) * dy) AS HUGEINT) AS syy,
-        |         CAST(sum(CAST(dx AS HUGEINT) * dy) AS HUGEINT) AS sxy
-        |  FROM sym)
-        |SELECT CAST(m2 // 2 AS BIGINT) AS n_edges,
-        |       CASE WHEN m2 * sxx - sx * sx = 0 OR m2 * syy - sy * sy = 0
-        |            THEN CAST(0 AS BIGINT)
-        |            ELSE CAST(round(
-        |              CAST(m2 * sxy - sx * sy AS DOUBLE) /
-        |              sqrt(CAST(m2 * sxx - sx * sx AS DOUBLE) *
-        |                   CAST(m2 * syy - sy * sy AS DOUBLE)) * 1000000.0, 0)
-        |              AS BIGINT) END AS r_micro
-        |FROM mo""".stripMargin,
-    "crawl_triangles" ->
-      """WITH raw AS (SELECT doc_id % 97 AS n FROM documents),
-        |e0 AS (
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example' AS src,
-        |         'd' || lpad(CAST((n*3+1) % 97 AS VARCHAR), 2, '0') || '.example' AS dst
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n*7+2) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n+1) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw),
-        |und AS (
-        |  SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
-        |  FROM e0 WHERE src <> dst),
-        |deg AS (
-        |  SELECT v, count(*) AS dg
-        |  FROM (SELECT a AS v FROM und UNION ALL SELECT b FROM und)
-        |  GROUP BY v),
-        |o AS (
-        |  SELECT CASE WHEN da.dg < db.dg OR (da.dg = db.dg AND a < b)
-        |              THEN a ELSE b END AS u,
-        |         CASE WHEN da.dg < db.dg OR (da.dg = db.dg AND a < b)
-        |              THEN b ELSE a END AS w,
-        |         CASE WHEN da.dg < db.dg OR (da.dg = db.dg AND a < b)
-        |              THEN db.dg ELSE da.dg END AS dw
-        |  FROM und
-        |  JOIN deg da ON da.v = und.a
-        |  JOIN deg db ON db.v = und.b),
-        |wed AS (
-        |  SELECT e1.u AS u, e1.w AS x, e2.w AS y
-        |  FROM o e1 JOIN o e2 ON e1.u = e2.u
-        |  WHERE e1.dw < e2.dw OR (e1.dw = e2.dw AND e1.w < e2.w)),
-        |tri AS (
-        |  SELECT wed.u AS u, wed.x AS x, wed.y AS y
-        |  FROM wed JOIN o ON o.u = wed.x AND o.w = wed.y),
-        |pn AS (
-        |  SELECT v, count(*) AS n_tri
-        |  FROM (SELECT u AS v FROM tri UNION ALL SELECT x FROM tri
-        |        UNION ALL SELECT y FROM tri)
-        |  GROUP BY v)
-        |SELECT deg.v AS domain, CAST(deg.dg AS BIGINT) AS degree,
-        |       CAST(coalesce(pn.n_tri, 0) AS BIGINT) AS n_tri,
-        |       CAST(CASE WHEN deg.dg > 1
-        |                 THEN (1000000 * 2 * coalesce(pn.n_tri, 0)) //
-        |                      (deg.dg * (deg.dg - 1))
-        |                 ELSE 0 END AS BIGINT) AS clustering_micro
-        |FROM deg LEFT JOIN pn ON pn.v = deg.v
-        |ORDER BY domain""".stripMargin,
-    "crawl_cocitation" ->
-      """WITH raw AS (SELECT doc_id % 97 AS n FROM documents),
-        |e0 AS (
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example' AS src,
-        |         'd' || lpad(CAST((n*3+1) % 97 AS VARCHAR), 2, '0') || '.example' AS dst
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n*7+2) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n+1) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw),
-        |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-        |deg AS (SELECT src, count(*) AS od FROM e GROUP BY 1),
-        |c AS (SELECT e.src, e.dst FROM e JOIN deg USING (src) WHERE od <= 64)
-        |SELECT a.dst AS dom_a, b.dst AS dom_b,
-        |       CAST(count(*) AS BIGINT) AS n_cociting
-        |FROM c a JOIN c b ON a.src = b.src AND a.dst < b.dst
-        |GROUP BY 1, 2
-        |ORDER BY n_cociting DESC, dom_a, dom_b LIMIT 15""".stripMargin,
-    "crawl_reciprocity" ->
-      """WITH raw AS (SELECT doc_id % 97 AS n FROM documents),
-        |e0 AS (
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example' AS src,
-        |         'd' || lpad(CAST((n*3+1) % 97 AS VARCHAR), 2, '0') || '.example' AS dst
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n*7+2) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw
-        |  UNION ALL
-        |  SELECT 'd' || lpad(CAST(n AS VARCHAR), 2, '0') || '.example',
-        |         'd' || lpad(CAST((n+1) % 97 AS VARCHAR), 2, '0') || '.example'
-        |  FROM raw),
-        |e AS (SELECT DISTINCT src, dst FROM e0 WHERE src <> dst),
-        |f AS (
-        |  SELECT e.src, e.dst,
-        |         CASE WHEN r.src IS NULL THEN 0 ELSE 1 END AS back
-        |  FROM e LEFT JOIN e r ON r.src = e.dst AND r.dst = e.src)
-        |SELECT src AS domain, CAST(count(*) AS BIGINT) AS out_deg,
-        |       CAST(sum(back) AS BIGINT) AS n_reciprocal,
-        |       CAST((1000000 * sum(back)) // count(*) AS BIGINT)
-        |         AS reciprocity_micro
-        |FROM f GROUP BY src ORDER BY domain""".stripMargin,
-    "crawl_mirrors" ->
-      """WITH raw AS (
-        |  SELECT doc_id % 10 AS h, (doc_id % 10) % 5 AS k FROM documents),
-        |e0 AS (
-        |  SELECT 'm' || CAST(h AS VARCHAR) || '.example' AS src,
-        |         'asset' || CAST(k AS VARCHAR) || '.cdn' AS dst FROM raw
-        |  UNION ALL
-        |  SELECT 'm' || CAST(h AS VARCHAR) || '.example',
-        |         'page' || CAST((k*3+1) % 7 AS VARCHAR) || '.example' FROM raw),
-        |e AS (SELECT DISTINCT src, dst FROM e0),
-        |fp AS (
-        |  SELECT src, md5(string_agg(dst, chr(1) ORDER BY dst)) AS fpv,
-        |         count(*) AS n_links
-        |  FROM e GROUP BY src),
-        |g AS (
-        |  SELECT fpv, count(*) AS n_hosts, min(src) AS group_rep
-        |  FROM fp GROUP BY fpv)
-        |SELECT fp.src AS host, g.group_rep,
-        |       CAST(g.n_hosts AS BIGINT) AS n_hosts,
-        |       CAST(fp.n_links AS BIGINT) AS n_links
-        |FROM fp JOIN g USING (fpv)
-        |WHERE g.n_hosts >= 2
-        |ORDER BY group_rep, host""".stripMargin,
-    // Anchor rows re-derived from the residues: entity decoding
-    // ("&amp;" -> "&"), nested-markup stripping, URL resolution, and
-    // registrable-domain grouping all replayed arithmetically.
-    "crawl_anchor_text" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |r AS (
-        |  SELECT id % 10 AS h, id % 4 AS q,
-        |         CASE WHEN (id % 10) % 3 = 0 THEN 'co.uk' ELSE 'com' END AS tld
-        |  FROM src),
-        |a AS (
-        |  SELECT 'partner' || q || '.example' AS dst_domain,
-        |         'review ' || q || ' & deals' AS anchor FROM r
-        |  UNION ALL
-        |  SELECT 'site' || h || '.' || tld, 'about site' || h FROM r
-        |  UNION ALL
-        |  SELECT 'site' || h || '.com', 'cdn ' || h FROM r)
-        |SELECT dst_domain, CAST(count(*) AS BIGINT) AS n_anchors,
-        |       CAST(count(DISTINCT anchor) AS BIGINT) AS n_texts,
-        |       min(anchor) AS top_text
-        |FROM a GROUP BY 1 ORDER BY 1""".stripMargin,
-    // Same edge CTEs, then 3 BFS waves from the two seeds — frontier
-    // join, reached-set exclusion, integral depths.
-    "crawl_depth" -> bfsOracle(3),
-    // One row per declared variant, entity decoding and resolution
-    // replayed arithmetically (fr only on even ids).
-    // Planted robots-gate truth by id arithmetic: variant 1 noindex,
-    // 2 nofollow+noarchive, 3 none (= noindex+nofollow), 4 a
-    // commented-out meta (all false), 0 a non-robots meta (all
-    // false); nofollow links = id % 3.
-    "crawl_meta_robots" ->
-      """SELECT doc_id AS id,
-        |       (doc_id % 5 = 1 OR doc_id % 5 = 3) AS noindex,
-        |       (doc_id % 5 = 2 OR doc_id % 5 = 3) AS nofollow,
-        |       (doc_id % 5 = 2) AS noarchive,
-        |       CAST(doc_id % 3 AS BIGINT) AS nofollow_links
-        |FROM documents WHERE text IS NOT NULL ORDER BY id""".stripMargin,
-    "crawl_hreflang" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |v AS (
-        |  SELECT id, l.lang
-        |  FROM src, (VALUES ('en'), ('de'), ('fr')) l(lang)
-        |  WHERE l.lang != 'fr' OR id % 2 = 0)
-        |SELECT id, lang,
-        |       'https://www.site' || (id % 10) || '.com/' || lang ||
-        |         '/p' || (id % 7) || '?x=1&y=2' AS url
-        |FROM v ORDER BY id, lang""".stripMargin,
-    // Per-block marker counts + the same CASE + the same run collapse.
-    "lang_segments" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id,
-        |         string_split(text || ' der die das und der die das und' ||
-        |           ' le la les et le la les et', ' ') AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |tk AS (SELECT id, t, CAST(ceil(len(t) / 8.0) AS INT) AS nb FROM toks),
-        |blocks AS (
-        |  SELECT id, b - 1 AS block_idx, t[(b-1)*8 + 1 : (b-1)*8 + 8] AS blk
-        |  FROM tk, unnest(generate_series(1, nb)) g(b)),
-        |sc AS (
-        |  SELECT id, block_idx,
-        |    len(list_filter(blk, x -> x IN ('the','a','and','of'))) AS en,
-        |    len(list_filter(blk, x -> x IN ('der','die','das','und'))) AS de,
-        |    len(list_filter(blk, x -> x IN ('le','la','les','et'))) AS fr,
-        |    len(list_filter(blk, x -> x IN ('el','los','las','y'))) AS es
-        |  FROM blocks),
-        |pred AS (
-        |  SELECT id, block_idx,
-        |         CASE WHEN en >= de AND en >= fr AND en >= es THEN 'en'
-        |              WHEN de >= fr AND de >= es THEN 'de'
-        |              WHEN fr >= es THEN 'fr' ELSE 'es' END AS lang
-        |  FROM sc),
-        |fl AS (
-        |  SELECT *, CASE WHEN lag(lang) OVER w IS NULL
-        |                   OR lag(lang) OVER w != lang THEN 1 ELSE 0 END
-        |            AS boundary
-        |  FROM pred WINDOW w AS (PARTITION BY id ORDER BY block_idx)),
-        |seg AS (
-        |  SELECT *, sum(boundary) OVER
-        |    (PARTITION BY id ORDER BY block_idx) - 1 AS seg_id FROM fl)
-        |SELECT id, CAST(seg_id AS BIGINT) AS seg_id, min(lang) AS lang,
-        |       CAST(min(block_idx) AS BIGINT) AS first_block,
-        |       count(*) AS n_blocks
-        |FROM seg GROUP BY id, seg_id ORDER BY id, seg_id""".stripMargin,
-    // Backoff replayed: stable_run = 5 - (id%6), interval = 3600·2^run
-    // (all under the 7-day cap on this fixture).
-    "crawl_recrawl" ->
-      """SELECT doc_id AS page, CAST(6 AS BIGINT) AS n_fetches,
-        |       CAST(doc_id % 6 AS BIGINT) AS last_change_idx,
-        |       CAST(5 - doc_id % 6 AS BIGINT) AS stable_run,
-        |       CAST(3600 * (2 ** (5 - doc_id % 6)) AS BIGINT) AS interval_s,
-        |       CAST(1700000000 + doc_id +
-        |            3600 * (2 ** (5 - doc_id % 6)) AS BIGINT) AS next_fetch_s
-        |FROM documents ORDER BY page""".stripMargin,
-    // Spoof card replayed: the three domain variants per h, with the
-    // two confusable classes flagged (their skeleton IS the legit
-    // domain, which exists for every h) and the legit domain clean.
-    "crawl_spoof_domains" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |d AS (
-        |  SELECT DISTINCT
-        |         CASE id % 3
-        |           WHEN 0 THEN 'fаlcon' || chr(97 + CAST(id % 10 AS INT)) || '.example'
-        |           WHEN 1 THEN 'fa1con' || chr(97 + CAST(id % 10 AS INT)) || '.example'
-        |           ELSE 'falcon' || chr(97 + CAST(id % 10 AS INT)) || '.example' END AS domain,
-        |         CASE WHEN id % 3 <= 1 THEN true ELSE false END AS spoofed,
-        |         chr(97 + CAST(id % 10 AS INT)) AS sfx
-        |  FROM src)
-        |SELECT domain,
-        |       CASE WHEN spoofed THEN 'falcon' || sfx || '.example'
-        |            ELSE domain END AS skeleton,
-        |       spoofed AS is_spoof
-        |FROM d ORDER BY domain""".stripMargin,
-    // Priorities replayed: same md5-u16 uniform (the DP/bootstrap
-    // seeding family), same integral division, same total order.
-    "priority_sample" -> {
-      val u16 =
-        """((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096 +
-          | (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256 +
-          | (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 +
-          |  strpos('0123456789abcdef', substr(h, 4, 1)) - 1)""".stripMargin
-      s"""WITH src AS (
-         |  SELECT doc_id, lang, n_chars,
-         |         md5('graft:' || CAST(doc_id AS VARCHAR)) AS h
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id, lang, n_chars,
-         |         CAST((CAST(n_chars AS BIGINT) * 65536) //
-         |              (CAST($u16 AS BIGINT) + 1) AS BIGINT) AS priority
-         |  FROM src)
-         |SELECT doc_id, lang, n_chars, priority
-         |FROM p ORDER BY priority DESC, doc_id LIMIT 50""".stripMargin
-    },
-    // HT estimate replayed: same integer priorities, τ from the
-    // (k+1)-th row of the same total order, Σ max(w, τ) in BIGINT.
-    "sample_ht_estimate" -> {
-      val u16 =
-        """((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096 +
-          | (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256 +
-          | (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 +
-          |  strpos('0123456789abcdef', substr(h, 4, 1)) - 1)""".stripMargin
-      s"""WITH src AS (
-         |  SELECT doc_id, n_chars,
-         |         md5('graft:' || CAST(doc_id AS VARCHAR)) AS h
-         |  FROM documents),
-         |p AS (
-         |  SELECT doc_id, n_chars,
-         |         CAST((CAST(n_chars AS BIGINT) * 65536) //
-         |              (CAST($u16 AS BIGINT) + 1) AS BIGINT) AS q
-         |  FROM src),
-         |topk1 AS (SELECT * FROM p ORDER BY q DESC, doc_id LIMIT 51),
-         |tau AS (SELECT CASE WHEN count(*) <= 50 THEN 0
-         |               ELSE min(q) END AS t FROM topk1),
-         |smp AS (SELECT * FROM topk1 ORDER BY q DESC, doc_id LIMIT 50),
-         |est AS (SELECT CAST(sum(greatest(CAST(n_chars AS BIGINT), tau.t))
-         |          AS BIGINT) AS ht_estimate FROM smp, tau),
-         |tot AS (SELECT CAST(sum(n_chars) AS BIGINT) AS true_total,
-         |               CAST(count(*) AS BIGINT) AS n_total FROM documents)
-         |SELECT CAST(50 AS BIGINT) AS k, tot.n_total, tot.true_total,
-         |       est.ht_estimate,
-         |       CAST((1000000 * abs(est.ht_estimate - tot.true_total)) //
-         |            tot.true_total AS BIGINT) AS rel_err_micro
-         |FROM est, tot""".stripMargin
-    },
-    // Hamilton apportionment replayed: micro quotas, floor, largest
-    // remainders by correlated better-than count, +1 under leftover.
-    // The same integer moments, the double-seeded corrected root and
-    // the Hamilton core in HUGEINT.
-    "sample_neyman" ->
-      """WITH m AS (
-        |  SELECT lang AS stratum, CAST(COUNT(*) AS BIGINT) AS n_h,
-        |         CAST(SUM(n_chars) AS BIGINT) AS s1,
-        |         SUM(CAST(n_chars AS HUGEINT) * n_chars) AS s2
-        |  FROM documents GROUP BY 1),
-        |rad AS (SELECT stratum, n_h,
-        |          CAST(n_h AS HUGEINT) * s2 - CAST(s1 AS HUGEINT) * s1 AS x
-        |        FROM m),
-        |sq AS (SELECT stratum, n_h, x,
-        |         CAST(floor(sqrt(CAST(x AS DOUBLE))) AS HUGEINT) AS s0
-        |       FROM rad),
-        |sq2 AS (SELECT *, CASE WHEN s0 * s0 > x THEN s0 - 1 ELSE s0 END AS sa
-        |        FROM sq),
-        |sw AS (SELECT stratum, n_h,
-        |         CAST(CASE WHEN (sa + 1) * (sa + 1) <= x THEN sa + 1
-        |              ELSE sa END AS BIGINT) AS sigma_w
-        |       FROM sq2),
-        |wts AS (SELECT stratum, n_h,
-        |          CASE WHEN (SELECT SUM(sigma_w) FROM sw) > 0 THEN sigma_w
-        |               ELSE n_h END AS w
-        |        FROM sw),
-        |t AS (SELECT CAST(SUM(w) AS BIGINT) AS total FROM wts),
-        |q2 AS (SELECT stratum, n_h, w,
-        |         CAST(CAST(200 AS HUGEINT) * w * 1000000 // total AS BIGINT)
-        |           AS quota_micro
-        |       FROM wts, t),
-        |q3 AS (SELECT *, quota_micro // 1000000 AS base,
-        |         quota_micro % 1000000 AS rem_micro FROM q2),
-        |l AS (SELECT CAST(200 - SUM(base) AS BIGINT) AS leftover FROM q3),
-        |r AS (SELECT q3.*,
-        |        (SELECT COUNT(*) FROM q3 o
-        |         WHERE o.rem_micro > q3.rem_micro
-        |            OR (o.rem_micro = q3.rem_micro AND o.stratum < q3.stratum))
-        |          AS nbetter
-        |      FROM q3)
-        |SELECT stratum, n_h, CAST(w AS BIGINT) AS weight,
-        |       CAST(base + CASE WHEN nbetter < (SELECT leftover FROM l)
-        |                        THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r ORDER BY stratum""".stripMargin,
-    "sample_allocation" ->
-      """WITH c AS (
-        |  SELECT lang AS stratum, count(*) AS cnt FROM documents GROUP BY 1),
-        |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM c),
-        |q AS (
-        |  SELECT stratum, cnt,
-        |         (100 * cnt * 1000000) // total AS quota_micro
-        |  FROM c, t),
-        |q2 AS (
-        |  SELECT *, quota_micro // 1000000 AS base,
-        |         quota_micro % 1000000 AS rem_micro FROM q),
-        |l AS (SELECT CAST(100 - sum(base) AS BIGINT) AS leftover FROM q2),
-        |r AS (
-        |  SELECT q2.*,
-        |         (SELECT count(*) FROM q2 o
-        |          WHERE o.rem_micro > q2.rem_micro
-        |             OR (o.rem_micro = q2.rem_micro AND o.stratum < q2.stratum))
-        |           AS nbetter
-        |  FROM q2)
-        |SELECT stratum, CAST(cnt AS BIGINT) AS cnt,
-        |       CAST(quota_micro AS BIGINT) AS quota_micro,
-        |       CAST(base AS BIGINT) AS base,
-        |       CAST(rem_micro AS BIGINT) AS rem_micro,
-        |       CAST(base + CASE WHEN nbetter < (SELECT leftover FROM l)
-        |                        THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r ORDER BY stratum""".stripMargin,
-    // Same Hamilton replay over cnt^0.3 micro weights — pow rounds to
-    // integer micros first, everything after is exact.
-    "mixture_temperature" ->
-      """WITH c AS (
-        |  SELECT source AS stratum, count(*) AS cnt
-        |  FROM documents GROUP BY 1),
-        |w AS (
-        |  SELECT stratum, cnt,
-        |         CAST(round(pow(CAST(cnt AS DOUBLE),
-        |           CAST(3 AS DOUBLE) / CAST(10 AS DOUBLE)) * 1000000, 0)
-        |           AS BIGINT) AS w
-        |  FROM c),
-        |t AS (SELECT sum(w) AS total FROM w),
-        |-- HUGEINT division: DECIMAL // degrades to DOUBLE here and
-        |-- loses exactness past 2^53 (n*w*1e6 reaches that at ~1600
-        |-- docs per stratum); HUGEINT is the exact integral quotient
-        |q AS (
-        |  SELECT stratum, cnt, w,
-        |         CAST(CAST(1000 AS HUGEINT) * w * 1000000 AS HUGEINT)
-        |           // CAST(total AS HUGEINT) AS quota_micro
-        |  FROM w, t),
-        |q2 AS (
-        |  SELECT *, quota_micro // 1000000 AS base,
-        |         quota_micro % 1000000 AS rem_micro FROM q),
-        |l AS (SELECT CAST(1000 - sum(base) AS BIGINT) AS leftover FROM q2),
-        |r AS (
-        |  SELECT q2.*,
-        |         (SELECT count(*) FROM q2 o
-        |          WHERE o.rem_micro > q2.rem_micro
-        |             OR (o.rem_micro = q2.rem_micro AND o.stratum < q2.stratum))
-        |           AS nbetter
-        |  FROM q2)
-        |SELECT stratum, CAST(cnt AS BIGINT) AS cnt,
-        |       w AS weight_micro,
-        |       CAST(base + CASE WHEN nbetter < (SELECT leftover FROM l)
-        |                        THEN 1 ELSE 0 END AS BIGINT) AS alloc
-        |FROM r ORDER BY stratum""".stripMargin,
-    // Heaps replayed: doc-offset prefix sum, per-term first global
-    // position, V at power-of-two prefixes, the shared OLS formulas.
-    "corpus_heaps_fit" ->
-      """WITH t AS (
-        |  SELECT doc_id, string_split(text, ' ') AS toks
-        |  FROM documents WHERE text IS NOT NULL),
-        |sz AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n FROM t),
-        |off AS (
-        |  SELECT doc_id,
-        |         sum(n) OVER (ORDER BY doc_id ROWS UNBOUNDED PRECEDING) - n
-        |           AS o
-        |  FROM sz),
-        |tot AS (SELECT sum(n) AS tt FROM sz),
-        |pos AS (
-        |  SELECT p.doc_id, p.i, p.toks[CAST(p.i AS INT)] AS term
-        |  FROM (SELECT doc_id, toks,
-        |          unnest(generate_series(1, len(toks))) AS i FROM t) p),
-        |fp AS (
-        |  SELECT term, min(off.o + pos.i) AS fp
-        |  FROM pos JOIN off ON pos.doc_id = off.doc_id
-        |  GROUP BY term),
-        |pts AS (
-        |  SELECT CAST(pow(2, j) AS BIGINT) AS m
-        |  FROM (SELECT unnest(generate_series(1, 62)) AS j), tot
-        |  WHERE CAST(pow(2, j) AS BIGINT) <= tot.tt),
-        |vn AS (
-        |  SELECT m, count(*) AS v FROM fp, pts
-        |  WHERE fp.fp <= pts.m GROUP BY m),
-        |xy AS (
-        |  SELECT CAST(round(log10(m), 6) AS DECIMAL(18,6)) AS x,
-        |         CAST(round(log10(v), 6) AS DECIMAL(18,6)) AS y
-        |  FROM vn),
-        |mm AS (
-        |  SELECT count(*) AS n,
-        |         CAST(sum(x) AS DECIMAL(38,6)) AS sx,
-        |         CAST(sum(y) AS DECIMAL(38,6)) AS sy,
-        |         CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS sxx,
-        |         CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS syy,
-        |         CAST(sum(CAST(x * y AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS sxy
-        |  FROM xy),
-        |d AS (
-        |  SELECT CAST(n AS BIGINT) AS n_points,
-        |         CAST(n * sxy - sx * sy AS DOUBLE) AS num,
-        |         CAST(n * sxx - sx * sx AS DOUBLE) AS dx,
-        |         CAST(n * syy - sy * sy AS DOUBLE) AS dy,
-        |         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |         CAST(n AS DOUBLE) AS nd
-        |  FROM mm)
-        |SELECT n_points,
-        |       round(CASE WHEN dx > 0 THEN num / dx END, 6) AS beta,
-        |       round(CASE WHEN dx > 0
-        |             THEN (syd - num / dx * sxd) / nd END, 6) AS log10_k,
-        |       round(CASE WHEN dx * dy > 0
-        |             THEN num * num / (dx * dy) END, 6) AS r2
-        |FROM d""".stripMargin,
-    // Good-Turing replayed: FoF self-join, HUGEINT re-estimate.
-    "lm_good_turing" ->
-      """WITH f AS (
-        |  SELECT term, count(*) AS r FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS term
-        |    FROM documents WHERE text IS NOT NULL)
-        |  WHERE len(term) >= 1 GROUP BY 1),
-        |fof AS (SELECT r, count(*) AS n_r FROM f GROUP BY 1),
-        |nx AS (SELECT r - 1 AS r, n_r AS n1 FROM fof)
-        |SELECT fof.r, CAST(fof.n_r AS BIGINT) AS n_r,
-        |       CAST(CASE WHEN nx.n1 IS NOT NULL THEN
-        |         CAST(CAST(1000000 AS HUGEINT) * (fof.r + 1) * nx.n1
-        |              AS HUGEINT) // CAST(fof.n_r AS HUGEINT) END
-        |         AS BIGINT) AS r_star_micro
-        |FROM fof LEFT JOIN nx USING (r) ORDER BY r""".stripMargin,
-    // Zipf fit replayed: same 6-dp log grid, DECIMAL moments, the
-    // identical fixed-order double formulas.
-    "corpus_zipf_fit" ->
-      """WITH f AS (
-        |  SELECT term, count(*) AS cnt FROM (
-        |    SELECT unnest(string_split(text, ' ')) AS term
-        |    FROM documents WHERE text IS NOT NULL)
-        |  WHERE len(term) >= 1 GROUP BY 1),
-        |xy AS (
-        |  SELECT cnt,
-        |    CAST(round(log10(row_number() OVER (ORDER BY cnt DESC, term)), 6)
-        |         AS DECIMAL(18,6)) AS x,
-        |    CAST(round(log10(cnt), 6) AS DECIMAL(18,6)) AS y
-        |  FROM f),
-        |m AS (
-        |  SELECT count(*) AS n, sum(cnt) AS n_tokens,
-        |         CAST(sum(x) AS DECIMAL(38,6)) AS sx,
-        |         CAST(sum(y) AS DECIMAL(38,6)) AS sy,
-        |         CAST(sum(CAST(x * x AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS sxx,
-        |         CAST(sum(CAST(y * y AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS syy,
-        |         CAST(sum(CAST(x * y AS DECIMAL(38,12))) AS DECIMAL(38,12)) AS sxy
-        |  FROM xy),
-        |d AS (
-        |  SELECT CAST(n AS BIGINT) AS n_types,
-        |         CAST(n_tokens AS BIGINT) AS n_tokens,
-        |         CAST(n * sxy - sx * sy AS DOUBLE) AS num,
-        |         CAST(n * sxx - sx * sx AS DOUBLE) AS dx,
-        |         CAST(n * syy - sy * sy AS DOUBLE) AS dy,
-        |         CAST(sx AS DOUBLE) AS sxd, CAST(sy AS DOUBLE) AS syd,
-        |         CAST(n AS DOUBLE) AS nd
-        |  FROM m)
-        |SELECT n_types, n_tokens,
-        |       round(CASE WHEN dx > 0 THEN num / dx END, 6) AS slope,
-        |       round(CASE WHEN dx > 0
-        |             THEN (syd - num / dx * sxd) / nd END, 6) AS intercept,
-        |       round(CASE WHEN dx * dy > 0
-        |             THEN num * num / (dx * dy) END, 6) AS r2
-        |FROM d""".stripMargin,
-    // TextRank replayed: token-pair edge CTEs, then the shared
-    // integer-PageRank recurrence (one CTE per iteration).
-    "text_rank_terms" -> textRankOracle(4, 20),
-    // The 2500-id blocklist is {4k+1 : k < 2500} — membership replays
-    // as residue arithmetic, no list literal needed.
-    "sql_inset_rewrite" ->
-      """SELECT lang, count(*) AS n_blocked,
-        |       CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents
-        |WHERE doc_id % 4 = 1 AND doc_id >= 1 AND doc_id < 10001
-        |GROUP BY lang ORDER BY lang""".stripMargin,
-    // Per-pattern occurrence counts by replace-arithmetic (exact for
-    // the borderless patterns used — no occurrence can self-overlap),
-    // summed for the total, thresholded for the distinct count.
-    "blocklist_scan" -> {
-      val pats = Seq("dup", "hash", "scan", "slow scan", "table value")
-      val cnts = pats.map(p =>
-        s"(strlen(text) - strlen(replace(text, '$p', ''))) // ${p.length}")
-      s"""SELECT doc_id,
-         |       CAST(${cnts.mkString(" + ")} AS BIGINT) AS total_matches,
-         |       CAST(${cnts.map(c => s"CASE WHEN $c > 0 THEN 1 ELSE 0 END")
-          .mkString(" + ")} AS BIGINT) AS distinct_patterns
-         |FROM documents WHERE text IS NOT NULL
-         |ORDER BY doc_id""".stripMargin
-    },
-    // Expected dialects pinned from the builder residues.
-    "csv_sniff" ->
-      """SELECT doc_id AS id,
-        |       CASE doc_id % 4 WHEN 0 THEN 'comma' WHEN 1 THEN 'semicolon'
-        |            WHEN 2 THEN 'tab' ELSE 'pipe' END AS delimiter,
-        |       (doc_id % 4 = 0 OR doc_id % 4 = 3) AS quoted,
-        |       (doc_id % 2 = 0) AS header,
-        |       CAST(3 + doc_id % 3 AS BIGINT) AS n_cols
-        |FROM documents WHERE text IS NOT NULL ORDER BY id""".stripMargin,
-    // JSONL census replayed: identical line construction, DuckDB's
-    // own strict JSON parser for validity, json_keys + json_type per
-    // field (the two-arg json_type yields SQL NULL for a JSON null
-    // value — coalesced to the 'null' tag).
-    "jsonl_field_census" -> s"""$JsonlCtes
-       |SELECT * FROM census ORDER BY key, vtype""".stripMargin,
-    "jsonl_parse" -> s"""$JsonlCtes
-       |SELECT CAST(json_extract(line, '$$.id') AS BIGINT) AS id,
-       |       json_extract_string(line, '$$.lang') AS lang,
-       |       json_extract_string(line, '$$.n') AS n,
-       |       CAST(json_extract(line, '$$.ok') AS BOOLEAN) AS ok
-       |FROM v ORDER BY id""".stripMargin,
-    "jsonl_schema_card" -> s"""$JsonlCtes,
-       |agg AS (
-       |  SELECT key, CAST(sum(n) AS BIGINT) AS n_lines,
-       |         CAST(count(*) AS BIGINT) AS n_types
-       |  FROM census WHERE key <> '__malformed__' GROUP BY key),
-       |top AS (
-       |  SELECT key, vtype AS top_vtype FROM census
-       |  WHERE key <> '__malformed__'
-       |  QUALIFY row_number() OVER (PARTITION BY key
-       |    ORDER BY n DESC, vtype) = 1)
-       |SELECT a.key, a.n_lines, a.n_types, t.top_vtype,
-       |       a.n_types = 1 AS monomorphic
-       |FROM agg a JOIN top t USING (key) ORDER BY key""".stripMargin,
-    // Trap scores replayed: every host class collapses to ONE
-    // template by construction, so n_urls (distinct replay of the
-    // varying parts) IS the amplification; article hosts sit at 5.
-    "crawl_trap_scores" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |cal AS (
-        |  SELECT 'cal.example' AS host,
-        |         count(DISTINCT (2000 + id % 20) || '/' || (1 + id % 12) ||
-        |               '/' || (1 + id % 28)) AS n_urls
-        |  FROM src WHERE id % 10 = 0),
-        |ses AS (
-        |  SELECT 'shop.example' AS host, count(DISTINCT id) AS n_urls
-        |  FROM src WHERE id % 10 = 1),
-        |trk AS (
-        |  SELECT 'track.example' AS host, count(DISTINCT id) AS n_urls
-        |  FROM src WHERE id % 10 = 2),
-        |art AS (
-        |  SELECT 'site' || (id % 10) || '.example' AS host,
-        |         count(DISTINCT (id // 10) % 5) AS n_urls
-        |  FROM src WHERE id % 10 >= 3 GROUP BY 1),
-        |allh AS (
-        |  SELECT * FROM cal UNION ALL SELECT * FROM ses
-        |  UNION ALL SELECT * FROM trk UNION ALL SELECT * FROM art)
-        |SELECT host, CAST(n_urls AS BIGINT) AS n_urls,
-        |       CAST(1 AS BIGINT) AS n_templates,
-        |       CAST(n_urls AS BIGINT) AS amplification,
-        |       n_urls >= 8 AS is_trap
-        |FROM allh ORDER BY host""".stripMargin,
-    // TextTiling replayed: same block slicing, distinct-set Jaccard
-    // on the micro grid (// = div on non-negatives), running boundary
-    // sum, per-segment aggregate.
-    "text_tiling" ->
-      """WITH toks AS (
-        |  SELECT doc_id AS id, string_split(text, ' ') AS t,
-        |         CAST(ceil(len(string_split(text, ' ')) / 8.0) AS INT) AS nb
-        |  FROM documents WHERE text IS NOT NULL),
-        |blocks AS (
-        |  SELECT id, b - 1 AS block_idx,
-        |         t[(b-1)*8 + 1 : (b-1)*8 + 8] AS block
-        |  FROM toks, unnest(generate_series(1, nb)) g(b)),
-        |sets AS (
-        |  SELECT id, block_idx, len(block) AS n_tok,
-        |         list_distinct(block) AS tset FROM blocks),
-        |adj AS (
-        |  SELECT c.id, c.block_idx, c.n_tok, c.tset, p.tset AS prev_tset
-        |  FROM sets c LEFT JOIN sets p
-        |    ON p.id = c.id AND p.block_idx = c.block_idx - 1),
-        |fl AS (
-        |  SELECT *, CASE WHEN prev_tset IS NULL THEN 0
-        |    WHEN (1000000 * len(list_intersect(tset, prev_tset))) //
-        |         len(list_distinct(list_concat(tset, prev_tset))) < 150000
-        |    THEN 1 ELSE 0 END AS boundary FROM adj),
-        |seg AS (
-        |  SELECT *, sum(boundary) OVER
-        |    (PARTITION BY id ORDER BY block_idx) AS seg_id FROM fl)
-        |SELECT id, CAST(seg_id AS BIGINT) AS seg_id,
-        |       CAST(min(block_idx) AS BIGINT) AS first_block,
-        |       count(*) AS n_blocks, CAST(sum(n_tok) AS BIGINT) AS n_tokens
-        |FROM seg GROUP BY id, seg_id ORDER BY id, seg_id""".stripMargin,
-    // Margin mining replayed: the identical micro-integer pipeline —
-    // floor(cos·1e6+0.5) quantization (list_inner_product cosine, the
-    // knn-proven replay), the ANN-candidate floor (>= 300000 — the
-    // LSH bucket join at recall-1 parameters makes the candidate set
-    // equal this exact threshold relation), per-side top-4 neighbor
-    // means (integral), ×2e6 margin ratio (// equals Spark's div on
-    // the non-negative grid), mutual-best, threshold.
-    "bitext_mining" ->
-      """WITH ae AS (
-        |  SELECT d.doc_id AS x_id, CAST(e.embedding AS DOUBLE[]) AS v
-        |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-        |  WHERE d.lang = 'en'),
-        |be AS (
-        |  SELECT d.doc_id AS y_id, CAST(e.embedding AS DOUBLE[]) AS v
-        |  FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
-        |  WHERE d.lang = 'de'),
-        |pairs AS (
-        |  SELECT x_id, y_id,
-        |         CAST(floor(1000000.0 * (list_inner_product(a.v, b.v) /
-        |           (sqrt(list_inner_product(a.v, a.v)) *
-        |            sqrt(list_inner_product(b.v, b.v)))) + 0.5) AS BIGINT)
-        |           AS cos_micro
-        |  FROM ae a CROSS JOIN be b),
-        |pos AS (SELECT * FROM pairs WHERE cos_micro >= 300000),
-        |rx AS (
-        |  SELECT *, row_number() OVER
-        |    (PARTITION BY x_id ORDER BY cos_micro DESC, y_id) AS rn FROM pos),
-        |mx AS (SELECT x_id, CAST(sum(cos_micro) // count(*) AS BIGINT) AS mnn_x
-        |       FROM rx WHERE rn <= 4 GROUP BY x_id),
-        |ry AS (
-        |  SELECT *, row_number() OVER
-        |    (PARTITION BY y_id ORDER BY cos_micro DESC, x_id) AS rn FROM pos),
-        |my AS (SELECT y_id, CAST(sum(cos_micro) // count(*) AS BIGINT) AS mnn_y
-        |       FROM ry WHERE rn <= 4 GROUP BY y_id),
-        |scored AS (
-        |  SELECT p.x_id, p.y_id, p.cos_micro,
-        |         CAST((p.cos_micro * 2000000) // (mx.mnn_x + my.mnn_y)
-        |              AS BIGINT) AS margin_micro
-        |  FROM pos p JOIN mx USING (x_id) JOIN my USING (y_id)
-        |  WHERE mx.mnn_x + my.mnn_y > 0),
-        |bx AS (
-        |  SELECT x_id, y_id, cos_micro, margin_micro FROM (
-        |    SELECT *, row_number() OVER
-        |      (PARTITION BY x_id ORDER BY margin_micro DESC, y_id) AS rn
-        |    FROM scored) WHERE rn = 1),
-        |by_ AS (
-        |  SELECT x_id, y_id FROM (
-        |    SELECT *, row_number() OVER
-        |      (PARTITION BY y_id ORDER BY margin_micro DESC, x_id) AS rn
-        |    FROM scored) WHERE rn = 1)
-        |SELECT bx.x_id, bx.y_id, bx.cos_micro, bx.margin_micro,
-        |       (by_.x_id IS NOT NULL) AS mutual,
-        |       (by_.x_id IS NOT NULL AND bx.margin_micro > 1050000) AS is_mined
-        |FROM bx LEFT JOIN by_ ON by_.x_id = bx.x_id AND by_.y_id = bx.y_id
-        |ORDER BY bx.x_id""".stripMargin,
-    // pass@k replayed: the same falling-factorial BIGINT products
-    // (generated for each k, mirroring the passAtK expression loop),
-    // the single double division per k, NULL when k > n.
-    "eval_pass_at_k" -> {
-      def ff(base: String, k: Int) =
-        (0 until k).map(i => s"($base - $i)").mkString(" * ")
-      def pk(k: Int) =
-        s"CASE WHEN n >= $k THEN round(1.0 - " +
-          s"CAST(${ff("(n - c)", k)} AS DOUBLE) / " +
-          s"CAST(${ff("n", k)} AS DOUBLE), 6) END AS pass_at_$k"
-      s"""WITH t AS (
-        |  SELECT doc_id // 16 AS task_id, count(*) AS n,
-        |         CAST(sum(CASE WHEN n_chars % 3 = 0 THEN 1 ELSE 0 END)
-        |              AS BIGINT) AS c
-        |  FROM documents GROUP BY 1 HAVING count(*) >= 4)
-        |SELECT task_id, n, c, ${pk(1)}, ${pk(4)}, ${pk(10)}
-        |FROM t ORDER BY task_id""".stripMargin
-    },
-    // Canonical keys re-derived arithmetically: with canonical ->
-    // resolved /item<g>; without (id % 5 = 0) -> the normalized fetch
-    // URL (already in normal form by construction).
-    "crawl_canonical_dedup" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id FROM documents
-        |  WHERE text IS NOT NULL),
-        |k AS (
-        |  SELECT id,
-        |         'https://www.page' || (id % 120) % 10 || '.com/v' ||
-        |           (id // 120) % 4 || '/item' || id % 120 AS url,
-        |         CASE WHEN id % 5 = 0 THEN
-        |           'https://www.page' || (id % 120) % 10 || '.com/v' ||
-        |             (id // 120) % 4 || '/item' || id % 120
-        |         ELSE
-        |           'https://www.page' || (id % 120) % 10 || '.com/item' ||
-        |             id % 120 END AS key
-        |  FROM src)
-        |SELECT key, CAST(count(*) AS BIGINT) AS n_fetches,
-        |       CAST(count(DISTINCT url) AS BIGINT) AS n_urls,
-        |       min(id) AS keep_id
-        |FROM k GROUP BY key ORDER BY key""".stripMargin,
-    // The schedule re-derived with a window (fine at oracle scale —
-    // the engine side uses the bounded aggregate): per-host
-    // row_number over (priority DESC, url_id), kept ≤ 5, slot·delay.
-    "crawl_frontier" ->
-      """WITH src AS (
-        |  SELECT CAST(doc_id AS BIGINT) AS id
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (
-        |  SELECT 'site' || (id % 7) || '.com' AS host, id AS url_id,
-        |         (id // 7) % 10 AS priority,
-        |         1000 * (1 + (id % 7) % 3) AS delay_ms
-        |  FROM src),
-        |r AS (
-        |  SELECT host, url_id, priority, delay_ms,
-        |         row_number() OVER (
-        |           PARTITION BY host
-        |           ORDER BY priority DESC, url_id) AS rn
-        |  FROM c)
-        |SELECT host, CAST(rn - 1 AS BIGINT) AS slot, url_id,
-        |       'https://' || host || '/p' || url_id AS url,
-        |       CAST(priority AS BIGINT) AS priority,
-        |       CAST((rn - 1) * delay_ms AS BIGINT) AS fetch_at_ms
-        |FROM r WHERE rn <= 5 ORDER BY host, slot""".stripMargin,
-    "multimodal_image_decode" -> gray6x8HistogramOracle,
-    // aHash re-derived per image from the same 48 fixture bytes:
-    // integer brighter-than-mean bits (v·48 > Σv) packed into a BIGINT.
-    "multimodal_image_dedup" ->
-      """WITH docs AS (
-        |  SELECT doc_id AS id, substr(text, 1, 48) AS px
-        |  FROM documents WHERE length(text) >= 48),
-        |p AS (
-        |  SELECT id, CAST(i - 1 AS BIGINT) AS bit,
-        |         CAST(ascii(substr(px, CAST(i AS INT), 1)) AS BIGINT) AS v
-        |  FROM docs, unnest(generate_series(1, 48)) t(i)),
-        |t AS (SELECT id, sum(v) AS total FROM p GROUP BY id),
-        |h AS (
-        |  SELECT p.id,
-        |         CAST(sum(CASE WHEN p.v * 48 > t.total
-        |                       THEN CAST(1 AS BIGINT) << CAST(p.bit AS INT)
-        |                       ELSE 0 END) AS BIGINT) AS ahash
-        |  FROM p JOIN t USING (id) GROUP BY p.id)
-        |SELECT ahash, CAST(count(*) AS BIGINT) AS n_imgs, min(id) AS keep_id
-        |FROM h GROUP BY ahash HAVING count(*) > 1
-        |ORDER BY ahash""".stripMargin,
-    // The same 48-bit aHashes, all-pairs on exact Hamming distance.
-    "multimodal_image_near_dedup" ->
-      """WITH docs AS (
-        |  SELECT doc_id AS id, substr(text, 1, 48) AS px
-        |  FROM documents WHERE length(text) >= 48),
-        |p AS (
-        |  SELECT id, CAST(i - 1 AS BIGINT) AS bit,
-        |         CAST(ascii(substr(px, CAST(i AS INT), 1)) AS BIGINT) AS v
-        |  FROM docs, unnest(generate_series(1, 48)) t(i)),
-        |t AS (SELECT id, sum(v) AS total FROM p GROUP BY id),
-        |h AS (
-        |  SELECT p.id,
-        |         CAST(sum(CASE WHEN p.v * 48 > t.total
-        |                       THEN CAST(1 AS BIGINT) << CAST(p.bit AS INT)
-        |                       ELSE 0 END) AS UBIGINT) AS ahash
-        |  FROM p JOIN t USING (id) GROUP BY p.id)
-        |SELECT a.id AS a_id, b.id AS b_id,
-        |       CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-        |FROM h a JOIN h b ON a.id < b.id
-        |WHERE bit_count(xor(a.ahash, b.ahash)) <= 3
-        |ORDER BY a_id, b_id""".stripMargin,
-    // Audio fingerprint re-derived per clip from the same 96 fixture
-    // bytes: signed-LE samples, integer prefix-mean sign bits.
-    "multimodal_audio_dedup" ->
-      """WITH docs AS (
-        |  SELECT doc_id AS id, substr(text, 1, 96) AS px
-        |  FROM documents WHERE length(text) >= 96),
-        |samples AS (
-        |  SELECT id, CAST(i - 1 AS BIGINT) AS bit,
-        |         CAST(ascii(substr(px, CAST(2*i - 1 AS INT), 1)) +
-        |              256 * ascii(substr(px, CAST(2*i AS INT), 1)) AS BIGINT) AS s
-        |  FROM docs, unnest(generate_series(1, 48)) t(i)),
-        |t AS (SELECT id, sum(s) AS total FROM samples GROUP BY id),
-        |h AS (
-        |  SELECT samples.id,
-        |         CAST(sum(CASE WHEN s * 48 > t.total
-        |                       THEN CAST(1 AS BIGINT) << CAST(bit AS INT)
-        |                       ELSE 0 END) AS BIGINT) AS afp
-        |  FROM samples JOIN t USING (id) GROUP BY samples.id)
-        |SELECT afp, CAST(count(*) AS BIGINT) AS n_clips, min(id) AS keep_id
-        |FROM h GROUP BY afp HAVING count(*) > 1
-        |ORDER BY afp""".stripMargin,
-    "multimodal_audio_decode" ->
-      """WITH docs AS (
-        |  SELECT doc_id AS id, substr(text, 1, 96) AS px
-        |  FROM documents WHERE length(text) >= 96),
-        |samples AS (
-        |  SELECT id, CAST((i - 1) // 12 AS INT) AS "window",
-        |         CAST(ascii(substr(px, CAST(2*i - 1 AS INT), 1)) +
-        |              256 * ascii(substr(px, CAST(2*i AS INT), 1)) AS BIGINT) AS s
-        |  FROM docs, unnest(generate_series(1, 48)) t(i))
-        |SELECT id, CAST(8000 AS INT) AS sample_rate, CAST(48 AS BIGINT) AS n_samples,
-        |       "window", CAST(sum(s * s) AS BIGINT) AS energy,
-        |       CAST(0 AS BIGINT) AS zero_crossings
-        |FROM samples GROUP BY id, "window"
-        |ORDER BY id, "window"""".stripMargin,
-    // Pinned decoder-independent ground truth (entropy coding is not
-    // SQL-expressible): block-uniform fixtures decode exactly, and the
-    // spec proves our decode of this family bit-identical to the JDK's
-    // own JPEG codec. One uniform 8x8 block = one full 64-pixel bin.
-    "multimodal_jpeg_decode" -> jpegFixtureOracle,
-    // Identical pinned truth: the progressive encodes carry the same
-    // quantized coefficients as the baseline ones (same rasters, same
-    // quality/tables — only the entropy-coding order differs), and
-    // DC-only blocks reconstruct exactly.
-    "multimodal_progressive_decode" -> jpegFixtureOracle,
-    // Per-frame aHash bits + the ordered FNV-prime polynomial fold,
-    // re-derived per video in HUGEINT mod-2^64 arithmetic.
-    "multimodal_video_dedup" -> {
-      s"""WITH docs AS (
-         |  SELECT doc_id AS id, substr(text, 1, 96) AS px
-         |  FROM documents WHERE length(text) >= 96),
-         |fr AS (
-         |  SELECT id, f,
-         |         list_transform(generate_series(1, 24),
-         |           i -> CAST(ascii(substr(px, CAST(f * 24 + i AS INT), 1)) AS BIGINT)) AS b
-         |  FROM docs, unnest([0, 1, 2, 3]) t(f)),
-         |ah AS (
-         |  SELECT id, f,
-         |         CAST(list_sum(list_transform(generate_series(1, 24),
-         |           i -> CASE WHEN b[i] * 24 > list_sum(b)
-         |                     THEN CAST(1 AS BIGINT) << CAST(i - 1 AS INT)
-         |                     ELSE 0 END)) AS HUGEINT) AS a
-         |  FROM fr),
-         |v AS (
-         |  SELECT id,
-         |         list_reduce(list_prepend(CAST(0 AS HUGEINT), list(a ORDER BY f)),
-         |           (h, a) -> (h * 1099511628211 + a) % 18446744073709551616) AS hu
-         |  FROM ah GROUP BY id)
-         |SELECT ${toSignedSql("hu")} AS vfp,
-         |       CAST(count(*) AS BIGINT) AS n_videos, min(id) AS keep_id
-         |FROM v GROUP BY 1 HAVING count(*) > 1
-         |ORDER BY vfp""".stripMargin
-    },
-    "multimodal_video_frames" ->
-      """WITH docs AS (
-        |  SELECT doc_id AS id, substr(text, 1, 96) AS px
-        |  FROM documents WHERE length(text) >= 96),
-        |frames AS (
-        |  SELECT id, f,
-        |         list_transform(generate_series(1, 24),
-        |           i -> ascii(substr(px, CAST(f * 24 + i AS INT), 1))) AS bytes
-        |  FROM docs, unnest([0, 2]) t(f))
-        |SELECT id, CAST(f AS INT) AS frame_idx,
-        |       CAST(4 AS INT) AS width, CAST(6 AS INT) AS height,
-        |       CAST(list_sum(bytes) AS BIGINT) AS luma_sum,
-        |       CAST(list_min(bytes) AS INT) AS luma_min,
-        |       CAST(list_max(bytes) AS INT) AS luma_max
-        |FROM frames ORDER BY id, frame_idx""".stripMargin,
-    "events_windowed" ->
-      """SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start, event_type,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    // Streamed parity replayed: the windowed agg restricted to the
-    // watermark-CLOSED windows — window_end <= max(ts) - the 30 min
-    // delay (append mode's emission rule; the trailing no-data batch
-    // flushes exactly these).
-    // Dedup of exact duplicates recovers the original table - the
-    // oracle is the clean table's per-type counts.
-    "events_dedup_streamed" ->
-      """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    "events_streamed_parity" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
-        |wm AS (SELECT max(ts) - INTERVAL 30 MINUTE AS w FROM ev)
-        |SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
-        |       event_type, count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM ev
-        |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR <= (SELECT w FROM wm)
-        |GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    "events_asof" ->
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, event_type, value FROM events),
-        |clicks AS (SELECT user_id, ts, event_id FROM ev WHERE event_type = 'click'),
-        |views AS (
-        |  SELECT user_id, ts, value FROM (
-        |    SELECT user_id, ts, value,
-        |           row_number() OVER (PARTITION BY user_id, ts ORDER BY event_id DESC) AS rn
-        |    FROM ev WHERE event_type = 'view')
-        |  WHERE rn = 1)
-        |SELECT c.user_id, c.ts, c.event_id, v.ts AS matched_ts, v.value AS matched_value
-        |FROM clicks c ASOF JOIN views v ON c.user_id = v.user_id AND c.ts >= v.ts
-        |ORDER BY c.user_id, c.ts, c.event_id""".stripMargin,
-    // Exact KS replay: cumulative counts over the pooled cents grid,
-    // max |Ca·nb − Cb·na| floored once (floor of max = max of floors).
-    "events_ks_drift" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events WHERE event_type IN ('click', 'view') AND value IS NOT NULL),
-        |h AS (
-        |  SELECT cents,
-        |         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS cb
-        |  FROM ev GROUP BY 1),
-        |c AS (
-        |  SELECT cents, sum(ca) OVER (ORDER BY cents) AS cca,
-        |         sum(cb) OVER (ORDER BY cents) AS ccb
-        |  FROM h),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |             CAST(sum(cb) AS BIGINT) AS n_b FROM h)
-        |SELECT t.n_a, t.n_b,
-        |       CAST((1000000 * max(abs(CAST(cca AS HUGEINT) * t.n_b -
-        |                                CAST(ccb AS HUGEINT) * t.n_a)))
-        |            // (CAST(t.n_a AS HUGEINT) * t.n_b) AS BIGINT) AS ks_micro
-        |FROM c, t GROUP BY t.n_a, t.n_b""".stripMargin,
-    // Attribution replayed: first purchase per user, first-touch and
-    // strictly-before last-touch via the same (ts, event_id) total
-    // order, direct bucket by anti membership.
-    "events_attribution" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type
-        |  FROM events),
-        |fp AS (
-        |  SELECT user_id, ts AS pts, event_id AS pid FROM ev
-        |  WHERE event_type = 'purchase'
-        |  QUALIFY row_number() OVER (PARTITION BY user_id
-        |    ORDER BY ts, event_id) = 1),
-        |ft AS (
-        |  SELECT ev.user_id, ev.event_type FROM ev JOIN fp USING (user_id)
-        |  QUALIFY row_number() OVER (PARTITION BY ev.user_id
-        |    ORDER BY ev.ts, ev.event_id) = 1),
-        |lt AS (
-        |  SELECT ev.user_id, ev.event_type FROM ev JOIN fp USING (user_id)
-        |  WHERE (ev.ts < fp.pts OR (ev.ts = fp.pts AND ev.event_id < fp.pid))
-        |    AND ev.event_type <> 'purchase'
-        |  QUALIFY row_number() OVER (PARTITION BY ev.user_id
-        |    ORDER BY ev.ts DESC, ev.event_id DESC) = 1),
-        |ln AS (
-        |  SELECT fp.user_id, '(none)' AS event_type FROM fp
-        |  WHERE fp.user_id NOT IN (SELECT user_id FROM lt)),
-        |allr AS (
-        |  SELECT 'first_touch' AS touch, event_type, user_id FROM ft
-        |  UNION ALL SELECT 'last_touch', event_type, user_id FROM lt
-        |  UNION ALL SELECT 'last_touch', event_type, user_id FROM ln)
-        |SELECT touch, event_type, CAST(count(*) AS BIGINT) AS n_users
-        |FROM allr GROUP BY 1, 2 ORDER BY touch, event_type""".stripMargin,
-    // W1 replay: one global cumulative window over the bounded cents
-    // grid plus lead() for the gap; identical exact-integer area sum.
-    "events_w1_drift" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events WHERE event_type IN ('click', 'view') AND value IS NOT NULL),
-        |h AS (
-        |  SELECT cents,
-        |         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS cb
-        |  FROM ev GROUP BY 1),
-        |c AS (
-        |  SELECT cents, sum(ca) OVER (ORDER BY cents) AS cca,
-        |         sum(cb) OVER (ORDER BY cents) AS ccb,
-        |         lead(cents) OVER (ORDER BY cents) AS nxt
-        |  FROM h),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS n_a,
-        |             CAST(sum(cb) AS BIGINT) AS n_b FROM h)
-        |SELECT t.n_a, t.n_b,
-        |       CAST((CAST(1000000 AS HUGEINT) *
-        |             sum(abs(CAST(cca AS HUGEINT) * t.n_b -
-        |                     CAST(ccb AS HUGEINT) * t.n_a) *
-        |                 (coalesce(nxt, cents) - cents)))
-        |            // (CAST(t.n_a AS HUGEINT) * t.n_b) AS BIGINT) AS w1_micro
-        |FROM c, t GROUP BY t.n_a, t.n_b""".stripMargin,
-    // Quantile-shift replay: one cumulative window over the cents
-    // grid, rank ⌈q·n/10⌉ per side, min-value-at-rank per decile.
-    "events_quantile_shift" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events WHERE event_type IN ('click', 'view') AND value IS NOT NULL),
-        |h AS (
-        |  SELECT cents,
-        |         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS cb
-        |  FROM ev GROUP BY 1),
-        |c AS (
-        |  SELECT cents, sum(ca) OVER (ORDER BY cents) AS cca,
-        |         sum(cb) OVER (ORDER BY cents) AS ccb
-        |  FROM h),
-        |t AS (SELECT CAST(sum(ca) AS BIGINT) AS na,
-        |             CAST(sum(cb) AS BIGINT) AS nb FROM h),
-        |qs AS (SELECT CAST(unnest(generate_series(1, 10)) AS BIGINT) AS q),
-        |va AS (SELECT q, min(cents) AS v_a
-        |       FROM c, t, qs WHERE cca >= (q * na + 9) // 10 GROUP BY q),
-        |vb AS (SELECT q, min(cents) AS v_b
-        |       FROM c, t, qs WHERE ccb >= (q * nb + 9) // 10 GROUP BY q)
-        |SELECT va.q, va.v_a, vb.v_b, vb.v_b - va.v_a AS shift
-        |FROM va JOIN vb USING (q) ORDER BY q""".stripMargin,
-    // PSI replay: same reference-range equal-width bins (clamped), the
-    // same exact λ·10⁶ integer and one floored division per bin.
-    "events_psi" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events WHERE event_type IN ('view', 'purchase') AND value IS NOT NULL),
-        |bounds AS (SELECT min(cents) AS lo, max(cents) AS hi
-        |           FROM ev WHERE event_type = 'view'),
-        |binned AS (
-        |  SELECT event_type,
-        |         least(9, greatest(0, CAST(((cents - lo) * 10)
-        |           // greatest(hi - lo + 1, 1) AS INT))) AS bin
-        |  FROM ev, bounds),
-        |cnts AS (
-        |  SELECT bin,
-        |         sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS cr,
-        |         sum(CASE WHEN event_type = 'view' THEN 0 ELSE 1 END) AS cc
-        |  FROM binned GROUP BY 1),
-        |grid AS (
-        |  SELECT t.bin, coalesce(cr, 0) AS cr, coalesce(cc, 0) AS cc
-        |  FROM (SELECT CAST(range AS BIGINT) AS bin FROM range(10)) t
-        |  LEFT JOIN cnts ON cnts.bin = t.bin),
-        |tot AS (SELECT sum(cr) + 10 AS r, sum(cc) + 10 AS c,
-        |               CAST(sum(cr) AS BIGINT) AS n_ref,
-        |               CAST(sum(cc) AS BIGINT) AS n_cmp FROM grid),
-        |terms AS (
-        |  SELECT n_ref, n_cmp,
-        |         CAST(cr + 1 AS HUGEINT) * c AS a,
-        |         CAST(cc + 1 AS HUGEINT) * r AS b,
-        |         CAST(r AS HUGEINT) * c AS rc
-        |  FROM grid, tot)
-        |SELECT n_ref, n_cmp,
-        |       CAST(sum(((a - b) * CAST(CAST(round(log10(a), 6) AS DECIMAL(28,6))
-        |           * 1000000 - CAST(round(log10(b), 6) AS DECIMAL(28,6))
-        |           * 1000000 AS HUGEINT) * 2302585)
-        |         // (rc * CAST(1000000000000 AS HUGEINT))) AS BIGINT) AS psi_micro
-        |FROM terms GROUP BY 1, 2""".stripMargin,
-    // Mann–Whitney replay: doubled midranks on the cents histogram,
-    // exact u2, tie-corrected z in doubles from the same integers.
-    "events_mann_whitney" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL),
-        |h AS (
-        |  SELECT cents,
-        |         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-        |         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-        |  FROM ev GROUP BY 1),
-        |c AS (
-        |  SELECT cents, ca, cb, ca + cb AS t,
-        |         sum(ca + cb) OVER (ORDER BY cents) AS tcum
-        |  FROM h),
-        |a AS (
-        |  SELECT CAST(sum(ca) AS BIGINT) AS n_a, CAST(sum(cb) AS BIGINT) AS n_b,
-        |         sum(CAST(ca AS HUGEINT) * (2 * (tcum - t) + t + 1)) AS r2a,
-        |         sum(CAST(t AS HUGEINT) * t * t - t) AS ties
-        |  FROM c)
-        |SELECT n_a, n_b,
-        |       CAST(2 * CAST(n_a AS HUGEINT) * n_b
-        |            + CAST(n_a AS HUGEINT) * (n_a + 1) - r2a AS BIGINT) AS u2,
-        |       round((CAST(u2 AS DOUBLE) / 2 - CAST(n_a AS DOUBLE) * n_b / 2)
-        |         / sqrt(CAST(n_a AS DOUBLE) * n_b / 12 *
-        |             ((n_a + n_b + 1) - CAST(ties AS DOUBLE) /
-        |               (CAST(n_a + n_b AS DOUBLE) * (n_a + n_b - 1)))), 6) AS z
-        |FROM a""".stripMargin,
-    // Spearman replay: midranks from per-value histograms (the
-    // mann_whitney doubled-rank window), HUGEINT moments, ρ as the
-    // identical double sequence (cast, multiply, sqrt, divide, round).
-    "corpus_spearman" ->
-      """WITH rows_ AS (
-        |  SELECT n_chars AS x,
-        |         CAST(length(string_split(text, ' ')) AS BIGINT) AS y
-        |  FROM documents WHERE n_chars IS NOT NULL AND text IS NOT NULL),
-        |hx AS (SELECT x, count(*) AS c FROM rows_ GROUP BY x),
-        |rx AS (
-        |  SELECT x, 2 * (sum(c) OVER (ORDER BY x) - c) + c + 1 AS xr2
-        |  FROM hx),
-        |hy AS (SELECT y, count(*) AS c FROM rows_ GROUP BY y),
-        |ry AS (
-        |  SELECT y, 2 * (sum(c) OVER (ORDER BY y) - c) + c + 1 AS yr2
-        |  FROM hy),
-        |j AS (
-        |  SELECT rx.xr2 AS a, ry.yr2 AS b
-        |  FROM rows_ JOIN rx USING (x) JOIN ry USING (y)),
-        |m AS (
-        |  SELECT CAST(count(*) AS HUGEINT) AS n,
-        |         sum(CAST(a AS HUGEINT)) AS sa, sum(CAST(b AS HUGEINT)) AS sb,
-        |         sum(CAST(a AS HUGEINT) * a) AS saa,
-        |         sum(CAST(a AS HUGEINT) * b) AS sab,
-        |         sum(CAST(b AS HUGEINT) * b) AS sbb
-        |  FROM j),
-        |s AS (
-        |  SELECT n, n * saa - sa * sa AS sxx, n * sab - sa * sb AS sxy,
-        |         n * sbb - sb * sb AS syy
-        |  FROM m)
-        |SELECT CAST(n AS BIGINT) AS n,
-        |       CASE WHEN sxx > 0 AND syy > 0
-        |            THEN round(CAST(sxy AS DOUBLE) /
-        |                   sqrt(CAST(sxx AS DOUBLE) * CAST(syy AS DOUBLE)), 6)
-        |            ELSE 0.0e0 END AS rho
-        |FROM s""".stripMargin,
-    // CUPED replay: exact integer moment sums in HUGEINT, theta and
-    // variances as the same double formula, rounded once.
-    // bootstrap weights re-derived from the SAME hash16/PoissonCum
-    // machinery as eval_bootstrap (Bootstrap.scala's one table)
-    "events_bootstrap_ci" ->
-      """WITH u AS (
-        |  SELECT user_id AS id,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS score
-        |  FROM events GROUP BY user_id),
-        |m0 AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n_units,
-        |         round(CAST(sum(score) AS DOUBLE) / count(*), 6) AS mean_score
-        |  FROM u),
-        |grid AS (
-        |  SELECT id, score, CAST(r AS BIGINT) AS rep
-        |  FROM u, unnest(generate_series(0, 198)) t(r)),
-        |h AS (
-        |  SELECT rep, score,
-        |         list_sum(list_transform(generate_series(1, 4), i ->
-        |           (strpos('0123456789abcdef',
-        |              substr(md5(CAST(id AS VARCHAR) || ':' || CAST(rep AS VARCHAR)),
-        |                     CAST(i AS INT), 1)) - 1)
-        |           * CAST(16 ** (4 - i) AS BIGINT))) AS hv
-        |  FROM grid),
-        |mm AS (
-        |  SELECT rep, score,
-        |         CASE WHEN hv < 24113 THEN 0 WHEN hv < 48226 THEN 1
-        |              WHEN hv < 60273 THEN 2 WHEN hv < 64292 THEN 3
-        |              WHEN hv < 65296 THEN 4 WHEN hv < 65497 THEN 5
-        |              WHEN hv < 65531 THEN 6 WHEN hv < 65535 THEN 7
-        |              ELSE 8 END AS mult
-        |  FROM h),
-        |tr AS (
-        |  SELECT rep,
-        |         round(CAST(sum(mult * score) AS DOUBLE) / sum(mult), 6) AS mean
-        |  FROM mm GROUP BY rep HAVING sum(mult) > 0),
-        |rk AS (
-        |  SELECT rep, mean, row_number() OVER (ORDER BY mean, rep) AS rn,
-        |         count(*) OVER () AS n_reps
-        |  FROM tr),
-        |ci AS (
-        |  SELECT CAST(max(n_reps) AS BIGINT) AS n_reps,
-        |         min(mean) AS lo, max(mean) AS hi
-        |  FROM rk WHERE rn = (n_reps * 25 + 999) // 1000
-        |             OR rn = (n_reps * 975 + 999) // 1000
-        |  HAVING count(*) > 0)
-        |SELECT m0.n_units, ci.n_reps, m0.mean_score, ci.lo, ci.hi
-        |FROM m0, ci""".stripMargin,
-    "events_permutation_test" ->
-      """WITH u AS (
-        |  SELECT user_id,
-        |         CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS grp,
-        |         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-        |  FROM events GROUP BY user_id),
-        |m AS (
-        |  SELECT CAST(sum(CASE WHEN grp = 'a' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |         CAST(sum(CASE WHEN grp = 'b' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |         CAST(sum(CASE WHEN grp = 'a' THEN y ELSE 0 END) AS HUGEINT) AS sa,
-        |         CAST(sum(CASE WHEN grp = 'b' THEN y ELSE 0 END) AS HUGEINT) AS sb,
-        |         CAST(sum(y) AS HUGEINT) AS st
-        |  FROM u),
-        |obs AS (SELECT coalesce(n_a, 0) AS n_a, coalesce(n_b, 0) AS n_b,
-        |               coalesce(st, 0) AS st,
-        |               coalesce(abs(sa * n_b - sb * n_a), 0) AS dobs FROM m),
-        |tt AS (SELECT unnest(range(1, 200)) AS t),
-        |r AS (
-        |  SELECT tt.t AS t, u.y,
-        |         row_number() OVER (PARTITION BY tt.t
-        |           ORDER BY md5('perm:42:' || CAST(tt.t AS VARCHAR) || ':' ||
-        |                        CAST(u.user_id AS VARCHAR)),
-        |                    CAST(u.user_id AS VARCHAR)) AS rn
-        |  FROM u CROSS JOIN tt),
-        |tr AS (
-        |  -- the rank condition lives INSIDE the sum (the operator's
-        |  -- degenerate-total shape): an empty pseudo-A still yields its
-        |  -- trial row with sat = 0
-        |  SELECT r.t, CAST(sum(CASE WHEN r.rn <= obs.n_a THEN r.y ELSE 0 END)
-        |                AS HUGEINT) AS sat
-        |  FROM r, obs GROUP BY r.t),
-        |ge AS (
-        |  SELECT coalesce(CAST(sum(CASE WHEN
-        |           abs(tr.sat * obs.n_b - (obs.st - tr.sat) * obs.n_a)
-        |             >= obs.dobs THEN 1 ELSE 0 END) AS BIGINT), 199) AS n_ge
-        |  FROM tr, obs)
-        |SELECT obs.n_a, obs.n_b, CAST(obs.dobs AS BIGINT) AS d_obs,
-        |       ge.n_ge,
-        |       CAST((1000000 * (1 + ge.n_ge)) // 200 AS BIGINT) AS p_micro
-        |FROM obs, ge""".stripMargin,
-    "events_cuped" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events),
-        |mid AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-        |units AS (
-        |  SELECT user_id,
-        |         sum(CASE WHEN us < mid THEN cents ELSE 0 END) AS x,
-        |         sum(CASE WHEN us >= mid THEN cents ELSE 0 END) AS y
-        |  FROM ev, mid GROUP BY 1),
-        |m AS (
-        |  SELECT CAST(count(*) AS BIGINT) AS n,
-        |         sum(CAST(x AS HUGEINT)) AS sx, sum(CAST(y AS HUGEINT)) AS sy,
-        |         sum(CAST(x AS HUGEINT) * x) AS sxx,
-        |         sum(CAST(x AS HUGEINT) * y) AS sxy,
-        |         sum(CAST(y AS HUGEINT) * y) AS syy
-        |  FROM units),
-        |s AS (
-        |  SELECT n, CAST(n AS HUGEINT) * sxx - sx * sx AS sxx2,
-        |         CAST(n AS HUGEINT) * sxy - sx * sy AS sxy2,
-        |         CAST(n AS HUGEINT) * syy - sy * sy AS syy2
-        |  FROM m)
-        |SELECT n AS n_units,
-        |  CASE WHEN sxx2 > 0
-        |       THEN round(CAST(sxy2 AS DOUBLE) / CAST(sxx2 AS DOUBLE), 6)
-        |       ELSE 0.0 END AS theta,
-        |  round(CAST(syy2 AS DOUBLE) / (CAST(n AS DOUBLE) * n * n), 6) AS var_y,
-        |  round((CAST(syy2 AS DOUBLE) - 2 * theta * CAST(sxy2 AS DOUBLE)
-        |         + theta * theta * CAST(sxx2 AS DOUBLE))
-        |        / (CAST(n AS DOUBLE) * n * n), 6) AS var_adj,
-        |  CASE WHEN var_y > 0
-        |       THEN CAST(round((1 - var_adj / var_y) * 1000000) AS BIGINT)
-        |       ELSE CAST(0 AS BIGINT) END AS reduction_micro
-        |FROM s""".stripMargin,
-    // Complete-mode totals are order-free batch equality by
-    // construction: the mode re-emits the whole aggregate.
-    "events_totals_streamed" ->
-      """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
-    // Update-mode gate: the max over a key's monotone count emissions
-    // IS the final count — i.e. the plain batch group-by.
-    "events_update_streamed" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events)
-        |SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
-        |       event_type, count(*) AS n_events
-        |FROM ev GROUP BY 1, 2 ORDER BY window_start, event_type""".stripMargin,
-    // Warm-start handoff replayed: the final totals are simply the
-    // batch aggregate over ALL events, whatever split streamed.
-    "events_mapstate_streamed" ->
-      """WITH h AS (
-        |  SELECT user_id, event_type, CAST(count(*) AS BIGINT) AS n_type
-        |  FROM events GROUP BY 1, 2),
-        |c AS (
-        |  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS cents,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY CAST(round(value * 100) AS BIGINT) DESC) AS rn
-        |  FROM events),
-        |t AS (
-        |  SELECT user_id, CAST(sum(cents) AS BIGINT) AS top3_cents
-        |  FROM c WHERE rn <= 3 GROUP BY user_id)
-        |SELECT h.user_id, h.event_type, h.n_type, t.top3_cents
-        |FROM h JOIN t USING (user_id)
-        |ORDER BY user_id, event_type""".stripMargin,
-    "events_warmstart_streamed" ->
-      """SELECT user_id,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
-        |         AS total_cents
-        |FROM events
-        |GROUP BY user_id
-        |ORDER BY user_id""".stripMargin,
-    // Trigram paths replayed: two leads over the same user window.
-    "events_paths3" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type
-        |  FROM events),
-        |tri AS (
-        |  SELECT event_type AS t1,
-        |         lead(event_type, 1) OVER w AS t2,
-        |         lead(event_type, 2) OVER w AS t3
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT t1, t2, t3, CAST(count(*) AS BIGINT) AS n
-        |FROM tri WHERE t2 IS NOT NULL AND t3 IS NOT NULL
-        |GROUP BY 1, 2, 3 HAVING count(*) >= 5
-        |ORDER BY n DESC, t1, t2, t3""".stripMargin,
-    // DiD replayed: md5 user split × midpoint time split, floored
-    // micro cell means, integer difference.
-    "events_did" ->
-      """WITH ev AS (
-        |  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events),
-        |mid AS (SELECT (min(us) + max(us)) // 2 AS mid FROM ev),
-        |cells AS (
-        |  SELECT CAST(list_sum(list_transform(generate_series(1, 4),
-        |           i -> (strpos('0123456789abcdef',
-        |                   substr(md5(CAST(user_id AS VARCHAR)), CAST(i AS INT), 1)) - 1)
-        |                * CAST(16 ** (4 - i) AS BIGINT))) % 100 AS BIGINT) < 50
-        |           AS treated,
-        |         us >= mid AS post, cents
-        |  FROM ev, mid),
-        |m AS (
-        |  SELECT
-        |    sum(CASE WHEN treated AND NOT post THEN 1 ELSE 0 END) AS n_tpre,
-        |    sum(CASE WHEN treated AND post THEN 1 ELSE 0 END) AS n_tpost,
-        |    sum(CASE WHEN NOT treated AND NOT post THEN 1 ELSE 0 END) AS n_cpre,
-        |    sum(CASE WHEN NOT treated AND post THEN 1 ELSE 0 END) AS n_cpost,
-        |    sum(CASE WHEN treated AND NOT post THEN CAST(cents AS HUGEINT) ELSE 0 END) AS s_tpre,
-        |    sum(CASE WHEN treated AND post THEN CAST(cents AS HUGEINT) ELSE 0 END) AS s_tpost,
-        |    sum(CASE WHEN NOT treated AND NOT post THEN CAST(cents AS HUGEINT) ELSE 0 END) AS s_cpre,
-        |    sum(CASE WHEN NOT treated AND post THEN CAST(cents AS HUGEINT) ELSE 0 END) AS s_cpost
-        |  FROM cells),
-        |mm AS (
-        |  SELECT CAST(n_tpre AS BIGINT) AS n_tpre, CAST(n_tpost AS BIGINT) AS n_tpost,
-        |         CAST(n_cpre AS BIGINT) AS n_cpre, CAST(n_cpost AS BIGINT) AS n_cpost,
-        |    CAST(CASE WHEN n_tpre > 0 THEN (1000000 * s_tpre) // n_tpre ELSE 0 END AS BIGINT) AS m_tpre,
-        |    CAST(CASE WHEN n_tpost > 0 THEN (1000000 * s_tpost) // n_tpost ELSE 0 END AS BIGINT) AS m_tpost,
-        |    CAST(CASE WHEN n_cpre > 0 THEN (1000000 * s_cpre) // n_cpre ELSE 0 END AS BIGINT) AS m_cpre,
-        |    CAST(CASE WHEN n_cpost > 0 THEN (1000000 * s_cpost) // n_cpost ELSE 0 END AS BIGINT) AS m_cpost
-        |  FROM m)
-        |SELECT n_tpre, n_tpost, n_cpre, n_cpost,
-        |       m_tpre, m_tpost, m_cpre, m_cpost,
-        |       m_tpost - m_tpre - m_cpost + m_cpre AS did_micro
-        |FROM mm""".stripMargin,
-    // Power replayed: exact DECIMAL variance sums, the same fixed
-    // z-constant, one sqrt.
-    "events_ab_power" ->
-      """WITH ev AS (
-        |  SELECT event_type,
-        |         CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents
-        |  FROM events
-        |  WHERE event_type IN ('click', 'view') AND value IS NOT NULL),
-        |m AS (
-        |  SELECT
-        |    CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-        |    CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-        |    sum(CASE WHEN event_type = 'click' THEN CAST(cents AS HUGEINT) ELSE 0 END) AS sa,
-        |    sum(CASE WHEN event_type = 'view' THEN CAST(cents AS HUGEINT) ELSE 0 END) AS sb,
-        |    sum(CASE WHEN event_type = 'click' THEN CAST(cents AS HUGEINT) * cents ELSE 0 END) AS saa,
-        |    sum(CASE WHEN event_type = 'view' THEN CAST(cents AS HUGEINT) * cents ELSE 0 END) AS sbb
-        |  FROM ev),
-        |v AS (
-        |  SELECT n_a, n_b,
-        |         round((CAST(CAST(n_a AS HUGEINT) * saa - sa * sa AS DOUBLE) / n_a
-        |                + CAST(CAST(n_b AS HUGEINT) * sbb - sb * sb AS DOUBLE) / n_b)
-        |               / (n_a + n_b - 2), 6) AS pooled_var
-        |  FROM m)
-        |SELECT n_a, n_b, pooled_var,
-        |       round(2.801585 * sqrt(pooled_var * (1.0 / n_a + 1.0 / n_b)), 6) AS mde
-        |FROM v""".stripMargin,
-    // Robust means replayed: window cumulative on the cents histogram,
-    // rank-interval overlap for the trim, clamp for the winsorization.
-    "events_robust_mean" ->
-      """WITH h AS (
-        |  SELECT CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS v,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM events WHERE value IS NOT NULL GROUP BY 1),
-        |cu AS (SELECT v, c, sum(c) OVER (ORDER BY v) AS cum FROM h),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-        |               CAST((sum(c) * 5) // 100 AS BIGINT) AS lo_cut FROM h),
-        |plo AS (SELECT min(v) AS p_lo FROM cu, tot WHERE cum >= lo_cut + 1),
-        |phi AS (SELECT min(v) AS p_hi FROM cu, tot WHERE cum >= n - lo_cut),
-        |terms AS (
-        |  SELECT n, lo_cut, p_lo, p_hi,
-        |         CAST(v AS HUGEINT) * c AS sv,
-        |         CAST(v AS HUGEINT) * greatest(0, least(cum, n - lo_cut)
-        |           - greatest(cum - c, lo_cut)) AS tv,
-        |         CAST(least(greatest(v, p_lo), p_hi) AS HUGEINT) * c AS wv
-        |  FROM cu, tot, plo, phi)
-        |SELECT n, lo_cut, p_lo, p_hi,
-        |       CAST((1000000 * sum(sv)) // n AS BIGINT) AS mean_micro,
-        |       CAST(CASE WHEN n - 2 * lo_cut > 0
-        |            THEN (1000000 * sum(tv)) // (n - 2 * lo_cut)
-        |            ELSE 0 END AS BIGINT) AS trimmed_mean_micro,
-        |       CAST((1000000 * sum(wv)) // n AS BIGINT) AS winsorized_mean_micro
-        |FROM terms GROUP BY 1, 2, 3, 4""".stripMargin,
-    // Token entropy replayed: same rounded log2-of-integers terms,
-    // DECIMAL sum, one floored micro division.
-    "corpus_token_entropy" ->
-      """WITH toks AS (
-        |  SELECT unnest(string_split(text, ' ')) AS t
-        |  FROM documents WHERE text IS NOT NULL),
-        |c AS (SELECT t, CAST(count(*) AS BIGINT) AS c FROM toks GROUP BY 1),
-        |tot AS (SELECT CAST(sum(c) AS BIGINT) AS n,
-        |               CAST(count(*) AS BIGINT) AS n_distinct FROM c),
-        |terms AS (
-        |  SELECT n, n_distinct,
-        |         CAST(c AS DECIMAL(38,6)) *
-        |           (CAST(round(log2(n), 6) AS DECIMAL(28,6))
-        |            - CAST(round(log2(c), 6) AS DECIMAL(28,6))) AS term
-        |  FROM c, tot)
-        |SELECT n AS n_tokens, n_distinct,
-        |       CAST(CAST(sum(term) * 1000000 AS HUGEINT) // n AS BIGINT)
-        |         AS entropy_micro,
-        |       CAST(CAST(round(log2(n_distinct), 6) AS DECIMAL(28,6)) * 1000000
-        |            AS BIGINT) AS max_entropy_micro
-        |FROM terms GROUP BY 1, 2""".stripMargin,
-    // Split-conformal replay: md5 split buckets, floor-mean predictor,
-    // row_number order statistic at rank r, integral coverage.
-    "events_conformal_card" -> (conformalCtes +
-      """
-        |SELECT q.n_cal, q.r, q.qhat, CAST(count(*) AS BIGINT) AS n_test,
-        |       CAST((1000000 * sum(CASE WHEN abs(cents - yhat) <= qhat
-        |                                THEN 1 ELSE 0 END)) // count(*)
-        |            AS BIGINT) AS coverage_micro
-        |FROM t, q GROUP BY 1, 2, 3""".stripMargin),
-    "events_conformal_intervals" -> (conformalCtes +
-      """
-        |SELECT t.event_id, t.event_type, t.cents, t.yhat,
-        |       CAST(yhat - qhat AS BIGINT) AS lo,
-        |       CAST(yhat + qhat AS BIGINT) AS hi,
-        |       abs(cents - yhat) <= qhat AS covered
-        |FROM t, q ORDER BY t.event_id""".stripMargin),
-    "events_range_join" ->
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts FROM events)
-        |SELECT a.event_id AS a_id, b.event_id AS b_id, a.user_id, a.ts AS a_ts, b.ts AS b_ts
-        |FROM ev a JOIN ev b ON a.user_id = b.user_id AND b.ts > a.ts
-        |  AND b.ts <= a.ts + INTERVAL 300 SECOND
-        |ORDER BY a_id, b_id""".stripMargin,
-    "events_sessions" ->
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        |flagged AS (
-        |  SELECT event_id, user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                   OR ts - lag(ts) OVER w > INTERVAL 600 SECOND
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM flagged)
-        |SELECT user_id, session_idx, min(ts) AS session_start, max(ts) AS session_end,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM sessions GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_idx""".stripMargin,
-    // The streamed sessionization: the batch sessions CTE plus the
-    // stream's closure rule — Spark's event-time timeout fires when
-    // timeoutTimestamp < watermark, BOTH ON THE MILLISECOND CLOCK
-    // (epoch_ms truncates micros exactly like Timestamp.getTime and
-    // the watermark tracker), so a user's LAST session is absent when
-    // end + gap lands inside the final horizon.
-    "events_sessions_streamed" ->
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        |wm AS (SELECT epoch_ms(max(ts)) - 1800000 AS w FROM ev),
-        |flagged AS (
-        |  SELECT event_id, user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                   OR ts - lag(ts) OVER w > INTERVAL 600 SECOND
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM flagged),
-        |s AS (
-        |  SELECT user_id, session_idx, min(ts) AS session_start,
-        |         max(ts) AS session_end, count(*) AS n_events,
-        |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |  FROM sessions GROUP BY user_id, session_idx),
-        |last AS (SELECT user_id, max(session_idx) AS mi FROM s GROUP BY user_id)
-        |SELECT s.user_id, s.session_start, s.session_end, s.n_events, s.total_value
-        |FROM s JOIN last ON s.user_id = last.user_id, wm
-        |WHERE s.session_idx < last.mi
-        |   OR epoch_ms(s.session_end) + 600000 < wm.w
-        |ORDER BY s.user_id, s.session_start""".stripMargin,
-    // transformWithState variant: identical closure rule, shared oracle.
-    "events_sessions_tws" ->
-      // NOTE the <=: transformWithState timers fire when expiry <=
-      // watermark (non-strict, pinned by the boundary spec), unlike
-      // flatMapGroupsWithState's strict < — a real API difference.
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        |wm AS (SELECT epoch_ms(max(ts)) - 1800000 AS w FROM ev),
-        |flagged AS (
-        |  SELECT event_id, user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                   OR ts - lag(ts) OVER w > INTERVAL 600 SECOND
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM flagged),
-        |s AS (
-        |  SELECT user_id, session_idx, min(ts) AS session_start,
-        |         max(ts) AS session_end, count(*) AS n_events,
-        |         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |  FROM sessions GROUP BY user_id, session_idx),
-        |last AS (SELECT user_id, max(session_idx) AS mi FROM s GROUP BY user_id)
-        |SELECT s.user_id, s.session_start, s.session_end, s.n_events, s.total_value
-        |FROM s JOIN last ON s.user_id = last.user_id, wm
-        |WHERE s.session_idx < last.mi
-        |   OR epoch_ms(s.session_end) + 600000 <= wm.w
-        |ORDER BY s.user_id, s.session_start""".stripMargin,
-    "events_theil_sen" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        |hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hr,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM ev GROUP BY 1, 2),
-        |h AS (SELECT event_type,
-        |        CAST(epoch(hr) // 3600 AS BIGINT) AS h, c FROM hourly),
-        |pairs AS (
-        |  SELECT a.event_type, (b.c - a.c) * 1.0 / (b.h - a.h) AS slope
-        |  FROM h a JOIN h b ON a.event_type = b.event_type AND b.h > a.h)
-        |SELECT event_type, round(median(slope), 6) AS theil_sen_slope,
-        |       CAST(count(*) AS BIGINT) AS n_pairs
-        |FROM pairs GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "events_mann_kendall" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts, event_type FROM events),
-        |hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hr,
-        |         CAST(count(*) AS BIGINT) AS c
-        |  FROM ev GROUP BY 1, 2),
-        |h AS (SELECT event_type,
-        |        CAST(epoch(hr) // 3600 AS BIGINT) AS h, c FROM hourly),
-        |srel AS (
-        |  SELECT a.event_type,
-        |         CAST(sum(CASE WHEN b.c > a.c THEN 1
-        |                       WHEN b.c < a.c THEN -1 ELSE 0 END) AS BIGINT) AS s
-        |  FROM h a JOIN h b ON a.event_type = b.event_type AND b.h > a.h
-        |  GROUP BY 1),
-        |tg AS (SELECT event_type, c, CAST(count(*) AS BIGINT) AS t
-        |       FROM h GROUP BY 1, 2),
-        |ties AS (
-        |  SELECT event_type,
-        |         CAST(sum(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie18,
-        |         CAST(sum(t) AS BIGINT) AS n
-        |  FROM tg GROUP BY 1),
-        |j AS (
-        |  SELECT s.event_type, s.s, t.n AS n_hours,
-        |         n * (n - 1) * (2 * n + 5) - tie18 AS var18
-        |  FROM srel s JOIN ties t USING (event_type))
-        |SELECT event_type, s, n_hours, var18,
-        |       round(CASE WHEN var18 > 0 AND s > 0
-        |                    THEN (s - 1) / sqrt(var18 / 18.0)
-        |                  WHEN var18 > 0 AND s < 0
-        |                    THEN (s + 1) / sqrt(var18 / 18.0)
-        |                  ELSE 0.0 END, 6) AS z,
-        |       round(2.0 * s / (n_hours * (n_hours - 1)), 6) AS tau
-        |FROM j ORDER BY event_type""".stripMargin,
-    // The stream-static enrichment replayed as the plain batch join.
-    "events_enrich_streamed" ->
-      """SELECT len(event_type) % 3 AS tier,
-        |       CAST(count(*) AS BIGINT) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE)
-        |         AS total_value
-        |FROM events GROUP BY 1 ORDER BY 1""".stripMargin,
-    "events_user_stats" ->
-      """SELECT event_type, count(*) AS n_events,
-        |       count(DISTINCT user_id) AS n_users,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "events_stream_join" ->
-      """SELECT c.event_id AS click_id, c.user_id,
-        |       CAST(c.ts AS TIMESTAMP) AS click_ts,
-        |       v.event_id AS view_id, CAST(v.ts AS TIMESTAMP) AS view_ts,
-        |       v.value AS view_value
-        |FROM events c JOIN events v
-        |  ON c.user_id = v.user_id
-        | AND c.event_type = 'click' AND v.event_type = 'view'
-        | AND v.ts <= c.ts AND v.ts >= c.ts - INTERVAL 600 SECOND
-        |ORDER BY click_id, view_id""".stripMargin,
-    "events_return_hazard" ->
-      """WITH days AS (
-        |  SELECT DISTINCT user_id,
-        |         date_trunc('day', CAST(ts AS TIMESTAMP)) AS day
-        |  FROM events),
-        |g AS (
-        |  SELECT CAST(date_diff('day',
-        |           lag(day) OVER (PARTITION BY user_id ORDER BY day), day)
-        |         AS BIGINT) AS gap
-        |  FROM days),
-        |h AS (
-        |  SELECT gap, CAST(count(*) AS BIGINT) AS n_return
-        |  FROM g WHERE gap IS NOT NULL GROUP BY 1),
-        |r AS (
-        |  SELECT gap, n_return,
-        |         CAST(sum(n_return) OVER (ORDER BY gap DESC) AS BIGINT)
-        |           AS n_at_risk
-        |  FROM h)
-        |SELECT gap AS day_gap, n_return, n_at_risk,
-        |       CAST((1000000 * n_return) // n_at_risk AS BIGINT)
-        |         AS hazard_micro
-        |FROM r WHERE gap <= 14 ORDER BY day_gap""".stripMargin,
-    "events_whales" ->
-      """WITH per AS (
-        |  SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS n
-        |  FROM events GROUP BY 1, 2),
-        |rk AS (
-        |  SELECT event_type, n,
-        |         row_number() OVER
-        |           (PARTITION BY event_type ORDER BY n DESC, user_id)
-        |           AS rnk
-        |  FROM per)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_users,
-        |       CAST(sum(n) AS BIGINT) AS n_events,
-        |       CAST(sum(CASE WHEN rnk <= 10 THEN n ELSE 0 END) AS BIGINT)
-        |         AS n_top,
-        |       CAST((1000000 * sum(CASE WHEN rnk <= 10 THEN n ELSE 0 END)) //
-        |            sum(n) AS BIGINT) AS share_micro
-        |FROM rk GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "events_seasonal_outliers" ->
-      """WITH hx AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
-        |         CAST(count(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1),
-        |hw AS (
-        |  SELECT hour_ts, n_events,
-        |         CAST(dayofweek(hour_ts) * 24 + hour(hour_ts) AS INT) AS how
-        |  FROM hx),
-        |b AS (
-        |  SELECT how, quantile_cont(n_events, 0.5) AS baseline
-        |  FROM hw GROUP BY 1),
-        |r AS (
-        |  SELECT hw.hour_ts, hw.n_events, b.baseline,
-        |         hw.n_events - b.baseline AS resid
-        |  FROM hw JOIN b USING (how)),
-        |m AS (SELECT quantile_cont(abs(resid), 0.5) AS mad FROM r)
-        |SELECT hour_ts, n_events, round(baseline, 6) AS baseline,
-        |       round(resid, 6) AS resid,
-        |       abs(resid) > (SELECT mad FROM m) * 3 AS outlier
-        |FROM r ORDER BY hour_ts""".stripMargin,
-    "events_cusum_hourly" ->
-      """WITH hx AS (
-        |  SELECT date_trunc('hour', CAST(ts AS TIMESTAMP)) AS hour_ts,
-        |         CAST(count(*) AS BIGINT) AS n_events
-        |  FROM events GROUP BY 1),
-        |c AS (
-        |  SELECT hour_ts, n_events,
-        |         sum(n_events - 15) OVER (ORDER BY hour_ts) AS cum
-        |  FROM hx),
-        |m AS (
-        |  SELECT hour_ts, n_events, cum,
-        |         min(cum) OVER (ORDER BY hour_ts) AS mn
-        |  FROM c)
-        |SELECT hour_ts, n_events,
-        |       CAST(cum - least(mn, 0) AS BIGINT) AS cusum,
-        |       (cum - least(mn, 0)) > 30 AS alarm
-        |FROM m ORDER BY hour_ts""".stripMargin,
-    "events_join_streamed" ->
-      """SELECT c.event_id AS click_id, c.user_id,
-        |       CAST(c.ts AS TIMESTAMP) AS click_ts,
-        |       v.event_id AS view_id, CAST(v.ts AS TIMESTAMP) AS view_ts,
-        |       v.value AS view_value
-        |FROM events c JOIN events v
-        |  ON c.user_id = v.user_id
-        | AND c.event_type = 'click' AND v.event_type = 'view'
-        | AND v.ts <= c.ts AND v.ts >= c.ts - INTERVAL 600 SECOND
-        |ORDER BY click_id, view_id""".stripMargin,
-    "events_changepoints" ->
-      """WITH ev AS (SELECT CAST(ts AS TIMESTAMP) AS ts FROM events),
-        |hourly AS (SELECT date_trunc('hour', ts) AS hr,
-        |                  CAST(count(*) AS BIGINT) AS c FROM ev GROUP BY 1),
-        |pre AS (SELECT hr, c,
-        |        CAST(row_number() OVER (ORDER BY hr) AS BIGINT) AS pos,
-        |        CAST(sum(c) OVER (ORDER BY hr) AS BIGINT) AS cs
-        |        FROM hourly),
-        |tot AS (SELECT CAST(max(pos) AS BIGINT) AS h,
-        |               CAST(sum(c) AS BIGINT) AS stot FROM pre),
-        |g1 AS (
-        |  SELECT p.pos,
-        |         CAST(p.cs AS HUGEINT) * (t.h - p.pos) -
-        |           CAST(t.stot - p.cs AS HUGEINT) * p.pos AS d,
-        |         p.pos * (t.h - p.pos) AS den
-        |  FROM pre p, tot t WHERE p.pos < t.h),
-        |b1 AS (SELECT pos FROM (
-        |         SELECT pos, CAST(d * d AS DOUBLE) / CAST(den AS DOUBLE) AS score
-        |         FROM g1)
-        |       ORDER BY score DESC, pos LIMIT 1),
-        |g2l AS (
-        |  SELECT p.pos,
-        |         CAST(p.cs AS HUGEINT) * (b.pos - p.pos) -
-        |           CAST(ch.cs - p.cs AS HUGEINT) * p.pos AS d,
-        |         p.pos * (b.pos - p.pos) AS den
-        |  FROM pre p, b1 b JOIN pre ch ON ch.pos = b.pos
-        |  WHERE p.pos < b.pos),
-        |b2l AS (SELECT pos FROM (
-        |          SELECT pos, CAST(d * d AS DOUBLE) / CAST(den AS DOUBLE) AS score
-        |          FROM g2l)
-        |        ORDER BY score DESC, pos LIMIT 1),
-        |g2r AS (
-        |  SELECT p.pos,
-        |         CAST(p.cs - ch.cs AS HUGEINT) * (t.h - p.pos) -
-        |           CAST(t.stot - p.cs AS HUGEINT) * (p.pos - b.pos) AS d,
-        |         (p.pos - b.pos) * (t.h - p.pos) AS den
-        |  FROM pre p, b1 b JOIN pre ch ON ch.pos = b.pos, tot t
-        |  WHERE p.pos > b.pos AND p.pos < t.h),
-        |b2r AS (SELECT pos FROM (
-        |          SELECT pos, CAST(d * d AS DOUBLE) / CAST(den AS DOUBLE) AS score
-        |          FROM g2r)
-        |        ORDER BY score DESC, pos LIMIT 1),
-        |cuts AS (
-        |  SELECT 1 AS level, CAST(1 AS BIGINT) AS lo_pos, t.h AS hi_pos,
-        |         b.pos AS split_pos
-        |  FROM b1 b, tot t
-        |  UNION ALL
-        |  SELECT 2, CAST(1 AS BIGINT), b.pos, l.pos FROM b2l l, b1 b
-        |  UNION ALL
-        |  SELECT 2, b.pos + 1, t.h, r.pos FROM b2r r, b1 b, tot t)
-        |SELECT CAST(level AS BIGINT) AS level,
-        |       plo.hr AS lo_hour, phi.hr AS hi_hour, ps.hr AS split_hour,
-        |       hi_pos - lo_pos + 1 AS n_hours
-        |FROM cuts
-        |JOIN pre plo ON plo.pos = cuts.lo_pos
-        |JOIN pre phi ON phi.pos = cuts.hi_pos
-        |JOIN pre ps ON ps.pos = cuts.split_pos
-        |ORDER BY level, lo_hour""".stripMargin,
-    "events_upsert_streamed" ->
-      """WITH ev AS (
-        |  SELECT user_id, event_id, CAST(ts AS TIMESTAMP) AS ts, value
-        |  FROM events),
-        |r AS (SELECT user_id, event_id AS last_event_id, ts AS last_ts,
-        |             value AS last_value,
-        |             row_number() OVER (PARTITION BY user_id
-        |                                ORDER BY ts DESC, event_id DESC) AS rn
-        |      FROM ev)
-        |SELECT user_id, last_event_id, last_ts, last_value
-        |FROM r WHERE rn = 1 ORDER BY user_id""".stripMargin,
-    "events_outer_join_streamed" ->
-      """WITH c AS (
-        |  SELECT event_id AS click_id, user_id, CAST(ts AS TIMESTAMP) AS click_ts
-        |  FROM events WHERE event_type = 'click'),
-        |v AS (
-        |  SELECT event_id AS view_id, user_id AS v_user_id,
-        |         CAST(ts AS TIMESTAMP) AS view_ts, value AS view_value
-        |  FROM events WHERE event_type = 'view'),
-        |wm AS (SELECT least((SELECT max(click_ts) FROM c),
-        |                    (SELECT max(view_ts) FROM v))
-        |              - INTERVAL 600 SECOND AS w),
-        |m AS (
-        |  SELECT c.click_id, c.user_id, c.click_ts,
-        |         v.view_id, v.view_ts, v.view_value
-        |  FROM c JOIN v ON c.user_id = v.v_user_id
-        |   AND v.view_ts <= c.click_ts
-        |   AND v.view_ts >= c.click_ts - INTERVAL 600 SECOND),
-        |um AS (
-        |  SELECT c.click_id, c.user_id, c.click_ts
-        |  FROM c LEFT JOIN m ON c.click_id = m.click_id CROSS JOIN wm
-        |  WHERE m.click_id IS NULL AND c.click_ts < wm.w)
-        |SELECT click_id, user_id, click_ts, view_id, view_ts, view_value FROM m
-        |UNION ALL
-        |SELECT click_id, user_id, click_ts, NULL, NULL, NULL FROM um
-        |ORDER BY click_id, view_id""".stripMargin,
-    "events_zorder" ->
-      """SELECT event_id,
-        |       CAST(list_sum(list_transform(generate_series(0, 7),
-        |            b -> (((u >> b) & 1) << (2 * b)) + (((t >> b) & 1) << (2 * b + 1))))
-        |         AS BIGINT) AS zkey
-        |FROM (
-        |  SELECT event_id, user_id % 256 AS u,
-        |         (date_part('hour', CAST(ts AS TIMESTAMP)) * 60 +
-        |          date_part('minute', CAST(ts AS TIMESTAMP))) // 6 AS t
-        |  FROM events)
-        |ORDER BY event_id""".stripMargin,
-    "events_json_rollup" ->
-      """SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS k,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM events GROUP BY k ORDER BY k""".stripMargin,
-    // The same 8 Hilbert rotate/reflect iterations, unrolled newest-
-    // to-oldest (h8 = quantized input, h0 = final indices).
-    "events_hour_reliability" ->
-      """WITH a AS (
-        |  SELECT CAST(date_part('hour', CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr,
-        |         CAST(count(*) AS BIGINT) AS n,
-        |         CAST(sum(CASE WHEN event_type != 'error' THEN 1 ELSE 0 END)
-        |           AS BIGINT) AS k
-        |  FROM events GROUP BY 1),
-        |c AS (
-        |  SELECT hr, n, k,
-        |         CAST(k AS DOUBLE) / CAST(n AS DOUBLE) AS p,
-        |         CAST(n AS DOUBLE) AS nd,
-        |         CAST(1.96 AS DOUBLE) AS z
-        |  FROM a)
-        |SELECT hr, n, k, p AS p_hat,
-        |       (p + z * z / (2.0 * nd) -
-        |        z * sqrt(p * (1.0 - p) / nd + z * z / (4.0 * nd * nd))) /
-        |       (1.0 + z * z / nd) AS wilson_lower
-        |FROM c ORDER BY hr""".stripMargin,
-    // CUSUM replayed: the same dense zero-filled day grid, the same
-    // prefix-extreme closed form in windows, row_number argmax with
-    // the earliest-day tie-break.
-    "events_cusum" -> (EventDayGridCtes +
-      """,
-        |tot AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days,
-        |         CAST(sum(cnt) AS BIGINT) AS total,
-        |         CAST(CAST(1000000 * sum(cnt) AS HUGEINT) // count(*) AS BIGINT) AS mean_micro
-        |  FROM grid GROUP BY 1),
-        |pfx AS (
-        |  SELECT g.event_type, g.day, t.n_days, t.total, t.mean_micro,
-        |         sum(1000000 * g.cnt - t.mean_micro) OVER
-        |           (PARTITION BY g.event_type ORDER BY g.day
-        |            ROWS UNBOUNDED PRECEDING) AS p
-        |  FROM grid g JOIN tot t USING (event_type)),
-        |ext AS (
-        |  SELECT *,
-        |         p - least(0, min(p) OVER (PARTITION BY event_type ORDER BY day
-        |           ROWS UNBOUNDED PRECEDING)) AS sp,
-        |         greatest(0, max(p) OVER (PARTITION BY event_type ORDER BY day
-        |           ROWS UNBOUNDED PRECEDING)) - p AS sn
-        |  FROM pfx),
-        |pick AS (
-        |  SELECT *,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY sp DESC, day) AS rp,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY sn DESC, day) AS rn
-        |  FROM ext)
-        |SELECT p1.event_type, p1.n_days, p1.total, p1.mean_micro,
-        |       CAST(p1.sp AS BIGINT) AS cusum_pos_micro,
-        |       CAST(p1.day AS BIGINT) AS cp_day_pos,
-        |       CAST(p2.sn AS BIGINT) AS cusum_neg_micro,
-        |       CAST(p2.day AS BIGINT) AS cp_day_neg
-        |FROM pick p1 JOIN pick p2 USING (event_type)
-        |WHERE p1.rp = 1 AND p2.rn = 1
-        |ORDER BY event_type""".stripMargin),
-    // MAD flags replayed: lower medians as rank-(n+1)//2 order
-    // statistics over the same grid, HUGEINT // for div parity.
-    "events_mad_anomalies" -> (EventDayGridCtes +
-      """,
-        |sized AS (
-        |  SELECT *, count(*) OVER (PARTITION BY event_type) AS n,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY cnt, day) AS rn
-        |  FROM grid),
-        |med AS (
-        |  SELECT event_type, max(CASE WHEN rn = (n + 1) // 2 THEN cnt END) AS med
-        |  FROM sized GROUP BY 1),
-        |dev AS (
-        |  SELECT g.event_type, g.day, g.cnt, m.med, abs(g.cnt - m.med) AS adev
-        |  FROM grid g JOIN med m USING (event_type)),
-        |sized2 AS (
-        |  SELECT *, count(*) OVER (PARTITION BY event_type) AS n,
-        |         row_number() OVER (PARTITION BY event_type ORDER BY adev, day) AS rn
-        |  FROM dev),
-        |mad AS (
-        |  SELECT event_type, max(CASE WHEN rn = (n + 1) // 2 THEN adev END) AS mad
-        |  FROM sized2 GROUP BY 1)
-        |SELECT d.event_type, CAST(d.day AS BIGINT) AS day,
-        |       CAST(d.cnt AS BIGINT) AS cnt, CAST(d.med AS BIGINT) AS med,
-        |       CAST(m.mad AS BIGINT) AS mad,
-        |       CAST(CAST(1000000 * d.adev AS HUGEINT) // greatest(m.mad, 1) AS BIGINT) AS score_micro
-        |FROM dev d JOIN mad m USING (event_type)
-        |WHERE CAST(1000000 * d.adev AS HUGEINT) // greatest(m.mad, 1) >= 2000000
-        |ORDER BY d.event_type, d.day""".stripMargin),
-    // Seasonal profile replayed: dense 24-hour grid, integral share,
-    // max-count peak flag.
-    "events_seasonality" ->
-      """WITH base AS (
-        |  SELECT event_type,
-        |         CAST(date_part('hour', CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr
-        |  FROM events WHERE ts IS NOT NULL AND event_type IS NOT NULL),
-        |counts AS (
-        |  SELECT event_type, hr, CAST(count(*) AS BIGINT) AS cnt
-        |  FROM base GROUP BY 1, 2),
-        |hours AS (SELECT CAST(unnest(generate_series(0, 23)) AS BIGINT) AS hr),
-        |types AS (SELECT DISTINCT event_type FROM base),
-        |grid AS (
-        |  SELECT t.event_type, h.hr, coalesce(c.cnt, 0) AS cnt
-        |  FROM types t CROSS JOIN hours h
-        |  LEFT JOIN counts c ON c.event_type = t.event_type AND c.hr = h.hr),
-        |agg AS (
-        |  SELECT *, sum(cnt) OVER (PARTITION BY event_type) AS tot,
-        |         max(cnt) OVER (PARTITION BY event_type) AS mx
-        |  FROM grid)
-        |SELECT event_type, hr, CAST(cnt AS BIGINT) AS cnt,
-        |       CAST(CASE WHEN tot > 0
-        |            THEN CAST(1000000 * cnt AS HUGEINT) // tot
-        |            ELSE 0 END AS BIGINT) AS share_micro,
-        |       cnt = mx AS is_peak
-        |FROM agg ORDER BY event_type, hr""".stripMargin,
-    // Same explicit ranges via RE2's \x{hhhh} escapes; dominant CASE
-    // replays the declared tie order.
-    "text_script_mix" -> {
-      val scripts = Seq(
-        "latin" -> "[A-Za-z]",
-        "cyrillic" -> "[\\x{0400}-\\x{04FF}]",
-        "greek" -> "[\\x{0370}-\\x{03FF}]",
-        "cjk" -> "[\\x{4E00}-\\x{9FFF}]",
-        "arabic" -> "[\\x{0600}-\\x{06FF}]",
-        "devanagari" -> "[\\x{0900}-\\x{097F}]",
-        "digit" -> "[0-9]")
-      val counts = scripts.map { case (n, cls) =>
-        s"CAST(len(regexp_extract_all(t, '$cls')) AS BIGINT) AS n_$n"
-      }.mkString(",\n         ")
-      val total = scripts.map(sc => s"n_${sc._1}").mkString(" + ")
-      val domChain = scripts.init.map { case (n, _) =>
-        val geAll = scripts.filter(_._1 != n)
-          .map(o => s"n_$n >= n_${o._1}").mkString(" AND ")
-        s"WHEN $geAll AND n_$n > 0 THEN '$n'"
-      }.mkString("\n              ")
-      s"""WITH fixed AS (
-         |  SELECT doc_id,
-         |         text || CASE WHEN doc_id % 3 = 0 THEN ' абвг αβ 漢字数 ١٢'
-         |                      WHEN doc_id % 3 = 1 THEN ' नमस्ते 12'
-         |                      ELSE '' END AS t
-         |  FROM documents WHERE text IS NOT NULL),
-         |c AS (
-         |  SELECT doc_id,
-         |         $counts
-         |  FROM fixed)
-         |SELECT doc_id, n_latin, n_cyrillic, n_greek, n_cjk, n_arabic,
-         |       n_devanagari, n_digit,
-         |       CASE WHEN $total = 0 THEN 'none'
-         |              $domChain
-         |              ELSE 'digit' END AS dominant
-         |FROM c ORDER BY doc_id""".stripMargin
-    },
-    "orders_price_histogram" ->
-      """WITH v AS (
-        |  SELECT CAST(o_totalprice AS DOUBLE) AS x FROM orders
-        |  WHERE o_totalprice IS NOT NULL),
-        |mm AS (
-        |  SELECT min(x) AS v_min, max(x) AS v_max,
-        |         CAST(count(*) AS BIGINT) AS n_total FROM v),
-        |b AS (
-        |  SELECT CAST(CASE WHEN mm.v_max = mm.v_min THEN 0
-        |         ELSE least(floor((x - mm.v_min) /
-        |                ((mm.v_max - mm.v_min) / 16)), 15) END AS INT)
-        |           AS bucket,
-        |         mm.v_min, mm.v_max, mm.n_total
-        |  FROM v CROSS JOIN mm)
-        |SELECT bucket,
-        |       round(v_min + bucket * ((v_max - v_min) / 16), 6) AS lo,
-        |       round(v_min + (bucket + 1) * ((v_max - v_min) / 16), 6) AS hi,
-        |       CAST(count(*) AS BIGINT) AS n, n_total
-        |FROM b GROUP BY bucket, v_min, v_max, n_total
-        |ORDER BY bucket""".stripMargin,
-    "orders_basket_pairs" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
-        |n AS (SELECT CAST(count(DISTINCT okey) AS BIGINT) AS n_orders FROM items),
-        |ic AS (SELECT part, CAST(count(*) AS BIGINT) AS n_item
-        |       FROM items GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.part AS part_a, b.part AS part_b,
-        |         CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM items a JOIN items b ON a.okey = b.okey AND a.part < b.part
-        |  GROUP BY 1, 2 HAVING count(*) >= 2)
-        |SELECT p.part_a, p.part_b, p.n_ab,
-        |       ia.n_item AS n_a, ib.n_item AS n_b, n.n_orders,
-        |       round(p.n_ab * n.n_orders /
-        |         CAST(ia.n_item * ib.n_item AS DOUBLE), 6) AS lift
-        |FROM pairs p
-        |JOIN ic ia ON ia.part = p.part_a
-        |JOIN ic ib ON ib.part = p.part_b
-        |CROSS JOIN n
-        |ORDER BY part_a, part_b""".stripMargin,
-    // The same pair relation with HUGEINT confidences/lift and the
-    // lift-desc/pair-asc top-k.
-    "orders_assoc_rules" ->
-      """WITH items AS (
-        |  SELECT DISTINCT l_orderkey AS okey, l_partkey AS part FROM lineitem),
-        |n AS (SELECT CAST(count(DISTINCT okey) AS BIGINT) AS n_orders FROM items),
-        |ic AS (SELECT part, CAST(count(*) AS BIGINT) AS n_item
-        |       FROM items GROUP BY 1),
-        |pairs AS (
-        |  SELECT a.part AS part_a, b.part AS part_b,
-        |         CAST(count(*) AS BIGINT) AS n_ab
-        |  FROM items a JOIN items b ON a.okey = b.okey AND a.part < b.part
-        |  GROUP BY 1, 2 HAVING count(*) >= 2),
-        |r AS (
-        |  SELECT p.part_a, p.part_b, p.n_ab,
-        |         ia.n_item AS n_a, ib.n_item AS n_b,
-        |         CAST(CAST(p.n_ab AS HUGEINT) * 1000000 // ia.n_item AS BIGINT)
-        |           AS conf_ab_micro,
-        |         CAST(CAST(p.n_ab AS HUGEINT) * 1000000 // ib.n_item AS BIGINT)
-        |           AS conf_ba_micro,
-        |         CAST(CAST(p.n_ab AS HUGEINT) * n.n_orders * 1000000 //
-        |              (CAST(ia.n_item AS HUGEINT) * ib.n_item) AS BIGINT)
-        |           AS lift_micro
-        |  FROM pairs p
-        |  JOIN ic ia ON ia.part = p.part_a
-        |  JOIN ic ib ON ib.part = p.part_b
-        |  CROSS JOIN n)
-        |SELECT part_a, part_b, n_ab, n_a, n_b, conf_ab_micro,
-        |       conf_ba_micro, lift_micro,
-        |       CAST(row_number() OVER
-        |         (ORDER BY lift_micro DESC, part_a, part_b) AS BIGINT) AS rnk
-        |FROM r ORDER BY lift_micro DESC, part_a, part_b LIMIT 25""".stripMargin,
-    "events_dau_wau" ->
-      """WITH ud AS (
-        |  SELECT DISTINCT user_id, CAST(CAST(ts AS TIMESTAMP) AS DATE) AS day
-        |  FROM events),
-        |dau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS dau
-        |        FROM ud GROUP BY 1),
-        |contrib AS (
-        |  SELECT user_id, day + CAST(k AS INTEGER) AS day
-        |  FROM ud, unnest(generate_series(0, 6)) t(k)),
-        |wau AS (SELECT day, CAST(count(DISTINCT user_id) AS BIGINT) AS wau
-        |        FROM contrib GROUP BY 1)
-        |SELECT d.day, d.dau, w.wau,
-        |       round(d.dau / CAST(w.wau AS DOUBLE), 6) AS stickiness
-        |FROM dau d JOIN wau w USING (day) ORDER BY day""".stripMargin,
-    "orders_cohort_retention" ->
-      """WITH om AS (
-        |  SELECT DISTINCT o_custkey, date_trunc('month', o_orderdate) AS m
-        |  FROM orders),
-        |cohort AS (SELECT o_custkey, min(m) AS cohort_month FROM om GROUP BY 1),
-        |act AS (
-        |  SELECT c.cohort_month,
-        |         CAST(date_diff('month', c.cohort_month, om.m) AS INT) AS k,
-        |         om.o_custkey
-        |  FROM om JOIN cohort c USING (o_custkey)),
-        |counts AS (
-        |  SELECT cohort_month, k,
-        |         CAST(count(DISTINCT o_custkey) AS BIGINT) AS n_active
-        |  FROM act GROUP BY 1, 2),
-        |sizes AS (
-        |  SELECT cohort_month, CAST(count(*) AS BIGINT) AS cohort_size
-        |  FROM cohort GROUP BY 1)
-        |SELECT c.cohort_month, c.k, c.n_active, s.cohort_size,
-        |       round(c.n_active / CAST(s.cohort_size AS DOUBLE), 6) AS retention
-        |FROM counts c JOIN sizes s USING (cohort_month)
-        |ORDER BY cohort_month, k""".stripMargin,
-    "events_transitions" ->
-      """WITH ev AS (
-        |  SELECT user_id, CAST(ts AS TIMESTAMP) AS ts, event_id, event_type
-        |  FROM events),
-        |bi AS (
-        |  SELECT lag(event_type) OVER w AS prev, event_type AS cur
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |counts AS (
-        |  SELECT prev, cur, CAST(count(*) AS BIGINT) AS n
-        |  FROM bi WHERE prev IS NOT NULL GROUP BY 1, 2),
-        |totals AS (SELECT prev, CAST(sum(n) AS BIGINT) AS total
-        |           FROM counts GROUP BY 1)
-        |SELECT c.prev, c.cur, c.n, t.total,
-        |       round(c.n / CAST(t.total AS DOUBLE), 6) AS p
-        |FROM counts c JOIN totals t USING (prev)
-        |ORDER BY prev, cur""".stripMargin,
-    // The rewritten SQL answers with the register estimate — the
-    // oracle replays registers + harmonic mean + the BIGINT rounding.
-    "sql_count_footer_rewrite" ->
-      "SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents",
-    "sql_freshness_footer_rewrite" ->
-      """SELECT CAST(min(ts) AS TIMESTAMP) AS first_ts,
-        |       CAST(max(ts) AS TIMESTAMP) AS last_ts,
-        |       CAST(count(*) AS BIGINT) AS n_events
-        |FROM events""".stripMargin,
-    "sql_minmax_footer_rewrite" ->
-      """SELECT CAST(min(doc_id) AS BIGINT) AS min_id,
-        |       CAST(max(doc_id) AS BIGINT) AS max_id,
-        |       CAST(min(n_chars) AS BIGINT) AS min_chars,
-        |       CAST(max(n_chars) AS BIGINT) AS max_chars,
-        |       CAST(count(*) AS BIGINT) AS n_docs,
-        |       CAST(count(lang) AS BIGINT) AS n_langs
-        |FROM documents""".stripMargin,
-    "sql_hll_rewrite" ->
-      s"""WITH parts AS (
-        |  SELECT source, md5(text) AS h FROM documents WHERE text IS NOT NULL),
-        |rhos AS (
-        |  SELECT source,
-        |         (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16 +
-        |          strpos('0123456789abcdef', substr(h, 2, 1)) - 1 AS bucket,
-        |         length(regexp_extract(substr(h, 3, 12), '^0*')) AS zn,
-        |         strpos('0123456789abcdef',
-        |           substr(substr(h, 3, 12) || 'f',
-        |             length(regexp_extract(substr(h, 3, 12), '^0*')) + 1, 1)) - 1
-        |           AS fnz
-        |  FROM parts),
-        |regs AS (
-        |  SELECT source, bucket,
-        |         max(CASE WHEN zn = 12 THEN 49
-        |             ELSE zn * 4 + CASE WHEN fnz >= 8 THEN 0 WHEN fnz >= 4 THEN 1
-        |                                WHEN fnz >= 2 THEN 2 ELSE 3 END + 1 END)
-        |           AS rho
-        |  FROM rhos GROUP BY 1, 2),
-        |summary AS (
-        |  SELECT source, sum(pow(2.0, -rho)) AS sum_inv,
-        |         CAST(count(*) AS BIGINT) AS n_hit
-        |  FROM regs GROUP BY 1),
-        |est AS (
-        |  SELECT source, CAST(256 - n_hit AS BIGINT) AS v_zero, n_hit,
-        |         (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0 /
-        |           (sum_inv + CAST(256 - n_hit AS DOUBLE)) AS est_raw
-        |  FROM summary)
-        |SELECT source,
-        |       CASE WHEN n_hit = 0 THEN CAST(0 AS BIGINT)
-        |            WHEN v_zero > 0 AND est_raw < 640.0
-        |              THEN CAST(([$HllLcList])[CAST(v_zero AS INT)] AS BIGINT)
-        |            ELSE CAST(round(est_raw) AS BIGINT) END AS n_distinct
-        |FROM est ORDER BY source""".stripMargin,
-    // The incremental merge's oracle is the DIRECT build over the full
-    // table — merge(old, delta) == direct is the contract under test.
-    "sketch_hll_incremental" ->
-      """WITH parts AS (
-        |  SELECT source, md5(text) AS h FROM documents WHERE text IS NOT NULL),
-        |rhos AS (
-        |  SELECT source,
-        |         (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 16 +
-        |          strpos('0123456789abcdef', substr(h, 2, 1)) - 1 AS bucket,
-        |         length(regexp_extract(substr(h, 3, 12), '^0*')) AS zn,
-        |         strpos('0123456789abcdef',
-        |           substr(substr(h, 3, 12) || 'f',
-        |             length(regexp_extract(substr(h, 3, 12), '^0*')) + 1, 1)) - 1
-        |           AS fnz
-        |  FROM parts),
-        |regs AS (
-        |  SELECT source, bucket,
-        |         max(CASE WHEN zn = 12 THEN 49
-        |             ELSE zn * 4 + CASE WHEN fnz >= 8 THEN 0 WHEN fnz >= 4 THEN 1
-        |                                WHEN fnz >= 2 THEN 2 ELSE 3 END + 1 END)
-        |           AS rho
-        |  FROM rhos GROUP BY 1, 2),
-        |summary AS (
-        |  SELECT source, sum(pow(2.0, -rho)) AS sum_inv,
-        |         CAST(count(*) AS BIGINT) AS n_hit
-        |  FROM regs GROUP BY 1),
-        |exact AS (
-        |  SELECT source, CAST(count(DISTINCT text) AS BIGINT) AS exact_distinct
-        |  FROM documents WHERE text IS NOT NULL GROUP BY 1)
-        |SELECT s.source, CAST(256 - n_hit AS BIGINT) AS v_zero,
-        |       (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0 /
-        |         (sum_inv + CAST(256 - n_hit AS DOUBLE)) AS est_distinct,
-        |       e.exact_distinct
-        |FROM summary s JOIN exact e USING (source)
-        |ORDER BY source""".stripMargin,
-    // Minified features replayed arithmetically over the same fixture
-    // (explicit [ \t\n\r] class — \s coverage differs Java vs RE2).
-    "code_minified_scan" ->
-      """WITH fixed AS (
-        |  SELECT doc_id,
-        |         CASE WHEN doc_id % 2 = 0 THEN repeat(replace(text, ' ', ''), 3)
-        |              ELSE translate(text, ' ', chr(10)) END AS t
-        |  FROM documents WHERE length(text) >= 1),
-        |f AS (
-        |  SELECT doc_id, CAST(length(t) AS BIGINT) AS n_chars,
-        |         CAST(len(string_split(t, chr(10))) AS BIGINT) AS n_lines,
-        |         CAST(list_max(list_transform(string_split(t, chr(10)),
-        |           x -> length(x))) AS BIGINT) AS max_line,
-        |         CAST(length(t) - length(regexp_replace(t,
-        |           '[ ' || chr(9) || chr(10) || chr(13) || ']', '', 'g'))
-        |           AS BIGINT) AS n_ws
-        |  FROM fixed),
-        |g AS (
-        |  SELECT doc_id, n_chars, n_lines, max_line,
-        |         round(CAST(n_chars - (n_lines - 1) AS DOUBLE) / n_lines, 6)
-        |           AS avg_line,
-        |         round(CAST(n_ws AS DOUBLE) / n_chars, 6) AS ws_ratio
-        |  FROM f)
-        |SELECT doc_id, n_chars, n_lines, max_line, avg_line, ws_ratio,
-        |       (avg_line > 200.0 OR (max_line > 500 AND ws_ratio < 0.05))
-        |         AS minified
-        |FROM g ORDER BY doc_id""".stripMargin,
-    // RFM: same exact-percentile fences (quantile_cont == Spark
-    // percentile interpolation), same CASE scores, same inversion.
-    "customer_rfm" ->
-      """WITH per AS (
-        |  SELECT o_custkey,
-        |         CAST(date_diff('day', CAST(max(o_orderdate) AS DATE),
-        |           DATE '2001-09-01') AS BIGINT) AS r_days,
-        |         CAST(count(*) AS BIGINT) AS f_orders,
-        |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-        |           AS m_value
-        |  FROM orders GROUP BY 1),
-        |q AS (
-        |  SELECT quantile_cont(r_days, [0.25, 0.5, 0.75]) AS rq,
-        |         quantile_cont(f_orders, [0.25, 0.5, 0.75]) AS fq,
-        |         quantile_cont(m_value, [0.25, 0.5, 0.75]) AS mq
-        |  FROM per),
-        |scored AS (
-        |  SELECT o_custkey, r_days, f_orders, m_value,
-        |         5 - (CASE WHEN r_days <= rq[1] THEN 1
-        |                   WHEN r_days <= rq[2] THEN 2
-        |                   WHEN r_days <= rq[3] THEN 3 ELSE 4 END) AS r_score,
-        |         CASE WHEN f_orders <= fq[1] THEN 1
-        |              WHEN f_orders <= fq[2] THEN 2
-        |              WHEN f_orders <= fq[3] THEN 3 ELSE 4 END AS f_score,
-        |         CASE WHEN m_value <= mq[1] THEN 1
-        |              WHEN m_value <= mq[2] THEN 2
-        |              WHEN m_value <= mq[3] THEN 3 ELSE 4 END AS m_score
-        |  FROM per CROSS JOIN q)
-        |SELECT o_custkey, r_days, f_orders, round(m_value, 2) AS m_value,
-        |       r_score, f_score, m_score,
-        |       CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR) ||
-        |         CAST(m_score AS VARCHAR) AS segment
-        |FROM scored ORDER BY o_custkey""".stripMargin,
-    // Pivot = conditional aggregation; the explicit value list means
-    // 'error' events are deliberately absent from both sides.
-    "events_pivot" ->
-      """SELECT user_id,
-        |  CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS click,
-        |  CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS view,
-        |  CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS purchase,
-        |  CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS signup
-        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin,
-    "lineitem_unpivot" ->
-      """SELECT l_orderkey, l_linenumber, m.metric,
-        |       CASE m.metric
-        |         WHEN 'l_extendedprice' THEN l_extendedprice
-        |         WHEN 'l_discount' THEN l_discount
-        |         ELSE l_tax END AS amount
-        |FROM lineitem,
-        |     (VALUES ('l_extendedprice'), ('l_discount'), ('l_tax')) m(metric)
-        |WHERE l_orderkey % 100 = 0
-        |ORDER BY l_orderkey, l_linenumber, metric""".stripMargin,
-    // EWMA re-derived by a recursive CTE: the same x*0.5 + prev*0.5
-    // expression in the same sequential order -> identical doubles.
-    "events_ewma" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, event_id, CAST(value AS DOUBLE) AS x,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, event_id, x, rn, x AS ewma FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT ev.user_id, ev.event_id, ev.x, ev.rn,
-        |         ev.x * 0.5 + r.ewma * 0.5
-        |  FROM r JOIN ev ON ev.user_id = r.user_id AND ev.rn = r.rn + 1)
-        |SELECT user_id, event_id, x AS value, ewma
-        |FROM r ORDER BY user_id, event_id""".stripMargin,
-    // Holt's recurrence replayed: the recursive CTE carries (level,
-    // trend); the trend recomputes the new level inline exactly as
-    // the engine-side fold does, pinning the operation order.
-    "events_holt" ->
-      """WITH RECURSIVE ev AS (
-        |  SELECT user_id, event_id, CAST(value AS DOUBLE) AS x,
-        |         row_number() OVER (PARTITION BY user_id
-        |           ORDER BY CAST(ts AS TIMESTAMP), event_id) AS rn
-        |  FROM events),
-        |r AS (
-        |  SELECT user_id, event_id, x, rn,
-        |         x AS level, CAST(0.0 AS DOUBLE) AS trend
-        |  FROM ev WHERE rn = 1
-        |  UNION ALL
-        |  SELECT ev.user_id, ev.event_id, ev.x, ev.rn,
-        |         ev.x * 0.5 + (r.level + r.trend) * 0.5,
-        |         ((ev.x * 0.5 + (r.level + r.trend) * 0.5) - r.level)
-        |           * 0.5 + r.trend * 0.5
-        |  FROM r JOIN ev ON ev.user_id = r.user_id AND ev.rn = r.rn + 1)
-        |SELECT user_id, event_id, x AS value, level, trend,
-        |       level + trend AS forecast_1
-        |FROM r ORDER BY user_id, event_id""".stripMargin,
-    // Benford card: same band CASE, same probability literals, same
-    // micro-integer chi-square — all generated from one source of
-    // truth in BenfordAudit.
-    "audit_benford" -> {
-      val pList = BenfordAudit.P.zipWithIndex
-        .map { case (p, i) => s"(${i + 1}, $p)" }.mkString(", ")
-      val fd = BenfordAudit.firstDigitSql("v", 9)
-      s"""WITH vals AS (SELECT CAST(o_totalprice AS DOUBLE) AS v FROM orders),
-         |digits AS (SELECT CASE WHEN v >= 1 THEN $fd ELSE NULL END AS digit
-         |           FROM vals),
-         |obs AS (
-         |  SELECT digit, CAST(count(*) AS BIGINT) AS n_obs
-         |  FROM digits WHERE digit IS NOT NULL GROUP BY 1),
-         |exc AS (
-         |  SELECT CAST(sum(CASE WHEN digit IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |           AS n_excluded,
-         |         CAST(sum(CASE WHEN digit IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT)
-         |           AS n_total
-         |  FROM digits),
-         |expect AS (
-         |  SELECT digit, CAST(p AS DOUBLE) AS p
-         |  FROM (VALUES $pList) t(digit, p)),
-         |pd AS (
-         |  SELECT e.digit, CAST(COALESCE(o.n_obs, 0) AS BIGINT) AS n_obs,
-         |         e.p, x.n_total, x.n_excluded,
-         |         CAST(round((COALESCE(o.n_obs, 0) - e.p * x.n_total) *
-         |                    (COALESCE(o.n_obs, 0) - e.p * x.n_total) /
-         |                    (e.p * x.n_total) * 1000000.0) AS BIGINT) AS cm
-         |  FROM expect e LEFT JOIN obs o ON o.digit = e.digit CROSS JOIN exc x),
-         |c AS (SELECT round(sum(cm) / 1000000.0, 6) AS chi2 FROM pd)
-         |SELECT pd.digit, pd.n_obs, round(pd.p, 6) AS p_expected,
-         |       round(pd.p * pd.n_total, 6) AS n_expected,
-         |       pd.n_total, pd.n_excluded, c.chi2
-         |FROM pd CROSS JOIN c ORDER BY digit""".stripMargin
-    },
-    // IVF-PQ at full breadth = the ADC pipeline + euclidean re-rank,
-    // replayed stage for stage (same fixed codebook literals as
-    // ann_adc_rerank, same round-then-cut discipline).
-    "ann_ivfpq_topk" ->
-      """WITH qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0),
-        |adc AS (
-        |  SELECT e.vec_id AS id,
-        |    round(list_sum(list_transform(generate_series(0, 7), j ->
-        |      list_transform(
-        |        [list_transform(generate_series(0, 3), c ->
-        |           list_sum(list_transform(generate_series(0, 7), t ->
-        |             (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |              CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |             (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |              CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))],
-        |        dl ->
-        |          list_transform(generate_series(0, 3), c ->
-        |            list_sum(list_transform(generate_series(0, 7), t ->
-        |              (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |               CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |              (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |               CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))
-        |          [list_position(dl, list_min(dl))]
-        |      )[1])), 6) AS adc
-        |  FROM embeddings e, qv),
-        |cand AS (SELECT id FROM adc ORDER BY adc, id LIMIT 64)
-        |SELECT e.vec_id AS id,
-        |       round(list_distance(CAST(e.embedding AS DOUBLE[]),
-        |                           CAST(qv.q AS DOUBLE[])), 6) AS dist
-        |FROM embeddings e JOIN cand ON e.vec_id = cand.id, qv
-        |ORDER BY dist, id LIMIT 10""".stripMargin,
-    // Same ADC replay over the LIVE rows only: the tombstone filter
-    // lands in the adc CTE (before the 64-candidate cut, mirroring the
-    // anti-join-before-ADC plan) and the rerank join.
-    "ann_ivfpq_delete" ->
-      """WITH qv AS (SELECT embedding AS q FROM embeddings WHERE vec_id = 0),
-        |adc AS (
-        |  SELECT e.vec_id AS id,
-        |    round(list_sum(list_transform(generate_series(0, 7), j ->
-        |      list_transform(
-        |        [list_transform(generate_series(0, 3), c ->
-        |           list_sum(list_transform(generate_series(0, 7), t ->
-        |             (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |              CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |             (CAST(e.embedding[j*8 + t + 1] AS DOUBLE) -
-        |              CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))],
-        |        dl ->
-        |          list_transform(generate_series(0, 3), c ->
-        |            list_sum(list_transform(generate_series(0, 7), t ->
-        |              (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |               CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)) *
-        |              (CAST(qv.q[j*8 + t + 1] AS DOUBLE) -
-        |               CAST(CAST((c - 1.5) + t * 0.01 AS FLOAT) AS DOUBLE)))))
-        |          [list_position(dl, list_min(dl))]
-        |      )[1])), 6) AS adc
-        |  FROM embeddings e, qv WHERE e.vec_id % 7 <> 3),
-        |cand AS (SELECT id FROM adc ORDER BY adc, id LIMIT 64)
-        |SELECT e.vec_id AS id,
-        |       round(list_distance(CAST(e.embedding AS DOUBLE[]),
-        |                           CAST(qv.q AS DOUBLE[])), 6) AS dist
-        |FROM embeddings e JOIN cand ON e.vec_id = cand.id, qv
-        |WHERE e.vec_id % 7 <> 3
-        |ORDER BY dist, id LIMIT 10""".stripMargin,
-    // Native session_window gaps are half-open: >= gap starts a new
-    // session; session_end = last event + gap.
-    "events_session_window" ->
-      """WITH ev AS (SELECT event_id, user_id, CAST(ts AS TIMESTAMP) AS ts, value FROM events),
-        |flagged AS (
-        |  SELECT event_id, user_id, ts, value,
-        |         CASE WHEN lag(ts) OVER w IS NULL
-        |                   OR ts - lag(ts) OVER w >= INTERVAL 600 SECOND
-        |              THEN 1 ELSE 0 END AS new_session
-        |  FROM ev WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |sessions AS (
-        |  SELECT user_id, ts, value,
-        |         CAST(sum(new_session) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS session_idx
-        |  FROM flagged)
-        |SELECT user_id, min(ts) AS session_start,
-        |       max(ts) + INTERVAL 600 SECOND AS session_end,
-        |       count(*) AS n_events,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-        |FROM sessions GROUP BY user_id, session_idx
-        |ORDER BY user_id, session_start""".stripMargin,
-    "tpch_q10_returns" ->
-      """SELECT c.c_custkey, c.c_name, c.c_acctbal, n.n_name,
-        |       CAST(sum(CAST(l.l_extendedprice * (1.0 - l.l_discount)
-        |         AS DECIMAL(18,6))) AS DOUBLE) AS revenue
-        |FROM lineitem l
-        |JOIN orders o ON l.l_orderkey = o.o_orderkey
-        |JOIN customer c ON o.o_custkey = c.c_custkey
-        |JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |WHERE l.l_returnflag = 'R'
-        |  AND o.o_orderdate >= TIMESTAMP '1996-10-01'
-        |  AND o.o_orderdate < TIMESTAMP '1997-01-01'
-        |GROUP BY 1, 2, 3, 4
-        |ORDER BY revenue DESC, c_custkey LIMIT 20""".stripMargin,
-    // Calibration card rebuilt on the oracle's own classifier refit:
-    // same integer-quantized scores, same decile binning, same
-    // integer-weighted ECE.
-    "classifier_brier" -> (ClassifierFitCtes + s"""
-      |, scored AS (
-      |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-      |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-      |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-      |  FROM f2 CROSS JOIN w${QualityClassifier.Iters}),
-      |sc AS (SELECT round(p, 4) AS score, CAST(y AS BIGINT) AS y FROM scored),
-      |b AS (
-      |  SELECT CAST(least(floor(score * 10), 9) AS INT) AS bin,
-      |         CAST(y AS HUGEINT) AS y,
-      |         CAST(floor(score * 10000 + 0.5) AS HUGEINT) AS p4
-      |  FROM sc),
-      |pb AS (
-      |  SELECT bin, CAST(count(*) AS HUGEINT) AS n_b, sum(y) AS y_b,
-      |         sum(p4) AS s_b,
-      |         sum((p4 - 10000 * y) * (p4 - 10000 * y)) AS se_b
-      |  FROM b GROUP BY 1),
-      |t AS (
-      |  SELECT sum(n_b) AS n, sum(y_b) AS y_tot, sum(se_b) AS se,
-      |         sum(((s_b - 10000 * y_b) * (s_b - 10000 * y_b)) // n_b)
-      |           AS rel_num
-      |  FROM pb),
-      |r AS (
-      |  SELECT sum(((y_b * (SELECT n FROM t) - (SELECT y_tot FROM t) * n_b) *
-      |              (y_b * (SELECT n FROM t) - (SELECT y_tot FROM t) * n_b))
-      |             // n_b) AS res_num
-      |  FROM pb)
-      |SELECT CAST(t.n AS BIGINT) AS n,
-      |       CAST(t.se // (100 * t.n) AS BIGINT) AS brier_micro,
-      |       CAST(t.rel_num // (100 * t.n) AS BIGINT) AS reliability_micro,
-      |       CAST((1000000 * r.res_num) // (t.n * t.n * t.n) AS BIGINT)
-      |         AS resolution_micro,
-      |       CAST((1000000 * t.y_tot * (t.n - t.y_tot)) // (t.n * t.n)
-      |            AS BIGINT) AS uncertainty_micro
-      |FROM t, r""".stripMargin),
-    "classifier_calibration" -> (ClassifierFitCtes + s"""
-      |, scored AS (
-      |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-      |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-      |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-      |  FROM f2 CROSS JOIN w${QualityClassifier.Iters}),
-      |sc AS (SELECT round(p, 4) AS score, CAST(y AS BIGINT) AS y FROM scored),
-      |b AS (
-      |  SELECT CAST(least(floor(score * 10), 9) AS INT) AS bin, y,
-      |         CAST(floor(score * 10000 + 0.5) AS BIGINT) AS sci
-      |  FROM sc),
-      |pb AS (
-      |  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-      |         CAST(sum(y) AS BIGINT) AS n_pos,
-      |         CAST(sum(sci) AS BIGINT) AS sum_sc
-      |  FROM b GROUP BY 1),
-      |pb2 AS (
-      |  SELECT bin, n, n_pos,
-      |         round(sum_sc / (n * 10000.0), 6) AS mean_pred,
-      |         round(n_pos / CAST(n AS DOUBLE), 6) AS frac_pos
-      |  FROM pb),
-      |pb3 AS (SELECT *, round(frac_pos - mean_pred, 6) AS gap FROM pb2),
-      |e AS (
-      |  SELECT round(sum(n * CAST(round(abs(gap) * 1000000) AS BIGINT)) /
-      |           (sum(n) * 1000000.0), 6) AS ece
-      |  FROM pb3)
-      |SELECT pb3.*, e.ece FROM pb3 CROSS JOIN e ORDER BY bin""".stripMargin),
-    // Platt GD replay: per-iteration 1-row parameter CTEs over the
-    // micro-quantized gradient sums — bit-identical am/bm per step.
-    // Naive Bayes replayed: identical split, vocab truncation order,
-    // smoothing arithmetic and argmax tie-break.
-    "classifier_nb_model" -> s"""$NbCtes
-       |SELECT lang, token, cnt, loglik_micro FROM model
-       |ORDER BY lang, token""".stripMargin,
-    "classifier_nb_predict" -> s"""$NbCtes
-       |SELECT doc_id, actual AS lang, cls AS pred_lang,
-       |       CAST(score AS BIGINT) AS score_micro
-       |FROM pred ORDER BY doc_id""".stripMargin,
-    "classifier_nb_confusion" -> s"""$NbCtes
-       |SELECT actual AS lang, cls AS pred_lang,
-       |       CAST(count(*) AS BIGINT) AS n
-       |FROM pred GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin,
-    // Feature log-odds replayed: same full-corpus vocab, document
-    // presence distinct, Haldane-corrected pairwise products, 6-dp
-    // logs, per-class top-10 by (score desc, token).
-    "classifier_feature_odds" ->
-      s"""WITH tk0 AS (
-         |  SELECT doc_id, lang, unnest(string_split(text, ' ')) AS token
-         |  FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL),
-         |tk AS MATERIALIZED (
-         |  SELECT doc_id, lang, token FROM tk0 WHERE len(token) >= 1),
-         |voc AS MATERIALIZED (
-         |  SELECT token FROM (
-         |    SELECT token, count(*) AS c FROM tk GROUP BY 1
-         |    ORDER BY c DESC, token LIMIT $NbVocab)),
-         |pres AS MATERIALIZED (
-         |  SELECT DISTINCT doc_id, lang, token FROM tk JOIN voc USING (token)),
-         |aa AS (SELECT lang, token, CAST(count(*) AS BIGINT) AS a
-         |       FROM pres GROUP BY 1, 2),
-         |ct AS (SELECT lang, CAST(count(*) AS BIGINT) AS nc FROM documents
-         |       WHERE text IS NOT NULL AND lang IS NOT NULL GROUP BY 1),
-         |nt AS (SELECT token, CAST(count(*) AS BIGINT) AS ntk
-         |       FROM pres GROUP BY 1),
-         |nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents
-         |       WHERE text IS NOT NULL AND lang IS NOT NULL),
-         |grid AS (
-         |  SELECT ct.lang, v.token, ct.nc,
-         |         coalesce(aa.a, 0) AS a, coalesce(nt.ntk, 0) AS ntk, nn.n
-         |  FROM ct CROSS JOIN voc v
-         |  LEFT JOIN aa ON aa.lang = ct.lang AND aa.token = v.token
-         |  LEFT JOIN nt ON nt.token = v.token, nn),
-         |sc AS (
-         |  SELECT lang, token, a,
-         |    CAST((CAST(round(log10((2 * a + 1) *
-         |            (2 * (n - nc - (ntk - a)) + 1)), 6) AS DECIMAL(28,6)) -
-         |          CAST(round(log10((2 * (nc - a) + 1) *
-         |            (2 * (ntk - a) + 1)), 6) AS DECIMAL(28,6)))
-         |         * 1000000 AS BIGINT) AS score_micro
-         |  FROM grid),
-         |rk AS (
-         |  SELECT lang, token, a, score_micro,
-         |         CAST(row_number() OVER (PARTITION BY lang
-         |           ORDER BY score_micro DESC, token) AS BIGINT) AS rank
-         |  FROM sc)
-         |SELECT lang, token, a, score_micro, rank FROM rk
-         |WHERE rank <= 10 ORDER BY lang, rank""".stripMargin,
-    // The whole CV harness replayed grouped by fold: per-fold vocab
-    // truncation (row_number ≤ N inside the fold), per-fold model,
-    // priors, and MAP argmax.
-    "classifier_nb_cv" ->
-      s"""WITH g AS (SELECT unnest(generate_series(0, 4)) AS f),
-         |tr AS MATERIALIZED (
-         |  SELECT g.f, d.lang, d.text FROM documents d, g
-         |  WHERE d.doc_id % 5 <> g.f
-         |    AND d.text IS NOT NULL AND d.lang IS NOT NULL),
-         |tk0 AS (SELECT f, lang, unnest(string_split(text, ' ')) AS token FROM tr),
-         |tk AS MATERIALIZED (SELECT f, lang, token FROM tk0 WHERE len(token) >= 1),
-         |voc AS MATERIALIZED (
-         |  SELECT f, token FROM (
-         |    SELECT f, token,
-         |           row_number() OVER (PARTITION BY f
-         |             ORDER BY count(*) DESC, token) AS rn
-         |    FROM tk GROUP BY f, token)
-         |  WHERE rn <= $NbVocab),
-         |vn AS (SELECT f, count(*) AS v FROM voc GROUP BY f),
-         |ct AS MATERIALIZED (
-         |  SELECT tk.f, tk.lang, tk.token, count(*) AS cnt
-         |  FROM tk JOIN voc ON voc.f = tk.f AND voc.token = tk.token
-         |  GROUP BY 1, 2, 3),
-         |cls AS (SELECT DISTINCT f, lang FROM tk),
-         |grid AS MATERIALIZED (
-         |  SELECT c.f, c.lang, v.token, coalesce(ct.cnt, 0) AS cnt
-         |  FROM cls c JOIN voc v ON v.f = c.f
-         |  LEFT JOIN ct ON ct.f = c.f AND ct.lang = c.lang AND ct.token = v.token),
-         |tt AS (SELECT f, lang, sum(cnt) AS tot FROM grid GROUP BY 1, 2),
-         |model AS MATERIALIZED (
-         |  SELECT gr.f, gr.lang, gr.token,
-         |         CAST((CAST(round(log10(gr.cnt + 1), 6) AS DECIMAL(28,6)) -
-         |               CAST(round(log10(t.tot + vn.v), 6) AS DECIMAL(28,6)))
-         |              * 1000000 AS BIGINT) AS llm
-         |  FROM grid gr
-         |  JOIN tt t ON t.f = gr.f AND t.lang = gr.lang
-         |  JOIN vn ON vn.f = gr.f),
-         |ntr AS (SELECT f, count(*) AS n FROM tr GROUP BY f),
-         |pri AS MATERIALIZED (
-         |  SELECT tr.f, tr.lang,
-         |         CAST((CAST(round(log10(count(*)), 6) AS DECIMAL(28,6)) -
-         |               CAST(round(log10(ntr.n), 6) AS DECIMAL(28,6)))
-         |              * 1000000 AS BIGINT) AS pm
-         |  FROM tr JOIN ntr ON ntr.f = tr.f GROUP BY tr.f, tr.lang, ntr.n),
-         |te AS MATERIALIZED (
-         |  SELECT doc_id % 5 AS f, doc_id, lang, text FROM documents
-         |  WHERE text IS NOT NULL AND lang IS NOT NULL),
-         |tetk0 AS (SELECT f, doc_id, unnest(string_split(text, ' ')) AS token FROM te),
-         |tetk AS (SELECT f, doc_id, token FROM tetk0 WHERE len(token) >= 1),
-         |ll AS MATERIALIZED (
-         |  SELECT k.f, k.doc_id, m.lang AS cls, sum(m.llm) AS ll
-         |  FROM tetk k JOIN model m ON m.f = k.f AND m.token = k.token
-         |  GROUP BY 1, 2, 3),
-         |sc AS MATERIALIZED (
-         |  SELECT te.f, te.doc_id, te.lang AS actual, p.lang AS cls,
-         |         p.pm + coalesce(ll.ll, 0) AS score
-         |  FROM te JOIN pri p ON p.f = te.f
-         |  LEFT JOIN ll ON ll.f = te.f AND ll.doc_id = te.doc_id
-         |    AND ll.cls = p.lang),
-         |pred AS (
-         |  SELECT f, doc_id, actual, cls FROM sc
-         |  QUALIFY row_number() OVER (PARTITION BY f, doc_id
-         |    ORDER BY score DESC, cls) = 1)
-         |SELECT f AS fold, CAST(count(*) AS BIGINT) AS n,
-         |       CAST(sum(CASE WHEN actual = cls THEN 1 ELSE 0 END) AS BIGINT)
-         |         AS n_correct,
-         |       (1000000 * CAST(sum(CASE WHEN actual = cls THEN 1 ELSE 0 END)
-         |          AS BIGINT)) // CAST(count(*) AS BIGINT) AS acc_micro
-         |FROM pred GROUP BY f ORDER BY fold""".stripMargin,
-    "classifier_platt" -> {
-      val p = "(1.0 / (1.0 + exp(-(CAST(am AS DOUBLE) / 1000000.0 * " +
-        "(sci / 10000.0) + CAST(bm AS DOUBLE) / 1000000.0))))"
-      // every iteration CTE is MATERIALIZED and references its
-      // predecessor once — pl(k-1) feeding both the gradient and the
-      // update would otherwise inline 2^iters times
-      val iters = (1 to QualityClassifier.PlattIters).map { k =>
-        s"""pg$k AS MATERIALIZED (
-           |  SELECT max(am) AS am, max(bm) AS bm, max(n) AS n,
-           |         CAST(sum(floor(($p - tt) * (sci / 10000.0) * 1000000.0 + 0.5)) AS BIGINT) AS ga,
-           |         CAST(sum(floor(($p - tt) * 1000000.0 + 0.5)) AS BIGINT) AS gb
-           |  FROM scb CROSS JOIN pl${k - 1} CROSS JOIN pn),
-           |pl$k AS MATERIALIZED (
-           |  SELECT CAST(am - floor(4.0 * ga / n + 0.5) AS BIGINT) AS am,
-           |         CAST(bm - floor(4.0 * gb / n + 0.5) AS BIGINT) AS bm
-           |  FROM pg$k)""".stripMargin
-      }.mkString(",\n")
-      ClassifierFitCtes + s"""
-        |, scored AS MATERIALIZED (
-        |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-        |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-        |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-        |  FROM f2 CROSS JOIN w${QualityClassifier.Iters}),
-        |sc AS MATERIALIZED (
-        |  SELECT round(p, 4) AS score, CAST(y AS BIGINT) AS y FROM scored),
-        |pn AS MATERIALIZED (
-        |  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(y) AS BIGINT) AS np,
-        |         CAST(((sum(y) + 1) * 1000000) // (sum(y) + 2) AS BIGINT) AS tp,
-        |         CAST(1000000 // (count(*) - sum(y) + 2) AS BIGINT) AS tn
-        |  FROM sc),
-        |scb AS MATERIALIZED (
-        |  SELECT CAST(floor(score * 10000 + 0.5) AS BIGINT) AS sci,
-        |         CAST(CASE WHEN y = 1 THEN pn.tp ELSE pn.tn END AS DOUBLE)
-        |           / 1000000.0 AS tt
-        |  FROM sc CROSS JOIN pn),
-        |pl0 AS (SELECT CAST(0 AS BIGINT) AS am, CAST(0 AS BIGINT) AS bm),
-        |$iters
-        |SELECT pn.n, pn.np AS n_pos, pn.tp AS t_pos_micro,
-        |       pn.tn AS t_neg_micro, f.am AS a_micro, f.bm AS b_micro
-        |FROM pn CROSS JOIN pl${QualityClassifier.PlattIters} f""".stripMargin
-    },
-    // PAV minimax replay on the bin grid: prefix sums, O(B²) interval
-    // rates as integral micros, then max-of-min per bin.
-    "classifier_isotonic" -> (ClassifierFitCtes + s"""
-      |, scored AS (
-      |  SELECT f2.doc_id, f2.y, 1.0 / (1.0 + exp(-(x1 * (w1m / 1000000.0) +
-      |    x2 * (w2m / 1000000.0) + x3 * (w3m / 1000000.0) +
-      |    x4 * (w4m / 1000000.0) + bm / 1000000.0))) AS p
-      |  FROM f2 CROSS JOIN w${QualityClassifier.Iters}),
-      |sc AS (SELECT round(p, 4) AS score, CAST(y AS BIGINT) AS y FROM scored),
-      |b AS (SELECT CAST(least(floor(score * 20), 19) AS INT) AS bin, y FROM sc),
-      |pb AS (
-      |  SELECT bin, CAST(count(*) AS BIGINT) AS n,
-      |         CAST(sum(y) AS BIGINT) AS n_pos
-      |  FROM b GROUP BY 1),
-      |pre AS (
-      |  SELECT bin, n, n_pos,
-      |         CAST(sum(n) OVER (ORDER BY bin) AS BIGINT) AS cc,
-      |         CAST(sum(n_pos) OVER (ORDER BY bin) AS BIGINT) AS cp
-      |  FROM pb),
-      |lo AS (SELECT bin AS i, cc - n AS cc0, cp - n_pos AS cp0 FROM pre),
-      |hi AS (SELECT bin AS j, cc AS ccj, cp AS cpj FROM pre),
-      |pairs AS (
-      |  SELECT i, j, (1000000 * (cpj - cp0)) // (ccj - cc0) AS avg_micro
-      |  FROM lo JOIN hi ON i <= j),
-      |ks AS (SELECT bin AS k FROM pb),
-      |m1 AS (SELECT k, i, min(avg_micro) AS m1
-      |       FROM pairs JOIN ks ON i <= k AND k <= j GROUP BY 1, 2),
-      |iso AS (SELECT k, CAST(max(m1) AS BIGINT) AS iso_micro FROM m1 GROUP BY 1)
-      |SELECT pb.bin, pb.n, pb.n_pos,
-      |       (1000000 * pb.n_pos) // pb.n AS rate_micro,
-      |       iso.iso_micro
-      |FROM pb JOIN iso ON iso.k = pb.bin ORDER BY bin""".stripMargin),
-    // The DP noise CASE is generated from the SAME precomputed integer
-    // thresholds the Spark expression uses — one source of truth, no
-    // transcendental at query time on either engine.
-    "privacy_dp_counts" -> {
-      val u16 =
-        """((strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 4096 +
-          | (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) * 256 +
-          | (strpos('0123456789abcdef', substr(h, 3, 1)) - 1) * 16 +
-          |  strpos('0123456789abcdef', substr(h, 4, 1)) - 1)""".stripMargin
-      s"""WITH g AS (
-         |  SELECT lang, source, CAST(count(*) AS BIGINT) AS n
-         |  FROM documents GROUP BY 1, 2),
-         |gh AS (
-         |  SELECT lang, source, n,
-         |         md5('dp' || chr(31) ||
-         |             coalesce(CAST(lang AS VARCHAR), chr(0)) || chr(31) ||
-         |             coalesce(CAST(source AS VARCHAR), chr(0))) AS h
-         |  FROM g),
-         |u AS (
-         |  SELECT lang, source, n, CAST($u16 AS BIGINT) AS u16 FROM gh),
-         |z AS (
-         |  SELECT lang, source, n, u16,
-         |         CAST(${DifferentialPrivacy.noiseCaseSql("u16")} AS BIGINT)
-         |           AS noise
-         |  FROM u)
-         |SELECT lang, source, n, u16, noise,
-         |       greatest(n + noise, 0) AS noisy_n,
-         |       ${DifferentialPrivacy.Eps} AS eps
-         |FROM z ORDER BY lang, source""".stripMargin
-    },
-    // PDF census re-derived arithmetically: the builder makes
-    // 1 + (first-char codepoint % 3) pages from 20-char slices, so
-    // objects = 2 + 2p (+1 free), /Size = 3 + 2p, stream bytes = the
-    // UTF-8 byte lengths of the slices (DuckDB strlen = bytes).
-    "multimodal_pdf_meta" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id, 1 + ascii(substr(text, 1, 1)) % 3 AS np, text
-        |  FROM documents WHERE length(text) >= 1)
-        |SELECT id, '1.4' AS version,
-        |       CAST(2 + 2 * np AS INT) AS n_objects,
-        |       CAST(1 AS INT) AS n_free,
-        |       CAST(3 + 2 * np AS INT) AS size,
-        |       CAST(np AS INT) AS n_pages,
-        |       CAST(list_sum(list_transform(generate_series(0, np - 1),
-        |         i -> strlen(substr(text, 1 + 20 * CAST(i AS INT), 20))))
-        |         AS BIGINT) AS stream_bytes,
-        |       false AS encrypted, true AS has_eof
-        |FROM src ORDER BY id""".stripMargin,
-    // Contiguous slices concatenate back to one substr — the whole
-    // round trip in a single expression.
-    "multimodal_pdf_text" ->
-      """WITH src AS (
-        |  SELECT doc_id AS id, 1 + ascii(substr(text, 1, 1)) % 3 AS np, text
-        |  FROM documents WHERE length(text) >= 1)
-        |SELECT id, CAST(np AS INT) AS n_streams,
-        |       substr(text, 1, 20 * np) AS text_out
-        |FROM src ORDER BY id""".stripMargin,
-    "tpch_q6_forecast" ->
-      """SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(18,6)))
-        |         AS DOUBLE) AS revenue,
-        |       count(*) AS n_rows
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-        |  AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount BETWEEN 0.02 AND 0.04
-        |  AND l_quantity < 24""".stripMargin,
-    // HLL registers rebuilt nibble by nibble (bucket = first two md5
-    // nibbles, rho = 1 + leading zero bits of the next 48), then the
-    // identical alpha literal and exact power-of-two harmonic sum.
-    "sketch_hll_distinct" ->
-      """WITH keys AS (
-        |  SELECT 'user_id' AS key_col, CAST(user_id AS VARCHAR) AS k FROM events
-        |  UNION ALL
-        |  SELECT 'event_id', CAST(event_id AS VARCHAR) FROM events),
-        |parts AS (
-        |  SELECT key_col, k,
-        |         (strpos('0123456789abcdef', substr(md5(k), 1, 1)) - 1) * 16 +
-        |          strpos('0123456789abcdef', substr(md5(k), 2, 1)) - 1 AS bucket,
-        |         substr(md5(k), 3, 12) AS w
-        |  FROM keys),
-        |rhos AS (
-        |  SELECT key_col, bucket,
-        |         length(regexp_extract(w, '^0*')) AS zn,
-        |         strpos('0123456789abcdef',
-        |           substr(w || 'f', length(regexp_extract(w, '^0*')) + 1, 1)) - 1
-        |           AS fnz
-        |  FROM parts),
-        |regs AS (
-        |  SELECT key_col, bucket,
-        |         max(CASE WHEN zn = 12 THEN 49
-        |             ELSE zn * 4 + CASE WHEN fnz >= 8 THEN 0 WHEN fnz >= 4 THEN 1
-        |                                WHEN fnz >= 2 THEN 2 ELSE 3 END + 1 END)
-        |           AS rho
-        |  FROM rhos GROUP BY 1, 2),
-        |summary AS (
-        |  SELECT key_col, sum(pow(2.0, -rho)) AS sum_inv,
-        |         CAST(count(*) AS BIGINT) AS n_hit
-        |  FROM regs GROUP BY 1),
-        |exact AS (
-        |  SELECT key_col, CAST(count(DISTINCT k) AS BIGINT) AS exact_distinct
-        |  FROM keys GROUP BY 1)
-        |SELECT s.key_col, CAST(256 AS INTEGER) AS m,
-        |       CAST(256 - n_hit AS BIGINT) AS v_zero,
-        |       (0.7213 / (1.0 + 1.079 / 256.0)) * 256.0 * 256.0 /
-        |         (sum_inv + CAST(256 - n_hit AS DOUBLE)) AS est_distinct,
-        |       e.exact_distinct
-        |FROM summary s JOIN exact e USING (key_col)
-        |ORDER BY key_col""".stripMargin,
-    // SCD2 rebuilt from the same three cumulative snapshots: zipped
-    // unnest fans versions out, lag marks change points, lead closes
-    // intervals — tier strings compare directly (no fp needed).
-    "snapshot_scd2" ->
-      """WITH counts AS (
-        |  SELECT o_custkey,
-        |    sum(CASE WHEN o_orderdate < TIMESTAMP '1997-01-01' THEN 1 ELSE 0 END) AS n0,
-        |    sum(CASE WHEN o_orderdate < TIMESTAMP '1999-01-01' THEN 1 ELSE 0 END) AS n1,
-        |    sum(CASE WHEN o_orderdate < TIMESTAMP '2001-01-01' THEN 1 ELSE 0 END) AS n2
-        |  FROM orders GROUP BY 1),
-        |versioned AS (
-        |  SELECT o_custkey, CAST(ver AS BIGINT) AS version,
-        |         CASE WHEN n >= 8 THEN 'high' WHEN n >= 4 THEN 'mid'
-        |              ELSE 'low' END AS tier
-        |  FROM (SELECT o_custkey, unnest([1, 2, 3]) AS ver,
-        |               unnest([n0, n1, n2]) AS n FROM counts)
-        |  WHERE n > 0),
-        |marked AS (
-        |  SELECT o_custkey, version, tier,
-        |         CASE WHEN lag(tier) OVER w IS NULL
-        |                OR lag(tier) OVER w != tier THEN 1 ELSE 0 END AS chg
-        |  FROM versioned WINDOW w AS (PARTITION BY o_custkey ORDER BY version))
-        |SELECT o_custkey, tier, version AS valid_from,
-        |       lead(version) OVER w2 AS valid_to_excl,
-        |       lead(version) OVER w2 IS NULL AS is_current
-        |FROM marked WHERE chg = 1
-        |WINDOW w2 AS (PARTITION BY o_custkey ORDER BY version)
-        |ORDER BY o_custkey, valid_from""".stripMargin,
-    // The PIT lookup replayed: the same SCD2 CTEs as a `hist`
-    // relation, facts versioned by the same cut CASE, one left join
-    // with the interval residual.
-    "snapshot_scd2_pit" ->
-      """WITH counts AS (
-        |  SELECT o_custkey,
-        |    sum(CASE WHEN o_orderdate < TIMESTAMP '1997-01-01' THEN 1 ELSE 0 END) AS n0,
-        |    sum(CASE WHEN o_orderdate < TIMESTAMP '1999-01-01' THEN 1 ELSE 0 END) AS n1,
-        |    sum(CASE WHEN o_orderdate < TIMESTAMP '2001-01-01' THEN 1 ELSE 0 END) AS n2
-        |  FROM orders GROUP BY 1),
-        |versioned AS (
-        |  SELECT o_custkey, CAST(ver AS BIGINT) AS version,
-        |         CASE WHEN n >= 8 THEN 'high' WHEN n >= 4 THEN 'mid'
-        |              ELSE 'low' END AS tier
-        |  FROM (SELECT o_custkey, unnest([1, 2, 3]) AS ver,
-        |               unnest([n0, n1, n2]) AS n FROM counts)
-        |  WHERE n > 0),
-        |marked AS (
-        |  SELECT o_custkey, version, tier,
-        |         CASE WHEN lag(tier) OVER w IS NULL
-        |                OR lag(tier) OVER w != tier THEN 1 ELSE 0 END AS chg
-        |  FROM versioned WINDOW w AS (PARTITION BY o_custkey ORDER BY version)),
-        |hist AS (
-        |  SELECT o_custkey, tier, version AS valid_from,
-        |         lead(version) OVER w2 AS valid_to_excl
-        |  FROM marked WHERE chg = 1
-        |  WINDOW w2 AS (PARTITION BY o_custkey ORDER BY version)),
-        |facts AS (
-        |  SELECT o_orderkey, o_custkey,
-        |         CAST(CASE WHEN o_orderdate < TIMESTAMP '1997-01-01' THEN 1
-        |              WHEN o_orderdate < TIMESTAMP '1999-01-01' THEN 2
-        |              WHEN o_orderdate < TIMESTAMP '2001-01-01' THEN 3
-        |              ELSE 4 END AS BIGINT) AS version
-        |  FROM orders)
-        |SELECT f.o_orderkey, f.o_custkey, f.version,
-        |       h.tier, h.valid_from, h.valid_to_excl
-        |FROM facts f LEFT JOIN hist h ON h.o_custkey = f.o_custkey
-        |  AND f.version >= h.valid_from
-        |  AND (h.valid_to_excl IS NULL OR f.version < h.valid_to_excl)
-        |ORDER BY f.o_orderkey""".stripMargin,
-    "events_hilbert" -> {
-      val base =
-        """WITH h8 AS (
-          |  SELECT event_id, user_id % 256 AS x,
-          |         (date_part('hour', CAST(ts AS TIMESTAMP)) * 60 +
-          |          date_part('minute', CAST(ts AS TIMESTAMP))) // 6 AS y,
-          |         CAST(0 AS BIGINT) AS d
-          |  FROM events)""".stripMargin
-      val steps = (7 to 0 by -1).map { i =>
-        val s = 1L << i
-        s"""h$i AS (
-           |  SELECT event_id,
-           |    CASE WHEN ry = 0 THEN CASE WHEN rx = 1 THEN ${s - 1} - y ELSE y END ELSE x END AS x,
-           |    CASE WHEN ry = 0 THEN CASE WHEN rx = 1 THEN ${s - 1} - x ELSE x END ELSE y END AS y,
-           |    d + ${s * s} * xor(3 * rx, ry) AS d
-           |  FROM (SELECT event_id, x, y, d,
-           |               CASE WHEN (x & $s) > 0 THEN 1 ELSE 0 END AS rx,
-           |               CASE WHEN (y & $s) > 0 THEN 1 ELSE 0 END AS ry
-           |        FROM h${i + 1}))""".stripMargin
-      }.mkString(",\n")
-      s"$base,\n$steps\n" +
-        "SELECT event_id, CAST(d AS BIGINT) AS hkey FROM h0 ORDER BY event_id"
-    }
-  )
+  /** Renders every row's oracle on first use. */
+  lazy val oracleSql: Map[String, String] =
+    Registry.all.map(q => q.name -> q.oracle).toMap
 }

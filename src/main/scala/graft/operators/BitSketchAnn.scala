@@ -65,14 +65,7 @@ object BitSketchAnn {
           .cast("long").as("hamming"))
       .orderBy(col("hamming").asc, col("id").asc)
       .limit(candidates)
-    // Stage 3: broadcast the candidate list, stream the store, re-rank
-    // the fetched vectors exactly.
-    val qv = typedLit(query.toSeq)
-    emb.select(col(idCol).as("id"), col(vecCol).as("__vec"))
-      .join(broadcast(cand), "id")
-      .select(col("id"), col("hamming"),
-        round(GraftFunctions.knnCosineSimilarity(col("__vec"), qv), scale).as("score"))
-      .orderBy(col("score").desc_nulls_last, col("id").asc)
-      .limit(k)
+    // Stage 3: broadcast the candidates, re-rank them exactly.
+    VectorSearch.exactRerank(emb, idCol, vecCol, cand, query, k, scale)
   }
 }

@@ -42,7 +42,7 @@ import graft.functions.{GraftFunctions, TextHashKernels}
  * [[TextHashKernels.splitCodepoints]] / [[TextHashKernels.mergeOnce]],
  * so a merge list learned here reproduces exactly under the
  * `bpe_apply` expression (and under the oracle's fold semantics — see
- * the generated SQL in SparkEntry, which re-runs the whole training
+ * the generated SQL in `TokenizerRows`, which re-runs the whole training
  * loop as unrolled CTEs and the application as a recursive CTE).
  *
  * Deviation from Sennrich et al.: no explicit end-of-word marker

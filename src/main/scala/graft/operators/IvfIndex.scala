@@ -142,16 +142,10 @@ object IvfIndex {
       searchTopSize: Int,
       tombstones: DataFrame,
       idCol: String,
-      scoreScale: Option[Int] = None): DataFrame = {
-    require(searchTopSize > 0,
-      s"index_tree_search_top_size must be a positive integer, got $searchTopSize")
-    val top = model.rankClusters(queryVec, cfg.strategy).take(searchTopSize)
-    val pruned = assignedStore
-      .filter(col(ClusterCol).isin(top.toIndexedSeq.map(Integer.valueOf): _*))
-      .join(broadcast(tombstones.select(col(idCol))), Seq(idCol), "left_anti")
-    VectorSearch.bruteForce(pruned.drop(ClusterCol), cfg.copy(indexEnabled = true),
-      queryVec, k, Map.empty, scoreScale)
-  }
+      scoreScale: Option[Int] = None): DataFrame =
+    searchClusters(assignedStore, cfg, queryVec, k, searchTopSize, scoreScale)(
+      model.rankClusters(queryVec, cfg.strategy).take(searchTopSize),
+      _.join(broadcast(tombstones.select(col(idCol))), Seq(idCol), "left_anti"))
 
   /**
    * Compaction: rewrite the store as a NEW generation at `path`,
@@ -269,14 +263,9 @@ object IvfIndex {
       queryVec: Array[Float],
       k: Int,
       searchTopSize: Int,
-      scoreScale: Option[Int] = None): DataFrame = {
-    require(searchTopSize > 0,
-      s"index_tree_search_top_size must be a positive integer, got $searchTopSize")
-    val clusters = tree.candidateClusters(queryVec, cfg.strategy, searchTopSize)
-    val pruned = assignedStore.filter(col(ClusterCol).isin(clusters.toIndexedSeq.map(Integer.valueOf): _*))
-    VectorSearch.bruteForce(pruned.drop(ClusterCol), cfg.copy(indexEnabled = true),
-      queryVec, k, Map.empty, scoreScale)
-  }
+      scoreScale: Option[Int] = None): DataFrame =
+    searchClusters(assignedStore, cfg, queryVec, k, searchTopSize, scoreScale)(
+      tree.candidateClusters(queryVec, cfg.strategy, searchTopSize))
 
   /**
    * ANN search: centroid ranking → cluster pruning → brute-force tail.
@@ -293,13 +282,28 @@ object IvfIndex {
       queryVec: Array[Float],
       k: Int,
       searchTopSize: Int,
-      scoreScale: Option[Int] = None): DataFrame = {
+      scoreScale: Option[Int] = None): DataFrame =
+    searchClusters(assignedStore, cfg, queryVec, k, searchTopSize, scoreScale)(
+      model.rankClusters(queryVec, cfg.strategy).take(searchTopSize))
+
+  /** The tail every search shares: check `searchTopSize`, then compute
+    * `clusters`, keep only their rows, apply `live` (the tombstone
+    * anti-join, or nothing) and brute-force the survivors. */
+  private def searchClusters(
+      assignedStore: DataFrame,
+      cfg: StoreConfig,
+      queryVec: Array[Float],
+      k: Int,
+      searchTopSize: Int,
+      scoreScale: Option[Int])(
+      clusters: => Array[Int],
+      live: DataFrame => DataFrame = identity): DataFrame = {
     require(searchTopSize > 0,
       s"index_tree_search_top_size must be a positive integer, got $searchTopSize") // app.py:373-375
-    val top = model.rankClusters(queryVec, cfg.strategy).take(searchTopSize)
     // isin over a small literal list → pushed down; on a store written
     // with writePartitioned this prunes whole Parquet partitions.
-    val pruned = assignedStore.filter(col(ClusterCol).isin(top.toIndexedSeq.map(Integer.valueOf): _*))
+    val pruned = live(assignedStore.filter(
+      col(ClusterCol).isin(clusters.toIndexedSeq.map(Integer.valueOf): _*)))
     VectorSearch.bruteForce(pruned.drop(ClusterCol), cfg.copy(indexEnabled = true),
       queryVec, k, Map.empty, scoreScale)
   }

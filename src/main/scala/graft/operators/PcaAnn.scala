@@ -70,13 +70,7 @@ object PcaAnn {
       .orderBy(col("__pscore").desc_nulls_last, col("id").asc)
       .limit(candidates)
       .select("id")
-    // Stage 3: broadcast candidate ids, stream the store, exact re-rank.
-    val qv = typedLit(query.toSeq)
-    emb.select(col(idCol).as("id"), col(vecCol).as("__vec"))
-      .join(broadcast(cand), "id")
-      .select(col("id"),
-        round(GraftFunctions.knnCosineSimilarity(col("__vec"), qv), scale).as("score"))
-      .orderBy(col("score").desc_nulls_last, col("id").asc)
-      .limit(k)
+    // Stage 3: broadcast the candidates, re-rank them exactly.
+    VectorSearch.exactRerank(emb, idCol, vecCol, cand, query, k, scale)
   }
 }

@@ -72,23 +72,29 @@ object TokenizerCompare {
     // The three output rows are projections of this ONE bounded row;
     // checkpointing it keeps the union from deriving the whole
     // segmenter subtree once per tokenizer (3× plan + 3× execution).
+    // Empty corpus: every count is 0 (not the NULL of an empty sum) and
+    // both ratios are NULL, divided by a NULL-if-zero count so ANSI
+    // division never sees a zero.
+    def total(c: Column) = coalesce(sum(c), lit(0L))
     val one = wc.join(broadcast(seg), "word")
-      .agg(sum(col("__wc")).as("nw"),
-        sum(octet_length(col("word")).cast("long") * col("__wc")).as("nb"),
-        sum(col("__bpe_n") * col("__wc")).as("t_bpe"),
-        sum(col("__ug_n") * col("__wc")).as("t_ug"),
-        sum(when(col("__ug_fb"), col("__wc")).otherwise(0L)).as("f_ug"),
-        sum(col("__wp_n") * col("__wc")).as("t_wp"),
-        sum(when(col("__wp_fb"), col("__wc")).otherwise(0L)).as("f_wp"))
+      .agg(total(col("__wc")).as("nw"),
+        total(octet_length(col("word")).cast("long") * col("__wc")).as("nb"),
+        total(col("__bpe_n") * col("__wc")).as("t_bpe"),
+        total(col("__ug_n") * col("__wc")).as("t_ug"),
+        total(when(col("__ug_fb"), col("__wc")).otherwise(0L)).as("f_ug"),
+        total(col("__wp_n") * col("__wc")).as("t_wp"),
+        total(when(col("__wp_fb"), col("__wc")).otherwise(0L)).as("f_wp"))
       .localCheckpoint(true)
+    def ratio(num: String, den: String) =
+      round(col(num).cast("double") / nullif(col(den), lit(0L)), 6)
     def row(name: String, t: String, f: Column) =
       one.select(lit(name).as("tokenizer"),
         col("nw").as("n_words"),
         col(t).as("n_tokens"),
         col("nb").as("n_text_bytes"),
         f.as("n_fallback"),
-        round(col(t).cast("double") / col("nw"), 6).as("fertility"),
-        round(col("nb").cast("double") / col(t), 6).as("bytes_per_token"))
+        ratio(t, "nw").as("fertility"),
+        ratio("nb", t).as("bytes_per_token"))
     row("bpe", "t_bpe", lit(0L))
       .unionAll(row("unigram", "t_ug", col("f_ug")))
       .unionAll(row("wordpiece", "t_wp", col("f_wp")))

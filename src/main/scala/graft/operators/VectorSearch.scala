@@ -140,6 +140,23 @@ object VectorSearch {
   /** Canonical result column names (app.py:217-222). */
   val OutputColumns: Seq[String] = Seq("id", "title", "vendor", "description", "score")
 
+  /** Stage 3 of the pre-filter ANNs: broadcast the candidates (`id`
+    * plus any extra columns), stream the store, re-rank the fetched
+    * vectors by exact rounded cosine. Output: (id, the candidates'
+    * extra columns, score) ordered by (score DESC, id), k rows. */
+  private[operators] def exactRerank(
+      emb: DataFrame, idCol: String, vecCol: String, cand: DataFrame,
+      query: Array[Float], k: Int, scale: Int): DataFrame = {
+    val extras = cand.columns.toSeq.filterNot(_ == "id").map(col)
+    val qv = typedLit(query.toSeq)
+    emb.select(col(idCol).as("id"), col(vecCol).as("__vec"))
+      .join(broadcast(cand), "id")
+      .select(col("id") +: extras :+
+        round(GraftFunctions.knnCosineSimilarity(col("__vec"), qv), scale).as("score"): _*)
+      .orderBy(col("score").desc_nulls_last, col("id").asc)
+      .limit(k)
+  }
+
   /**
    * @param store     DataFrame with the configured columns
    * @param queryVec  the query vector (`$TargetEmbedding`, app.py:198-210)

@@ -1,18 +1,17 @@
 package graft
 
+import graft.queries.{Fixtures, QuerySpec, Registry}
 import org.scalatest.funsuite.AnyFunSuite
 
 /**
- * Driver-contract lints over [[SparkEntry]] — no SparkSession needed.
+ * Driver-contract checks over [[SparkEntry]] — no SparkSession needed.
  *
- * The duplicate-key lint exists because Scala map literals keep the
- * LAST binding for a repeated key: in r14 a new daily CUSUM card
- * reused the `events_cusum` name and silently shadowed the r13 hourly
- * row in BOTH maps — the operator stayed in the build, green in its
- * unit suite, and simply vanished from driver coverage. A runtime
- * check cannot see this (the Map has already collapsed), so the lint
- * reads the source: every row key must appear exactly twice, once in
- * the queries literal and once in the oracle literal.
+ * The duplicate-name guard exists because a keyed map keeps the LAST
+ * binding for a repeated key: in r14 a new daily CUSUM card reused the
+ * `events_cusum` name and silently shadowed the r13 hourly row — the
+ * operator stayed in the build, green in its unit suite, and simply
+ * vanished from driver coverage. The registry refuses a repeated name
+ * before any map is built, so the check runs on the live rows.
  */
 class SparkEntryContractSpec extends AnyFunSuite {
 
@@ -24,17 +23,17 @@ class SparkEntryContractSpec extends AnyFunSuite {
   }
 
   test("no silently-shadowed duplicate map keys in the SparkEntry source") {
-    val path = java.nio.file.Paths.get("src/main/scala/graft/SparkEntry.scala")
-    assume(java.nio.file.Files.exists(path), "source tree not present")
-    val src = new String(java.nio.file.Files.readAllBytes(path), "UTF-8")
-    val names = """(?m)^    "([a-z0-9_]+)" ->""".r
-      .findAllMatchIn(src).map(_.group(1)).toSeq
-    // sanity: the regex sees the same population the maps carry
-    assert(names.distinct.size === SparkEntry.queries.size,
-      "row-key regex out of sync with the queries map")
-    val bad = names.groupBy(identity).filter(_._2.size != 2)
-    assert(bad.isEmpty,
-      s"row keys not appearing exactly twice (query + oracle): ${bad.keys.toSeq.sorted}")
+    // an oracle that throws if rendered: building a registry must not
+    def row(name: String) = QuerySpec(name, (s, _) => s.range(1).toDF(),
+      throw new AssertionError(s"oracle of $name rendered"))
+    val e = intercept[IllegalArgumentException](
+      Registry.distinct(Seq(row("a_row"), row("events_cusum"), row("b_row"),
+        row("events_cusum"))))
+    assert(e.getMessage.contains("events_cusum"), e.getMessage)
+    assert(!e.getMessage.contains("a_row"), e.getMessage)
+    val names = Registry.all.map(_.name)
+    assert(names.size === 434)
+    assert(names.distinct.size === 434)
   }
 
   // The fixture memo, exercised with plain values (no SparkSession);
@@ -49,7 +48,7 @@ class SparkEntryContractSpec extends AnyFunSuite {
     try {
       val calls = (1 to 8).map(_ => pool.submit(() => {
         go.await()
-        SparkEntry.memo("spec_once", dir) {
+        Fixtures.memo("spec_once", dir) {
           Thread.sleep(50)
           builds.incrementAndGet()
         }
@@ -66,9 +65,9 @@ class SparkEntryContractSpec extends AnyFunSuite {
     // a chain deep enough that some inner key lands in the same hash
     // bin as an outer key whose build is still running
     def level(i: Int): Int =
-      if (i == 0) 0 else SparkEntry.memo(s"spec_nest_$i", dir)(level(i - 1) + 1)
+      if (i == 0) 0 else Fixtures.memo(s"spec_nest_$i", dir)(level(i - 1) + 1)
     assert(level(128) === 128)
-    assert(SparkEntry.memo("spec_nest_1", dir)(-1) === 1)
+    assert(Fixtures.memo("spec_nest_1", dir)(-1) === 1)
   }
 
   test("memo: a build that throws is not kept; the next call retries") {
@@ -79,9 +78,9 @@ class SparkEntryContractSpec extends AnyFunSuite {
       if (attempts == 1) throw new IllegalStateException("first build fails")
       "built"
     }
-    intercept[IllegalStateException](SparkEntry.memo("spec_retry", dir)(build()))
-    assert(SparkEntry.memo("spec_retry", dir)(build()) === "built")
-    assert(SparkEntry.memo("spec_retry", dir)(build()) === "built")
+    intercept[IllegalStateException](Fixtures.memo("spec_retry", dir)(build()))
+    assert(Fixtures.memo("spec_retry", dir)(build()) === "built")
+    assert(Fixtures.memo("spec_retry", dir)(build()) === "built")
     assert(attempts === 2)
   }
 

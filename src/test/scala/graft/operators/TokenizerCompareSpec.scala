@@ -45,4 +45,21 @@ class TokenizerCompareSpec extends SparkFunSuite {
     // 'aa' is one piece under all three schemes after training
     assert(byName("bpe").getLong(2) <= 6L + 19L) // never worse than chars
   }
+
+  test("card: an empty corpus gives 0 counts and NULL ratios, no throw") {
+    val train = Seq((1L, "aa aa b aa"), (2L, "ab b")).toDF("doc_id", "text")
+    val empty = train.limit(0)
+    val card = TokenizerCompare.card(
+      empty, "text",
+      Bpe.train(train, "text"),
+      WordPiece.train(train, "text"),
+      UnigramLm.fitVocab(train, "text"))
+      .orderBy("tokenizer").collect()
+    assert(card.map(_.getString(0)).toSeq === Seq("bpe", "unigram", "wordpiece"))
+    card.foreach { r =>
+      // n_words, n_tokens, n_text_bytes, n_fallback
+      (1 to 4).foreach(i => assert(!r.isNullAt(i) && r.getLong(i) === 0L, s"$r col $i"))
+      assert(r.isNullAt(5) && r.isNullAt(6), s"ratios not NULL: $r")
+    }
+  }
 }
