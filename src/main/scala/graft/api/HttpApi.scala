@@ -257,7 +257,10 @@ final class SearchHttpServer(
         val obj = data.asInstanceOf[Map[String, Any]]
         val embedding: Option[Seq[Float]] = obj.get("embedding") match {
           case None => None
-          case Some(xs: Vector[_]) if xs.forall(_.isInstanceOf[java.lang.Double]) =>
+          // a number beyond float32 range would silently become Infinity
+          case Some(xs: Vector[_]) if xs.forall {
+              case d: java.lang.Double => !d.floatValue().isInfinite
+              case _ => false } =>
             Some(xs.map(_.asInstanceOf[java.lang.Double].floatValue()))
           case Some(_) => return bad("embedding must be a list of floats")
         }
@@ -291,9 +294,11 @@ final class SearchHttpServer(
 
   private def renderResponse(resp: SearchResponse): String = {
     def jstr(s: String): String = if (s == null) "null" else quote(s)
+    // JSON has no NaN or Infinity: a non-finite score renders as null
+    def jnum(d: Option[Double]): String = d.filter(_.isFinite).map(_.toString).getOrElse("null")
     val hits = resp.results.map { h =>
       s"""{"id": ${jstr(h.id)}, "title": ${jstr(h.title)}, "vendor": ${jstr(h.vendor)}, """ +
-        s""""description": ${jstr(h.description)}, "score": ${h.score.map(_.toString).getOrElse("null")}}"""
+        s""""description": ${jstr(h.description)}, "score": ${jnum(h.score)}}"""
     }.mkString("[", ", ", "]")
     s"""{"results": $hits, "count": ${resp.count}, "search_time_ms": ${resp.searchTimeMs}}"""
   }

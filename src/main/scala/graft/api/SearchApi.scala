@@ -1,11 +1,7 @@
 package graft.api
 
-import graft.operators.{StoreConfig, VectorSearch}
-import org.apache.spark.sql.functions.col
+import graft.operators.{PackedStore, StoreConfig}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.storage.StorageLevel
-
-import scala.util.Try
 
 /**
  * The request/response surface of the engine — the Spark mirror of the
@@ -141,14 +137,13 @@ private[api] object JsonUtil {
  *
  * The validation matrix (SURVEY.md §2.1) is applied in the reference's
  * order (app.py:318-375); query execution delegates to the operator
- * layer ([[VectorSearch]]), which at 100 TB means the only driver-side
- * materialization is the k result rows.
+ * layer ([[PackedStore]]), which at 100 TB means the only driver-side
+ * materialization is k result rows per task.
  *
  * The store is served resident, the way the reference's YDB table stays
- * on its server: at construction each table is projected to the columns
- * a request reads and persisted `MEMORY_ONLY`, and every request runs on
- * those projections. The first request fills the cache; a partition that
- * does not fit is recomputed from the source on each request. What stays
+ * on its server: the first request builds the reference's one table
+ * from `embeddings ⋈ metadata` and keeps it packed in memory, and every
+ * request (filtered or not) is one Spark job over it. What stays
  * resident is decoded input, not results: every request still scores
  * every vector. The service serves the snapshot its DataFrames pinned;
  * [[close]] releases the cache.
@@ -162,26 +157,11 @@ final class SearchService(
     embedder: Option[Embedder] = None,
     scoreScale: Option[Int] = None) {
 
-  /** (join key, id, embedding) of `embeddings`, resident. */
-  private[graft] val residentEmbeddings: DataFrame =
-    resident(embeddings, joinKey._1, cfg.idCol, cfg.embeddingCol)
-  /** (join key, id, title, vendor, description) of `metadata`, resident. */
-  private[graft] val residentMetadata: DataFrame =
-    resident(metadata, joinKey._2, cfg.idCol, cfg.titleCol, cfg.vendorCol, cfg.descriptionCol)
+  private[graft] val store = new PackedStore(embeddings, metadata, joinKey, cfg)
 
-  /** The columns of `cols` that `df` has, once each, persisted. A column
-    * the table lacks is left for the request to report, as the raw
-    * table would. Persisting is lazy: the first action fills it. */
-  private def resident(df: DataFrame, cols: String*): DataFrame =
-    df.select(cols.distinct.filter(c => Try(df.col(c)).isSuccess).map(col): _*)
-      .persist(StorageLevel.MEMORY_ONLY)
-
-  /** Drop both projections from Spark's cache. A service over the same
-    * DataFrames shares them, and reads the source again afterwards. */
-  def close(): Unit = {
-    residentEmbeddings.unpersist()
-    residentMetadata.unpersist()
-  }
+  /** Drop the packed store from Spark's cache; later requests read the
+    * source again. */
+  def close(): Unit = store.close()
 
   /** Full `/search` semantics (app.py:281-390). */
   def search(req: SearchRequest): Either[ApiError, SearchResponse] = {
@@ -219,12 +199,12 @@ final class SearchService(
       filter: Map[String, String]): Either[ApiError, SearchResponse] = {
     try {
       // Timing mirrors the reference: wall clock around the whole execute
-      // (app.py:245-247) — building the plan, planning it and collecting.
+      // (app.py:245-247) — the store's build on the first request, then
+      // the search job.
       val t0 = System.nanoTime()
-      val rows = VectorSearch.searchWithMetadata(residentEmbeddings, residentMetadata,
-        joinKey, cfg, vec, k, filter, scoreScale).collect()
+      val rows = store.search(vec, k, filter, scoreScale)
       val ms = (System.nanoTime() - t0) / 1e6
-      val hits = rows.toSeq.map { r =>
+      val hits = rows.map { r =>
         SearchHit(
           id = r.getString(0),
           title = r.getString(1),

@@ -131,6 +131,111 @@ object VectorKernels {
     java.lang.Double.valueOf(s)
   }
 
+  // ------------------------------------------------ primitive-array metrics
+  //
+  // The same five metrics over a packed store ([[graft.operators.PackedStore]]):
+  // the stored vector is `a(off until off + n)` of a primitive block
+  // (float32, or float64 for `array<double>` stores), the query `b` a
+  // float32 array. The arithmetic is the ArrayData kernels' step for
+  // step (promote to double, one sequential pass), so the scores are
+  // bit-identical. A block holds no null elements: a vector with one is
+  // packed with n = -1, which like any other dimension mismatch
+  // (n != b.length) gives NULL.
+
+  def innerProduct(a: Array[Float], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(off + i).toDouble * b(i).toDouble; i += 1 }
+    java.lang.Double.valueOf(s)
+  }
+
+  def innerProduct(a: Array[Double], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += a(off + i) * b(i).toDouble; i += 1 }
+    java.lang.Double.valueOf(s)
+  }
+
+  def cosineSimilarity(a: Array[Float], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(off + i).toDouble
+      val y = b(i).toDouble
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) return null
+    java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+  }
+
+  def cosineSimilarity(a: Array[Double], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var dot = 0.0
+    var na = 0.0
+    var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val x = a(off + i)
+      val y = b(i).toDouble
+      dot += x * y
+      na += x * x
+      nb += y * y
+      i += 1
+    }
+    if (na == 0.0 || nb == 0.0) return null
+    java.lang.Double.valueOf(dot / (math.sqrt(na) * math.sqrt(nb)))
+  }
+
+  def cosineDistance(a: Array[Float], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    val s = cosineSimilarity(a, off, n, b)
+    if (s == null) null else java.lang.Double.valueOf(1.0 - s.doubleValue())
+  }
+
+  def cosineDistance(a: Array[Double], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    val s = cosineSimilarity(a, off, n, b)
+    if (s == null) null else java.lang.Double.valueOf(1.0 - s.doubleValue())
+  }
+
+  def euclideanDistance(a: Array[Float], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { val d = a(off + i).toDouble - b(i).toDouble; s += d * d; i += 1 }
+    java.lang.Double.valueOf(math.sqrt(s))
+  }
+
+  def euclideanDistance(a: Array[Double], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { val d = a(off + i) - b(i).toDouble; s += d * d; i += 1 }
+    java.lang.Double.valueOf(math.sqrt(s))
+  }
+
+  def manhattanDistance(a: Array[Float], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += math.abs(a(off + i).toDouble - b(i).toDouble); i += 1 }
+    java.lang.Double.valueOf(s)
+  }
+
+  def manhattanDistance(a: Array[Double], off: Int, n: Int, b: Array[Float]): java.lang.Double = {
+    if (n != b.length) return null
+    var s = 0.0
+    var i = 0
+    while (i < n) { s += math.abs(a(off + i) - b(i).toDouble); i += 1 }
+    java.lang.Double.valueOf(s)
+  }
+
   /** Sign-bit binary sketch: bit i of the result is set iff vec(i) >= 0,
     * over the first min(dim, 64) dimensions. One-bit-per-dimension
     * quantization — 64-dim float32 vectors (256 B) compress to a single

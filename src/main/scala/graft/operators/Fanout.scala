@@ -1,8 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
-  LocalTableScanExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec,
+  RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /**
  * Scale-adaptive fan-out for kernel-bound plans.
@@ -29,7 +31,8 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
  * physical plan is inspected: the root's static `outputPartitioning`
  * when it is known (global sort/limit ⇒ SinglePartition, any exchange
  * ⇒ its partition count), else the maximum leaf-scan split count
- * (driver-side file-index metadata, no job). Leaves whose layout can't
+ * (driver-side file-index metadata, no job; a persisted input counts
+ * as the plan it was cached from). Leaves whose layout can't
  * be proven narrow count as already-wide, keeping the no-op-at-scale
  * guarantee.
  *
@@ -40,22 +43,28 @@ import org.apache.spark.sql.execution.{FileSourceScanExec, RDDScanExec,
 object Fanout {
   def widen(df: DataFrame): DataFrame = {
     val cores = df.sparkSession.sparkContext.defaultParallelism
-    val plan = df.queryExecution.sparkPlan
+    if (partitions(df.queryExecution.sparkPlan, cores) >= cores) df
+    else df.repartition(cores)
+  }
+
+  private def partitions(plan: SparkPlan, cores: Int): Int = {
     val rootParts = plan.outputPartitioning.numPartitions
-    val parts =
-      if (rootParts > 0) rootParts
-      else plan.collectLeaves().map {
-        // file-split count: computed from the (already planned) file
-        // index on the driver — no Spark job
-        case f: FileSourceScanExec => f.inputRDD.getNumPartitions
-        // pre-materialized intermediates (localCheckpoint) know their
-        // partitioning without execution
-        case r: RDDScanExec => r.rdd.getNumPartitions
-        // literal fixtures are bounded; widening them is always cheap
-        case _: LocalTableScanExec => 1
-        // unknown layout: assume wide so widen stays a no-op
-        case _ => cores
-      }.foldLeft(1)(math.max)
-    if (parts >= cores) df else df.repartition(cores)
+    if (rootParts > 0) rootParts
+    else plan.collectLeaves().map {
+      // file-split count: computed from the (already planned) file
+      // index on the driver — no Spark job
+      case f: FileSourceScanExec => f.inputRDD.getNumPartitions
+      // pre-materialized intermediates (localCheckpoint) know their
+      // partitioning without execution
+      case r: RDDScanExec => r.rdd.getNumPartitions
+      // literal fixtures are bounded; widening them is always cheap
+      case _: LocalTableScanExec => 1
+      // a persisted input: the plan it was cached from, read on the
+      // driver (the adaptive wrapper's current plan, not executed)
+      case m: InMemoryTableScanExec => partitions(m.relation.cachedPlan, cores)
+      case a: AdaptiveSparkPlanExec => partitions(a.executedPlan, cores)
+      // unknown layout: assume wide so widen stays a no-op
+      case _ => cores
+    }.foldLeft(1)(math.max)
   }
 }

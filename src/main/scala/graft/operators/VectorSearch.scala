@@ -175,17 +175,7 @@ object VectorSearch {
       k: Int,
       filter: Map[String, String] = Map.empty,
       scoreScale: Option[Int] = None): DataFrame = {
-    require(k > 0, s"k must be a positive integer, got $k") // app.py:368-370
-    require(filter.isEmpty || !cfg.indexEnabled,
-      "Filters are not supported when vector index is enabled") // app.py:171-172
-    // Reference only permits equality filters on the three string columns
-    // (app.py:174-184 builds predicates from title/vendor/description only).
-    val filterable = Set(cfg.titleCol, cfg.vendorCol, cfg.descriptionCol)
-    filter.keys.foreach { c =>
-      require(filterable.contains(c),
-        s"Filter column '$c' is not one of the store's filterable string " +
-          s"columns ${filterable.mkString("{", ", ", "}")}")
-    }
+    validate(cfg, k, filter)
     GraftFunctions.register(store.sparkSession)
 
     val filtered = filter.foldLeft(store) { case (df, (c, v)) =>
@@ -203,6 +193,21 @@ object VectorSearch {
       score.as("score"))
 
     orderedTopK(projected, cfg, k)
+  }
+
+  /** The request checks every brute-force search makes first. */
+  private[operators] def validate(cfg: StoreConfig, k: Int, filter: Map[String, String]): Unit = {
+    require(k > 0, s"k must be a positive integer, got $k") // app.py:368-370
+    require(filter.isEmpty || !cfg.indexEnabled,
+      "Filters are not supported when vector index is enabled") // app.py:171-172
+    // Reference only permits equality filters on the three string columns
+    // (app.py:174-184 builds predicates from title/vendor/description only).
+    val filterable = Set(cfg.titleCol, cfg.vendorCol, cfg.descriptionCol)
+    filter.keys.foreach { c =>
+      require(filterable.contains(c),
+        s"Filter column '$c' is not one of the store's filterable string " +
+          s"columns ${filterable.mkString("{", ", ", "}")}")
+    }
   }
 
   /** Deterministic top-k: order by score (direction from the strategy's

@@ -24,9 +24,11 @@ class HttpApiSpec extends SparkFunSuite {
   /** Run `f` against a live server, always shutting it and its service
     * down. */
   private def withServer(embedder: Option[Embedder] = Some(new DeterministicEmbedder(64)))(
-      f: Int => Unit): Unit = {
-    val service = new SearchService(spark, emb, docs, ("vec_id", "doc_id"),
-      cfg, embedder, scoreScale = Some(6))
+      f: Int => Unit): Unit =
+    serve(new SearchService(spark, emb, docs, ("vec_id", "doc_id"),
+      cfg, embedder, scoreScale = Some(6)))(f)
+
+  private def serve(service: SearchService)(f: Int => Unit): Unit = {
     val server = new SearchHttpServer(service, cfg)
     val port = server.start()
     try f(port) finally { server.stop(); service.close() }
@@ -77,6 +79,8 @@ class HttpApiSpec extends SparkFunSuite {
         ("", "Request body is required"),
         ("{}", "Request body is required"),
         ("""{"embedding": "oops"}""", "list of floats"),
+        // beyond float32 range: would be scored as Infinity
+        ("""{"embedding": [0.5, 1e39]}""", "list of floats"),
         ("""{"query": 7}""", "non-empty string"),
         ("""{"embedding": [1.0], "k": "four"}""", "k must be a positive integer"),
         ("""{"embedding": [1.0], "k": 1.5}""", "k must be a positive integer"),
@@ -111,6 +115,23 @@ class HttpApiSpec extends SparkFunSuite {
         .map(_.asInstanceOf[Map[String, Any]])
       assert(hits.nonEmpty)
       assert(hits.forall(_("vendor") === "en"))
+    }
+  }
+
+  test("non-finite scores render as JSON null") {
+    import spark.implicits._
+    val e = Seq((1L, Array(Float.NaN, 1f, 1f)), (2L, Array(Float.PositiveInfinity, 1f, 1f)),
+      (3L, Array(1f, 2f, 3f))).toDF("vec_id", "embedding")
+    val d = Seq(1L, 2L, 3L).map(i => (i, s"t$i", "en", s"d$i")).toDF("doc_id", "source", "lang", "text")
+    val ip = cfg.copy(strategy = graft.operators.SearchStrategy.InnerProductSimilarity)
+    serve(new SearchService(spark, e, d, ("vec_id", "doc_id"), ip, scoreScale = Some(6))) { port =>
+      val r = post(port, "/search", """{"embedding": [1.0, 1.0, 1.0], "k": 3}""")
+      assert(r.statusCode() === 200)
+      // NaN sorts largest, then +Infinity: both are ranked, neither is JSON
+      val hits = obj(r.body())("results").asInstanceOf[Vector[Any]]
+        .map(_.asInstanceOf[Map[String, Any]])
+      assert(hits.map(h => (h("id"), h("score"))) ===
+        Vector(("1", null), ("2", null), ("3", java.lang.Double.valueOf(6.0))))
     }
   }
 

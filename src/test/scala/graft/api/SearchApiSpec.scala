@@ -2,8 +2,11 @@ package graft.api
 
 import graft.SparkFunSuite
 import graft.operators.StoreConfig
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** The §2.1 validation matrix, end-to-end through SearchService. */
 class SearchApiSpec extends SparkFunSuite {
@@ -124,32 +127,77 @@ class SearchApiSpec extends SparkFunSuite {
     }
   }
 
-  private def cachedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+  private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("close() drops both resident projections from Spark's cache") {
+    val before = persisted
     withService() { svc =>
       assert(svc.search(SearchRequest(embedding = Some(vec))).isRight)
-      assert(svc.residentEmbeddings.storageLevel === StorageLevel.MEMORY_ONLY)
-      assert(svc.residentMetadata.storageLevel === StorageLevel.MEMORY_ONLY)
+      val added = persisted -- before
+      assert(added.size === 1, "one packed store per service")
+      assert(spark.sparkContext.getPersistentRDDs(added.head).getStorageLevel ===
+        StorageLevel.MEMORY_ONLY)
       svc.close()
-      // storageLevel asks the cache manager for the projection's plan
-      assert(svc.residentEmbeddings.storageLevel === StorageLevel.NONE)
-      assert(svc.residentMetadata.storageLevel === StorageLevel.NONE)
+      assert((persisted -- before).isEmpty, "close() left the packed store cached")
     }
   }
 
-  test("a second service over the same DataFrames reuses the filled cache") {
-    val before = cachedRdds
-    withService() { a =>
-      assert(a.search(SearchRequest(embedding = Some(vec))).isRight)
-      val filled = cachedRdds
-      assert((filled -- before).nonEmpty, "the first request filled no cache")
-      withService() { b =>
-        assert(b.search(SearchRequest(embedding = Some(vec), k = Some(7))).isRight)
-        assert(b.search(SearchRequest(embedding = Some(vec),
-          filter = Map("lang" -> "en"))).isRight)
-        assert((cachedRdds -- filled).isEmpty, "the second service cached its own copy")
-      }
+  /** Bytes read through Hadoop file systems, the Parquet sources' path.
+    * (A task's input `bytesRead` also counts cached blocks it reads.) */
+  private def fileBytesRead: Long =
+    org.apache.hadoop.fs.FileSystem.getGlobalStorageStatistics.iterator().asScala
+      .map(s => Option(s.getLong("bytesRead")).fold(0L)(_.longValue)).sum
+
+  test("once resident, requests read no source bytes and cache nothing new") {
+    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobEnd(j: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
+    }
+    val v = vec
+    withService(Some(new DeterministicEmbedder(64))) { svc =>
+      val cold = fileBytesRead
+      assert(svc.search(SearchRequest(embedding = Some(v))).isRight)
+      assert(fileBytesRead > cold, "the build read the sources")
+      val (resident, warm) = (persisted, fileBytesRead)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val requests = Seq(SearchRequest(embedding = Some(v)),
+          SearchRequest(embedding = Some(v), k = Some(7)),
+          SearchRequest(embedding = Some(v), filter = Map("lang" -> "en")),
+          SearchRequest(query = Some("fast table scan")))
+        requests.foreach(r => assert(svc.search(r).isRight, r))
+        val deadline = System.currentTimeMillis() + 10000
+        while (jobsEnded.get() < requests.size && System.currentTimeMillis() < deadline)
+          Thread.sleep(10)
+        Thread.sleep(200)
+        assert(jobsEnded.get() === requests.size, "one job per request")
+        assert(fileBytesRead === warm)
+        assert(persisted === resident)
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  test("8 concurrent first requests: one packed build, identical answers") {
+    val before = persisted
+    withService() { svc =>
+      val gate = new java.util.concurrent.CountDownLatch(1)
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+      try {
+        val answers = (1 to 8).map { _ =>
+          pool.submit(() => {
+            gate.await()
+            svc.search(SearchRequest(embedding = Some(vec), k = Some(5))).map(_.results)
+          })
+        }
+        gate.countDown()
+        val got = answers.map(_.get())
+        assert(got.forall(_.isRight), got)
+        assert(got.distinct.size === 1, got)
+        assert((persisted -- before).size === 1)
+        // every row of the join packed once: no partition built twice
+        assert(svc.store.packedRows.value ===
+          emb.join(docs, col("vec_id") === col("doc_id")).count())
+      } finally pool.shutdown()
     }
   }
 

@@ -147,4 +147,54 @@ class VectorPropertiesSpec extends AnyFunSuite {
     val survive = h1.toSet.intersect(h3.toSet).size.toDouble / h1.length
     assert(survive > 0.95, s"survival $survive")
   }
+
+  test("primitive-array kernels are bit-identical to the ArrayData kernels") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val special: Gen[Double] = Gen.oneOf(0.0, -0.0, Double.NaN, Double.PositiveInfinity,
+      Double.NegativeInfinity, Float.MaxValue.toDouble, Float.MinPositiveValue.toDouble)
+    val elem: Gen[Double] =
+      Gen.frequency(8 -> Gen.chooseNum(-1e6, 1e6), 2 -> special)
+    // a stored vector: elements (None = null), sometimes all zero
+    def stored(n: Int): Gen[Seq[Option[Double]]] = Gen.frequency(
+      8 -> Gen.listOfN(n, Gen.frequency(30 -> elem.map(Some(_)), 1 -> Gen.const(None))),
+      1 -> Gen.const(Seq.fill(n)(Some(0.0))))
+    val cases = for {
+      n <- Gen.chooseNum(0, 24)
+      m <- Gen.frequency(6 -> Gen.const(n), 1 -> Gen.chooseNum(0, 24))
+      a <- stored(n)
+      q <- Gen.listOfN(m, elem.map(_.toFloat))
+      pad <- Gen.chooseNum(0, 3)
+      double <- Gen.oneOf(false, true)
+    } yield (a, q.toArray, pad, double)
+    def same(x: java.lang.Double, y: java.lang.Double): Boolean =
+      if (x == null) y == null
+      else y != null &&
+        java.lang.Double.doubleToLongBits(x) == java.lang.Double.doubleToLongBits(y)
+    check("primitive", Prop.forAll(cases) { case (a, q, pad, double) =>
+      val b = ad(q)
+      val ref = new GenericArrayData(a.map(_.map(x =>
+        if (double) java.lang.Double.valueOf(x) else java.lang.Float.valueOf(x.toFloat)).orNull))
+      // packed as the store packs it: at an offset, n = -1 for a null element
+      val n = if (a.contains(None)) -1 else a.length
+      val vals = Seq.fill(pad)(7.0) ++ a.map(_.getOrElse(0.0)) ++ Seq(9.0)
+      val fs = vals.map(_.toFloat).toArray
+      val ds = vals.toArray
+      Seq[((ArrayData, Boolean, ArrayData, Boolean) => java.lang.Double,
+          (Array[Float], Int, Int, Array[Float]) => java.lang.Double,
+          (Array[Double], Int, Int, Array[Float]) => java.lang.Double)](
+        (VectorKernels.innerProduct, VectorKernels.innerProduct, VectorKernels.innerProduct),
+        (VectorKernels.cosineSimilarity, VectorKernels.cosineSimilarity,
+          VectorKernels.cosineSimilarity),
+        (VectorKernels.cosineDistance, VectorKernels.cosineDistance,
+          VectorKernels.cosineDistance),
+        (VectorKernels.euclideanDistance, VectorKernels.euclideanDistance,
+          VectorKernels.euclideanDistance),
+        (VectorKernels.manhattanDistance, VectorKernels.manhattanDistance,
+          VectorKernels.manhattanDistance)
+      ).forall { case (arrayData, floats, doubles) =>
+        val want = arrayData(ref, double, b, false)
+        same(want, if (double) doubles(ds, pad, n, q) else floats(fs, pad, n, q))
+      }
+    })
+  }
 }

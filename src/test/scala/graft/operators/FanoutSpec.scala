@@ -51,4 +51,25 @@ class FanoutSpec extends SparkFunSuite {
       assert(w.count() === 5)
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  test("widen fans a persisted one-split input out, with zero jobs") {
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    val cached = spark.read.parquet(s"$Sf0001/documents.parquet")
+      .select(length(col("text")).as("n")).persist()
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val w = Fanout.widen(cached)
+      Thread.sleep(500)
+      assert(jobs.get() === 0, "widen must not fill the cache to read its layout")
+      assert(w.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
+      assert(w.agg(sum("n")).first().getLong(0) === cached.agg(sum("n")).first().getLong(0))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      cached.unpersist()
+    }
+  }
 }

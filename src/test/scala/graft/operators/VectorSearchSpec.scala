@@ -95,16 +95,82 @@ class VectorSearchSpec extends SparkFunSuite {
   }
 
   test("equal key types join the k winners as stored: no per-row cast(doc_id)") {
-    import graft.api.SearchService
-    val service = new SearchService(spark, emb, docs, ("vec_id", "doc_id"), cfg)
-    try {
-      for ((e, d) <- Seq((emb, docs),
-          (service.residentEmbeddings, service.residentMetadata))) {
-        val plan = VectorSearch.searchWithMetadata(e, d, ("vec_id", "doc_id"), cfg, qv, 4)
-          .queryExecution.executedPlan.toString
-        assert(!plan.contains("cast(doc_id"), plan)
-      }
-    } finally service.close()
+    val raw = VectorSearch.searchWithMetadata(emb, docs, ("vec_id", "doc_id"), cfg, qv, 4)
+    // the packed store's one build joins the tables the same way
+    val packed = new PackedStore(emb, docs, ("vec_id", "doc_id"), cfg).table
+    for (df <- Seq(raw, packed)) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("cast(doc_id"), plan)
+    }
+  }
+
+  /** Hits with each score as its bits, so NaN equals NaN. */
+  private def bits(hits: Seq[graft.api.SearchHit]) =
+    hits.map(h => h.copy(score = None) -> h.score.map(java.lang.Double.doubleToLongBits))
+
+  /** Every strategy × scoreScale ∈ {None, 6} × `filters` × `ks`: the
+    * service's hits equal `bruteForce` over `e ⋈ d`. */
+  private def assertPackedMatchesBruteForce(e: org.apache.spark.sql.DataFrame,
+      d: org.apache.spark.sql.DataFrame, c: StoreConfig, q: Array[Float],
+      filters: Seq[Map[String, String]], ks: Seq[Int], what: String): Unit = {
+    import graft.api.{SearchRequest, SearchService}
+    val joined = e.join(d, e("vec_id") === d("doc_id"))
+    for (strategy <- SearchStrategy.all; scale <- Seq(None, Some(6))) {
+      val sc = c.copy(strategy = strategy)
+      val service = new SearchService(spark, e, d, ("vec_id", "doc_id"), sc, scoreScale = scale)
+      try {
+        for (filter <- filters; k <- ks) {
+          val req = SearchRequest(embedding = Some(q.toSeq), k = Some(k), filter = filter)
+          val want = VectorSearch.bruteForce(joined, sc, q, k, filter, scale).collect().toSeq
+            .map(r => graft.api.SearchHit(r.getString(0), r.getString(1), r.getString(2),
+              r.getString(3), if (r.isNullAt(4)) None else Some(r.getDouble(4))))
+          assert(service.search(req).map(h => bits(h.results)) === Right(bits(want)),
+            s"$what: ${strategy.name} scale=$scale k=$k filter=$filter")
+        }
+      } finally service.close()
+    }
+  }
+
+  test("packed SearchService == bruteForce over the join (strategies × scale × filter × k)") {
+    assertPackedMatchesBruteForce(emb, docs, cfg, qv,
+      Seq(Map.empty, Map("lang" -> "en")), Seq(1, 4, 10), "sf0.001")
+  }
+
+  test("packed SearchService == bruteForce on NULL, NaN, tied, orphan and odd-typed stores") {
+    import spark.implicits._
+    val nan = Float.NaN
+    val inf = Float.PositiveInfinity
+    // ids 7 and 16 tie exactly ("16" < "7" in byte order); 8 has no
+    // metadata row; 3 is one dimension short
+    val vectors: Seq[(Long, Option[Seq[java.lang.Float]])] = Seq(
+      0L -> Some(Seq(1f, 2f, 3f)), 1L -> None, 2L -> Some(Seq(1f, null, 3f)),
+      3L -> Some(Seq(1f, 2f)), 4L -> Some(Seq(0f, 0f, 0f)), 5L -> Some(Seq(1f, nan, 3f)),
+      7L -> Some(Seq(3f, 2f, 1f)), 16L -> Some(Seq(3f, 2f, 1f)), 8L -> Some(Seq(1f, 2f, 3.5f)),
+      9L -> Some(Seq(inf, 1f, 1f)), 10L -> Some(Seq(-1f, -2f, -3f)),
+      11L -> Some(Seq(0.1f, 0.7f, -0.3f)), 12L -> Some(Seq(2f, 4f, 6f)),
+      13L -> Some(Seq(-0f, 0f, 1e-30f)))
+    val e = vectors.map { case (id, v) => (id, v.map(_.toArray).orNull) }
+      .toDF("vec_id", "embedding")
+    val d = vectors.map(_._1).filter(_ != 8L).map(id =>
+      (id, if (id == 4L) null else s"title $id", if (id % 2 == 0) "a" else "b", s"text $id"))
+      .toDF("doc_id", "source", "lang", "text")
+    val q = Array(1f, 2f, 2.5f)
+    val filters = Seq(Map.empty[String, String], Map("lang" -> "a"))
+    val ks = Seq(3, 20)
+    assertPackedMatchesBruteForce(e, d, cfg, q, filters, ks, "array<float>")
+    assertPackedMatchesBruteForce(e, d.withColumn("doc_id", col("doc_id").cast("string")),
+      cfg, q, filters, ks, "string metadata key")
+    // passAsBytes: the wire format, plus one malformed payload
+    graft.functions.GraftFunctions.register(spark)
+    val bin = e.select(col("vec_id"), call_function("to_binary_vector", col("embedding"))
+      .as("embedding"))
+      .union(Seq((14L, Array[Byte](1, 2, 3))).toDF("vec_id", "embedding"))
+    val dBin = d.union(Seq((14L, "title 14", "a", "text 14")).toDF("doc_id", "source", "lang", "text"))
+    assertPackedMatchesBruteForce(bin, dBin, cfg, q, filters, ks, "binary")
+    // array<double>, with an element no float32 holds
+    val dbl = e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+      .union(Seq((14L, Array(0.1, 0.2, 0.3))).toDF("vec_id", "embedding"))
+    assertPackedMatchesBruteForce(dbl, dBin, cfg, q, filters, ks, "array<double>")
   }
 
   test("physical plan is TakeOrderedAndProject (no full sort/shuffle)") {
