@@ -142,11 +142,12 @@ private[api] object JsonUtil {
  *
  * The store is served resident, the way the reference's YDB table stays
  * on its server: the first request builds the reference's one table
- * from `embeddings ⋈ metadata` and keeps it packed in memory, and every
- * request (filtered or not) is one Spark job over it. What stays
- * resident is decoded input, not results: every request still scores
- * every vector. The service serves the snapshot its DataFrames pinned;
- * [[close]] releases the cache.
+ * from `embeddings ⋈ metadata` and keeps it packed in memory, in driver
+ * memory when it fits the driver budget (then a request runs
+ * no Spark job), else in Spark's cache (one Spark job per request).
+ * What stays resident is decoded input, not results: every request
+ * still scores every vector. The service serves the snapshot its
+ * DataFrames pinned; [[close]] releases the store.
  */
 final class SearchService(
     spark: SparkSession,
@@ -159,8 +160,8 @@ final class SearchService(
 
   private[graft] val store = new PackedStore(embeddings, metadata, joinKey, cfg)
 
-  /** Drop the packed store from Spark's cache; later requests read the
-    * source again. */
+  /** Drop the packed store; a later request builds it again from the
+    * source. */
   def close(): Unit = store.close()
 
   /** Full `/search` semantics (app.py:281-390). */
@@ -200,7 +201,7 @@ final class SearchService(
     try {
       // Timing mirrors the reference: wall clock around the whole execute
       // (app.py:245-247) — the store's build on the first request, then
-      // the search job.
+      // the search.
       val t0 = System.nanoTime()
       val rows = store.search(vec, k, filter, scoreScale)
       val ms = (System.nanoTime() - t0) / 1e6

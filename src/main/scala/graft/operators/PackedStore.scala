@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorKernels
+import org.apache.spark.SparkConf
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
@@ -8,7 +9,7 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DoubleType, FloatType}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.storage.StorageLevel
 import org.apache.spark.unsafe.types.UTF8String
-import org.apache.spark.util.LongAccumulator
+import org.apache.spark.util.{LongAccumulator, SizeEstimator}
 
 import scala.util.Try
 
@@ -17,34 +18,54 @@ import scala.util.Try
  * (id, title, vendor, description, embedding; app.py:212-227), built
  * once from `embeddings ⋈ metadata` on the join key. Each partition is
  * packed into [[PackedStore.Block]]s (the strings, plus the vectors in
- * one primitive array, binary wire-format vectors decoded once) and the
- * blocks are persisted `MEMORY_ONLY`.
+ * one primitive array, binary wire-format vectors decoded once).
  *
- * A request is one Spark job over the blocks: each task applies the
- * conjunctive equality filter, scores rows with the primitive-array
- * [[VectorKernels]] and keeps a local top-k, and the driver merges at
- * most k rows per task. No plan is built per request and no cached row
- * is decoded. The result equals [[VectorSearch.bruteForce]] over the
- * join, row for row: the same validation, NULL scores, HALF_UP rounding
- * and order (strategy direction with NULLs last in Spark's double order,
+ * Where the blocks live is decided once, by the first search. It packs
+ * the partitions one at a time and brings their blocks to the driver
+ * while their bytes fit the driver budget ([[PackedStore.driverBudget]]);
+ * a partition stops packing as soon as it passes what is left of the
+ * budget, so the driver never receives more. If every partition fits,
+ * the store is held on the driver: each search scores the blocks on the
+ * JVM's common pool and runs no Spark job. Otherwise the collected
+ * blocks are dropped and the first search packs the whole table again
+ * with its own Spark job, persisting the blocks `MEMORY_ONLY`; each
+ * search is then one Spark job over Spark's cache.
+ *
+ * Either way a search applies the conjunctive equality filter, scores
+ * rows with the primitive-array [[VectorKernels]] and keeps a top-k per
+ * block (per task, when distributed), and merges at most k rows per
+ * block or task. No plan is built per request and no cached row is
+ * decoded. The result equals [[VectorSearch.bruteForce]] over the join,
+ * row for row: the same validation, NULL scores, HALF_UP rounding and
+ * order (strategy direction with NULLs last in Spark's double order,
  * then `id` in byte order). An embedding with no metadata row is never
  * ranked.
  *
- * The first search builds and fills the store; concurrent first
- * searches wait for that one build. A block that does not fit in memory
- * is recomputed from the source by each search that reads it.
+ * Concurrent first searches wait for one build. A cached block that does
+ * not fit in memory is recomputed from the source by each search that
+ * reads it.
  */
-final class PackedStore(
+final class PackedStore private[graft] (
     embeddings: DataFrame,
     metadata: DataFrame,
     joinKey: (String, String), // (embeddings key col, metadata key col)
-    cfg: StoreConfig) {
+    cfg: StoreConfig,
+    // bytes of blocks the store may hold on the driver; None: the
+    // budget of the store's SparkContext and this JVM's heap
+    budget: Option[Long]) {
   import PackedStore._
 
-  /** Rows packed so far: the table's row count once the store is
-    * resident; more means blocks were evicted and packed again. */
-  private[graft] val packedRows: LongAccumulator =
-    embeddings.sparkSession.sparkContext.longAccumulator("packed /search rows")
+  def this(embeddings: DataFrame, metadata: DataFrame, joinKey: (String, String),
+      cfg: StoreConfig) = this(embeddings, metadata, joinKey, cfg, None)
+
+  private def sc = embeddings.sparkSession.sparkContext
+
+  private[graft] def driverBudget: Long =
+    budget.getOrElse(PackedStore.driverBudget(sc.getConf, Runtime.getRuntime.maxMemory))
+
+  /** Rows packed into the store so far: the table's row count once it
+    * is built; more means cached blocks were evicted and packed again. */
+  private[graft] val packedRows: LongAccumulator = sc.longAccumulator("packed /search rows")
 
   /** The joined table, projected to (id, title, vendor, description,
     * embedding). A column is taken from the table that has it, the
@@ -60,26 +81,68 @@ final class PackedStore(
         emb(cfg.embeddingCol))
   }
 
-  private var packed: RDD[Block] = _
+  // Once built, exactly one is set: the blocks held on the driver, or
+  // persisted in Spark's cache.
+  private var held: Array[Block] = _
+  private var cached: RDD[Block] = _
 
-  private def blocks: RDD[Block] = synchronized {
-    if (packed == null) {
-      val t = table
-      val (binary, double) = t.schema.last.dataType match {
-        case ArrayType(FloatType, _) => (false, false)
-        case ArrayType(DoubleType, _) => (false, true)
-        case BinaryType => (true, false)
-        case other => throw new IllegalArgumentException(
-          s"Embedding column '${cfg.embeddingCol}' must be array<float>, array<double> " +
-            s"or binary (packed float32), got ${other.sql}")
+  /** Bytes of the blocks held on the driver, 0 for a cached store. */
+  private[graft] def heldBytes: Long = synchronized {
+    if (held == null) 0L else held.iterator.map(_.bytes).sum
+  }
+
+  /** Build the store. A store kept in Spark's cache answers the first
+    * search with `topK` in the job that packs and persists its blocks. */
+  private def build(topK: Iterator[Block] => Array[Hit]): Option[Array[Array[Hit]]] = {
+    val t = table
+    val (binary, double) = t.schema.last.dataType match {
+      case ArrayType(FloatType, _) => (false, false)
+      case ArrayType(DoubleType, _) => (false, true)
+      case BinaryType => (true, false)
+      case other => throw new IllegalArgumentException(
+        s"Embedding column '${cfg.embeddingCol}' must be array<float>, array<double> " +
+          s"or binary (packed float32), got ${other.sql}")
+    }
+    val packs = t.queryExecution.toRdd.mapPartitions(it => pack(it, binary, double))
+    val limit = driverBudget
+    val shown = if (limit == Long.MaxValue) "unlimited" else s"$limit bytes"
+    // One partition per job, each told how much of the budget is left.
+    // A job that fails, say on Spark's own maxResultSize check of the
+    // serialized blocks, leaves the store distributed.
+    val collected = Array.newBuilder[Block]
+    var size = 0L
+    var fits = true
+    var p = 0
+    while (fits && p < packs.getNumPartitions) {
+      val room = limit - size
+      Try(sc.runJob(packs, (it: Iterator[Block]) => upTo(it, room), Seq(p)).head)
+        .toOption.flatten match {
+        case Some(bs) => collected ++= bs; size += bs.iterator.map(_.bytes).sum
+        case None => fits = false
       }
+      p += 1
+    }
+    if (fits) {
+      held = collected.result()
+      val n = held.iterator.map(_.rows.toLong).sum
+      packedRows.add(n)
+      log.info(s"packed /search store ${cfg.tableName}: $n rows, $size " +
+        s"bytes, driver budget $shown: held on the driver in ${held.length} blocks, " +
+        "no Spark job per search")
+      None
+    } else {
       val rows = packedRows
-      packed = t.queryExecution.toRdd
-        .mapPartitions(it => pack(it, binary, double, rows))
+      val rows0 = rows.value.longValue
+      val rdd = packs.map { b => rows.add(b.rows); b }
         .setName(s"packed /search store ${cfg.tableName}")
         .persist(StorageLevel.MEMORY_ONLY)
+      val first =
+        try sc.runJob(rdd, topK) catch { case e: Throwable => rdd.unpersist(); throw e }
+      cached = rdd
+      log.info(s"packed /search store ${cfg.tableName}: ${rows.value - rows0} rows, more than " +
+        s"the driver budget $shown: kept in Spark's cache, one Spark job per search")
+      Some(first)
     }
-    packed
   }
 
   /** Top-k rows (id, title, vendor, description, score), as
@@ -94,20 +157,48 @@ final class PackedStore(
     val preds = filter.toArray.map { case (c, v) => (column(c), UTF8String.fromString(v)) }
     val scorer = Scorer(cfg.strategy, scoreScale)
     val order = HitOrder(cfg.strategy.descending)
-    val rdd = blocks
-    val perTask = rdd.sparkContext.runJob(rdd,
-      (it: Iterator[Block]) => localTopK(it, queryVec, k, preds, scorer, order))
-    perTask.flatten.sorted(order).take(k).map(_.toRow).toSeq
+    val topK = (it: Iterator[Block]) => localTopK(it, queryVec, k, preds, scorer, order)
+    val (first, onDriver, inCache) = synchronized {
+      (if (held == null && cached == null) build(topK) else None, held, cached)
+    }
+    val partial: Array[Array[Hit]] = first.getOrElse {
+      if (onDriver != null)
+        java.util.Arrays.stream(onDriver).parallel()
+          .map[Array[Hit]](b => topK(Iterator.single(b)))
+          .toArray[Array[Hit]](new Array[Array[Hit]](_))
+      else sc.runJob(inCache, topK)
+    }
+    partial.flatten.sorted(order).take(k).map(_.toRow).toSeq
   }
 
-  /** Drop the blocks from Spark's cache; later searches recompute them
-    * from the source. */
+  /** Drop the blocks, wherever they are held; a later search builds the
+    * store again from the source. */
   def close(): Unit = synchronized {
-    if (packed != null) packed.unpersist()
+    if (cached != null) cached.unpersist()
+    held = null
+    cached = null
   }
 }
 
 object PackedStore {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[PackedStore])
+
+  /** Spark's reserved system memory, which it keeps out of its unified
+    * (execution and storage) memory. */
+  private val ReservedBytes = 300L << 20
+
+  /** Bytes of blocks a store may hold on the driver, given the driver's
+    * conf and heap. At most what one action may bring to the driver
+    * (`spark.driver.maxResultSize`; 0 means unlimited, as in Spark), and
+    * at most half the heap Spark leaves outside its unified memory (its
+    * user memory): while the last partition is collected, its serialized
+    * results sit next to the blocks already held. */
+  private[graft] def driverBudget(conf: SparkConf, heap: Long): Long = {
+    val result = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    val user = (heap - ReservedBytes) * (1 - conf.getDouble("spark.memory.fraction", 0.6))
+    math.min(if (result == 0) Long.MaxValue else result, math.max(0L, (user / 2).toLong))
+  }
 
   /** Vector elements per block: a partition packs into blocks of about
     * this size (4 MB of float32), so packing never holds a second copy
@@ -125,11 +216,15 @@ object PackedStore {
       val floats: Array[Float],
       val doubles: Array[Double],
       val offsets: Array[Int],
-      val lengths: Array[Int]) extends Serializable
+      val lengths: Array[Int]) extends Serializable {
+
+    /** Heap bytes of the block, as Spark sizes what it caches. */
+    def bytes: Long = SizeEstimator.estimate(this)
+  }
 
   /** Pack rows of (id, title, vendor, description, embedding). */
-  private def pack(rows: Iterator[InternalRow], binary: Boolean, double: Boolean,
-      packed: LongAccumulator): Iterator[Block] = new Iterator[Block] {
+  private def pack(rows: Iterator[InternalRow], binary: Boolean, double: Boolean)
+      : Iterator[Block] = new Iterator[Block] {
     def hasNext: Boolean = rows.hasNext
     def next(): Block = {
       val text = Array.fill(4)(Array.newBuilder[UTF8String])
@@ -173,12 +268,24 @@ object PackedStore {
         }
         n += 1
       }
-      packed.add(n)
       new Block(n, text.map(_.result()),
         if (double) null else java.util.Arrays.copyOf(floats, used),
         if (double) java.util.Arrays.copyOf(doubles, used) else null,
         offsets.result(), lengths.result())
     }
+  }
+
+  /** The blocks of one partition, or None as soon as their bytes pass
+    * `room`; the rest of the partition is then not read. */
+  private def upTo(blocks: Iterator[Block], room: Long): Option[Array[Block]] = {
+    val kept = Array.newBuilder[Block]
+    var bytes = 0L
+    while (bytes <= room && blocks.hasNext) {
+      val b = blocks.next()
+      bytes += b.bytes
+      kept += b
+    }
+    if (bytes <= room) Some(kept.result()) else None
   }
 
   /** One ranked row; the strings stay UTF-8 until the driver's k. */

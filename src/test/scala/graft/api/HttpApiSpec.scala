@@ -193,4 +193,22 @@ class HttpApiSpec extends SparkFunSuite {
     for (bad <- Seq("", "{", "[1,", "\"abc", "{\"a\" 1}", "tru", "{} x", "[1 2]"))
       intercept[IllegalArgumentException](JsonParse.parse(bad))
   }
+
+  test("JsonUtil.quote: quotes, backslash, \\n\\r\\t, other control characters, non-ASCII") {
+    import JsonUtil.quote
+    assert(quote("") === "\"\"")
+    assert(quote("say \"hi\"") === "\"say \\\"hi\\\"\"")
+    assert(quote("a\\b") === "\"a\\\\b\"")
+    assert(quote("1\n2\r3\t4") === "\"1\\n2\\r3\\t4\"")
+    assert(quote("\u0000\u0001\u001f\b\f ") === "\"\\u0000\\u0001\\u001f\\u0008\\u000c \"")
+    // DEL, Latin-1, CJK and a surrogate pair pass through as they are
+    assert(quote("\u007fé漢\ud83d\ude00") === "\"\u007fé漢\ud83d\ude00\"")
+    // any string round-trips through the parser
+    val rnd = new scala.util.Random(7)
+    for (_ <- 1 to 200) {
+      val str = new String(Array.fill(rnd.nextInt(12))(
+        if (rnd.nextBoolean()) rnd.nextInt(0x30).toChar else rnd.nextInt(0xd7ff).toChar))
+      assert(JsonParse.parse(quote(str)) === str)
+    }
+  }
 }

@@ -1,8 +1,7 @@
 package graft.api
 
 import graft.SparkFunSuite
-import graft.operators.StoreConfig
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd}
+import graft.operators.{PackedStore, StoreConfig}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -129,17 +128,35 @@ class SearchApiSpec extends SparkFunSuite {
 
   private def persisted: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
+  /** The same store with no driver budget: it stays in Spark's cache. */
+  private def distributed = new PackedStore(emb, docs, ("vec_id", "doc_id"), cfg, Some(0L))
+
+  private def joinedRows = emb.join(docs, col("vec_id") === col("doc_id")).count()
+
   test("close() drops both resident projections from Spark's cache") {
     val before = persisted
+    // driver-held: Spark's copy is gone once built; close() unbuilds
     withService() { svc =>
       assert(svc.search(SearchRequest(embedding = Some(vec))).isRight)
+      assert(persisted === before, "a driver-held store left its blocks in Spark's cache")
+      assert(svc.store.packedRows.value === joinedRows)
+      svc.close()
+      val (again, jobs) = jobsRunBy(svc.search(SearchRequest(embedding = Some(vec))))
+      assert(again.isRight)
+      assert(jobs > 0 && svc.store.packedRows.value === 2 * joinedRows,
+        "a search after close() builds the store again")
+    }
+    // above the budget: one MEMORY_ONLY cached store until close()
+    val store = distributed
+    try {
+      store.search(vec.toArray, 4)
       val added = persisted -- before
       assert(added.size === 1, "one packed store per service")
       assert(spark.sparkContext.getPersistentRDDs(added.head).getStorageLevel ===
         StorageLevel.MEMORY_ONLY)
-      svc.close()
+      store.close()
       assert((persisted -- before).isEmpty, "close() left the packed store cached")
-    }
+    } finally store.close()
   }
 
   /** Bytes read through Hadoop file systems, the Parquet sources' path.
@@ -149,56 +166,71 @@ class SearchApiSpec extends SparkFunSuite {
       .map(s => Option(s.getLong("bytesRead")).fold(0L)(_.longValue)).sum
 
   test("once resident, requests read no source bytes and cache nothing new") {
-    val jobsEnded = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobEnd(j: SparkListenerJobEnd): Unit = jobsEnded.incrementAndGet()
-    }
     val v = vec
-    withService(Some(new DeterministicEmbedder(64))) { svc =>
+    val embedder = new DeterministicEmbedder(64)
+    val requests = Seq(SearchRequest(embedding = Some(v)),
+      SearchRequest(embedding = Some(v), k = Some(7)),
+      SearchRequest(embedding = Some(v), filter = Map("lang" -> "en")),
+      SearchRequest(query = Some("fast table scan")))
+    /** Serve `requests` after a first one built the store; assert they
+      * read no source bytes and cache nothing new, and return the
+      * answers and the jobs they ran. */
+    def warm[A](first: => Unit, serve: SearchRequest => A): (Seq[A], Int) = {
       val cold = fileBytesRead
-      assert(svc.search(SearchRequest(embedding = Some(v))).isRight)
+      first
       assert(fileBytesRead > cold, "the build read the sources")
-      val (resident, warm) = (persisted, fileBytesRead)
-      spark.sparkContext.addSparkListener(listener)
+      val (resident, warmBytes) = (persisted, fileBytesRead)
+      val out = jobsRunBy(requests.map(serve))
+      assert(fileBytesRead === warmBytes)
+      assert(persisted === resident)
+      out
+    }
+    withService(Some(embedder)) { svc =>
+      val (answers, jobs) = warm(svc.search(SearchRequest(embedding = Some(v))),
+        r => svc.search(r).map(_.results))
+      answers.foreach(a => assert(a.isRight, a))
+      assert(jobs === 0, "a driver-held store runs no Spark job per request")
+      // above the budget: the same answers, one job per request
+      val store = distributed
       try {
-        val requests = Seq(SearchRequest(embedding = Some(v)),
-          SearchRequest(embedding = Some(v), k = Some(7)),
-          SearchRequest(embedding = Some(v), filter = Map("lang" -> "en")),
-          SearchRequest(query = Some("fast table scan")))
-        requests.foreach(r => assert(svc.search(r).isRight, r))
-        val deadline = System.currentTimeMillis() + 10000
-        while (jobsEnded.get() < requests.size && System.currentTimeMillis() < deadline)
-          Thread.sleep(10)
-        Thread.sleep(200)
-        assert(jobsEnded.get() === requests.size, "one job per request")
-        assert(fileBytesRead === warm)
-        assert(persisted === resident)
-      } finally spark.sparkContext.removeSparkListener(listener)
+        val (rows, jobs) = warm(store.search(v.toArray, 4), r =>
+          store.search(r.embedding.map(_.toArray).getOrElse(embedder.embed(r.query.get)
+            .toOption.get), r.k.getOrElse(cfg.defaultK), r.filter))
+        assert(jobs === requests.size, "one job per request")
+        assert(rows.map(_.map(r => (r.getString(0), r.getDouble(4)))) ===
+          answers.map(_.toOption.get.map(h => (h.id, h.score.get))))
+      } finally store.close()
     }
   }
 
   test("8 concurrent first requests: one packed build, identical answers") {
-    val before = persisted
-    withService() { svc =>
+    /** 8 first searches released at once; all must agree. */
+    def concurrently[A](search: () => A): Seq[A] = {
       val gate = new java.util.concurrent.CountDownLatch(1)
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       try {
-        val answers = (1 to 8).map { _ =>
-          pool.submit(() => {
-            gate.await()
-            svc.search(SearchRequest(embedding = Some(vec), k = Some(5))).map(_.results)
-          })
-        }
+        val answers = (1 to 8).map(_ => pool.submit(() => { gate.await(); search() }))
         gate.countDown()
         val got = answers.map(_.get())
-        assert(got.forall(_.isRight), got)
         assert(got.distinct.size === 1, got)
-        assert((persisted -- before).size === 1)
-        // every row of the join packed once: no partition built twice
-        assert(svc.store.packedRows.value ===
-          emb.join(docs, col("vec_id") === col("doc_id")).count())
+        got
       } finally pool.shutdown()
     }
+    val before = persisted
+    withService() { svc =>
+      val got = concurrently(() =>
+        svc.search(SearchRequest(embedding = Some(vec), k = Some(5))).map(_.results))
+      assert(got.forall(_.isRight), got)
+      assert(persisted === before, "the driver-held store leaves nothing cached")
+      // every row of the join packed once: no partition built twice
+      assert(svc.store.packedRows.value === joinedRows)
+    }
+    val store = distributed
+    try {
+      concurrently(() => store.search(vec.toArray, 5))
+      assert((persisted -- before).size === 1)
+      assert(store.packedRows.value === joinedRows)
+    } finally store.close()
   }
 
   test("HttpEmbedder speaks the reference wire contract (local stub server)") {

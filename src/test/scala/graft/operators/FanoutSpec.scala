@@ -1,8 +1,5 @@
 package graft.operators
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.SparkFunSuite
@@ -32,44 +29,22 @@ class FanoutSpec extends SparkFunSuite {
     // then re-running them in the repartitioned query. The decision
     // must now be metadata-only — even when the input plan contains a
     // global sort + limit (the selfBleu sample shape).
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val sample = spark.read.parquet(s"$Sf0001/documents.parquet")
       .orderBy("doc_id").limit(5).select("doc_id")
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val w = Fanout.widen(sample)
-      // listener events are async; a short drain window suffices — any
-      // real stage execution takes far longer than this to even start
-      Thread.sleep(500)
-      assert(jobs.get() === 0,
-        "widen must not execute anything to read the partition count")
-      // and the widened plan still computes the right rows, once
-      assert(w.count() === 5)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (w, jobs) = jobsRunBy(Fanout.widen(sample))
+    assert(jobs === 0, "widen must not execute anything to read the partition count")
+    // and the widened plan still computes the right rows, once
+    assert(w.count() === 5)
   }
 
   test("widen fans a persisted one-split input out, with zero jobs") {
-    val jobs = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     val cached = spark.read.parquet(s"$Sf0001/documents.parquet")
       .select(length(col("text")).as("n")).persist()
-    spark.sparkContext.addSparkListener(listener)
     try {
-      val w = Fanout.widen(cached)
-      Thread.sleep(500)
-      assert(jobs.get() === 0, "widen must not fill the cache to read its layout")
+      val (w, jobs) = jobsRunBy(Fanout.widen(cached))
+      assert(jobs === 0, "widen must not fill the cache to read its layout")
       assert(w.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
       assert(w.agg(sum("n")).first().getLong(0) === cached.agg(sum("n")).first().getLong(0))
-    } finally {
-      spark.sparkContext.removeSparkListener(listener)
-      cached.unpersist()
-    }
+    } finally cached.unpersist()
   }
 }

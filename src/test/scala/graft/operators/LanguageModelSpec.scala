@@ -95,6 +95,20 @@ class LanguageModelSpec extends SparkFunSuite {
     assert(got(0).getDouble(3) > 0 && !got(0).getDouble(3).isInfinite)
   }
 
+  test("an empty model corpus scores NULL and does not throw (n_total NULL, not 0)") {
+    // the corpus mass N is a divisor: a NULL N keeps every score NULL,
+    // where a 0 would throw under ANSI division
+    val probe = Seq((1L, "a b c"), (2L, "zz")).toDF("doc_id", "text")
+    val empty = corpus.limit(0)
+    val ppl = LanguageModel.docPerplexity(probe, "doc_id", "text", empty, "doc_id", "text")
+      .orderBy("doc_id").collect()
+    assert(ppl.map(r => (r.getLong(0), r.getLong(1))).toSeq === Seq(1L -> 3L, 2L -> 1L))
+    assert(ppl.forall(r => r.isNullAt(2) && r.isNullAt(3)), ppl.toSeq)
+    val mink = LanguageModel.minKProb(probe, "doc_id", "text", empty, "doc_id", "text")
+      .collect()
+    assert(mink.length === 2 && mink.forall(_.isNullAt(3)), mink.toSeq)
+  }
+
   test("fluent (in-distribution) text scores lower perplexity than shuffled junk") {
     val docs = (0L until 40L).map(i => (i, "the cat sat on the mat")) :+
       (99L, "mat the on sat zz cat")

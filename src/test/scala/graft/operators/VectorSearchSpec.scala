@@ -108,26 +108,35 @@ class VectorSearchSpec extends SparkFunSuite {
   private def bits(hits: Seq[graft.api.SearchHit]) =
     hits.map(h => h.copy(score = None) -> h.score.map(java.lang.Double.doubleToLongBits))
 
+  private def hit(r: org.apache.spark.sql.Row) = graft.api.SearchHit(r.getString(0),
+    r.getString(1), r.getString(2), r.getString(3), if (r.isNullAt(4)) None else Some(r.getDouble(4)))
+
   /** Every strategy × scoreScale ∈ {None, 6} × `filters` × `ks`: the
-    * service's hits equal `bruteForce` over `e ⋈ d`. */
+    * service's hits (its store held on the driver) and a store kept in
+    * Spark's cache (no driver budget) both equal `bruteForce` over
+    * `e ⋈ d`. */
   private def assertPackedMatchesBruteForce(e: org.apache.spark.sql.DataFrame,
       d: org.apache.spark.sql.DataFrame, c: StoreConfig, q: Array[Float],
       filters: Seq[Map[String, String]], ks: Seq[Int], what: String): Unit = {
     import graft.api.{SearchRequest, SearchService}
     val joined = e.join(d, e("vec_id") === d("doc_id"))
+    def persisted = spark.sparkContext.getPersistentRDDs.size
     for (strategy <- SearchStrategy.all; scale <- Seq(None, Some(6))) {
       val sc = c.copy(strategy = strategy)
       val service = new SearchService(spark, e, d, ("vec_id", "doc_id"), sc, scoreScale = scale)
+      val cached = new PackedStore(e, d, ("vec_id", "doc_id"), sc, Some(0L))
       try {
         for (filter <- filters; k <- ks) {
           val req = SearchRequest(embedding = Some(q.toSeq), k = Some(k), filter = filter)
-          val want = VectorSearch.bruteForce(joined, sc, q, k, filter, scale).collect().toSeq
-            .map(r => graft.api.SearchHit(r.getString(0), r.getString(1), r.getString(2),
-              r.getString(3), if (r.isNullAt(4)) None else Some(r.getDouble(4))))
-          assert(service.search(req).map(h => bits(h.results)) === Right(bits(want)),
-            s"$what: ${strategy.name} scale=$scale k=$k filter=$filter")
+          val want = bits(VectorSearch.bruteForce(joined, sc, q, k, filter, scale).collect()
+            .toSeq.map(hit))
+          val clue = s"$what: ${strategy.name} scale=$scale k=$k filter=$filter"
+          val before = persisted
+          assert(service.search(req).map(h => bits(h.results)) === Right(want), s"driver $clue")
+          assert(persisted === before, s"driver-held store cached blocks: $clue")
+          assert(bits(cached.search(q, k, filter, scale).map(hit)) === want, s"cached $clue")
         }
-      } finally service.close()
+      } finally { service.close(); cached.close() }
     }
   }
 
